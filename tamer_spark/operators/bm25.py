@@ -12,8 +12,11 @@ Scale shape (100 TB posture):
   by documents that actually contain a query term;
 - doc length rides the groupBy key (functionally dependent on doc_id)
   instead of a corpus-wide doclen join;
-- df and (N, avgdl) are query-vocabulary-sized / 1-row tables folded back
-  as broadcasts — ONE logical pass over the corpus, no second scan.
+- df is a window count partitioned by term over the tf frame itself (no
+  second tokenize of the corpus), and (N, avgdl) is a 1-row table folded
+  back as a broadcast — ONE logical pass over the corpus. Known hazard:
+  the df window has at most |query terms| keys, so a common term's rows
+  land in one task.
 
 Cross-engine determinism: scores are ranked on the ROUNDED value (6 dp)
 so libm ``ln`` ulp gaps and float summation order cannot flip order —

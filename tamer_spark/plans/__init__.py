@@ -1,19 +1,13 @@
 from tamer_spark.plans.inspect import (
     explain_str,
-    has_broadcast_join,
-    has_shuffle,
+    plan_shape,
     pushed_filters,
     read_schema_columns,
-    shuffle_count,
-    wholestage_codegen_ids,
 )
 
 __all__ = [
     "explain_str",
-    "has_broadcast_join",
-    "has_shuffle",
-    "shuffle_count",
+    "plan_shape",
     "pushed_filters",
     "read_schema_columns",
-    "wholestage_codegen_ids",
 ]

@@ -35,6 +35,7 @@ from tamer_spark.functions.text import (
     LANG_MARKERS,
     STOPWORDS,
     TOKEN_PATTERN,
+    _mojibake,
     doc_fingerprint_col,
     lang_id_col,
     text_stats_cols,
@@ -107,7 +108,7 @@ def _scan_parallelism_floor(spark: SparkSession, df: DataFrame, path: str) -> Da
     partition-order-sensitive expressions in any query path; every rank /
     limit carries a total-order tie-break — audited r14), so results and
     oracle hashes are unchanged; the driver re-verifies every gate. Plan
-    pins are unaffected: ``plans.inspect.shuffle_count`` counts keyed
+    pins are unaffected: ``plans.PlanShape.shuffles`` counts keyed
     exchanges only, and this repair is RoundRobinPartitioning (pinned in
     tests/test_scan_floor.py, including the at-scale no-op). Set
     ``spark.tamer_spark.scan.parallelismFloor=off`` to disable.
@@ -3408,6 +3409,57 @@ def agg_pivot_ordered_concat_q(spark, sf):
 # Curation pipeline compositions
 # ---------------------------------------------------------------------------
 
+# Fixture structurers: the fixture ships single-line, punctuation-free
+# texts, so each text gate derives the structure its rules need with a
+# table of pinned literal replaces, applied in table order on both engines
+# (optionally wrapped in a constant head/tail). One table feeds both sides:
+# _structured_col builds the Spark column, _structured_sql the DuckDB
+# oracle expression.
+def _structured_col(table, head: str = "", tail: str = ""):
+    """The ``text`` column through ``table`` — ONE F.expr parse for the
+    whole nested replace chain (cheaper to build than a Column-API chain of
+    per-replace literals)."""
+
+    def lit(v: str) -> str:
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    out = "text"
+    for search, repl in table:
+        out = f"replace({out}, {lit(search)}, {lit(repl)})"
+    if head or tail:
+        out = f"concat({lit(head)}, {out}, {lit(tail)})"
+    return F.expr(out)
+
+
+def _sql_lit(s: str) -> str:
+    """DuckDB string literal for ``s``: printable text stays inline (UTF-8),
+    quotes doubled, C0/C1/DEL rendered as chr(n) legs so the generated SQL
+    carries no raw control bytes."""
+    parts: list[str] = []
+    buf = ""
+    for ch in s:
+        o = ord(ch)
+        if o < 0x20 or o == 0x7F or 0x80 <= o <= 0x9F:
+            if buf:
+                parts.append("'" + buf.replace("'", "''") + "'")
+                buf = ""
+            parts.append(f"chr({o})")
+        else:
+            buf += ch
+    if buf:
+        parts.append("'" + buf.replace("'", "''") + "'")
+    return " || ".join(parts) if parts else "''"
+
+
+def _structured_sql(table, head: str = "", tail: str = "") -> str:
+    out = "text"
+    for search, repl in table:
+        out = f"replace({out}, {_sql_lit(search)}, {_sql_lit(repl)})"
+    if head or tail:
+        out = f"{_sql_lit(head)} || {out} || {_sql_lit(tail)}"
+    return out
+
+
 # Deterministic "line structurer" for the gopher gate: the fixture documents
 # ship single-line texts, which would leave every line/paragraph signal a
 # constant 0.0 — a hash gate that gates nothing. The gate therefore derives a
@@ -3422,20 +3474,6 @@ _GOPHER_STRUCTURE = (
     (" scan", "...\nscan"),
     (" key", "\n- key"),
 )
-
-
-def _gopher_structured_sql(col: str = "text") -> str:
-    out = col
-    for search, repl in _GOPHER_STRUCTURE:
-        r = repl.replace("\n", "' || chr(10) || '")
-        out = f"replace({out}, '{search}', '{r}')"
-    return out
-
-
-def _gopher_structured_col(col):
-    for search, repl in _GOPHER_STRUCTURE:
-        col = F.replace(col, F.lit(search), F.lit(repl))
-    return col
 
 
 _GOPHER_TOPS = ((2, 0.20), (3, 0.18), (4, 0.16))
@@ -3456,8 +3494,8 @@ def _gopher_oracle_ctes() -> str:
     stop = ", ".join(f"'{w}'" for w in STOPWORDS)
     gstop = ", ".join(f"'{w}'" for w in STOP_GOPHER)
     parts = [f"""
-    gnorm AS (SELECT doc_id, {_gopher_structured_sql()} AS raw,
-                     trim(regexp_replace(lower({_gopher_structured_sql()}), '\\s+', ' ', 'g')) AS t
+    gnorm AS (SELECT doc_id, {_structured_sql(_GOPHER_STRUCTURE)} AS raw,
+                     trim(regexp_replace(lower({_structured_sql(_GOPHER_STRUCTURE)}), '\\s+', ' ', 'g')) AS t
               FROM documents),
     gws AS (SELECT doc_id, raw, t, list_filter(string_split(t, ' '), x -> len(x) > 0) AS gw FROM gnorm),
     glin AS (SELECT doc_id,
@@ -3677,7 +3715,7 @@ def quality_filter_docs(spark, sf):
     # the single-line fixture corpus). The signal frame feeds EIGHT gate
     # variants, so persist it (doc-count-sized) and release with the union.
     gs = gopher_signals(
-        d.withColumn("text", _gopher_structured_col(F.col("text")))
+        d.withColumn("text", _structured_col(_GOPHER_STRUCTURE))
     ).persist()
 
     def _gvar(tag, v1, v2, v3):
@@ -3750,27 +3788,6 @@ _C4_STRUCTURE = (
 )
 
 
-def _c4_structured_sql(col: str = "text") -> str:
-    out = col
-    for search, repl in _C4_STRUCTURE:
-        r = repl.replace("\n", "' || chr(10) || '")
-        out = f"replace({out}, '{search}', '{r}')"
-    return out
-
-
-def _c4_structured_col(col):
-    # r14: ONE expr parse for the whole nested replace chain (the Spark
-    # twin of _c4_structured_sql below; newlines render as '\n' escapes).
-    # ``col`` is accepted for source compatibility but must be the text
-    # column itself — both call sites pass F.col("text").
-    out = "text"
-    for search, repl in _C4_STRUCTURE:
-        s = search.replace("\\", "\\\\").replace("'", "\\'")
-        r = repl.replace("\\", "\\\\").replace("'", "\\'").replace("\n", "\\n")
-        out = f"replace({out}, '{s}', '{r}')"
-    return F.expr(out)
-
-
 def _c4_oracle_ctes() -> str:
     """DuckDB replay of operators/c4.py — the line filter (terminal
     punctuation / min words / javascript lines, lorem-ipsum / brace / 5-
@@ -3779,7 +3796,7 @@ def _c4_oracle_ctes() -> str:
     structured text and composed exactly as the Spark side composes them
     (spans run on the line filter's CLEANED output)."""
     return f"""
-    cdocs AS (SELECT doc_id, {_c4_structured_sql()} AS text FROM documents),
+    cdocs AS (SELECT doc_id, {_structured_sql(_C4_STRUCTURE)} AS text FROM documents),
     clin AS (SELECT doc_id, text,
         list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)), x -> len(x) > 0) AS lines
       FROM cdocs),
@@ -3850,7 +3867,7 @@ def c4_clean_docs_q(spark, sf):
     from tamer_spark.operators.c4 import c4_line_filter, c4_span_dedup
 
     d = _t(spark, sf, "documents").withColumn(
-        "text", _c4_structured_col(F.col("text"))
+        "text", _structured_col(_C4_STRUCTURE)
     )
     # the cleaned frame feeds its own gate row AND the span-dedup stage —
     # persist (doc-count-sized) and release with the union
@@ -3899,21 +3916,8 @@ _PII_STRUCTURE = (
 )
 
 
-def _pii_structured_sql(col: str = "text") -> str:
-    out = col
-    for search, repl in _PII_STRUCTURE:
-        out = f"replace({out}, '{search}', '{repl}')"
-    return out
-
-
-def _pii_structured_col(col):
-    for search, repl in _PII_STRUCTURE:
-        col = F.replace(col, F.lit(search), F.lit(repl))
-    return col
-
-
 _SCRUB_PII_ORACLE = f"""
-    WITH pdocs AS (SELECT doc_id, {_pii_structured_sql()} AS text FROM documents)
+    WITH pdocs AS (SELECT doc_id, {_structured_sql(_PII_STRUCTURE)} AS text FROM documents)
     SELECT doc_id,
            regexp_replace(regexp_replace(text,
                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}', '<EMAIL>', 'g'),
@@ -3930,7 +3934,7 @@ def scrub_pii_docs_q(spark, sf):
     from tamer_spark.functions.text import pii_count_cols, scrub_pii_col
 
     d = _t(spark, sf, "documents").withColumn(
-        "text", _pii_structured_col(F.col("text"))
+        "text", _structured_col(_PII_STRUCTURE)
     )
     return d.select(
         "doc_id",
@@ -3955,27 +3959,10 @@ _MARKUP_STRUCTURE = (
     (" big", " <img src='big.png'/> big"),
 )
 
-
-def _markup_structured_col(col):
-    for search, repl in _MARKUP_STRUCTURE:
-        col = F.replace(col, F.lit(search), F.lit(repl))
-    return F.concat(
-        F.lit("<html><head><title>doc</title><style>p {color:red}</style>"
-              "</head><body><h1>"),
-        col,
-        F.lit("</h1><footer>&copy; corp</footer></body></html>"),
-    )
-
-
-def _markup_structured_sql(col: str = "text") -> str:
-    out = col
-    for search, repl in _MARKUP_STRUCTURE:
-        r = repl.replace("'", "''").replace("\n", "' || chr(10) || '")
-        s = search.replace("'", "''")
-        out = f"replace({out}, '{s}', '{r}')"
-    head = "<html><head><title>doc</title><style>p {color:red}</style></head><body><h1>"
-    tail = "</h1><footer>&copy; corp</footer></body></html>"
-    return f"'{head}' || {out} || '{tail}'"
+_MARKUP_WRAP = {
+    "head": "<html><head><title>doc</title><style>p {color:red}</style></head><body><h1>",
+    "tail": "</h1><footer>&copy; corp</footer></body></html>",
+}
 
 
 def _markup_strip_sql(col: str) -> str:
@@ -4000,7 +3987,7 @@ def _markup_strip_sql(col: str) -> str:
 
 
 _MARKUP_ORACLE = f"""
-    WITH mdocs AS (SELECT doc_id, {_markup_structured_sql()} AS m FROM documents),
+    WITH mdocs AS (SELECT doc_id, {_structured_sql(_MARKUP_STRUCTURE, **_MARKUP_WRAP)} AS m FROM documents),
     mstrip AS (SELECT doc_id, m, {_markup_strip_sql("m")} AS s FROM mdocs)
     SELECT doc_id, s AS text_stripped,
            CAST(len(m) - len(s) AS BIGINT) AS n_removed,
@@ -4016,7 +4003,7 @@ def strip_markup_docs_q(spark, sf):
 
     d = _t(spark, sf, "documents")
     staged = d.select(
-        "doc_id", _markup_structured_col(F.col("text")).alias("_m")
+        "doc_id", _structured_col(_MARKUP_STRUCTURE, **_MARKUP_WRAP).alias("_m")
     )
     # CollapseProject re-inlines `_s` into each consumer (deterministic
     # scalar — no generator trick applies), so the chain evaluates once per
@@ -4038,53 +4025,19 @@ def strip_markup_docs_q(spark, sf):
 # '”' whose mojibake carries the C1 byte U+009D), a paired-quote plant, a
 # zero-width space, an NBSP-for-space swap, a BEL control, a CRLF, plus a
 # BOM prefix and an ESC suffix on every document.
-def _enc_structure() -> tuple[tuple[str, str], ...]:
-    from tamer_spark.functions.text import _mojibake
+_ENC_STRUCTURE = (
+    (" value", " v" + _mojibake("ä") + "lue"),
+    (" table", " t" + _mojibake("’") + "able"),
+    (" fast", " fast" + _mojibake("…")),
+    (" merge", " " + _mojibake("“") + "merge" + _mojibake("”")),
+    (" agg", " " + _mojibake("à") + "gg"),
+    (" key", " ​key"),
+    (" sort", " sort"),
+    (" row", " row\x07"),
+    (" scan", " scan\r\n"),
+)
 
-    return (
-        (" value", " v" + _mojibake("ä") + "lue"),
-        (" table", " t" + _mojibake("’") + "able"),
-        (" fast", " fast" + _mojibake("…")),
-        (" merge", " " + _mojibake("“") + "merge" + _mojibake("”")),
-        (" agg", " " + _mojibake("à") + "gg"),
-        (" key", " ​key"),
-        (" sort", " sort"),
-        (" row", " row\x07"),
-        (" scan", " scan\r\n"),
-    )
-
-
-def _enc_structured_col(col):
-    for search, repl in _enc_structure():
-        col = F.replace(col, F.lit(search), F.lit(repl))
-    return F.concat(F.lit("﻿"), col, F.lit("\x1b"))
-
-
-def _sql_lit(s: str) -> str:
-    """DuckDB string literal for ``s``: printable text stays inline (UTF-8),
-    quotes doubled, C0/C1/DEL rendered as chr(n) legs so the generated SQL
-    carries no raw control bytes."""
-    parts: list[str] = []
-    buf = ""
-    for ch in s:
-        o = ord(ch)
-        if o < 0x20 or o == 0x7F or 0x80 <= o <= 0x9F:
-            if buf:
-                parts.append("'" + buf.replace("'", "''") + "'")
-                buf = ""
-            parts.append(f"chr({o})")
-        else:
-            buf += ch
-    if buf:
-        parts.append("'" + buf.replace("'", "''") + "'")
-    return " || ".join(parts) if parts else "''"
-
-
-def _enc_structured_sql(col: str = "text") -> str:
-    out = col
-    for search, repl in _enc_structure():
-        out = f"replace({out}, {_sql_lit(search)}, {_sql_lit(repl)})"
-    return f"{_sql_lit(chr(0xFEFF))} || {out} || {_sql_lit(chr(0x1B))}"
+_ENC_WRAP = {"head": chr(0xFEFF), "tail": chr(0x1B)}
 
 
 def _fix_encoding_sql(col: str) -> str:
@@ -4106,7 +4059,7 @@ from tamer_spark.functions.text import ENC_CTRL_RE as _T_ENC_CTRL_RE  # noqa: E4
 from tamer_spark.functions.text import ENC_NONASCII_RE as _T_ENC_NONASCII_RE  # noqa: E402
 
 _ENC_ORACLE = f"""
-    WITH edocs AS (SELECT doc_id, {_enc_structured_sql("text")} AS e FROM documents),
+    WITH edocs AS (SELECT doc_id, {_structured_sql(_ENC_STRUCTURE, **_ENC_WRAP)} AS e FROM documents),
     efix AS (SELECT doc_id, e, {_fix_encoding_sql("e")} AS fx FROM edocs)
     SELECT doc_id, fx AS text_fixed,
            CAST(len(e) - len(fx) AS BIGINT) AS n_removed,
@@ -4121,7 +4074,7 @@ def fix_encoding_docs_q(spark, sf):
     from tamer_spark.functions.text import fix_encoding_col
 
     d = _t(spark, sf, "documents")
-    staged = d.select("doc_id", _enc_structured_col(F.col("text")).alias("_e"))
+    staged = d.select("doc_id", _structured_col(_ENC_STRUCTURE, **_ENC_WRAP).alias("_e"))
     fixed = fix_encoding_col(F.col("_e"))
     return staged.select(
         "doc_id",
@@ -4139,7 +4092,7 @@ _LINEX_MIN_DF = 3
 # The oracle needs no ordinality trick: list_filter preserves order, and
 # the boilerplate set (small by construction) rides along as ONE list value.
 _LINEX_ORACLE = f"""
-    WITH ldocs AS (SELECT doc_id, {_c4_structured_sql()} AS text FROM documents),
+    WITH ldocs AS (SELECT doc_id, {_structured_sql(_C4_STRUCTURE)} AS text FROM documents),
     llin AS (SELECT doc_id,
         list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)), x -> len(x) > 0) AS lines
       FROM ldocs),
@@ -4165,7 +4118,7 @@ def line_dedup_docs_q(spark, sf):
     from tamer_spark.operators.dedup import dedup_lines_across_docs
 
     d = _t(spark, sf, "documents").select(
-        "doc_id", _c4_structured_col(F.col("text")).alias("text")
+        "doc_id", _structured_col(_C4_STRUCTURE).alias("text")
     )
     return dedup_lines_across_docs(d, min_doc_freq=_LINEX_MIN_DF)
 

@@ -17,14 +17,15 @@ fetch, DbSetup.scala:59-63):
 - the windowed SQL goes to ``spark.read.jdbc`` as a derived table, so the
   source database applies the predicates (total pushdown by construction —
   same property as the reference's user-SQL model),
-- within a window, ``partition_column/num_partitions`` split the range into
-  parallel executor reads — the reference reads on one connection,
 - ``fetchsize`` maps to the JDBC cursor chunk (QUERY_FETCH_CHUNK_SIZE,
   db/config.scala:27).
 
-At 100 TB-of-history scale the initial backfill is just successive windows;
-window length bounds per-batch memory, and per-window parallel reads keep
-executors busy — tune (step × partitions) so each partition is ~128 MB.
+Each window is read as ONE JDBC partition (one connection, like the
+reference): Spark splits a JDBC read only given ``partitionColumn`` /
+``lowerBound`` / ``upperBound``, which this source does not set. At 100
+TB-of-history scale the initial backfill is just successive windows;
+window length bounds per-batch memory — tune ``step`` so a window is a
+partition-sized read.
 """
 
 from __future__ import annotations
@@ -98,7 +99,6 @@ class JdbcTumblingSource:
     lag: timedelta = timedelta(0)
     properties: dict = field(default_factory=dict)
     fetchsize: int = 10_000
-    num_partitions: int | None = None
     now_fn: Callable[[], datetime] = utcnow
     # test seam: replaces spark.read.jdbc (no database in CI); same contract:
     # (spark, rendered_sql) -> DataFrame
@@ -127,8 +127,6 @@ class JdbcTumblingSource:
         )
         for k, v in props.items():
             reader = reader.option(k, v)
-        if self.num_partitions:
-            reader = reader.option("numPartitions", str(self.num_partitions))
         return reader.load()
 
     def iteration(self, state: Any, spark: SparkSession) -> tuple[DataFrame | None, Any]:

@@ -209,17 +209,11 @@ class ObjectCursorSource:
         store) would never surface keys past the first page and the cursor
         would stall at key N+1 forever.
 
-        Defensive stops: a lister whose ``list_keys`` doesn't take
-        ``start_after`` (pre-pagination implementations) degrades to its
-        single capped page, and a lister that accepts-but-ignores the
-        argument (returns a page that doesn't advance past it) terminates
-        after that page instead of looping forever."""
+        Defensive stop: a lister that accepts-but-ignores ``start_after``
+        (returns a page that doesn't advance past it) terminates after that
+        page instead of looping forever."""
         while True:
-            try:
-                page = self.lister.list_keys(self.prefix, start_after=start_after)
-            except TypeError:
-                yield self.lister.list_keys(self.prefix)
-                return
+            page = self.lister.list_keys(self.prefix, start_after=start_after)
             if not page:
                 return
             yield page

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from tamer_spark.operators.ann_eval import recall_value
 from tamer_spark.operators.pq import ivfadc_search, pq_encode, pq_search_adc, pq_train
 from tamer_spark.operators.similarity import cosine_knn, ivf_build, ivf_search
+from tamer_spark.plans import plan_shape
 from tests.conftest import SF_DIR_MED
 
 K = 5
@@ -184,5 +185,5 @@ def test_ranking_metrics_no_window_no_sort(spark):
     from tamer_spark.operators.ann_eval import ranking_metrics
 
     run, qrels = _frames(spark, [(0, 10, 1)], [(0, 10)])
-    plan = ranking_metrics(run, qrels, k=3)._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, plan
+    shape = plan_shape(ranking_metrics(run, qrels, k=3))
+    assert not [n for n in shape.nodes if "Window" in n], shape

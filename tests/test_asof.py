@@ -79,13 +79,13 @@ def test_unknown_direction_rejected(spark, frames):
 
 
 def test_all_directions_share_one_shuffle(spark, frames):
-    from tamer_spark.plans import shuffle_count
+    from tamer_spark.plans import plan_shape
 
     left, right = frames
     for direction in ("backward", "forward", "nearest"):
         df = asof_join(left, right, on="k", left_time="t", right_time="t",
                        right_cols=["px"], direction=direction)
-        assert shuffle_count(df) == 1, direction
+        assert plan_shape(df).shuffles == 1, direction
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])

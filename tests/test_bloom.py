@@ -10,6 +10,7 @@ from tamer_spark.operators.bloom import (
     bloom_might_contain,
     decontaminate_with_bloom,
 )
+from tamer_spark.plans import plan_shape
 
 
 @pytest.fixture(scope="module")
@@ -143,14 +144,9 @@ def test_df_probe_plan_is_broadcast_joins_no_shuffle_of_probe_side(spark):
     vals = spark.createDataFrame([(f"v{i}",) for i in range(50)], "s string")
     probe = spark.range(1000).selectExpr("CAST(id AS STRING) AS s")
     words_df = B.bloom_words_df(vals, "s", m_bits=1 << 12, k=3)
-    plan = (
-        B.bloom_might_contain(probe, "s", words_df, 1 << 12, k=3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("BroadcastHashJoin") == 3
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    shape = plan_shape(B.bloom_might_contain(probe, "s", words_df, 1 << 12, k=3))
+    assert shape.nodes["BroadcastHashJoin"] == 3, shape
+    assert not shape.count("SortMergeJoin", "ShuffledHashJoin"), shape
 
 
 def test_decontaminate_large_m_routes_to_distributed_words(spark):

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tamer_spark.operators.mixing import bottomk_merge, bottomk_sample
+from tamer_spark.plans import plan_shape
 
 
 def _h(i, salt="sample-"):
@@ -52,11 +53,11 @@ def test_bottomk_small_input_null_drop_validation(spark):
 def test_bottomk_plan_is_takeordered_not_global_sort(spark):
     df = spark.range(0, 100_000).select(F.col("id").alias("doc_id"))
     out = bottomk_sample(df, 50)
-    plan = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
-    assert "TakeOrderedAndProject" in plan, plan
+    shape = plan_shape(out)
+    assert shape.nodes["TakeOrderedAndProject"], shape
     # the post-limit rank window runs over <= k rows; no rangepartitioning
     # exchange (a global Sort) anywhere
-    assert "rangepartitioning" not in plan, plan
+    assert not [p for p in shape.exchanges if p.startswith("rangepartitioning")], shape
 
 
 def test_bottomk_merge_dedups_overlapping_epochs(spark):

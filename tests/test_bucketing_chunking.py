@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tamer_spark.functions.chunking import ChunkText, chunk_text_expr, register_chunk_text
-from tamer_spark.plans import shuffle_count
+from tamer_spark.plans import plan_shape
 from tamer_spark.sinks.bucketed import read_table, write_bucketed
 from tests.conftest import SF_DIR
 
@@ -29,7 +29,7 @@ def test_bucketed_join_has_no_exchange(spark):
         F.col("o_custkey") == F.col("c_custkey"),
     )
     # both sides pre-shuffled on the join key at write time → zero exchanges
-    assert shuffle_count(joined) == 0
+    assert plan_shape(joined).shuffles == 0
     assert joined.count() == orders.count()
 
 

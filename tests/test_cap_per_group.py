@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tamer_spark.operators.mixing import cap_per_group
+from tamer_spark.plans import plan_shape
 
 
 def _h(i: int, salt: str = "domcap-") -> int:
@@ -98,11 +99,8 @@ def test_plain_path_single_exchange(spark, grouped):
     """rank + total-count ride ONE group-key exchange (two window specs,
     same partitioning)."""
     out = cap_per_group(grouped, "g", cap=5)
-    plan = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
-    import re
-
-    shuffles = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    assert len(shuffles) == 1 and "_g" in shuffles[0], plan
+    keys = plan_shape(out).hash_keys
+    assert len(keys) == 1 and "_g" in keys[0], keys
 
 
 def test_null_ids_drop_both_paths(spark):

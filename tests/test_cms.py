@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tamer_spark.operators.cms import cms_build, cms_merge, cms_query
+from tamer_spark.plans import plan_shape
 from tests.conftest import SF_DIR
 
 D, W, SEED = 4, 256, 42
@@ -94,16 +95,10 @@ def test_cms_build_single_bounded_exchange(spark):
     """The build plan has exactly ONE shuffle — the (r, b) groupBy whose
     partial aggregation bounds map output at d·w rows per partition (the
     fixed-size-shuffle property; vocabulary size never appears)."""
-    plan = (
-        cms_build(_tokens(spark), d=D, w=W, seed=SEED)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    import re
-
-    shuffles = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    assert len(shuffles) == 1 and "r#" in shuffles[0] and "b#" in shuffles[0], plan
+    out = cms_build(_tokens(spark), d=D, w=W, seed=SEED)
+    keys = plan_shape(out).hash_keys
+    assert len(keys) == 1 and "r#" in keys[0] and "b#" in keys[0], keys
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "partial_count" in plan or "partial" in plan.lower(), plan
 
 
@@ -179,10 +174,10 @@ def test_heavy_hitters_prefilter_actually_prunes(spark):
     # count's exchange — no join machinery at all, and the tail never
     # shuffles (est(tail_i) < 50 at this width with overwhelming
     # probability; deterministic under the fixed seed).
-    # AQE's executed-plan string repeats the tree under "== Initial Plan ==";
-    # pin the FINAL segment only
-    plan = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
-    assert "BroadcastHashJoin" not in plan, plan
+    assert not plan_shape(out).nodes["BroadcastHashJoin"], plan_shape(out)
+    # AQE prints the final plan first, so the first Filter / Exchange in the
+    # executed-plan string belong to it
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.index("Filter") < plan.index("Exchange"), plan
 
 

@@ -44,10 +44,10 @@ def test_duplicates_counted_corpus_wide_per_slice(spark, docs):
 
 
 def test_shuffle_budget(spark, docs):
-    from tamer_spark.plans import shuffle_count
+    from tamer_spark.plans import plan_shape
 
     # digest count + digest join + slice agg — never more than 3 exchanges
-    assert shuffle_count(corpus_datasheet(docs)) <= 3
+    assert plan_shape(corpus_datasheet(docs)).shuffles <= 3
 
 
 def test_datasheet_delta_full_outer_and_exact(spark):

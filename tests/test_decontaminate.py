@@ -41,9 +41,9 @@ def test_keep_hits_is_the_complement(spark, docs):
 
 
 def test_zero_shuffle_map_only(spark, docs):
-    from tamer_spark.plans import shuffle_count
+    from tamer_spark.plans import plan_shape
 
-    assert shuffle_count(decontaminate_substrings(docs, ["x"])) == 0
+    assert plan_shape(decontaminate_substrings(docs, ["x"])).shuffles == 0
 
 
 def test_empty_patterns_rejected(spark, docs):

@@ -19,6 +19,7 @@ from tamer_spark.operators.dedup_incremental import (
     exact_index,
     minhash_band_index,
 )
+from tamer_spark.plans import plan_shape
 
 
 def _docs(spark, rows):
@@ -130,7 +131,6 @@ def test_bucketed_index_anti_join_shuffles_batch_side_only(spark):
     index side — only the (epoch-sized) batch shuffles to meet it."""
     import shutil
 
-    from tamer_spark.plans import shuffle_count
     from tamer_spark.sinks.bucketed import read_table, write_bucketed
 
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
@@ -155,7 +155,7 @@ def test_bucketed_index_anti_join_shuffles_batch_side_only(spark):
         # batch side: exactly ONE exchange (the in-batch window on digest;
         # the anti-join reuses its partitioning); index side: ZERO — the
         # bucketed scan satisfies the distribution requirement directly
-        assert shuffle_count(survivors) == 1
+        assert plan_shape(survivors).shuffles == 1
         plan = survivors._jdf.queryExecution().executedPlan().toString()
         assert "SelectedBucketsCount" in plan  # index scan is bucket-aware
         assert sorted(r.doc_id for r in survivors.collect()) == list(range(200, 210))
@@ -309,13 +309,8 @@ def test_bloom_probabilistic_plan_has_no_join_at_all(spark):
 
     old, new = _bloom_fixture(spark)
     words = exact_bloom_index(exact_index(old), m_bits=_M)
-    plan = (
-        dedup_exact_incremental_bloom(new, words, m_bits=_M)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Join" not in plan, plan
+    shape = plan_shape(dedup_exact_incremental_bloom(new, words, m_bits=_M))
+    assert not [n for n in shape.nodes if "Join" in n], shape
 
 
 def test_minhash_bloom_drops_every_index_collider_keeps_most_novel(spark):
@@ -410,14 +405,9 @@ def test_minhash_bloom_plan_probes_are_broadcast_joins(spark):
             "overwrite"
         ).parquet(td + "/w")
         words = spark.read.parquet(td + "/w")
-        plan = (
-            dedup_minhash_incremental_bloom(new, words, m_bits=1 << 14)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-    assert plan.count("BroadcastHashJoin") == 5  # bloom_k probes
-    assert "Cartesian" not in plan
+        shape = plan_shape(dedup_minhash_incremental_bloom(new, words, m_bits=1 << 14))
+    assert shape.nodes["BroadcastHashJoin"] == 5, shape  # bloom_k probes
+    assert not shape.nodes["CartesianProduct"], shape
 
 
 def test_bloom_frame_defaults_derive_from_schema_and_existing_hash_col_ok(spark):

@@ -142,21 +142,22 @@ def test_blocklist_drops_whole_publisher_keeps_urlless(spark):
 
 
 def test_blocklist_plan_is_broadcast_anti(spark):
-    from tamer_spark.plans import explain_str
+    from tamer_spark.plans import explain_str, plan_shape
 
     df = spark.createDataFrame([(1, "http://a.com/x")], "doc_id long, url string")
     bl = spark.createDataFrame([("b.com",)], "domain string")
-    plan = explain_str(filter_blocklisted_domains(df, bl))
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    out = filter_blocklisted_domains(df, bl)
+    plan = explain_str(out)
+    assert plan_shape(out).nodes["BroadcastHashJoin"] and "LeftAnti" in plan, plan
 
 
 def test_rollup_plan_single_shuffle_no_text_scan(spark):
     """Identical posture to url dedup: one digest shuffle, doc_id-only
     scan — the text column never read for a domain verdict."""
-    from tamer_spark.plans import read_schema_columns, shuffle_count
+    from tamer_spark.plans import plan_shape, read_schema_columns
     from tamer_spark.queries import domain_rollup_docs_q
 
     df = domain_rollup_docs_q(spark, "/root/testdata/sf0.001")
-    assert shuffle_count(df) == 1
+    assert plan_shape(df).shuffles == 1
     scans = read_schema_columns(df)
     assert scans and all(s <= {"doc_id"} for s in scans), scans

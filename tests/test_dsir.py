@@ -206,17 +206,17 @@ def test_plan_broadcast_ratio_and_takeordered(spark):
     (never a shuffled corpus⋈tiny join), selection plans as
     TakeOrderedAndProject (never a global sort), and no Python UDF appears
     anywhere in the plan."""
-    from tamer_spark.plans import explain_str
+    from tamer_spark.plans import plan_shape
     from tamer_spark.queries import dsir_select_docs_q
     from tests.conftest import SF_DIR
 
-    plan = explain_str(dsir_select_docs_q(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan, plan
+    shape = plan_shape(dsir_select_docs_q(spark, SF_DIR))
+    assert shape.nodes["BroadcastHashJoin"], shape
     # the corpus-wide ordering is the TakeOrdered (per-partition top-k +
     # driver merge of k·partitions rows); the only Sort the plan may carry
     # is the rank window's, which runs AFTER the limit on ≤ k rows
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+    assert shape.nodes["TakeOrderedAndProject"], shape
+    assert not shape.count("BatchEvalPython", "ArrowEvalPython"), shape
 
 
 def test_registry_variant_matches_standalone(spark):

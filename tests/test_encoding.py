@@ -146,8 +146,8 @@ def test_gate_variant_audits(spark):
 
 
 def test_fix_encoding_plan_is_map_only(spark):
-    from tamer_spark.plans import explain_str, shuffle_count
+    from tamer_spark.plans import explain_str, plan_shape
     from tamer_spark.queries import fix_encoding_docs_q
 
     df = fix_encoding_docs_q(spark, "/root/testdata/sf0.001")
-    assert shuffle_count(df) == 0, explain_str(df)
+    assert plan_shape(df).shuffles == 0, explain_str(df)

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tamer_spark.operators.events import cohort_retention, funnel_counts
+from tamer_spark.plans import plan_shape
 
 
 def _ev(spark, rows):
@@ -155,11 +156,10 @@ def test_transition_counts_single_user_window_then_partial_agg(spark):
     from tamer_spark.operators.events import transition_counts
 
     df = _stream(spark, [(1, 0, "view"), (1, 1, "click")])
-    plan = transition_counts(df)._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    assert len(re.findall(r"windowspecdefinition\(user_id", plan)) == 1, plan
-    assert plan.count("Window") == 1, plan
+    out = transition_counts(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("windowspecdefinition(user_id") == 1, plan
+    assert plan_shape(out).nodes["Window"] == 1, plan_shape(out)
 
 
 def test_transition_counts_session_gap_excludes_cross_session_pairs(spark):

@@ -92,14 +92,14 @@ def test_gate_shape_matches_fixture_expectations(spark):
 
 
 def test_plan_single_bucket_join_no_cross_product(spark):
-    from tamer_spark.plans import explain_str, shuffle_count
+    from tamer_spark.plans import plan_shape
     from tamer_spark.queries import hard_negatives_q
 
     df = hard_negatives_q(spark, "/root/testdata/sf0.001")
-    plan = explain_str(df)
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan, plan
+    shape = plan_shape(df)
+    assert not shape.count("CartesianProduct", "BroadcastNestedLoopJoin"), shape
     # bucket-join exchanges (both sides) + the per-anchor window exchange
-    assert shuffle_count(df) <= 3, plan
+    assert shape.shuffles <= 3, shape
 
 
 def test_zero_norm_vectors_dropped_not_crashing(spark):
@@ -175,13 +175,9 @@ def test_contrastive_pairs_equals_both_standalone_miners(spark):
 def test_contrastive_pairs_single_window(spark):
     """One (anchor, side) window ranks both tiers — the plan must contain
     exactly ONE Window node (two would mean the join is paid twice)."""
-    from tamer_spark.plans import explain_str
+    from tamer_spark.plans import plan_shape
     from tamer_spark.operators.similarity import contrastive_pairs
 
-    import re
-
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    plan = explain_str(contrastive_pairs(emb, k=3, max_bucket=None))
-    # formatted plans list each node in the tree AND a detail section —
-    # count detail entries ("(N) Window"), which appear exactly once per node
-    assert len(re.findall(r"^\(\d+\) Window$", plan, re.M)) == 1, plan
+    shape = plan_shape(contrastive_pairs(emb, k=3, max_bucket=None))
+    assert shape.nodes["Window"] == 1, shape

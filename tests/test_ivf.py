@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tamer_spark.operators.similarity import cosine_knn, ivf_build, ivf_search
+from tamer_spark.plans import plan_shape
 from tests.conftest import SF_DIR
 
 
@@ -82,8 +83,8 @@ def test_ivf_append_matches_full_assignment_and_search(spark):
     # a neighbor from the NEW half is reachable through the appended index
     assert any(r.neighbor_id % 2 == 1 for r in got)
 
-    plan = ivf_append(new, centroids)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    shape = plan_shape(ivf_append(new, centroids))
+    assert not shape.count("Exchange", "BroadcastExchange"), shape
 
 
 def test_ivf_search_over_bucketed_inverted_file(spark, tmp_path):
@@ -108,10 +109,9 @@ def test_ivf_search_over_bucketed_inverted_file(spark, tmp_path):
     got = ivf_search(spark.table("test_ivf_inverted"), centroids, queries, k=5, nprobe=2)
     want = ivf_search(assigned, centroids, queries, k=5, nprobe=2)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    plan = got._jdf.queryExecution().executedPlan().toString()
     # index side streams from the bucketed scan; only the rank window may
     # exchange (keyed by query_id — query-sized, not corpus-sized)
-    assert "BroadcastHashJoin" in plan
+    assert plan_shape(got).nodes["BroadcastHashJoin"], plan_shape(got)
     spark.sql("DROP TABLE IF EXISTS test_ivf_inverted")
 
 

@@ -140,14 +140,15 @@ def test_plan_probe_never_shuffles_three_exchanges(spark):
     cartesian anywhere. If the set outgrows the broadcast threshold at a
     permissive min_doc_freq, AQE falls back to a sort-merge join at
     runtime; the declarative plan stays valid either way."""
-    from tamer_spark.plans import explain_str, read_schema_columns, shuffle_count
+    from tamer_spark.plans import explain_str, plan_shape, read_schema_columns
     from tamer_spark.queries import line_dedup_docs_q
 
     df = line_dedup_docs_q(spark, "/root/testdata/sf0.001")
     plan = explain_str(df)
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
+    shape = plan_shape(df)
+    assert not shape.count("CartesianProduct", "BroadcastNestedLoopJoin"), shape
     assert "BroadcastHashJoin LeftOuter" in plan, plan
-    assert shuffle_count(df) == 3, plan
+    assert shape.shuffles == 3, shape
     scans = read_schema_columns(df)
     assert scans and all(s <= {"doc_id", "text"} for s in scans), scans
 
@@ -324,7 +325,7 @@ def test_map_only_strip_equals_frozen_join_mode(spark):
     one-row collect_set aggregate is broadcast, the per-doc filter is an
     array HOF. This is the streaming/steady-state shape."""
     from tamer_spark.operators.dedup import strip_boilerplate_map_only
-    from tamer_spark.plans import explain_str, shuffle_count
+    from tamer_spark.plans import explain_str, plan_shape
 
     rows = [
         (1, "COOKIE BANNER\nreal content one\nfooter"),
@@ -341,13 +342,14 @@ def test_map_only_strip_equals_frozen_join_mode(spark):
     # snapshot) — otherwise the probe plan inherits the build's shuffles
     bp_frozen = spark.createDataFrame(bp.collect(), bp.schema)
     map_mode_df = strip_boilerplate_map_only(df, bp_frozen)
-    # plan asserts BEFORE collect: an executed AQE plan explains as
-    # final+initial and double-counts its one exchange
-    plan = explain_str(map_mode_df)
+    # the explain-string pin below runs BEFORE collect: an executed AQE
+    # plan explains as final+initial and would double-count
+    shape = plan_shape(map_mode_df)
     # the batch side never shuffles: the only exchange left is the frozen
     # set's own one-row collect_set agg (tiny), broadcast to the probe
-    assert shuffle_count(map_mode_df) <= 1, plan  # the set's tiny agg only
-    assert "hashpartitioning(doc_id" not in plan, plan  # probe never regroups
+    assert shape.shuffles <= 1, shape  # the set's tiny agg only
+    # probe never regroups
+    assert not [p for p in shape.hash_keys if p.startswith("hashpartitioning(doc_id")], shape
     # the O(|set|)-per-line probe runs ONCE: the filtered array is staged
     # through a Generate barrier (lambdas are excluded from subexpression
     # elimination — a CollapseProject regression would inline the filter
@@ -406,10 +408,9 @@ def test_map_only_strip_streams_append_mode(spark, tmp_path):
 
 
 def test_frozen_mode_plan_is_broadcast_probe(spark):
-    from tamer_spark.plans import explain_str, shuffle_count
+    from tamer_spark.plans import plan_shape
 
     df = _fixture(spark)
     bp = boilerplate_lines(df, 3)
     out = dedup_lines_across_docs(df, boilerplate=bp)
-    plan = explain_str(out)
-    assert "BroadcastHashJoin" in plan, plan
+    assert plan_shape(out).nodes["BroadcastHashJoin"], plan_shape(out)

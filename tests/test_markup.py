@@ -69,14 +69,13 @@ def test_whitespace_canonicalization(spark):
 
 
 def test_plan_is_map_only(spark):
-    from tamer_spark.plans import explain_str, shuffle_count
+    from tamer_spark.plans import plan_shape
     from tamer_spark.queries import strip_markup_docs_q
     from tests.conftest import SF_DIR
 
-    df = strip_markup_docs_q(spark, SF_DIR)
-    plan = explain_str(df)
-    assert shuffle_count(df) == 0, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+    shape = plan_shape(strip_markup_docs_q(spark, SF_DIR))
+    assert shape.shuffles == 0, shape
+    assert not shape.count("BatchEvalPython", "ArrowEvalPython"), shape
 
 
 def test_registry_variant_matches_standalone(spark):

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tamer_spark.operators.packing import pack_greedy, pack_offsets, with_pack_group
-from tamer_spark.plans import shuffle_count
+from tamer_spark.plans import plan_shape
 from tests.conftest import SF_DIR
 
 BUDGET, GROUPS = 128, 4
@@ -83,7 +83,7 @@ def test_pack_query_single_shuffle_per_layout(spark):
     # offsets layout: the window's exchange is the only one before the join
     from tamer_spark.queries import pack_sequences_q
     df = pack_sequences_q(spark, SF_DIR)
-    assert shuffle_count(df) <= 3, "pack layouts must shuffle once each (join may add one)"
+    assert plan_shape(df).shuffles <= 3, "pack layouts must shuffle once each (join may add one)"
 
 
 # --- stratified source mixing ---------------------------------------------

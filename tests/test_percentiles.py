@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tamer_spark.operators.percentiles import exact_percentiles
+from tamer_spark.plans import plan_shape
 
 
 @pytest.fixture(scope="module")
@@ -44,11 +45,9 @@ def test_p_one_is_max_and_validation(spark, grouped):
 
 
 def test_single_exchange(spark, grouped):
-    from tamer_spark.plans import shuffle_count
-
     df = exact_percentiles(grouped, "val", [(1, 2), (9, 10)], keys=("g",))
     # rank + count share the group-key exchange; the union adds no shuffle
-    assert shuffle_count(df) <= 2, df._jdf.queryExecution().toString()[:500]
+    assert plan_shape(df).shuffles <= 2, plan_shape(df)
 
 
 # ------------------------------------------- global two-pass (bucket refine)
@@ -115,16 +114,12 @@ def test_global_bucketed_refine_reads_only_target_buckets(spark):
     out = global_percentile_bucketed(df, "val", [(1, 2)], n_buckets=256)
     [r] = out.collect()
     assert (r.value, r.rank, r.n) == (49_999, 50_000, 100_000)
-    plan = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
-    assert "Window" in plan and "bkt" in plan, plan
+    shape = plan_shape(out)
     # the bucket filter sits below the window sort in the final plan
-    assert plan.index("Filter") > -1 and "Window" in plan
-    import re
-
-    # exactly one hashpartitioning exchange feeds the window (on bkt); the
-    # histogram pass already ran at plan-build time (driver state)
-    parts = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    assert any("bkt" in p for p in parts), plan
+    assert shape.nodes["Window"] and shape.nodes["Filter"], shape
+    # a hashpartitioning exchange on bkt feeds the window; the histogram
+    # pass already ran at plan-build time (driver state)
+    assert any("bkt" in p for p in shape.hash_keys), shape
 
 
 # ------------------------------------------------------------- winsorization
@@ -173,8 +168,8 @@ def test_winsorize_bounds_join_is_broadcast(spark):
         [(i % 4, i) for i in range(1000)], "g int, val long"
     )
     out = winsorize(df, "val", keys=("g",))
-    plan = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
+    shape = plan_shape(out)
+    assert shape.nodes["BroadcastHashJoin"] and not shape.nodes["SortMergeJoin"], shape
 
 
 def test_exact_percentiles_exclude_nulls(spark):

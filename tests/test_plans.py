@@ -6,13 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tamer_spark.plans import (
-    explain_str,
-    has_broadcast_join,
-    pushed_filters,
-    read_schema_columns,
-    shuffle_count,
-)
+from tamer_spark.plans import explain_str, plan_shape, pushed_filters, read_schema_columns
 from tamer_spark import queries as Q
 from tests.conftest import SF_DIR
 
@@ -24,10 +18,34 @@ _spark_fn = Q.resolve_query
 
 def test_q5_star_join_broadcasts_all_dims(spark):
     df = _spark_fn("q5_region_revenue")(spark, SF_DIR)
-    plan = explain_str(df)
-    assert plan.count("BroadcastHashJoin") >= 4, plan  # customer/supplier/nation/region
+    shape = plan_shape(df)
+    # all five joins of the six-table star broadcast at this scale
+    # (customer/supplier/nation/region, and lineitem⋈orders)
+    assert shape.nodes["BroadcastHashJoin"] == 5, shape
     # lineitem⋈orders may shuffle; the agg shuffles once; dims must not add more
-    assert shuffle_count(df) <= 4, plan
+    assert shape.shuffles <= 4, shape
+
+
+def test_plan_shape_is_stable_across_execution(spark):
+    """plan_shape walks the plan tree, not its string: an executed AQE plan
+    prints its final AND its initial tree, so a string count doubles once
+    the DataFrame has run. The walked counts must not move when AQE keeps
+    the plan."""
+    dims = spark.range(7).withColumnRenamed("id", "k")
+    df = (
+        spark.range(10_000)
+        .select((F.col("id") % 7).alias("k"))
+        .join(F.broadcast(dims), "k")
+        .groupBy("k")
+        .count()
+        .orderBy("k")
+    )
+    before = plan_shape(df)
+    df.collect()
+    after = plan_shape(df)
+    assert after == before, (before, after)
+    assert before.shuffles == 2 and before.nodes["BroadcastHashJoin"] == 1, before
+    assert explain_str(df, "simple").count("BroadcastHashJoin") == 2
 
 
 def test_q3_filter_pushed_to_customer_scan(spark):
@@ -55,7 +73,7 @@ def test_dedup_exact_single_shuffle_per_variant(spark):
     # tagged union of raw + normalized + sentence + url + domain + template
     # (r12) variants: one shuffle each
     df = _spark_fn("dedup_exact")(spark, SF_DIR)
-    assert shuffle_count(df) == 6, explain_str(df)
+    assert plan_shape(df).shuffles == 6, plan_shape(df)
     # and the scans read only (doc_id, text) — the url variant derives its
     # key from doc_id alone and never touches text (its standalone pin in
     # test_url_dedup.py asserts the doc_id-only scan directly)
@@ -67,14 +85,14 @@ def test_text_profile_is_map_only(spark):
     # every feature (incl. 3-gram repetition via row-local array_distinct)
     # is computed in the scan's projection — no exchange at any scale
     df = _spark_fn("text_profile")(spark, SF_DIR)
-    assert shuffle_count(df) == 0, explain_str(df)
+    assert plan_shape(df).shuffles == 0, plan_shape(df)
 
 
 def test_split_sample_docs_is_map_only(spark):
     # the per-doc rule (the r11 union's 'doc' variant keeps this shape; the
     # cluster variant rides the CC path, pinned by tests/test_cc.py)
     df = Q.doc_split_sample_q(spark, SF_DIR)
-    assert shuffle_count(df) == 0, explain_str(df)
+    assert plan_shape(df).shuffles == 0, plan_shape(df)
 
 
 def test_minhash_signatures_is_map_only(spark):
@@ -85,27 +103,28 @@ def test_minhash_signatures_is_map_only(spark):
     # for an InMemoryTableScan and make the count meaningless)
     spark.catalog.clearCache()
     df = _spark_fn("minhash_signatures")(spark, SF_DIR)
-    assert shuffle_count(df) == 0, explain_str(df)
+    assert plan_shape(df).shuffles == 0, plan_shape(df)
 
 
 def test_knn_broadcasts_queries_not_corpus(spark):
     df = _spark_fn("similarity_knn")(spark, SF_DIR)
-    assert has_broadcast_join(df), explain_str(df)
+    shape = plan_shape(df)
+    assert shape.count("BroadcastHashJoin", "BroadcastNestedLoopJoin"), shape
 
 
 def test_asof_join_single_key_shuffle(spark):
     df = _spark_fn("asof_join_events_orders")(spark, SF_DIR)
-    plan = explain_str(df)
+    shape = plan_shape(df)
     # union-sort-window pattern: no join node at all, only key-partitioned windows
-    assert "SortMergeJoin" not in plan and "NestedLoop" not in plan, plan
+    assert not shape.count("SortMergeJoin", "BroadcastNestedLoopJoin", "CartesianProduct"), shape
 
 
 def test_broadcast_enrich_no_fact_shuffle_before_agg(spark):
     df = _spark_fn("join_broadcast_enrich")(spark, SF_DIR)
-    plan = explain_str(df)
-    assert "BroadcastHashJoin" in plan, plan
+    shape = plan_shape(df)
+    assert shape.nodes["BroadcastHashJoin"], shape
     # orders side: scan → broadcast join → partial agg → single exchange
-    assert shuffle_count(df) <= 1, plan
+    assert shape.shuffles <= 1, shape
 
 
 def test_dedup_caches_release_when_result_dropped(spark):
@@ -144,9 +163,9 @@ def test_dedup_caches_release_when_result_dropped(spark):
 
 def test_multiprobe_knn_broadcasts_queries_not_corpus(spark):
     df = _spark_fn("similarity_knn_lsh")(spark, SF_DIR)
-    plan = explain_str(df)
-    assert "BroadcastHashJoin" in plan, plan  # probe side broadcast, corpus streamed
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan, plan
+    shape = plan_shape(df)
+    assert shape.nodes["BroadcastHashJoin"], shape  # probe side broadcast, corpus streamed
+    assert not shape.count("CartesianProduct", "BroadcastNestedLoopJoin"), shape
 
 
 def test_ann_search_broadcasts_queries_not_corpus(spark):
@@ -156,9 +175,9 @@ def test_ann_search_broadcasts_queries_not_corpus(spark):
     loop over the (tiny) query table by construction — never a
     CartesianProduct of corpus × queries."""
     df = _spark_fn("ann_search")(spark, SF_DIR)
-    plan = explain_str(df)
-    assert "BroadcastHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
+    shape = plan_shape(df)
+    assert shape.nodes["BroadcastHashJoin"], shape
+    assert not shape.nodes["CartesianProduct"], shape
 
 
 def test_gopher_signals_bounded_shuffles(spark):
@@ -220,16 +239,16 @@ def test_knn_lsh_bucket_cap_reuses_bucket_exchange(spark):
     qs = emb.filter(F.col("vec_id") < 10)
     capped = cosine_knn_lsh(emb, qs, k=5, planes=8, dim=64, max_bucket=1000)
     uncapped = cosine_knn_lsh(emb, qs, k=5, planes=8, dim=64, max_bucket=None)
-    assert shuffle_count(capped) <= shuffle_count(uncapped) + 1
+    assert plan_shape(capped).shuffles <= plan_shape(uncapped).shuffles + 1
 
 
 def test_decontaminate_broadcasts_benchmark_side(spark):
     df = _spark_fn("decontaminate_against_benchmark")(spark, SF_DIR)
-    plan = explain_str(df)
+    shape = plan_shape(df)
     # the benchmark shingle set is the small side: must broadcast, and the
     # final anti join must also be broadcast (tainted ids are few)
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-    assert "CartesianProduct" not in plan, plan
+    assert shape.nodes["BroadcastHashJoin"] >= 2, shape
+    assert not shape.nodes["CartesianProduct"], shape
 
 
 def test_tfidf_folds_corpus_count_into_plan(spark):
@@ -237,8 +256,7 @@ def test_tfidf_folds_corpus_count_into_plan(spark):
     # broadcast 1-row cross join — BroadcastNestedLoop over 1 row is the
     # expected (cheap) shape
     df = _spark_fn("tfidf_top_terms")(spark, SF_DIR)
-    plan = explain_str(df)
-    assert "BroadcastNestedLoop" in plan, plan
+    assert plan_shape(df).nodes["BroadcastNestedLoopJoin"], plan_shape(df)
 
 
 def test_minhash_gate_keeps_staged_hashes(spark):
@@ -277,18 +295,18 @@ def test_simhash_is_map_only(spark):
     # bit votes are aggregate() scans over the materialized word-hash array —
     # per-document output, so the plan must carry no exchange
     df = _spark_fn("dedup_simhash")(spark, SF_DIR)
-    assert shuffle_count(df) == 0, explain_str(df)
+    assert plan_shape(df).shuffles == 0, plan_shape(df)
 
 
 def test_bm25_topk_is_takeordered_with_broadcast_folds(spark):
-    """BM25: df and (N, avgdl) fold back as broadcasts (never a shuffle of
-    the corpus-scale tf side against a vocab-sized table), and the final
+    """BM25: (N, avgdl) folds back as a broadcast (never a shuffle of the
+    corpus-scale tf side against a 1-row table), and the final
     top-k is TakeOrdered — a global single-partition window sort over the
     scored set would funnel every matching doc into one task at 100 TB."""
     df = _spark_fn("bm25_topk_docs")(spark, SF_DIR)
-    plan = explain_str(df)
-    assert "TakeOrderedAndProject" in plan, plan
-    assert has_broadcast_join(df), plan
+    shape = plan_shape(df)
+    assert shape.nodes["TakeOrderedAndProject"], shape
+    assert shape.count("BroadcastHashJoin", "BroadcastNestedLoopJoin"), shape
 
 
 def test_substring_runs_no_cross_product_and_pruned_scans(spark):
@@ -332,9 +350,9 @@ def test_contamination_score_broadcasts_benchmark(spark):
     corpus side against a benchmark-sized table would add a corpus-scale
     exchange for a tiny lookup."""
     df = _spark_fn("contamination_score_docs")(spark, SF_DIR)
-    plan = explain_str(df)
-    assert has_broadcast_join(df), plan
-    assert "CartesianProduct" not in plan, plan
+    shape = plan_shape(df)
+    assert shape.count("BroadcastHashJoin", "BroadcastNestedLoopJoin"), shape
+    assert not shape.nodes["CartesianProduct"], shape
 
 
 def test_shard_manifest_partial_aggregates_before_exchange(spark):
@@ -349,8 +367,9 @@ def test_shard_manifest_partial_aggregates_before_exchange(spark):
         F.col("id").alias("doc_id"), F.col("id").cast("string").alias("text")
     )
     sharded = assign_shard(docs, "doc_id", 8).repartition(8, "shard").localCheckpoint()
-    plan = shard_manifest(sharded)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 2, plan
+    manifest = shard_manifest(sharded)
+    plan = manifest._jdf.queryExecution().executedPlan().toString()
+    assert plan_shape(manifest).count("Exchange", "BroadcastExchange") <= 2, plan
     # partial aggregation present, and it sits BELOW the first exchange
     assert "partial_" in plan, plan
     assert plan.index("Exchange") < plan.index("partial_"), plan
@@ -362,7 +381,7 @@ def test_compaction_plan_single_manifest_window(spark):
     # is the only thing that ever moves; no join, no extra exchange
     df = _spark_fn("compaction_plan_orders")(spark, SF_DIR)
     plan = explain_str(df)
-    assert shuffle_count(df) <= 2, plan
+    assert plan_shape(df).shuffles <= 2, plan
     assert "partial" in plan.lower(), plan  # manifest agg combines map-side
     assert "Join" not in plan, plan
 
@@ -375,7 +394,7 @@ def test_compaction_split_plan_reuses_partition_exchange(spark):
     # a SinglePartition global sort
     df = _spark_fn("compaction_split_orders")(spark, SF_DIR)
     plan = explain_str(df)
-    assert shuffle_count(df) <= 3, plan
+    assert plan_shape(df).shuffles <= 3, plan
     assert "Join" not in plan, plan
     assert "SinglePartition" not in plan, plan
 

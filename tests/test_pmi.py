@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+from tamer_spark.plans import plan_shape
 from tamer_spark.queries import pmi_top_bigrams
 from tests.conftest import SF_DIR
 
@@ -66,14 +67,9 @@ def test_pmi_min_count_floor_binds(spark):
 
 
 def test_pmi_topk_is_takeordered_with_broadcast_unigrams(spark):
-    plan = (
-        pmi_top_bigrams(spark, SF_DIR, min_count=5, k=20)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "TakeOrderedAndProject" in plan, plan
-    assert plan.count("BroadcastExchange") >= 2, plan  # two unigram joins + N
+    shape = plan_shape(pmi_top_bigrams(spark, SF_DIR, min_count=5, k=20))
+    assert shape.nodes["TakeOrderedAndProject"], shape
+    assert shape.nodes["BroadcastExchange"] >= 2, shape  # two unigram joins + N
 
 
 # ------------------------------------------------------------------ skip-gram
@@ -117,17 +113,6 @@ def test_skipgram_single_window_exchange(spark):
     from tamer_spark.queries import skipgram_top_pairs
     from tests.conftest import SF_DIR
 
-    plan = (
-        skipgram_top_pairs(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-        .split("== Initial Plan ==")[0]
-    )
-    import re
-
-    doc_exch = [
-        s for s in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan) if "doc_id" in s
-    ]
-    assert len(doc_exch) == 1, plan
-    assert "TakeOrderedAndProject" in plan, plan
+    shape = plan_shape(skipgram_top_pairs(spark, SF_DIR))
+    assert len([p for p in shape.hash_keys if "doc_id" in p]) == 1, shape
+    assert shape.nodes["TakeOrderedAndProject"], shape

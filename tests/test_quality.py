@@ -32,23 +32,21 @@ def test_matches_counts_malformed_and_passes_null(spark):
 
 
 def test_run_checks_is_one_aggregate_pass(spark):
+    from tamer_spark.plans import plan_shape
+
     # the module contract: N checks compile to ONE scan + ONE agg, never
     # per-check jobs — pin no Exchange below the aggregate's partial stage
     # beyond the single final one
     df = spark.range(100).select(
         F.col("id").alias("a"), (F.col("id") % 10).alias("b")
     )
-    plan = (
-        run_checks(df, [not_null("a"), in_range("b", lo=2, hi=8), matches("a", "1")])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    out = run_checks(df, [not_null("a"), in_range("b", lo=2, hi=8), matches("a", "1")])
+    shape = plan_shape(out)
     # one partial agg over the single source, one SinglePartition exchange,
     # all three checks fused into the same HashAggregate
-    assert plan.count("Exchange") == 1
-    assert plan.count("Range") == 1
-    assert "partial_sum" in plan
+    assert shape.count("Exchange", "BroadcastExchange") == 1, shape
+    assert shape.nodes["Range"] == 1, shape
+    assert "partial_sum" in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_in_range_bounds_inclusive(spark):
@@ -97,11 +95,11 @@ def test_column_stats_single_aggregate_no_join(spark):
     # ONE aggregate pass: no join, no window — the expand for the multi
     # count_distinct is the only multiplier
     from tamer_spark.operators.quality import column_stats
-    from tamer_spark.plans import explain_str
+    from tamer_spark.plans import plan_shape
 
     df = spark.range(100).withColumn("v", F.col("id") % 7)
-    plan = explain_str(column_stats(df, [("id", F.col("id")), ("v", F.col("v"))]))
-    assert "Join" not in plan and "Window" not in plan, plan
+    shape = plan_shape(column_stats(df, [("id", F.col("id")), ("v", F.col("v"))]))
+    assert not [n for n in shape.nodes if "Join" in n or "Window" in n], shape
 
 
 def test_column_stats_rejects_empty_specs(spark):

@@ -7,20 +7,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from tamer_spark import queries as Q
-from tamer_spark.plans.inspect import explain_str, shuffle_count
+from tamer_spark.plans.inspect import explain_str, plan_shape
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def _rr_count(df) -> int:
-    return explain_str(df, mode="simple").count("RoundRobinPartitioning")
+    return sum(p.startswith("RoundRobinPartitioning") for p in plan_shape(df).exchanges)
 
 
 def test_floor_fires_on_single_split_file(spark):
     df = Q._t(spark, SF_DIR, "embeddings", floor=True)
     assert _rr_count(df) == 1, explain_str(df)
     # and it is NOT a keyed shuffle: the plan-pin helper must not count it
-    assert shuffle_count(df) == 0
+    assert plan_shape(df).shuffles == 0
 
 
 def test_floor_noop_when_split_count_reaches_parallelism(spark):

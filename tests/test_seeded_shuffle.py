@@ -72,12 +72,13 @@ def test_plan_one_shuffle_no_single_partition(spark):
     """The 100 TB posture: one hash exchange on shard + per-shard sort —
     a single-partition window (global row_number) would serialize the
     corpus through one task and must never appear."""
-    from tamer_spark.plans import explain_str, shuffle_count
+    from tamer_spark.plans import plan_shape
     from tamer_spark.queries import seeded_shuffle_docs_q
+    from tests.conftest import SF_DIR
 
-    df = seeded_shuffle_docs_q(spark, "/root/testdata/sf0.001")
-    assert shuffle_count(df) == 1, explain_str(df)
-    assert "SinglePartition" not in explain_str(df)
+    shape = plan_shape(seeded_shuffle_docs_q(spark, SF_DIR))
+    assert shape.shuffles == 1, shape
+    assert "SinglePartition" not in shape.exchanges, shape
 
 
 def test_null_id_propagates_null_key_not_constant(spark):

@@ -12,6 +12,7 @@ from tamer_spark.operators.sq import (
     sq_train,
     unpack_sq_codes,
 )
+from tamer_spark.plans import plan_shape
 from tests.conftest import SF_DIR
 
 
@@ -56,8 +57,8 @@ def test_sq_encode_is_map_only(spark):
     per-epoch hot path (same contract as pq_encode / ivf_append)."""
     emb = _emb(spark)
     bounds = sq_train(emb)
-    plan = sq_encode(emb, bounds)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
+    shape = plan_shape(sq_encode(emb, bounds))
+    assert not shape.count("Exchange", "BroadcastExchange"), shape
 
 
 def test_sq_frozen_bounds_epoch_union_equals_all_at_once(spark):
@@ -183,8 +184,8 @@ def test_sq_pack_is_map_only(spark):
     emb = _emb(spark)
     bounds = sq_train(emb)
     coded = sq_encode(emb, bounds)
-    plan = pack_sq_codes(coded, 64)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
+    shape = plan_shape(pack_sq_codes(coded, 64))
+    assert not shape.count("Exchange", "BroadcastExchange"), shape
 
 
 def test_sq_search_corpus_never_shuffles_before_rank(spark):
@@ -194,18 +195,11 @@ def test_sq_search_corpus_never_shuffles_before_rank(spark):
     emb = _emb(spark)
     bounds = sq_train(emb)
     coded = sq_encode(emb, bounds)
-    plan = (
-        sq_search(coded, bounds, emb.filter(F.col("vec_id") < 10), topk=5)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
+    shape = plan_shape(sq_search(coded, bounds, emb.filter(F.col("vec_id") < 10), topk=5))
+    assert shape.count("BroadcastNestedLoopJoin", "BroadcastExchange"), shape
     # exactly one shuffle exchange: the window's hashpartitioning(query_id)
-    import re
-
-    shuffles = re.findall(r"Exchange hashpartitioning\(([^,]+)", plan)
-    assert len(shuffles) == 1 and "query_id" in shuffles[0], plan
+    keys = shape.hash_keys
+    assert len(keys) == 1 and keys[0].startswith("hashpartitioning(query_id"), shape
 
 
 def test_sq4_levels_15_recall_and_exactness(spark):

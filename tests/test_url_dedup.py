@@ -138,11 +138,11 @@ def test_url_dedup_counts_groups_and_keeps_min(spark):
 def test_url_dedup_plan_single_shuffle_no_text_scan(spark):
     """The whole point of URL-first dedup at 100 TB: one digest shuffle and
     the text column NEVER read."""
-    from tamer_spark.plans import explain_str, read_schema_columns, shuffle_count
+    from tamer_spark.plans import explain_str, plan_shape, read_schema_columns
     from tamer_spark.queries import url_dedup_docs_q
 
     df = url_dedup_docs_q(spark, "/root/testdata/sf0.001")
-    assert shuffle_count(df) == 1, explain_str(df)
+    assert plan_shape(df).shuffles == 1, explain_str(df)
     scans = read_schema_columns(df)
     assert scans and all(s <= {"doc_id"} for s in scans), scans
 

@@ -50,11 +50,11 @@ def test_degenerate_docs_get_one_fingerprint(spark):
 
 
 def test_map_only_plan_and_staged_hashing(spark):
-    from tamer_spark.plans import shuffle_count
+    from tamer_spark.plans import plan_shape
 
     df = spark.createDataFrame([(1, "a b c d e f g")], "doc_id long, text string")
     out = winnow_fingerprints(df)
-    assert shuffle_count(out) == 0
+    assert plan_shape(out).shuffles == 0
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("md5") <= 2, f"md5 x{plan.count('md5')} — staging re-inlined"
 
