@@ -48,7 +48,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import functions as F
 
 from _common import session, workspace
-from tamer_spark.engine import Pipeline
+from tamer_spark.engine import Pipeline, pin
 from tamer_spark.functions.text import winnow_fingerprints
 from tamer_spark.operators.contamination import contamination_score
 from tamer_spark.operators.dedup_incremental import dedup_exact_incremental
@@ -171,7 +171,7 @@ class CurationSink:
     stats: dict = field(default_factory=dict)
 
     def write(self, df, epoch: int) -> None:
-        n_in = df.count()
+        n_in = pin(df)["rows"]  # the engine already pinned this batch: no job
         # gate 1: exact dedup vs the digest index (in-batch min-id rep too)
         idx = _read_or_empty(INDEX, "content_hash string")
         s1 = dedup_exact_incremental(df, idx.select("content_hash")).localCheckpoint()

@@ -20,7 +20,7 @@ level::
     Pipeline(source, sink, checkpoint_dir).run(spark)
 """
 
-from tamer_spark.engine import BatchMetrics, Pipeline, RetryPolicy
+from tamer_spark.engine import BatchMetrics, Pipeline, RetryPolicy, pin, unpin
 from tamer_spark.errors import StateForkError, TamerError
 from tamer_spark.session import get_spark
 from tamer_spark.state import StateStore, fingerprint
@@ -32,6 +32,8 @@ __all__ = [
     "Pipeline",
     "RetryPolicy",
     "BatchMetrics",
+    "pin",
+    "unpin",
     "StateStore",
     "fingerprint",
     # submodule re-exports (lazy would complicate pickling; keep explicit)

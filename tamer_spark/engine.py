@@ -35,12 +35,16 @@ from __future__ import annotations
 
 import logging
 import time
+import weakref
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator, Protocol
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from tamer_spark.errors import TamerError
+from tamer_spark.metrics import observed
 from tamer_spark.state import StateStore, fingerprint
 
 log = logging.getLogger("tamer_spark.engine")
@@ -71,6 +75,41 @@ class Sink(Protocol):
     def write(self, df: DataFrame, epoch: int) -> None:
         """Write one epoch. MUST be idempotent for a repeated ``epoch``."""
         ...
+
+
+# the observed row of every pinned batch, keyed weakly on the DataFrame object
+# itself: the Source/Sink protocols carry only the DataFrame, so the object is
+# the one handle the source, the engine and a sink share for one batch
+_pinned: "weakref.WeakKeyDictionary[DataFrame, dict]" = weakref.WeakKeyDictionary()
+
+
+def pin(df: DataFrame, **aggs: Column) -> dict:
+    """Cache ``df`` and compute its row count plus ``aggs`` in ONE pass.
+
+    Persists at MEMORY_AND_DISK, then runs a single map-only action — a
+    ``noop`` write of ``df.observe(count(1) AS rows, **aggs)`` — that fills
+    the cache and returns the observed metrics: one job, one stage, no
+    shuffle (a ``df.agg(...).collect()`` or ``df.count()`` is a shuffle, two
+    jobs under AQE). Each aggregate is ``None`` on an empty batch.
+
+    Idempotent per object: pinning the same DataFrame again returns the
+    recorded row and runs no job, so a batch the source pinned costs the
+    engine (and any sink that pins it) nothing. Release with :func:`unpin`.
+    """
+    row = _pinned.get(df)
+    if row is None:
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+        exprs = [F.count(F.lit(1)).alias("rows")] + [c.alias(k) for k, c in aggs.items()]
+        odf, obs = observed(df, "pin", exprs)
+        odf.write.format("noop").mode("overwrite").save()
+        row = _pinned[df] = obs.get
+    return row
+
+
+def unpin(df: DataFrame) -> None:
+    """Drop ``df``'s cached blocks and its :func:`pin` record."""
+    _pinned.pop(df, None)
+    df.unpersist()
 
 
 @dataclass
@@ -184,31 +223,30 @@ class Pipeline:
             self.observer = prev_observer
 
     def _write_with_retry(self, df: DataFrame, epoch: int) -> int:
-        """Pin the batch, count it, write it, release it.
+        """Pin the batch, write it, release it.
 
-        ``persist()`` makes the live source plan execute ONCE per epoch in
-        the normal path: the row count materializes the cache, the sink
-        write and any retries read the cached blocks. Without it, count +
-        write would run the source query twice — a 2× tax on every ingest
-        epoch, and a non-deterministic source (rows arriving between
-        executions) could write a different batch than the one it
-        counted/advanced state by. Caveat: Spark caching is best-effort —
-        a lost executor recomputes its blocks from lineage (re-touching the
-        source); MEMORY_AND_DISK narrows that window but cannot close it,
-        so sinks still carry the per-epoch idempotence contract.
+        :func:`pin` makes the live source plan execute ONCE per epoch in
+        the normal path: its single observed pass fills the cache and
+        counts the rows, and the sink write and any retries read the cached
+        blocks. A batch the source already pinned (``JdbcTumblingSource``
+        pins to read its max timestamp) costs no job here. Without the pin,
+        count + write would run the source query twice, and a
+        non-deterministic source (rows arriving between executions) could
+        write a different batch than the one it counted/advanced state by.
+        Caveat: Spark caching is best-effort — a lost executor recomputes
+        its blocks from lineage (re-touching the source); MEMORY_AND_DISK
+        narrows that window but cannot close it, so sinks still carry the
+        per-epoch idempotence contract.
         The empty-batch skip stays: an all-idle poll never reaches the sink.
         """
-        from pyspark import StorageLevel
-
         last: Exception | None = None
         attempts = [0.0, *self.retry.delays()]
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             for delay in attempts:
                 if delay:
                     time.sleep(delay)
                 try:
-                    n = df.count()
+                    n = pin(df)["rows"]
                     if n:
                         self.sink.write(df, epoch)
                     return n
@@ -216,7 +254,7 @@ class Pipeline:
                     last = e
                     log.warning("sink write failed (epoch=%d): %s", epoch, e)
         finally:
-            df.unpersist()
+            unpin(df)
         raise TamerError(f"sink write failed after {self.retry.retries} retries") from last
 
 
@@ -226,5 +264,7 @@ __all__ = [
     "Pipeline",
     "RetryPolicy",
     "BatchMetrics",
+    "pin",
+    "unpin",
     "fingerprint",
 ]

@@ -35,7 +35,9 @@ from datetime import datetime, timedelta, timezone
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from tamer_spark.engine import pin, unpin
 from tamer_spark.state import fingerprint
 
 
@@ -131,27 +133,26 @@ class JdbcTumblingSource:
 
     def iteration(self, state: Any, spark: SparkSession) -> tuple[DataFrame | None, Any]:
         window = TimeWindow.from_state(state)
-        # Persist BEFORE the max(ts) agg: in the normal path the windowed
-        # query hits the live database once per epoch — the agg materializes
-        # the cache, and the engine's count + sink write read the cached
-        # blocks (the engine re-persists at the same level, a no-op, and
-        # unpersists after the write). Without this, rows committed between
-        # the agg and the write would make the written batch diverge from
-        # the max_ts that advanced the window — duplicates at lag=0.
-        # (Cache loss on executor failure recomputes from lineage and
-        # re-touches the database — best-effort, not a hard guarantee;
-        # a non-zero `lag` bounds the divergence that can produce.)
-        df = self._read(spark, self.render_sql(window)).persist()
-        # max timestamp of the batch drives the window advance
-        # (df.agg(max) — no sort, single partial-agg pass)
-        from pyspark.sql import functions as F
-
-        row = df.agg(F.max(self.ts_column).alias("mx")).collect()[0]
-        max_ts = row["mx"]
+        # Pin the batch and read its max timestamp in the same pass: the
+        # windowed query hits the live database once per epoch — one
+        # map-only job fills the cache while an observed max(ts) rides
+        # along, and the engine's pin + the sink write reuse this pinned
+        # object (the engine unpins after the write). Reading max(ts) in a
+        # second query instead would let rows committed in between make the
+        # written batch diverge from the max_ts that advanced the window —
+        # duplicates at lag=0. (Cache loss on executor failure recomputes
+        # from lineage and re-touches the database — best-effort, not a hard
+        # guarantee; a non-zero `lag` bounds the divergence that can produce.)
+        df = self._read(spark, self.render_sql(window))
+        try:
+            max_ts = pin(df, mx=F.max(self.ts_column))["mx"]
+        except Exception:
+            unpin(df)
+            raise
         if max_ts is not None and max_ts.tzinfo is None:
             max_ts = max_ts.replace(tzinfo=timezone.utc)
         new_window = advance_window(window, max_ts, self.step, self.lag, self.now_fn())
         if max_ts is None:
-            df.unpersist()
+            unpin(df)
             return None, new_window.to_state()
         return df, new_window.to_state()

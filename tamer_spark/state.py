@@ -139,9 +139,16 @@ class StateStore:
             f.flush()
             os.fsync(f.fileno())
         # history of superseded states (the compacted topic keeps only the
-        # latest per key; we keep a small debug trail instead)
+        # latest per key; we keep a small debug trail instead), named by the
+        # superseded epoch + a nanosecond stamp bumped past any taken name:
+        # back-to-back commits never overwrite each other's history file
         hist_dir = os.path.join(self.dir, "history")
         os.makedirs(hist_dir, exist_ok=True)
         if os.path.exists(self.path):
-            os.replace(self.path, os.path.join(hist_dir, f"state-{int(doc.updated_at*1000)}.json"))
+            with open(self.path, encoding="utf-8") as f:
+                old_epoch = StateDoc.from_json(f.read()).epoch
+            ns = time.time_ns()
+            while os.path.exists(hist := os.path.join(hist_dir, f"state-{old_epoch}-{ns}.json")):
+                ns += 1
+            os.replace(self.path, hist)
         os.replace(tmp, self.path)

@@ -7,8 +7,9 @@ including across crash/restart (exactly-once with resume)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
-from tamer_spark.engine import Pipeline, RetryPolicy
+from tamer_spark.engine import Pipeline, RetryPolicy, pin, unpin
 from tamer_spark.errors import TamerError
 from tamer_spark.sinks import MemorySink
 from tamer_spark.state import fingerprint
@@ -132,6 +133,42 @@ def test_no_cached_batches_left_after_run(spark, tmp_path):
     )
     leaked = persisted_ids() - before
     assert not leaked, f"run leaked cached RDD ids: {leaked}"
+
+
+def _jobs_in(spark, group, action):
+    """Run ``action`` under job group ``group``; return (result, jobs run)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pin_is_one_job_and_idempotent_per_object(spark):
+    """pin fills the cache and observes rows + caller aggregates in ONE job;
+    pinning the same object again returns the recorded row with no job."""
+    df = spark.range(50).withColumn("k", F.col("id") % 7)
+    first, jobs = _jobs_in(spark, "pin-first", lambda: pin(df, mx=F.max("k"), s=F.sum("id")))
+    assert (first, jobs) == ({"rows": 50, "mx": 6, "s": 1225}, 1)
+    again, jobs = _jobs_in(spark, "pin-again", lambda: pin(df))
+    assert (again, jobs) == (first, 0)
+    assert df.storageLevel.useMemory and df.storageLevel.useDisk
+    unpin(df)
+    assert not df.storageLevel.useMemory
+    # after unpin the record is gone: a new pin runs its pass again
+    _, jobs = _jobs_in(spark, "pin-repin", lambda: pin(df))
+    assert jobs == 1
+    unpin(df)
+
+
+def test_pin_empty_batch_observes_zero_rows_and_null_aggregates(spark):
+    empty = spark.createDataFrame([], "id long, ts timestamp")
+    try:
+        assert pin(empty, mx=F.max("ts"), s=F.sum("id")) == {"rows": 0, "mx": None, "s": None}
+    finally:
+        unpin(empty)
 
 
 def test_idle_poll_backs_off_exponentially(spark, tmp_path):

@@ -182,23 +182,24 @@ def test_rest_pagination_exactly_once_with_growth_and_auth(spark, tmp_path, rest
 
 # --- JDBC tumbling window over the users-style fixture (FIXTURES §1) ------
 
-def test_jdbc_tumbling_ingests_every_row_exactly_once(spark, tmp_path):
-    # synthesize a 200-row 'users' table spanning 40 days; the source must
-    # ingest all rows across windows, exactly once (FIXTURES.md §1 invariant)
-    t0 = datetime(2020, 1, 1, tzinfo=UTC)
-    rows = [(f"id{i:03d}", f"user{i}", t0 + timedelta(hours=5 * i)) for i in range(200)]
-    users = spark.createDataFrame(rows, "id string, name string, modified_at timestamp")
-    users.write.mode("overwrite").parquet(str(tmp_path / "users.parquet"))
+def _users_jdbc_source(spark, tmp_path, stamps, step, wrap=lambda sql, df: df):
+    """JdbcTumblingSource over a parquet-backed 'users' table with one row
+    per timestamp in ``stamps``; ``wrap(sql, df)`` instruments each read."""
+    rows = [(f"id{i:03d}", f"user{i}", ts) for i, ts in enumerate(stamps)]
+    schema = "id string, name string, modified_at timestamp"
+    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(str(tmp_path / "users.parquet"))
 
     def read_sql(spark_, sql):
         # parquet-backed stand-in for the DB: apply the window predicate that
-        # the rendered SQL carries (pushdown simulation)
+        # the rendered SQL carries (pushdown simulation); the explicit schema
+        # skips parquet's footer-inference job, as a JDBC read has none
         frm, to = sql.split("'")[1], sql.split("'")[3]
-        return (
-            spark_.read.parquet(str(tmp_path / "users.parquet"))
+        return wrap(sql, (
+            spark_.read.schema(schema).parquet(str(tmp_path / "users.parquet"))
             .filter((F.col("modified_at") > frm) & (F.col("modified_at") <= to))
-        )
+        ))
 
+    t0 = min(stamps)
     src = JdbcTumblingSource(
         url="jdbc:test",
         query_template=(
@@ -207,9 +208,19 @@ def test_jdbc_tumbling_ingests_every_row_exactly_once(spark, tmp_path):
         ),
         ts_column="modified_at",
         from_ts=t0 - timedelta(seconds=1),
-        step=timedelta(days=5),
-        now_fn=lambda: t0 + timedelta(days=60),
+        step=step,
+        now_fn=lambda: max(stamps) + timedelta(days=60),
         read_sql=read_sql,
+    )
+    return src, rows
+
+
+def test_jdbc_tumbling_ingests_every_row_exactly_once(spark, tmp_path):
+    # synthesize a 200-row 'users' table spanning 40 days; the source must
+    # ingest all rows across windows, exactly once (FIXTURES.md §1 invariant)
+    t0 = datetime(2020, 1, 1, tzinfo=UTC)
+    src, rows = _users_jdbc_source(
+        spark, tmp_path, [t0 + timedelta(hours=5 * i) for i in range(200)], timedelta(days=5)
     )
     sink = MemorySink()
     pipe = Pipeline(src, sink, str(tmp_path / "cp"), poll_interval_s=0.0)
@@ -217,6 +228,86 @@ def test_jdbc_tumbling_ingests_every_row_exactly_once(spark, tmp_path):
     got = sorted(r.id for r in sink.rows)
     assert got == sorted(r[0] for r in rows)  # every row exactly once
     assert len(got) == 200
+
+
+# two bursts 19 days apart: 2-day windows leave empty windows between them
+_BURSTS = [datetime(2020, 1, 1, tzinfo=UTC) + timedelta(hours=5 * i) for i in range(20)] + [
+    datetime(2020, 1, 20, tzinfo=UTC) + timedelta(hours=5 * i) for i in range(20)
+]
+
+
+def _drain(spark, tmp_path, src, sink, observer=None):
+    last = max(_BURSTS)
+    return Pipeline(src, sink, str(tmp_path / "cp"), poll_interval_s=0.0, observer=observer).run(
+        spark, until=lambda s: datetime.fromisoformat(s["from"]) >= last
+    )
+
+
+def test_jdbc_window_query_runs_once_per_epoch_in_two_jobs(spark, tmp_path):
+    """Each window's SQL executes exactly once across source pin, engine
+    and sink: the source's observed pin fills the cache, the engine's pin of
+    the same object is free, the sink reads cached blocks. A non-empty epoch
+    is 2 Spark jobs (the pin's noop pass + the sink's collect); an empty one
+    is the pin alone."""
+    sc = spark.sparkContext
+    executions = {}
+
+    def wrap(sql, df):
+        # count executions of the window's plan: partition 0 runs once per pass
+        assert sql not in executions, "a window's SQL was rendered twice"
+        executions[sql] = acc = sc.accumulator(0)
+
+        def mark(i, it):
+            if i == 0:
+                acc.add(1)
+            return it
+
+        return spark.createDataFrame(df.rdd.mapPartitionsWithIndex(mark), df.schema)
+
+    src, rows = _users_jdbc_source(spark, tmp_path, _BURSTS, timedelta(days=2), wrap)
+    epochs = []
+
+    def group(n):
+        return f"jdbc-seam-{tmp_path.name}-{n}"
+
+    def observer(m):
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group(m.epoch)))
+        epochs.append((m.rows, jobs))
+        sc.setJobGroup(group(m.epoch + 1), "jdbc seam epoch")
+
+    sink = MemorySink()
+    sc.setJobGroup(group(0), "jdbc seam epoch")
+    try:
+        _drain(spark, tmp_path, src, sink, observer)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(r.id for r in sink.rows) == sorted(r[0] for r in rows)
+    nonempty = [j for n, j in epochs if n]
+    empty = [j for n, j in epochs if not n]
+    assert len(nonempty) >= 4 and empty, epochs
+    assert {sql: a.value for sql, a in executions.items()} == {sql: 1 for sql in executions}
+    assert nonempty == [2] * len(nonempty), epochs
+    assert empty == [1] * len(empty), epochs
+
+
+def test_jdbc_run_with_empty_windows_leaves_no_cached_batch(spark, tmp_path):
+    """Non-empty batches are unpinned by the engine after the write, empty
+    ones by the source itself: a drain that crosses empty windows adds no
+    persisted RDD (pre-run snapshot — the session is shared)."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def persisted_ids():
+        it = jsc.getPersistentRDDs().keysIterator()
+        return {it.next() for _ in range(jsc.getPersistentRDDs().size())}
+
+    before = persisted_ids()
+    src, rows = _users_jdbc_source(spark, tmp_path, _BURSTS, timedelta(days=2))
+    observed = []
+    sink = MemorySink()
+    _drain(spark, tmp_path, src, sink, observer=lambda m: observed.append(m.rows))
+    assert 0 in observed and len(sink.rows) == len(rows)
+    leaked = persisted_ids() - before
+    assert not leaked, f"run leaked cached RDD ids: {leaked}"
 
 
 def test_fetch_pages_distributed(spark, rest_server):

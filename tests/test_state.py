@@ -41,3 +41,17 @@ def test_foreign_fingerprint_is_hard_error(tmp_path):
 def test_state_doc_roundtrip():
     doc = StateDoc("fp", "g", 3, {"window": ["2020-01-01", "2020-01-06"]}, 123.0)
     assert StateDoc.from_json(doc.to_json()) == doc
+
+
+def test_rapid_commits_keep_every_superseded_doc(tmp_path):
+    """Back-to-back commits land in the same millisecond; each superseded
+    doc still gets its own history file (none overwritten)."""
+    st = StateStore(str(tmp_path / "cp"), "fp1")
+    st.initialize(0)
+    n = 50
+    for i in range(1, n + 1):
+        st.commit(i, i)
+    hist = tmp_path / "cp" / "history"
+    epochs = sorted(StateDoc.from_json(p.read_text()).epoch for p in hist.iterdir())
+    assert epochs == list(range(n))
+    assert st.load().epoch == n
