@@ -125,6 +125,11 @@ class CrawlSource:
         if state == 1:
             return raw.filter(F.col("doc_id") % 3 == 0), 2
         if state == 2:
+            # Reading CURATED (this pipeline's own sink output) is safe: the
+            # engine may run an iteration while the same run() still writes
+            # the previous epoch, but state 2 is only reached as the FIRST
+            # iteration of the resumed run(), which is never read ahead —
+            # epoch 0 was committed by the earlier run().
             # read the EARLIEST curated epoch partition (the engine numbers
             # epochs from 0 — derive, don't hardcode). Earliest, not latest:
             # if a crash lands between the second epoch's sink write and its

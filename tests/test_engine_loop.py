@@ -6,6 +6,8 @@ including across crash/restart (exactly-once with resume)."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -35,6 +37,18 @@ class CountingSource:
         return spark.createDataFrame([(i, i)], "key int, value int"), i
 
 
+class RecordingSource(CountingSource):
+    """CountingSource that records the state of every iteration call."""
+
+    def __init__(self, limit=10):
+        super().__init__(limit)
+        self.calls = []
+
+    def iteration(self, state, spark):
+        self.calls.append(state)
+        return super().iteration(state, spark)
+
+
 def test_counts_1_to_10_exactly_once_in_order(spark, tmp_path):
     sink = MemorySink()
     pipe = Pipeline(CountingSource(), sink, str(tmp_path / "cp"))
@@ -43,15 +57,33 @@ def test_counts_1_to_10_exactly_once_in_order(spark, tmp_path):
     assert [r.key for r in sink.rows] == list(range(1, 11))
 
 
+def _persisted_ids(spark):
+    jsc = spark.sparkContext._jsc.sc()
+    it = jsc.getPersistentRDDs().keysIterator()
+    return {it.next() for _ in range(jsc.getPersistentRDDs().size())}
+
+
 def test_crash_resume_no_dupes_no_loss(spark, tmp_path):
     """Kill the pipeline mid-run (sink write fails hard), restart with a new
-    Pipeline over the same checkpoint: every record still exactly once."""
+    Pipeline over the same checkpoint: every record still exactly once.
+
+    The failing epoch's successor was already read ahead and pinned; the
+    failure discards it unwritten, so the state stays at the failed epoch
+    and no cached batch is left behind."""
+    source = RecordingSource()
+    before = _persisted_ids(spark)
     sink = MemorySink(fail_on_epochs={5})
     pipe = Pipeline(
-        CountingSource(), sink, str(tmp_path / "cp"), retry=RetryPolicy(retries=1, base_delay_s=0.0)
+        source, sink, str(tmp_path / "cp"), retry=RetryPolicy(retries=1, base_delay_s=0.0)
     )
     with pytest.raises(TamerError):
         pipe.run(spark, until=lambda s: s >= 10)
+    assert source.calls == [0, 1, 2, 3, 4, 5, 6]  # 6 = the discarded read-ahead
+    doc = pipe._store().load()
+    assert (doc.epoch, doc.state) == (5, 5)
+    assert [r.key for r in sink.rows] == [1, 2, 3, 4, 5]
+    leaked = _persisted_ids(spark) - before
+    assert not leaked, f"failed run leaked cached RDD ids: {leaked}"
     # simulate restart: fresh sink failure config, same checkpoint
     sink.fail_on_epochs = set()
     final = Pipeline(CountingSource(), sink, str(tmp_path / "cp")).run(
@@ -122,16 +154,12 @@ def test_no_cached_batches_left_after_run(spark, tmp_path):
     must not add any persisted RDD of its own.
     """
 
-    def persisted_ids():
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
-        return {it.next() for _ in range(spark.sparkContext._jsc.sc().getPersistentRDDs().size())}
-
-    before = persisted_ids()
+    before = _persisted_ids(spark)
     sink = MemorySink()
     Pipeline(CountingSource(limit=3), sink, str(tmp_path / "cp")).run(
         spark, until=lambda s: s >= 3
     )
-    leaked = persisted_ids() - before
+    leaked = _persisted_ids(spark) - before
     assert not leaked, f"run leaked cached RDD ids: {leaked}"
 
 
@@ -213,3 +241,103 @@ def test_run_until_drained_stops_after_idle(spark, tmp_path):
     final = pipe.run_until_drained(spark, idle_iterations=2)
     assert final == 4
     assert [r.key for r in sink.rows] == [1, 2, 3, 4]
+
+
+def test_next_iteration_overlaps_the_current_write(spark, tmp_path):
+    """Epoch N's sink write waits until iteration(S_{N+1}) has started: the
+    serial loop would time out here; the read-ahead loop runs both at once.
+    The last epoch reads nothing ahead (max_iterations stops the loop)."""
+    started = {s: threading.Event() for s in range(5)}
+    overlapped = []
+
+    class Signalling(CountingSource):
+        def iteration(self, state, spark_):
+            started[state].set()
+            return super().iteration(state, spark_)
+
+    class WaitingSink(MemorySink):
+        def write(self, df, epoch):
+            if epoch < 3:
+                overlapped.append(started[epoch + 1].wait(timeout=60))
+            super().write(df, epoch)
+
+    sink = WaitingSink()
+    Pipeline(Signalling(), sink, str(tmp_path / "cp")).run(spark, max_iterations=4)
+    assert overlapped == [True, True, True]
+    assert [r.key for r in sink.rows] == [1, 2, 3, 4]
+    assert not started[4].is_set()
+
+
+@pytest.mark.parametrize(
+    "stop", [{"max_iterations": 4}, {"until": lambda s: s >= 4}], ids=["max_iterations", "until"]
+)
+def test_iteration_runs_once_per_epoch(spark, tmp_path, stop):
+    """Reading ahead never calls the source for an epoch that will not run:
+    under max_iterations or a pure until, one iteration per epoch."""
+    source = RecordingSource()
+    sink = MemorySink()
+    assert Pipeline(source, sink, str(tmp_path / "cp")).run(spark, **stop) == 4
+    assert source.calls == [0, 1, 2, 3]
+    assert [r.key for r in sink.rows] == [1, 2, 3, 4]
+
+
+def test_read_ahead_error_surfaces_after_the_previous_commit(spark, tmp_path):
+    """An iteration that raises on the read-ahead thread raises from run()
+    only after the epoch it overlapped was written, committed and observed
+    — where the serial loop would have raised it."""
+    loop_thread = threading.current_thread()
+    raised_on = []
+    seen = []
+
+    class Failing(CountingSource):
+        def iteration(self, state, spark_):
+            if state == 3:
+                raised_on.append(threading.current_thread())
+                raise ValueError("source down")
+            return super().iteration(state, spark_)
+
+    sink = MemorySink()
+    pipe = Pipeline(Failing(), sink, str(tmp_path / "cp"), observer=lambda m: seen.append(m.epoch))
+    with pytest.raises(ValueError, match="source down"):
+        pipe.run(spark, until=lambda s: s >= 10)
+    assert raised_on and raised_on[0] is not loop_thread
+    assert seen == [0, 1, 2]
+    doc = pipe._store().load()
+    assert (doc.epoch, doc.state) == (3, 3)
+    assert [r.key for r in sink.rows] == [1, 2, 3]
+
+
+def test_retry_backoff_sleeps_through_sleep_fn(spark, tmp_path):
+    """Sink retries back off through the injectable sleep_fn, like idle
+    polling: exponential from base_delay_s, capped at max_delay_s."""
+    sleeps = []
+    pipe = Pipeline(
+        CountingSource(),
+        MemorySink(fail_on_epochs={1}),
+        str(tmp_path / "cp"),
+        retry=RetryPolicy(retries=3, base_delay_s=0.25, max_delay_s=0.5),
+        sleep_fn=sleeps.append,
+    )
+    with pytest.raises(TamerError):
+        pipe.run(spark, max_iterations=3)
+    assert sleeps == [0.25, 0.5, 0.5]
+
+
+def test_run_until_drained_leaves_no_cached_batch(spark, tmp_path):
+    """A drained source that still advances its state and returns EMPTY
+    DataFrames (not None) keeps the loop reading ahead; the idle-count stop
+    only shows after the observer, so the last read-ahead batch is pinned
+    and must be discarded unwritten."""
+
+    class Sliding(CountingSource):
+        def iteration(self, state, spark_):
+            rows = [(state + 1, state + 1)] if state < self.limit else []
+            return spark_.createDataFrame(rows, "key int, value int"), state + 1
+
+    before = _persisted_ids(spark)
+    sink = MemorySink()
+    pipe = Pipeline(Sliding(limit=3), sink, str(tmp_path / "cp"), poll_interval_s=0.0)
+    assert pipe.run_until_drained(spark, idle_iterations=2) == 5
+    assert [r.key for r in sink.rows] == [1, 2, 3]
+    leaked = _persisted_ids(spark) - before
+    assert not leaked, f"drain leaked cached RDD ids: {leaked}"

@@ -248,7 +248,13 @@ def test_jdbc_window_query_runs_once_per_epoch_in_two_jobs(spark, tmp_path):
     and sink: the source's observed pin fills the cache, the engine's pin of
     the same object is free, the sink reads cached blocks. A non-empty epoch
     is 2 Spark jobs (the pin's noop pass + the sink's collect); an empty one
-    is the pin alone."""
+    is the pin alone.
+
+    The loop reads one epoch ahead, so epoch N+1's pin runs on the
+    read-ahead thread under the job group that was current when it started
+    — epoch N's — possibly after N's observer ran. Groups are therefore read
+    after the drain: group N holds N's write (if it had rows), N+1's pin (if
+    read ahead) and, for N = 0, epoch 0's own pin."""
     sc = spark.sparkContext
     executions = {}
 
@@ -265,14 +271,13 @@ def test_jdbc_window_query_runs_once_per_epoch_in_two_jobs(spark, tmp_path):
         return spark.createDataFrame(df.rdd.mapPartitionsWithIndex(mark), df.schema)
 
     src, rows = _users_jdbc_source(spark, tmp_path, _BURSTS, timedelta(days=2), wrap)
-    epochs = []
+    epoch_rows = []
 
     def group(n):
         return f"jdbc-seam-{tmp_path.name}-{n}"
 
     def observer(m):
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group(m.epoch)))
-        epochs.append((m.rows, jobs))
+        epoch_rows.append(m.rows)
         sc.setJobGroup(group(m.epoch + 1), "jdbc seam epoch")
 
     sink = MemorySink()
@@ -282,12 +287,16 @@ def test_jdbc_window_query_runs_once_per_epoch_in_two_jobs(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sorted(r.id for r in sink.rows) == sorted(r[0] for r in rows)
-    nonempty = [j for n, j in epochs if n]
-    empty = [j for n, j in epochs if not n]
-    assert len(nonempty) >= 4 and empty, epochs
+    n_epochs = len(epoch_rows)
+    nonempty = sum(1 for n in epoch_rows if n)
+    assert nonempty >= 4 and nonempty < n_epochs, epoch_rows
     assert {sql: a.value for sql, a in executions.items()} == {sql: 1 for sql in executions}
-    assert nonempty == [2] * len(nonempty), epochs
-    assert empty == [1] * len(empty), epochs
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(group(e))) for e in range(n_epochs)]
+    # every window here progresses the state, so every epoch after the first
+    # is read ahead: epoch e + 1 exists exactly when it was
+    expected = [(n > 0) + (e + 1 < n_epochs) + (e == 0) for e, n in enumerate(epoch_rows)]
+    assert jobs == expected, (epoch_rows, jobs)
+    assert sum(jobs) == 2 * nonempty + (n_epochs - nonempty), jobs
 
 
 def test_jdbc_run_with_empty_windows_leaves_no_cached_batch(spark, tmp_path):
