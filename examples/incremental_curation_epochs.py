@@ -38,6 +38,7 @@ manifest row is byte-identical, so an incremental publisher re-uploads
 only the changed files. Run: ``python examples/incremental_curation_epochs.py``.
 """
 
+import glob
 import sys
 from pathlib import Path
 
@@ -59,6 +60,9 @@ from tamer_spark.operators.dsir import (
 )
 from tamer_spark.operators.drift import histogram_merge, value_histogram
 from tamer_spark.operators.mixing import bottomk_merge, bottomk_sample
+from tamer_spark.operators.quality import column_stats_grouped
+from tamer_spark.sinks import epoch_frames
+from tamer_spark.sinks.layout import compact_partitioned
 from tamer_spark.sinks.shards import assign_shard, shard_diff, write_training_shards
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -90,20 +94,7 @@ HIST = ws / "len_hist"
 SAMPLE = ws / "audit_sample"
 HIST_GRID = (0, 16, 64)  # (lo, width, n_buckets) — frozen at cold start
 SAMPLE_K = 20
-
-
-def _read_or_empty(path: Path, schema: str):
-    if any(path.glob("epoch=*")):
-        return spark.read.option("basePath", str(path)).parquet(str(path) + "/epoch=*")
-    return spark.createDataFrame([], schema)
-
-
-def _epochs(path: Path) -> list[int]:
-    """Epoch partition numbers present under ``path``, ascending. The engine
-    numbers epochs from 0 (state.py initializes epoch 0; engine.py writes
-    each batch with the CURRENT doc.epoch before committing epoch+1) — so
-    readers derive epoch numbers from the directory, never hardcode them."""
-    return sorted(int(p.name.split("=", 1)[1]) for p in path.glob("epoch=*"))
+DOCS = "doc_id long, text string"  # the curated columns every reader here needs
 
 
 @dataclass
@@ -125,24 +116,12 @@ class CrawlSource:
         if state == 1:
             return raw.filter(F.col("doc_id") % 3 == 0), 2
         if state == 2:
-            # Reading CURATED (this pipeline's own sink output) is safe: the
-            # engine may run an iteration while the same run() still writes
-            # the previous epoch, but state 2 is only reached as the FIRST
-            # iteration of the resumed run(), which is never read ahead —
-            # epoch 0 was committed by the earlier run().
-            # read the EARLIEST curated epoch partition (the engine numbers
-            # epochs from 0 — derive, don't hardcode). Earliest, not latest:
-            # if a crash lands between the second epoch's sink write and its
-            # state commit, the replay re-enters state=2 with its own
-            # epoch=1 partition already on disk — [-1] would rebuild the
-            # batch from the 6 fresh docs it just wrote instead of the
-            # epoch-0 survivors, breaking the idempotent-replay contract
-            base = (
-                spark.read.option("basePath", str(CURATED))
-                .parquet(str(CURATED) + f"/epoch={_epochs(CURATED)[0]}")
-                .select("doc_id", "text")
-                .orderBy("doc_id")
-            )
+            # state s runs as epoch s - 1, so the curated epochs before it
+            # are the committed ones — epoch 0 alone, committed by the
+            # earlier run() (state 2 is the resumed run's first iteration,
+            # never run ahead). A crashed attempt's own epoch=1 partition is
+            # never read, so a replay rebuilds the same batch
+            base = epoch_frames(spark, str(CURATED), DOCS, before=state - 1).orderBy("doc_id")
             resent = base.limit(20).select(
                 (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
             )
@@ -178,13 +157,15 @@ class CurationSink:
     def write(self, df, epoch: int) -> None:
         n_in = pin(df)["rows"]  # the engine already pinned this batch: no job
         # gate 1: exact dedup vs the digest index (in-batch min-id rep too)
-        idx = _read_or_empty(INDEX, "content_hash string")
+        # every history read stops before this epoch: a failed attempt's own
+        # index/posting partitions must not gate its retry or replay
+        idx = epoch_frames(spark, str(INDEX), "content_hash string", before=epoch)
         s1 = dedup_exact_incremental(df, idx.select("content_hash")).localCheckpoint()
         # gate 2: winnow near-dup probe vs the corpus posting list — the
         # batch side explodes its ~2/(w+1)-density fingerprints, the join
         # is an fp equi-join (bucket ids, never doc x doc)
         fps = winnow_fingerprints(s1).localCheckpoint()
-        posting = _read_or_empty(POSTING, "doc_id long, fp long")
+        posting = epoch_frames(spark, str(POSTING), "doc_id long, fp long", before=epoch)
         near_ids = (
             fps.select("doc_id", F.explode_outer("fingerprints").alias("fp"))
             .join(posting.select("fp"), "fp")
@@ -254,214 +235,179 @@ class CurationSink:
 
 def export(tag: str) -> str:
     dst = str(ws / f"export_{tag}")
-    corpus = (
-        spark.read.option("basePath", str(CURATED))
-        .parquet(str(CURATED) + "/epoch=*")
-        .select("doc_id", "text")
-    )
-    write_training_shards(corpus, dst, n_shards=N_SHARDS)
+    write_training_shards(epoch_frames(spark, str(CURATED), DOCS).drop("epoch"), dst, n_shards=N_SHARDS)
     return dst
 
 
-sink = CurationSink()
+def pipeline(sink) -> Pipeline:
+    return Pipeline(CrawlSource(), sink, str(ws / "checkpoint"), group_id="curation")
 
 
-def pipeline():
-    return Pipeline(
-        source=CrawlSource(),
-        sink=sink,
-        checkpoint_dir=str(ws / "checkpoint"),
-        group_id="curation",
+def main() -> None:
+    sink = CurationSink()
+    # epoch 1 only, then publish
+    pipeline(sink).run(spark, max_iterations=1)
+    export_a = export("a")
+
+    # resume from the checkpoint (epoch 1 is NOT re-read — the state store
+    # hands the loop state=2) and drain the remaining epochs
+    pipeline(sink).run_until_drained(spark, idle_iterations=2)
+    export_b = export("b")
+
+    d = shard_diff(export_a, export_b)
+
+    # the manifest-diff invariant: stable id-hash membership means an
+    # append-only corpus change touches EXACTLY the shards the new ids hash
+    # into — compute that set independently and demand equality
+    epochs = sorted(sink.stats)
+    assert len(epochs) == 2, f"expected exactly two curated epochs, found {epochs}"
+    new_docs = spark.read.parquet(str(CURATED / f"epoch={epochs[-1]}")).select("doc_id")
+    expected_changed = sorted(
+        r.shard for r in assign_shard(new_docs, "doc_id", N_SHARDS).select("shard").distinct().collect()
     )
 
+    e1, e2 = (sink.stats[e] for e in epochs)
+    print(f"epoch {epochs[0]}: {e1['in']} crawled -> {e1['out']} curated (cold start)")
+    print(
+        f"epoch {epochs[-1]}: {e2['in']} crawled -> {e2['out']} curated "
+        f"(20 re-sent + 5 near-dup + 10 contaminated dropped at O(batch) cost)"
+    )
+    print(
+        f"re-publish: shards changed {d['changed']} / unchanged {d['unchanged']} "
+        f"(expected changed from the new ids: {expected_changed})"
+    )
 
-# epoch 1 only, then publish
-pipeline().run(spark, max_iterations=1)
-export_a = export("a")
+    assert e2["in"] == 41 and e2["out"] == 6, sink.stats
+    assert d["only_a"] == [] and d["only_b"] == []
+    assert d["changed"] == expected_changed, (d, expected_changed)
+    assert len(d["unchanged"]) == N_SHARDS - len(expected_changed)
+    assert len(d["unchanged"]) > 0, "probe geometry: 6 new docs must miss some shard"
+    print("manifest-diff invariant holds: only the shards holding new docs re-upload")
 
-# resume from the checkpoint (epoch 1 is NOT re-read — the state store
-# hands the loop state=2) and drain the remaining epochs
-pipeline().run_until_drained(spark, idle_iterations=2)
-export_b = export("b")
+    # DSIR frozen-table invariants: one ratio table (no epoch partitions — it
+    # was trained at cold start and never retrained), and EVERY curated doc in
+    # EVERY epoch has exactly one weight row — the left-join posture means the
+    # second epoch's unseen-bucket docs score (contributing 0 per unseen
+    # bucket) instead of vanishing from the frame.
+    ratio = spark.read.parquet(str(DSIR_RATIO))
+    assert "epoch" not in ratio.columns, "ratio table must be frozen, not per-epoch"
+    ratio_rows = ratio.count()
+    assert 0 < ratio_rows <= DSIR_BUCKETS
+    for e in epochs:
+        curated_ids = {
+            r.doc_id
+            for r in spark.read.parquet(str(CURATED / f"epoch={e}")).select("doc_id").collect()
+        }
+        w = spark.read.parquet(str(DSIR_WEIGHTS / f"epoch={e}")).collect()
+        assert {r.doc_id for r in w} == curated_ids, f"epoch {e}: weights != curated"
+        assert len(w) == len(curated_ids)
+    # the 6 qx* gibberish docs are all-unseen-bigram by construction relative
+    # to the target: their net affinity must not exceed the best real doc's
+    w2 = spark.read.parquet(str(DSIR_WEIGHTS / f"epoch={epochs[-1]}"))
+    gib_max = w2.filter(F.col("doc_id") >= 4_000_000).agg(F.max("weight")).collect()[0][0]
+    w1_max = (
+        spark.read.parquet(str(DSIR_WEIGHTS / f"epoch={epochs[0]}"))
+        .agg(F.max("weight"))
+        .collect()[0][0]
+    )
+    assert gib_max <= w1_max, (gib_max, w1_max)
+    print(
+        f"dsir frozen-table scoring: {ratio_rows} ratio rows trained once at cold "
+        f"start scored both epochs (gibberish max {gib_max} <= corpus max {w1_max})"
+    )
 
-d = shard_diff(export_a, export_b)
-
-# the manifest-diff invariant: stable id-hash membership means an
-# append-only corpus change touches EXACTLY the shards the new ids hash
-# into — compute that set independently and demand equality
-epochs = _epochs(CURATED)
-assert len(epochs) == 2, f"expected exactly two curated epochs, found {epochs}"
-new_docs = (
-    spark.read.option("basePath", str(CURATED))
-    .parquet(str(CURATED) + f"/epoch={epochs[-1]}")
-    .select("doc_id")
-)
-expected_changed = sorted(
-    r.shard for r in assign_shard(new_docs, "doc_id", N_SHARDS).select("shard").distinct().collect()
-)
-
-e1, e2 = (sink.stats[e] for e in epochs)
-print(f"epoch {epochs[0]}: {e1['in']} crawled -> {e1['out']} curated (cold start)")
-print(
-    f"epoch {epochs[-1]}: {e2['in']} crawled -> {e2['out']} curated "
-    f"(20 re-sent + 5 near-dup + 10 contaminated dropped at O(batch) cost)"
-)
-print(
-    f"re-publish: shards changed {d['changed']} / unchanged {d['unchanged']} "
-    f"(expected changed from the new ids: {expected_changed})"
-)
-
-assert e2["in"] == 41 and e2["out"] == 6, sink.stats
-assert d["only_a"] == [] and d["only_b"] == []
-assert d["changed"] == expected_changed, (d, expected_changed)
-assert len(d["unchanged"]) == N_SHARDS - len(expected_changed)
-assert len(d["unchanged"]) > 0, "probe geometry: 6 new docs must miss some shard"
-print("manifest-diff invariant holds: only the shards holding new docs re-upload")
-
-# DSIR frozen-table invariants: one ratio table (no epoch partitions — it
-# was trained at cold start and never retrained), and EVERY curated doc in
-# EVERY epoch has exactly one weight row — the left-join posture means the
-# second epoch's unseen-bucket docs score (contributing 0 per unseen
-# bucket) instead of vanishing from the frame.
-assert not any(DSIR_RATIO.glob("epoch=*")), "ratio table must be frozen, not per-epoch"
-ratio_rows = spark.read.parquet(str(DSIR_RATIO)).count()
-assert 0 < ratio_rows <= DSIR_BUCKETS
-for e in epochs:
-    curated_ids = {
-        r.doc_id
-        for r in spark.read.parquet(str(CURATED / f"epoch={e}")).select("doc_id").collect()
+    # monitoring-sidecar fold invariants (r12 continuation): the mergeable
+    # sketches' whole point — per-epoch sidecars fold to EXACTLY the view a
+    # from-scratch rebuild over the full curated corpus gives, without
+    # re-reading history.
+    _full = epoch_frames(spark, str(CURATED), DOCS)
+    _lo, _width, _nb = HIST_GRID
+    _fold_hist = {
+        (r.bucket, r.cnt)
+        for r in histogram_merge(
+            *[spark.read.parquet(str(HIST / f"epoch={e}")) for e in epochs]
+        ).collect()
     }
-    w = spark.read.parquet(str(DSIR_WEIGHTS / f"epoch={e}")).collect()
-    assert {r.doc_id for r in w} == curated_ids, f"epoch {e}: weights != curated"
-    assert len(w) == len(curated_ids)
-# the 6 qx* gibberish docs are all-unseen-bigram by construction relative
-# to the target: their net affinity must not exceed the best real doc's
-w2 = spark.read.parquet(str(DSIR_WEIGHTS / f"epoch={epochs[-1]}"))
-gib_max = w2.filter(F.col("doc_id") >= 4_000_000).agg(F.max("weight")).collect()[0][0]
-w1_max = (
-    spark.read.parquet(str(DSIR_WEIGHTS / f"epoch={epochs[0]}"))
-    .agg(F.max("weight"))
-    .collect()[0][0]
-)
-assert gib_max <= w1_max, (gib_max, w1_max)
-print(
-    f"dsir frozen-table scoring: {ratio_rows} ratio rows trained once at cold "
-    f"start scored both epochs (gibberish max {gib_max} <= corpus max {w1_max})"
-)
-
-# monitoring-sidecar fold invariants (r12 continuation): the mergeable
-# sketches' whole point — per-epoch sidecars fold to EXACTLY the view a
-# from-scratch rebuild over the full curated corpus gives, without
-# re-reading history.
-_full = (
-    spark.read.option("basePath", str(CURATED))
-    .parquet(str(CURATED) + "/epoch=*")
-    .select("doc_id", "text")
-)
-_lo, _width, _nb = HIST_GRID
-_fold_hist = {
-    (r.bucket, r.cnt)
-    for r in histogram_merge(
-        *[spark.read.parquet(str(HIST / f"epoch={e}")) for e in epochs]
-    ).collect()
-}
-_rebuild_hist = {
-    (r.bucket, r.cnt)
-    for r in value_histogram(
-        _full.withColumn("len_chars", F.length("text").cast("long")),
-        "len_chars", _lo, _width, _nb,
-    ).collect()
-}
-assert _fold_hist == _rebuild_hist, "histogram fold != rebuild"
-_fold_sample = {
-    (r.doc_id, r.sample_rank)
-    for r in bottomk_merge(
-        [spark.read.parquet(str(SAMPLE / f"epoch={e}")) for e in epochs], SAMPLE_K
-    ).collect()
-}
-_rebuild_sample = {
-    (r.doc_id, r.sample_rank)
-    for r in bottomk_sample(_full.select("doc_id"), SAMPLE_K).collect()
-}
-assert _fold_sample == _rebuild_sample, "bottom-k fold != rebuild"
-print(
-    f"monitoring sidecars: {len(_fold_hist)} histogram cells and "
-    f"{len(_fold_sample)} audit-sample rows fold == rebuild across {len(epochs)} epochs"
-)
-
-# ------------------------------------------------------------------
-# r13 maintenance verb: the epoch sink writes each epoch as its own
-# directory of task files — exactly the small-file accretion pattern
-# OPTIMIZE exists for. Compact the curated table per partition and
-# demand the reader-visible corpus is untouched: same rows, same
-# epoch layout, never packed across epochs, fewer-or-equal files.
-# ------------------------------------------------------------------
-from tamer_spark.sinks.layout import compact_partitioned
-
-
-def _data_files(root) -> list[str]:
-    import glob as _glob
-
-    return [
-        f
-        for f in _glob.glob(f"{root}/**/*.parquet", recursive=True)
-        if not f.rsplit("/", 1)[-1].startswith((".", "_"))
-    ]
-
-
-_before_files = _data_files(CURATED)
-_before_corpus = sorted((r.doc_id, r.text) for r in _full.collect())
-_manifest = compact_partitioned(spark, str(CURATED), target_bytes=1 << 30).collect()
-_after_files = _data_files(CURATED)
-_after_corpus = sorted(
-    (r.doc_id, r.text)
-    for r in spark.read.option("basePath", str(CURATED))
-    .parquet(str(CURATED) + "/epoch=*")
-    .select("doc_id", "text")
-    .collect()
-)
-assert _after_corpus == _before_corpus, "compaction changed the corpus"
-assert sorted({m.partition for m in _manifest}) == [f"epoch={e}" for e in epochs]
-assert len(_after_files) <= len(_before_files)
-for e in epochs:  # one target-sized file per epoch partition afterwards
-    n = len([f for f in _after_files if f"epoch={e}/" in f])
-    assert n == 1, (e, n)
-print(
-    f"maintenance: compacted {len(_before_files)} epoch-sink files -> "
-    f"{len(_after_files)} ({len(_manifest)} manifest rows, "
-    f"{sum(1 for m in _manifest if m.rewritten)} rewritten), corpus bit-identical"
-)
-
-# ------------------------------------------------------------------
-# r13 catalog step: ANALYZE the curated table per partition — the
-# per-epoch min/max/null/NDV rows a stats journal keeps (partition-
-# level min/max is the data-skipping index; per-partition NDV
-# localizes a drifted epoch without scanning its neighbors).
-# ------------------------------------------------------------------
-from tamer_spark.operators.quality import column_stats_grouped
-
-_stats = {
-    (r.epoch, r.column): (r.min_v, r.max_v, r.n_nulls, r.n_distinct)
-    for r in column_stats_grouped(
-        spark.read.option("basePath", str(CURATED)).parquet(str(CURATED) + "/epoch=*"),
-        ["epoch"],
-        [
-            ("doc_id", F.col("doc_id")),
-            ("len_chars", F.length("text").cast("long")),
-        ],
-    ).collect()
-}
-assert set(_stats) == {(e, c) for e in epochs for c in ("doc_id", "len_chars")}
-for e in epochs:
-    mn, mx, nn, nd = _stats[(e, "doc_id")]
-    n_curated = sink.stats[e]["out"]
-    assert nn == 0 and nd == n_curated, (e, _stats[(e, "doc_id")], n_curated)
-    assert mn <= mx
-print(
-    "catalog: per-epoch column stats journaled — "
-    + "; ".join(
-        f"epoch {e}: doc_id ndv={_stats[(e, 'doc_id')][3]}, "
-        f"len[{_stats[(e, 'len_chars')][0]}, {_stats[(e, 'len_chars')][1]}]"
-        for e in epochs
+    _rebuild_hist = {
+        (r.bucket, r.cnt)
+        for r in value_histogram(
+            _full.withColumn("len_chars", F.length("text").cast("long")),
+            "len_chars", _lo, _width, _nb,
+        ).collect()
+    }
+    assert _fold_hist == _rebuild_hist, "histogram fold != rebuild"
+    _fold_sample = {
+        (r.doc_id, r.sample_rank)
+        for r in bottomk_merge(
+            [spark.read.parquet(str(SAMPLE / f"epoch={e}")) for e in epochs], SAMPLE_K
+        ).collect()
+    }
+    _rebuild_sample = {
+        (r.doc_id, r.sample_rank)
+        for r in bottomk_sample(_full.select("doc_id"), SAMPLE_K).collect()
+    }
+    assert _fold_sample == _rebuild_sample, "bottom-k fold != rebuild"
+    print(
+        f"monitoring sidecars: {len(_fold_hist)} histogram cells and "
+        f"{len(_fold_sample)} audit-sample rows fold == rebuild across {len(epochs)} epochs"
     )
-)
+
+    # maintenance: the epoch sink writes each epoch as its own directory of
+    # task files — exactly the small-file accretion pattern OPTIMIZE exists
+    # for. Compact the curated table per partition and demand the
+    # reader-visible corpus is untouched: same rows, same epoch layout,
+    # never packed across epochs, fewer-or-equal files.
+    def _data_files(root) -> list[str]:
+        return [
+            f
+            for f in glob.glob(f"{root}/**/*.parquet", recursive=True)
+            if not f.rsplit("/", 1)[-1].startswith((".", "_"))
+        ]
+
+    _before_files = _data_files(CURATED)
+    _before_corpus = sorted((r.doc_id, r.text) for r in _full.collect())
+    _manifest = compact_partitioned(spark, str(CURATED), target_bytes=1 << 30).collect()
+    _after_files = _data_files(CURATED)
+    _after_corpus = sorted((r.doc_id, r.text) for r in epoch_frames(spark, str(CURATED), DOCS).collect())
+    assert _after_corpus == _before_corpus, "compaction changed the corpus"
+    assert sorted({m.partition for m in _manifest}) == [f"epoch={e}" for e in epochs]
+    assert len(_after_files) <= len(_before_files)
+    for e in epochs:  # one target-sized file per epoch partition afterwards
+        n = len([f for f in _after_files if f"epoch={e}/" in f])
+        assert n == 1, (e, n)
+    print(
+        f"maintenance: compacted {len(_before_files)} epoch-sink files -> "
+        f"{len(_after_files)} ({len(_manifest)} manifest rows, "
+        f"{sum(1 for m in _manifest if m.rewritten)} rewritten), corpus bit-identical"
+    )
+
+    # catalog: ANALYZE the curated table per partition — the per-epoch
+    # min/max/null/NDV rows a stats journal keeps (partition-level min/max
+    # is the data-skipping index; per-partition NDV localizes a drifted
+    # epoch without scanning its neighbors).
+    _stats = {
+        (r.epoch, r.column): (r.min_v, r.max_v, r.n_nulls, r.n_distinct)
+        for r in column_stats_grouped(
+            epoch_frames(spark, str(CURATED), DOCS),
+            ["epoch"],
+            [("doc_id", F.col("doc_id")), ("len_chars", F.length("text").cast("long"))],
+        ).collect()
+    }
+    assert set(_stats) == {(e, c) for e in epochs for c in ("doc_id", "len_chars")}
+    for e in epochs:
+        mn, mx, nn, nd = _stats[(e, "doc_id")]
+        n_curated = sink.stats[e]["out"]
+        assert nn == 0 and nd == n_curated, (e, _stats[(e, "doc_id")], n_curated)
+        assert mn <= mx
+    print(
+        "catalog: per-epoch column stats journaled — "
+        + "; ".join(
+            f"epoch {e}: doc_id ndv={_stats[(e, 'doc_id')][3]}, "
+            f"len[{_stats[(e, 'len_chars')][0]}, {_stats[(e, 'len_chars')][1]}]"
+            for e in epochs
+        )
+    )
+
+
+if __name__ == "__main__":
+    main()

@@ -23,15 +23,30 @@ This is the Spark re-expression of the reference runtime
 
 The reference overlaps its source and sink fibers through an in-process
 bounded queue (Tamer.scala:333). Here the DataFrame *is* the batch and
-executors do the parallelism within it; across batches the loop reads ONE
-epoch ahead: once epoch N's iteration has returned a progressed state and the
-loop will certainly run epoch N+1, ``iteration(S')`` and the pin of its batch
-run on a background thread while epoch N is written and committed (the
-D-Streams overlap of the next interval's ingestion with the current one's
-processing). The prefetched batch is written only after commit N, so at most
-two batches are pinned at once and exactly-once is untouched; a stop, a sink
-failure or an exception discards it. Backpressure stays per-iteration batch
-sizing (window length / page size / maxKeys), which is where the reference's
+executors do the parallelism within it; across batches the loop pipelines
+epochs (the D-Streams pipelining of intervals) under one rule:
+
+- the **source chain** runs the next ``iteration`` — plus the pin of its
+  batch — on a background thread as soon as the previous one has returned,
+  for an epoch the loop will certainly run, while fewer than (writes
+  allowed + 1) epochs are uncommitted;
+- a pinned batch is **written** once the sink may take it. An ordinary
+  sink takes epoch N+1 only after commit N (one write in flight), so its
+  output is never ahead of the state. A **write-ahead** sink — one whose
+  output readers see only through committed epochs, and which opts in by
+  implementing ``drop_uncommitted`` (see :class:`Sink`) — takes it at once,
+  with at most two writes in flight, like Structured Streaming's
+  commit-gated file-sink log and asynchronous progress tracking;
+- **commits** and ``observer`` calls stay strictly in epoch order on the
+  loop thread: commit N+1 waits for write N+1 and commit N.
+
+So an ordinary sink has at most 2 epochs uncommitted (one read ahead) and a
+write-ahead sink at most 3. A stop or a failure discards every epoch run
+ahead. A crash leaves a write-ahead sink's uncommitted epochs on disk,
+invisible to committed readers; the next ``run`` drops them before its
+first epoch, so a replay that writes nothing (an empty batch) cannot leave
+stale rows behind. Backpressure stays per-iteration batch sizing (window
+length / page size / maxKeys), which is where the reference's
 ``bufferSize`` knob ends up too.
 
 Retry policy: the reference hard-codes 10 × exponential backoff from 100 ms
@@ -41,9 +56,11 @@ and marks it FIXME (Tamer.scala:58); here it's configurable.
 from __future__ import annotations
 
 import logging
+import queue
 import threading
 import time
 import weakref
+from collections import deque
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator, Protocol
 
@@ -77,15 +94,27 @@ class Source(Protocol):
         progress"; the loop then sleeps ``poll_interval``.
 
         The loop may call this on a background thread while the same
-        ``run()`` is still writing and committing the previous epoch, so it
-        must not read that epoch's sink output. Output committed by an
-        earlier ``run()`` is safe to read: a run's first iteration is never
-        read ahead.
+        ``run()`` is still writing and committing earlier epochs, and a
+        write-ahead sink may be writing later ones, so it must not read this
+        run's own sink output, for any epoch. Output committed by an earlier
+        ``run()`` is safe to read: a run's first iteration is never run
+        ahead, and a write-ahead sink's reader bounded by the committed
+        epoch sees none of this run's writes.
         """
         ...
 
 
 class Sink(Protocol):
+    """Writes each epoch's batch.
+
+    A sink whose output is read only through committed epochs (a reader
+    bounded by ``StateStore.load().epoch``) may additionally implement
+    ``drop_uncommitted(spark, epoch)``: delete every epoch >= ``epoch``.
+    Its presence is the opt-in to write-ahead (module docstring): the loop
+    calls it once at the start of ``run`` with the committed epoch, then
+    may write epoch N+1 before commit N. ``ParquetEpochSink`` opts in.
+    """
+
     def write(self, df: DataFrame, epoch: int) -> None:
         """Write one epoch. MUST be idempotent for a repeated ``epoch``."""
         ...
@@ -94,7 +123,7 @@ class Sink(Protocol):
 # the observed row of every pinned batch, keyed weakly on the DataFrame object
 # itself: the Source/Sink protocols carry only the DataFrame, so the object is
 # the one handle the source, the engine and a sink share for one batch. The
-# loop's read-ahead thread pins while the loop thread unpins, so every access
+# loop's background threads pin and unpin while others do too, so every access
 # holds _pinned_lock (never across the pass itself, or the two would serialize)
 _pinned: "weakref.WeakKeyDictionary[DataFrame, dict]" = weakref.WeakKeyDictionary()
 _pinned_lock = threading.Lock()
@@ -155,10 +184,10 @@ class BatchMetrics:
     Mirrors ``ResultMetadata(queryExecutionTimeInNanos)`` + pulled-at
     (reference db/src/main/scala/tamer/db/model.scala:30-33).
 
-    ``iteration_s`` is the source iteration's own duration, wherever it ran
-    (on the loop thread, or ahead of time on the read-ahead thread while
-    the previous epoch was written). ``write_s`` is how long the loop waited
-    for the pin, sink write and retries; a batch pinned ahead adds no pin.
+    ``iteration_s`` is the source iteration's own duration and ``write_s``
+    the write's own (sink write and retries; the batch was pinned with its
+    iteration), wherever each ran: on the loop thread, or ahead of time on
+    a background thread while earlier epochs were written.
     """
 
     epoch: int
@@ -167,53 +196,104 @@ class BatchMetrics:
     write_s: float
 
 
-def _iterate(
-    source: Source, state: Any, spark: SparkSession
-) -> tuple[DataFrame | None, Any, float]:
-    """``source.iteration(state)`` plus its own duration in seconds."""
-    t0 = time.monotonic()
-    df, new_state = source.iteration(state, spark)
-    return df, new_state, time.monotonic() - t0
+class _Task:
+    """One step of one epoch, ``fn(*args)``: :meth:`run` on the loop thread,
+    or on a :class:`_Lanes` worker. Completion sets ``done`` under ``cv``
+    and wakes the loop; :meth:`result` waits and re-raises what ``fn``
+    raised."""
 
-
-class _ReadAhead:
-    """``source.iteration(state)`` plus the pin of its batch, started now on
-    a fresh :class:`~pyspark.InheritableThread` (so the Spark local
-    properties of the starting thread — job group, description — follow
-    it); :meth:`result` joins it and re-raises what it raised."""
-
-    def __init__(self, source: Source, state: Any, spark: SparkSession) -> None:
-        self._out: tuple[DataFrame | None, Any, float] | None = None
+    def __init__(self, cv: threading.Condition, fn: Callable[..., Any], *args: Any) -> None:
+        self._cv = cv
+        self._call = (fn, args)
+        self.done = False
+        self._out: Any = None
         self._err: BaseException | None = None
-        self._thread = InheritableThread(target=self._read, args=(source, state, spark))
-        self._thread.start()
 
-    def _read(self, source: Source, state: Any, spark: SparkSession) -> None:
+    def run(self) -> "_Task":
+        fn, args = self._call
         try:
-            self._out = _iterate(source, state, spark)
-        except BaseException as e:  # noqa: BLE001 — re-raised on the loop thread
+            self._out = fn(*args)
+        except BaseException as e:  # noqa: BLE001 — re-raised by result()
             self._err = e
-            return
-        df = self._out[0]
-        if df is not None:
-            try:
-                pin(df)
-            except Exception:  # noqa: BLE001 — the write pins again, with retries
-                log.warning("read-ahead pin failed; the write retries it", exc_info=True)
+        with self._cv:
+            self.done = True
+            self._cv.notify_all()
+        return self
 
-    def result(self) -> tuple[DataFrame | None, Any, float]:
-        """Wait for the read; return (batch, next_state, iteration_s)."""
-        self._thread.join()
+    @property
+    def failed(self) -> bool:
+        return self.done and self._err is not None
+
+    def wait(self) -> None:
+        with self._cv:
+            self._cv.wait_for(lambda: self.done)
+
+    def result(self) -> Any:
+        self.wait()
         if self._err is not None:
             raise self._err
-        assert self._out is not None
         return self._out
 
+
+class _Lanes:
+    """Up to ``size`` long-lived workers for the steps run ahead of the loop.
+
+    Each worker is an :class:`~pyspark.InheritableThread` (its py4j
+    connection is released when it stops) and runs each task under the
+    Spark local properties — job group, description — of the thread that
+    submitted it: what a fresh InheritableThread per task would carry,
+    without paying a thread and a py4j connection per task. The loop never
+    has more than ``size`` tasks in flight, so no task queues behind another.
+    """
+
+    def __init__(self, spark: SparkSession, size: int) -> None:
+        self._jsc = spark.sparkContext._jsc
+        self._size = size
+        self._queue: queue.SimpleQueue = queue.SimpleQueue()
+        self._workers: list[InheritableThread] = []
+
+    def submit(self, task: _Task) -> _Task:
+        props = self._jsc.sc().getLocalProperties().clone()
+        if len(self._workers) < self._size:
+            self._workers.append(InheritableThread(target=self._work))
+            self._workers[-1].start()
+        self._queue.put((props, task))
+        return task
+
+    def _work(self) -> None:
+        while (item := self._queue.get()) is not None:
+            props, task = item
+            try:
+                self._jsc.sc().setLocalProperties(props)
+            except Exception:  # noqa: BLE001 — the task itself then fails or runs untagged
+                log.warning("could not hand local properties to a worker", exc_info=True)
+            task.run()
+
+    def close(self) -> None:
+        for _ in self._workers:
+            self._queue.put(None)
+        for w in self._workers:
+            w.join()
+
+
+@dataclass
+class _Epoch:
+    """One uncommitted epoch: ``read`` returns (batch, next_state,
+    iteration_s) with the batch pinned; ``write`` returns (rows, write_s)."""
+
+    epoch: int
+    state: Any
+    read: _Task
+    write: _Task | None = None
+
     def discard(self) -> None:
-        """Wait for the read and release its batch unwritten."""
-        self._thread.join()
-        if self._out is not None and self._out[0] is not None:
-            unpin(self._out[0])
+        """Wait for both tasks and release the batch unwritten."""
+        if self.write is not None:
+            self.write.wait()  # the write unpins its batch itself
+            return
+        self.read.wait()
+        if not self.read.failed and self.read.result()[0] is not None:
+            unpin(self.read.result()[0])
 
 
 @dataclass
@@ -249,49 +329,92 @@ class Pipeline:
         loop (the reference's runLoop never terminates; tests and backfills
         want a stopping condition).
 
-        The loop reads one epoch ahead (module docstring) only when it will
-        certainly run another epoch: the state progressed, ``max_iterations``
-        allows one more, and ``until`` is false on the new state. An error in
-        the read-ahead raises after this epoch's commit, where the serial
-        loop would raise it. ``run`` returns or raises with no read-ahead
-        outstanding: a stop, a sink failure or an exception joins it and
-        unpins its batch unwritten.
+        Epochs overlap (module docstring): the source chain runs the next
+        iteration only for an epoch the loop will certainly run — the state
+        progressed, ``max_iterations`` allows it, and ``until`` is false on
+        the new state — and commits and ``observer`` calls stay in epoch
+        order on this thread. An error in an epoch run ahead (iteration or
+        write) raises after the previous epoch's commit, where the serial
+        loop would raise it. ``run`` returns or raises with nothing
+        outstanding: a stop or a failure joins every epoch run ahead and
+        unpins its batch; a write-ahead sink's uncommitted output stays on
+        disk, unread, until the next ``run`` drops it.
         """
         store = self._store()
         doc = store.load() or store.initialize(self.source.initial_state())
         log.info("pipeline start: fingerprint=%s epoch=%d", store.fingerprint, doc.epoch)
+        drop = getattr(self.sink, "drop_uncommitted", None)
+        if drop is not None:
+            drop(spark, doc.epoch)  # what an earlier run wrote ahead of its last commit
+        writes = 1 if drop is None else 2  # in flight at most; ordinary: the head alone
+        cv = threading.Condition()
+        # the chain's one iteration, plus the writes a write-ahead sink runs ahead
+        lanes = _Lanes(spark, 1 if drop is None else 1 + writes)
+        pending: deque[_Epoch] = deque()  # the uncommitted epochs, oldest first
         iterations = 0
         idle_delay = self.poll_interval_s
-        ahead: _ReadAhead | None = None
+
+        def schedule() -> None:
+            """Start what may start now: the source chain's next iteration
+            while at most ``writes`` epochs are uncommitted, then writes of
+            pinned batches in epoch order."""
+            last = pending[-1]
+            if (
+                len(pending) <= writes
+                and last.read.done
+                and not last.read.failed
+                and not any(e.write is not None and e.write.failed for e in pending)
+            ):
+                nxt = last.read.result()[1]
+                if (
+                    nxt != last.state
+                    and (max_iterations is None or iterations + len(pending) < max_iterations)
+                    and (until is None or not until(nxt))
+                ):
+                    read = lanes.submit(_Task(cv, self._read, nxt, spark))
+                    pending.append(_Epoch(last.epoch + 1, nxt, read))
+            in_flight = sum(e.write is not None and not e.write.done for e in pending)
+            for e in pending if drop is not None else [pending[0]]:
+                if e.write is not None:
+                    continue
+                if in_flight >= writes or not e.read.done or e.read.failed:
+                    break
+                e.write = _Task(cv, self._write, e)
+                in_flight += 1
+                if drop is None:
+                    e.write.run()  # an ordinary sink writes on the loop thread, as serially
+                else:
+                    lanes.submit(e.write)
+
         try:
             while True:
                 if max_iterations is not None and iterations >= max_iterations:
                     return doc.state
                 if until is not None and until(doc.state):
                     return doc.state
-                if ahead is None:
-                    df, new_state, iteration_s = _iterate(self.source, doc.state, spark)
-                else:
-                    df, new_state, iteration_s = ahead.result()
-                    ahead = None
-                if (
-                    new_state != doc.state
-                    and (max_iterations is None or iterations + 1 < max_iterations)
-                    and (until is None or not until(new_state))
-                ):
-                    ahead = _ReadAhead(self.source, new_state, spark)
-                t1 = time.monotonic()
-                rows = 0
-                if df is not None:
-                    rows = self._write_with_retry(df, doc.epoch)
-                write_s = time.monotonic() - t1
+                if not pending:  # the chain stopped: iterate here, serially
+                    pending.append(_Epoch(doc.epoch, doc.state, _Task(cv, self._read, doc.state, spark).run()))
+                head = pending[0]
+                while True:
+                    schedule()
+                    if head.read.failed or (head.write is not None and head.write.done):
+                        break
+                    running = [
+                        t for e in pending for t in (e.read, e.write) if t is not None and not t.done
+                    ]
+                    with cv:
+                        cv.wait_for(lambda: any(t.done for t in running))
+                df, new_state, iteration_s = head.read.result()
+                rows, write_s = head.write.result()
                 progressed = new_state != doc.state or rows > 0
                 # Commit AFTER the sink write: crash before this line replays
                 # the epoch against the idempotent sink → exactly-once
-                # observable. The read-ahead batch is written only after it.
+                # observable. Epochs written ahead are invisible until their
+                # own commit, and the next run drops them.
                 doc = store.commit(doc.epoch + 1, new_state)
+                pending.popleft()
                 if self.observer:
-                    self.observer(BatchMetrics(doc.epoch - 1, rows, iteration_s, write_s))
+                    self.observer(BatchMetrics(head.epoch, rows, iteration_s, write_s))
                 iterations += 1
                 if progressed:
                     idle_delay = self.poll_interval_s
@@ -299,8 +422,29 @@ class Pipeline:
                     self.sleep_fn(idle_delay)
                     idle_delay = min(idle_delay * 2, self.poll_max_s)
         finally:
-            if ahead is not None:
-                ahead.discard()
+            for e in pending:
+                e.discard()
+            lanes.close()
+
+    def _read(self, state: Any, spark: SparkSession) -> tuple[DataFrame | None, Any, float]:
+        """``source.iteration(state)``, its own duration, and the pin of its
+        batch (so a batch is pinned before any write may take it)."""
+        t0 = time.monotonic()
+        df, new_state = self.source.iteration(state, spark)
+        iteration_s = time.monotonic() - t0
+        if df is not None:
+            try:
+                pin(df)
+            except Exception:  # noqa: BLE001 — the write pins again, with retries
+                log.warning("batch pin failed; the write retries it", exc_info=True)
+        return df, new_state, iteration_s
+
+    def _write(self, e: _Epoch) -> tuple[int, float]:
+        """Write epoch ``e``'s batch; return (rows, the write's duration)."""
+        t0 = time.monotonic()
+        df = e.read.result()[0]
+        rows = 0 if df is None else self._write_with_retry(df, e.epoch)
+        return rows, time.monotonic() - t0
 
     def run_until_drained(self, spark: SparkSession, idle_iterations: int = 2) -> Any:
         """Backfill mode: run until ``idle_iterations`` consecutive empty
@@ -331,8 +475,8 @@ class Pipeline:
         count + write would run the source query twice, and a
         non-deterministic source (rows arriving between executions) could
         write a different batch than the one it counted/advanced state by.
-        A batch the loop read ahead was pinned on the read-ahead thread, so
-        here too the pin is a record lookup.
+        The loop pins every batch right after its iteration, so here the
+        pin is a record lookup unless that pin failed.
         Caveat: Spark caching is best-effort — a lost executor recomputes
         its blocks from lineage (re-touching the source); MEMORY_AND_DISK
         narrows that window but cannot close it, so sinks still carry the

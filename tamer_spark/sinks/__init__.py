@@ -2,7 +2,7 @@
 Kafka plus Parquet/memory/console, all honoring the per-epoch idempotence
 contract required by the engine loop (see engine.py docstring)."""
 
-from tamer_spark.sinks.base import ConsoleSink, MemorySink, ParquetEpochSink
+from tamer_spark.sinks.base import ConsoleSink, MemorySink, ParquetEpochSink, epoch_frames
 from tamer_spark.sinks.shards import (
     assign_shard,
     shard_diff,
@@ -15,6 +15,7 @@ __all__ = [
     "ParquetEpochSink",
     "MemorySink",
     "ConsoleSink",
+    "epoch_frames",
     "assign_shard",
     "shard_manifest",
     "verify_shards",

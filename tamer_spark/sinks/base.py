@@ -5,7 +5,42 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path``: local, HDFS and S3A alike."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def _epochs(spark: SparkSession, path: str) -> list[int]:
+    """The N of every ``epoch=N`` directory under ``path``, ascending."""
+    fs, root = _hadoop_fs(spark, path)
+    names = [st.getPath().getName() for st in fs.listStatus(root)] if fs.exists(root) else []
+    return sorted(int(n[6:]) for n in names if n.startswith("epoch=") and n[6:].isdigit())
+
+
+def epoch_frames(
+    spark: SparkSession, path: str, schema: StructType | str | None = None, before: int | None = None
+) -> DataFrame:
+    """THE reader of epoch-partitioned output: every ``{path}/epoch=N`` with
+    N < ``before`` (all on disk when None), ``epoch`` an int column.
+
+    Bounded by the committed epoch (``StateStore.load().epoch``, or the
+    epoch a sink is writing, for its own history) it never reads an epoch
+    being written, written ahead, or left by a failed attempt. With a
+    ``schema`` no inference job runs; with no epoch found the result is an
+    empty frame of ``schema``.
+    """
+    dirs = [os.path.join(path, f"epoch={n}") for n in _epochs(spark, path) if before is None or n < before]
+    if not dirs:
+        empty = spark.createDataFrame([], schema) if schema is not None else spark.range(0).select()
+        return empty.withColumn("epoch", F.lit(None).cast("int"))
+    reader = spark.read.option("basePath", path)
+    return (reader if schema is None else reader.schema(schema)).parquet(*dirs)
 
 
 @dataclass
@@ -15,8 +50,9 @@ class ParquetEpochSink:
     Idempotence: replaying epoch N overwrites ``{path}/epoch={N}/`` in place —
     the file-sink analog of the reference's Kafka transaction (a replayed
     epoch produces the same data under the same identity instead of
-    appending duplicates). Readers see the union via partition discovery:
-    ``spark.read.parquet(path)`` exposes ``epoch`` as a partition column.
+    appending duplicates). Readers see the union via :func:`epoch_frames`,
+    and bounded by the committed epoch see no uncommitted one: so the sink
+    opts in to the engine's write-ahead with :meth:`drop_uncommitted`.
 
     At scale: one directory per epoch keeps commits O(batch), not O(history),
     and lets downstream consumers do partition-pruned incremental reads.
@@ -27,8 +63,16 @@ class ParquetEpochSink:
     def write(self, df: DataFrame, epoch: int) -> None:
         df.write.mode("overwrite").parquet(os.path.join(self.path, f"epoch={epoch}"))
 
-    def read(self, spark) -> DataFrame:
-        return spark.read.option("basePath", self.path).parquet(self.path + "/epoch=*")
+    def read(self, spark: SparkSession, before: int | None = None) -> DataFrame:
+        """Epochs < ``before`` (the committed epoch); None: all on disk."""
+        return epoch_frames(spark, self.path, before=before)
+
+    def drop_uncommitted(self, spark: SparkSession, epoch: int) -> None:
+        """Delete every ``epoch=N`` with N >= ``epoch``."""
+        for n in _epochs(spark, self.path):
+            if n >= epoch:
+                fs, p = _hadoop_fs(spark, os.path.join(self.path, f"epoch={n}"))
+                fs.delete(p, True)
 
 
 @dataclass

@@ -12,8 +12,10 @@ Here the same contract is a checkpoint directory holding one JSON document::
 
     {fingerprint, group_id, epoch, state, updated_at}
 
-committed via atomic rename (write tmp + ``os.replace``), plus a history of
-superseded docs for debugging. Semantics preserved:
+committed via one atomic rename (write + fsync tmp, link the current doc
+into a history of superseded docs for debugging, ``os.replace`` tmp over
+it, fsync the directory), so a crash at any step leaves the previous doc.
+Semantics preserved:
 
 - fingerprint mismatch on resume → hard :class:`StateForkError` (never
   silently consume another pipeline's state),
@@ -31,6 +33,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 from hashlib import sha256
@@ -133,6 +136,10 @@ class StateStore:
         return doc
 
     def _commit(self, doc: StateDoc) -> None:
+        """Publish ``doc`` crash-safely: ``state.json`` always holds a whole
+        doc, the previous one until the single atomic replace, so a crash at
+        any step leaves ``load()`` returning the previous doc, never None
+        (which would silently re-initialize at epoch 0)."""
         tmp = self.path + ".tmp"
         with open(tmp, "w", encoding="utf-8") as f:
             f.write(doc.to_json())
@@ -141,7 +148,9 @@ class StateStore:
         # history of superseded states (the compacted topic keeps only the
         # latest per key; we keep a small debug trail instead), named by the
         # superseded epoch + a nanosecond stamp bumped past any taken name:
-        # back-to-back commits never overwrite each other's history file
+        # back-to-back commits never overwrite each other's history file.
+        # The current doc is LINKED (copied where links are unsupported)
+        # into history, never moved out of place
         hist_dir = os.path.join(self.dir, "history")
         os.makedirs(hist_dir, exist_ok=True)
         if os.path.exists(self.path):
@@ -150,5 +159,13 @@ class StateStore:
             ns = time.time_ns()
             while os.path.exists(hist := os.path.join(hist_dir, f"state-{old_epoch}-{ns}.json")):
                 ns += 1
-            os.replace(self.path, hist)
+            try:
+                os.link(self.path, hist)
+            except OSError:
+                shutil.copy2(self.path, hist)
         os.replace(tmp, self.path)
+        fd = os.open(self.dir, os.O_RDONLY)
+        try:
+            os.fsync(fd)  # make the rename itself durable
+        finally:
+            os.close(fd)

@@ -341,3 +341,200 @@ def test_run_until_drained_leaves_no_cached_batch(spark, tmp_path):
     assert [r.key for r in sink.rows] == [1, 2, 3]
     leaked = _persisted_ids(spark) - before
     assert not leaked, f"drain leaked cached RDD ids: {leaked}"
+
+
+# --- write-ahead: commit-gated sinks --------------------------------------
+
+
+class GatedSink(MemorySink):
+    """A fake commit-gated sink: MemorySink plus the write-ahead opt-in,
+    recording each ``drop_uncommitted`` call and the write/observe order."""
+
+    def __init__(self, **kw):
+        super().__init__(**kw)
+        self.dropped = []
+        self.log = []
+        self.lock = threading.Lock()
+
+    def drop_uncommitted(self, spark, epoch):
+        self.dropped.append(epoch)
+        for e in [e for e in self.epochs if e >= epoch]:
+            del self.epochs[e]
+
+    def note(self, *event):
+        with self.lock:
+            self.log.append(event)
+
+
+def test_write_ahead_overlaps_writes_and_commits_in_order(spark, tmp_path):
+    """A commit-gated sink's write of epoch N+1 starts before commit N: the
+    write of N waits until write N+1 has begun (the in-order schedule would
+    time out here). Commits and observers still run in epoch order, each
+    after its own write, and at most two writes are in flight."""
+    started = {e: threading.Event() for e in range(6)}
+    in_flight, peak = [], []
+
+    class Overlapping(GatedSink):
+        def write(self, df, epoch):
+            self.note("write", epoch)
+            started[epoch].set()
+            with self.lock:
+                in_flight.append(epoch)
+                peak.append(len(in_flight))
+            try:
+                if epoch < 4:
+                    self.note("overlapped", epoch, started[epoch + 1].wait(timeout=60))
+                super().write(df, epoch)
+            finally:
+                with self.lock:
+                    in_flight.remove(epoch)
+            self.note("written", epoch)
+
+    sink = Overlapping()
+    store_epochs = []
+    pipe = Pipeline(CountingSource(), sink, str(tmp_path / "cp"))
+
+    def observer(m):
+        store_epochs.append(pipe._store().load().epoch)
+        sink.note("observe", m.epoch)
+
+    pipe.observer = observer
+    assert pipe.run(spark, max_iterations=5) == 5
+    assert sink.dropped == [0] and max(peak) == 2
+    assert [e for ev, e, *rest in sink.log if ev == "overlapped" and rest == [True]] == [0, 1, 2, 3]
+    observed = [e for ev, e, *_ in sink.log if ev == "observe"]
+    assert observed == [0, 1, 2, 3, 4] and store_epochs == [1, 2, 3, 4, 5]
+    for e in observed:
+        assert sink.log.index(("written", e)) < sink.log.index(("observe", e))
+    assert [r.key for r in sink.rows] == [1, 2, 3, 4, 5]
+
+
+def test_committed_reader_never_sees_an_in_flight_epoch(spark, tmp_path):
+    """While epoch 1 is being written ahead of commit 0, a reader bounded by
+    the committed epoch sees nothing of it; after the run, everything."""
+    from tamer_spark.sinks import ParquetEpochSink
+
+    seen = []
+    pipe = None
+
+    class Reading(ParquetEpochSink):
+        def write(self, df, epoch):
+            super().write(df, epoch)
+            if epoch == 1:  # written, not committed: the loop may be anywhere
+                committed = pipe._store().load().epoch
+                seen.append((committed, sorted(r.key for r in self.read(spark, before=committed).collect())))
+
+    sink = Reading(str(tmp_path / "out"))
+    pipe = Pipeline(CountingSource(), sink, str(tmp_path / "cp"))
+    pipe.run(spark, max_iterations=3)
+    (committed, keys), = seen
+    assert committed <= 1 and keys == list(range(1, committed + 1))
+    assert sorted(r.key for r in sink.read(spark, before=3).collect()) == [1, 2, 3]
+
+
+def test_write_ahead_failure_raises_after_the_previous_commit(spark, tmp_path):
+    """A write of epoch N+1 that fails permanently while epoch N is still
+    writing raises only after commit N: the state stays at N+1, nothing
+    after it runs, and no cached batch is left behind."""
+    attempts = threading.Semaphore(0)
+    seen = []
+
+    class Failing(GatedSink):
+        def write(self, df, epoch):
+            if epoch == 3:
+                attempts.release()
+                raise RuntimeError("injected permanent failure at epoch 3")
+            if epoch == 2:  # hold write 2 until write 3 has failed for good
+                for _ in range(2):
+                    assert attempts.acquire(timeout=60)
+            super().write(df, epoch)
+
+    before = _persisted_ids(spark)
+    source = RecordingSource()
+    sink = Failing()
+    pipe = Pipeline(
+        source, sink, str(tmp_path / "cp"),
+        retry=RetryPolicy(retries=1, base_delay_s=0.0),
+        observer=lambda m: seen.append(m.epoch),
+    )
+    with pytest.raises(TamerError):
+        pipe.run(spark, until=lambda s: s >= 10)
+    assert seen == [0, 1, 2]
+    doc = pipe._store().load()
+    assert (doc.epoch, doc.state) == (3, 3)
+    assert [r.key for r in sink.rows] == [1, 2, 3]
+    assert max(source.calls) <= 4  # the chain stopped at the failed epoch
+    leaked = _persisted_ids(spark) - before
+    assert not leaked, f"failed run leaked cached RDD ids: {leaked}"
+
+
+class ScriptedSource(CountingSource):
+    """state = int cursor; ``batches[state]`` is the key list of that
+    state's batch (an empty list gives an empty DataFrame)."""
+
+    def __init__(self, batches):
+        super().__init__(limit=len(batches))
+        self.batches = batches
+
+    def iteration(self, state, spark):
+        if state >= self.limit:
+            return None, state
+        return spark.createDataFrame([(k, state) for k in self.batches[state]], "key int, value int"), state + 1
+
+
+def test_empty_replay_leaves_no_stale_epoch_written_ahead(spark, tmp_path):
+    """Run 1 writes epoch 3 ahead, then fails on epoch 2 for good. Run 2
+    replays epoch 3 as an EMPTY batch, which the loop never writes: only the
+    start-of-run drop keeps run 1's rows of epoch 3 from showing among the
+    committed epochs. No cached batch is left behind by either run."""
+    from tamer_spark.sinks import ParquetEpochSink
+
+    wrote_3 = threading.Event()
+
+    class FailingOnce(ParquetEpochSink):
+        fail = True
+
+        def write(self, df, epoch):
+            if epoch == 2 and self.fail:
+                assert wrote_3.wait(timeout=60)
+                raise RuntimeError("injected failure at epoch 2")
+            super().write(df, epoch)
+            if epoch == 3:
+                wrote_3.set()
+
+    before = _persisted_ids(spark)
+    out = str(tmp_path / "out")
+    sink = FailingOnce(out)
+    run1 = Pipeline(
+        ScriptedSource([[1], [2], [3], [40, 41], [5]]), sink, str(tmp_path / "cp"),
+        retry=RetryPolicy(retries=0),
+    )
+    with pytest.raises(TamerError):
+        run1.run(spark, until=lambda s: s >= 5)
+    assert run1._store().load().epoch == 2
+    assert sorted(r.key for r in sink.read(spark).where("epoch = 3").collect()) == [40, 41]
+    sink.fail = False
+    run2 = Pipeline(ScriptedSource([[1], [2], [3], [], [5]]), sink, str(tmp_path / "cp"))
+    assert run2.run(spark, until=lambda s: s >= 5) == 5
+    committed = run2._store().load().epoch
+    assert committed == 5
+    assert sorted(r.key for r in sink.read(spark, before=committed).collect()) == [1, 2, 3, 5]
+    leaked = _persisted_ids(spark) - before
+    assert not leaked, f"runs leaked cached RDD ids: {leaked}"
+
+
+def test_ordinary_sink_is_never_written_before_the_previous_commit(spark, tmp_path):
+    """Without the opt-in the write of epoch N starts only once epoch N-1
+    is committed, even though the source chain reads ahead."""
+    at_write = {}
+    pipe = None
+
+    class Recording(MemorySink):
+        def write(self, df, epoch):
+            at_write[epoch] = pipe._store().load().epoch
+            super().write(df, epoch)
+
+    sink = Recording()
+    pipe = Pipeline(CountingSource(), sink, str(tmp_path / "cp"))
+    pipe.run(spark, until=lambda s: s >= 6)
+    assert at_write == {e: e for e in range(6)}

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tamer_spark.engine import Pipeline
-from tamer_spark.sinks import MemorySink
+from tamer_spark.sinks import MemorySink, ParquetEpochSink
 from tamer_spark.sources import (
     BearerAuth,
     JdbcTumblingSource,
@@ -297,6 +297,52 @@ def test_jdbc_window_query_runs_once_per_epoch_in_two_jobs(spark, tmp_path):
     expected = [(n > 0) + (e + 1 < n_epochs) + (e == 0) for e, n in enumerate(epoch_rows)]
     assert jobs == expected, (epoch_rows, jobs)
     assert sum(jobs) == 2 * nonempty + (n_epochs - nonempty), jobs
+
+
+def test_jdbc_drain_into_write_ahead_sink_runs_each_window_once(spark, tmp_path):
+    """Write-ahead keeps the one-pass epoch: draining into a
+    ``ParquetEpochSink`` (writes overlap, chain runs ahead) still executes
+    each window's SQL once, for 2 jobs per non-empty epoch (the source pin,
+    the parquet write) and 1 per empty one, and no batch stays cached."""
+    sc = spark.sparkContext
+    executions = {}
+
+    def wrap(sql, df):
+        executions[sql] = acc = sc.accumulator(0)
+
+        def mark(i, it):
+            if i == 0:
+                acc.add(1)
+            return it
+
+        return spark.createDataFrame(df.rdd.mapPartitionsWithIndex(mark), df.schema)
+
+    jsc = sc._jsc.sc()
+
+    def persisted_ids():
+        it = jsc.getPersistentRDDs().keysIterator()
+        return {it.next() for _ in range(jsc.getPersistentRDDs().size())}
+
+    before = persisted_ids()
+    src, rows = _users_jdbc_source(spark, tmp_path, _BURSTS, timedelta(days=2), wrap)
+    sink = ParquetEpochSink(str(tmp_path / "out"))
+    epoch_rows = []
+    group = f"jdbc-write-ahead-{tmp_path.name}"
+    sc.setJobGroup(group, "jdbc write-ahead drain")
+    try:
+        _drain(spark, tmp_path, src, sink, observer=lambda m: epoch_rows.append(m.rows))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    committed = Pipeline(src, sink, str(tmp_path / "cp"))._store().load().epoch
+    assert committed == len(epoch_rows)
+    assert sorted(r.id for r in sink.read(spark, before=committed).collect()) == sorted(r[0] for r in rows)
+    nonempty = sum(1 for n in epoch_rows if n)
+    assert nonempty >= 4 and nonempty < len(epoch_rows), epoch_rows
+    assert {sql: a.value for sql, a in executions.items()} == {sql: 1 for sql in executions}
+    assert jobs == 2 * nonempty + (len(epoch_rows) - nonempty), (epoch_rows, jobs)
+    leaked = persisted_ids() - before
+    assert not leaked, f"run leaked cached RDD ids: {leaked}"
 
 
 def test_jdbc_run_with_empty_windows_leaves_no_cached_batch(spark, tmp_path):

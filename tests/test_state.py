@@ -55,3 +55,33 @@ def test_rapid_commits_keep_every_superseded_doc(tmp_path):
     epochs = sorted(StateDoc.from_json(p.read_text()).epoch for p in hist.iterdir())
     assert epochs == list(range(n))
     assert st.load().epoch == n
+
+
+@pytest.mark.parametrize("step", ["link", "replace"], ids=["during_history", "after_history"])
+def test_crash_at_any_commit_step_leaves_the_previous_doc(tmp_path, monkeypatch, step):
+    """A crash inside the commit — while the current doc goes into history,
+    or after it went there but before the replace — leaves load() returning
+    the previous doc. None would silently re-initialize at epoch 0."""
+    import tamer_spark.state as state_mod
+
+    st = StateStore(str(tmp_path / "cp"), "fp1")
+    st.initialize(0)
+    st.commit(1, {"cursor": 10})
+    real = getattr(state_mod.os, step)
+
+    def crash(src, dst, *a, **kw):
+        if step == "link" or dst == st.path:
+            raise OSError(f"injected crash in os.{step}")
+        return real(src, dst, *a, **kw)
+
+    monkeypatch.setattr(state_mod.os, step, crash)
+    if step == "link":  # the copy fallback is part of the same step
+        monkeypatch.setattr(state_mod.shutil, "copy2", crash)
+    with pytest.raises(OSError, match="injected crash"):
+        st.commit(2, {"cursor": 20})
+    monkeypatch.undo()
+    doc = StateStore(str(tmp_path / "cp"), "fp1").load()
+    assert doc is not None and (doc.epoch, doc.state) == (1, {"cursor": 10})
+    # the next commit still succeeds over the leftover tmp file
+    st.commit(2, {"cursor": 20})
+    assert st.load().epoch == 2
