@@ -40,6 +40,13 @@ epochs (the D-Streams pipelining of intervals) under one rule:
 - **commits** and ``observer`` calls stay strictly in epoch order on the
   loop thread: commit N+1 waits for write N+1 and commit N.
 
+Each step run ahead is a ``concurrent.futures`` future of one
+``ThreadPoolExecutor`` per ``run`` — a worker for the chain, plus two for a
+write-ahead sink's writes — whose workers live for the whole run. A step
+runs under the local properties (job group, description) and session tags
+the calling thread had when it was submitted (PySpark's
+``inheritable_thread_target``).
+
 So an ordinary sink has at most 2 epochs uncommitted (one read ahead) and a
 write-ahead sink at most 3. A stop or a failure discards every epoch run
 ahead. A crash leaves a write-ahead sink's uncommitted epochs on disk,
@@ -56,15 +63,15 @@ and marks it FIXME (Tamer.scala:58); here it's configurable.
 from __future__ import annotations
 
 import logging
-import queue
 import threading
 import time
 import weakref
 from collections import deque
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator, Protocol
 
-from pyspark import InheritableThread, StorageLevel
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -196,84 +203,19 @@ class BatchMetrics:
     write_s: float
 
 
-class _Task:
-    """One step of one epoch, ``fn(*args)``: :meth:`run` on the loop thread,
-    or on a :class:`_Lanes` worker. Completion sets ``done`` under ``cv``
-    and wakes the loop; :meth:`result` waits and re-raises what ``fn``
-    raised."""
-
-    def __init__(self, cv: threading.Condition, fn: Callable[..., Any], *args: Any) -> None:
-        self._cv = cv
-        self._call = (fn, args)
-        self.done = False
-        self._out: Any = None
-        self._err: BaseException | None = None
-
-    def run(self) -> "_Task":
-        fn, args = self._call
-        try:
-            self._out = fn(*args)
-        except BaseException as e:  # noqa: BLE001 — re-raised by result()
-            self._err = e
-        with self._cv:
-            self.done = True
-            self._cv.notify_all()
-        return self
-
-    @property
-    def failed(self) -> bool:
-        return self.done and self._err is not None
-
-    def wait(self) -> None:
-        with self._cv:
-            self._cv.wait_for(lambda: self.done)
-
-    def result(self) -> Any:
-        self.wait()
-        if self._err is not None:
-            raise self._err
-        return self._out
+def _failed(f: Future | None) -> bool:
+    return f is not None and f.done() and f.exception() is not None
 
 
-class _Lanes:
-    """Up to ``size`` long-lived workers for the steps run ahead of the loop.
-
-    Each worker is an :class:`~pyspark.InheritableThread` (its py4j
-    connection is released when it stops) and runs each task under the
-    Spark local properties — job group, description — of the thread that
-    submitted it: what a fresh InheritableThread per task would carry,
-    without paying a thread and a py4j connection per task. The loop never
-    has more than ``size`` tasks in flight, so no task queues behind another.
-    """
-
-    def __init__(self, spark: SparkSession, size: int) -> None:
-        self._jsc = spark.sparkContext._jsc
-        self._size = size
-        self._queue: queue.SimpleQueue = queue.SimpleQueue()
-        self._workers: list[InheritableThread] = []
-
-    def submit(self, task: _Task) -> _Task:
-        props = self._jsc.sc().getLocalProperties().clone()
-        if len(self._workers) < self._size:
-            self._workers.append(InheritableThread(target=self._work))
-            self._workers[-1].start()
-        self._queue.put((props, task))
-        return task
-
-    def _work(self) -> None:
-        while (item := self._queue.get()) is not None:
-            props, task = item
-            try:
-                self._jsc.sc().setLocalProperties(props)
-            except Exception:  # noqa: BLE001 — the task itself then fails or runs untagged
-                log.warning("could not hand local properties to a worker", exc_info=True)
-            task.run()
-
-    def close(self) -> None:
-        for _ in self._workers:
-            self._queue.put(None)
-        for w in self._workers:
-            w.join()
+def _ran(fn: Callable[..., Any], *args: Any) -> Future:
+    """``fn(*args)`` run on this thread, as a completed future: the one
+    shape every step takes, wherever it ran."""
+    f: Future = Future()
+    try:
+        f.set_result(fn(*args))
+    except BaseException as e:  # noqa: BLE001 — re-raised by result()
+        f.set_exception(e)
+    return f
 
 
 @dataclass
@@ -283,16 +225,14 @@ class _Epoch:
 
     epoch: int
     state: Any
-    read: _Task
-    write: _Task | None = None
+    read: Future
+    write: Future | None = None
 
     def discard(self) -> None:
-        """Wait for both tasks and release the batch unwritten."""
+        """Wait for both steps and release the batch unwritten."""
         if self.write is not None:
-            self.write.wait()  # the write unpins its batch itself
-            return
-        self.read.wait()
-        if not self.read.failed and self.read.result()[0] is not None:
+            wait([self.write])  # the write unpins its batch itself
+        elif self.read.exception() is None and self.read.result()[0] is not None:
             unpin(self.read.result()[0])
 
 
@@ -333,12 +273,14 @@ class Pipeline:
         iteration only for an epoch the loop will certainly run — the state
         progressed, ``max_iterations`` allows it, and ``until`` is false on
         the new state — and commits and ``observer`` calls stay in epoch
-        order on this thread. An error in an epoch run ahead (iteration or
-        write) raises after the previous epoch's commit, where the serial
-        loop would raise it. ``run`` returns or raises with nothing
-        outstanding: a stop or a failure joins every epoch run ahead and
-        unpins its batch; a write-ahead sink's uncommitted output stays on
-        disk, unread, until the next ``run`` drops it.
+        order on this thread. Steps run ahead run on this run's thread pool,
+        under this thread's job group and session tags. An error in an epoch
+        run ahead (iteration or write) raises after the previous epoch's
+        commit, where the serial loop would raise it. ``run`` returns or
+        raises with nothing outstanding: a stop or a failure waits for every
+        epoch run ahead and unpins its batch; a write-ahead sink's
+        uncommitted output stays on disk, unread, until the next ``run``
+        drops it.
         """
         store = self._store()
         doc = store.load() or store.initialize(self.source.initial_state())
@@ -347,9 +289,15 @@ class Pipeline:
         if drop is not None:
             drop(spark, doc.epoch)  # what an earlier run wrote ahead of its last commit
         writes = 1 if drop is None else 2  # in flight at most; ordinary: the head alone
-        cv = threading.Condition()
         # the chain's one iteration, plus the writes a write-ahead sink runs ahead
-        lanes = _Lanes(spark, 1 if drop is None else 1 + writes)
+        workers = 1 if drop is None else 1 + writes
+        pool = ThreadPoolExecutor(workers, thread_name_prefix="tamer-epoch")
+
+        def submit(fn: Callable[..., Any], *args: Any) -> Future:
+            # the step runs under this thread's local properties (job group,
+            # description) and session tags, as of the submit
+            return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
         pending: deque[_Epoch] = deque()  # the uncommitted epochs, oldest first
         iterations = 0
         idle_delay = self.poll_interval_s
@@ -361,9 +309,9 @@ class Pipeline:
             last = pending[-1]
             if (
                 len(pending) <= writes
-                and last.read.done
-                and not last.read.failed
-                and not any(e.write is not None and e.write.failed for e in pending)
+                and last.read.done()
+                and not _failed(last.read)
+                and not any(_failed(e.write) for e in pending)
             ):
                 nxt = last.read.result()[1]
                 if (
@@ -371,20 +319,16 @@ class Pipeline:
                     and (max_iterations is None or iterations + len(pending) < max_iterations)
                     and (until is None or not until(nxt))
                 ):
-                    read = lanes.submit(_Task(cv, self._read, nxt, spark))
-                    pending.append(_Epoch(last.epoch + 1, nxt, read))
-            in_flight = sum(e.write is not None and not e.write.done for e in pending)
+                    pending.append(_Epoch(last.epoch + 1, nxt, submit(self._read, nxt, spark)))
+            in_flight = sum(e.write is not None and not e.write.done() for e in pending)
             for e in pending if drop is not None else [pending[0]]:
                 if e.write is not None:
                     continue
-                if in_flight >= writes or not e.read.done or e.read.failed:
+                if in_flight >= writes or not e.read.done() or _failed(e.read):
                     break
-                e.write = _Task(cv, self._write, e)
                 in_flight += 1
-                if drop is None:
-                    e.write.run()  # an ordinary sink writes on the loop thread, as serially
-                else:
-                    lanes.submit(e.write)
+                # an ordinary sink writes on the loop thread, as serially
+                e.write = _ran(self._write, e) if drop is None else submit(self._write, e)
 
         try:
             while True:
@@ -393,17 +337,15 @@ class Pipeline:
                 if until is not None and until(doc.state):
                     return doc.state
                 if not pending:  # the chain stopped: iterate here, serially
-                    pending.append(_Epoch(doc.epoch, doc.state, _Task(cv, self._read, doc.state, spark).run()))
+                    pending.append(_Epoch(doc.epoch, doc.state, _ran(self._read, doc.state, spark)))
                 head = pending[0]
                 while True:
                     schedule()
-                    if head.read.failed or (head.write is not None and head.write.done):
+                    if _failed(head.read) or (head.write is not None and head.write.done()):
                         break
-                    running = [
-                        t for e in pending for t in (e.read, e.write) if t is not None and not t.done
-                    ]
-                    with cv:
-                        cv.wait_for(lambda: any(t.done for t in running))
+                    # only steps still running: a done one would return at once, a spin
+                    running = [f for e in pending for f in (e.read, e.write) if f and not f.done()]
+                    wait(running, return_when=FIRST_COMPLETED)
                 df, new_state, iteration_s = head.read.result()
                 rows, write_s = head.write.result()
                 progressed = new_state != doc.state or rows > 0
@@ -424,7 +366,7 @@ class Pipeline:
         finally:
             for e in pending:
                 e.discard()
-            lanes.close()
+            pool.shutdown()
 
     def _read(self, state: Any, spark: SparkSession) -> tuple[DataFrame | None, Any, float]:
         """``source.iteration(state)``, its own duration, and the pin of its

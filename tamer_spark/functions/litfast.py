@@ -21,15 +21,20 @@ Formatting contract (what makes the parse bit-exact):
 
 Only numeric arrays go through the string path; string arrays keep the
 per-element builder (escaping is riskier than the RPCs they'd save).
+
+``empty_frame`` is the empty-table counterpart: an empty frame planned on
+the JVM side rather than over a Python RDD.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 __all__ = [
+    "empty_frame",
     "lit_doubles",
     "lit_double_matrix",
     "lit_longs",
@@ -105,3 +110,14 @@ def lit_longs(xs) -> Column:
     if not vals:
         return F.array().cast("array<bigint>")
     return F.expr("array(" + ",".join(f"{v}L" for v in vals) + ")")
+
+
+def empty_frame(spark: SparkSession, schema: StructType | str) -> DataFrame:
+    """An empty frame of ``schema``'s names and types: ``range(0)`` plus one
+    typed null column per field. ``createDataFrame([], schema)`` plans a
+    ``Scan ExistingRDD`` over a Python ``parallelize`` with no size
+    statistics, so a join against it sort-merges with an exchange on both
+    sides. A ``Range`` of zero rows has zero-size statistics: a join
+    against it broadcasts it, or the optimizer removes the join."""
+    fields = (StructType.fromDDL(schema) if isinstance(schema, str) else schema).fields
+    return spark.range(0).select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in fields])

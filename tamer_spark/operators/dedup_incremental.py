@@ -31,7 +31,7 @@ engine is usable by the other.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tamer_spark.operators.dedup import (
@@ -52,6 +52,22 @@ def exact_index(
     """
     text = normalize_text(F.col(text_col)) if normalize else F.col(text_col)
     return df.select(F.md5(text).alias("content_hash")).distinct()
+
+
+def _batch_representatives(
+    new_df: DataFrame, text_col: str, id_col: str, normalize: bool
+) -> DataFrame:
+    """``new_df`` plus its ``content_hash``, one row per digest (the min
+    ``id_col``, dedup_exact's keep rule): the in-batch half of both exact
+    incremental paths, one ``row_number`` window partitioned by digest."""
+    text = normalize_text(F.col(text_col)) if normalize else F.col(text_col)
+    w = Window.partitionBy("content_hash").orderBy(id_col)
+    return (
+        new_df.withColumn("content_hash", F.md5(text))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 def dedup_exact_incremental(
@@ -80,16 +96,7 @@ def dedup_exact_incremental(
     ``content_hash`` — feed ``.select("content_hash")`` back through an
     append write to advance the index (see ``append_keys``).
     """
-    from pyspark.sql import Window
-
-    text = normalize_text(F.col(text_col)) if normalize else F.col(text_col)
-    hashed = new_df.withColumn("content_hash", F.md5(text))
-    w = Window.partitionBy("content_hash").orderBy(id_col)
-    survivors = (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    survivors = _batch_representatives(new_df, text_col, id_col, normalize)
     return survivors.join(index, "content_hash", "left_anti")
 
 
@@ -277,8 +284,6 @@ def dedup_exact_incremental_bloom(
     them only to ASSERT a sizing — a mismatch raises); for a list they
     are REQUIRED, since a bare word list cannot carry its modulus.
     """
-    from pyspark.sql import Window
-
     from tamer_spark.operators.bloom import _parse_word_col, bloom_might_contain
 
     if isinstance(words, DataFrame):
@@ -294,14 +299,7 @@ def dedup_exact_incremental_bloom(
                 "encodes both m_bits and k)"
             )
         k = 5 if k is None else k  # exact_bloom_index's default
-    text = normalize_text(F.col(text_col)) if normalize else F.col(text_col)
-    hashed = new_df.withColumn("content_hash", F.md5(text))
-    w = Window.partitionBy("content_hash").orderBy(id_col)
-    batch = (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    batch = _batch_representatives(new_df, text_col, id_col, normalize)
     probed = bloom_might_contain(batch, "content_hash", words, m_bits, k=k)
     # column order pinned to dedup_exact_incremental's output (its key join
     # leads with content_hash) so the two paths are drop-in interchangeable

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tamer_spark.functions.litfast import empty_frame
+
 
 def exact_percentiles(
     df: DataFrame,
@@ -147,7 +149,7 @@ def global_percentile_bucketed(
     ).collect()[0]
     n, lo, hi = stats.n, stats.lo, stats.hi
     if n == 0:
-        return spark.createDataFrame([], out_schema)
+        return empty_frame(spark, out_schema)
     if hi - lo >= 1 << 62:
         # (v - lo) must stay inside int64 on the Spark side; a range this
         # wide means the column is hash-like, not a metric — the caller

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tamer_spark.functions.hashing import stable_hash64_sql
 from tamer_spark.functions.litfast import lit_double_matrix
 
 QUANT = 1000  # milli-unit quantization
@@ -84,11 +85,6 @@ def nearest_centroids_sql(qv: str, centroids: list[list[float]], n: int) -> str:
         f" i -> named_struct('dist', {dist}, 'cid', CAST(i AS BIGINT)))"
     )
     return f"transform(slice(array_sort({scored}), 1, {n}), s -> s.cid)"
-
-
-def stable_hash64_sql(col: str) -> str:
-    """SQL fragment of ``functions.hashing.stable_hash64``."""
-    return f"CAST(conv(substring(md5({col}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def _proj_sql(qv: str, row: list[float]) -> str:
@@ -231,12 +227,6 @@ def lsh_bucket_from_quantized(qv: Column, planes: int = 8, dim: int = 64, seed: 
     for p in range(planes):
         bucket = bucket + F.when(_proj_at(qv, pl, p) > 0, F.lit(1 << p)).otherwise(0)
     return bucket
-
-
-def lsh_bucket_col(vec: Column, planes: int = 8, dim: int = 64, seed: int = 42) -> Column:
-    """Convenience single-use form: quantizes inline. For multi-reference
-    plans prefer quantizing into a column + ``lsh_bucket_from_quantized``."""
-    return lsh_bucket_from_quantized(quantize_embedding(vec), planes, dim, seed)
 
 
 def _cap_bucket_candidates(c: DataFrame, max_bucket: int | None) -> DataFrame:

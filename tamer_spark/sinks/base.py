@@ -9,6 +9,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from tamer_spark.functions.litfast import empty_frame
+
 
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) of ``path``: local, HDFS and S3A alike."""
@@ -37,7 +39,7 @@ def epoch_frames(
     """
     dirs = [os.path.join(path, f"epoch={n}") for n in _epochs(spark, path) if before is None or n < before]
     if not dirs:
-        empty = spark.createDataFrame([], schema) if schema is not None else spark.range(0).select()
+        empty = empty_frame(spark, schema or StructType())
         return empty.withColumn("epoch", F.lit(None).cast("int"))
     reader = spark.read.option("basePath", path)
     return (reader if schema is None else reader.schema(schema)).parquet(*dirs)

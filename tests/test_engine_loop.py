@@ -6,7 +6,9 @@ including across crash/restart (exactly-once with resume)."""
 
 from __future__ import annotations
 
+import re
 import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -538,3 +540,93 @@ def test_ordinary_sink_is_never_written_before_the_previous_commit(spark, tmp_pa
     pipe = Pipeline(CountingSource(), sink, str(tmp_path / "cp"))
     pipe.run(spark, until=lambda s: s >= 6)
     assert at_write == {e: e for e in range(6)}
+
+
+# --- the steps run ahead: thread pool, context, waiting -------------------
+
+
+def test_waiting_on_a_step_run_ahead_burns_no_cpu(spark, tmp_path):
+    """While the head epoch's write blocks on a worker, the loop thread
+    sleeps until some step finishes: the process's CPU time over a 1 s
+    block stays far below 1 s. (Waiting on a set that holds a finished
+    step returns at once, so the loop would spin for the whole block.)"""
+    cpu = []
+
+    class Blocking(GatedSink):
+        def write(self, df, epoch):
+            if epoch == 0:
+                t0 = time.process_time()
+                time.sleep(1.0)
+                cpu.append(time.process_time() - t0)
+            super().write(df, epoch)
+
+    sink = Blocking()
+    Pipeline(CountingSource(), sink, str(tmp_path / "cp")).run(spark, max_iterations=3)
+    assert [r.key for r in sink.rows] == [1, 2, 3]
+    assert len(cpu) == 1 and cpu[0] < 0.3, f"{cpu[0]:.2f} s of CPU while blocked 1 s"
+
+
+def _connection_threads(spark):
+    """JVM threads serving a py4j connection: one per Python thread that
+    has called into the JVM and is still alive. Spark names its own threads
+    (its block-manager pools grow with every unpersist, up to 100 each);
+    py4j leaves the JVM's default ``Thread-N``."""
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getThreadMXBean()
+    names = [i.getThreadName() for i in mx.getThreadInfo(mx.getAllThreadIds()) if i is not None]
+    return sum(re.fullmatch(r"Thread-\d+", n) is not None for n in names)
+
+
+@pytest.mark.parametrize("sink", [MemorySink, GatedSink], ids=["ordinary", "write_ahead"])
+def test_runs_leave_no_threads_behind(spark, tmp_path, sink):
+    """Each run's workers stop with it: across 40 runs the Python thread
+    count and the JVM's py4j connection threads stay within a small
+    constant (a leak would add one, or three, per run)."""
+
+    def runs(n, name):
+        for i in range(n):
+            Pipeline(CountingSource(limit=2), sink(), str(tmp_path / f"{name}{i}")).run(spark, max_iterations=2)
+
+    runs(3, "warm")
+    py_before, jvm_before = threading.active_count(), _connection_threads(spark)
+    runs(40, "run")
+    assert threading.active_count() - py_before <= 2
+    assert _connection_threads(spark) - jvm_before <= 4
+
+
+def _job_tags(spark, group):
+    """The job tags of every job of job group ``group``, one set per job."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None).iterator()
+    out = []
+    while jobs.hasNext():
+        j = jobs.next()
+        if j.jobGroup().isDefined() and j.jobGroup().get() == group:
+            tags = j.jobTags().iterator()
+            out.append({tags.next() for _ in range(j.jobTags().size())})
+    return out
+
+
+def test_steps_run_ahead_carry_the_callers_job_group_and_tags(spark, tmp_path):
+    """A job group and a session tag set on the thread that calls run()
+    reach every job of the run, those of the reads and writes run ahead on
+    the pool included: 3 epochs, each one pin and one sink collect."""
+    loop_thread = threading.current_thread()
+    ahead = []
+
+    class Noting(CountingSource):
+        def iteration(self, state, spark_):
+            if threading.current_thread() is not loop_thread:
+                ahead.append(state)
+            return super().iteration(state, spark_)
+
+    sc = spark.sparkContext
+    group, tag = f"steps-{tmp_path.name}", f"tamer-steps-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    spark.addTag(tag)
+    try:
+        Pipeline(Noting(), GatedSink(), str(tmp_path / "cp")).run(spark, max_iterations=3)
+    finally:
+        spark.removeTag(tag)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert ahead == [1, 2]
+    tagged = [any(t.endswith(f"-{tag}") for t in tags) for tags in _job_tags(spark, group)]
+    assert tagged == [True] * 6

@@ -9,6 +9,7 @@ import sys
 from pathlib import Path
 
 from tamer_spark.engine import Pipeline, RetryPolicy
+from tamer_spark.plans import plan_shape
 from tamer_spark.sinks import ParquetEpochSink, epoch_frames
 
 REPO = Path(__file__).resolve().parent.parent
@@ -86,3 +87,18 @@ def test_curation_gate_retry_keeps_every_survivor(spark):
     assert sink.stats[0] == first
     assert spark.read.parquet(str(ex.CURATED / "epoch=0")).count() == first["out"]
     assert spark.read.parquet(str(ex.INDEX / "epoch=0")).count() == first["out"]
+
+
+def test_an_empty_epoch_frame_scans_no_python_rdd(spark, tmp_path):
+    """With no epoch to read, the frame is planned on the JVM side: a join
+    of a cached batch against it scans no Python RDD (``Scan ExistingRDD``
+    has no size statistics, so the join would shuffle both sides)."""
+    batch = spark.range(100).selectExpr("id AS k", "CAST(id AS STRING) AS v").cache()
+    try:
+        empty = epoch_frames(spark, str(tmp_path / "out"), "k long, v string", before=0)
+        assert empty.dtypes == [("k", "bigint"), ("v", "string"), ("epoch", "int")]
+        joined = batch.join(empty, "k", "left_anti")
+        assert plan_shape(joined).count("Scan ExistingRDD") == 0
+        assert joined.count() == 100
+    finally:
+        batch.unpersist()
