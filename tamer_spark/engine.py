@@ -147,7 +147,8 @@ def pin(df: DataFrame, **aggs: Column) -> dict:
 
     Idempotent per object: pinning the same DataFrame again returns the
     recorded row and runs no job, so a batch the source pinned costs the
-    engine (and any sink that pins it) nothing. Release with :func:`unpin`.
+    engine (and any sink that pins it) nothing. Release with :func:`unpin`;
+    a pass that fails releases the frame itself before it raises.
     """
     with _pinned_lock:
         row = _pinned.get(df)
@@ -155,7 +156,11 @@ def pin(df: DataFrame, **aggs: Column) -> dict:
         df.persist(StorageLevel.MEMORY_AND_DISK)
         exprs = [F.count(F.lit(1)).alias("rows")] + [c.alias(k) for k, c in aggs.items()]
         odf, obs = observed(df, "pin", exprs)
-        odf.write.format("noop").mode("overwrite").save()
+        try:
+            odf.write.format("noop").mode("overwrite").save()
+        except BaseException:
+            df.unpersist()
+            raise
         row = obs.get
         with _pinned_lock:
             _pinned[df] = row

@@ -169,7 +169,11 @@ class TransactionalKafkaSink:
     ``producer_factory`` / ``marker_exists`` are the client seams; the
     default factory builds ``confluent_kafka.Producer`` (gated import) with
     the bootstrap servers merged in. ``marker_exists`` must check
-    ``marker_topic`` with ``isolation.level=read_committed``.
+    ``marker_topic`` with ``isolation.level=read_committed``. Both run in
+    the executor tasks, so what they share (a broker, or a test's fake of
+    one) must be reachable from there. There is one write path: a
+    ``mapPartitionsWithIndex`` task per partition, whose ``(partition, rows
+    sent or -1 when skipped)`` receipts land in ``last_result``.
     """
 
     bootstrap_servers: str
@@ -182,10 +186,6 @@ class TransactionalKafkaSink:
     #: between a crash and its replay invalidates committed markers, so
     #: treat it like the topic name (configuration, not tuning)
     num_partitions: int = 16
-    #: True → run the transaction protocol driver-side over collect(), as a
-    #: single partition. For tests (shared fake broker state) and tiny
-    #: batches; production writes stay distributed.
-    local_mode: bool = False
     #: filled per write() with (partition_id, rows_sent) for observability
     last_result: list = field(default_factory=list)
 
@@ -233,9 +233,6 @@ class TransactionalKafkaSink:
                 ),
             )
 
-        if self.local_mode:
-            self.last_result = list(run(0, iter(df.collect())))
-            return
         from pyspark.sql import functions as F
 
         # Deterministic row→partition mapping (see class docstring): replays

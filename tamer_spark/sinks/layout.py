@@ -20,15 +20,15 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tamer_spark.sinks.base import _hadoop_fs
+
 
 def estimate_size_bytes(spark: SparkSession, path: str) -> int:
     """Recursive byte size of ``path`` via the Hadoop FileSystem content
     summary — one metadata call, works unchanged on local/HDFS/S3A (the
     r14 unification: no local-only ``os.walk`` path survives in this
     module, so a helper can't silently mis-measure an object store)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, path)
     return int(fs.getContentSummary(hpath).getLength())
 
 
@@ -207,9 +207,7 @@ def list_parquet_files(spark: SparkSession, path: str) -> DataFrame:
     and marker files excluded. Recurses one partition-directory level is NOT
     attempted — pass the leaf directory (partition-aware callers list per
     partition and union, keeping partition values as manifest columns)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, path)
     rows = []
     for st in fs.listStatus(hpath):
         name = st.getPath().getName()
@@ -266,9 +264,8 @@ def compact_planned(
     manifest plus a directory listing), but never missing rows; the
     pre-swap fail-closed count guard additionally aborts with originals
     intact if the rewrite lost anything."""
-    jvm = spark.sparkContext._jvm
-    jPath = jvm.org.apache.hadoop.fs.Path
-    fs = jPath(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    jPath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs, dst = _hadoop_fs(spark, path)
 
     # the listing is already driver-materialized (list_parquet_files builds
     # the frame from literal rows), so the manifest cannot observe the swap
@@ -346,7 +343,6 @@ def compact_planned(
         # part names, tagged with their route dir so two routes written by
         # one task cannot collide, nor with originals), delete originals
         # last
-        dst = jPath(path)
         for part in tmp_parts:
             route = part.getPath().getName().split("=", 1)[1]
             for st in fs.listStatus(part.getPath()):
@@ -380,12 +376,8 @@ def compact_partitioned(
     (per-partition job scheduling). On a 100 TB table run it under a
     partition predicate (compact yesterday's landing partitions, not the
     whole history) by passing the partition subtree as ``root``."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-
     def leaf_dirs(path: str) -> list[str]:
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(conf)
+        fs, hpath = _hadoop_fs(spark, path)
         subs = [
             st.getPath().toString()
             for st in fs.listStatus(hpath)

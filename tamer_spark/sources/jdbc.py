@@ -37,7 +37,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tamer_spark.engine import pin, unpin
+from tamer_spark.engine import pin
 from tamer_spark.state import fingerprint
 
 
@@ -143,16 +143,10 @@ class JdbcTumblingSource:
         # duplicates at lag=0. (Cache loss on executor failure recomputes
         # from lineage and re-touches the database — best-effort, not a hard
         # guarantee; a non-zero `lag` bounds the divergence that can produce.)
+        # The batch goes to the engine even when empty: the engine releases
+        # every batch it receives, and a failed pin released it already.
         df = self._read(spark, self.render_sql(window))
-        try:
-            max_ts = pin(df, mx=F.max(self.ts_column))["mx"]
-        except Exception:
-            unpin(df)
-            raise
+        max_ts = pin(df, mx=F.max(self.ts_column))["mx"]
         if max_ts is not None and max_ts.tzinfo is None:
             max_ts = max_ts.replace(tzinfo=timezone.utc)
-        new_window = advance_window(window, max_ts, self.step, self.lag, self.now_fn())
-        if max_ts is None:
-            unpin(df)
-            return None, new_window.to_state()
-        return df, new_window.to_state()
+        return df, advance_window(window, max_ts, self.step, self.lag, self.now_fn()).to_state()

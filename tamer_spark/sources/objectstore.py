@@ -1,19 +1,18 @@
 """Object-store sources: time-keyed and number-keyed object cursors.
 
-Re-expresses the reference `s3` + `oci-objectstorage` modules:
+Re-expresses the reference `s3` + `oci-objectstorage` modules; each rule
+has one copy, which the sources and the tests share:
 
-- key listing with pagination + prefix filter (S3Setup.scala:79-106),
-- **time-keyed cursor** (``S3Setup.timed``, S3Setup.scala:162-210): parse an
-  instant out of each key name (strip prefix + file extension —
-  ZonedDateTimeFormatter.scala:28-39 and the dot-count heuristic at
-  S3Setup.scala:162-170), state = last processed instant, next = smallest
-  key-instant > state,
-- **number-keyed cursor** (example S3Generalized.scala:38-53): keys
-  ``prefix{N}``, next = min N > state,
-- object fetch + line decode (S3Setup.scala:108-133: utf8 + splitLines) →
-  ``spark.read.text`` (+ any DataFrame decode the caller composes),
-- OCI's ``startAfter`` listing (ObjectStorageSetup.scala:79-93) is the same
-  cursor over a different client: ``Lister`` is the seam.
+- ``pages``: key listing with pagination + prefix filter
+  (S3Setup.scala:79-106), resuming ``start_after`` the previous page —
+  OCI's ``startAfter`` (ObjectStorageSetup.scala:79-93),
+- ``next_key``: next = the key with the smallest parsed value > cursor.
+  Keys parse as an instant (``S3Setup.timed``, S3Setup.scala:162-210: strip
+  prefix + file extension — ZonedDateTimeFormatter.scala:28-39 and the
+  dot-count heuristic at S3Setup.scala:162-170) or as ``prefix{N}``
+  (example S3Generalized.scala:38-53),
+- ``_load``: object fetch + line decode (S3Setup.scala:108-133: utf8 +
+  splitLines) → ``spark.read.text`` + the source's ``decode``.
 
 The reference *blocks* inside ``getNextState`` until a new key appears
 (S3Setup.scala:175-182); we return "no progress" instead and let the engine
@@ -32,9 +31,10 @@ from __future__ import annotations
 import glob as _glob
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timezone
-from typing import Any, Callable, Protocol
+from functools import cached_property
+from typing import Any, Callable, Iterable, Iterator, Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -73,19 +73,32 @@ def parse_number_from_key(key: str, prefix: str) -> int | None:
     return int(s) if s.isdigit() else None
 
 
+def next_key(
+    keys: Iterable[str], cursor: Any, parse: Callable[[str], Any]
+) -> tuple[str, Any] | None:
+    """The key whose parsed value is the smallest one above ``cursor``, with
+    that value (S3Spec.scala:36-49); the first such key on a tie, None when
+    no key parses to a value above it. ``parse(key)`` is None for a key
+    outside the cursor's format."""
+    best = None
+    for k in keys:
+        v = parse(k)
+        if v is not None and v > cursor and (best is None or v < best[1]):
+            best = (k, v)
+    return best
+
+
 def next_instant_cursor(
     keys: list[str], current: datetime, prefix: str, fmt: str
 ) -> datetime | None:
-    """Smallest key-instant strictly greater than ``current`` (S3Spec.scala:36-49)."""
-    instants = [parse_instant_from_key(k, prefix, fmt) for k in keys]
-    later = sorted(i for i in instants if i is not None and i > current)
-    return later[0] if later else None
+    """Smallest key-instant strictly greater than ``current``."""
+    hit = next_key(keys, current, lambda k: parse_instant_from_key(k, prefix, fmt))
+    return hit[1] if hit else None
 
 
 def next_numeric_cursor(keys: list[str], current: int, prefix: str) -> int | None:
-    nums = [parse_number_from_key(k, prefix) for k in keys]
-    later = sorted(n for n in nums if n is not None and n > current)
-    return later[0] if later else None
+    hit = next_key(keys, current, lambda k: parse_number_from_key(k, prefix))
+    return hit[1] if hit else None
 
 
 # ---------------------------------------------------------------------------
@@ -124,40 +137,58 @@ class LocalFSLister:
 class S3Lister:
     """boto3-backed lister (gated import; same contract).
 
-    Paginated ``list_objects_v2`` with prefix + StartAfter — covers both the
-    reference's zio-s3 paginate loop (S3Setup.scala:79-106) and OCI's
-    startAfter listing (ObjectStorageSetup.scala:79-93; OCI exposes an
-    S3-compatible endpoint, so the same client serves both — set
-    ``endpoint_url``).
+    One ``list_objects_v2`` page per call, with prefix + StartAfter;
+    :func:`pages` pages it — the reference's zio-s3 paginate loop
+    (S3Setup.scala:79-106) and OCI's startAfter listing
+    (ObjectStorageSetup.scala:79-93; OCI exposes an S3-compatible endpoint,
+    so the same client serves both — set ``endpoint_url``).
     """
 
     bucket: str
     endpoint_url: str | None = None
     max_keys: int = 1000
-    max_pages: int = 1000  # reference cap (S3Setup.scala:81)
 
-    def _client(self):
+    @cached_property
+    def _client(self):  # one client for every page this lister lists
         import boto3  # gated: not available in all environments
 
         return boto3.client("s3", endpoint_url=self.endpoint_url)
 
     def list_keys(self, prefix: str, start_after: str | None = None) -> list[str]:
-        c = self._client()
         kwargs = {"Bucket": self.bucket, "Prefix": prefix, "MaxKeys": self.max_keys}
         if start_after:
             kwargs["StartAfter"] = start_after
-        keys: list[str] = []
-        for _page in range(self.max_pages):
-            resp = c.list_objects_v2(**kwargs)
-            keys.extend(o["Key"] for o in resp.get("Contents", []))
-            if not resp.get("IsTruncated"):
-                break
-            kwargs["ContinuationToken"] = resp["NextContinuationToken"]
+        keys = [o["Key"] for o in self._client.list_objects_v2(**kwargs).get("Contents", [])]
         # spurious non-prefix keys are dropped (reference warns, S3Setup.scala:96-99)
         return sorted(k for k in keys if k.startswith(prefix))
 
     def object_uri(self, key: str) -> str:
         return f"s3a://{self.bucket}/{key}"
+
+
+def pages(lister: Lister, prefix: str, start_after: str | None) -> Iterator[list[str]]:
+    """Every listing page under ``prefix``, each resuming ``start_after``
+    the previous page's last key, until an empty page — a lister capped at
+    N keys/page (every real object store) would otherwise stall a cursor at
+    key N+1 forever. A lister that ignores ``start_after`` (its page does
+    not advance past it) ends the listing after that page."""
+    while True:
+        page = lister.list_keys(prefix, start_after=start_after)
+        if not page:
+            return
+        yield page
+        if start_after is not None and page[-1] <= start_after:
+            return  # lister ignored start_after — no forward progress
+        start_after = page[-1]
+
+
+def _load(source: Any, spark: SparkSession, key: str) -> DataFrame:
+    """Object ``key`` of ``source``'s lister as a DataFrame: its
+    ``read_object`` (default ``spark.read.text``: utf8 + splitLines,
+    S3Setup.scala:133) on the lister's URI, then its ``decode``."""
+    uri = source.lister.object_uri(key)
+    df = spark.read.text(uri) if source.read_object is None else source.read_object(spark, uri)
+    return df if source.decode is None else source.decode(df)
 
 
 # ---------------------------------------------------------------------------
@@ -194,73 +225,47 @@ class ObjectCursorSource:
     #: the trap tests/test_cursors.py pins) at O(total keys) per iteration.
     monotonic_keys: bool = False
 
-    def initial_state(self) -> Any:
+    def _cursor(self) -> tuple[Any, Callable[[str], Any], Callable, Callable]:
+        """What ``cursor_kind`` decides: the initial cursor as the state
+        stores it, ``parse(key)`` -> cursor value, and the value's load from
+        and dump to the state."""
         if self.cursor_kind == "instant":
-            return {"cursor": self.initial_instant.isoformat()}
-        return {"cursor": self.initial_number}
+            return (
+                self.initial_instant.isoformat(),
+                lambda k: parse_instant_from_key(k, self.prefix, self.fmt),
+                datetime.fromisoformat,
+                datetime.isoformat,
+            )
+        return self.initial_number, lambda k: parse_number_from_key(k, self.prefix), int, int
+
+    def initial_state(self) -> Any:
+        return {"cursor": self._cursor()[0]}
 
     def state_fingerprint(self) -> str:
-        init = self.initial_instant.isoformat() if self.cursor_kind == "instant" else self.initial_number
-        return fingerprint("object-cursor", self.prefix, self.cursor_kind, self.fmt, init)
+        return fingerprint("object-cursor", self.prefix, self.cursor_kind, self.fmt, self._cursor()[0])
 
-    def _pages(self, start_after: str | None):
-        """Page through the lister via ``start_after`` until exhausted —
-        without this, a lister capped at N keys/page (every real object
-        store) would never surface keys past the first page and the cursor
-        would stall at key N+1 forever.
-
-        Defensive stop: a lister that accepts-but-ignores ``start_after``
-        (returns a page that doesn't advance past it) terminates after that
-        page instead of looping forever."""
-        while True:
-            page = self.lister.list_keys(self.prefix, start_after=start_after)
-            if not page:
-                return
-            yield page
-            if start_after is not None and page[-1] <= start_after:
-                return  # lister ignored start_after — no forward progress
-            start_after = page[-1]
-
-    def _key_for(self, cursor, last_key: str | None = None) -> str | None:
-        start_after = last_key if self.monotonic_keys else None
-        best_key, best_val = None, None
-        for page in self._pages(start_after):
-            for k in page:
-                val = (
-                    parse_instant_from_key(k, self.prefix, self.fmt)
-                    if self.cursor_kind == "instant"
-                    else parse_number_from_key(k, self.prefix)
-                )
-                if val is None or val <= cursor:
-                    continue
-                if best_val is None or val < best_val:
-                    best_key, best_val = k, val
-            if best_key is not None and self.monotonic_keys:
-                return best_key  # key order == cursor order: first hit wins
-        return best_key
+    def _key_for(
+        self, cursor: Any, parse: Callable[[str], Any], last_key: str | None
+    ) -> tuple[str, Any] | None:
+        """:func:`next_key` over every listing page; with ``monotonic_keys``
+        from ``last_key`` on, stopping at the first page with a hit (key
+        order == cursor order: that hit is the smallest)."""
+        best = None
+        for page in pages(self.lister, self.prefix, last_key if self.monotonic_keys else None):
+            hit = next_key(page, cursor, parse)
+            if hit is not None and (best is None or hit[1] < best[1]):
+                best = hit
+            if best is not None and self.monotonic_keys:
+                break
+        return best
 
     def iteration(self, state: Any, spark: SparkSession) -> tuple[DataFrame | None, Any]:
-        cursor = (
-            datetime.fromisoformat(state["cursor"])
-            if self.cursor_kind == "instant"
-            else int(state["cursor"])
-        )
-        key = self._key_for(cursor, state.get("last_key"))
-        if key is None:
+        _, parse, load, dump = self._cursor()
+        hit = self._key_for(load(state["cursor"]), parse, state.get("last_key"))
+        if hit is None:
             return None, state  # no new object yet — poll (non-blocking)
-        uri = self.lister.object_uri(key)
-        df = (
-            self.read_object(spark, uri)
-            if self.read_object is not None
-            else spark.read.text(uri)  # utf8 + splitLines (S3Setup.scala:133)
-        )
-        if self.decode is not None:
-            df = self.decode(df)
-        if self.cursor_kind == "instant":
-            new_cursor = parse_instant_from_key(key, self.prefix, self.fmt).isoformat()
-        else:
-            new_cursor = parse_number_from_key(key, self.prefix)
-        return df, {"cursor": new_cursor, "last_key": key}
+        key, value = hit
+        return _load(self, spark, key), {"cursor": dump(value), "last_key": key}
 
 
 # ---------------------------------------------------------------------------
@@ -341,30 +346,16 @@ class OciObjectStorageSource:
         return objects_cursor(start_after=state["start_after"], current=None)
 
     def _next_name(self, start_after: str | None) -> str | None:
-        while True:
-            page = self.lister.list_keys(self.prefix, start_after=start_after)
-            if not page:
-                return None
+        for page in pages(self.lister, self.prefix, start_after):
             for name in page:
                 if self.object_name_finder(name):
                     return name
-            if start_after is not None and page[-1] <= start_after:
-                return None  # lister ignored start_after — no forward progress
-            start_after = page[-1]
+        return None
 
     def iteration(self, state: Any, spark: SparkSession) -> tuple[DataFrame | None, Any]:
         next_name = self._next_name(self.start_after(state))
         current = self.object_name(state)
-        df = None
-        if current is not None:
-            uri = self.lister.object_uri(current)
-            df = (
-                self.read_object(spark, uri)
-                if self.read_object is not None
-                else spark.read.text(uri)
-            )
-            if self.decode is not None:
-                df = self.decode(df)
+        df = None if current is None else _load(self, spark, current)
         fold = self.state_fold or self._default_fold
         new_state = fold(state, next_name)
         if df is None and new_state == state:

@@ -19,7 +19,12 @@ RESTSetup.scala):
   reference),
 - **auth strategies** (model.scala:31-42): header injection + token cache;
   on 401/403 the token is refreshed once and the request retried
-  (RESTSetup.scala:85-93).
+  (RESTSetup.scala:85-93),
+- **one fetch path**: ``page_url`` (``param=N`` appended, or a ``{page}``
+  placeholder filled), ``fetch_with_auth_retry`` (the auth retry above, plus
+  5xx/connection retries whose delays are ``engine.RetryPolicy``'s) and
+  ``json_lines_decoder`` serve the engine source, ``fetch_pages_distributed``
+  and the ``tamer_rest`` Spark data source (rest_datasource.py) alike.
 
 The reference spins with exponential backoff on an empty page — a known
 can-hang-forever FIXME (RESTSetup.scala:214); here an empty page is a normal
@@ -36,12 +41,15 @@ from __future__ import annotations
 
 import base64
 import json
+import time
 import urllib.request
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tamer_spark.engine import RetryPolicy
+from tamer_spark.errors import TamerError
 from tamer_spark.state import fingerprint
 
 
@@ -183,19 +191,14 @@ def fetch_with_auth_retry(
     backoff_base_s: float = 0.5,
 ) -> str:
     """GET with one refresh-and-retry on 401/403/404 (RESTSetup.scala:85-93)
-    plus exponential-backoff retries on 5xx/connection errors (the
-    reference's optional per-request retry Schedule, RESTSetup.scala:64-72 —
-    configurable here rather than hard-coded)."""
-    import time as _time
-
-    from tamer_spark.errors import TamerError
-
+    plus ``retries`` retries on 5xx/connection errors after the delays of
+    ``RetryPolicy(retries, backoff_base_s)`` — 0.5, 1 and 2 s at the
+    defaults (the reference's optional per-request retry Schedule,
+    RESTSetup.scala:64-72 — configurable here rather than hard-coded)."""
     last_err: Exception | None = None
-    delay = backoff_base_s
-    for attempt in range(retries + 1):
-        if attempt:
-            _time.sleep(delay)
-            delay *= 2
+    for delay in [0.0, *RetryPolicy(retries, backoff_base_s).delays()]:
+        if delay:
+            time.sleep(delay)
         try:
             status, body = http_get(url, auth, timeout)
         except OSError as e:  # connection-level failure → retry
@@ -211,6 +214,16 @@ def fetch_with_auth_retry(
             raise TamerError(f"GET {url} failed with HTTP {status}")
         return body
     raise TamerError(f"GET {url} failed after {retries} retries") from last_err
+
+
+def page_url(base_url: str, param: str, page: int) -> str:
+    """The URL of page ``page``: ``base_url`` with its ``{page}``
+    placeholder filled in, or else with ``param=page`` appended to its
+    query (RESTSetup.scala:158)."""
+    if "{page}" in base_url:
+        return base_url.format(page=page)
+    sep = "&" if "?" in base_url else "?"
+    return f"{base_url}{sep}{param}={page}"
 
 
 # ---------------------------------------------------------------------------
@@ -237,16 +250,8 @@ class PaginatedRestSource:
     periodic: bool = False
     min_period_s: float = 300.0
     max_period_s: float = 3600.0
-    now_fn: Callable[[], float] = None  # type: ignore[assignment]
-    fetch: Callable[[str, Authentication], str] = None  # type: ignore[assignment]
-
-    def __post_init__(self):
-        if self.now_fn is None:
-            import time
-
-            self.now_fn = time.time
-        if self.fetch is None:
-            self.fetch = fetch_with_auth_retry
+    now_fn: Callable[[], float] = time.time
+    fetch: Callable[[str, Authentication], str] = fetch_with_auth_retry
 
     def initial_state(self) -> Any:
         if self.periodic:
@@ -260,8 +265,7 @@ class PaginatedRestSource:
         )
 
     def page_url(self, offset: int) -> str:
-        sep = "&" if "?" in self.base_url else "?"
-        return f"{self.base_url}{sep}{self.offset_parameter_name}={offset}"
+        return page_url(self.base_url, self.offset_parameter_name, offset)
 
     def iteration(self, state: Any, spark: SparkSession) -> tuple[DataFrame | None, Any]:
         if self.periodic:

@@ -4,13 +4,18 @@ The reference wraps REST polling in its own runtime because Kafka Connect-
 style sources can't express "next request depends on my state". Spark 4's
 Python Data Source API can:
 
-- **batch**: ``spark.read.format("rest")`` plans one InputPartition per page
-  — fetches run *in executors*, in parallel (the reference declares a
-  ``parallelism`` parameter it never uses; here it's real),
-- **streaming**: ``spark.readStream.format("rest")`` implements
+- **batch**: ``spark.read.format("tamer_rest")`` plans one InputPartition
+  per page — fetches run *in executors*, in parallel (the reference
+  declares a ``parallelism`` parameter it never uses; here it's real),
+- **streaming**: ``spark.readStream.format("tamer_rest")`` implements
   ``SimpleDataSourceStreamReader`` whose offset IS the pagination cursor —
   Spark's own checkpoint/offset log then provides exactly-once consumption
   and crash-resume (the engine loop's guarantees, natively).
+
+A page is fetched exactly as the engine's ``PaginatedRestSource`` fetches
+it — rest.py's ``page_url``, ``fetch_with_auth_retry`` (5xx and connection
+errors retried with backoff) and ``json_lines_decoder`` — only in the
+executor that reads the page's partition.
 
 Options: ``url`` (with ``{page}`` placeholder or ``page_param``),
 ``pages`` (batch: page count), ``start_page``, ``page_param``,
@@ -20,8 +25,6 @@ arrays; rows must match the user-provided schema's column order.
 
 from __future__ import annotations
 
-import json
-import urllib.request
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -31,17 +34,12 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from tamer_spark.sources.rest import Authentication, fetch_with_auth_retry, json_lines_decoder, page_url
+
 
 def _fetch_page(url_template: str, page_param: str, page: int) -> list:
-    if "{page}" in url_template:
-        url = url_template.format(page=page)
-    else:
-        sep = "&" if "?" in url_template else "?"
-        url = f"{url_template}{sep}{page_param}={page}"
-    with urllib.request.urlopen(url, timeout=30) as resp:
-        body = resp.read().decode("utf-8")
-    data = json.loads(body)
-    rows = data if isinstance(data, list) else [data]
+    body = fetch_with_auth_retry(page_url(url_template, page_param, page), Authentication())
+    rows, _ = json_lines_decoder(body)
     return [tuple(r.values()) if isinstance(r, dict) else (r,) for r in rows]
 
 

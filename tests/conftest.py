@@ -13,3 +13,10 @@ def spark():
     s = tamer_spark.get_spark("tamer-spark-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+def persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the session has cached right now."""
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    it = rdds.keysIterator()
+    return {it.next() for _ in range(rdds.size())}

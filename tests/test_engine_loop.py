@@ -17,6 +17,7 @@ from tamer_spark.engine import Pipeline, RetryPolicy, pin, unpin
 from tamer_spark.errors import TamerError
 from tamer_spark.sinks import MemorySink
 from tamer_spark.state import fingerprint
+from tests.conftest import persisted_rdd_ids
 
 
 class CountingSource:
@@ -59,12 +60,6 @@ def test_counts_1_to_10_exactly_once_in_order(spark, tmp_path):
     assert [r.key for r in sink.rows] == list(range(1, 11))
 
 
-def _persisted_ids(spark):
-    jsc = spark.sparkContext._jsc.sc()
-    it = jsc.getPersistentRDDs().keysIterator()
-    return {it.next() for _ in range(jsc.getPersistentRDDs().size())}
-
-
 def test_crash_resume_no_dupes_no_loss(spark, tmp_path):
     """Kill the pipeline mid-run (sink write fails hard), restart with a new
     Pipeline over the same checkpoint: every record still exactly once.
@@ -73,7 +68,7 @@ def test_crash_resume_no_dupes_no_loss(spark, tmp_path):
     failure discards it unwritten, so the state stays at the failed epoch
     and no cached batch is left behind."""
     source = RecordingSource()
-    before = _persisted_ids(spark)
+    before = persisted_rdd_ids(spark)
     sink = MemorySink(fail_on_epochs={5})
     pipe = Pipeline(
         source, sink, str(tmp_path / "cp"), retry=RetryPolicy(retries=1, base_delay_s=0.0)
@@ -84,7 +79,7 @@ def test_crash_resume_no_dupes_no_loss(spark, tmp_path):
     doc = pipe._store().load()
     assert (doc.epoch, doc.state) == (5, 5)
     assert [r.key for r in sink.rows] == [1, 2, 3, 4, 5]
-    leaked = _persisted_ids(spark) - before
+    leaked = persisted_rdd_ids(spark) - before
     assert not leaked, f"failed run leaked cached RDD ids: {leaked}"
     # simulate restart: fresh sink failure config, same checkpoint
     sink.fail_on_epochs = set()
@@ -156,12 +151,12 @@ def test_no_cached_batches_left_after_run(spark, tmp_path):
     must not add any persisted RDD of its own.
     """
 
-    before = _persisted_ids(spark)
+    before = persisted_rdd_ids(spark)
     sink = MemorySink()
     Pipeline(CountingSource(limit=3), sink, str(tmp_path / "cp")).run(
         spark, until=lambda s: s >= 3
     )
-    leaked = _persisted_ids(spark) - before
+    leaked = persisted_rdd_ids(spark) - before
     assert not leaked, f"run leaked cached RDD ids: {leaked}"
 
 
@@ -199,6 +194,17 @@ def test_pin_empty_batch_observes_zero_rows_and_null_aggregates(spark):
         assert pin(empty, mx=F.max("ts"), s=F.sum("id")) == {"rows": 0, "mx": None, "s": None}
     finally:
         unpin(empty)
+
+
+def test_pin_whose_pass_fails_releases_the_frame(spark):
+    """A source that pins its batch need not release it when the pin fails:
+    pin has already unpersisted the frame when it raises."""
+    df = spark.range(5).select(
+        F.when(F.col("id") == 3, F.raise_error(F.lit("pin pass fails"))).otherwise(F.col("id")).alias("id")
+    )
+    with pytest.raises(Exception, match="pin pass fails"):
+        pin(df)
+    assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
 
 
 def test_idle_poll_backs_off_exponentially(spark, tmp_path):
@@ -336,12 +342,12 @@ def test_run_until_drained_leaves_no_cached_batch(spark, tmp_path):
             rows = [(state + 1, state + 1)] if state < self.limit else []
             return spark_.createDataFrame(rows, "key int, value int"), state + 1
 
-    before = _persisted_ids(spark)
+    before = persisted_rdd_ids(spark)
     sink = MemorySink()
     pipe = Pipeline(Sliding(limit=3), sink, str(tmp_path / "cp"), poll_interval_s=0.0)
     assert pipe.run_until_drained(spark, idle_iterations=2) == 5
     assert [r.key for r in sink.rows] == [1, 2, 3]
-    leaked = _persisted_ids(spark) - before
+    leaked = persisted_rdd_ids(spark) - before
     assert not leaked, f"drain leaked cached RDD ids: {leaked}"
 
 
@@ -451,7 +457,7 @@ def test_write_ahead_failure_raises_after_the_previous_commit(spark, tmp_path):
                     assert attempts.acquire(timeout=60)
             super().write(df, epoch)
 
-    before = _persisted_ids(spark)
+    before = persisted_rdd_ids(spark)
     source = RecordingSource()
     sink = Failing()
     pipe = Pipeline(
@@ -466,7 +472,7 @@ def test_write_ahead_failure_raises_after_the_previous_commit(spark, tmp_path):
     assert (doc.epoch, doc.state) == (3, 3)
     assert [r.key for r in sink.rows] == [1, 2, 3]
     assert max(source.calls) <= 4  # the chain stopped at the failed epoch
-    leaked = _persisted_ids(spark) - before
+    leaked = persisted_rdd_ids(spark) - before
     assert not leaked, f"failed run leaked cached RDD ids: {leaked}"
 
 
@@ -504,7 +510,7 @@ def test_empty_replay_leaves_no_stale_epoch_written_ahead(spark, tmp_path):
             if epoch == 3:
                 wrote_3.set()
 
-    before = _persisted_ids(spark)
+    before = persisted_rdd_ids(spark)
     out = str(tmp_path / "out")
     sink = FailingOnce(out)
     run1 = Pipeline(
@@ -521,7 +527,7 @@ def test_empty_replay_leaves_no_stale_epoch_written_ahead(spark, tmp_path):
     committed = run2._store().load().epoch
     assert committed == 5
     assert sorted(r.key for r in sink.read(spark, before=committed).collect()) == [1, 2, 3, 5]
-    leaked = _persisted_ids(spark) - before
+    leaked = persisted_rdd_ids(spark) - before
     assert not leaked, f"runs leaked cached RDD ids: {leaked}"
 
 

@@ -12,9 +12,15 @@ What must hold for exactly-once (reference: Tamer.scala:150-186):
 
 from __future__ import annotations
 
+import os
+import pickle
+import sys
+import time
+import uuid
 from collections import namedtuple
 
 import pytest
+from pyspark import cloudpickle
 
 from tamer_spark.sinks.kafka import (
     TransactionalKafkaSink,
@@ -22,6 +28,10 @@ from tamer_spark.sinks.kafka import (
     produce_partition,
     transactional_id,
 )
+
+# executor tasks build the fake producers of the end-to-end test: ship this
+# module's classes to them by value (the module is not importable there)
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 Rec = namedtuple("Rec", ["key", "value"])
 
@@ -37,6 +47,54 @@ class FakeBroker:
     def marker_exists(self, producer, topic, key):
         return any(k == key for k, _ in self.committed.get(topic, []))
 
+    def register(self, tid):
+        # real Kafka: any open transaction with this id is aborted and older
+        # producers with the id are fenced
+        if tid in self.active_tids:
+            self.fenced_ids.add(tid)
+        self.active_tids.add(tid)
+
+    def commit(self, records):
+        for topic, key, value in records:
+            self.committed.setdefault(topic, []).append((key, value))
+
+
+class FileBroker(FakeBroker):
+    """A :class:`FakeBroker` whose state lives in files under ``root``, so
+    producers built in executor tasks (other processes) share it with the
+    driver: one file per committed transaction, in commit order."""
+
+    def __init__(self, root):
+        self.root = str(root)
+        os.makedirs(os.path.join(self.root, "txn"), exist_ok=True)
+
+    @property
+    def committed(self):
+        out: dict[str, list] = {}
+        txn = os.path.join(self.root, "txn")
+        for name in sorted(os.listdir(txn)):
+            with open(os.path.join(txn, name), "rb") as f:
+                for topic, key, value in pickle.load(f):
+                    out.setdefault(topic, []).append((key, value))
+        return out
+
+    def register(self, tid):
+        pass  # fencing is pinned by the in-memory broker's tests
+
+    def commit(self, records):
+        tmp = os.path.join(self.root, f"tmp-{uuid.uuid4().hex}")
+        with open(tmp, "wb") as f:
+            pickle.dump(records, f)
+        os.replace(tmp, os.path.join(self.root, "txn", f"{time.time_ns()}-{uuid.uuid4().hex}"))
+
+    def claim(self, name):
+        """True for the first caller in any process, False after."""
+        try:
+            os.close(os.open(os.path.join(self.root, name), os.O_CREAT | os.O_EXCL))
+            return True
+        except FileExistsError:
+            return False
+
 
 class FakeProducer:
     def __init__(self, broker: FakeBroker, config: dict, fail_after: int | None = None):
@@ -48,11 +106,7 @@ class FakeProducer:
         self.aborted = False
 
     def init_transactions(self):
-        # real Kafka: any open transaction with this id is aborted and older
-        # producers with the id are fenced
-        if self.tid in self.broker.active_tids:
-            self.broker.fenced_ids.add(self.tid)
-        self.broker.active_tids.add(self.tid)
+        self.broker.register(self.tid)
 
     def begin_transaction(self):
         self.in_txn = True
@@ -64,8 +118,7 @@ class FakeProducer:
         self.pending.append((topic, key, value))
 
     def commit_transaction(self):
-        for topic, key, value in self.pending:
-            self.broker.committed.setdefault(topic, []).append((key, value))
+        self.broker.commit(self.pending)
         self.pending = []
         self.in_txn = False
 
@@ -190,15 +243,15 @@ def test_sink_runs_one_transaction_per_rdd_partition(spark):
     assert sorted(sink.last_result) == first
 
 
-def _txn_sink(broker, fail_after=None):
-    calls = {"n": 0}
-
+def _txn_sink(broker, fail_epoch=None):
     def factory(config):
-        fa = None
-        if fail_after is not None and calls["n"] in fail_after:
-            fa = fail_after[calls["n"]]
-        calls["n"] += 1
-        return FakeProducer(broker, config, fail_after=fa)
+        # the first producer built for ``fail_epoch``, in whichever task,
+        # dies at its first produce
+        fail = fail_epoch is not None and (
+            config["transactional.id"].startswith(f"pipe1-{fail_epoch}-")
+            and broker.claim(f"failed-{fail_epoch}")
+        )
+        return FakeProducer(broker, config, fail_after=0 if fail else None)
 
     return TransactionalKafkaSink(
         bootstrap_servers="fake:9092",
@@ -206,7 +259,6 @@ def _txn_sink(broker, fail_after=None):
         fingerprint="pipe1",
         producer_factory=factory,
         marker_exists=broker.marker_exists,
-        local_mode=True,
     )
 
 
@@ -223,7 +275,7 @@ def test_engine_with_transactional_sink_exactly_once(spark, tmp_path):
     from tamer_spark.engine import Pipeline, RetryPolicy
     from tamer_spark.state import fingerprint as fp
 
-    broker = FakeBroker()
+    broker = FileBroker(tmp_path / "broker")
 
     class Src:
         def __init__(self, limit=6):
@@ -241,10 +293,12 @@ def test_engine_with_transactional_sink_exactly_once(spark, tmp_path):
             i = state + 1
             return _records_source_df(spark_, i), i
 
-    # (a) first producer build for epoch 2 fails mid-produce → abort → retry
-    sink = _txn_sink(broker, fail_after={2: 0})  # 3rd producer (epoch 2) dies at first produce
+    # (a) epoch 2's first transaction dies mid-produce → abort → the engine
+    # retries the write; partitions that committed are then skipped
+    sink = _txn_sink(broker, fail_epoch=2)
     pipe = Pipeline(Src(), sink, str(tmp_path / "cp"), retry=RetryPolicy(retries=3, base_delay_s=0.0))
     pipe.run(spark, until=lambda s: s >= 3)
+    assert broker.claim("failed-2") is False  # the failure did happen
 
     # (b) roll the checkpoint back one epoch (crash before state commit);
     # the replayed epoch must be skipped by its marker, not re-appended
@@ -252,8 +306,12 @@ def test_engine_with_transactional_sink_exactly_once(spark, tmp_path):
     doc = store.load()
     store.commit(doc.epoch - 1, doc.state - 1)
     sink2 = _txn_sink(broker)
-    Pipeline(Src(), sink2, str(tmp_path / "cp")).run(spark, until=lambda s: s >= 6)
-    assert any(n == -1 for _, n in sink2.last_result or []) or True  # receipt of final epoch
+    receipts = {}
+    Pipeline(
+        Src(), sink2, str(tmp_path / "cp"), observer=lambda m: receipts.update({m.epoch: sink2.last_result})
+    ).run(spark, until=lambda s: s >= 6)
+    replayed = receipts[doc.epoch - 1]
+    assert sorted(replayed) == [(pid, -1) for pid in range(sink2.num_partitions)], replayed
 
     keys = sorted(k.decode() for k, _ in broker.committed["t"])
     assert keys == [f"k{i}" for i in range(1, 7)], keys  # exactly once each

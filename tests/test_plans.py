@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from tamer_spark.plans import explain_str, plan_shape, pushed_filters, read_schema_columns
 from tamer_spark import queries as Q
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, persisted_rdd_ids
 
 # The r6 registry re-pack merged same-topic gates into tagged unions to fit
 # the driver's 50-row correctness window; plan pins still target the
@@ -143,21 +143,16 @@ def test_dedup_caches_release_when_result_dropped(spark):
     from tamer_spark.operators.dedup import minhash_lsh_pairs
     from tamer_spark.queries import _BANDS, _K, _MAX_BUCKET, _N, _t
 
-    def persisted_ids():
-        rdds = spark.sparkContext._jsc.sc().getPersistentRDDs()
-        it = rdds.keysIterator()
-        return {it.next() for _ in range(rdds.size())}
-
     gc.collect()  # flush pending finalizers from earlier tests first
-    before = persisted_ids()
+    before = persisted_rdd_ids(spark)
     df = minhash_lsh_pairs(
         _t(spark, SF_DIR, "documents"), k=_K, bands=_BANDS, n=_N, seed=42, max_bucket=_MAX_BUCKET
     )
     df.count()  # materialize → signature stage cached
-    assert persisted_ids() - before, "signature stage was not cached"
+    assert persisted_rdd_ids(spark) - before, "signature stage was not cached"
     del df
     gc.collect()
-    leaked = persisted_ids() - before
+    leaked = persisted_rdd_ids(spark) - before
     assert not leaked, f"signature cache leaked after result was dropped: {leaked}"
 
 

@@ -76,3 +76,39 @@ def test_stream_read_resumes_from_checkpoint(spark, server, tmp_path):
         output_mode="append",
     )
     assert sorted(got2) == list(range(100, 130))  # exactly-once across restarts
+
+
+class _FlakyPages(_Pages):
+    """``_Pages`` whose page 3 answers HTTP 503 to its first request."""
+
+    failed: set = set()
+
+    def do_GET(self):
+        if "page=3" in self.path and not _FlakyPages.failed:
+            _FlakyPages.failed.add(3)
+            self.send_response(503)
+            self.end_headers()
+            return
+        super().do_GET()
+
+
+def test_batch_read_retries_a_page_that_answers_503(spark):
+    """Executor page fetches go through the engine source's fetch: a
+    transient 5xx is retried instead of failing the read."""
+    _Pages.state["data"] = list(range(100))
+    _FlakyPages.failed.clear()
+    srv = HTTPServer(("127.0.0.1", 0), _FlakyPages)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        register(spark)
+        df = (
+            spark.read.format("tamer_rest")
+            .schema("value int")
+            .option("url", f"http://127.0.0.1:{srv.server_port}/items")
+            .option("pages", "10")
+            .load()
+        )
+        assert sorted(r.value for r in df.collect()) == list(range(100))
+        assert _FlakyPages.failed == {3}
+    finally:
+        srv.shutdown()

@@ -22,6 +22,7 @@ from tamer_spark.sources import (
     ObjectCursorSource,
     PaginatedRestSource,
 )
+from tests.conftest import persisted_rdd_ids
 
 UTC = timezone.utc
 
@@ -317,13 +318,7 @@ def test_jdbc_drain_into_write_ahead_sink_runs_each_window_once(spark, tmp_path)
 
         return spark.createDataFrame(df.rdd.mapPartitionsWithIndex(mark), df.schema)
 
-    jsc = sc._jsc.sc()
-
-    def persisted_ids():
-        it = jsc.getPersistentRDDs().keysIterator()
-        return {it.next() for _ in range(jsc.getPersistentRDDs().size())}
-
-    before = persisted_ids()
+    before = persisted_rdd_ids(spark)
     src, rows = _users_jdbc_source(spark, tmp_path, _BURSTS, timedelta(days=2), wrap)
     sink = ParquetEpochSink(str(tmp_path / "out"))
     epoch_rows = []
@@ -341,7 +336,7 @@ def test_jdbc_drain_into_write_ahead_sink_runs_each_window_once(spark, tmp_path)
     assert nonempty >= 4 and nonempty < len(epoch_rows), epoch_rows
     assert {sql: a.value for sql, a in executions.items()} == {sql: 1 for sql in executions}
     assert jobs == 2 * nonempty + (len(epoch_rows) - nonempty), (epoch_rows, jobs)
-    leaked = persisted_ids() - before
+    leaked = persisted_rdd_ids(spark) - before
     assert not leaked, f"run leaked cached RDD ids: {leaked}"
 
 
@@ -349,19 +344,13 @@ def test_jdbc_run_with_empty_windows_leaves_no_cached_batch(spark, tmp_path):
     """Non-empty batches are unpinned by the engine after the write, empty
     ones by the source itself: a drain that crosses empty windows adds no
     persisted RDD (pre-run snapshot — the session is shared)."""
-    jsc = spark.sparkContext._jsc.sc()
-
-    def persisted_ids():
-        it = jsc.getPersistentRDDs().keysIterator()
-        return {it.next() for _ in range(jsc.getPersistentRDDs().size())}
-
-    before = persisted_ids()
+    before = persisted_rdd_ids(spark)
     src, rows = _users_jdbc_source(spark, tmp_path, _BURSTS, timedelta(days=2))
     observed = []
     sink = MemorySink()
     _drain(spark, tmp_path, src, sink, observer=lambda m: observed.append(m.rows))
     assert 0 in observed and len(sink.rows) == len(rows)
-    leaked = persisted_ids() - before
+    leaked = persisted_rdd_ids(spark) - before
     assert not leaked, f"run leaked cached RDD ids: {leaked}"
 
 
