@@ -32,14 +32,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import numpy as np
 
 import tamer_spark
-from pyspark.sql import functions as F
 
 from tamer_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_signatures,
 )
-from tamer_spark.operators.similarity import quantize_embedding, semdedup
+from tamer_spark.operators.similarity import quantize_sql, semdedup
 
 THRESHOLDS = (0.2, 0.35, 0.5, 0.7)
 # (k, bands): band size r = k/bands sets the s-curve steepness
@@ -144,9 +143,7 @@ def main() -> None:
 
     # --- SemDeDup: cluster-bounded prune vs exact cosine ground truth ---
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = emb.select(
-        "vec_id", quantize_embedding(F.col("embedding")).alias("qv")
-    ).collect()
+    qv = emb.selectExpr("vec_id", f"{quantize_sql('embedding')} AS qv").collect()
     M = np.array([r.qv for r in sorted(qv, key=lambda r: r.vec_id)], dtype=np.float64)
     vids = np.array(sorted(r.vec_id for r in qv))
     norms = np.linalg.norm(M, axis=1)

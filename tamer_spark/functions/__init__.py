@@ -8,7 +8,7 @@ from tamer_spark.functions.text import (
     doc_fingerprint_col,
     scrub_pii_col,
     pii_count_cols,
-    trim_nonempty,
+    trim_nonempty_sql,
 )
 
 __all__ = [
@@ -22,5 +22,5 @@ __all__ = [
     "doc_fingerprint_col",
     "scrub_pii_col",
     "pii_count_cols",
-    "trim_nonempty",
+    "trim_nonempty_sql",
 ]

@@ -1,26 +1,25 @@
-"""Single-RPC constant array literals.
+"""Constant numeric arrays as SQL fragments.
 
 ``F.array(*[F.lit(x) for x in xs])`` costs one py4j round-trip per element
 (plus one per ``F.array``); a 16×64 codebook is ~1k driver→JVM calls before
 a single task runs, and plan-construction was measured to dominate several
-bench entries (ivfadc_search: ~1.4 s build vs ~0.5 s exec at sf0.1). A
-``F.expr("array(1.0D, ...)")`` string is ONE round-trip and parses to the
-same expression tree; after ConstantFolding both forms are the identical
-nested ``Literal`` (verified: equal ``optimizedPlan`` strings, equal dtype
-``array<array<double>>``, equal collected values), so results cannot
-differ.
+bench entries (ivfadc_search: ~1.4 s build vs ~0.5 s exec at sf0.1). An
+``array(1.0D, ...)`` fragment pasted into a selectExpr/F.expr string costs
+no extra round-trip and parses to the same expression tree; after
+ConstantFolding it is the identical nested ``Literal`` (verified: equal
+``optimizedPlan`` strings, equal dtype ``array<array<double>>``, equal
+collected values), so results cannot differ.
 
 Formatting contract (what makes the parse bit-exact):
 - doubles: ``repr(float(x)) + "D"`` — repr emits the shortest decimal that
   round-trips to the same binary64, and Spark's ``...D`` literal parses via
   Java ``Double.parseDouble`` (correctly-rounded), so value round-trip is
-  exact. Non-finite values have no SQL literal form → fall back to the
-  per-element builder (never hit by the quantized/derived matrices here,
-  but guarded).
+  exact. Non-finite values have no SQL literal form and raise (never hit by
+  the quantized/derived matrices here, but guarded).
 - longs: ``str(int(x)) + "L"`` — BIGINT literal, exact by construction.
 
-Only numeric arrays go through the string path; string arrays keep the
-per-element builder (escaping is riskier than the RPCs they'd save).
+Only numeric arrays are rendered here (escaping string arrays is riskier
+than the RPCs it would save).
 
 ``empty_frame`` is the empty-table counterpart: an empty frame planned on
 the JVM side rather than over a Python RDD.
@@ -30,86 +29,45 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 __all__ = [
     "empty_frame",
-    "lit_doubles",
-    "lit_double_matrix",
-    "lit_longs",
     "sql_doubles",
     "sql_double_matrix",
     "sql_longs",
 ]
 
 
-def _fmt_double(x: float) -> str | None:
+def _fmt_double(x: float) -> str:
     v = float(x)
     if not math.isfinite(v):
-        return None
+        raise ValueError("non-finite value has no SQL literal form")
     return repr(v) + "D"
 
 
 def sql_doubles(xs) -> str:
-    """The ``array(...)`` SQL fragment behind ``lit_doubles`` — for callers
-    composing LARGER one-parse expressions (r14: whole-column SQL rendering;
-    one string concat here instead of one more F.expr round-trip). Raises on
+    """``array<double>`` SQL fragment — for callers composing LARGER
+    one-parse expressions (r14: whole-column SQL rendering; one string
+    concat here instead of one more F.expr round-trip). Raises on
     non-finite values (no SQL literal form): callers in the quantized-model
     family never produce them by the determinism contract."""
-    parts = []
-    for x in xs:
-        p = _fmt_double(x)
-        if p is None:
-            raise ValueError("non-finite value has no SQL literal form")
-        parts.append(p)
-    return "array(" + ",".join(parts) + ")"
+    return "array(" + ",".join(_fmt_double(x) for x in xs) + ")"
 
 
 def sql_double_matrix(rows) -> str:
-    """``array(array(...), ...)`` SQL fragment behind ``lit_double_matrix``
-    (same contract as sql_doubles)."""
+    """``array<array<double>>`` SQL fragment (codebooks, centroid tables,
+    sign planes; same contract as sql_doubles)."""
     return "array(" + ",".join(sql_doubles(r) for r in rows) + ")"
 
 
 def sql_longs(xs) -> str:
-    """``array<bigint>`` SQL fragment behind ``lit_longs`` (non-empty)."""
+    """``array<bigint>`` SQL fragment (non-empty)."""
     vals = [int(x) for x in xs]
     if not vals:
-        raise ValueError("empty array literal — use lit_longs for the typed empty form")
+        raise ValueError("empty array literal has no element type")
     return "array(" + ",".join(f"{v}L" for v in vals) + ")"
-
-
-def lit_doubles(xs) -> Column:
-    """``array<double>`` literal from a sequence of finite floats, one RPC."""
-    xs = list(xs)
-    parts = [_fmt_double(x) for x in xs]
-    if not parts or any(p is None for p in parts):
-        return F.array(*[F.lit(float(x)) for x in xs])
-    return F.expr("array(" + ",".join(parts) + ")")
-
-
-def lit_double_matrix(rows) -> Column:
-    """``array<array<double>>`` literal (codebooks, centroid tables, sign
-    planes) from finite floats, one RPC."""
-    rows = [list(r) for r in rows]
-    outer = []
-    for row in rows:
-        parts = [_fmt_double(x) for x in row]
-        if not parts or any(p is None for p in parts):
-            return F.array(*[F.array(*[F.lit(float(x)) for x in row]) for row in rows])
-        outer.append("array(" + ",".join(parts) + ")")
-    if not outer:
-        return F.array()
-    return F.expr("array(" + ",".join(outer) + ")")
-
-
-def lit_longs(xs) -> Column:
-    """``array<bigint>`` literal, one RPC."""
-    vals = [int(x) for x in xs]
-    if not vals:
-        return F.array().cast("array<bigint>")
-    return F.expr("array(" + ",".join(f"{v}L" for v in vals) + ")")
 
 
 def empty_frame(spark: SparkSession, schema: StructType | str) -> DataFrame:

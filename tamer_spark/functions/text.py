@@ -204,25 +204,14 @@ def pii_count_cols(text: Column) -> list[Column]:
     ]
 
 
-def trim_nonempty(arr: Column) -> Column:
+def trim_nonempty_sql(arr: str) -> str:
     """THE pinned line/sentence staging convention, shared by
-    gopher_signals, c4_line_filter/c4_span_dedup, and dedup_lines_in_doc
-    (each DuckDB oracle mirrors it as
+    gopher_signals, c4_line_filter/c4_span_dedup, and the line operators of
+    operators/dedup.py (each DuckDB oracle mirrors it as
     ``list_filter(list_transform(x, x -> trim(x)), x -> len(x) > 0)``):
     trim each element of a string array — SPACES only, matching both
-    engines' default trim — and drop empties. One definition so the three
-    operators' pinned semantics can never silently diverge.
-
-    The inner lambda wrapper is LOAD-BEARING: ``F.trim`` has an optional
-    second parameter (characters to strip), so passing it bare makes
-    ``transform`` treat it as a binary (element, index) lambda and trim by
-    "0"/"1"/... — a silent no-op.
-    """
-    return F.filter(F.transform(arr, lambda x: F.trim(x)), lambda x: F.length(x) > 0)
-
-
-def trim_nonempty_sql(arr: str) -> str:
-    """SQL fragment twin of ``trim_nonempty`` (one-parse construction, r14)."""
+    engines' default trim — and drop empties. One definition so the
+    operators' pinned semantics can never silently diverge."""
     return f"filter(transform({arr}, x -> trim(x)), x -> length(x) > 0)"
 
 
@@ -361,7 +350,7 @@ def winnow_overlap_pairs(
 #      drop real documents — overcollapse is the asymmetric failure (a
 #      kept tracking param only splits a dup group; a dropped content
 #      param destroys data). Callers with a corpus where 'ref' IS pure
-#      tracking can pre-strip it before canonicalize_url_col.
+#      tracking can pre-strip it before canonicalize_url_sql.
 URL_SCHEME_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://"
 URL_HOSTPORT_RE = r"^[^/?#]*"
 URL_WWW_RE = r"^www\."
@@ -373,8 +362,16 @@ URL_TRAILING_SLASH_RE = r"/+$"
 URL_TRACKING_PARAM_RE = r"^(utm_[^=]*|gclid|fbclid|msclkid|ref_src)="
 
 
-def canonicalize_url_col(url: Column) -> Column:
-    """Canonical dedup key for a URL column (constants/steps above).
+def sql_string(s: str) -> str:
+    """Single-quoted Spark SQL string literal of ``s`` (backslashes doubled
+    and quotes escaped — the default escapedStringLiterals=false parser
+    processes escapes, which session.py pins)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def canonicalize_url_sql(url: str) -> str:
+    """Canonical dedup key for a URL column (constants/steps above), as one
+    SQL fragment.
 
     Pure Catalyst expression chain — map-only, whole-stage codegen, zero
     shuffles; the groupBy in url-level dedup shuffles only the 16-byte
@@ -388,59 +385,24 @@ def canonicalize_url_col(url: Column) -> Column:
     the lowered length would swallow the path's leading '/' — collapsing
     distinct resources into one dedup key.
     """
-    s = F.regexp_replace(url, URL_SCHEME_RE, "")
-    hostport_raw = F.regexp_extract(s, URL_HOSTPORT_RE, 0)
-    hostport = F.lower(hostport_raw)
-    host = F.regexp_replace(
-        F.regexp_replace(hostport, URL_WWW_RE, ""), URL_DEFAULT_PORT_RE, ""
-    )
-    rest = F.regexp_replace(
-        s.substr(F.length(hostport_raw) + 1, F.length(s)), URL_FRAGMENT_RE, ""
-    )
-    path = F.regexp_replace(
-        F.regexp_extract(rest, URL_PATH_RE, 0), URL_TRAILING_SLASH_RE, ""
-    )
-    kept = F.filter(
-        F.split(F.regexp_extract(rest, URL_QUERY_RE, 1), "&"),
-        lambda p: (F.length(p) > 0) & ~p.rlike(URL_TRACKING_PARAM_RE),
-    )
-    q = F.array_join(F.array_sort(kept), "&")
-    return F.concat(
-        host,
-        path,
-        F.when(q == "", F.lit("")).otherwise(F.concat(F.lit("?"), q)),
-    )
-
-
-def _rxlit(r: str) -> str:
-    """Spark SQL string literal of a regex (backslashes doubled — the
-    default escapedStringLiterals=false parser processes escapes)."""
-    return "'" + r.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def canonicalize_url_sql(url: str) -> str:
-    """SQL fragment twin of ``canonicalize_url_col`` (one-parse
-    construction, r14): same pinned constants, parses to the identical
-    expression tree — multiply-referenced sub-expressions are inlined
-    per reference exactly as the Column chain duplicated them."""
-    s = f"regexp_replace({url}, {_rxlit(URL_SCHEME_RE)}, '')"
-    hostport_raw = f"regexp_extract({s}, {_rxlit(URL_HOSTPORT_RE)}, 0)"
+    s = f"regexp_replace({url}, {sql_string(URL_SCHEME_RE)}, '')"
+    hostport_raw = f"regexp_extract({s}, {sql_string(URL_HOSTPORT_RE)}, 0)"
     hostport = f"lower({hostport_raw})"
     host = (
-        f"regexp_replace(regexp_replace({hostport}, {_rxlit(URL_WWW_RE)}, ''), "
-        f"{_rxlit(URL_DEFAULT_PORT_RE)}, '')"
+        f"regexp_replace(regexp_replace({hostport}, {sql_string(URL_WWW_RE)}, ''), "
+        f"{sql_string(URL_DEFAULT_PORT_RE)}, '')"
     )
     rest = (
         f"regexp_replace(substr({s}, length({hostport_raw}) + 1, length({s})), "
-        f"{_rxlit(URL_FRAGMENT_RE)}, '')"
+        f"{sql_string(URL_FRAGMENT_RE)}, '')"
     )
     path = (
-        f"regexp_replace(regexp_extract({rest}, {_rxlit(URL_PATH_RE)}, 0), "
-        f"{_rxlit(URL_TRAILING_SLASH_RE)}, '')"
+        f"regexp_replace(regexp_extract({rest}, {sql_string(URL_PATH_RE)}, 0), "
+        f"{sql_string(URL_TRAILING_SLASH_RE)}, '')"
     )
     kept = (
-        f"filter(split(regexp_extract({rest}, {_rxlit(URL_QUERY_RE)}, 1), '&'), "
-        f"p -> length(p) > 0 AND NOT (p RLIKE {_rxlit(URL_TRACKING_PARAM_RE)}))"
+        f"filter(split(regexp_extract({rest}, {sql_string(URL_QUERY_RE)}, 1), '&'), "
+        f"p -> length(p) > 0 AND NOT (p RLIKE {sql_string(URL_TRACKING_PARAM_RE)}))"
     )
     q = f"array_join(array_sort({kept}), '&')"
     return (
@@ -450,7 +412,7 @@ def canonicalize_url_sql(url: str) -> str:
 
 
 def canonicalize_url_py(url: str) -> str:
-    """Pure-Python reference of canonicalize_url_col for differential tests
+    """Pure-Python reference of canonicalize_url_sql for differential tests
     (stdlib re only — a third engine besides Spark and DuckDB)."""
     import re
 

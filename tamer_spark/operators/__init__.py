@@ -58,7 +58,7 @@ from tamer_spark.operators.similarity import (
     ivf_append,
     ivf_build,
     ivf_search,
-    quantize_embedding,
+    quantize_sql,
     semdedup,
     semdedup_incremental,
 )
@@ -89,7 +89,7 @@ __all__ = [
     "cosine_knn",
     "cosine_knn_lsh",
     "cosine_knn_lsh_multiprobe",
-    "quantize_embedding",
+    "quantize_sql",
     "ivf_build",
     "ivf_append",
     "ivf_search",

@@ -60,7 +60,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from tamer_spark.functions.text import trim_nonempty_sql as _trim_nonempty_sql
+from tamer_spark.functions.text import sql_string, trim_nonempty_sql as _trim_nonempty_sql
 
 __all__ = ["c4_line_filter", "c4_span_dedup"]
 
@@ -68,13 +68,8 @@ _TERMINALS = (".", "!", "?", '"')
 _SPAN_SEP = "\x1f"
 
 
-def _sq(s: str) -> str:
-    """Single-quoted Spark SQL string literal."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _count_occurrences_sql(col: str, sym: str) -> str:
-    return f"length({col}) - length(replace({col}, {_sq(sym)}, ''))"
+    return f"length({col}) - length(replace({col}, {sql_string(sym)}, ''))"
 
 
 def c4_line_filter(
@@ -100,10 +95,10 @@ def c4_line_filter(
     # parses instead of ~420 py4j round-trips (see operators/pq.py rationale)
     raw = docs.selectExpr(f"{id_col} AS doc_id", f"{text_col} AS _raw")
     lines = _trim_nonempty_sql("split(_raw, '\\n')")
-    ok_term = " OR ".join(f"endswith(x, {_sq(t)})" for t in _TERMINALS)
+    ok_term = " OR ".join(f"endswith(x, {sql_string(t)})" for t in _TERMINALS)
     ok_words = f"size(filter(split(x, ' '), w -> length(w) > 0)) >= {min_line_words}"
     ok_marker = " AND ".join(
-        f"NOT contains(lower(x), {_sq(m)})" for m in drop_line_markers
+        f"NOT contains(lower(x), {sql_string(m)})" for m in drop_line_markers
     )
     line_ok = f"({ok_term}) AND ({ok_words})" + (
         f" AND ({ok_marker})" if ok_marker else ""
@@ -116,7 +111,7 @@ def c4_line_filter(
     )
     doc_markers = tuple(drop_doc_markers) + tuple(badwords)
     doc_ok = (
-        " AND ".join(f"NOT contains(lower(_raw), {_sq(m)})" for m in doc_markers)
+        " AND ".join(f"NOT contains(lower(_raw), {sql_string(m)})" for m in doc_markers)
         or "true"
     )
     n_sent = " + ".join(
@@ -162,7 +157,7 @@ def c4_span_dedup(
     (they produce no spans). Idempotent: a second pass finds no duplicated
     spans among survivors of the first.
     """
-    sep = _sq(_SPAN_SEP)
+    sep = sql_string(_SPAN_SEP)
     # strip the span separator from the text BEFORE splitting — a stray
     # 0x1F in web text must never alias two different sentence runs
     ss = _trim_nonempty_sql(f"split(replace({text_col}, {sep}, ''), '[.!?]')")

@@ -325,11 +325,11 @@ def cms_heavy_hitters(
         dense: list[list[int]] = [[0] * w for _ in range(d)]
         for c in cells:
             dense[c.r][c.b] = c.cnt
-        from tamer_spark.functions.litfast import lit_longs
+        from tamer_spark.functions.litfast import sql_longs
 
         est_cells = [
             F.element_at(
-                lit_longs(dense[r]),
+                F.expr(sql_longs(dense[r])),
                 (_bucket(F.col("token"), r, w, seed) + 1).cast("int"),
             )
             for r in range(d)

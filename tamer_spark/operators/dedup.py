@@ -78,7 +78,7 @@ def url_dedup_counts(
     (CCNet dedups by URL before content; RefinedWeb §3.2 drops re-crawled
     URLs before any text processing, because it needs no text read at all).
 
-    Canonicalization (functions/text.canonicalize_url_col: scheme/www/
+    Canonicalization (functions/text.canonicalize_url_sql: scheme/www/
     default-port/fragment/trailing-slash stripped, tracking params dropped,
     survivors sorted) is a map-only Catalyst chain at scan rate; the only
     shuffle is the groupBy on md5(canonical) — 16 bytes/row with map-side
@@ -224,13 +224,7 @@ def dedup_lines_in_doc(
 
     Returns (doc_id, text_clean, n_lines, n_dropped).
     """
-    from tamer_spark.functions.text import trim_nonempty_sql
-
-    raw = df.selectExpr(f"{id_col} AS doc_id", f"{text_col} AS _raw")
-    staged = raw.selectExpr(
-        "doc_id",
-        trim_nonempty_sql("split(_raw, '\\n')") + " AS _lines",
-    )
+    staged = _staged_line_arrays(df, text_col, id_col, "\n")
     firsts = "filter(_lines, (x, i) -> array_position(_lines, x) = i + 1)"
     return staged.selectExpr(
         "doc_id",
@@ -245,7 +239,7 @@ def _doc_lines(
 ) -> DataFrame:
     """(doc_id, n_lines, idx, line, h): the corpus line stream under the
     pinned corpus-wide line convention (split on ``split_pattern``,
-    space-trimmed, empties dropped — the same trim_nonempty every line
+    space-trimmed, empties dropped — the same trim_nonempty_sql every line
     operator shares), with ``h`` = md5(line) so downstream shuffles move a
     16-byte digest key, not arbitrary-width line text, and ``idx`` the
     line's position among the SURVIVING (nonempty) units — the rebuild
@@ -265,14 +259,14 @@ def _staged_line_arrays(
 ) -> DataFrame:
     """(doc_id, _lines): THE corpus line/paragraph-unit convention (split
     on ``split_pattern``, space-trimmed, empties dropped) in exactly one
-    place — _doc_lines (the exploded stream) and strip_boilerplate_map_only
-    (the array-HOF fast path) both derive from this, so the two forms
-    cannot drift on what a 'line' is."""
-    from tamer_spark.functions.text import trim_nonempty
+    place — _doc_lines (the exploded stream), strip_boilerplate_map_only
+    (the array-HOF fast path) and dedup_lines_in_doc all derive from this,
+    so they cannot drift on what a 'line' is."""
+    from tamer_spark.functions.text import sql_string, trim_nonempty_sql
 
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        trim_nonempty(F.split(F.col(text_col), split_pattern)).alias("_lines"),
+    return df.selectExpr(
+        f"{id_col} AS doc_id",
+        trim_nonempty_sql(f"split({text_col}, {sql_string(split_pattern)})") + " AS _lines",
     )
 
 
@@ -588,7 +582,7 @@ def minhash_signatures(
     takes k ``array_min`` permutation scans over the materialized shingle
     array. Each stage's alias is multiply-referenced downstream, which is
     exactly what stops CollapseProject from re-inlining it (same staging
-    rule as text_profile / lsh_bucket_from_quantized).
+    rule as text_profile / similarity.lsh_bucket_sql).
 
     History: an earlier row-local attempt that referenced the *expression*
     (not a materialized column) re-inlined the md5 array per access —
@@ -661,9 +655,9 @@ def _release_on_gc(result: DataFrame, *cached: DataFrame) -> DataFrame:
     the wrapper before the action runs, firing the finalizer early; the
     query stays CORRECT (the plan recomputes the signature stage) but
     loses the compute-once benefit. Callers who derive further plans
-    should hold the result in a variable for the duration, or pass
-    ``keep_cache=True`` and manage ``spark.catalog.clearCache()`` /
-    unpersist themselves.
+    should hold the result in a variable for the duration, or call the
+    ``(pairs, cached)`` form (minhash_lsh_pairs_with_cache,
+    shingle_pair_stats) and unpersist the cached frame themselves.
     """
     import weakref
 
@@ -687,7 +681,6 @@ def minhash_lsh_pairs(
     n: int = 3,
     seed: int = 42,
     max_bucket: int | None = 1000,
-    keep_cache: bool = False,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
@@ -704,7 +697,7 @@ def minhash_lsh_pairs(
     pairs, sigs = minhash_lsh_pairs_with_cache(
         df, text_col, id_col, k, bands, n, seed, max_bucket
     )
-    return pairs if keep_cache else _release_on_gc(pairs, sigs)
+    return _release_on_gc(pairs, sigs)
 
 
 def minhash_lsh_pairs_with_cache(
@@ -858,13 +851,12 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
-    keep_cache: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs sharing ≥1 shingle —
     shingle_pair_stats + the resemblance measure."""
     stats, exploded = shingle_pair_stats(df, text_col, id_col, n)
     pairs = jaccard_measure(stats, threshold)
-    return pairs if keep_cache else _release_on_gc(pairs, exploded)
+    return _release_on_gc(pairs, exploded)
 
 
 def ngram_containment_pairs(
@@ -873,7 +865,6 @@ def ngram_containment_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
-    keep_cache: bool = False,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT pairs — the one-sided Jaccard (Broder 1997
     §3: containment(A, B) = |A∩B| / |A|), the asymmetric near-dup family
@@ -885,7 +876,7 @@ def ngram_containment_pairs(
     (doc_a, doc_b, inter, min_size, containment)."""
     stats, exploded = shingle_pair_stats(df, text_col, id_col, n)
     pairs = containment_measure(stats, threshold)
-    return pairs if keep_cache else _release_on_gc(pairs, exploded)
+    return _release_on_gc(pairs, exploded)
 
 
 def simhash_signatures(

@@ -118,12 +118,12 @@ def embedding_drift(
     everything downstream is a broadcast of dim rows. No window, no
     corpus join — the two corpora never meet.
     """
-    from tamer_spark.operators.similarity import quantize_embedding
+    from tamer_spark.operators.similarity import quantize_sql
 
     def _stats(df: DataFrame, tag: str) -> tuple[DataFrame, DataFrame]:
-        qv = quantize_embedding(F.col(vec_col))
+        qv = quantize_sql(vec_col)
         means = (
-            df.select(F.posexplode(qv).alias("t", "val"))
+            df.selectExpr(f"posexplode({qv}) AS (t, val)")
             .groupBy("t")
             # FLOOR, not `div`: per-dim sums go negative and SQL div
             # truncates toward zero while the repo's centroid convention
@@ -131,10 +131,8 @@ def embedding_drift(
             # pinned by the driver-recompute test against Python `//`
             .agg(F.expr("CAST(FLOOR(sum(val) / count(*)) AS BIGINT)").alias(f"m_{tag}"))
         )
-        norms = df.select(
-            F.aggregate(
-                qv, F.lit(0).cast("long"), lambda a, x: a + (x * x).cast("long")
-            ).alias("n2")
+        norms = df.selectExpr(
+            f"aggregate({qv}, CAST(0 AS BIGINT), (a, x) -> a + CAST(x * x AS BIGINT)) AS n2"
         ).agg(
             F.count(F.lit(1)).cast("long").alias(f"n_{tag}"),
             F.expr("sum(n2) div count(*)").cast("long").alias(f"msn_{tag}"),

@@ -35,7 +35,6 @@ def funnel_counts(
     user_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
-    persist: bool = False,
 ) -> DataFrame:
     """Users reaching each stage of an ORDERED funnel: stage i counts users
     with a ``stages[i]`` event at-or-after their stage-(i-1) time (first
@@ -55,17 +54,10 @@ def funnel_counts(
     interleaved A/B at sf0.1: 0.396 s -> 0.294 median. NULL semantics are
     identical: a user with no stage-(i-1) time has ``ts >= NULL`` -> NULL
     -> the CASE yields NULL -> min skips it, exactly like the old join's
-    condition.
-
-    ``persist`` is vestigial in this shape (the source is read once); it
-    still caches the projected frame for callers that pass it, released
-    when the result is garbage collected."""
+    condition."""
     if not stages:
         raise ValueError("stages must be non-empty")
 
-    cached = None
-    if persist:
-        events = cached = events.select(user_col, type_col, ts_col).persist()
     w = Window.partitionBy(user_col)
     d = events.select(user_col, type_col, ts_col).withColumn(
         "t0", F.min(F.when(F.col(type_col) == stages[0], F.col(ts_col))).over(w)
@@ -93,7 +85,7 @@ def funnel_counts(
     # scheme exists to get wrong — a stage named "o'brien" or one ending in
     # a backslash is just a value. counts is a single row; the explode is
     # |stages| rows of driver-free plan work.
-    out = counts.select(
+    return counts.select(
         F.explode(
             F.array(
                 *[
@@ -107,11 +99,6 @@ def funnel_counts(
             )
         ).alias("_s")
     ).select("_s.stage_idx", "_s.stage", "_s.users")
-    if cached is not None:
-        from tamer_spark.operators.dedup import _release_on_gc
-
-        out = _release_on_gc(out, cached)
-    return out
 
 
 def cohort_retention(

@@ -64,7 +64,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from tamer_spark.functions.text import STOPWORDS
+from tamer_spark.functions.text import STOPWORDS, sql_string, trim_nonempty_sql
 
 __all__ = ["gopher_signals", "STOP_GOPHER", "TOP_NGRAMS_DEFAULT", "DUP_NGRAMS_DEFAULT"]
 
@@ -99,11 +99,6 @@ def _frac(num: str, den: str) -> str:
 def _d(x: float) -> str:
     """Exact double literal (repr round-trips binary64; litfast contract)."""
     return repr(float(x)) + "D"
-
-
-def _sq(s: str) -> str:
-    """Single-quoted SQL string literal (escape quotes and backslashes)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _top_col(n: int) -> str:
@@ -158,7 +153,7 @@ def gopher_signals(
     )
 
     def occurrences(sym: str) -> str:
-        removed = f"(length(_t) - length(replace(_t, {_sq(sym)}, '')))"
+        removed = f"(length(_t) - length(replace(_t, {sql_string(sym)}, '')))"
         return f"{removed} / {len(sym)}" if len(sym) > 1 else removed
 
     # §A1.1 symbols: '#' or '...' — the Unicode ellipsis counts too (ADVICE
@@ -167,7 +162,7 @@ def gopher_signals(
 
     line_cols = []
     if line_signals:
-        # functions/text.trim_nonempty rendered as SQL (the pinned
+        # functions/text.trim_nonempty_sql (the pinned
         # list_filter(list_transform(...)) staging convention). The arrays
         # are STAGED as columns like _ws (multiply-referenced, CollapseProject
         # keeps them materialized; within-Project subexpression elimination
@@ -175,11 +170,11 @@ def gopher_signals(
         # ANALYZED tree small, which is the plan-construction cost)
         ws = ws.selectExpr(
             "*",
-            "filter(transform(split(_raw, '\\\\n'), x -> trim(x)), x -> length(x) > 0) AS _lines",
-            "filter(transform(split(_raw, '\\\\n\\\\n'), x -> trim(x)), x -> length(x) > 0) AS _paras",
+            trim_nonempty_sql("split(_raw, '\\\\n')") + " AS _lines",
+            trim_nonempty_sql("split(_raw, '\\\\n\\\\n')") + " AS _paras",
         )
         is_ellipsis = "x -> endswith(x, '...') OR endswith(x, '…')"
-        is_bullet = "x -> " + " OR ".join(f"startswith(x, {_sq(b)})" for b in _BULLETS)
+        is_bullet = "x -> " + " OR ".join(f"startswith(x, {sql_string(b)})" for b in _BULLETS)
         line_cols = [
             "CAST(size(_lines) AS BIGINT) AS n_lines",
             "CAST(size(_paras) AS BIGINT) AS n_paragraphs",
@@ -193,8 +188,8 @@ def gopher_signals(
             f"{_arr_chars('_paras')} AS _para_chars",
         ]
 
-    stop_arr = "array(" + ", ".join(_sq(w) for w in STOPWORDS) + ")"
-    gopher_arr = "array(" + ", ".join(_sq(w) for w in STOP_GOPHER) + ")"
+    stop_arr = "array(" + ", ".join(sql_string(w) for w in STOPWORDS) + ")"
+    gopher_arr = "array(" + ", ".join(sql_string(w) for w in STOP_GOPHER) + ")"
     sig = ws.selectExpr(
         "doc_id",
         "_ws",

@@ -39,7 +39,6 @@ def pagerank(
     d_ppm: int = 850_000,
     src_col: str = "src",
     dst_col: str = "dst",
-    persist_edges: bool = False,
     dedup_edges: bool = True,
 ) -> DataFrame:
     """Ranks after ``iters`` exact power-iteration rounds over DIRECTED
@@ -47,15 +46,12 @@ def pagerank(
     dst; dangling nodes keep receiving ``base`` and leak their mass
     (standard simplification, documented above).
 
-    ``persist_edges``: the deduplicated edge list is referenced by deg,
-    nodes, and every round's join — unpersisted, the unrolled plan
-    re-runs the edge derivation once per reference. Measured A/B at
-    sf0.1 (3 rounds, cold): persisting is ~17% SLOWER locally (2.99 s vs
-    2.55 s — the cache write outweighs re-deriving a cheap AQE-broadcast
-    join), so the default is off; turn it ON when the edge input is
-    expensive relative to memory bandwidth (a corpus-scale multi-join at
-    real scale), where per-round re-derivation dominates instead. Values
-    are identical either way (persist is physical only).
+    The deduplicated edge list is referenced by deg, nodes, and every
+    round's join, and is NOT persisted: the unrolled plan re-runs the edge
+    derivation once per reference. Measured A/B at sf0.1 (3 rounds, cold):
+    persisting was ~17% SLOWER locally (2.99 s vs 2.55 s — the cache write
+    outweighs re-deriving a cheap AQE-broadcast join). A caller whose edge
+    input is expensive persists it before the call.
 
     ``dedup_edges``: degrees and contributions assume DISTINCT edges, so
     the input is deduplicated by default. A caller whose edge derivation
@@ -70,8 +66,6 @@ def pagerank(
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     if dedup_edges:
         e = e.distinct()
-    if persist_edges:
-        e = e.persist()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -117,9 +111,4 @@ def pagerank(
                 "n",
             )
         )
-    out = ranks.select("node", "rank")
-    if persist_edges:
-        from tamer_spark.operators.dedup import _release_on_gc
-
-        out = _release_on_gc(out, e)
-    return out
+    return ranks.select("node", "rank")

@@ -34,29 +34,23 @@ the training-data-pipeline extension surface.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from tamer_spark.functions.hashing import stable_hash64
-from tamer_spark.functions.litfast import lit_double_matrix, sql_double_matrix
-from tamer_spark.operators.similarity import quantize_embedding, quantize_sql
+from tamer_spark.functions.hashing import stable_hash64_sql
+from tamer_spark.functions.litfast import sql_double_matrix
+from tamer_spark.operators.similarity import quantize_sql
 
 __all__ = ["pq_train", "pq_encode", "pq_search_adc", "ivfadc_search"]
 
 
-def _sub_slice(qv: Column, j: int, dsub: int) -> Column:
-    return F.slice(qv, j * dsub + 1, dsub)
-
-
-# --- one-parse SQL twins (r14) -------------------------------------------
-# The serving-path builders (pq_encode / pq_search_adc / ivfadc_search)
-# construct their plans from these SQL fragments handed to selectExpr in a
-# handful of parses, instead of one py4j round-trip per Column operator:
+# --- expressions as SQL fragments ------------------------------------------
+# Training (pq_train) and the serving path (pq_encode / pq_search_adc /
+# ivfadc_search) build their plans from these fragments handed to selectExpr
+# in a handful of parses, instead of one py4j round-trip per Column operator:
 # ivfadc_search measured 1028 RPCs ≈ 0.6-0.8 s of driver-side build per
-# call at sf0.1 against ~0.5 s of execution (.scratch/rpc_attr.py). The
-# fragments parse to the identical analyzed trees the Column helpers built
-# (0.0D ≡ F.lit(0.0), `arr[0]` ≡ Column.__getitem__, named_struct ≡
-# aliased F.struct), so plans and results are unchanged — verified by the
-# before/after formatted-plan diff and the full oracle gate.
+# call at sf0.1 against ~0.5 s of execution (.scratch/rpc_attr.py). pq_train
+# and pq_encode assign codes through the same ``_nearest_code_sql``, so a
+# frozen codebook encodes a new batch exactly as training assigned it.
 
 
 def _sub_slice_sql(qv: str, j: int, dsub: int) -> str:
@@ -71,17 +65,25 @@ def _sq_l2_sql(sub: str, codeword: str) -> str:
 
 
 def _codebook_sql(codebook: list[list[int]]) -> str:
-    """SQL fragment of ``_codebook_literal`` (same single shared 2D array)."""
+    """One foldable 2D array literal for a whole codebook. The lambda-index
+    ``element_at`` of its users cannot constant-fold (the index is the
+    lambda variable), so the plan carries ONE shared literal instead of k
+    separate codeword subtrees — ~16× fewer expression nodes than the
+    per-codeword struct formulation, which cut the fixed plan-compile
+    overhead that dominated pq_encode/adc at bench SF. Arithmetic is
+    unchanged (identical element order, identical sums), so results stay
+    bit-exact."""
     return sql_double_matrix([[float(x) for x in c] for c in codebook])
 
 
 def _nearest_code_sql(sub: str, codebook: list[list[int]]) -> str:
-    """SQL fragment of ``_nearest_code``."""
+    """Argmin codeword id for one subvector (squared-L2, ties → lowest id).
+    ``sub`` must be a materialized column (multi-referenced)."""
     cb = _codebook_sql(codebook)
     dist = _sq_l2_sql(sub, f"element_at({cb}, CAST(i + 1 AS INT))")
     scored = (
         f"transform(sequence(0, {len(codebook) - 1}),"
-        f" i -> named_struct('dist', {dist}, 'cid', CAST(i AS BIGINT)))"
+        f" i -> struct({dist} AS dist, CAST(i AS BIGINT) AS cid))"
     )
     return f"array_sort({scored})[0].cid"
 
@@ -92,40 +94,6 @@ def _adc_tab_sql(j: int, codebook: list[list[int]], dsub: int, qv: str = "qv2") 
     sub = _sub_slice_sql(qv, j, dsub)
     dist = _sq_l2_sql(sub, f"element_at({cb}, CAST(i + 1 AS INT))")
     return f"transform(sequence(0, {len(codebook) - 1}), i -> {dist})"
-
-
-def _codebook_literal(codebook: list[list[int]]) -> Column:
-    """One foldable 2D array literal for a whole codebook. The lambda-index
-    ``element_at`` below cannot constant-fold (the index is the lambda
-    variable), so the plan carries ONE shared literal instead of k separate
-    codeword subtrees — ~16× fewer expression nodes than the per-codeword
-    struct formulation, which cut the fixed plan-compile overhead that
-    dominated pq_encode/adc at bench SF. Arithmetic is unchanged
-    (identical element order, identical sums) so results stay bit-exact.
-    Built via litfast (one py4j call, same folded Literal — r14)."""
-    return lit_double_matrix([[float(x) for x in c] for c in codebook])
-
-
-def _sq_l2(sub: Column, codeword: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(sub, codeword, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
-
-
-def _nearest_code(sub: Column, codebook: list[list[int]]) -> Column:
-    """Argmin codeword id for one subvector (squared-L2, ties → lowest id).
-    ``sub`` must be a materialized column (multi-referenced)."""
-    cb = _codebook_literal(codebook)
-    scored = F.transform(
-        F.sequence(F.lit(0), F.lit(len(codebook) - 1)),
-        lambda i: F.struct(
-            _sq_l2(sub, F.element_at(cb, (i + F.lit(1)).cast("int"))).alias("dist"),
-            i.cast("long").alias("cid"),
-        ),
-    )
-    return F.array_sort(scored)[0]["cid"]
 
 
 def pq_train(
@@ -150,11 +118,9 @@ def pq_train(
     assert dim % m == 0, "dim must divide into equal subspaces"
     dsub = dim // m
 
-    base = df.select(
-        F.col(id_col).alias("vec_id"), quantize_embedding(F.col(vec_col)).alias("qv")
-    )
+    base = df.selectExpr(f"{id_col} AS vec_id", f"{quantize_sql(vec_col)} AS qv")
     seeds = (
-        base.withColumn("_h", stable_hash64(F.col("vec_id").cast("string")))
+        base.selectExpr("*", f"{stable_hash64_sql('CAST(vec_id AS STRING)')} AS _h")
         .orderBy("_h")
         .limit(k)
         .collect()
@@ -167,26 +133,18 @@ def pq_train(
     for _ in range(iters):
         # one map pass assigns every subspace; explode to (sub, cid, dim, val)
         # for the update sums — m*k*dsub groups, a tiny shuffle
-        assigned = base.select(
+        assigned = base.selectExpr(
             "qv",
             *[
-                _nearest_code(_sub_slice(F.col("qv"), j, dsub), codebooks[j]).alias(f"_c{j}")
+                f"{_nearest_code_sql(_sub_slice_sql('qv', j, dsub), codebooks[j])} AS _c{j}"
                 for j in range(m)
             ],
         )
-        stacked = assigned.select(
-            F.posexplode_outer(
-                F.array(
-                    *[
-                        F.struct(
-                            F.col(f"_c{j}").alias("cid"),
-                            _sub_slice(F.col("qv"), j, dsub).alias("sv"),
-                        )
-                        for j in range(m)
-                    ]
-                )
-            ).alias("sub", "a")
+        subs = ", ".join(
+            f"struct(_c{j} AS cid, {_sub_slice_sql('qv', j, dsub)} AS sv)"
+            for j in range(m)
         )
+        stacked = assigned.selectExpr(f"posexplode_outer(array({subs})) AS (sub, a)")
         dims = (
             stacked.select(
                 "sub", F.col("a.cid").alias("cid"), F.posexplode_outer("a.sv").alias("t", "val")
@@ -263,7 +221,7 @@ def pq_search_adc(
     )
     # distance tables as array columns: tab_j[c] = ||q_sub_j - codeword_c||²
     # (one transform over the shared codebook literal per subspace — see
-    # _codebook_literal for why this beats per-codeword expressions)
+    # _codebook_sql for why this beats per-codeword expressions)
     tabs = q.selectExpr(
         "query_id",
         *[f"{_adc_tab_sql(j, codebooks[j], dsub)} AS _tab{j}" for j in range(m)],
@@ -324,7 +282,7 @@ def ivfadc_search(
     the same probe set for any shortlist ≥ k (the rerank can only fix ADC's
     quantization mistakes within the shortlist, pinned in tests/test_pq.py).
     """
-    from tamer_spark.operators.similarity import dot_sql, nearest_centroids_sql
+    from tamer_spark.operators.similarity import dot_sql, nearest_centroids_sql, _top_k_by_cosine
 
     m = len(codebooks)
     dsub = len(codebooks[0][0])
@@ -361,18 +319,4 @@ def ivfadc_search(
         f"({dot_sql('qv2', 'cv')}) / SQRT(({dot_sql('qv2', 'qv2')})"
         f" * ({dot_sql('cv', 'cv')}))"
     )
-    return (
-        short.selectExpr("*", f"{cosine} AS cosine")
-        .selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY cosine DESC, neighbor_id ASC) AS rank",
-        )
-        .filter(f"rank <= {k}")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            "round(cosine, 6) AS cosine",
-            "CAST(rank AS BIGINT) AS rank",
-        )
-    )
+    return _top_k_by_cosine(short.selectExpr("*", f"{cosine} AS cosine"), k)

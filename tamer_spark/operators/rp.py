@@ -5,7 +5,7 @@ public literature).
 Projects ``dim``-vectors to ``out_dim`` by ``p_j = Σ_i s_ji · v_i`` with
 ``s_ji ∈ {+1, −1}`` derived from sha256 parity of ``(seed, j, i)`` — the
 same fixed-at-plan-build sign derivation as the LSH hyperplanes
-(operators/similarity._planes_literal), so there is no RNG state and any
+(operators/similarity.lsh_bucket_sql), so there is no RNG state and any
 engine reproduces the matrix. Inputs are the repo's quantized integer
 coordinates; the projection is therefore a sum of integers — EXACT in
 double for any sane scale (|p_j| < dim · |v|_max ≪ 2^53) — and downstream
@@ -49,13 +49,13 @@ def random_projection(
 ) -> DataFrame:
     """MAP-ONLY projection: ``(id, pvec array<double of integer value>)``.
 
-    One shared 2D sign literal (the pq _codebook_literal argument: the
+    One shared 2D sign literal (the pq _codebook_sql argument: the
     lambda-indexed element_at can't constant-fold, so one array literal
     beats out_dim per-row expression subtrees); per row the work is
     out_dim zip_with dot products over the staged quantized vector.
     Frozen signs → new epochs project without touching history."""
     # one-parse SQL construction (r14): same tree, one selectExpr parse
-    # (see operators/pq.py's twin rationale); the 2D sign literal stays
+    # (see operators/pq.py's fragment note); the 2D sign literal stays
     # shared because the lambda-indexed element_at cannot constant-fold
     from tamer_spark.functions.litfast import sql_double_matrix
     from tamer_spark.operators.similarity import quantize_sql

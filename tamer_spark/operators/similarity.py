@@ -17,11 +17,10 @@ executors the bucket join shuffles (bucket_id) not the cross product.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tamer_spark.functions.hashing import stable_hash64_sql
-from tamer_spark.functions.litfast import lit_double_matrix
 
 QUANT = 1000  # milli-unit quantization
 
@@ -39,40 +38,35 @@ import itertools as _itertools
 _MINER_SEQ = _itertools.count()
 
 
-def quantize_embedding(vec: Column) -> Column:
-    """array<float> → array<double of integer value> (round(x*1000))."""
-    return F.transform(vec, lambda x: F.round(x.cast("double") * QUANT))
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
-# --- one-parse SQL twins (r14) -------------------------------------------
-# The Column builders above cost one py4j round-trip PER OPERATOR, and the
-# ANN/model-state family stacks hundreds of them per plan (ivfadc_search
-# measured 1028 RPCs ≈ 0.7-1.0 s of build per call at sf0.1 vs ~0.6 s of
-# execution). These render the SAME expressions as SQL fragments so a whole
-# output column is ONE F.expr/selectExpr parse; the parsed trees are
-# identical op for op (0.0D = F.lit(0.0), lambda forms parse to the same
-# LambdaFunction nodes), so plans and results cannot differ — verified by
-# the full oracle gate and the pinned plan tests.
+# --- expressions as SQL fragments ------------------------------------------
+# Every vector expression here is ONE SQL fragment: builders paste the
+# fragments into selectExpr/F.expr strings, so a whole output column is one
+# parse instead of one py4j round-trip per Column operator (the r14 rewrite:
+# ivfadc_search measured 1028 RPCs ≈ 0.7-1.0 s of build per call at sf0.1 vs
+# ~0.6 s of execution). Build and incremental paths (ivf_build/ivf_append,
+# cosine_knn_lsh/_multiprobe, pq_train/pq_encode) call the SAME fragment, so
+# an appended batch is keyed bit for bit the way the build keyed the corpus.
 
 def quantize_sql(vec: str) -> str:
-    """SQL fragment of ``quantize_embedding``."""
+    """array<float> → array<double of integer value> (round(x*1000))."""
     return f"transform({vec}, x -> round(CAST(x AS DOUBLE) * {QUANT}))"
 
 
 def dot_sql(a: str, b: str) -> str:
-    """SQL fragment of ``_dot``."""
+    """Dot product of two array<double> columns (0.0D-seeded fold)."""
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
 
 
 def nearest_centroids_sql(qv: str, centroids: list[list[float]], n: int) -> str:
-    """SQL fragment of ``_nearest_centroids``: the centroid table is the
-    same single shared 2D literal, rendered inline inside the lambda (the
-    parsed tree holds it once, exactly where the Column form's shared
-    ``cb`` Column sits)."""
+    """Array of the n nearest centroid ids (squared-L2, deterministic
+    tie-break on centroid id). ``qv`` must be a materialized quantized column
+    (multi-referenced — see lsh_bucket_sql's inlining note).
+
+    The centroid table is ONE shared 2D array literal indexed inside the
+    transform lambda (non-foldable index) — k shared-literal lookups
+    instead of k per-centroid expression subtrees, which shrinks the plan
+    ~k× and cuts fixed compile overhead (see operators/pq.py
+    _codebook_sql); arithmetic and tie-breaks are unchanged."""
     from tamer_spark.functions.litfast import sql_double_matrix
 
     cb = sql_double_matrix([[float(x) for x in c] for c in centroids])
@@ -82,16 +76,17 @@ def nearest_centroids_sql(qv: str, centroids: list[list[float]], n: int) -> str:
     )
     scored = (
         f"transform(sequence(0, {len(centroids) - 1}),"
-        f" i -> named_struct('dist', {dist}, 'cid', CAST(i AS BIGINT)))"
+        f" i -> struct({dist} AS dist, CAST(i AS BIGINT) AS cid))"
     )
     return f"transform(slice(array_sort({scored}), 1, {n}), s -> s.cid)"
 
 
 def _proj_sql(qv: str, row: list[float]) -> str:
-    """SQL fragment of ``_proj_at`` with the plane row pre-folded out of the
-    shared 2D literal — exactly what ConstantFolding does to the Column
-    form's foldable ``element_at(planes, p + 1)``, so the optimized plan is
-    unchanged."""
+    """Signed projection of a quantized vector onto one hyperplane ``row``
+    (a 1D coefficient literal — the plan carries a plain array, not a per-row
+    2D lookup). Integer-valued by construction (±1 coefficients over
+    quantized ints), which is what lets multi-probe's flip order be a
+    deterministic integer sort key."""
     from tamer_spark.functions.litfast import sql_doubles
 
     return (
@@ -101,8 +96,27 @@ def _proj_sql(qv: str, row: list[float]) -> str:
 
 
 def lsh_bucket_sql(qv: str, planes: int = 8, dim: int = 64, seed: int = 42) -> str:
-    """SQL fragment of ``lsh_bucket_from_quantized`` (same unrolled plane
-    loop, same ±1 rows from sign_rows)."""
+    """Random-hyperplane LSH bucket id from an ALREADY-QUANTIZED vector column.
+
+    The hyperplane coefficients are ±1 from sha256 of (seed, plane,
+    dim-index) (functions/hashing.sign_rows, fixed at plan build — no RNG
+    state); the SQL oracle generators mirror the same derivation, so corpus
+    and query vectors always hash into the same bucket space.
+
+    Callers must pass a materialized column (quantize in a prior select):
+    the bucket references the vector ``planes`` times, and Catalyst would
+    re-inline an embedded quantize expression into every plane (measured 2×
+    slower at 50k vectors — the inlining trap, see operators/dedup.py).
+    CollapseProject keeps the projections separate because the quantized
+    column is expensive and multiply-referenced.
+
+    Shape (r5 bisect, .scratch probe at sf0.1): an UNROLLED plane loop, each
+    plane's zip_with over a 1D coefficient literal and 2^p a plain literal.
+    The r4 fold-over-plane-indices form (one outer aggregate with the
+    projection fold nested inside its lambda) cost ~25-30% more per row —
+    nested-HOF interpretation plus a per-row 2D element_at — and was the
+    cause of the r4 dedup_embedding_cosine +44% bench regression.
+    """
     from tamer_spark.functions.hashing import sign_rows
 
     rows = sign_rows("lsh", seed, planes, dim)
@@ -112,6 +126,27 @@ def lsh_bucket_sql(qv: str, planes: int = 8, dim: int = 64, seed: int = 42) -> s
             f"(CASE WHEN {_proj_sql(qv, rows[p])} > 0 THEN {1 << p} ELSE 0 END)"
         )
     return "(" + " + ".join(terms) + ")"
+
+
+def _top_k_by_cosine(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-``k`` rows of (query_id, neighbor_id, cosine) as
+    (query_id, neighbor_id, cosine rounded to 6 places, rank): cosine
+    descending, ties to the smaller neighbor id — the deterministic total
+    order every kNN variant and its oracle share."""
+    return (
+        scored.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id"
+            " ORDER BY cosine DESC, neighbor_id ASC) AS rank",
+        )
+        .filter(f"rank <= {k}")
+        .selectExpr(
+            "query_id",
+            "neighbor_id",
+            "round(cosine, 6) AS cosine",
+            "CAST(rank AS BIGINT) AS rank",
+        )
+    )
 
 
 def cosine_knn(
@@ -151,82 +186,7 @@ def cosine_knn(
             f"({dot_sql('qv', 'cv')}) / SQRT(qn2 * cn2) AS cosine",
         )
     )
-    return (
-        scored.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY cosine DESC, neighbor_id ASC) AS rank",
-        )
-        .filter(f"rank <= {k}")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            "round(cosine, 6) AS cosine",
-            "CAST(rank AS BIGINT) AS rank",
-        )
-    )
-
-
-def _planes_literal(planes: int, dim: int, seed: int) -> Column:
-    """THE single source of the hyperplane coefficients (±1 from sha256 of
-    (seed, plane, dim-index), fixed at plan build — no RNG state) as ONE
-    foldable 2D array literal: both bucket builders index it inside HOF
-    lambdas (non-foldable index → the literal stays shared), and the SQL
-    oracle generators mirror the same derivation, so corpus and query
-    vectors always hash into the same bucket space. One shared literal
-    instead of ``planes`` per-plane coefficient subtrees — same fixed
-    plan-compile win as operators/pq.py _codebook_literal (the LSH gate
-    was ~3 s of flat overhead at any SF before this)."""
-    from tamer_spark.functions.hashing import sign_rows
-
-    rows = sign_rows("lsh", seed, planes, dim)
-    return lit_double_matrix(rows)
-
-
-def _proj_at(qv: Column, pl: Column, p: int) -> Column:
-    """Signed projection of a quantized vector onto plane ``p`` (a Python int
-    — the FOLDABLE element_at index lets ConstantFolding collapse the plane
-    row out of the shared 2D literal, so runtime sees a plain 1D coefficient
-    array, not a per-row 2D lookup). Integer-valued by construction (±1
-    coefficients over quantized ints), which is what lets multi-probe's flip
-    order be a deterministic integer sort key."""
-    return F.aggregate(
-        F.zip_with(qv, F.element_at(pl, p + 1), lambda x, s: x * s),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _pow2(p: Column) -> Column:
-    """Exact 2^p as long for p < 53 (pow over doubles is exact there)."""
-    return F.pow(F.lit(2.0), p.cast("double")).cast("long")
-
-
-def lsh_bucket_from_quantized(qv: Column, planes: int = 8, dim: int = 64, seed: int = 42) -> Column:
-    """Random-hyperplane LSH bucket id from an ALREADY-QUANTIZED vector column.
-
-    Callers must pass a materialized column (quantize in a prior .select):
-    the bucket references the vector ``planes`` times, and Catalyst would
-    re-inline an embedded quantize expression into every plane (measured 2×
-    slower at 50k vectors — the inlining trap, see operators/dedup.py).
-    CollapseProject keeps the projections separate because the quantized
-    column is expensive and multiply-referenced.
-
-    Shape (r5 bisect, .scratch probe at sf0.1): an UNROLLED plane loop over
-    the shared planes literal with foldable element_at indices. The r4
-    fold-over-plane-indices form (one outer F.aggregate with the projection
-    fold nested inside its lambda) cost ~25-30% more per row — nested-HOF
-    interpretation plus a per-row 2D element_at — and was the cause of the
-    r4 dedup_embedding_cosine +44% bench regression. Unrolled, each plane's
-    zip_with sees a constant-folded 1D coefficient literal and 2^p is a
-    plain literal; arithmetic is identical (distinct powers, order-
-    independent sum), so bucket ids are bit-identical across all forms.
-    """
-    pl = _planes_literal(planes, dim, seed)
-    bucket = F.lit(0).cast("long")
-    for p in range(planes):
-        bucket = bucket + F.when(_proj_at(qv, pl, p) > 0, F.lit(1 << p)).otherwise(0)
-    return bucket
+    return _top_k_by_cosine(scored, k)
 
 
 def _cap_bucket_candidates(c: DataFrame, max_bucket: int | None) -> DataFrame:
@@ -258,6 +218,23 @@ def _cap_bucket_candidates(c: DataFrame, max_bucket: int | None) -> DataFrame:
     )
 
 
+def _lsh_corpus(
+    df: DataFrame, id_col: str, vec_col: str, planes: int, dim: int, max_bucket: int | None
+) -> DataFrame:
+    """The corpus side of both LSH kNN variants: (neighbor_id, cv, bucket,
+    cn2), capped per bucket. One copy, so single- and multi-probe search
+    the same buckets."""
+    c = df.selectExpr(
+        f"{id_col} AS neighbor_id", f"{quantize_sql(vec_col)} AS cv"
+    ).selectExpr(
+        "neighbor_id",
+        "cv",
+        f"{lsh_bucket_sql('cv', planes, dim)} AS bucket",
+        f"{dot_sql('cv', 'cv')} AS cn2",
+    )
+    return _cap_bucket_candidates(c, max_bucket)
+
+
 def cosine_knn_lsh(
     df: DataFrame,
     queries: DataFrame,
@@ -282,42 +259,22 @@ def cosine_knn_lsh(
         f"{lsh_bucket_sql('qv', planes, dim)} AS bucket",
         f"{dot_sql('qv', 'qv')} AS qn2",
     )
-    c = df.selectExpr(
-        f"{id_col} AS neighbor_id", f"{quantize_sql(vec_col)} AS cv"
-    ).selectExpr(
-        "neighbor_id",
-        "cv",
-        f"{lsh_bucket_sql('cv', planes, dim)} AS bucket",
-        f"{dot_sql('cv', 'cv')} AS cn2",
-    )
-    c = _cap_bucket_candidates(c, max_bucket)
+    c = _lsh_corpus(df, id_col, vec_col, planes, dim, max_bucket)
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter("query_id != neighbor_id")
         .selectExpr("*", f"({dot_sql('qv', 'cv')}) / SQRT(qn2 * cn2) AS cosine")
     )
-    return (
-        scored.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY cosine DESC, neighbor_id ASC) AS rank",
-        )
-        .filter(f"rank <= {k}")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            "round(cosine, 6) AS cosine",
-            "CAST(rank AS BIGINT) AS rank",
-        )
-    )
+    return _top_k_by_cosine(scored, k)
 
 
-def lsh_probe_buckets(
-    qv: Column, planes: int = 8, dim: int = 64, seed: int = 42, probes: int = 3
-) -> Column:
+def lsh_probe_buckets_sql(
+    qv: str, planes: int = 8, dim: int = 64, seed: int = 42, probes: int = 3
+) -> str:
     """Multi-probe bucket list: the base bucket plus single-bit flips of the
     ``probes - 1`` hyperplanes with the smallest |projection| (the planes the
-    vector is closest to, i.e. the likeliest sign errors).
+    vector is closest to, i.e. the likeliest sign errors). The base bucket
+    is ``lsh_bucket_sql``'s: the same hyperplane rows, the same sign test.
 
     Standard multi-probe LSH (Lv et al., VLDB'07): instead of lowering recall
     by adding tables, probe the neighboring buckets of ONE table. The join
@@ -328,42 +285,41 @@ def lsh_probe_buckets(
     so ``|proj| * planes + plane_index`` is an exact integer sort key —
     identical flip order in Spark and the SQL oracle, ties broken by plane
     index. ``qv`` must be a materialized quantized column (multi-referenced —
-    see lsh_bucket_from_quantized inlining note).
+    see lsh_bucket_sql's inlining note).
     """
-    pl = _planes_literal(planes, dim, seed)
+    from tamer_spark.functions.hashing import sign_rows
+
+    rows = sign_rows("lsh", seed, planes, dim)
     # Evaluate the planes projections ONCE per row: bind the projections
-    # array as a higher-order-function lambda variable (single-element array
-    # + transform = a let binding — Spark has no `let`, but a lambda variable
-    # is bound once), then derive BOTH the base-bucket fold and the flip sort
-    # keys from that bound array. The r4 form computed every projection twice
-    # (base fold + key transform, ~64-element folds each); r5 bisect measured
-    # this let-bound form ~15% faster than even the r3 shape at sf0.1, with
-    # the smallest compiled plan of the three candidates.
-    projs = F.array(*[_proj_at(qv, pl, p) for p in range(planes)])
+    # array as a higher-order-function lambda variable ``pr`` (single-element
+    # array + transform = a let binding — Spark has no `let`, but a lambda
+    # variable is bound once), then derive BOTH the base-bucket fold and the
+    # flip sort keys from that bound array. The r4 form computed every
+    # projection twice (base fold + key transform, ~64-element folds each);
+    # r5 bisect measured this let-bound form ~15% faster than even the r3
+    # shape at sf0.1, with the smallest compiled plan of the three candidates.
+    projs = ", ".join(_proj_sql(qv, rows[p]) for p in range(planes))
+    at = "element_at(pr, CAST(p + 1 AS INT))"
 
-    def _build(pr: Column) -> Column:
-        base = F.aggregate(
-            F.sequence(F.lit(0), F.lit(planes - 1)),
-            F.lit(0).cast("long"),
-            lambda acc, p: acc
-            + F.when(F.element_at(pr, (p + F.lit(1)).cast("int")) > 0, _pow2(p)).otherwise(
-                F.lit(0).cast("long")
-            ),
-        )
-        # exact-int composite sort key per plane: (|proj|, plane)
-        keys = F.transform(
-            F.sequence(F.lit(0), F.lit(planes - 1)),
-            lambda p: (F.abs(F.element_at(pr, (p + F.lit(1)).cast("int"))) * planes + p).cast(
-                "long"
-            ),
-        )
-        flips = F.slice(F.array_sort(keys), 1, probes - 1)
-        # 1 << (k % planes) with a Column shift amount: pow(2, n) is exact
-        # for n < 53, cast back to long for the XOR.
-        flip_buckets = F.transform(flips, lambda k: base.bitwiseXOR(_pow2((k % planes))))
-        return F.concat(F.array(base), flip_buckets)
+    def pow2(e: str) -> str:
+        # exact 2^e as long for e < 53 (pow over doubles is exact there)
+        return f"CAST(POWER(2.0D, CAST({e} AS DOUBLE)) AS BIGINT)"
 
-    return F.element_at(F.transform(F.array(projs), _build), 1)
+    base = (
+        f"aggregate(sequence(0, {planes - 1}), CAST(0 AS BIGINT), (acc, p) -> acc"
+        f" + CASE WHEN {at} > 0 THEN {pow2('p')} ELSE CAST(0 AS BIGINT) END)"
+    )
+    # exact-int composite sort key per plane: (|proj|, plane)
+    keys = (
+        f"transform(sequence(0, {planes - 1}),"
+        f" p -> CAST(abs({at}) * {planes} + p AS BIGINT))"
+    )
+    flips = f"slice(array_sort({keys}), 1, {probes - 1})"
+    flip_buckets = f"transform({flips}, k -> ({base}) ^ {pow2(f'k % {planes}')})"
+    return (
+        f"element_at(transform(array(array({projs})),"
+        f" pr -> concat(array({base}), {flip_buckets})), 1)"
+    )
 
 
 def cosine_knn_lsh_multiprobe(
@@ -385,77 +341,32 @@ def cosine_knn_lsh_multiprobe(
 
     Candidate pairs are deduplicated before ranking (a corpus vector can
     match a query through several probed buckets)."""
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"), quantize_embedding(F.col(vec_col)).alias("qv")
-        )
-        .select(
-            "query_id",
-            "qv",
-            lsh_probe_buckets(F.col("qv"), planes, dim, probes=probes).alias("probe_buckets"),
-            _dot(F.col("qv"), F.col("qv")).alias("qn2"),
-        )
+    q = queries.selectExpr(
+        f"{id_col} AS query_id", f"{quantize_sql(vec_col)} AS qv"
+    ).selectExpr(
+        "query_id",
+        "qv",
+        f"{lsh_probe_buckets_sql('qv', planes, dim, probes=probes)} AS probe_buckets",
+        f"{dot_sql('qv', 'qv')} AS qn2",
+    ).selectExpr(
         # _outer: avoids the inferred size>0 filter re-inlining the probe-
         # bucket expression on pushdown (never empty: probes >= 1)
-        .select("query_id", "qv", "qn2", F.explode_outer("probe_buckets").alias("bucket"))
+        "query_id", "qv", "qn2", "explode_outer(probe_buckets) AS bucket"
     )
-    c = df.select(
-        F.col(id_col).alias("neighbor_id"), quantize_embedding(F.col(vec_col)).alias("cv")
-    ).select(
-        "neighbor_id",
-        "cv",
-        lsh_bucket_from_quantized(F.col("cv"), planes, dim).alias("bucket"),
-        _dot(F.col("cv"), F.col("cv")).alias("cn2"),
-    )
-    c = _cap_bucket_candidates(c, max_bucket)
+    c = _lsh_corpus(df, id_col, vec_col, planes, dim, max_bucket)
     scored = (
         c.join(F.broadcast(q), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .filter("query_id != neighbor_id")
         .select("query_id", "neighbor_id", "qv", "cv", "qn2", "cn2")
         .dropDuplicates(["query_id", "neighbor_id"])
+        .selectExpr("*", f"({dot_sql('qv', 'cv')}) / SQRT(qn2 * cn2) AS cosine")
     )
-    dot = _dot(F.col("qv"), F.col("cv"))
-    scored = scored.withColumn("cosine", dot / F.sqrt(F.col("qn2") * F.col("cn2")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), F.col("rank").cast("long").alias("rank"))
-    )
+    return _top_k_by_cosine(scored, k)
 
 
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN: k-means coarse quantizer + cluster-probed search
 # ---------------------------------------------------------------------------
-
-def _nearest_centroids(qv: Column, centroids: list[list[float]], n: int) -> Column:
-    """Array of the n nearest centroid ids (squared-L2, deterministic
-    tie-break on centroid id). ``qv`` must be a materialized quantized column
-    (multi-referenced — see lsh_bucket_from_quantized inlining note).
-
-    The centroid table is ONE shared 2D array literal indexed inside the
-    transform lambda (non-foldable index) — k shared-literal lookups
-    instead of k per-centroid expression subtrees, which shrinks the plan
-    ~k× and cuts fixed compile overhead (see operators/pq.py
-    _codebook_literal); arithmetic and tie-breaks are unchanged."""
-    cb = lit_double_matrix([[float(x) for x in c] for c in centroids])
-    scored = F.transform(
-        F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
-        lambda i: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    qv,
-                    F.element_at(cb, (i + F.lit(1)).cast("int")),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda a, v: a + v,
-            ).alias("dist"),
-            i.cast("long").alias("cid"),
-        ),
-    )
-    return F.transform(F.slice(F.array_sort(scored), 1, n), lambda s: s["cid"])
-
 
 def ivf_build(
     df: DataFrame,
@@ -481,13 +392,9 @@ def ivf_build(
     bit-reproducible in any engine (the driver's DuckDB oracle replays it
     as three unrolled CTE rounds).
     """
-    from tamer_spark.functions.hashing import stable_hash64
-
-    base = df.select(
-        F.col(id_col).alias("vec_id"), quantize_embedding(F.col(vec_col)).alias("qv")
-    )
+    base = df.selectExpr(f"{id_col} AS vec_id", f"{quantize_sql(vec_col)} AS qv")
     seeds = (
-        base.withColumn("_h", stable_hash64(F.col("vec_id").cast("string")))
+        base.selectExpr("*", f"{stable_hash64_sql('CAST(vec_id AS STRING)')} AS _h")
         .orderBy("_h")
         .limit(n_centroids)
         .collect()
@@ -495,9 +402,7 @@ def ivf_build(
     centroids = [list(r.qv) for r in seeds]
 
     for _ in range(iters):
-        assigned = base.select(
-            "vec_id", "qv", _nearest_centroids(F.col("qv"), centroids, 1)[0].alias("cluster")
-        )
+        assigned = _assign_clusters(base, centroids)
         # element-wise mean per cluster: explode dims, exact integer sums
         dims = assigned.select(
             "cluster", F.posexplode_outer("qv").alias("dim", "val")
@@ -511,10 +416,17 @@ def ivf_build(
         for cid, dvals in by_cluster.items():
             centroids[cid] = [dvals[d] for d in sorted(dvals)]
 
-    assigned = base.select(
-        "vec_id", "qv", _nearest_centroids(F.col("qv"), centroids, 1)[0].alias("cluster")
+    return _assign_clusters(base, centroids), centroids
+
+
+def _assign_clusters(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    """(vec_id, qv) → (vec_id, qv, cluster): THE cluster assignment, shared
+    by every Lloyd round and the final inverted file of ``ivf_build`` and by
+    ``ivf_append``, so an appended batch lands in the cluster the build would
+    have given it."""
+    return base.selectExpr(
+        "vec_id", "qv", f"{nearest_centroids_sql('qv', centroids, 1)}[0] AS cluster"
     )
-    return assigned, centroids
 
 
 def ivf_append(
@@ -541,9 +453,7 @@ def ivf_append(
     base = new_df.selectExpr(
         f"{id_col} AS vec_id", f"{quantize_sql(vec_col)} AS qv"
     )
-    return base.selectExpr(
-        "vec_id", "qv", f"{nearest_centroids_sql('qv', centroids, 1)}[0] AS cluster"
-    )
+    return _assign_clusters(base, centroids)
 
 
 def _salt_shard(assigned: DataFrame, max_cluster: int | None) -> DataFrame:
@@ -745,20 +655,7 @@ def ivf_search(
         .filter("query_id != neighbor_id")
         .selectExpr("*", f"{cosine} AS cosine")
     )
-    return (
-        scored.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY cosine DESC, neighbor_id ASC) AS rank",
-        )
-        .filter(f"rank <= {k}")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            "round(cosine, 6) AS cosine",
-            "CAST(rank AS BIGINT) AS rank",
-        )
-    )
+    return _top_k_by_cosine(scored, k)
 
 
 def hard_negatives(

@@ -30,7 +30,7 @@ rounding.)
 Exactness envelopes (two distinct bounds — do not conflate them):
 
 - encode floor, cross-engine: operands are quantized integers
-  (operators/similarity.quantize_embedding), ``(v-mn)*255`` is exactly
+  (operators/similarity.quantize_sql), ``(v-mn)*255`` is exactly
   representable in double and the IEEE quotient's error is < (a/b)·2⁻⁵²
   while a non-integer quotient sits ≥ 1/span away from the next integer;
   1/span > (a/b)·2⁻⁵² whenever a < 2^52 — so ``floor`` of the double
@@ -66,7 +66,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from tamer_spark.operators.similarity import quantize_embedding
+from tamer_spark.operators.similarity import quantize_sql
 
 __all__ = ["sq_train", "sq_encode", "sq_search", "pack_sq_codes", "unpack_sq_codes"]
 
@@ -88,7 +88,7 @@ def sq_train(
     driver-state contract as IVF centroids and PQ codebooks.
     """
     rows = (
-        df.select(F.posexplode(quantize_embedding(F.col(vec_col))).alias("t", "val"))
+        df.selectExpr(f"posexplode({quantize_sql(vec_col)}) AS (t, val)")
         .groupBy("t")
         .agg(
             F.min("val").cast("long").alias("mn"),
@@ -115,10 +115,8 @@ def sq_encode(
     clamping is provably a no-op when ``bounds`` came from this corpus.
     Degenerate dimensions (span 0) encode as 0 and reconstruct exactly.
     """
-    # one-parse SQL construction (r14): the same fragments the Column form
-    # built, one selectExpr parse — see operators/pq.py's twin rationale
+    # one-parse SQL construction (r14) — see operators/pq.py's fragment note
     from tamer_spark.functions.litfast import sql_doubles
-    from tamer_spark.operators.similarity import quantize_sql
 
     mins = sql_doubles(float(mn) for mn, _ in bounds)
     spans = sql_doubles(float(mx - mn) for mn, mx in bounds)
@@ -154,7 +152,6 @@ def sq_search(
     PQ (probe lists, SQ-reconstruct within them).
     """
     from tamer_spark.functions.litfast import sql_doubles, sql_longs
-    from tamer_spark.operators.similarity import quantize_sql
 
     spans = sql_doubles(float(mx - mn) for mn, mx in bounds)
     mins_scaled = sql_longs(int(mn) * levels for mn, _ in bounds)

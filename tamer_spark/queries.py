@@ -1352,7 +1352,7 @@ _URL_DERIVE_SQL = """
 
 def _url_canon_sql() -> str:
     """The oracle's canonicalization chain, generated from the SAME pinned
-    constants functions/text.canonicalize_url_col compiles to Catalyst —
+    constants functions/text.canonicalize_url_sql renders for Spark —
     the two engines cannot silently diverge."""
     import tamer_spark.functions.text as T
 
@@ -3000,7 +3000,7 @@ def _ivf_search_oracle(
 ) -> str:
     """DuckDB replay of ivf_search (operators/similarity.py): probe each
     query's ``nprobe`` nearest trained centroids (squared-L2, (dist, cid)
-    tie-break — the same total order as _nearest_centroids), then exact
+    tie-break — the same total order as nearest_centroids_sql), then exact
     quantized-cosine rerank of the probed clusters' members. Rounding and
     rank tie-breaks mirror the LSH kNN oracles above (proven hash-stable)."""
     return _ivf_cte_prefix(n_centroids, iters) + f""",
@@ -3118,7 +3118,7 @@ def contrastive_pairs_q(spark, sf):
 
 def _lsh_bucket_sql(v: str, planes: int = 8, dim: int = 64, seed: int = 42) -> str:
     """The oracle-side LSH bucket id — the same sha256-derived ±1
-    hyperplanes operators/similarity._planes_literal compiles into the
+    hyperplanes operators/similarity.lsh_bucket_sql renders into the
     Spark plan; shared by every gate that buckets embeddings."""
     from tamer_spark.functions.hashing import sign_rows
 
@@ -4278,16 +4278,15 @@ def _embedding_neardup_oracle(planes: int = 8, dim: int = 64, seed: int = 42) ->
     doc="Embedding-cosine near-dup pairs (threshold 0.3 — calibrated to the synthetic random embeddings; production would use ~0.9) within LSH buckets — semantic dedup at corpus scale without the O(n²) cross join — unioned (tagged) with the per-vector L2-norm/dim profile pass (quantized F.aggregate/zip_with dot product, map-only).",
 )
 def dedup_embedding_cosine(spark, sf):
-    from tamer_spark.operators.similarity import quantize_embedding
+    from tamer_spark.operators.similarity import dot_sql, quantize_sql
 
     emb = _t(spark, sf, "embeddings")
-    qv = quantize_embedding(F.col("embedding"))
-    dot = F.aggregate(F.zip_with(qv, qv, lambda x, y: x * y), F.lit(0.0), lambda a, v: a + v)
-    norms = emb.select(
-        F.lit("norm").alias("variant"),
-        F.col("vec_id").alias("k1"),
-        F.size("embedding").cast("long").alias("k2"),
-        F.round(F.sqrt(dot), 6).alias("v"),
+    qv = quantize_sql("embedding")
+    norms = emb.selectExpr(
+        "'norm' AS variant",
+        "vec_id AS k1",
+        "CAST(size(embedding) AS BIGINT) AS k2",
+        f"round(sqrt({dot_sql(qv, qv)}), 6) AS v",
     )
     pairs = _embedding_neardup_pairs(spark, sf).select(
         F.lit("neardup").alias("variant"),

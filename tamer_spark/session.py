@@ -35,12 +35,13 @@ _DEFAULTS: dict[str, str] = {
     # 128 MB parquet split — default, stated explicitly because it's the
     # knob that controls task count on a 100 TB scan (~800k tasks).
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    # The one-parse SQL fragments (functions/text.py _rxlit, operators'
-    # selectExpr regex twins) encode backslashes assuming the default
+    # The one-parse SQL fragments (functions/text.sql_string and the
+    # operators' selectExpr regexes) encode backslashes assuming the default
     # escaped-literal parsing; getOrCreate can adopt a pre-existing foreign
     # session, so pin the conf instead of assuming it (r15, ADVICE r14):
     # under escapedStringLiterals=true every fragment regex would silently
-    # parse with doubled backslashes and diverge from the Column twins.
+    # parse with doubled backslashes and diverge from the pure-Python
+    # references and the DuckDB oracles.
     "spark.sql.parser.escapedStringLiterals": "false",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

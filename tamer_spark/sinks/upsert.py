@@ -14,11 +14,12 @@ same keys with the same rows — convergent by construction.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tamer_spark.sinks.base import _hadoop_fs
 
 
 @dataclass
@@ -41,7 +42,11 @@ class ParquetUpsertSink:
         touched = [r._bucket for r in updates.select("_bucket").distinct().collect()]
         if not touched:
             return
-        if os.path.exists(self.path):
+        fs, root = _hadoop_fs(spark, self.path)
+        # through Hadoop, not os.path: a file:/s3a:/hdfs: URI is never an
+        # existing local path, and treating the table as absent would
+        # overwrite each touched bucket with the batch alone
+        if fs.exists(root):
             existing_touched = spark.read.parquet(self.path).filter(
                 F.col("_bucket").isin(touched)
             )

@@ -19,14 +19,13 @@ from itertools import combinations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from tamer_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_signatures,
 )
-from tamer_spark.operators.similarity import quantize_embedding, semdedup
+from tamer_spark.operators.similarity import quantize_sql, semdedup
 from tests.conftest import SF_DIR
 
 COSINE_T = 0.3
@@ -75,7 +74,7 @@ def test_simhash_radius_tradeoff(spark, truth):
 def test_semdedup_pair_coverage_floor_and_cluster_trade(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     qv = sorted(
-        emb.select("vec_id", quantize_embedding(F.col("embedding")).alias("qv")).collect(),
+        emb.selectExpr("vec_id", f"{quantize_sql('embedding')} AS qv").collect(),
         key=lambda r: r.vec_id,
     )
     M = np.array([r.qv for r in qv], dtype=np.float64)

@@ -65,17 +65,6 @@ def test_cohort_offset_zero_equals_cohort_size(spark):
     assert out == {(w0, 0): 2, (w0, 1): 1, (w1, 0): 1, (w1, 1): 1}
 
 
-def test_funnel_persist_path_identical_results(spark):
-    rows = [
-        (1, T(1), "view"), (1, T(2), "click"), (1, T(3), "purchase"),
-        (2, T(1), "view"), (2, T(2), "click"),
-    ]
-    stages = ["view", "click", "purchase"]
-    plain = {(r.stage_idx, r.stage, r.users) for r in funnel_counts(_ev(spark, rows), stages).collect()}
-    cached = {(r.stage_idx, r.stage, r.users) for r in funnel_counts(_ev(spark, rows), stages, persist=True).collect()}
-    assert plain == cached
-
-
 def test_funnel_stage_names_with_quotes_are_escaped(spark):
     # caller-supplied stage names reach a selectExpr stack() string — a
     # quote must neither break the query nor inject SQL

@@ -30,7 +30,7 @@ def test_negatives_have_different_label_and_exclude_self(spark):
 
 def test_hardest_negative_ranks_first(spark):
     # near/far chosen to share base's LSH bucket (217 for this seed/dim —
-    # verified against lsh_bucket_from_quantized) so both are candidates
+    # verified against lsh_bucket_sql) so both are candidates
     base = [1.0] + [0.0] * 7
     near = [1.0, 0.1] + [0.0] * 6   # cosine ~0.995 with base
     far = [1.0, 0.5] + [0.0] * 6    # cosine ~0.894 with base

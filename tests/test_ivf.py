@@ -87,6 +87,56 @@ def test_ivf_append_matches_full_assignment_and_search(spark):
     assert not shape.count("Exchange", "BroadcastExchange"), shape
 
 
+def test_ivf_build_inverted_file_equals_ivf_append(spark):
+    """The build's inverted file is exactly what appending the same vectors
+    to its centroids produces: an epoch appended later is keyed bit for bit
+    the way the build keyed the corpus."""
+    from tamer_spark.operators.similarity import ivf_append
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    assigned, centroids = ivf_build(emb, n_centroids=4, iters=2)
+    got = sorted((r.vec_id, list(r.qv), r.cluster) for r in assigned.collect())
+    want = sorted(
+        (r.vec_id, list(r.qv), r.cluster) for r in ivf_append(emb, centroids).collect()
+    )
+    assert got == want and len({c for _, _, c in got}) > 1
+
+
+def test_multiprobe_first_probe_is_single_probe_bucket(spark):
+    """Multi-probe's base bucket (probe 0) is cosine_knn_lsh's bucket for
+    every vector — the fixture's plus seeded random integer vectors, which
+    include exact zeros (projection 0 is not > 0 in either form)."""
+    import random
+
+    from tamer_spark.operators.similarity import (
+        lsh_bucket_sql,
+        lsh_probe_buckets_sql,
+        quantize_sql,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").selectExpr(
+        "vec_id", f"{quantize_sql('embedding')} AS qv"
+    )
+    rng = random.Random(7)
+    rand = spark.createDataFrame(
+        [(10_000 + i, [float(rng.randint(-3, 3)) for _ in range(64)]) for i in range(2000)],
+        "vec_id long, qv array<double>",
+    )
+    for planes, probes in ((8, 3), (6, 4)):
+        rows = (
+            emb.unionByName(rand)
+            .selectExpr(
+                "vec_id",
+                f"{lsh_bucket_sql('qv', planes, 64)} AS bucket",
+                f"{lsh_probe_buckets_sql('qv', planes, 64, probes=probes)} AS probes",
+            )
+            .collect()
+        )
+        assert len(rows) == 2500
+        assert all(r.probes[0] == r.bucket for r in rows)
+        assert all(len(set(r.probes)) == probes for r in rows)
+
+
 def test_ivf_search_over_bucketed_inverted_file(spark, tmp_path):
     """The 100 TB storage layout SCALING.md documents: the inverted file
     persisted bucketed by cluster (sinks/bucketed), searched via
@@ -120,7 +170,7 @@ def test_semdedup_keep_min_and_no_close_survivors(spark):
     survives (keep-min-id rule), (2) no survivor has a LOWER-id member of
     its cluster at cosine >= threshold (else it should have been dropped),
     (3) survivors are a subset of the corpus partitioned by cluster."""
-    from tamer_spark.operators.similarity import _dot, ivf_build, semdedup
+    from tamer_spark.operators.similarity import ivf_build, semdedup
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     th = 0.2  # loose threshold so the synthetic fixture actually drops rows

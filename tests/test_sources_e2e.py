@@ -341,9 +341,10 @@ def test_jdbc_drain_into_write_ahead_sink_runs_each_window_once(spark, tmp_path)
 
 
 def test_jdbc_run_with_empty_windows_leaves_no_cached_batch(spark, tmp_path):
-    """Non-empty batches are unpinned by the engine after the write, empty
-    ones by the source itself: a drain that crosses empty windows adds no
-    persisted RDD (pre-run snapshot — the session is shared)."""
+    """The source hands every batch, empty ones too, to the engine, and
+    the engine unpins each after its write: a drain that crosses empty
+    windows adds no persisted RDD (pre-run snapshot — the session is
+    shared)."""
     before = persisted_rdd_ids(spark)
     src, rows = _users_jdbc_source(spark, tmp_path, _BURSTS, timedelta(days=2))
     observed = []

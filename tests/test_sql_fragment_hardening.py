@@ -1,13 +1,19 @@
 """Hardening guards for the one-parse SQL fragment construction (r15,
 ADVICE r14): interpolated identifiers must be plain names, the bloom
 probe's working columns must not collide with caller columns, the minhash
-shingle weights must stay inside BIGINT, and the session pins the parser
-conf the fragments assume.
+shingle weights must stay inside BIGINT, the session pins the parser
+conf the fragments assume, each expression under functions/ and operators/
+has one copy (the SQL fragment) except the two Column/fragment pairs kept
+for callers that pass computed Columns, and those two pairs agree.
 """
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
+from pyspark.sql import functions as F
 
 from tamer_spark.functions.ident import safe_ident
 
@@ -67,7 +73,63 @@ def test_bloom_might_contain_rejects_working_column_clash(spark):
 
 
 def test_session_pins_escaped_string_literals(spark):
-    # the SQL-fragment twins encode backslashes assuming the default
+    # the SQL fragments encode backslashes assuming the default
     # parser mode; the session must pin it so a foreign getOrCreate
     # session cannot silently flip fragment regex semantics
     assert spark.conf.get("spark.sql.parser.escapedStringLiterals") == "false"
+
+
+# Column/fragment pairs that stay: callers hash or normalize computed
+# Columns, and bench.py calls normalize_text(Column).
+_KEPT_PAIRS = {"stable_hash64", "normalize_text"}
+
+
+def _twin_pairs() -> set[str]:
+    """Stems X with both a Column builder (X, _X, X_col or _X_col) and a
+    SQL fragment (X_sql or _X_sql) defined at the top level of one module
+    under functions/ or operators/."""
+    pkg = Path(__file__).resolve().parent.parent / "tamer_spark"
+    pairs = set()
+    for mod in sorted([*pkg.glob("functions/*.py"), *pkg.glob("operators/*.py")]):
+        names = {
+            n.name.lstrip("_")
+            for n in ast.parse(mod.read_text()).body
+            if isinstance(n, ast.FunctionDef)
+        }
+        for name in names:
+            if name.endswith("_sql"):
+                stem = name[: -len("_sql")]
+                if stem in names or f"{stem}_col" in names:
+                    pairs.add(stem)
+    return pairs
+
+
+def test_each_expression_has_one_copy():
+    assert _twin_pairs() == _KEPT_PAIRS
+
+
+_EDGE_TEXTS = [
+    None, "", " ", "\t", "\n", "a\tb\nc", "  Mixed   CASE\r\n text ",
+    "İSTANBUL Straße", "naïve café", "日本語 テキスト", "emoji 🙂  ok", "nb\u00a0sp",
+]
+
+
+def _assert_pair_agrees(spark, column_form, sql_form):
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(_EDGE_TEXTS)], "i int, t string")
+    col = df.select("i", column_form(F.col("t")).alias("v"))
+    sql = df.selectExpr("i", f"{sql_form('t')} AS v")
+    assert sorted(map(tuple, col.collect())) == sorted(map(tuple, sql.collect()))
+    qc, qs = col._jdf.queryExecution(), sql._jdf.queryExecution()
+    assert qc.analyzed().sameResult(qs.analyzed())
+
+
+def test_stable_hash64_column_and_fragment_agree(spark):
+    from tamer_spark.functions.hashing import stable_hash64, stable_hash64_sql
+
+    _assert_pair_agrees(spark, stable_hash64, stable_hash64_sql)
+
+
+def test_normalize_text_column_and_fragment_agree(spark):
+    from tamer_spark.operators.dedup import normalize_text, normalize_text_sql
+
+    _assert_pair_agrees(spark, normalize_text, normalize_text_sql)

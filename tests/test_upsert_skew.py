@@ -18,6 +18,16 @@ def test_upsert_inserts_then_updates(spark, tmp_path):
     assert {(r.id, r.v) for r in sink.read(spark).collect()} == {(1, "a"), (2, "B"), (3, "c")}
 
 
+def test_upsert_on_uri_path_merges_with_existing_rows(spark, tmp_path):
+    """A ``file:`` URI is never an existing local path; the sink must still
+    see the table and merge, not overwrite the touched bucket with the
+    batch alone (one bucket, so both keys share it)."""
+    sink = ParquetUpsertSink((tmp_path / "t").as_uri(), ["id"], num_buckets=1)
+    sink.upsert(spark, spark.createDataFrame([(1, "a")], "id long, v string"))
+    sink.upsert(spark, spark.createDataFrame([(2, "b")], "id long, v string"))
+    assert {(r.id, r.v) for r in sink.read(spark).collect()} == {(1, "a"), (2, "b")}
+
+
 def test_upsert_replay_is_idempotent(spark, tmp_path):
     sink = ParquetUpsertSink(str(tmp_path / "t"), ["id"], num_buckets=4)
     batch = spark.createDataFrame([(i, f"v{i}") for i in range(20)], "id long, v string")

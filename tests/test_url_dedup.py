@@ -1,4 +1,4 @@
-"""URL canonicalization (functions/text.canonicalize_url_col) and URL-level
+"""URL canonicalization (functions/text.canonicalize_url_sql) and URL-level
 dedup (operators/dedup.url_dedup_counts) — the CCNet/RefinedWeb first-stage
 dedup key. Handcrafted behavior pins for every canonicalization step, a
 three-way differential (Spark = pure-Python reference; the DuckDB leg runs
@@ -11,12 +11,12 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from tamer_spark.functions.text import canonicalize_url_col, canonicalize_url_py
+from tamer_spark.functions.text import canonicalize_url_py, canonicalize_url_sql
 
 
 def _canon(spark, urls: list[str]) -> list[str]:
     df = spark.createDataFrame([(u,) for u in urls], "u string")
-    return [r.c for r in df.select(canonicalize_url_col(F.col("u")).alias("c")).collect()]
+    return [r.c for r in df.select(F.expr(canonicalize_url_sql("u")).alias("c")).collect()]
 
 
 def test_scheme_www_port_fragment_stripped(spark):
@@ -100,7 +100,7 @@ def test_differential_spark_matches_python_reference(spark):
         spark.range(480)
         .withColumnRenamed("id", "doc_id")
         .select("doc_id", _derived_url_col().alias("url"))
-        .select("doc_id", "url", canonicalize_url_col(F.col("url")).alias("c"))
+        .select("doc_id", "url", F.expr(canonicalize_url_sql("url")).alias("c"))
     )
     rows = df.collect()
     assert len(rows) == 480
@@ -210,7 +210,7 @@ def test_url_incremental_epoch_loop_matches_batch(spark):
     survivors: list[int] = []
     for lo, hi in bounds:
         batch = full.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).select(
-            "doc_id", "url", canonicalize_url_col(F.col("url")).alias("curl")
+            "doc_id", "url", F.expr(canonicalize_url_sql("url")).alias("curl")
         )
         s = dedup_exact_incremental(batch, idx, text_col="curl")
         survivors.extend(r.doc_id for r in s.collect())
@@ -249,7 +249,7 @@ def test_url_incremental_null_urls_bypass_fold(spark):
         nulls = batch.filter(F.col("url").isNull())
         survivors.extend(r.doc_id for r in nulls.collect())  # always kept
         withkey = batch.filter(F.col("url").isNotNull()).select(
-            "doc_id", canonicalize_url_col(F.col("url")).alias("curl")
+            "doc_id", F.expr(canonicalize_url_sql("url")).alias("curl")
         )
         s = dedup_exact_incremental(withkey, idx, text_col="curl")
         survivors.extend(r.doc_id for r in s.collect())
