@@ -715,12 +715,23 @@ def minhash_lsh_pairs_with_cache(
     clustering) can hold the signature cache alive until ITS final result is
     dropped — wire it with ``_release_on_gc(final_result, cached_signatures)``.
     """
-    assert k % bands == 0, "k must divide into equal bands"
-    r = k // bands
     # the signature table is referenced by the bucket-size filter AND both
     # self-join sides; cache it so the (expensive) signature stage computes
     # once per execution instead of 3-4× (2.6× cold speedup at sf0.1)
     sigs = minhash_signatures(df, text_col, id_col, k, n, seed).persist()
+    return lsh_bucket_pairs(lsh_bands(sigs, k, bands), max_bucket), sigs
+
+
+def lsh_bands(sigs: DataFrame, k: int, bands: int) -> DataFrame:
+    """(doc_id, band_id, band_sig) for every doc × band of a
+    ``minhash_signatures`` frame — THE banding expression: ``bands`` bands
+    of k/bands rows, each a '-'-joined string signature. The pair finder,
+    the incremental index build and both incremental probes call it, so
+    their band keys are bit-identical (the no-false-negative guarantee of
+    the index probes depends on it). Map-only."""
+    if k % bands:
+        raise ValueError("k must divide into equal bands")
+    r = k // bands
     # _outer: plain posexplode infers a size>0 filter whose pushdown
     # re-inlines the band transform (Catalyst trap, see queries.py
     # minhash_signatures_q); band arrays are always length `bands`
@@ -729,9 +740,16 @@ def minhash_lsh_pairs_with_cache(
         f"concat_ws('-', transform(slice(signature, b * {r} + 1, {r}), "
         f"x -> CAST(x AS STRING))))"
     )
-    banded = sigs.selectExpr(
+    return sigs.selectExpr(
         "doc_id", f"posexplode_outer({band_arr}) AS (band_id, band_sig)"
     )
+
+
+def lsh_bucket_pairs(banded: DataFrame, max_bucket: int | None) -> DataFrame:
+    """(doc_a < doc_b, matching_bands) for every pair of docs sharing a
+    band bucket of ``banded`` (``lsh_bands`` rows) — the one capped bucket
+    self-join. Buckets of more than ``max_bucket`` docs are dropped first
+    (None = uncapped)."""
     if max_bucket is not None:
         # None = uncapped (the similarity-module convention). Guarded
         # explicitly: `count <= NULL` is NULL, so an unguarded filter would
@@ -754,7 +772,7 @@ def minhash_lsh_pairs_with_cache(
         )
     a = banded.alias("a")
     b = banded.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             F.expr(
@@ -765,7 +783,6 @@ def minhash_lsh_pairs_with_cache(
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.expr("count(1) AS matching_bands"))
     )
-    return pairs, sigs
 
 
 def shingle_pair_stats(

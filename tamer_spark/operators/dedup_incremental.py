@@ -35,6 +35,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tamer_spark.operators.dedup import (
+    _release_on_gc,
+    lsh_bands,
+    lsh_bucket_pairs,
     minhash_signatures,
     normalize_text,
 )
@@ -103,33 +106,11 @@ def dedup_exact_incremental(
 def _banded_sigs(
     df: DataFrame, text_col: str, id_col: str, k: int, bands: int, n: int, seed: int
 ) -> DataFrame:
-    """(doc_id, band_id, band_sig) for every doc × band — THE banding
-    expression, in exactly one place: the index build, the exact
-    incremental probe, and the bloom-sidecar probe must produce
-    bit-identical band keys or the no-false-negative guarantee silently
-    breaks, so they all call this instead of carrying copies (same
-    banding as minhash_lsh_pairs: k minhashes, ``bands`` bands of k/bands
-    rows, '-'-joined string signature). Map-only (row-local staged
-    arrays, see minhash_signatures)."""
-    if k % bands:
-        raise ValueError("k must divide into equal bands")
-    r = k // bands
-    sigs = minhash_signatures(df, text_col, id_col, k, n, seed)
-    return sigs.select(
-        "doc_id",
-        F.posexplode_outer(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.concat_ws(
-                    "-",
-                    F.transform(
-                        F.slice(F.col("signature"), b * r + 1, r),
-                        lambda x: x.cast("string"),
-                    ),
-                ),
-            )
-        ).alias("band_id", "band_sig"),
-    )
+    """(doc_id, band_id, band_sig) for every doc × band: the signatures of
+    ``df`` through ``lsh_bands``, the banding ``minhash_lsh_pairs`` runs —
+    the index build and both incremental probes must produce bit-identical
+    band keys or the no-false-negative guarantee silently breaks."""
+    return lsh_bands(minhash_signatures(df, text_col, id_col, k, n, seed), k, bands)
 
 
 def minhash_band_index(
@@ -460,24 +441,6 @@ def minhash_epoch_pairs(
         )
         .distinct()
     )
-    wb = banded
-    if max_bucket is not None:
-        # the same hot-bucket guard (and the same None-=-uncapped contract)
-        # as minhash_lsh_pairs, applied to the shared banded frame
-        sizes = wb.groupBy("band_id", "band_sig").count()
-        small = sizes.filter(F.col("count") <= max_bucket).drop("count")
-        wb = wb.join(small, ["band_id", "band_sig"])
-    a, b = wb.alias("a"), wb.alias("b")
-    within = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    from tamer_spark.operators.dedup import _release_on_gc
-
+    # within-batch: the pair finder's own capped bucket self-join
+    within = lsh_bucket_pairs(banded, max_bucket).select("doc_a", "doc_b")
     return _release_on_gc(cross.unionByName(within).distinct(), banded)

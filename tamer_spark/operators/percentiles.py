@@ -48,11 +48,7 @@ def exact_percentiles(
     would let a NULL occupy rank 1 and a low percentile silently return
     NULL (caught by winsorize's NULL-group fixture, r12).
     """
-    if not ps:
-        raise ValueError("ps must be non-empty")
-    for num, den in ps:
-        if not 0 < num <= den:
-            raise ValueError(f"percentile {num}/{den} outside (0, 1]")
+    _check_ps(ps)
     wrank = Window.partitionBy(*keys).orderBy(value_col)
     wall = Window.partitionBy(*keys)
     ranked = (
@@ -361,9 +357,7 @@ def grouped_percentile_bucketed(
                 f"group {tuple(r[k] for k in key_list)} value range too wide for int64 bucketing"
             )
     if not stats:
-        return spark.createDataFrame(
-            [], f"{out_schema_keys}, p string, value long, rank long, n long"
-        )
+        return empty_frame(spark, f"{out_schema_keys}, p string, value long, rank long, n long")
     # per-group grid (lo, width): the collected stats are model-parameter-
     # sized (≤ max_groups rows), so in the common shape — ONE key column,
     # no NULL group key, a plan-literal-sized group count — the grid is

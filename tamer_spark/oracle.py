@@ -137,22 +137,3 @@ def compare(name: str, spark_df, oracle_pdf: pd.DataFrame) -> CompareResult:
     if sorted(spdf.columns) != sorted(oracle_pdf.columns):
         diff = f"columns differ: spark={sorted(spdf.columns)} oracle={sorted(oracle_pdf.columns)}; " + diff
     return CompareResult(name, len(a), len(b), False, diff)
-
-
-def run_gate(spark, sf_dir: str, names: list[str] | None = None) -> list[CompareResult]:
-    from tamer_spark.queries import REGISTRY
-
-    con = duckdb_con(sf_dir)
-    out = []
-    for name, query in REGISTRY.items():
-        if names and name not in names:
-            continue
-        if query.oracle is None:
-            continue
-        try:
-            sdf = query.spark(spark, sf_dir)
-            opdf = con.execute(query.oracle).df()
-            out.append(compare(name, sdf, opdf))
-        except Exception as e:  # noqa: BLE001 — mirror the driver: record, keep going
-            out.append(CompareResult(name, -1, -1, False, f"{type(e).__name__}: {e}"[:300]))
-    return out

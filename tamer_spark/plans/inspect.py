@@ -21,13 +21,16 @@ plan carries (WholeStageCodegen, InputAdapter, ColumnarToRow,
 AQEShuffleRead) are walked through, not counted, so an operator's counts
 change across execution only where AQE really re-planned it.
 
-Pins on text that is not a node name (PushedFilters, ReadSchema, join
-types, aggregate function names) stay on ``explain_str``.
+The same walk reads the file scans: ``read_schema_columns`` takes each
+scan's required schema and ``pushed_filters`` its pushed source filters,
+one entry per filter — the objects the explain text prints, not that
+text split on commas (which cut struct types and multi-argument filters
+apart). Pins on text that is neither (join types, aggregate function
+names) stay on ``explain_str``.
 """
 
 from __future__ import annotations
 
-import re
 from collections import Counter
 from dataclasses import dataclass
 
@@ -75,9 +78,9 @@ def _seq(jseq) -> list:
 _WRAPPERS = {"WholeStageCodegenExec", "InputAdapter", "ColumnarToRowExec", "AQEShuffleReadExec"}
 
 
-def plan_shape(df: DataFrame) -> PlanShape:
-    nodes: Counter = Counter()
-    exchanges: list[str] = []
+def _nodes(df: DataFrame):
+    """Every operator of the plan ``df`` currently holds, execution wrappers
+    walked through (see the module docstring for the walk)."""
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
         plan = stack.pop()
@@ -89,33 +92,44 @@ def plan_shape(df: DataFrame) -> PlanShape:
             stack.append(plan.plan())
             continue
         if cls not in _WRAPPERS:
-            nodes[plan.nodeName().strip()] += 1
+            yield plan
         if cls == "ReusedExchangeExec":
             continue
-        if cls == "ShuffleExchangeExec":
-            exchanges.append(plan.outputPartitioning().toString())
-        elif cls == "InMemoryTableScanExec":
+        if cls == "InMemoryTableScanExec":
             stack.append(plan.relation().cachedPlan())
         stack.extend(_seq(plan.subqueries()))
         stack.extend(_seq(plan.children()))
+
+
+def plan_shape(df: DataFrame) -> PlanShape:
+    nodes: Counter = Counter()
+    exchanges: list[str] = []
+    for plan in _nodes(df):
+        nodes[plan.nodeName().strip()] += 1
+        if plan.getClass().getSimpleName() == "ShuffleExchangeExec":
+            exchanges.append(plan.outputPartitioning().toString())
     return PlanShape(nodes, tuple(exchanges))
 
 
+def _file_scans(df: DataFrame) -> list:
+    """Each file scan once, by JVM identity: a cached plan referenced from
+    several places is walked from each, but it runs (and scans) once."""
+    identity = df._sc._jvm.System.identityHashCode
+    scans = {}
+    for plan in _nodes(df):
+        if plan.getClass().getSimpleName() == "FileSourceScanExec":
+            scans.setdefault(identity(plan), plan)
+    return list(scans.values())
+
+
 def pushed_filters(df: DataFrame) -> list[str]:
-    """PushedFilters entries from every parquet scan in the plan."""
-    out: list[str] = []
-    for m in re.finditer(r"PushedFilters: \[(.*?)\]", explain_str(df)):
-        entry = m.group(1).strip()
-        if entry:
-            out.extend(p.strip() for p in entry.split(","))
-    return out
+    """PushedFilters entries from every file scan in the plan, one per
+    pushed source filter (e.g. ``GreaterThan(z,3)``, ``In(id, [1,2,3])``)."""
+    return [f.toString() for scan in _file_scans(df) for f in _seq(scan.pushedDownFilters())]
 
 
 def read_schema_columns(df: DataFrame) -> list[set[str]]:
-    """Column sets actually read by each scan (ReadSchema) — column-pruning
-    evidence: a 2-column projection must not scan 16 columns."""
-    out = []
-    for m in re.finditer(r"ReadSchema: struct<(.*?)>", explain_str(df)):
-        cols = {c.split(":")[0].strip() for c in m.group(1).split(",") if c.strip()}
-        out.append(cols)
-    return out
+    """Top-level columns actually read by each file scan (its required
+    schema, the plan's ReadSchema) — column-pruning evidence: a 2-column
+    projection must not scan 16 columns."""
+    return [set(scan.requiredSchema().fieldNames()) for scan in _file_scans(df)]

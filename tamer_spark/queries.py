@@ -38,6 +38,7 @@ from tamer_spark.functions.text import (
     _mojibake,
     doc_fingerprint_col,
     lang_id_col,
+    sql_string,
     text_stats_cols,
     token_count_col,
 )
@@ -3419,15 +3420,11 @@ def _structured_col(table, head: str = "", tail: str = ""):
     """The ``text`` column through ``table`` — ONE F.expr parse for the
     whole nested replace chain (cheaper to build than a Column-API chain of
     per-replace literals)."""
-
-    def lit(v: str) -> str:
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
     out = "text"
     for search, repl in table:
-        out = f"replace({out}, {lit(search)}, {lit(repl)})"
+        out = f"replace({out}, {sql_string(search)}, {sql_string(repl)})"
     if head or tail:
-        out = f"concat({lit(head)}, {out}, {lit(tail)})"
+        out = f"concat({sql_string(head)}, {out}, {sql_string(tail)})"
     return F.expr(out)
 
 

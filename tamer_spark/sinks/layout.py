@@ -23,15 +23,6 @@ from pyspark.sql import functions as F
 from tamer_spark.sinks.base import _hadoop_fs
 
 
-def estimate_size_bytes(spark: SparkSession, path: str) -> int:
-    """Recursive byte size of ``path`` via the Hadoop FileSystem content
-    summary — one metadata call, works unchanged on local/HDFS/S3A (the
-    r14 unification: no local-only ``os.walk`` path survives in this
-    module, so a helper can't silently mis-measure an object store)."""
-    fs, hpath = _hadoop_fs(spark, path)
-    return int(fs.getContentSummary(hpath).getLength())
-
-
 def plan_size_mb(df: DataFrame) -> float | None:
     """Sum of the plan's LEAF scan sizes (MB) — ZERO extra actions.
 

@@ -20,7 +20,8 @@ Design constraints (and how each is met):
   validate any shard in isolation, and two exports of the same data
   produce byte-identical manifests.
 - **Scale shape**: ONE shuffle (repartition on the shard id) + in-partition
-  sort + parquet write; the manifest aggregate is |shards| rows. No driver
+  sort + parquet write; the uniqueness gate and the manifest then read the
+  written files back (the manifest aggregate is |shards| rows). No driver
   collect beyond the manifest frame.
 
 No analog in the reference engine (tamer's sink is Kafka); training-data
@@ -34,6 +35,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tamer_spark.sinks.base import _hadoop_fs
 
 
 def assign_shard(df: DataFrame, id_col: str, n_shards: int) -> DataFrame:
@@ -84,122 +87,44 @@ def shard_manifest(df: DataFrame) -> DataFrame:
     )
 
 
-def _persistent_rdd_ids(sc) -> set[int]:
-    """Ids of RDDs currently registered as persisted with the context —
-    localCheckpoint registers its block-backed RDD here, and (unlike a
-    CacheManager entry) ``DataFrame.unpersist()`` can NOT release it.
-    (Kept for tests/diagnostics; the sink itself targets its own RDD —
-    see ``_checkpointed_jrdd``.)"""
-    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def _checkpointed_jrdd(checkpointed_df: DataFrame):
-    """The java RDD backing a just-``localCheckpoint()``-ed frame — its
-    analyzed plan is a ``LogicalRDD`` wrapping exactly the RDD that
-    ``localCheckpoint`` persisted. Targeting THIS RDD (instead of diffing
-    the context's persistent-RDD registry, the pre-r10 approach) cannot
-    touch anything the caller owns: a caller frame built over a
-    cached-but-not-yet-materialized DataFrame registers its
-    InMemoryRelation's backing RDD during the export's materialization,
-    and a registry diff would have silently evicted that cache. Returns
-    None if the plan shape ever changes (release then falls back to the
-    JVM ContextCleaner — correct, just not deterministic)."""
-    try:
-        plan = checkpointed_df._jdf.queryExecution().analyzed()
-        if not plan.getClass().getName().endswith(".LogicalRDD"):
-            return None
-        return plan.rdd()
-    except Exception:  # pragma: no cover - defensive against plan changes
-        return None
-
-
-def _restore_checkpoint_dir(sc, jsc, prev) -> None:
-    """Write the saved scala ``Option`` checkpoint dir back via the bytecode
-    var setter ``checkpointDir_$eq`` (exact restore, no re-resolution).
-
-    The setter is ``private[spark]``: if a Spark upgrade ever renames it, an
-    exception raised from the caller's ``finally`` would MASK the original
-    error and leave the session's checkpoint dir pointed at the export
-    directory the caller is told to delete — so fall back to the public
-    ``setCheckpointDir`` (accepting one re-resolved UUID nesting level,
-    which only widens the path, never dangles it) and warn."""
-    try:
-        getattr(jsc, "checkpointDir_$eq")(prev)
-    except Exception as restore_err:  # noqa: BLE001
-        import warnings
-
-        # the fallback must ALSO not raise — this helper runs in the
-        # caller's finally, where any exception replaces the original one
-        # (e.g. setCheckpointDir mkdirs against a now-unreachable fs)
-        if prev.isDefined():
-            try:
-                sc.setCheckpointDir(prev.get())
-                detail = "restored via setCheckpointDir (re-resolved — one extra UUID nesting level)"
-            except Exception as fallback_err:  # noqa: BLE001
-                detail = (
-                    f"fallback setCheckpointDir ALSO failed ({fallback_err!r}) — "
-                    "the session checkpoint dir remains the export dir; set it "
-                    "manually before the next checkpoint"
-                )
-        else:
-            detail = (
-                "prior dir was unset and could not be cleared — the "
-                "session checkpoint dir remains the export dir"
-            )
-        warnings.warn(
-            "write_training_shards: exact checkpoint-dir restore via "
-            f"checkpointDir_$eq failed ({restore_err!r}); " + detail,
-            RuntimeWarning,
-            stacklevel=3,
-        )
+def _manifest_file(spark, path: str):
+    """(FileSystem, Path) of ``path``'s ``_manifest.json``, through the same
+    Hadoop FileSystem as the shards, so ``file:``, ``s3a:`` and ``hdfs:``
+    paths work alike. A checksummed FileSystem (the local one) is unwrapped
+    to its raw FileSystem: the manifest gets no ``.crc`` sidecar, and a
+    manifest edited by hand reads back as written (``verify_shards`` then
+    reports the mismatch, not a checksum error)."""
+    fs, root = _hadoop_fs(spark, path)
+    jvm = spark.sparkContext._jvm
+    if jvm.org.apache.hadoop.fs.ChecksumFileSystem._java_lang_class.isInstance(fs):
+        fs = fs.getRawFileSystem()
+    return fs, jvm.org.apache.hadoop.fs.Path(root, "_manifest.json")
 
 
 def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
+    df: DataFrame, path: str, n_shards: int, id_col: str = "doc_id"
 ) -> dict:
     """Export ``df`` as ``n_shards`` deterministic parquet shards under
     ``path`` (hive-partitioned ``shard=K/`` directories) and write
-    ``_manifest.json`` (underscore-prefixed so parquet directory listings skip it, like _SUCCESS) next to them. Returns the manifest dict.
+    ``_manifest.json`` (underscore-prefixed so parquet directory listings
+    skip it, like _SUCCESS) next to them. Returns the manifest dict.
 
     Rows are sorted within each shard by a salted hash of the id — a fixed
-    pseudo-random training order, identical across runs. The write and the
-    manifest are two actions, but both read the sharded frame hard-
-    materialized after its one shuffle: unlike ``persist``, a checkpoint
-    cannot be evicted and recomputed from a nondeterministic upstream, so
-    the manifest provably cannot drift from the written files.
+    pseudo-random training order, identical across runs. The export writes
+    once and takes its manifest from the files it wrote:
 
-    ``checkpoint_dir`` picks the materialization:
-
-    - ``None`` (default): ``localCheckpoint`` — blocks live in executor
-      storage, zero external dependencies. CAVEAT at cluster scale: an
-      executor loss (incl. dynamic-allocation decommission) makes the
-      checkpointed blocks unrecoverable and ABORTS the export job — the
-      retry is deterministic (same manifest), but for a 100 TB export on
-      preemptible hardware prefer the reliable mode.
-    - a path: reliable ``checkpoint()`` to that directory (HDFS/S3 on a
-      cluster) — survives executor loss; the export job itself becomes
-      fault-tolerant. The caller owns the directory's lifecycle (Spark
-      only auto-deletes it with spark.cleaner.referenceTracking.
-      cleanCheckpoints=true); delete it after the export returns. The
-      context's checkpoint dir is saved and RESTORED around the call
-      (including the unset state and every error path), so an export
-      never redirects the session's other ``.checkpoint()`` call sites
-      — e.g. the cc.py reliable-checkpoint seam — into a directory the
-      caller is about to delete. The plan is ``persist()``-ed across the
-      eager checkpoint so its second pass (the checkpoint file write)
-      reads cached blocks instead of recomputing the post-shuffle stage
-      — one data pass, not two, in exactly the 100 TB preemptible
-      scenario this mode exists for.
-
-    In the local mode the checkpoint blocks are released DETERMINISTICALLY
-    before return (the sink unpersists ITS OWN LogicalRDD, extracted from
-    the checkpointed frame's plan — back-to-back exports never pin
-    multiple corpus copies waiting for the JVM ContextCleaner, and caller
-    caches that happen to materialize during the export are untouched).
+    1. the sharded, sorted frame is written to the sibling
+       ``<path>__staging``;
+    2. the staged files are read back for the uniqueness gate and the
+       manifest — the manifest cannot drift from the files, even under a
+       nondeterministic upstream, and nothing is cached or checkpointed
+       (lost executor work is recomputed from lineage like any write);
+    3. a failed gate deletes the staging directory and raises: nothing
+       lands at ``path``, and an earlier export there is left as it was;
+    4. otherwise ``path`` is replaced by the staging directory (delete,
+       then rename, through the path's Hadoop FileSystem) and
+       ``_manifest.json`` is written last. A reader that finds the manifest
+       finds the files it describes.
 
     Raises ValueError when ``id_col`` has duplicate or NULL values: the
     manifest's XOR digest cancels duplicate rows pairwise, so two
@@ -209,73 +134,41 @@ def write_training_shards(
     """
     from tamer_spark.functions.hashing import stable_hash64
 
-    sc = df.sparkSession.sparkContext
-    # the checkpoint sits above the repartition: all three actions
-    # (uniqueness gate, file write, manifest) then share the one shuffled
-    # materialization instead of re-running the upstream plan
-    plan = assign_shard(df, id_col, n_shards).repartition(n_shards, "shard")
-    ckpt_jrdd = None
-    if checkpoint_dir is not None:
-        # setCheckpointDir mutates process-global SparkContext state: save
-        # the prior value (a scala Option — the UUID-suffixed resolved dir)
-        # and restore it the moment the checkpoint exists, unset included.
-        # The restore writes the Option back through the var setter
-        # (checkpointDir_$eq — Scala private[spark] is public in bytecode)
-        # rather than re-calling setCheckpointDir(resolved), which would
-        # RESOLVE AGAIN: mkdirs a fresh UUID subdir UNDER the already-
-        # resolved path, so looped exports would nest one level per call.
-        jsc = sc._jsc.sc()
-        prev = jsc.getCheckpointDir()
-        sc.setCheckpointDir(checkpoint_dir)
-        try:
-            # persist across the eager checkpoint: checkpoint() runs the
-            # action AND a checkpoint-write job that would otherwise
-            # recompute the post-shuffle stage from shuffle files — the
-            # cache turns the second pass into a block read
-            plan.persist()
-            try:
-                sharded = plan.checkpoint()
-            finally:
-                plan.unpersist()
-        finally:
-            _restore_checkpoint_dir(sc, jsc, prev)
-    else:
-        sharded = plan.localCheckpoint()
-        ckpt_jrdd = _checkpointed_jrdd(sharded)
-    try:
-        # uniqueness gate: one tiny 1-row agg over the checkpointed frame.
-        # count(lit(1)) counts every row while count_distinct skips NULLs, so
-        # this single comparison catches both duplicate and NULL ids.
-        chk = sharded.agg(
-            F.count(F.lit(1)).alias("n"), F.count_distinct(F.col(id_col)).alias("d")
-        ).collect()[0]
-        if chk.n != chk.d:
-            raise ValueError(
-                f"write_training_shards requires unique non-NULL {id_col!r} values "
-                f"({chk.n} rows, {chk.d} distinct non-NULL ids): the XOR content "
-                "digest cancels duplicate rows pairwise, which would blind "
-                "verify_shards — dedup or add a surrogate id before export"
-            )
-        # "shard" leads the sort: the partitioned-file writer requires its
-        # input ordered by the partition columns and INSERTS ITS OWN sort
-        # otherwise, which does not preserve the secondary order — leading
-        # with shard satisfies the requirement so the (salted hash, id)
-        # order survives into the files byte-stably
-        ordered = sharded.sortWithinPartitions(
+    spark = df.sparkSession
+    staging = path.rstrip("/") + "__staging"
+    # "shard" leads the sort: the partitioned-file writer requires its
+    # input ordered by the partition columns and INSERTS ITS OWN sort
+    # otherwise, which does not preserve the secondary order — leading
+    # with shard satisfies the requirement so the (salted hash, id)
+    # order survives into the files byte-stably
+    ordered = (
+        assign_shard(df, id_col, n_shards)
+        .repartition(n_shards, "shard")
+        .sortWithinPartitions(
             "shard",
             stable_hash64(F.concat(F.lit("order-"), F.col(id_col).cast("string"))),
             id_col,
         )
-        ordered.write.mode("overwrite").partitionBy("shard").parquet(path)
-        manifest_rows = shard_manifest(sharded).collect()
-    finally:
-        if ckpt_jrdd is not None:
-            # release the localCheckpoint blocks NOW (also on the ValueError
-            # path) — DataFrame.unpersist() cannot reach an RDD-level
-            # persist. Only the sink's OWN checkpointed RDD is touched;
-            # caller caches (even ones first materialized inside this call)
-            # are never at risk.
-            ckpt_jrdd.unpersist(False)
+    )
+    ordered.write.mode("overwrite").partitionBy("shard").parquet(staging)
+    fs, staged = _hadoop_fs(spark, staging)
+    # the written schema is known: no footer read to infer it, and an
+    # empty corpus (no part files at all) reads back as an empty frame
+    written = spark.read.schema(ordered.schema).parquet(staging)
+    # count(lit(1)) counts every row while count_distinct skips NULLs, so
+    # this single comparison catches both duplicate and NULL ids
+    chk = written.agg(
+        F.count(F.lit(1)).alias("n"), F.count_distinct(F.col(id_col)).alias("d")
+    ).collect()[0]
+    if chk.n != chk.d:
+        fs.delete(staged, True)
+        raise ValueError(
+            f"write_training_shards requires unique non-NULL {id_col!r} values "
+            f"({chk.n} rows, {chk.d} distinct non-NULL ids): the XOR content "
+            "digest cancels duplicate rows pairwise, which would blind "
+            "verify_shards — dedup or add a surrogate id before export"
+        )
+    manifest_rows = shard_manifest(written).collect()
     manifest = {
         "n_shards": n_shards,
         "id_col": id_col,
@@ -285,7 +178,16 @@ def write_training_shards(
             for r in manifest_rows
         },
     }
-    Path(path, "_manifest.json").write_text(json.dumps(manifest, sort_keys=True, indent=1))
+    _, target = _hadoop_fs(spark, path)
+    fs.delete(target, True)
+    if not fs.rename(staged, target):
+        raise OSError(f"write_training_shards: could not rename {staging} to {path}")
+    mfs, mpath = _manifest_file(spark, path)
+    out = mfs.create(mpath, True)
+    try:
+        out.write(json.dumps(manifest, sort_keys=True, indent=1).encode())
+    finally:
+        out.close()
     return manifest
 
 
@@ -296,7 +198,12 @@ def verify_shards(spark, path: str, shard: int | None = None) -> bool:
     ``shard``: verify ONE shard only — the partition filter prunes the
     read to that directory, so a dataloader can validate just the shards
     it is about to consume without scanning the export."""
-    manifest = json.loads(Path(path, "_manifest.json").read_text())
+    fs, mpath = _manifest_file(spark, path)
+    stream = fs.open(mpath)
+    try:
+        manifest = json.loads(bytes(stream.readAllBytes()))
+    finally:
+        stream.close()
     df = spark.read.parquet(path)
     want = {int(k): v for k, v in manifest["shards"].items()}
     if shard is not None:
@@ -319,7 +226,9 @@ def shard_diff(path_a: str, path_b: str) -> dict:
     or vanished — the incremental re-publish planner (only changed shards
     need re-uploading; stable id-hash membership means an append-only
     corpus change touches only the shards holding new docs). Pure
-    manifest arithmetic — no data read."""
+    manifest arithmetic — no data read, and no session: both manifests are
+    read from LOCAL paths (for an export on ``s3a:``/``hdfs:``, copy the two
+    ``_manifest.json`` files down first)."""
     ma = json.loads(Path(path_a, "_manifest.json").read_text())["shards"]
     mb = json.loads(Path(path_b, "_manifest.json").read_text())["shards"]
     a, b = {int(k): v for k, v in ma.items()}, {int(k): v for k, v in mb.items()}

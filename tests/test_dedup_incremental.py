@@ -583,3 +583,55 @@ def test_minhash_lsh_pairs_none_cap_means_uncapped_not_empty(spark):
     uncapped = minhash_lsh_pairs(docs, max_bucket=None).count()
     huge_cap = minhash_lsh_pairs(docs, max_bucket=10**9).count()
     assert uncapped == huge_cap > 0
+
+
+def test_minhash_band_index_keys_equal_pair_finder_banding(spark):
+    """The index build bands exactly as the pair finder does: the band keys
+    of ``minhash_band_index`` are the pair finder's ``lsh_bands`` keys, and
+    self-joining the posting index on them yields minhash_lsh_pairs' pairs
+    with the same matching-band counts."""
+    from tamer_spark.operators.dedup import lsh_bands, minhash_lsh_pairs, minhash_signatures
+    from tamer_spark.operators.dedup_incremental import minhash_band_posting_index
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    finder_keys = {
+        tuple(r) for r in lsh_bands(minhash_signatures(docs), 16, 4).select("band_id", "band_sig").collect()
+    }
+    index_keys = {tuple(r) for r in minhash_band_index(docs).collect()}
+    assert index_keys == finder_keys and index_keys
+
+    post = minhash_band_posting_index(docs)
+    a, b = post.alias("a"), post.alias("b")
+    from_index = {
+        tuple(r)
+        for r in a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_sig") == F.col("b.band_sig"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .count()
+        .collect()
+    }
+    pairs = {tuple(r) for r in minhash_lsh_pairs(docs, max_bucket=None).collect()}
+    assert from_index == pairs and pairs
+
+
+def test_minhash_epoch_pairs_within_batch_cap_is_pair_finder_cap(spark):
+    """Against an empty index, the epoch pairs are the batch's own capped
+    bucket self-join: equal to minhash_lsh_pairs at the same cap, capped
+    buckets dropped alike."""
+    from tamer_spark.operators.dedup import minhash_lsh_pairs
+    from tamer_spark.operators.dedup_incremental import minhash_epoch_pairs
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    empty = spark.createDataFrame([], "doc_id long, band_id int, band_sig string")
+    for cap in (2, None):
+        got = {tuple(r) for r in minhash_epoch_pairs(docs, empty, max_bucket=cap).collect()}
+        want = {
+            (r.doc_a, r.doc_b) for r in minhash_lsh_pairs(docs, max_bucket=cap).collect()
+        }
+        assert got == want and want
+    capped = minhash_lsh_pairs(docs, max_bucket=2).count()
+    assert capped < minhash_lsh_pairs(docs, max_bucket=None).count()

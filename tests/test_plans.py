@@ -54,6 +54,23 @@ def test_q3_filter_pushed_to_customer_scan(spark):
     assert any("c_mktsegment" in p for p in pushed), pushed
 
 
+def test_scan_readers_keep_struct_columns_and_filter_arguments_whole(spark, tmp_path):
+    """The scan readers take the scan node's required schema and pushed
+    filters, not the explain text split on commas: a struct column is one
+    column, and a filter with several arguments is one entry."""
+    path = str(tmp_path / "t")
+    spark.range(10).selectExpr("named_struct('x', id, 'y', id * 2) AS s", "id AS z", "id").write.parquet(path)
+    df = spark.read.parquet(path).filter("z > 3").filter("id IN (1, 2, 3)").select("s", "z")
+    assert read_schema_columns(df) == [{"s", "z", "id"}]
+    assert sorted(pushed_filters(df)) == [
+        "GreaterThan(z,3)",
+        "In(id, [1,2,3])",
+        "IsNotNull(z)",
+    ]
+    # a scan of only (s, z) reads both, the struct whole
+    assert read_schema_columns(spark.read.parquet(path).select("s", "z")) == [{"s", "z"}]
+
+
 def test_column_pruning_reaches_scan(spark):
     df = _spark_fn("q1_pricing_summary")(spark, SF_DIR)
     scans = read_schema_columns(df)

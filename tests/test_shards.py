@@ -15,6 +15,15 @@ from tamer_spark.sinks.shards import (
     write_training_shards,
 )
 
+ROOT = Path(__file__).resolve().parents[1]
+
+
+def _persistent_rdd_ids(sc) -> set[int]:
+    """Ids of RDDs currently registered as persisted with the context —
+    including RDD-level persists (``localCheckpoint``) that
+    ``DataFrame.unpersist()`` can not release."""
+    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
 
 def _corpus(spark, n=200):
     return spark.range(n).select(
@@ -132,31 +141,11 @@ def test_export_rejects_duplicate_and_null_ids(spark, tmp_path):
         write_training_shards(nulls, str(tmp_path / "n"), 2)
 
 
-def test_reliable_checkpoint_mode_manifest_identical(spark, tmp_path):
-    # checkpoint_dir=None (localCheckpoint) and a reliable checkpoint dir
-    # must be observationally identical exports — byte-identical manifests,
-    # verifiable files; only the fault-tolerance story differs
-    m_local = write_training_shards(_corpus(spark), str(tmp_path / "local"), 4)
-    m_rel = write_training_shards(
-        _corpus(spark), str(tmp_path / "rel"), 4, checkpoint_dir=str(tmp_path / "ckpt")
-    )
-    assert m_local == m_rel
-    assert verify_shards(spark, str(tmp_path / "rel"))
-    assert Path(tmp_path / "local", "_manifest.json").read_bytes() == Path(
-        tmp_path / "rel", "_manifest.json"
-    ).read_bytes()
-    # the reliable checkpoint actually materialized in the caller-owned dir
-    assert any((tmp_path / "ckpt").rglob("rdd-*")), "no reliable checkpoint written"
-
-
 def test_localcheckpoint_blocks_released_deterministically(spark, tmp_path):
-    # back-to-back exports must not pin multiple corpus copies waiting for
-    # the JVM ContextCleaner — the sink diffs the persistent-RDD registry
-    # and unpersists its own blocks before returning, on success AND on the
-    # ValueError gate path
+    # back-to-back exports must not pin corpus copies waiting for the JVM
+    # ContextCleaner — the export persists nothing (it writes once and
+    # reads its own files back), on success AND on the ValueError gate path
     import pytest
-
-    from tamer_spark.sinks.shards import _persistent_rdd_ids
 
     sc = spark.sparkContext
     before = _persistent_rdd_ids(sc)
@@ -174,18 +163,15 @@ def test_export_preserves_caller_cache(spark, tmp_path):
     # r10 (ADVICE): a caller frame cached but NOT yet materialized registers
     # its InMemoryRelation's backing RDD only during the export's
     # materialization — the pre-r10 registry-diff release would have
-    # silently unpersisted it. The targeted release must leave it alone.
-    from tamer_spark.sinks.shards import _persistent_rdd_ids
-
+    # silently unpersisted it. The export must leave it alone.
     sc = spark.sparkContext
     base = _corpus(spark).persist()
     try:
         before = _persistent_rdd_ids(sc)
         write_training_shards(base, str(tmp_path / "s"), 4)
         new_ids = _persistent_rdd_ids(sc) - before
-        # exactly the caller's cache RDD survives (the sink's own
-        # localCheckpoint blocks were released before return) and its
-        # storage level is still real, not NONE
+        # exactly the caller's cache RDD is new (the export persists
+        # nothing of its own) and its storage level is still real, not NONE
         assert len(new_ids) == 1, new_ids
         lvl = sc._jsc.getPersistentRDDs().get(next(iter(new_ids))).getStorageLevel()
         assert lvl.useMemory() or lvl.useDisk()
@@ -195,139 +181,106 @@ def test_export_preserves_caller_cache(spark, tmp_path):
         base.unpersist()
 
 
-def test_checkpoint_dir_saved_and_restored(spark, tmp_path):
-    # r10 (VERDICT item 2): reliable-mode export must not clobber the
-    # session's checkpoint dir — restore a caller sentinel, restore the
-    # UNSET state, and restore on the ValueError gate path too
+def _tree_bytes(root: Path) -> dict[str, bytes]:
+    return {str(p.relative_to(root)): p.read_bytes() for p in sorted(root.rglob("*")) if p.is_file()}
+
+
+def test_rejected_export_leaves_earlier_export_untouched(spark, tmp_path):
+    # the gate reads the staged files, so a rejected export never reaches
+    # the destination: the export already there stays byte-identical and
+    # verifiable, and the staging directory is gone
+    import pytest
+
+    path = tmp_path / "s"
+    write_training_shards(_corpus(spark), str(path), 4)
+    before = _tree_bytes(path)
+    dup = spark.createDataFrame([(1, "a"), (1, "b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=r"\(2 rows, 1 distinct"):
+        write_training_shards(dup, str(path), 2)
+    assert _tree_bytes(path) == before
+    assert verify_shards(spark, str(path))
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["s"]
+
+
+def test_export_leaves_session_checkpoint_dir_alone(spark, tmp_path):
+    # the export checkpoints nothing, so the session's checkpoint dir is the
+    # same after an export (and after a rejected one), set or unset
     import pytest
 
     jsc = spark.sparkContext._jsc.sc()
+    dup = spark.createDataFrame([(1, "a"), (1, "b")], "doc_id long, text string")
     assert not jsc.getCheckpointDir().isDefined(), "test requires unset start state"
-
-    # 1) unset before -> unset after
-    write_training_shards(
-        _corpus(spark), str(tmp_path / "a"), 2, checkpoint_dir=str(tmp_path / "ck_a")
-    )
+    write_training_shards(_corpus(spark), str(tmp_path / "a"), 2)
     assert not jsc.getCheckpointDir().isDefined()
 
-    # 2) caller sentinel before -> the EXACT resolved dir after. Byte
-    # identity matters: a restore that re-called setCheckpointDir(resolved)
-    # would resolve AGAIN and nest a fresh UUID subdir per export — looped
-    # exports would grow the path one level per call.
-    sentinel = str(tmp_path / "sentinel_ckpt")
-    spark.sparkContext.setCheckpointDir(sentinel)
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "sentinel_ckpt"))
     try:
-        resolved_before = jsc.getCheckpointDir().get()
-        write_training_shards(
-            _corpus(spark), str(tmp_path / "b"), 2, checkpoint_dir=str(tmp_path / "ck_b")
-        )
-        restored = jsc.getCheckpointDir()
-        assert restored.isDefined() and restored.get() == resolved_before
-        # a later unrelated checkpoint goes back under the caller's tree,
-        # not the export's directory
-        spark.range(5).checkpoint()
-        assert any((tmp_path / "sentinel_ckpt").rglob("rdd-*"))
-
-        # 3) error path: the gate ValueError must not leak the export dir
-        dup = spark.createDataFrame([(1, "a"), (1, "b")], "doc_id long, text string")
+        resolved = jsc.getCheckpointDir().get()
+        write_training_shards(_corpus(spark), str(tmp_path / "b"), 2)
         with pytest.raises(ValueError):
-            write_training_shards(
-                dup, str(tmp_path / "c"), 2, checkpoint_dir=str(tmp_path / "ck_c")
-            )
-        restored = jsc.getCheckpointDir()
-        assert restored.isDefined() and restored.get() == resolved_before
+            write_training_shards(dup, str(tmp_path / "c"), 2)
+        assert jsc.getCheckpointDir().get() == resolved
     finally:
         jsc.setCheckpointDir(None)
 
 
-def test_checkpoint_dir_restore_falls_back_when_setter_missing():
-    # r11 (ADVICE): if a Spark upgrade renames the private bytecode setter,
-    # the restore must NOT raise from the caller's finally (masking the real
-    # error + leaving the checkpoint dir pointed at the export dir) — it
-    # falls back to the public setCheckpointDir and warns. Pure-fake test:
-    # the helper only delegates, so no JVM objects are needed.
-    import warnings
-
-    from tamer_spark.sinks.shards import _restore_checkpoint_dir
-
-    class FakeOpt:
-        def __init__(self, val):
-            self._val = val
-
-        def isDefined(self):
-            return self._val is not None
-
-        def get(self):
-            return self._val
-
-    class FakeSC:
-        def __init__(self):
-            self.set_calls = []
-
-        def setCheckpointDir(self, d):
-            self.set_calls.append(d)
-
-    class GoodJsc:
-        def __init__(self):
-            self.restored = None
-
-        def checkpointDir_(self):  # pragma: no cover - name mangled below
-            pass
-
-    # happy path: setter exists -> exact restore, no warning, no fallback
-    good = GoodJsc()
-    setattr(good, "checkpointDir_$eq", lambda prev: setattr(good, "restored", prev))
-    sc = FakeSC()
-    prev = FakeOpt("/ckpt/base-uuid")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        _restore_checkpoint_dir(sc, good, prev)
-    assert good.restored is prev and sc.set_calls == []
-
-    class BrokenJsc:
-        pass  # no checkpointDir_$eq attribute at all -> getattr raises
-
-    # defined prev: falls back to the public API with the unwrapped value
-    sc = FakeSC()
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        _restore_checkpoint_dir(sc, BrokenJsc(), FakeOpt("/ckpt/base-uuid"))
-    assert sc.set_calls == ["/ckpt/base-uuid"]
-    assert len(w) == 1 and issubclass(w[0].category, RuntimeWarning)
-    assert "re-resolved" in str(w[0].message)
-
-    # unset prev: nothing to restore through the public API; warn only
-    sc = FakeSC()
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        _restore_checkpoint_dir(sc, BrokenJsc(), FakeOpt(None))
-    assert sc.set_calls == []
-    assert len(w) == 1 and "could not be cleared" in str(w[0].message)
+def test_manifest_bytes_pinned(spark, tmp_path):
+    # the manifest of the test corpus, pinned as the literals the
+    # checkpoint-based export wrote: reading the digests back from the
+    # written files must not change a byte of it
+    want = {
+        "id_col": "doc_id",
+        "n_shards": 4,
+        "shards": {
+            "0": {"content_digest": 1057077475404804146, "n_rows": 60},
+            "1": {"content_digest": 561537135396335069, "n_rows": 54},
+            "2": {"content_digest": 1049117473052030073, "n_rows": 43},
+            "3": {"content_digest": 829965153326345602, "n_rows": 43},
+        },
+        "total_rows": 200,
+    }
+    path = tmp_path / "s"
+    write_training_shards(_corpus(spark), str(path), 4)
+    assert (path / "_manifest.json").read_text() == json.dumps(want, sort_keys=True, indent=1)
 
 
-def test_checkpoint_dir_restore_survives_fallback_failure():
-    # r11 review: the fallback setCheckpointDir can itself fail (fs down) —
-    # nothing may raise out of the caller's finally; the warning carries
-    # both failures instead
-    import warnings
+def test_uri_path_round_trip(spark, tmp_path):
+    # the manifest goes through the same Hadoop FileSystem as the shards,
+    # so a URI path exports and verifies like a plain one
+    uri = (tmp_path / "out").as_uri()
+    assert uri.startswith("file:///")
+    manifest = write_training_shards(_corpus(spark), uri, 2)
+    assert manifest["total_rows"] == 200
+    disk = json.loads((tmp_path / "out" / "_manifest.json").read_text())
+    assert disk == json.loads(json.dumps(manifest))
+    assert verify_shards(spark, uri)
+    assert verify_shards(spark, uri, shard=1)
 
-    from tamer_spark.sinks.shards import _restore_checkpoint_dir
 
-    class FakeOpt:
-        def isDefined(self):
-            return True
+def test_empty_corpus_exports_empty_manifest(spark, tmp_path):
+    # no rows means no part files to read back: the export still lands
+    # and its manifest lists no shards
+    path = tmp_path / "s"
+    manifest = write_training_shards(_corpus(spark, 0), str(path), 4)
+    assert manifest == {"n_shards": 4, "id_col": "doc_id", "total_rows": 0, "shards": {}}
+    assert json.loads((path / "_manifest.json").read_text())["total_rows"] == 0
 
-        def get(self):
-            return "/ckpt/base"
 
-    class BrokenJsc:
-        pass
-
-    class BrokenSC:
-        def setCheckpointDir(self, d):
-            raise RuntimeError("fs unreachable")
-
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        _restore_checkpoint_dir(BrokenSC(), BrokenJsc(), FakeOpt())  # must not raise
-    assert len(w) == 1 and "ALSO failed" in str(w[0].message)
+def test_no_private_spark_state_in_package():
+    # the export materializes nothing, so no module may reach for the
+    # session's checkpoint dir or its persistent-RDD registry — and the
+    # sinks carry no checkpoint mode at all
+    banned = ("_$eq", "getPersistentRDDs", "setCheckpointDir")
+    hits = [
+        f"{p.relative_to(ROOT)}: {word}"
+        for p in sorted((ROOT / "tamer_spark").rglob("*.py"))
+        for word in banned
+        if word in p.read_text()
+    ]
+    hits += [
+        f"{p.relative_to(ROOT)}: {word}"
+        for p in sorted((ROOT / "tamer_spark" / "sinks").rglob("*.py"))
+        for word in ("checkpoint_dir", "localCheckpoint")
+        if word in p.read_text()
+    ]
+    assert hits == []
