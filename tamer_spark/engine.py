@@ -155,8 +155,8 @@ def pin(df: DataFrame, **aggs: Column) -> dict:
     if row is None:
         df.persist(StorageLevel.MEMORY_AND_DISK)
         exprs = [F.count(F.lit(1)).alias("rows")] + [c.alias(k) for k, c in aggs.items()]
-        odf, obs = observed(df, "pin", exprs)
         try:
+            odf, obs = observed(df, "pin", exprs)
             odf.write.format("noop").mode("overwrite").save()
         except BaseException:
             df.unpersist()

@@ -1,4 +1,4 @@
-from tamer_spark.functions.hashing import stable_hash64, perm_hash
+from tamer_spark.functions.hashing import stable_hash64
 from tamer_spark.functions.text import (
     words,
     word_count,
@@ -13,7 +13,6 @@ from tamer_spark.functions.text import (
 
 __all__ = [
     "stable_hash64",
-    "perm_hash",
     "words",
     "word_count",
     "text_stats_cols",

@@ -34,11 +34,6 @@ def stable_hash64_sql(col: str) -> str:
     return f"CAST(conv(substring(md5({col}), 1, 15), 16, 10) AS BIGINT)"
 
 
-def perm_hash(h: Column, a: int, b: int, p: int = MERSENNE_P) -> Column:
-    """Universal-hash permutation ``(a*(h%p) + b) % p`` for MinHash."""
-    return (F.lit(a) * (h % F.lit(p)) + F.lit(b)) % F.lit(p)
-
-
 def sign_rows(tag: str, seed: int, rows: int, cols: int) -> list[list[float]]:
     """±1 matrix rows from sha256 parity of ``'{tag}-{seed}-{row}-{col}'``
     — THE single derivation behind the LSH hyperplanes ('lsh'), the

@@ -13,10 +13,12 @@ Scale shape (100 TB posture):
 - doc length rides the groupBy key (functionally dependent on doc_id)
   instead of a corpus-wide doclen join;
 - df is a window count partitioned by term over the tf frame itself (no
-  second tokenize of the corpus), and (N, avgdl) is a 1-row table folded
-  back as a broadcast — ONE logical pass over the corpus. Known hazard:
-  the df window has at most |query terms| keys, so a common term's rows
-  land in one task.
+  tf.groupBy(term) join-back), and (N, avgdl) is a global 1-row aggregate
+  crossed back in through a broadcast nested-loop join. The executed plan
+  reads the corpus twice, both map-side: the tf side reads (doc_id, text),
+  the (N, avgdl) aggregate reads text alone and re-splits it for the
+  lengths. Known hazard: the df window has at most |query terms| keys, so
+  a common term's rows land in one task.
 
 Cross-engine determinism: scores are ranked on the ROUNDED value (6 dp)
 so libm ``ln`` ulp gaps and float summation order cannot flip order —

@@ -479,7 +479,7 @@ def shingle_string_rows(
 
     posexplode + window ``lead`` (linear; the row-local array formulation
     with ``element_at`` re-inlines the word-split per access — O(words²),
-    measured 12s vs 2s at sf0.1; see shingle_hash_rows). Documents shorter
+    measured 12s vs 2s at sf0.1). Documents shorter
     than n words yield their whole normalized text as one shingle. Rows are
     NOT deduplicated — ``.dropDuplicates([id_col, "s"])`` for set semantics.
     """
@@ -516,55 +516,6 @@ def shingle_string_rows(
 SHINGLE_BASE = 8191
 
 
-def shingle_hash_rows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """(doc_id, shingle_hash) rows — one md5 per WORD, shingles combined
-    arithmetically.
-
-    Shape: posexplode words → hash each word once → window ``lead`` combines
-    the n adjacent hashes polynomially ``(h1*B^(n-1)+...+hn) % P``. Linear
-    work and one doc-keyed shuffle. Used where downstream needs *rows* for
-    an equi-join (ngram_jaccard). When the consumer is per-document
-    (minhash_signatures), prefer the staged row-local array form there —
-    a bare row-local expression re-inlines the md5 array per ``element_at``
-    (O(words²), measured 5× slower), but STAGED through materialized
-    columns it is ~10× faster than this shape and shuffle-free.
-
-    Documents shorter than n words fold all their word hashes into one value
-    (disjoint doc set, handled row-locally — it's O(n) by definition).
-    """
-    from pyspark.sql import Window
-
-    norm = df.select(
-        F.col(id_col).alias("doc_id"), F.split(normalize_text(F.col(text_col)), " ").alias("ws")
-    )
-    short = norm.filter(F.size("ws") < n).select(
-        "doc_id",
-        F.aggregate(
-            F.transform(F.col("ws"), lambda w: stable_hash64(w) % MERSENNE_P),
-            F.lit(0).cast("long"),
-            lambda acc, h: (acc * SHINGLE_BASE + h) % MERSENNE_P,
-        ).alias("h"),
-    )
-    wp = norm.filter(F.size("ws") >= n).select(
-        "doc_id", F.posexplode_outer("ws").alias("pos", "w")
-    )
-    hh = wp.select("doc_id", "pos", (stable_hash64(F.col("w")) % MERSENNE_P).alias("h0"))
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    combined = None
-    for j in range(n):
-        term = (F.col("h0") if j == 0 else F.lead("h0", j).over(win)) * (
-            SHINGLE_BASE ** (n - 1 - j)
-        )
-        combined = term if combined is None else combined + term
-    sh = (
-        hh.select("doc_id", (combined % MERSENNE_P).alias("h"))
-        .filter(F.col("h").isNotNull())
-    )
-    return sh, short
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -591,8 +542,8 @@ def minhash_signatures(
     that shape at sf0.1 (0.09s vs 0.9s) with zero shuffle (was docs×k ints),
     because the shuffle, sort, and k-aggregate machinery all disappear.
 
-    Semantics identical to shingle_hash_rows' exploded form (same word hash,
-    same polynomial, same short-doc fold) — pinned by the driver oracle.
+    Semantics identical to that exploded form (same word hash, same
+    polynomial, same short-doc fold) — pinned by the driver oracle.
 
     One-parse SQL construction (r14): whole columns render as single
     selectExpr parses (see operators/pq.py rationale); trees identical

@@ -21,6 +21,7 @@ partials) and batch backfills.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -28,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tamer_spark.sinks import ParquetEpochSink
+from tamer_spark.sinks.base import _hadoop_fs
 
 
 def merge_partials(parts: DataFrame, key_cols: list[str], sum_cols: list[str]) -> DataFrame:
@@ -64,17 +66,25 @@ class ContinuousRollup:
     def compact(self, spark: SparkSession) -> None:
         """Fold all existing epoch partials into epoch 0.
 
+        The merged partial is written straight to the sibling
+        ``<path>__staging/epoch=0``, then swapped in for ``path`` (delete,
+        then rename) through the path's Hadoop FileSystem, as the shard
+        export does, so local, ``file:``, ``s3a:`` and ``hdfs:`` paths
+        compact alike. A failure before the swap leaves every partial in
+        place; a crash between the delete and the rename leaves the merged
+        partial at the staging path.
+
         Safe under the engine's epoch numbering as long as no writer is
         concurrently emitting (run between pipeline runs / from a
         maintenance schedule). New epochs continue after the fold.
         """
-        import shutil
-
-        merged = self.read(spark)
-        merged_rows = merged.collect()  # rollups are small by construction
-        schema = merged.schema
-        shutil.rmtree(self.path, ignore_errors=True)
-        self._sink.write(spark.createDataFrame(merged_rows, schema), 0)
+        staging = self.path.rstrip("/") + "__staging"
+        self.read(spark).write.mode("overwrite").parquet(os.path.join(staging, "epoch=0"))
+        fs, staged = _hadoop_fs(spark, staging)
+        _, target = _hadoop_fs(spark, self.path)
+        fs.delete(target, True)
+        if not fs.rename(staged, target):
+            raise OSError(f"compact: could not rename {staging} to {self.path}")
 
 
 def rollup_sink(

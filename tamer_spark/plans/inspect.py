@@ -13,13 +13,15 @@ of ``queryExecution().executedPlan()`` — never its string form, which under
 AQE repeats the whole tree under "== Initial Plan ==" once the DataFrame
 has run and so double-counts every node. The walk descends through
 ``AdaptiveSparkPlanExec`` (its current plan), every query stage, cached
-relations (``InMemoryTableScan`` → the cached plan) and subqueries; a
-``ReusedExchange`` is counted as its own node and not descended. It reads
-the plan the DataFrame currently holds: the initial plan before execution,
-the final adaptive plan after it. Execution wrappers that only a prepared
-plan carries (WholeStageCodegen, InputAdapter, ColumnarToRow,
-AQEShuffleRead) are walked through, not counted, so an operator's counts
-change across execution only where AQE really re-planned it.
+relations (``InMemoryTableScan`` → the cached plan, each cached plan once
+by JVM identity however many scans reference it, since it runs once) and
+subqueries; a ``ReusedExchange`` is counted as its own node and not
+descended. It reads the plan the DataFrame currently holds: the initial
+plan before execution, the final adaptive plan after it. Execution
+wrappers that only a prepared plan carries (WholeStageCodegen,
+InputAdapter, ColumnarToRow, AQEShuffleRead) are walked through, not
+counted, so an operator's counts change across execution only where AQE
+really re-planned it.
 
 The same walk reads the file scans: ``read_schema_columns`` takes each
 scan's required schema and ``pushed_filters`` its pushed source filters,
@@ -81,6 +83,8 @@ _WRAPPERS = {"WholeStageCodegenExec", "InputAdapter", "ColumnarToRowExec", "AQES
 def _nodes(df: DataFrame):
     """Every operator of the plan ``df`` currently holds, execution wrappers
     walked through (see the module docstring for the walk)."""
+    identity = df._sc._jvm.System.identityHashCode
+    cached = set()  # the cached plans walked so far, by JVM identity
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
         plan = stack.pop()
@@ -96,7 +100,10 @@ def _nodes(df: DataFrame):
         if cls == "ReusedExchangeExec":
             continue
         if cls == "InMemoryTableScanExec":
-            stack.append(plan.relation().cachedPlan())
+            inner = plan.relation().cachedPlan()
+            if identity(inner) not in cached:
+                cached.add(identity(inner))
+                stack.append(inner)
         stack.extend(_seq(plan.subqueries()))
         stack.extend(_seq(plan.children()))
 
@@ -112,14 +119,7 @@ def plan_shape(df: DataFrame) -> PlanShape:
 
 
 def _file_scans(df: DataFrame) -> list:
-    """Each file scan once, by JVM identity: a cached plan referenced from
-    several places is walked from each, but it runs (and scans) once."""
-    identity = df._sc._jvm.System.identityHashCode
-    scans = {}
-    for plan in _nodes(df):
-        if plan.getClass().getSimpleName() == "FileSourceScanExec":
-            scans.setdefault(identity(plan), plan)
-    return list(scans.values())
+    return [p for p in _nodes(df) if p.getClass().getSimpleName() == "FileSourceScanExec"]
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

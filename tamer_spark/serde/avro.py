@@ -20,8 +20,8 @@ DataFrame integration: ``encode_df`` runs the codec in an Arrow-batched
 ``mapInPandas`` stage and (optionally) applies Confluent framing with a
 registry-assigned schema id — the full Serde.scala:31-92 path without JVM
 connector dependencies. Throughput note: this is the Python fallback path;
-with spark-avro on the classpath prefer serde.confluent.to_avro_gated
-(JVM, codegen).
+with spark-avro on the classpath prefer ``pyspark.sql.avro.functions.to_avro``
+/ ``from_avro`` (JVM, codegen) with serde.confluent framing.
 """
 
 from __future__ import annotations

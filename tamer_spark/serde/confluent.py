@@ -12,9 +12,10 @@ Value serialization itself:
 
 - JSON (schemaless, Serde maybeSchema=None path): ``F.to_json(struct)`` /
   ``F.from_json`` — always available.
-- Avro: ``pyspark.sql.avro.functions.to_avro/from_avro`` — requires the
-  external spark-avro package; helpers below gate on its presence and raise
-  a clear error otherwise.
+- Avro: ``pyspark.sql.avro.functions.to_avro/from_avro`` when the
+  spark-avro package is on the JVM classpath (the Python module always
+  imports; a missing jar fails at the first call), else the pure-Python
+  codec in :mod:`tamer_spark.serde.avro`.
 """
 
 from __future__ import annotations
@@ -47,24 +48,3 @@ def extract_schema_id(framed: Column) -> Column:
     """Big-endian int32 schema id from bytes 2-5 (hex → base-10, codegen'd)."""
     return F.conv(F.hex(F.substring(framed, 2, 4)), 16, 10).cast("int")
 
-
-def to_avro_gated(data: Column, schema_json: str) -> Column:
-    try:
-        from pyspark.sql.avro.functions import to_avro
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(
-            "Avro serde needs the spark-avro package on the classpath "
-            "(org.apache.spark:spark-avro_2.13); JSON serde works without it."
-        ) from e
-    return to_avro(data, schema_json)
-
-
-def from_avro_gated(data: Column, schema_json: str) -> Column:
-    try:
-        from pyspark.sql.avro.functions import from_avro
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(
-            "Avro serde needs the spark-avro package on the classpath "
-            "(org.apache.spark:spark-avro_2.13); JSON serde works without it."
-        ) from e
-    return from_avro(data, schema_json)

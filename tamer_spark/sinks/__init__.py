@@ -3,6 +3,7 @@ Kafka plus Parquet/memory/console, all honoring the per-epoch idempotence
 contract required by the engine loop (see engine.py docstring)."""
 
 from tamer_spark.sinks.base import ConsoleSink, MemorySink, ParquetEpochSink, epoch_frames
+from tamer_spark.sinks.kafka import TransactionalKafkaSink
 from tamer_spark.sinks.shards import (
     assign_shard,
     shard_diff,
@@ -21,11 +22,6 @@ __all__ = [
     "verify_shards",
     "shard_diff",
     "write_training_shards",
+    "TransactionalKafkaSink",
 ]
 
-try:  # Kafka sinks need the spark-sql-kafka package / a Kafka client at write time
-    from tamer_spark.sinks.kafka import KafkaSink, TransactionalKafkaSink  # noqa: F401
-
-    __all__ += ["KafkaSink", "TransactionalKafkaSink"]
-except Exception:  # pragma: no cover
-    pass

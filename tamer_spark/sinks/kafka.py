@@ -1,19 +1,14 @@
-"""Kafka sinks: at-least-once batch writer + exactly-once transactional writer.
+"""Kafka sink: the exactly-once transactional writer.
 
 The reference's only sink is a transactional producer writing ``Record[K,V]``s
 plus the new state in ONE Kafka transaction (Tamer.scala:64-87,150-186), so a
-replayed epoch can never duplicate. Two Spark re-expressions, because Spark's
-built-in Kafka batch sink cannot do transactions at all:
-
-- :class:`KafkaSink` — ``df.write.format("kafka")`` with idempotent producers.
-  **At-least-once**: a replayed epoch appends again. Pair with keyed
-  downstream dedup on ``(epoch, key)`` (put the epoch in the record key or a
-  header) — the honest default when the Spark connector does the writing.
-  Note: Spark's Kafka batch sink never calls initTransactions/commit, so
-  passing ``kafka.transactional.id`` through it is broken twice over — a
-  transactional producer that never begins a transaction cannot send, and one
-  shared id across N executor tasks would make the producers fence each
-  other (ProducerFencedException). We therefore do NOT set it.
+replayed epoch can never duplicate. Spark's built-in Kafka batch sink
+(``df.write.format("kafka")``) cannot do transactions at all: a replayed
+epoch appends again, which breaks the engine's per-epoch idempotence
+contract (``Sink.write``), and passing ``kafka.transactional.id`` through it
+is broken twice over (no transaction is ever begun, and one id shared by N
+executor tasks makes the producers fence each other). So the one Kafka sink
+drives the producers itself:
 
 - :class:`TransactionalKafkaSink` — the reference-faithful exactly-once path:
   ``foreachPartition``-style producers, one transaction per (epoch,
@@ -48,49 +43,6 @@ from dataclasses import dataclass, field
 from typing import Any, Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
-
-
-@dataclass
-class KafkaSink:
-    """At-least-once Kafka batch sink (Spark connector path).
-
-    Requires ``spark-sql-kafka-0-10`` on the classpath; import is gated in
-    ``tamer_spark.sinks``. The DataFrame must carry the Kafka sink schema
-    (``key``, ``value``, optionally ``topic/partition/headers/timestamp``) —
-    produced by :func:`tamer_spark.operators.records.to_records`.
-
-    Idempotent producers stop broker-retry duplicates; they do NOT stop
-    epoch-replay duplicates. To make the documented downstream dedup on
-    (epoch, key) actually implementable, ``write`` stamps the epoch into a
-    ``tamer.epoch`` record header (``epoch_header=False`` to disable) —
-    consumers drop records whose (epoch, key) they have already seen. For
-    true exactly-once use :class:`TransactionalKafkaSink`.
-    """
-
-    bootstrap_servers: str
-    topic: str
-    epoch_header: bool = True
-
-    def write(self, df: DataFrame, epoch: int) -> None:
-        from pyspark.sql import functions as F
-
-        if self.epoch_header:
-            tag = F.struct(
-                F.lit("tamer.epoch").alias("key"),
-                F.encode(F.lit(str(epoch)), "UTF-8").alias("value"),
-            )
-            if "headers" in df.columns:
-                df = df.withColumn("headers", F.array_append(F.col("headers"), tag))
-            else:
-                df = df.withColumn("headers", F.array(tag))
-        (
-            df.write.format("kafka")
-            .option("kafka.bootstrap.servers", self.bootstrap_servers)
-            .option("topic", self.topic)
-            .option("kafka.includeHeaders", "true")
-            .option("kafka.enable.idempotence", "true")
-            .save()
-        )
 
 
 def transactional_id(fingerprint: str, epoch: int, partition_id: int) -> str:

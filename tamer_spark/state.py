@@ -12,10 +12,13 @@ Here the same contract is a checkpoint directory holding one JSON document::
 
     {fingerprint, group_id, epoch, state, updated_at}
 
-committed via one atomic rename (write + fsync tmp, link the current doc
-into a history of superseded docs for debugging, ``os.replace`` tmp over
-it, fsync the directory), so a crash at any step leaves the previous doc.
-Semantics preserved:
+committed in three steps: write and fsync ``state.json.tmp``,
+``os.replace`` it over ``state.json``, fsync the directory. A crash before
+the replace leaves the previous doc, a crash after it the new one, and
+never no doc. Like the compacted topic, which keeps only the latest state
+per key, the checkpoint keeps only the latest doc: recovery needs nothing
+older (the D-Streams / Structured Streaming recovery model: the last
+committed state plus a deterministic replay). Semantics preserved:
 
 - fingerprint mismatch on resume → hard :class:`StateForkError` (never
   silently consume another pipeline's state),
@@ -33,9 +36,8 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 from hashlib import sha256
 from typing import Any
 
@@ -60,27 +62,11 @@ class StateDoc:
     updated_at: float
 
     def to_json(self) -> str:
-        return json.dumps(
-            {
-                "fingerprint": self.fingerprint,
-                "group_id": self.group_id,
-                "epoch": self.epoch,
-                "state": self.state,
-                "updated_at": self.updated_at,
-            },
-            sort_keys=True,
-        )
+        return json.dumps(asdict(self), sort_keys=True)
 
     @staticmethod
     def from_json(s: str) -> "StateDoc":
-        d = json.loads(s)
-        return StateDoc(
-            fingerprint=d["fingerprint"],
-            group_id=d["group_id"],
-            epoch=int(d["epoch"]),
-            state=d["state"],
-            updated_at=float(d["updated_at"]),
-        )
+        return StateDoc(**json.loads(s))
 
 
 class StateStore:
@@ -130,39 +116,24 @@ class StateStore:
         return doc
 
     def commit(self, epoch: int, new_state: Any) -> StateDoc:
-        """Atomically publish ``(epoch, new_state)``; keeps prior doc in history."""
+        """Atomically publish ``(epoch, new_state)`` in place of the current doc."""
         doc = StateDoc(self.fingerprint, self.group_id, epoch, new_state, time.time())
         self._commit(doc)
         return doc
 
     def _commit(self, doc: StateDoc) -> None:
-        """Publish ``doc`` crash-safely: ``state.json`` always holds a whole
-        doc, the previous one until the single atomic replace, so a crash at
-        any step leaves ``load()`` returning the previous doc, never None
-        (which would silently re-initialize at epoch 0)."""
+        """Publish ``doc`` crash-safely: write and fsync ``state.json.tmp``,
+        replace ``state.json`` with it, fsync the directory. ``state.json``
+        always holds a whole doc, the previous one until the single atomic
+        replace, so a crash at any step leaves ``load()`` returning the
+        previous or the new doc, never None (which would silently
+        re-initialize at epoch 0). A ``.tmp`` left by a crash is
+        overwritten by the next commit."""
         tmp = self.path + ".tmp"
         with open(tmp, "w", encoding="utf-8") as f:
             f.write(doc.to_json())
             f.flush()
             os.fsync(f.fileno())
-        # history of superseded states (the compacted topic keeps only the
-        # latest per key; we keep a small debug trail instead), named by the
-        # superseded epoch + a nanosecond stamp bumped past any taken name:
-        # back-to-back commits never overwrite each other's history file.
-        # The current doc is LINKED (copied where links are unsupported)
-        # into history, never moved out of place
-        hist_dir = os.path.join(self.dir, "history")
-        os.makedirs(hist_dir, exist_ok=True)
-        if os.path.exists(self.path):
-            with open(self.path, encoding="utf-8") as f:
-                old_epoch = StateDoc.from_json(f.read()).epoch
-            ns = time.time_ns()
-            while os.path.exists(hist := os.path.join(hist_dir, f"state-{old_epoch}-{ns}.json")):
-                ns += 1
-            try:
-                os.link(self.path, hist)
-            except OSError:
-                shutil.copy2(self.path, hist)
         os.replace(tmp, self.path)
         fd = os.open(self.dir, os.O_RDONLY)
         try:

@@ -204,29 +204,3 @@ def run_available_now_foreach_batch(
     )
     q.awaitTermination()
 
-
-def stream_kafka(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topics: str,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """Kafka micro-batch source (needs the spark-sql-kafka package).
-
-    Returns the standard Kafka schema (key/value BINARY, topic, partition,
-    offset, timestamp, headers). Compose with serde.unframe_confluent +
-    from_json/from_avro to decode registry-framed payloads;
-    ``maxOffsetsPerTrigger`` is the per-trigger backpressure bound (the
-    reference's bufferSize analog, config.scala:104).
-    """
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topics)
-        .option("startingOffsets", starting_offsets)
-        .option("includeHeaders", "true")
-    )
-    if max_offsets_per_trigger:
-        reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    return reader.load()

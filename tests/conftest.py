@@ -20,3 +20,74 @@ def persisted_rdd_ids(spark) -> set[int]:
     rdds = spark.sparkContext._jsc.sc().getPersistentRDDs()
     it = rdds.keysIterator()
     return {it.next() for _ in range(rdds.size())}
+
+
+#: the four steps of a state commit, in order: a crash at one of the first
+#: three leaves the previous doc, a crash at the last the new one
+COMMIT_STEPS = ("tmp_write", "tmp_fsync", "replace", "dir_fsync")
+
+
+class Crash(BaseException):
+    """An injected process death. Not an ``Exception``, so no retry or
+    failure handler of the code under test takes it for a failed step."""
+
+
+def crash_commit(monkeypatch, step: str, at: int = 1) -> None:
+    """Make the ``at``-th state commit from now on die at ``step``, leaving
+    what a crash there leaves: half a ``.tmp`` at "tmp_write", a whole but
+    unsynced ``.tmp`` at "tmp_fsync", the ``.tmp`` not yet renamed at
+    "replace", the rename done but the directory unsynced at "dir_fsync".
+    Later commits run normally."""
+    import os
+
+    import tamer_spark.state as state_mod
+
+    assert step in COMMIT_STEPS, step
+    commits = fsyncs = 0
+    real_open = open
+
+    class Torn:
+        """A ``.tmp`` whose write dies halfway."""
+
+        def __init__(self, f):
+            self.f = f
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+        def write(self, s):
+            self.f.write(s[: len(s) // 2])
+            self.f.flush()
+            raise Crash("injected crash in the tmp_write")
+
+    def open_(path, mode="r", **kw):
+        nonlocal commits, fsyncs
+        f = real_open(path, mode, **kw)
+        if "w" not in mode:
+            return f
+        commits, fsyncs = commits + 1, 0
+        return Torn(f) if step == "tmp_write" and commits == at else f
+
+    class CrashingOs:
+        """``os`` as the state module sees it."""
+
+        def __getattr__(self, name):
+            return getattr(os, name)
+
+        def fsync(self, fd):
+            nonlocal fsyncs
+            fsyncs += 1  # a commit syncs the tmp file, then the directory
+            if commits == at and (step, fsyncs) in (("tmp_fsync", 1), ("dir_fsync", 2)):
+                raise Crash(f"injected crash in the {step}")
+            os.fsync(fd)
+
+        def replace(self, src, dst):
+            if step == "replace" and commits == at:
+                raise Crash("injected crash in the replace")
+            os.replace(src, dst)
+
+    monkeypatch.setattr(state_mod, "open", open_, raising=False)
+    monkeypatch.setattr(state_mod, "os", CrashingOs())

@@ -17,7 +17,7 @@ from tamer_spark.engine import Pipeline, RetryPolicy, pin, unpin
 from tamer_spark.errors import TamerError
 from tamer_spark.sinks import MemorySink
 from tamer_spark.state import fingerprint
-from tests.conftest import persisted_rdd_ids
+from tests.conftest import COMMIT_STEPS, Crash, crash_commit, persisted_rdd_ids
 
 
 class CountingSource:
@@ -204,6 +204,15 @@ def test_pin_whose_pass_fails_releases_the_frame(spark):
     )
     with pytest.raises(Exception, match="pin pass fails"):
         pin(df)
+    assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
+
+
+def test_pin_whose_observation_fails_releases_the_frame(spark):
+    """An aggregate that fails analysis fails the pin before its pass runs;
+    the frame is released all the same."""
+    df = spark.range(5)
+    with pytest.raises(Exception, match="no_such_column"):
+        pin(df, bad=F.max("no_such_column"))
     assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
 
 
@@ -636,3 +645,102 @@ def test_steps_run_ahead_carry_the_callers_job_group_and_tags(spark, tmp_path):
     assert ahead == [1, 2]
     tagged = [any(t.endswith(f"-{tag}") for t in tags) for tags in _job_tags(spark, group)]
     assert tagged == [True] * 6
+
+
+# --- crash-point matrix ---------------------------------------------------
+
+#: where in epoch CRASH_EPOCH the process dies
+CRASH_POINTS = (
+    "iteration",
+    "pin",
+    "write_before_files",
+    "write_after_files",
+    "between_write_and_commit",
+    *(f"commit_{step}" for step in COMMIT_STEPS),
+    "observer",
+)
+CRASH_EPOCH = 3
+
+
+@pytest.mark.parametrize("sink_kind", ["ordinary", "write_ahead"])
+@pytest.mark.parametrize("point", CRASH_POINTS)
+def test_crash_anywhere_resumes_to_exactly_once(spark, tmp_path, monkeypatch, point, sink_kind):
+    """The process dies at one step of epoch 3 — its iteration, the pin of
+    its batch, its sink write before or after the files land, between the
+    write and the commit, each step of the state commit, the observer —
+    while the next epoch is read ahead (and, for a write-ahead
+    ``ParquetEpochSink``, may already be written). A fresh Pipeline over
+    the same checkpoint drains to every record exactly once, and neither
+    run leaves a cached batch behind."""
+    import tamer_spark.engine as engine_mod
+    from tamer_spark.sinks import ParquetEpochSink
+    from tamer_spark.state import StateStore
+
+    k, limit = CRASH_EPOCH, 6
+    fired, made = [], {}  # made: state -> the batch the source returned
+
+    def crash(where):
+        if where == point and not fired:
+            fired.append(where)
+            raise Crash(f"injected crash: {where}")
+
+    class Source(RecordingSource):
+        def iteration(self, state, spark_):
+            if state == k:
+                crash("iteration")
+            df, nxt = super().iteration(state, spark_)
+            made[state] = df
+            return df, nxt
+
+    class Sink(MemorySink if sink_kind == "ordinary" else ParquetEpochSink):
+        def write(self, df, epoch):
+            if epoch == k:
+                crash("write_before_files")
+            super().write(df, epoch)
+            if epoch == k:
+                crash("write_after_files")
+
+    real_observed, real_commit = engine_mod.observed, StateStore.commit
+
+    def observed(df, *a, **kw):
+        if df is made.get(k):
+            crash("pin")
+        return real_observed(df, *a, **kw)
+
+    def commit(self, epoch, new_state):
+        if epoch == k + 1:
+            crash("between_write_and_commit")
+        return real_commit(self, epoch, new_state)
+
+    monkeypatch.setattr(engine_mod, "observed", observed)
+    monkeypatch.setattr(StateStore, "commit", commit)
+    if point.startswith("commit_"):
+        # commit 1 initializes the checkpoint; epoch e's commit is e + 2
+        crash_commit(monkeypatch, point[len("commit_"):], at=k + 2)
+
+    before = persisted_rdd_ids(spark)
+    source, cp = Source(limit), str(tmp_path / "cp")
+    sink = Sink() if sink_kind == "ordinary" else Sink(str(tmp_path / "out"))
+
+    def run():
+        pipe = Pipeline(source, sink, cp, observer=lambda m: m.epoch == k and crash("observer"))
+        return pipe.run(spark, until=lambda s: s >= limit), pipe._store().load().epoch
+
+    with pytest.raises(Crash) as died:
+        run()
+    if point.startswith("commit_"):
+        assert str(died.value) == f"injected crash in the {point[len('commit_'):]}"
+    else:
+        assert fired == [point]
+    committed = StateStore(cp, source.state_fingerprint()).load().epoch
+    assert committed == (k + 1 if point in ("commit_dir_fsync", "observer") else k)
+    if point not in ("iteration", "pin"):
+        assert k + 1 in source.calls  # the next epoch was read ahead
+    assert not persisted_rdd_ids(spark) - before
+    assert run() == (limit, limit)
+    assert not persisted_rdd_ids(spark) - before
+    if sink_kind == "ordinary":
+        keys = [r.key for r in sink.rows]
+    else:
+        keys = sorted(r.key for r in sink.read(spark, before=limit).collect())
+    assert keys == list(range(1, limit + 1))

@@ -71,6 +71,23 @@ def test_scan_readers_keep_struct_columns_and_filter_arguments_whole(spark, tmp_
     assert read_schema_columns(spark.read.parquet(path).select("s", "z")) == [{"s", "z"}]
 
 
+def test_plan_shape_walks_a_shared_cache_once(spark, tmp_path):
+    """A cached frame joined with itself runs its cached plan once: both
+    InMemoryTableScans count, the one parquet scan under them once, and
+    the scan readers see it once."""
+    path = str(tmp_path / "t")
+    spark.range(100).selectExpr("id", "id % 7 AS k").write.parquet(path)
+    cached = spark.read.parquet(path).cache()
+    try:
+        joined = cached.alias("a").join(cached.alias("b"), "k")
+        shape = plan_shape(joined)
+        assert shape.nodes["InMemoryTableScan"] == 2, shape
+        assert shape.nodes["Scan parquet"] == 1, shape
+        assert read_schema_columns(joined) == [{"id", "k"}]
+    finally:
+        cached.unpersist()
+
+
 def test_column_pruning_reaches_scan(spark):
     df = _spark_fn("q1_pricing_summary")(spark, SF_DIR)
     scans = read_schema_columns(df)

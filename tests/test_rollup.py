@@ -65,6 +65,26 @@ def test_compaction_preserves_results(spark, tmp_path):
     _check_equals_batch(spark, rollup, all_ev.unionByName(extra))
 
 
+def test_compaction_of_a_uri_path_folds_each_partial_once(spark, tmp_path):
+    """A ``file://`` rollup compacts like a local path: the partials are
+    replaced by their fold, not summed again next to it."""
+    from tamer_spark.sinks.base import _epochs
+
+    path = (tmp_path / "r").as_uri()
+    rollup = ContinuousRollup(path, ["k"], ["v"])
+    for e in range(3):
+        rollup.write(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long"), e)
+
+    def merged():
+        return {r.k: r.v for r in rollup.read(spark).collect()}
+
+    assert merged() == {"a": 3, "b": 6}
+    rollup.compact(spark)
+    assert merged() == {"a": 3, "b": 6}
+    assert _epochs(spark, path) == [0]
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["r"]
+
+
 def test_engine_driven_rollup(spark, tmp_path):
     """Full loop: tumbling-window source over an events table, per-epoch
     partial aggregation, merged rollup == batch answer."""

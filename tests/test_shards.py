@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from tamer_spark.sinks.shards import (
@@ -264,6 +265,20 @@ def test_empty_corpus_exports_empty_manifest(spark, tmp_path):
     manifest = write_training_shards(_corpus(spark, 0), str(path), 4)
     assert manifest == {"n_shards": 4, "id_col": "doc_id", "total_rows": 0, "shards": {}}
     assert json.loads((path / "_manifest.json").read_text())["total_rows"] == 0
+
+
+def test_empty_export_verifies_without_reading(spark, tmp_path):
+    # an empty manifest verifies by listing, not by a parquet read (which
+    # cannot infer a schema from no files), and a shard dir under it fails
+    path = tmp_path / "s"
+    write_training_shards(_corpus(spark, 0), str(path), 4)
+    assert verify_shards(spark, str(path))
+    with pytest.raises(ValueError, match="not in manifest"):
+        verify_shards(spark, str(path), shard=0)
+    write_training_shards(_corpus(spark, 20), str(tmp_path / "full"), 4)
+    (tmp_path / "full" / "shard=1").rename(path / "shard=1")
+    with pytest.raises(ValueError, match="mismatch"):
+        verify_shards(spark, str(path))
 
 
 def test_no_private_spark_state_in_package():
