@@ -677,7 +677,7 @@ def test_crash_anywhere_resumes_to_exactly_once(spark, tmp_path, monkeypatch, po
     from tamer_spark.state import StateStore
 
     k, limit = CRASH_EPOCH, 6
-    fired, made = [], {}  # made: state -> the batch the source returned
+    fired, made = [], []  # made: (state, batch) of every iteration of both runs
 
     def crash(where):
         if where == point and not fired:
@@ -689,7 +689,7 @@ def test_crash_anywhere_resumes_to_exactly_once(spark, tmp_path, monkeypatch, po
             if state == k:
                 crash("iteration")
             df, nxt = super().iteration(state, spark_)
-            made[state] = df
+            made.append((state, df))
             return df, nxt
 
     class Sink(MemorySink if sink_kind == "ordinary" else ParquetEpochSink):
@@ -703,7 +703,7 @@ def test_crash_anywhere_resumes_to_exactly_once(spark, tmp_path, monkeypatch, po
     real_observed, real_commit = engine_mod.observed, StateStore.commit
 
     def observed(df, *a, **kw):
-        if df is made.get(k):
+        if any(b is df for s, b in made if s == k):
             crash("pin")
         return real_observed(df, *a, **kw)
 
@@ -739,6 +739,8 @@ def test_crash_anywhere_resumes_to_exactly_once(spark, tmp_path, monkeypatch, po
     assert not persisted_rdd_ids(spark) - before
     assert run() == (limit, limit)
     assert not persisted_rdd_ids(spark) - before
+    # also a batch marked for caching whose cache never filled
+    assert not any(b.storageLevel.useMemory for _, b in made if b is not None)
     if sink_kind == "ordinary":
         keys = [r.key for r in sink.rows]
     else:
