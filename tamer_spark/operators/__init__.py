@@ -1,7 +1,5 @@
 from tamer_spark.operators.asof import asof_join
 from tamer_spark.operators.bloom import (
-    bloom_build,
-    bloom_merge,
     bloom_merge_df,
     bloom_might_contain,
     bloom_words_df,
@@ -35,7 +33,6 @@ from tamer_spark.operators.dedup_incremental import (
     dedup_exact_incremental_bloom,
     dedup_minhash_incremental,
     dedup_minhash_incremental_bloom,
-    exact_bloom_index,
     exact_bloom_index_df,
     exact_index,
     minhash_band_index,
@@ -73,7 +70,6 @@ __all__ = [
     "dedup_exact_normalized",
     "dedup_exact_incremental",
     "dedup_exact_incremental_bloom",
-    "exact_bloom_index",
     "exact_bloom_index_df",
     "dedup_minhash_incremental",
     "dedup_minhash_incremental_bloom",
@@ -102,8 +98,6 @@ __all__ = [
     "gopher_signals",
     "bm25_topk",
     "rrf_fuse",
-    "bloom_build",
-    "bloom_merge",
     "bloom_merge_df",
     "bloom_might_contain",
     "bloom_words_df",

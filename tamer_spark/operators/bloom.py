@@ -15,10 +15,12 @@ keep in sync: the filter is built by a Spark job (positions explode →
 per-word ``bit_or`` aggregate, so shuffle AND any collect are bounded by
 the word count ``m_bits/64``, never the input) and probed by
 whole-stage-codegen bit tests (``shiftrightunsigned`` with a column shift
-amount via F.expr — the SQL form accepts non-literal shifts). Two
-delivery forms: small filters inline as plan literals; index-scale ones
-stay a distributed sizing-encoded words frame probed via broadcast hash
-joins (r11 — see ``bloom_words_df``).
+amount via F.expr — the SQL form accepts non-literal shifts). One form:
+the filter is a words frame whose column name encodes its sizing (see
+``bloom_words_df``). The probe reads the word count off that name and
+picks its strategy by it: a small filter is collected once into a plan
+literal, an index-scale one stays distributed and is probed by broadcast
+hash joins (r11).
 No analog in the reference engine (tamer has no text/retrieval
 operators); part of the training-data-pipeline extension surface.
 
@@ -29,21 +31,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_MASK64 = (1 << 64) - 1
-
-
-def _to_signed(word: int) -> int:
-    word &= _MASK64
-    return word - (1 << 64) if word >= (1 << 63) else word
-
 
 def _word_col(m_bits: int, k: int) -> str:
     """The word column's name carries (m_bits, k): ``word_m{m_bits}k{k}``.
     A mismatched build/probe or a mixed-modulus merge then fails LOUDLY
     at plan time (unresolved column / explicit ValueError) instead of
-    silently answering with the wrong bit positions — the df form's
-    structural analog of ``bloom_merge``'s word-count check. The encoding
-    survives parquet round-trips, which a Python-side attribute would not.
+    silently answering with the wrong bit positions, and the probe reads
+    its modulus, hash count and word count (``m_bits/64``) off the name
+    without running a job. The encoding survives parquet round-trips,
+    which a Python-side attribute would not.
     """
     return f"word_m{m_bits}k{k}"
 
@@ -62,20 +58,20 @@ def _parse_word_col(words: DataFrame) -> tuple[str, int, int]:
 
 
 def bloom_words_df(df: DataFrame, col: str, m_bits: int = 1 << 14, k: int = 5) -> DataFrame:
-    """Distributed bloom build: ``(w, word_m{m_bits}k{k})`` rows — NEVER
-    collected.
+    """Bloom build: ``(w, word_m{m_bits}k{k})`` rows, the one form of the
+    filter.
 
     Per-value probe positions fold into their word via a ``bit_or``
     aggregate (map-side combine), so the shuffle is bounded by the word
-    count ``m_bits/64``, never by the input. This is the index-scale form
-    of the filter: persist it as parquet (m_bits/64 rows ≈ 16 B each),
-    merge epochs with ``bloom_merge_df``, probe with
-    ``bloom_might_contain`` — the words frame stays JVM-side end to end
-    (a multi-MB filter routed through a driver-side Python list costs
-    tens of seconds PER ACTION in local-relation re-serialization,
-    measured r11). Absent ``w`` rows are implicit zero words. The word
-    column name encodes (m_bits, k) so build/probe/merge mismatches fail
-    loudly (see ``_word_col``).
+    count ``m_bits/64``, never by the input. Persist it as parquet
+    (m_bits/64 rows ≈ 16 B each), merge epochs with ``bloom_merge_df``,
+    probe with ``bloom_might_contain``. Only a filter of at most
+    ``_LITERAL_WORDS_MAX`` words is ever collected (into the probe's plan
+    literal); a larger one stays JVM-side end to end (a multi-MB filter
+    routed through a driver-side Python list costs tens of seconds PER
+    ACTION in local-relation re-serialization, measured r11). Absent ``w``
+    rows are implicit zero words. The word column name encodes (m_bits, k)
+    so build/probe/merge mismatches fail loudly (see ``_word_col``).
     """
     if m_bits % 64:
         raise ValueError("m_bits must be a multiple of 64")
@@ -119,74 +115,39 @@ def bloom_merge_df(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b).groupBy("w").agg(F.bit_or(wc_a).alias(wc_a))
 
 
-def bloom_build(df: DataFrame, col: str, m_bits: int = 1 << 14, k: int = 5) -> list[int]:
-    """Build bloom bit words (list of int64) over the values of ``col``.
-
-    The driver-side materialization of ``bloom_words_df`` — the collect is
-    bounded by the word count ``m_bits/64``. Right for SMALL filters whose
-    words inline as plan literals (decontamination-style benchmark sets);
-    for index-scale filters keep the words distributed
-    (``bloom_words_df``) instead of round-tripping them through Python.
-    """
-    wc = _word_col(m_bits, k)
-    rows = bloom_words_df(df, col, m_bits=m_bits, k=k).collect()
-    words = [0] * (m_bits // 64)
-    for r in rows:
-        words[r.w] = r[wc]
-    return words
-
-
-def bloom_merge(a: list[int], b: list[int]) -> list[int]:
-    """Union two blooms built with the SAME (m_bits, k): bitwise OR of the
-    words. Bloom union is exact — ``bloom_build(A ∪ B) == merge(build(A),
-    build(B))`` because positions are per-value — which is what makes a
-    bloom INDEX incrementally maintainable: each epoch ORs its surviving
-    batch's words in, O(m_bits) per epoch, never rebuilding over history.
-    """
-    if len(a) != len(b):
-        raise ValueError(f"bloom word counts differ ({len(a)} vs {len(b)}): same m_bits required")
-    return [_to_signed((x & _MASK64) | (y & _MASK64)) for x, y in zip(a, b)]
-
-
-# Words lists up to this many int64s (8 KB) inline as a plan literal; past
-# it, routing a Python list through the plan costs tens of seconds per
-# action (measured r11: a 2M-word local relation re-serializes on EVERY
-# job) — large filters must stay distributed (bloom_words_df) and probe
-# via the broadcast-join path below.
+# Filters up to this many int64 words (8 KB) probe as a plan literal; past
+# it, routing the words through the plan costs tens of seconds per action
+# (measured r11: a 2M-word local relation re-serializes on EVERY job), so
+# larger filters stay distributed and probe by broadcast joins.
 _LITERAL_WORDS_MAX = 1024
 
 
 def bloom_might_contain(
     df: DataFrame,
     col: str,
-    words: list[int] | DataFrame,
-    m_bits: int,
-    k: int = 5,
+    words: DataFrame,
     out: str = "bloom_hit",
 ) -> DataFrame:
-    """Attach boolean ``out``: bloom membership test of ``col``.
+    """Attach boolean ``out``: bloom membership test of ``col`` against a
+    ``bloom_words_df`` frame, probed at the (m_bits, k) its word column
+    encodes.
 
-    All-JVM, two delivery forms by filter size:
+    All-JVM. The strategy follows the word count ``m_bits/64``:
 
-    - ``words`` as ``list[int]`` (small filters): a foldable plan-literal
-      array; each probe is xxhash64 + pmod + element_at +
-      variable-amount shiftrightunsigned. Lists past
-      ``_LITERAL_WORDS_MAX`` are rejected — convert to the distributed
-      form (``bloom_words_df`` / one ``createDataFrame`` via Arrow)
-      rather than bloating every serialized plan copy.
-    - ``words`` as a ``bloom_words_df`` frame (index-scale filters): k
-      broadcast hash joins on the word index — map-side lookups, no
-      shuffle of ``df``, no driver round-trip of the words. Missing
-      ``w`` rows are zero words (left join + coalesce). The frame's
-      encoded (m_bits, k) must match the arguments — a mismatch raises
-      instead of probing the wrong bit positions (which would produce
-      false negatives, the direction blooms must never fail in).
+    - at most ``_LITERAL_WORDS_MAX`` words: the words are collected once
+      (absent ``w`` rows zero-filled) into a foldable plan-literal array;
+      each probe is xxhash64 + pmod + element_at + variable-amount
+      shiftrightunsigned. The collect is one job at construction time.
+    - more: k broadcast hash joins on the word index — map-side lookups,
+      no shuffle of ``df``, no driver round-trip of the words. Missing
+      ``w`` rows are zero words (left join + coalesce).
 
     Guaranteed no false negatives (build and probe share the hash exprs).
     """
     from tamer_spark.functions.ident import safe_ident
 
     safe_ident(col, "col"), safe_ident(out, "out")
+    wc, m_bits, k = _parse_word_col(words)
     # the one-parse selectExpr('*', ...) construction (r14) appends working
     # columns instead of withColumn-replacing — a caller column named like
     # one of them (or like ``out``) would become ambiguous and the final
@@ -201,58 +162,50 @@ def bloom_might_contain(
             "which collide with the probe's working columns or the requested "
             f"out={out!r}; rename them (or pass a different out=) first"
         )
-    if isinstance(words, DataFrame):
-        wc, frame_m, frame_k = _parse_word_col(words)
-        if (frame_m, frame_k) != (m_bits, k):
-            raise ValueError(
-                f"bloom_might_contain: words frame was built at m_bits="
-                f"{frame_m}, k={frame_k} but the probe asked for m_bits="
-                f"{m_bits}, k={k} — probing at a different modulus would "
-                "silently yield false negatives"
-            )
-        # one-parse SQL construction (r14): all k probe positions in ONE
-        # selectExpr, each word join condition and bit test one parse, the
-        # final conjunction one parse — instead of one RPC per operator
-        d = df.selectExpr(
-            "*",
-            *[
-                f"pmod(xxhash64({i}, {col}), {m_bits}) AS _bp{i}"
-                for i in range(k)
-            ],
-        )
-        drops = []
-        for i in range(k):
-            wi = words.selectExpr(f"w AS _w{i}", f"{wc} AS _wd{i}")
-            d = d.join(
-                F.broadcast(wi),
-                F.expr(f"CAST(_bp{i} DIV 64 AS BIGINT) = _w{i}"),
-                "left",
-            )
-            drops += [f"_bp{i}", f"_w{i}", f"_wd{i}"]
-        cond = " AND ".join(
-            f"((shiftrightunsigned(coalesce(_wd{i}, CAST(0 AS BIGINT)),"
-            f" CAST(_bp{i} % 64 AS INT)) & 1) = 1)"
-            for i in range(k)
-        )
-        return d.selectExpr("*", f"({cond}) AS {out}").drop(*drops)
-    if len(words) > _LITERAL_WORDS_MAX:
-        raise ValueError(
-            f"bloom_might_contain: {len(words)} words exceed the plan-literal "
-            f"budget ({_LITERAL_WORDS_MAX}); keep index-scale filters "
-            "distributed — build with bloom_words_df and pass the DataFrame"
-        )
-    from tamer_spark.functions.litfast import sql_longs
+    probe = _literal_probe if m_bits // 64 <= _LITERAL_WORDS_MAX else _join_probe
+    return probe(df, col, words, wc, m_bits, k, out)
 
-    # one-parse SQL construction (r14): the word literal, the k probe
-    # positions and the conjunction land in two selectExpr parses
-    bw = (
-        sql_longs(words)
-        if words
-        else "CAST(array() AS ARRAY<BIGINT>)"
-    )
+
+def _join_probe(
+    df: DataFrame, col: str, words: DataFrame, wc: str, m_bits: int, k: int, out: str
+) -> DataFrame:
+    # one-parse SQL construction (r14): all k probe positions in ONE
+    # selectExpr, each word join condition and bit test one parse, the
+    # final conjunction one parse — instead of one RPC per operator
     d = df.selectExpr(
         "*",
-        f"{bw} AS _bw",
+        *[f"pmod(xxhash64({i}, {col}), {m_bits}) AS _bp{i}" for i in range(k)],
+    )
+    drops = []
+    for i in range(k):
+        wi = words.selectExpr(f"w AS _w{i}", f"{wc} AS _wd{i}")
+        d = d.join(
+            F.broadcast(wi),
+            F.expr(f"CAST(_bp{i} DIV 64 AS BIGINT) = _w{i}"),
+            "left",
+        )
+        drops += [f"_bp{i}", f"_w{i}", f"_wd{i}"]
+    cond = " AND ".join(
+        f"((shiftrightunsigned(coalesce(_wd{i}, CAST(0 AS BIGINT)),"
+        f" CAST(_bp{i} % 64 AS INT)) & 1) = 1)"
+        for i in range(k)
+    )
+    return d.selectExpr("*", f"({cond}) AS {out}").drop(*drops)
+
+
+def _literal_probe(
+    df: DataFrame, col: str, words: DataFrame, wc: str, m_bits: int, k: int, out: str
+) -> DataFrame:
+    from tamer_spark.functions.litfast import sql_longs
+
+    bits = [0] * (m_bits // 64)
+    for r in words.collect():
+        bits[r.w] = r[wc]
+    # one-parse SQL construction (r14): the word literal, the k probe
+    # positions and the conjunction land in two selectExpr parses
+    d = df.selectExpr(
+        "*",
+        f"{sql_longs(bits)} AS _bw",
         *[f"pmod(xxhash64({i}, {col}), {m_bits}) AS _bp{i}" for i in range(k)],
     )
     cond = " AND ".join(
@@ -280,16 +233,10 @@ def decontaminate_with_bloom(
 
     Returns the surviving ``corpus_docs`` ids.
     """
-    # past the plan-literal budget the words stay a distributed words
-    # frame probed by broadcast joins — same answers, no driver round-trip
-    words: list[int] | DataFrame
-    if m_bits // 64 <= _LITERAL_WORDS_MAX:
-        words = bloom_build(bench_shingles, shingle_col, m_bits=m_bits, k=k)
-    else:
-        words = bloom_words_df(bench_shingles, shingle_col, m_bits=m_bits, k=k)
-    candidates = bloom_might_contain(
-        corpus_shingled, shingle_col, words, m_bits, k=k
-    ).filter(F.col("bloom_hit"))
+    words = bloom_words_df(bench_shingles, shingle_col, m_bits=m_bits, k=k)
+    candidates = bloom_might_contain(corpus_shingled, shingle_col, words).filter(
+        F.col("bloom_hit")
+    )
     tainted = (
         candidates.join(bench_shingles, shingle_col)  # exact verify, survivors only
         .select(id_col)

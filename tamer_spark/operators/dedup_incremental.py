@@ -175,48 +175,29 @@ def dedup_minhash_incremental(
     )
 
 
-def exact_bloom_index(
-    index_or_df: DataFrame,
-    col: str = "content_hash",
-    m_bits: int = 1 << 16,
-    k: int = 5,
-) -> list[int]:
-    """Bloom words (plan-literal form, small filters — ≤1024 words) over
-    an exact-dedup index's digests: the sidecar that frees later epochs
-    from scanning the exact index at all (probabilistic mode) or from
-    shuffling more than the batch's bloom-positive sliver (verify mode) —
-    see ``dedup_exact_incremental_bloom``.
-
-    Maintain it incrementally: ``bloom_merge(words,
-    exact_bloom_index(surviving_batch_keys))`` per epoch — bloom union is
-    exact, so the sidecar never needs rebuilding over history. Size
-    ``m_bits`` at ~10-14 bits/key for ~1-0.1 % FP. Past the plan-literal
-    budget (~6k keys at 10 bits/key) use ``exact_bloom_index_df`` — the
-    distributed form that never round-trips the words through the driver
-    and scales to ~1e9 index keys (the broadcast-join build side,
-    ~1-10 GB, is the binding constraint; beyond that shard the bloom by
-    digest prefix or fall back to the exact bucketed path).
-    """
-    from tamer_spark.operators.bloom import bloom_build
-
-    return bloom_build(index_or_df, col, m_bits=m_bits, k=k)
-
-
 def exact_bloom_index_df(
     index_or_df: DataFrame,
     col: str = "content_hash",
     m_bits: int = 1 << 27,
     k: int = 5,
 ) -> DataFrame:
-    """Distributed bloom sidecar: ``(w, word_m{m_bits}k{k})`` rows (the
-    column name encodes the sizing — see bloom._word_col), never collected —
-    the index-scale form (see ``exact_bloom_index``). Persist as parquet
-    (m_bits/64 rows); advance per epoch with ``bloom_merge_df(words_df,
-    exact_bloom_index_df(surviving_batch_keys, m_bits=...))``. Probe-side
-    it feeds ``dedup_exact_incremental_bloom`` directly — k broadcast
-    hash joins, no shuffle of the batch, no driver transfer (a 2M-word
-    filter routed through a Python list costs ~25 s PER ACTION in
-    local-relation re-serialization, measured r11).
+    """Bloom sidecar over an exact-dedup index's digests: ``(w,
+    word_m{m_bits}k{k})`` rows (the column name encodes the sizing — see
+    bloom._word_col). It frees later epochs from scanning the exact index
+    at all (probabilistic mode) or from shuffling more than the batch's
+    bloom-positive sliver (verify mode) — see
+    ``dedup_exact_incremental_bloom``, which it feeds directly.
+
+    Persist it as parquet (m_bits/64 rows) and advance it per epoch with
+    ``bloom_merge_df(words, exact_bloom_index_df(surviving_batch_keys,
+    m_bits=...))`` — bloom union is exact, so the sidecar never needs
+    rebuilding over history. Size ``m_bits`` at ~10-14 bits/key for
+    ~1-0.1 % FP. The probe picks its strategy from the frame's word count
+    (``bloom_might_contain``); at index scale it runs k broadcast hash
+    joins — no shuffle of the batch, no driver transfer — and scales to
+    ~1e9 index keys (the broadcast build side, ~1-10 GB, is the binding
+    constraint; beyond that shard the bloom by digest prefix or fall back
+    to the exact bucketed path).
     """
     from tamer_spark.operators.bloom import bloom_words_df
 
@@ -225,9 +206,8 @@ def exact_bloom_index_df(
 
 def dedup_exact_incremental_bloom(
     new_df: DataFrame,
-    words: list[int] | DataFrame,
+    words: DataFrame,
     m_bits: int | None = None,
-    k: int | None = None,
     index: DataFrame | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -257,31 +237,20 @@ def dedup_exact_incremental_bloom(
     In-batch dedup (min-id representative) is identical to the exact
     path, so the two modes differ only in cross-epoch membership.
 
-    ``words``: the plan-literal list (small sidecars,
-    ``exact_bloom_index``) or the distributed ``bloom_words_df`` frame
-    (index scale, ``exact_bloom_index_df``) — ``bloom_might_contain``
-    dispatches on the type; semantics are identical. For a frame,
-    ``m_bits``/``k`` default to the values encoded in its schema (pass
-    them only to ASSERT a sizing — a mismatch raises); for a list they
-    are REQUIRED, since a bare word list cannot carry its modulus.
+    ``words``: the ``exact_bloom_index_df`` frame; the probe reads its
+    (m_bits, k) from the frame. ``m_bits`` only ASSERTS a sizing: a
+    mismatch raises.
     """
     from tamer_spark.operators.bloom import _parse_word_col, bloom_might_contain
 
-    if isinstance(words, DataFrame):
-        _, frame_m, frame_k = _parse_word_col(words)
-        m_bits = frame_m if m_bits is None else m_bits
-        k = frame_k if k is None else k
-    else:
-        if m_bits is None:
-            raise ValueError(
-                "dedup_exact_incremental_bloom: m_bits is required with a "
-                "plan-literal word list — a bare list cannot carry its "
-                "modulus (the DataFrame form from exact_bloom_index_df "
-                "encodes both m_bits and k)"
-            )
-        k = 5 if k is None else k  # exact_bloom_index's default
+    wc, frame_m, _ = _parse_word_col(words)
+    if m_bits not in (None, frame_m):
+        raise ValueError(
+            f"dedup_exact_incremental_bloom: words frame {wc} was not built "
+            f"at m_bits={m_bits}"
+        )
     batch = _batch_representatives(new_df, text_col, id_col, normalize)
-    probed = bloom_might_contain(batch, "content_hash", words, m_bits, k=k)
+    probed = bloom_might_contain(batch, "content_hash", words)
     # column order pinned to dedup_exact_incremental's output (its key join
     # leads with content_hash) so the two paths are drop-in interchangeable
     # — including when new_df ALREADY carries a content_hash column (e.g. a
@@ -324,8 +293,6 @@ def minhash_bloom_index(
 def dedup_minhash_incremental_bloom(
     new_df: DataFrame,
     words: DataFrame,
-    m_bits: int | None = None,
-    bloom_k: int | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 16,
@@ -346,17 +313,13 @@ def dedup_minhash_incremental_bloom(
     itself is never touched: per-epoch cost is banding the batch
     (map-only) + k broadcast-join probes + one batch-keyed anti join.
 
-    ``m_bits``/``bloom_k`` default to the values encoded in ``words``'s
-    schema (the ``bloom_words_df`` contract) — pass them explicitly only
-    to ASSERT a particular sizing; a mismatch raises.
+    The probe reads its sizing from ``words``'s schema (the
+    ``bloom_words_df`` contract).
     """
-    from tamer_spark.operators.bloom import _parse_word_col, bloom_might_contain
+    from tamer_spark.operators.bloom import bloom_might_contain
 
-    _, frame_m, frame_k = _parse_word_col(words)
-    m_bits = frame_m if m_bits is None else m_bits
-    bloom_k = frame_k if bloom_k is None else bloom_k
     banded = _banded_sigs(new_df, text_col, id_col, k, bands, n, seed)
-    probed = bloom_might_contain(_band_key(banded), "_bk", words, m_bits, k=bloom_k)
+    probed = bloom_might_contain(_band_key(banded), "_bk", words)
     collided = probed.filter(F.col("bloom_hit")).select("doc_id").distinct()
     return new_df.join(
         collided, new_df[id_col] == collided["doc_id"], "left_anti"

@@ -338,9 +338,7 @@ def exsub_bloom_index_df(
 
 def exsub_dedup_incremental_bloom(
     new_df: DataFrame,
-    words: DataFrame | list[int],
-    m_bits: int | None = None,
-    k: int | None = None,
+    words: DataFrame,
     index: DataFrame | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -371,26 +369,16 @@ def exsub_dedup_incremental_bloom(
 
     Batch-local keeper election over the non-history windows is identical
     to the exact path, so the modes differ only in cross-epoch membership.
-    Advance the sidecar with ``bloom_merge_df(words,
-    exsub_bloom_index_df(distinct batch hashes))`` — the with_cache form
-    exposes the persisted hash stage so the advance re-reads no text."""
-    from tamer_spark.operators.bloom import _parse_word_col, bloom_might_contain
+    ``words`` is the ``exsub_bloom_index_df`` frame; the probe reads its
+    (m_bits, k) from the frame. Advance the sidecar with
+    ``bloom_merge_df(words, exsub_bloom_index_df(distinct batch hashes))``
+    — the with_cache form exposes the persisted hash stage so the advance
+    re-reads no text."""
+    from tamer_spark.operators.bloom import bloom_might_contain
     from tamer_spark.operators.dedup import _release_on_gc
 
-    if isinstance(words, DataFrame):
-        _, frame_m, frame_k = _parse_word_col(words)
-        m_bits = frame_m if m_bits is None else m_bits
-        k = frame_k if k is None else k
-    else:
-        if m_bits is None:
-            raise ValueError(
-                "exsub_dedup_incremental_bloom: m_bits is required with a "
-                "plan-literal word list — a bare list cannot carry its "
-                "modulus (exsub_bloom_index_df's frame form encodes both)"
-            )
-        k = 5 if k is None else k
     wh = token_window_hashes(new_df, text_col, id_col, length).persist()
-    probed = bloom_might_contain(wh, "h", words, m_bits, k=k)
+    probed = bloom_might_contain(wh, "h", words)
     pos = probed.filter(F.col("bloom_hit")).drop("bloom_hit")
     local = probed.filter(~F.col("bloom_hit")).drop("bloom_hit")
     if index is None:

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import re
 from dataclasses import dataclass
 from typing import Callable
 
@@ -60,18 +59,8 @@ class Query:
     doc: str = ""
 
 
-_SCAN_FLOOR_CONF = "spark.tamer_spark.scan.parallelismFloor"
-_SCAN_FLOOR_MIN_BYTES_CONF = "spark.tamer_spark.scan.parallelismFloor.minBytes"
-
-
-def _parse_bytes_conf(v, default: int) -> int:
-    """'134217728' / '128m' / '128MB' → bytes; anything unparsable → default."""
-    m = re.match(r"^\s*(\d+)\s*([kmg]?)b?\s*$", str(v), re.IGNORECASE)
-    if not m:
-        return default
-    return int(m.group(1)) * {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}[
-        m.group(2).lower()
-    ]
+# files under this size (broadcast-sized dims) never get the floor
+_SCAN_FLOOR_MIN_BYTES = 32 << 10
 
 
 def _scan_parallelism_floor(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -102,7 +91,7 @@ def _scan_parallelism_floor(spark: SparkSession, df: DataFrame, path: str) -> Da
     ``sc.defaultParallelism``, so a production table (100 TB ≈ 800k splits
     ≫ cores) never fires and the plan carries no extra exchange; the
     driver's lower-core bench run adapts the same way (defaultParallelism
-    follows ``local[N]``). Files under ``minBytes`` (default 32 KB —
+    follows ``local[N]``). Files under ``_SCAN_FLOOR_MIN_BYTES`` (32 KB —
     broadcast-sized dims like region/nation/supplier) are left alone: the
     exchange would cost more than the parallelism buys. Values are
     partition-count independent by the repo's determinism conventions (no
@@ -111,24 +100,16 @@ def _scan_parallelism_floor(spark: SparkSession, df: DataFrame, path: str) -> Da
     oracle hashes are unchanged; the driver re-verifies every gate. Plan
     pins are unaffected: ``plans.PlanShape.shuffles`` counts keyed
     exchanges only, and this repair is RoundRobinPartitioning (pinned in
-    tests/test_scan_floor.py, including the at-scale no-op). Set
-    ``spark.tamer_spark.scan.parallelismFloor=off`` to disable.
+    tests/test_scan_floor.py, including the at-scale no-op).
     """
-    if str(spark.conf.get(_SCAN_FLOOR_CONF, "auto")).lower() == "off":
-        return df
     try:
         n_bytes = os.path.getsize(path)
     except OSError:
         # non-local path (hdfs/s3a): tables at that scale are splittable
         return df
-    if n_bytes < _parse_bytes_conf(
-        spark.conf.get(_SCAN_FLOOR_MIN_BYTES_CONF, "32768"), 32768
-    ):
+    if n_bytes < _SCAN_FLOOR_MIN_BYTES:
         return df
-    max_pb = _parse_bytes_conf(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20)),
-        128 << 20,
-    )
+    max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     target = spark.sparkContext.defaultParallelism
     if -(-n_bytes // max_pb) >= target:
         return df
@@ -2260,13 +2241,13 @@ _MH_INCR_ORACLE_TAIL = f"""
     ),
 )
 def dedup_incremental_q(spark, sf):
-    from tamer_spark.operators.bloom import bloom_merge
+    from tamer_spark.operators.bloom import bloom_merge_df
     from tamer_spark.operators.dedup_incremental import (
         append_keys,
         dedup_exact_incremental,
         dedup_exact_incremental_bloom,
         dedup_minhash_incremental,
-        exact_bloom_index,
+        exact_bloom_index_df,
         exact_index,
         minhash_band_index,
     )
@@ -2277,25 +2258,26 @@ def dedup_incremental_q(spark, sf):
     e2 = d.filter(F.col("doc_id") % 3 == 2)
     # localCheckpoint the frames every later stage re-reads (idx0: s1 + b1
     # + the w0 collect; s1: its gate branch + idx1 + the w1 collect) — the
-    # bloom builds COLLECT at construction time, so without the checkpoints
-    # each epoch's full plan would execute once during construction and
-    # again when the gate is graded (repo convention: stage boundaries
-    # localCheckpoint, see operators/cc.py)
+    # sidecars are small (1024 words), so each bloom probe COLLECTS its
+    # words at construction time, and without the checkpoints each epoch's
+    # full plan would execute once during construction and again when the
+    # gate is graded (repo convention: stage boundaries localCheckpoint,
+    # see operators/cc.py)
     idx0 = exact_index(e0).localCheckpoint()
     s1 = dedup_exact_incremental(e1, idx0).localCheckpoint()
     idx1 = append_keys(idx0, s1.select("content_hash"))
     s2 = dedup_exact_incremental(e2, idx1)
 
     # bloom-sidecar replay (verify mode: bit-identical to exact) with the
-    # sidecar maintained incrementally via bloom_merge, as a real loop
+    # sidecar maintained incrementally via bloom_merge_df, as a real loop
     # would. w1 advances from s1's keys — b1 ≡ s1 by the verify-mode
     # contract (asserted by this very gate), so building the merge input
     # from s1 avoids executing b1's plan twice
     m = 1 << 16
-    w0 = exact_bloom_index(idx0, m_bits=m)
-    b1 = dedup_exact_incremental_bloom(e1, w0, m_bits=m, index=idx0)
-    w1 = bloom_merge(w0, exact_bloom_index(s1.select("content_hash"), m_bits=m))
-    b2 = dedup_exact_incremental_bloom(e2, w1, m_bits=m, index=idx1)
+    w0 = exact_bloom_index_df(idx0, m_bits=m)
+    b1 = dedup_exact_incremental_bloom(e1, w0, index=idx0)
+    w1 = bloom_merge_df(w0, exact_bloom_index_df(s1.select("content_hash"), m_bits=m))
+    b2 = dedup_exact_incremental_bloom(e2, w1, index=idx1)
 
     # near-dup tier: epoch 1 vs epoch 0's band index, operator defaults ==
     # the gate constants (k=_K, bands=_BANDS, n=_N, seed=42) so the oracle's
@@ -2336,7 +2318,6 @@ def dedup_incremental_q(spark, sf):
     # a hash mismatch). Sidecar advanced by bloom_merge_df with epoch 1's
     # distinct hashes from the SAME cached stage the removal used (bh1),
     # exactly as a real loop would — never rebuilt over history.
-    from tamer_spark.operators.bloom import bloom_merge_df
     from tamer_spark.operators.runs import (
         exsub_bloom_index_df,
         exsub_dedup_incremental_bloom,

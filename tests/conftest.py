@@ -15,11 +15,34 @@ def spark():
     yield s
 
 
-def persisted_rdd_ids(spark) -> set[int]:
-    """Ids of the RDDs the session has cached right now."""
-    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = rdds.keysIterator()
-    return {it.next() for _ in range(rdds.size())}
+class CacheWatch:
+    """What the shared session holds cached, taken when made; ``added()``
+    names what was cached since and is still held.
+
+    It reads both the persisted RDDs and the CacheManager's entries:
+    ``persist()`` makes an entry at once but an RDD only when an action
+    fills it, so a frame marked for caching whose pass never ran shows only
+    in the entries. Other tests' frames are released by GC finalizers at
+    any time, so only growth counts."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.rdds, self.entries = self._held()
+
+    def _held(self) -> tuple[set[int], int]:
+        rdds = self.spark.sparkContext._jsc.sc().getPersistentRDDs()
+        it = rdds.keysIterator()
+        entries = self.spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+        return {it.next() for _ in range(rdds.size())}, entries
+
+    def added(self) -> dict:
+        rdds, entries = self._held()
+        out = {}
+        if rdds - self.rdds:
+            out["rdd_ids"] = sorted(rdds - self.rdds)
+        if entries > self.entries:
+            out["cache_entries"] = entries - self.entries
+        return out
 
 
 #: the four steps of a state commit, in order: a crash at one of the first

@@ -76,3 +76,63 @@ def test_bench_compare_consumes_r13_attribution_fields(tmp_path, capsys):
         sys.argv = argv
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["shuffle_calib_ratio"] is None
+
+
+def test_bench_names_and_keywords_resolve():
+    """bench.py is frozen, so the package must keep what it uses: every
+    ``tamer_spark`` name it imports or reads as ``<module>.<name>``
+    resolves, and every call of one binds to its signature (positional
+    count and keywords). A rename or a dropped keyword would otherwise
+    show only when the bench runs."""
+    import ast
+    import importlib
+    import inspect
+
+    def resolve(module, name):
+        mod = importlib.import_module(module)
+        if not hasattr(mod, name):
+            try:  # a submodule binds itself to its package on import
+                importlib.import_module(f"{module}.{name}")
+            except ImportError:
+                pass
+        assert hasattr(mod, name), f"bench.py imports {module}.{name}"
+        return getattr(mod, name)
+
+    bound = {}  # name in bench.py -> the package object it is bound to
+
+    def bind(name, obj):
+        assert bound.setdefault(name, obj) is obj, f"{name} is bound to two objects"
+
+    tree = ast.parse(Path(bench.__file__).read_text())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "tamer_spark":
+            for a in node.names:
+                bind(a.asname or a.name, resolve(node.module, a.name))
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] == "tamer_spark":
+                    bind(a.asname or a.name, importlib.import_module(a.name))
+    modules = {n for n, obj in bound.items() if inspect.ismodule(obj)}
+    assert "Q" in modules
+
+    def target(func):
+        if isinstance(func, ast.Name):
+            return bound.get(func.id)
+        if isinstance(func, ast.Attribute) and getattr(func.value, "id", None) in modules:
+            return getattr(bound[func.value.id], func.attr)
+        return None
+
+    calls = 0
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and getattr(node.value, "id", None) in modules:
+            mod = bound[node.value.id]
+            assert hasattr(mod, node.attr), f"bench.py:{node.lineno} reads {mod.__name__}.{node.attr}"
+        if isinstance(node, ast.Call) and callable(fn := target(node.func)):
+            if any(isinstance(a, ast.Starred) for a in node.args) or any(k.arg is None for k in node.keywords):
+                continue
+            try:
+                inspect.signature(fn).bind(*node.args, **{k.arg: k.value for k in node.keywords})
+            except TypeError as e:
+                raise AssertionError(f"bench.py:{node.lineno} calls {fn.__name__}: {e}") from None
+            calls += 1
+    assert calls > 50, calls

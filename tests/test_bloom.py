@@ -6,8 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from tamer_spark.operators.bloom import (
-    bloom_build,
     bloom_might_contain,
+    bloom_words_df,
     decontaminate_with_bloom,
 )
 from tamer_spark.plans import plan_shape
@@ -21,25 +21,23 @@ def values(spark):
 
 
 def test_no_false_negatives(spark, values):
-    words = bloom_build(values, "s", m_bits=1 << 12, k=5)
-    probed = bloom_might_contain(values, "s", words, 1 << 12, k=5)
+    words = bloom_words_df(values, "s", m_bits=1 << 12, k=5)
+    probed = bloom_might_contain(values, "s", words)
     assert probed.filter(~F.col("bloom_hit")).count() == 0
 
 
 def test_misses_mostly_rejected_at_sane_size(spark):
     members = spark.createDataFrame([(f"in-{i}",) for i in range(100)], "s string")
     others = spark.createDataFrame([(f"out-{i}",) for i in range(1000)], "s string")
-    words = bloom_build(members, "s", m_bits=1 << 14, k=5)
-    hits = bloom_might_contain(others, "s", words, 1 << 14, k=5).filter(
-        F.col("bloom_hit")
-    )
+    words = bloom_words_df(members, "s", m_bits=1 << 14, k=5)
+    hits = bloom_might_contain(others, "s", words).filter(F.col("bloom_hit"))
     # 100 members in 16384 bits with k=5 -> fp ~ 1e-5; allow generous slack
     assert hits.count() <= 5
 
 
 def test_build_rejects_unaligned_m(spark, values):
     with pytest.raises(ValueError):
-        bloom_build(values, "s", m_bits=100)
+        bloom_words_df(values, "s", m_bits=100)
 
 
 def _exact_anti(corpus_shingled, bench, docs):
@@ -63,41 +61,40 @@ def test_bitwise_identical_to_exact_anti_join(spark, m_bits):
     assert got == expected
 
 
-def test_distributed_words_frame_matches_literal_path(spark):
+def test_distributed_words_frame_matches_literal_path(spark, monkeypatch):
     # r11: index-scale filters keep the words DISTRIBUTED — (w, word) rows
     # probed via k broadcast hash joins. Membership answers must be
-    # identical bit for bit to the small-filter plan-literal path.
+    # identical bit for bit to the small-filter plan-literal probe.
     from tamer_spark.operators import bloom as B
 
     vals = spark.createDataFrame([(f"v{i}",) for i in range(200)], "s string")
     probe = spark.createDataFrame(
         [(f"v{i}",) for i in range(150, 250)] + [(f"miss{i}",) for i in range(50)], "s string"
     )
-    m = 1 << 14
-    words = B.bloom_build(vals, "s", m_bits=m)
-    words_df = B.bloom_words_df(vals, "s", m_bits=m)
-    via_df = {
-        (r.s, r.bloom_hit) for r in B.bloom_might_contain(probe, "s", words_df, m).collect()
-    }
-    via_literal = {
-        (r.s, r.bloom_hit) for r in B.bloom_might_contain(probe, "s", words, m).collect()
-    }
-    assert via_df == via_literal
-    # no false negatives on the df path (v150..v199 are in the built set)
-    assert all(hit for s, hit in via_df if s.startswith("v") and int(s[1:]) < 200)
+    words = B.bloom_words_df(vals, "s", m_bits=1 << 14)
+    via_literal = {(r.s, r.bloom_hit) for r in B.bloom_might_contain(probe, "s", words).collect()}
+    monkeypatch.setattr(B, "_LITERAL_WORDS_MAX", 0)  # same filter, join probe
+    via_joins = {(r.s, r.bloom_hit) for r in B.bloom_might_contain(probe, "s", words).collect()}
+    assert via_joins == via_literal
+    # no false negatives on the join probe (v150..v199 are in the built set)
+    assert all(hit for s, hit in via_joins if s.startswith("v") and int(s[1:]) < 200)
 
 
-def test_oversized_literal_list_is_rejected(spark):
-    # a multi-MB plan-literal words array re-serializes on every job
-    # (~25 s/action measured at 2M words) — the list path refuses past the
-    # budget and names the distributed alternative
-    import pytest
-
+@pytest.mark.parametrize("n_words, joins", [(1024, 0), (1025, 3)])
+def test_probe_strategy_follows_the_word_count(spark, n_words, joins):
+    # the frame's column name states its word count (m_bits/64); up to the
+    # literal budget the probe is a plan literal with no join, past it k
+    # broadcast joins — and both find every member
     from tamer_spark.operators import bloom as B
 
-    df = spark.createDataFrame([("x",)], "s string")
-    with pytest.raises(ValueError, match="bloom_words_df"):
-        B.bloom_might_contain(df, "s", [0] * (B._LITERAL_WORDS_MAX + 1), 1 << 17)
+    vals = spark.createDataFrame([(f"v{i}",) for i in range(50)], "s string")
+    probe = spark.createDataFrame([("v7",), ("v49",), ("nope",)], "s string")
+    words = B.bloom_words_df(vals, "s", m_bits=64 * n_words, k=3)
+    probed = B.bloom_might_contain(probe, "s", words)
+    shape = plan_shape(probed)
+    assert shape.nodes["BroadcastHashJoin"] == joins, shape
+    assert not shape.count("SortMergeJoin", "ShuffledHashJoin"), shape
+    assert {r.s for r in probed.filter("bloom_hit").collect()} >= {"v7", "v49"}
 
 
 def test_merge_df_equals_build_over_union(spark):
@@ -118,9 +115,10 @@ def test_merge_df_equals_build_over_union(spark):
 
 
 def test_mismatched_sizing_is_structurally_rejected(spark):
-    # r11 review: the df form encodes (m_bits, k) in the word column name,
-    # so a mixed-modulus merge or a wrong-modulus probe fails LOUDLY — a
-    # silent mismatch would produce false NEGATIVES (kept duplicates)
+    # r11 review: the frame encodes (m_bits, k) in the word column name,
+    # so a mixed-modulus merge fails LOUDLY — a silent mismatch would
+    # produce false NEGATIVES (kept duplicates) — and the probe takes its
+    # modulus from the same name, so it cannot probe at another one
     import pytest
 
     from tamer_spark.operators import bloom as B
@@ -130,10 +128,10 @@ def test_mismatched_sizing_is_structurally_rejected(spark):
     w14 = B.bloom_words_df(vals, "v", m_bits=1 << 14)
     with pytest.raises(ValueError, match="same \\(m_bits, k\\)"):
         B.bloom_merge_df(w12, w14)
-    with pytest.raises(ValueError, match="different modulus|false negatives"):
-        B.bloom_might_contain(vals, "v", w12, 1 << 14)
     with pytest.raises(ValueError, match="not a bloom words frame"):
         B.bloom_merge_df(vals, w12)
+    with pytest.raises(ValueError, match="not a bloom words frame"):
+        B.bloom_might_contain(vals, "v", vals)
 
 
 def test_df_probe_plan_is_broadcast_joins_no_shuffle_of_probe_side(spark):
@@ -143,8 +141,8 @@ def test_df_probe_plan_is_broadcast_joins_no_shuffle_of_probe_side(spark):
 
     vals = spark.createDataFrame([(f"v{i}",) for i in range(50)], "s string")
     probe = spark.range(1000).selectExpr("CAST(id AS STRING) AS s")
-    words_df = B.bloom_words_df(vals, "s", m_bits=1 << 12, k=3)
-    shape = plan_shape(B.bloom_might_contain(probe, "s", words_df, 1 << 12, k=3))
+    words_df = B.bloom_words_df(vals, "s", m_bits=1 << 17, k=3)  # past the literal budget
+    shape = plan_shape(B.bloom_might_contain(probe, "s", words_df))
     assert shape.nodes["BroadcastHashJoin"] == 3, shape
     assert not shape.count("SortMergeJoin", "ShuffledHashJoin"), shape
 

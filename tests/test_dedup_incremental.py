@@ -217,11 +217,11 @@ def test_bloom_probabilistic_never_false_keeps(spark):
     # true duplicate (in-index digest) must be dropped in probabilistic mode
     from tamer_spark.operators.dedup_incremental import (
         dedup_exact_incremental_bloom,
-        exact_bloom_index,
+        exact_bloom_index_df,
     )
 
     old, new = _bloom_fixture(spark)
-    words = exact_bloom_index(exact_index(old), m_bits=_M)
+    words = exact_bloom_index_df(exact_index(old), m_bits=_M)
     got = sorted(r.doc_id for r in dedup_exact_incremental_bloom(new, words, m_bits=_M).collect())
     # exact survivors are {11, 14}; probabilistic may FALSE-DROP novel docs
     # (never keep a dup), so got ⊆ {11, 14} and 10/12/13 are never present
@@ -233,12 +233,12 @@ def test_bloom_probabilistic_never_false_keeps(spark):
 def test_bloom_verify_mode_is_bit_identical_to_exact(spark):
     from tamer_spark.operators.dedup_incremental import (
         dedup_exact_incremental_bloom,
-        exact_bloom_index,
+        exact_bloom_index_df,
     )
 
     old, new = _bloom_fixture(spark)
     idx = exact_index(old)
-    words = exact_bloom_index(idx, m_bits=_M)
+    words = exact_bloom_index_df(idx, m_bits=_M)
     exact = dedup_exact_incremental(new, idx)
     bloom = dedup_exact_incremental_bloom(new, words, m_bits=_M, index=idx)
     assert sorted(map(tuple, bloom.collect())) == sorted(map(tuple, exact.collect()))
@@ -247,31 +247,35 @@ def test_bloom_verify_mode_is_bit_identical_to_exact(spark):
 def test_bloom_merge_equals_build_over_union(spark):
     # bloom union is EXACT: merge(build(A), build(B)) == build(A ∪ B) —
     # the property that makes the sidecar incrementally maintainable
-    from tamer_spark.operators.bloom import bloom_build, bloom_merge
+    from tamer_spark.operators.bloom import bloom_merge_df
+    from tamer_spark.operators.dedup_incremental import exact_bloom_index_df
 
     a = spark.createDataFrame([(f"a{i}",) for i in range(20)], "v string")
     b = spark.createDataFrame([(f"b{i}",) for i in range(20)], "v string")
     u = a.unionByName(b)
-    merged = bloom_merge(bloom_build(a, "v", m_bits=_M), bloom_build(b, "v", m_bits=_M))
-    assert merged == bloom_build(u, "v", m_bits=_M)
+    wa, wb = (exact_bloom_index_df(x, "v", m_bits=_M) for x in (a, b))
+    merged = bloom_merge_df(wa, wb)
+    assert sorted(map(tuple, merged.collect())) == sorted(
+        map(tuple, exact_bloom_index_df(u, "v", m_bits=_M).collect())
+    )
     # and mismatched sizes are rejected, not silently mangled
     import pytest
 
-    with pytest.raises(ValueError, match="same m_bits"):
-        bloom_merge([0] * 4, [0] * 8)
+    with pytest.raises(ValueError, match="same \\(m_bits, k\\)"):
+        bloom_merge_df(wa, exact_bloom_index_df(b, "v", m_bits=2 * _M))
 
 
 def test_bloom_epoch_loop_with_incremental_sidecar_matches_exact(spark):
     """Three epochs maintaining ONLY the bloom sidecar (verify mode carries
-    the exact index too): per-epoch sidecar update is bloom_merge of the
+    the exact index too): per-epoch sidecar update is bloom_merge_df of the
     surviving batch's words — and verify mode tracks the exact loop
     bit-for-bit across every epoch."""
     import random
 
-    from tamer_spark.operators.bloom import bloom_merge
+    from tamer_spark.operators.bloom import bloom_merge_df
     from tamer_spark.operators.dedup_incremental import (
         dedup_exact_incremental_bloom,
-        exact_bloom_index,
+        exact_bloom_index_df,
     )
 
     rng = random.Random(7)
@@ -279,14 +283,14 @@ def test_bloom_epoch_loop_with_incremental_sidecar_matches_exact(spark):
     epochs = [rows[0:40], rows[40:80], rows[80:120]]
 
     idx = spark.createDataFrame([], "content_hash string")
-    words = exact_bloom_index(idx, m_bits=_M)
+    words = exact_bloom_index_df(idx, m_bits=_M)
     got: list[int] = []
     for ep in epochs:
         batch = _docs(spark, ep)
         s = dedup_exact_incremental_bloom(batch, words, m_bits=_M, index=idx)
         got.extend(r.doc_id for r in s.collect())
         keys = s.select("content_hash")
-        words = bloom_merge(words, exact_bloom_index(keys, m_bits=_M))
+        words = bloom_merge_df(words, exact_bloom_index_df(keys, m_bits=_M))
         idx = append_keys(idx, keys)
 
     want: list[int] = []
@@ -301,14 +305,15 @@ def test_bloom_epoch_loop_with_incremental_sidecar_matches_exact(spark):
 
 def test_bloom_probabilistic_plan_has_no_join_at_all(spark):
     # the whole point of probabilistic mode: NO index access — the plan must
-    # contain no join operator of any kind (the bloom is a plan literal)
+    # contain no join operator of any kind (a sidecar within the literal
+    # budget probes as a plan literal)
     from tamer_spark.operators.dedup_incremental import (
         dedup_exact_incremental_bloom,
-        exact_bloom_index,
+        exact_bloom_index_df,
     )
 
     old, new = _bloom_fixture(spark)
-    words = exact_bloom_index(exact_index(old), m_bits=_M)
+    words = exact_bloom_index_df(exact_index(old), m_bits=_M)
     shape = plan_shape(dedup_exact_incremental_bloom(new, words, m_bits=_M))
     assert not [n for n in shape.nodes if "Join" in n], shape
 
@@ -344,7 +349,7 @@ def test_minhash_bloom_drops_every_index_collider_keeps_most_novel(spark):
     m = 1 << 14
     words = minhash_bloom_index(idx, m_bits=m)
     exact = {r.doc_id for r in dedup_minhash_incremental(new, idx).collect()}
-    bloom = {r.doc_id for r in dedup_minhash_incremental_bloom(new, words, m_bits=m).collect()}
+    bloom = {r.doc_id for r in dedup_minhash_incremental_bloom(new, words).collect()}
     # bloom survivors ⊆ exact survivors (bloom can only drop MORE)
     assert bloom <= exact
     # the guaranteed drops (10, 12) are dropped by both
@@ -369,7 +374,7 @@ def test_minhash_bloom_sidecar_epoch_loop_advances_by_merge(spark):
     words = minhash_bloom_index(minhash_band_index(seed_docs), m_bits=m)
 
     ep1 = _docs(spark, [(10, "iota kappa lambda mu nu xi omicron pi rho sigma")])
-    s1 = dedup_minhash_incremental_bloom(ep1, words, m_bits=m)
+    s1 = dedup_minhash_incremental_bloom(ep1, words)
     assert {r.doc_id for r in s1.collect()} == {10}
     words = bloom_merge_df(words, minhash_bloom_index(minhash_band_index(s1), m_bits=m))
 
@@ -380,7 +385,7 @@ def test_minhash_bloom_sidecar_epoch_loop_advances_by_merge(spark):
             (21, "tau upsilon phi chi psi omega one two three four"),
         ],
     )
-    s2 = {r.doc_id for r in dedup_minhash_incremental_bloom(ep2, words, m_bits=m).collect()}
+    s2 = {r.doc_id for r in dedup_minhash_incremental_bloom(ep2, words).collect()}
     assert s2 == {21}
 
 
@@ -401,18 +406,20 @@ def test_minhash_bloom_plan_probes_are_broadcast_joins(spark):
     import tempfile
 
     with tempfile.TemporaryDirectory() as td:
-        minhash_bloom_index(minhash_band_index(old), m_bits=1 << 14).write.mode(
+        # 2048 words: past the literal budget, so the probe joins
+        minhash_bloom_index(minhash_band_index(old), m_bits=1 << 17).write.mode(
             "overwrite"
         ).parquet(td + "/w")
         words = spark.read.parquet(td + "/w")
-        shape = plan_shape(dedup_minhash_incremental_bloom(new, words, m_bits=1 << 14))
+        shape = plan_shape(dedup_minhash_incremental_bloom(new, words))
     assert shape.nodes["BroadcastHashJoin"] == 5, shape  # bloom_k probes
     assert not shape.nodes["CartesianProduct"], shape
 
 
 def test_bloom_frame_defaults_derive_from_schema_and_existing_hash_col_ok(spark):
-    # r11 review fixes, pinned: (a) m_bits/k default from the words frame's
-    # encoded schema — no silent build/probe modulus mismatch is possible;
+    # r11 review fixes, pinned: (a) m_bits/k come from the words frame's
+    # encoded schema — no silent build/probe modulus mismatch is possible,
+    # and an asserted m_bits that disagrees raises;
     # (b) a new_df that ALREADY carries content_hash (a prior survivor
     # frame) round-trips without duplicate columns in either mode
     from tamer_spark.operators.dedup_incremental import (
@@ -423,7 +430,7 @@ def test_bloom_frame_defaults_derive_from_schema_and_existing_hash_col_ok(spark)
     old, new = _bloom_fixture(spark)
     idx = exact_index(old)
     words = exact_bloom_index_df(idx, m_bits=1 << 12)
-    # no m_bits/k passed: derived from the frame
+    # no m_bits passed: derived from the frame
     got = sorted(r.doc_id for r in dedup_exact_incremental_bloom(new, words).collect())
     assert got == [11, 14]
     # feed a survivor frame (has content_hash) back through both modes
@@ -433,14 +440,10 @@ def test_bloom_frame_defaults_derive_from_schema_and_existing_hash_col_ok(spark)
     again_verify = dedup_exact_incremental_bloom(survivors, words, index=idx)
     assert again_verify.columns.count("content_hash") == 1
     assert sorted(r.doc_id for r in again_verify.collect()) == [11, 14]
-    # list form without m_bits is rejected (a bare list carries no modulus)
     import pytest
 
-    from tamer_spark.operators.dedup_incremental import exact_bloom_index
-
-    wl = exact_bloom_index(idx, m_bits=1 << 12)
-    with pytest.raises(ValueError, match="m_bits is required"):
-        dedup_exact_incremental_bloom(new, wl)
+    with pytest.raises(ValueError, match="not built at m_bits=16384"):
+        dedup_exact_incremental_bloom(new, words, m_bits=1 << 14)
 
 
 def test_incremental_trio_differential_fuzz(spark):
@@ -454,7 +457,7 @@ def test_incremental_trio_differential_fuzz(spark):
 
     from tamer_spark.operators.dedup_incremental import (
         dedup_exact_incremental_bloom,
-        exact_bloom_index,
+        exact_bloom_index_df,
     )
 
     @settings(
@@ -475,7 +478,7 @@ def test_incremental_trio_differential_fuzz(spark):
         old_df, new_df = _docs(spark, old), _docs(spark, new)
         idx = exact_index(old_df)
         m = 1 << 12
-        wl = exact_bloom_index(idx, m_bits=m)
+        wl = exact_bloom_index_df(idx, m_bits=m)
 
         exact = {r.doc_id for r in dedup_exact_incremental(new_df, idx).collect()}
         verify = {

@@ -17,7 +17,7 @@ from tamer_spark.engine import Pipeline, RetryPolicy, pin, unpin
 from tamer_spark.errors import TamerError
 from tamer_spark.sinks import MemorySink
 from tamer_spark.state import fingerprint
-from tests.conftest import COMMIT_STEPS, Crash, crash_commit, persisted_rdd_ids
+from tests.conftest import COMMIT_STEPS, CacheWatch, Crash, crash_commit
 
 
 class CountingSource:
@@ -68,7 +68,7 @@ def test_crash_resume_no_dupes_no_loss(spark, tmp_path):
     failure discards it unwritten, so the state stays at the failed epoch
     and no cached batch is left behind."""
     source = RecordingSource()
-    before = persisted_rdd_ids(spark)
+    cache = CacheWatch(spark)
     sink = MemorySink(fail_on_epochs={5})
     pipe = Pipeline(
         source, sink, str(tmp_path / "cp"), retry=RetryPolicy(retries=1, base_delay_s=0.0)
@@ -79,8 +79,8 @@ def test_crash_resume_no_dupes_no_loss(spark, tmp_path):
     doc = pipe._store().load()
     assert (doc.epoch, doc.state) == (5, 5)
     assert [r.key for r in sink.rows] == [1, 2, 3, 4, 5]
-    leaked = persisted_rdd_ids(spark) - before
-    assert not leaked, f"failed run leaked cached RDD ids: {leaked}"
+    leaked = cache.added()
+    assert not leaked, f"failed run leaked caches: {leaked}"
     # simulate restart: fresh sink failure config, same checkpoint
     sink.fail_on_epochs = set()
     final = Pipeline(CountingSource(), sink, str(tmp_path / "cp")).run(
@@ -151,13 +151,13 @@ def test_no_cached_batches_left_after_run(spark, tmp_path):
     must not add any persisted RDD of its own.
     """
 
-    before = persisted_rdd_ids(spark)
+    cache = CacheWatch(spark)
     sink = MemorySink()
     Pipeline(CountingSource(limit=3), sink, str(tmp_path / "cp")).run(
         spark, until=lambda s: s >= 3
     )
-    leaked = persisted_rdd_ids(spark) - before
-    assert not leaked, f"run leaked cached RDD ids: {leaked}"
+    leaked = cache.added()
+    assert not leaked, f"run leaked caches: {leaked}"
 
 
 def _jobs_in(spark, group, action):
@@ -214,6 +214,18 @@ def test_pin_whose_observation_fails_releases_the_frame(spark):
     with pytest.raises(Exception, match="no_such_column"):
         pin(df, bad=F.max("no_such_column"))
     assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
+
+
+def test_cache_watch_sees_a_frame_marked_but_never_run(spark):
+    """The leak check counts CacheManager entries as well as RDDs: a frame
+    that persist() marked but no action filled has no RDD yet."""
+    cache = CacheWatch(spark)
+    df = spark.range(3).persist()
+    try:
+        assert cache.added() == {"cache_entries": 1}
+    finally:
+        df.unpersist()
+    assert not cache.added()
 
 
 def test_idle_poll_backs_off_exponentially(spark, tmp_path):
@@ -351,13 +363,13 @@ def test_run_until_drained_leaves_no_cached_batch(spark, tmp_path):
             rows = [(state + 1, state + 1)] if state < self.limit else []
             return spark_.createDataFrame(rows, "key int, value int"), state + 1
 
-    before = persisted_rdd_ids(spark)
+    cache = CacheWatch(spark)
     sink = MemorySink()
     pipe = Pipeline(Sliding(limit=3), sink, str(tmp_path / "cp"), poll_interval_s=0.0)
     assert pipe.run_until_drained(spark, idle_iterations=2) == 5
     assert [r.key for r in sink.rows] == [1, 2, 3]
-    leaked = persisted_rdd_ids(spark) - before
-    assert not leaked, f"drain leaked cached RDD ids: {leaked}"
+    leaked = cache.added()
+    assert not leaked, f"drain leaked caches: {leaked}"
 
 
 # --- write-ahead: commit-gated sinks --------------------------------------
@@ -466,7 +478,7 @@ def test_write_ahead_failure_raises_after_the_previous_commit(spark, tmp_path):
                     assert attempts.acquire(timeout=60)
             super().write(df, epoch)
 
-    before = persisted_rdd_ids(spark)
+    cache = CacheWatch(spark)
     source = RecordingSource()
     sink = Failing()
     pipe = Pipeline(
@@ -481,8 +493,8 @@ def test_write_ahead_failure_raises_after_the_previous_commit(spark, tmp_path):
     assert (doc.epoch, doc.state) == (3, 3)
     assert [r.key for r in sink.rows] == [1, 2, 3]
     assert max(source.calls) <= 4  # the chain stopped at the failed epoch
-    leaked = persisted_rdd_ids(spark) - before
-    assert not leaked, f"failed run leaked cached RDD ids: {leaked}"
+    leaked = cache.added()
+    assert not leaked, f"failed run leaked caches: {leaked}"
 
 
 class ScriptedSource(CountingSource):
@@ -519,7 +531,7 @@ def test_empty_replay_leaves_no_stale_epoch_written_ahead(spark, tmp_path):
             if epoch == 3:
                 wrote_3.set()
 
-    before = persisted_rdd_ids(spark)
+    cache = CacheWatch(spark)
     out = str(tmp_path / "out")
     sink = FailingOnce(out)
     run1 = Pipeline(
@@ -536,8 +548,8 @@ def test_empty_replay_leaves_no_stale_epoch_written_ahead(spark, tmp_path):
     committed = run2._store().load().epoch
     assert committed == 5
     assert sorted(r.key for r in sink.read(spark, before=committed).collect()) == [1, 2, 3, 5]
-    leaked = persisted_rdd_ids(spark) - before
-    assert not leaked, f"runs leaked cached RDD ids: {leaked}"
+    leaked = cache.added()
+    assert not leaked, f"runs leaked caches: {leaked}"
 
 
 def test_ordinary_sink_is_never_written_before_the_previous_commit(spark, tmp_path):
@@ -718,7 +730,7 @@ def test_crash_anywhere_resumes_to_exactly_once(spark, tmp_path, monkeypatch, po
         # commit 1 initializes the checkpoint; epoch e's commit is e + 2
         crash_commit(monkeypatch, point[len("commit_"):], at=k + 2)
 
-    before = persisted_rdd_ids(spark)
+    cache = CacheWatch(spark)
     source, cp = Source(limit), str(tmp_path / "cp")
     sink = Sink() if sink_kind == "ordinary" else Sink(str(tmp_path / "out"))
 
@@ -736,11 +748,9 @@ def test_crash_anywhere_resumes_to_exactly_once(spark, tmp_path, monkeypatch, po
     assert committed == (k + 1 if point in ("commit_dir_fsync", "observer") else k)
     if point not in ("iteration", "pin"):
         assert k + 1 in source.calls  # the next epoch was read ahead
-    assert not persisted_rdd_ids(spark) - before
+    assert not cache.added(), cache.added()
     assert run() == (limit, limit)
-    assert not persisted_rdd_ids(spark) - before
-    # also a batch marked for caching whose cache never filled
-    assert not any(b.storageLevel.useMemory for _, b in made if b is not None)
+    assert not cache.added(), cache.added()
     if sink_kind == "ordinary":
         keys = [r.key for r in sink.rows]
     else:

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from tamer_spark.plans import explain_str, plan_shape, pushed_filters, read_schema_columns
 from tamer_spark import queries as Q
-from tests.conftest import SF_DIR, persisted_rdd_ids
+from tests.conftest import SF_DIR, CacheWatch
 
 # The r6 registry re-pack merged same-topic gates into tagged unions to fit
 # the driver's 50-row correctness window; plan pins still target the
@@ -178,15 +178,15 @@ def test_dedup_caches_release_when_result_dropped(spark):
     from tamer_spark.queries import _BANDS, _K, _MAX_BUCKET, _N, _t
 
     gc.collect()  # flush pending finalizers from earlier tests first
-    before = persisted_rdd_ids(spark)
+    cache = CacheWatch(spark)
     df = minhash_lsh_pairs(
         _t(spark, SF_DIR, "documents"), k=_K, bands=_BANDS, n=_N, seed=42, max_bucket=_MAX_BUCKET
     )
     df.count()  # materialize → signature stage cached
-    assert persisted_rdd_ids(spark) - before, "signature stage was not cached"
+    assert cache.added(), "signature stage was not cached"
     del df
     gc.collect()
-    leaked = persisted_rdd_ids(spark) - before
+    leaked = cache.added()
     assert not leaked, f"signature cache leaked after result was dropped: {leaked}"
 
 

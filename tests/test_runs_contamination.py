@@ -490,7 +490,8 @@ def test_exsub_bloom_verify_mode_bit_identical_to_exact(spark):
         r.doc_id: (r.text_dedup, r.n_tokens, r.n_removed)
         for r in exsub_dedup_incremental(e1, idx, length=L).collect()
     }
-    for m_bits in (64, 1 << 16):  # 64 bits over ~10 hashes -> FPs certain
+    # 64 bits over ~10 hashes -> FPs certain; 1 << 17 probes by joins
+    for m_bits in (64, 1 << 16, 1 << 17):
         got = {
             r.doc_id: (r.text_dedup, r.n_tokens, r.n_removed)
             for r in exsub_dedup_incremental_bloom(
@@ -583,12 +584,3 @@ def test_exsub_bloom_sidecar_merge_advance_equals_rebuild(spark):
     }
     assert got == exact == {20: 4, 21: 4, 22: 0}
 
-
-def test_exsub_bloom_list_requires_m_bits(spark):
-    import pytest
-
-    from tamer_spark.operators.runs import exsub_dedup_incremental_bloom
-
-    e1 = _docs(spark, [(1, "a b c d")])
-    with pytest.raises(ValueError, match="m_bits is required"):
-        exsub_dedup_incremental_bloom(e1, [0] * 4)

@@ -35,15 +35,6 @@ def test_floor_noop_when_split_count_reaches_parallelism(spark):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
-def test_floor_off_switch(spark):
-    spark.conf.set(Q._SCAN_FLOOR_CONF, "off")
-    try:
-        df = Q._t(spark, SF_DIR, "embeddings", floor=True)
-        assert _rr_count(df) == 0, explain_str(df)
-    finally:
-        spark.conf.set(Q._SCAN_FLOOR_CONF, "auto")
-
-
 def test_floor_is_opt_in(spark):
     # default (no floor=) reads are untouched — cheap-map queries measured
     # SLOWER with the blanket repair (q1 2.16x, dedup_exact 2.17x)
@@ -58,13 +49,11 @@ def test_floor_skips_broadcast_sized_dims(spark):
 
 
 def test_floor_preserves_values(spark):
-    on = Q._t(spark, SF_DIR, "lineitem", floor=True).select("l_orderkey", "l_linenumber", "l_quantity")
-    spark.conf.set(Q._SCAN_FLOOR_CONF, "off")
-    try:
-        off = Q._t(spark, SF_DIR, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
-        assert {tuple(r) for r in on.collect()} == {tuple(r) for r in off.collect()}
-    finally:
-        spark.conf.set(Q._SCAN_FLOOR_CONF, "auto")
+    cols = ("l_orderkey", "l_linenumber", "l_quantity")
+    on = Q._t(spark, SF_DIR, "lineitem", floor=True).select(*cols)
+    off = Q._t(spark, SF_DIR, "lineitem", floor=False).select(*cols)
+    assert _rr_count(on) == 1 and _rr_count(off) == 0
+    assert {tuple(r) for r in on.collect()} == {tuple(r) for r in off.collect()}
 
 
 def test_floor_does_not_block_pushdown_or_pruning(spark):

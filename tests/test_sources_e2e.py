@@ -22,7 +22,7 @@ from tamer_spark.sources import (
     ObjectCursorSource,
     PaginatedRestSource,
 )
-from tests.conftest import persisted_rdd_ids
+from tests.conftest import CacheWatch
 
 UTC = timezone.utc
 
@@ -318,7 +318,7 @@ def test_jdbc_drain_into_write_ahead_sink_runs_each_window_once(spark, tmp_path)
 
         return spark.createDataFrame(df.rdd.mapPartitionsWithIndex(mark), df.schema)
 
-    before = persisted_rdd_ids(spark)
+    cache = CacheWatch(spark)
     src, rows = _users_jdbc_source(spark, tmp_path, _BURSTS, timedelta(days=2), wrap)
     sink = ParquetEpochSink(str(tmp_path / "out"))
     epoch_rows = []
@@ -336,8 +336,8 @@ def test_jdbc_drain_into_write_ahead_sink_runs_each_window_once(spark, tmp_path)
     assert nonempty >= 4 and nonempty < len(epoch_rows), epoch_rows
     assert {sql: a.value for sql, a in executions.items()} == {sql: 1 for sql in executions}
     assert jobs == 2 * nonempty + (len(epoch_rows) - nonempty), (epoch_rows, jobs)
-    leaked = persisted_rdd_ids(spark) - before
-    assert not leaked, f"run leaked cached RDD ids: {leaked}"
+    leaked = cache.added()
+    assert not leaked, f"run leaked caches: {leaked}"
 
 
 def test_jdbc_run_with_empty_windows_leaves_no_cached_batch(spark, tmp_path):
@@ -345,14 +345,14 @@ def test_jdbc_run_with_empty_windows_leaves_no_cached_batch(spark, tmp_path):
     the engine unpins each after its write: a drain that crosses empty
     windows adds no persisted RDD (pre-run snapshot — the session is
     shared)."""
-    before = persisted_rdd_ids(spark)
+    cache = CacheWatch(spark)
     src, rows = _users_jdbc_source(spark, tmp_path, _BURSTS, timedelta(days=2))
     observed = []
     sink = MemorySink()
     _drain(spark, tmp_path, src, sink, observer=lambda m: observed.append(m.rows))
     assert 0 in observed and len(sink.rows) == len(rows)
-    leaked = persisted_rdd_ids(spark) - before
-    assert not leaked, f"run leaked cached RDD ids: {leaked}"
+    leaked = cache.added()
+    assert not leaked, f"run leaked caches: {leaked}"
 
 
 def test_fetch_pages_distributed(spark, rest_server):

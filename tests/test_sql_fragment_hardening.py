@@ -53,23 +53,20 @@ def test_minhash_rejects_overflowing_shingle_weights(spark):
 
 
 def test_bloom_might_contain_rejects_working_column_clash(spark):
-    from tamer_spark.operators.bloom import bloom_build, bloom_might_contain
+    from tamer_spark.operators.bloom import bloom_might_contain, bloom_words_df
 
     base = spark.createDataFrame([("x",), ("y",)], "v string")
-    words = bloom_build(base, "v", m_bits=1 << 10, k=3)
-    ok = bloom_might_contain(base, "v", words, m_bits=1 << 10, k=3)
+    words = bloom_words_df(base, "v", m_bits=1 << 10, k=3)
+    ok = bloom_might_contain(base, "v", words)
     assert ok.filter("bloom_hit").count() == 2
 
     clash = base.selectExpr("v", "1 AS _bp0")
     with pytest.raises(ValueError, match="working columns"):
-        bloom_might_contain(clash, "v", words, m_bits=1 << 10, k=3)
+        bloom_might_contain(clash, "v", words)
     with pytest.raises(ValueError, match="working columns"):
-        bloom_might_contain(
-            base.selectExpr("v", "true AS bloom_hit"), "v", words,
-            m_bits=1 << 10, k=3,
-        )
+        bloom_might_contain(base.selectExpr("v", "true AS bloom_hit"), "v", words)
     with pytest.raises(ValueError, match="not a plain SQL identifier"):
-        bloom_might_contain(base, "v", words, m_bits=1 << 10, k=3, out="a.b")
+        bloom_might_contain(base, "v", words, out="a.b")
 
 
 def test_session_pins_escaped_string_literals(spark):
