@@ -21,7 +21,6 @@ Cross-engine determinism conventions (the whole point of this module):
 
 from __future__ import annotations
 
-import itertools
 import os
 from dataclasses import dataclass
 from typing import Callable
@@ -126,22 +125,39 @@ def _t(spark: SparkSession, sf_dir: str, name: str, floor: bool = False) -> Data
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        # events.parquet has shipped with two physical types for ts across
-        # testdata generations: TIMESTAMP(NANOS) (Spark rejects by default —
-        # read nanos as long and floor-divide to micros, exact integer
-        # division) and plain TIMESTAMP_NTZ micros (read natively, cast to
-        # session-UTC TIMESTAMP so downstream window/date logic sees the
-        # same wall times either way). Adapt on the observed schema.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = _events_ts(spark.read.parquet(path))
+    else:
         df = spark.read.parquet(path)
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return _scan_parallelism_floor(spark, df, path) if floor else df
-    df = spark.read.parquet(path)
     return _scan_parallelism_floor(spark, df, path) if floor else df
+
+
+def _events_ts(df: DataFrame) -> DataFrame:
+    """The one ts normalizer of the events table, for its batch read (``_t``)
+    and its file stream (``_events_stream``).
+
+    events.parquet has shipped with two physical types for ts across
+    testdata generations: TIMESTAMP(NANOS) (Spark rejects by default — read
+    with ``nanosAsLong`` as long and floor-divide to micros, exact integer
+    division) and plain TIMESTAMP_NTZ micros (cast to session-UTC TIMESTAMP
+    so downstream window/date logic sees the same wall times either way).
+    Adapts on the observed schema."""
+    if dict(df.dtypes)["ts"] == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a file stream: ``stream_parquet`` over the file,
+    declared with the schema its footer shows (a file stream needs one), ts
+    normalized as in ``_t``. The file source wants a directory or a glob,
+    not a plain file path."""
+    from tamer_spark.streaming.readers import stream_parquet
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return _events_ts(stream_parquet(spark, f"{sf_dir}/events*.parquet", schema))
 
 
 # DuckDB views see events.ts as TIMESTAMP_NS; shadow the view with a
@@ -867,9 +883,6 @@ def ingest_tumbling_events(spark, sf):
     )
 
 
-_STREAM_GATE_SEQ = itertools.count()
-
-
 @q(
     "streaming_window_aggs",
     f"""
@@ -939,43 +952,51 @@ _STREAM_GATE_SEQ = itertools.count()
            CAST(COALESCE(t.tru, 0) AS BIGINT)
     FROM scms_est e LEFT JOIN scms_tru t ON t.t_start = e.t_start AND t.u = e.u
     """,
-    doc="All five streaming windowed aggregations through Structured Streaming end-to-end, as one tagged union. tumbling_1h: file-source readStream over the events parquet, event-time watermark, window('1 hour') agg — the streaming twin of ingest_tumbling_events. session_30m: native session_window (30-min gap), hash-matched against the batch gap-sessionization oracle (edge note: session_window's half-open merge treats an exactly-30-min gap as new while the batch rule (strict >) keeps it — the fixture contains no exact-gap pair at any SF, verified). hopping_1h_30m (r12): sliding window('1 hour', '30 minutes') — every event belongs to exactly window/slide = 2 overlapping windows; the oracle replays Spark's epoch-aligned window membership as an events × [0,1] hop cross join over 30-minute time_buckets (DuckDB's 2000-01-01 time_bucket origin is 30-minute-aligned with the epoch origin, so the bucket edges coincide), which pins both the alignment rule and the per-event fan-out. vhist_1h (r12 continuation): the STREAMING value histogram — per-(1h window, frozen $10-cent bucket, clamp-to-edge) counts + sums, the monitoring primitive (numeric_drift's grid) under event-time semantics; NULLs filtered before the clamp (the greatest(NULL,0)=0 trap). dvu_1h (r12 continuation): streaming distinct-users-per-window — COUNT(DISTINCT) needs unbounded state and is unsupported in streaming, HLL++ (approx_count_distinct) is the standard answer; graded via the approx_distinct_users re-shape (batch exact + BOOLEAN pinning the streaming estimate within max(5×rsd, 2) — the absolute floor covers HLL++ sparse-mode ±1 at tiny per-window cardinalities, measured max dev 1 over 3385 windows; the estimate itself is engine-specific), so the sketch runs end-to-end through watermark+window+AvailableNow while every graded column stays engine-reproducible. scms_1h + scms_est_1h (r12 continuation): STREAMING Count-Min Sketch under event-time windows (operators/cms.cms_windowed_cells) — frequency monitoring over a key of unbounded cardinality (user_id stands in for URLs/token-space), where per-key per-window counts would grow state without bound; the sketch bounds state at d·w = 256 counters per live window. Unlike dvu's HLL the cells are md5-deterministic (the repo hash convention), so BOTH the per-(window, r, b) cells AND the per-(window, probe) point estimates are hash-graded EXACTLY — no tolerance contract; the estimate rows carry (est, exact truth) with est ≥ true by the overcount bound (est computed post-drain from the drained cells — the sketch is the only streaming state; windows × 3 probes is a bounded broadcast cross join). NULL keys dropped (no key to count); probe -1 is never present (est = 0 = truth everywhere). Six legs drain via Trigger.AvailableNow into a memory sink (scms_est_1h is derived post-drain from the scms_1h cells, per above — it never streams itself), and every leg must hash-match the batch SQL oracle; the watermark is set far beyond the fixture's time range so completeness is exact (production tunes it to the real lateness bound; see streaming/readers.py).",
+    doc="All five streaming windowed aggregations through Structured Streaming end-to-end, as one tagged union, built and drained by tamer_spark.streaming (stream_parquet, windowed_agg, run_available_now_memory). tumbling_1h: file-source stream over the events parquet, event-time watermark, window('1 hour') agg — the streaming twin of ingest_tumbling_events. session_30m: native session_window (30-min gap), hash-matched against the batch gap-sessionization oracle (edge note: session_window's half-open merge treats an exactly-30-min gap as new while the batch rule (strict >) keeps it — the fixture contains no exact-gap pair at any SF, verified). hopping_1h_30m (r12): sliding window('1 hour', '30 minutes') — every event belongs to exactly window/slide = 2 overlapping windows; the oracle replays Spark's epoch-aligned window membership as an events × [0,1] hop cross join over 30-minute time_buckets (DuckDB's 2000-01-01 time_bucket origin is 30-minute-aligned with the epoch origin, so the bucket edges coincide), which pins both the alignment rule and the per-event fan-out. vhist_1h (r12 continuation): the STREAMING value histogram — per-(1h window, frozen $10-cent bucket, clamp-to-edge) counts + sums, the monitoring primitive (numeric_drift's grid) under event-time semantics; NULLs filtered before the clamp (the greatest(NULL,0)=0 trap). dvu_1h (r12 continuation): streaming distinct-users-per-window — COUNT(DISTINCT) needs unbounded state and is unsupported in streaming, HLL++ (approx_count_distinct) is the standard answer; graded via the approx_distinct_users re-shape (batch exact + BOOLEAN pinning the streaming estimate within max(5×rsd, 2) — the absolute floor covers HLL++ sparse-mode ±1 at tiny per-window cardinalities, measured max dev 1 over 3385 windows; the estimate itself is engine-specific), so the sketch runs end-to-end through watermark+window+AvailableNow while every graded column stays engine-reproducible. scms_1h + scms_est_1h (r12 continuation): STREAMING Count-Min Sketch under event-time windows (operators/cms.cms_windowed_cells) — frequency monitoring over a key of unbounded cardinality (user_id stands in for URLs/token-space), where per-key per-window counts would grow state without bound; the sketch bounds state at d·w = 256 counters per live window. Unlike dvu's HLL the cells are md5-deterministic (the repo hash convention), so BOTH the per-(window, r, b) cells AND the per-(window, probe) point estimates are hash-graded EXACTLY — no tolerance contract; the estimate rows carry (est, exact truth) with est ≥ true by the overcount bound (est computed post-drain from the drained cells — the sketch is the only streaming state; windows × 3 probes is a bounded broadcast cross join). NULL keys dropped (no key to count); probe -1 is never present (est = 0 = truth everywhere). Six legs drain via Trigger.AvailableNow into a memory sink (scms_est_1h is derived post-drain from the scms_1h cells, per above — it never streams itself), and every leg must hash-match the batch SQL oracle; the watermark is set far beyond the fixture's time range so completeness is exact (production tunes it to the real lateness bound; see streaming/readers.py).",
 )
 def streaming_window_aggs_q(spark, sf):
-    ev = _stream_events(spark, sf)
-    tumb = (
-        ev.withWatermark("ts", "3650 days")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum(cents("value")).alias("sum_value_c"))
+    from tamer_spark.streaming.readers import run_available_now_memory, windowed_agg
+
+    ev = _events_stream(spark, sf)
+    sums = [F.count(F.lit(1)).alias("n_events"), F.sum(cents("value")).alias("sum_value_c")]
+
+    def drained(stream, window, keys, aggs):
+        agg = windowed_agg(stream, "ts", window, "3650 days", keys, aggs)
+        return run_available_now_memory(agg, "complete")
+
+    def leg(variant, out, key):
+        return out.select(
+            F.lit(variant).alias("variant"),
+            F.col(key).cast("string").alias("k"),
+            F.col("window_start").alias("t_start"),
+            "n_events",
+            "sum_value_c",
+        )
+
+    hour = F.window("ts", "1 hour")
+    t_out = leg("tumbling_1h", drained(ev, hour, ["event_type"], sums), "event_type")
+    s_out = leg(
+        "session_30m",
+        drained(ev, F.session_window("ts", "30 minutes"), ["user_id"], sums),
+        "user_id",
     )
-    sess = (
-        _stream_events(spark, sf)
-        .withWatermark("ts", "3650 days")
-        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum(cents("value")).alias("sum_value_c"))
-    )
-    hop = (
-        _stream_events(spark, sf)
-        .withWatermark("ts", "3650 days")
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum(cents("value")).alias("sum_value_c"))
+    h_out = leg(
+        "hopping_1h_30m",
+        drained(ev, F.window("ts", "1 hour", "30 minutes"), ["event_type"], sums),
+        "event_type",
     )
     # streaming value histogram (r12 continuation): the monitoring
     # primitive under event-time windows — per-(window, frozen bucket)
     # counts + sums. NULL values filtered BEFORE the clamp (the
     # greatest(NULL,0)=0 trap, numeric_drift rule).
-    vh = (
-        _stream_events(spark, sf)
-        .filter(F.col("value").isNotNull())
-        .withWatermark("ts", "3650 days")
-        .groupBy(
-            F.window("ts", "1 hour").alias("w"),
-            F.least(
-                F.greatest(F.expr("CAST(round(value*100) AS BIGINT) div 1000"), F.lit(0).cast("long")),
-                F.lit(63).cast("long"),
-            ).alias("bkt"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum(cents("value")).alias("sum_value_c"))
+    bkt = F.least(
+        F.greatest(F.expr("CAST(round(value*100) AS BIGINT) div 1000"), F.lit(0).cast("long")),
+        F.lit(63).cast("long"),
+    ).alias("bkt")
+    v_out = leg(
+        "vhist_1h",
+        drained(ev.filter(F.col("value").isNotNull()), hour, [bkt], sums),
+        "bkt",
     )
     # streaming distinct users (r12 continuation): COUNT(DISTINCT) is
     # unsupported in streaming (unbounded state) — HLL++ is THE answer;
@@ -983,12 +1004,7 @@ def streaming_window_aggs_q(spark, sf):
     # approx_distinct_users re-shape: batch exact + a BOOLEAN pinning the
     # streaming estimate within 5×rsd of it (both deterministic).
     rsd = 0.05
-    dvu = (
-        _stream_events(spark, sf)
-        .withWatermark("ts", "3650 days")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.approx_count_distinct("user_id", rsd).alias("est"))
-    )
+    dvu = drained(ev, hour, ["event_type"], [F.approx_count_distinct("user_id", rsd).alias("est")])
     # streaming windowed CMS (r12 continuation): frequency sketching over
     # an unbounded-cardinality key under event-time windows — the
     # bounded-state alternative to per-key counts, and (unlike HLL) fully
@@ -997,46 +1013,9 @@ def streaming_window_aggs_q(spark, sf):
     from tamer_spark.operators.cms import cms_window_point_estimates, cms_windowed_cells
 
     scms = cms_windowed_cells(
-        _stream_events(spark, sf).withWatermark("ts", "3650 days"),
-        token_col="user_id",
-        d=4,
-        w=64,
-        seed=42,
+        ev.withWatermark("ts", "3650 days"), token_col="user_id", d=4, w=64, seed=42
     )
-    t_name = _drain(tumb, "complete")
-    s_name = _drain(sess, "complete")
-    h_name = _drain(hop, "complete")
-    v_name = _drain(vh, "complete")
-    d_name = _drain(dvu, "complete")
-    c_name = _drain(scms, "complete")
-    t_out = spark.table(t_name).select(
-        F.lit("tumbling_1h").alias("variant"),
-        F.col("event_type").alias("k"),
-        F.col("w.start").alias("t_start"),
-        "n_events",
-        "sum_value_c",
-    )
-    s_out = spark.table(s_name).select(
-        F.lit("session_30m").alias("variant"),
-        F.col("user_id").cast("string").alias("k"),
-        F.col("w.start").alias("t_start"),
-        "n_events",
-        "sum_value_c",
-    )
-    h_out = spark.table(h_name).select(
-        F.lit("hopping_1h_30m").alias("variant"),
-        F.col("event_type").alias("k"),
-        F.col("w.start").alias("t_start"),
-        "n_events",
-        "sum_value_c",
-    )
-    v_out = spark.table(v_name).select(
-        F.lit("vhist_1h").alias("variant"),
-        F.col("bkt").cast("string").alias("k"),
-        F.col("w.start").alias("t_start"),
-        "n_events",
-        "sum_value_c",
-    )
+    cells_t = run_available_now_memory(scms, "complete")
     exact_dvu = (
         _t(spark, sf, "events")
         .groupBy(
@@ -1045,8 +1024,8 @@ def streaming_window_aggs_q(spark, sf):
         )
         .agg(F.count_distinct("user_id").alias("exact_distinct"))
     )
-    stream_dvu = spark.table(d_name).select(
-        F.col("w.start").alias("_s_t"), F.col("event_type").alias("_s_k"), "est"
+    stream_dvu = dvu.select(
+        F.col("window_start").alias("_s_t"), F.col("event_type").alias("_s_k"), "est"
     )
     # eqNullSafe keys: a NULL event_type (or ts) group survives DuckDB's
     # GROUP BY and both Spark group-bys — a plain equi-join would drop it
@@ -1077,7 +1056,6 @@ def streaming_window_aggs_q(spark, sf):
             .alias("sum_value_c"),
         )
     )
-    cells_t = spark.table(c_name)
     c_out = cells_t.select(
         F.lit("scms_1h").alias("variant"),
         F.concat(
@@ -1119,41 +1097,6 @@ def streaming_window_aggs_q(spark, sf):
     )
 
 
-def _stream_events(spark, sf):
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # readStream needs a declared schema; probe the parquet footer with a
-    # batch read so the declared ts type matches the physical file (nanos →
-    # long, micros → timestamp_ntz; see _t for the two testdata generations).
-    ts_type = dict(spark.read.parquet(f"{sf}/events.parquet").dtypes)["ts"]
-    schema = (
-        f"event_id long, ts {ts_type}, user_id long, event_type string, "
-        "value double, props string"
-    )
-    src = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf)
-    )
-    if ts_type == "bigint":
-        return src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return src.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def _drain(df, mode: str):
-    name = f"stream_gate_{next(_STREAM_GATE_SEQ)}"
-    sq = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-    return name
-
-
 @q(
     "streaming_row_gates",
     f"""
@@ -1166,32 +1109,31 @@ def _drain(df, mode: str):
       JOIN customer c ON e.user_id % 1500 = c.c_custkey - 1
       JOIN nation n ON c.c_nationkey = n.n_nationkey
     """,
-    doc="Both row-level Structured Streaming gates as one tagged union. dedup: the events stream unioned with itself (every row arrives twice) through watermark + dropDuplicates(event_id) — output must contain each event exactly once, hash-matched against plain SELECT; the state store holds one key per event inside the watermark (production bounds it with the real lateness window). static_enrich: the events stream joined against static customer+nation dims (broadcast — the stream side never shuffles), hash-matched against the batch join; the synthetic user_id%1500 key maps every event onto the customer fixture. Both drain via Trigger.AvailableNow.",
+    doc="Both row-level Structured Streaming gates as one tagged union, built and drained by tamer_spark.streaming. dedup: the events stream unioned with itself (every row arrives twice) through stream_dedup_exact(event_id, ts) — watermark + dropDuplicatesWithinWatermark, so a key leaves the state store once the watermark passes it (every duplicate carries the same ts, so the rows equal plain dropDuplicates) — output must contain each event exactly once, hash-matched against plain SELECT; the watermark is set beyond the fixture's time range (production bounds it with the real lateness window). static_enrich: the events stream joined against static customer+nation dims (broadcast — the stream side never shuffles), hash-matched against the batch join; the synthetic user_id%1500 key maps every event onto the customer fixture. Both drain via Trigger.AvailableNow.",
 )
 def streaming_row_gates_q(spark, sf):
-    ev = _stream_events(spark, sf).select("event_id", "ts", "user_id", "event_type")
-    doubled = ev.union(_stream_events(spark, sf).select("event_id", "ts", "user_id", "event_type"))
-    deduped = doubled.withWatermark("ts", "3650 days").dropDuplicates(["event_id"])
-    d_name = _drain(deduped, "append")
+    from tamer_spark.streaming.readers import run_available_now_memory, stream_dedup_exact
 
-    ev2 = _stream_events(spark, sf).select("event_id", "user_id")
-    cust = _t(spark, sf, "customer").select("c_custkey", "c_name", "c_nationkey")
-    nat = _t(spark, sf, "nation").select("n_nationkey", "n_name")
-    joined = (
-        ev2.join(F.broadcast(cust), ev2["user_id"] % 1500 == cust["c_custkey"] - 1)
-        .join(F.broadcast(nat), cust["c_nationkey"] == nat["n_nationkey"])
-        .select("event_id", "user_id", "c_name", "n_name")
-    )
-    e_name = _drain(joined, "append")
-
-    d_out = spark.table(d_name).select(
+    cols = ["event_id", "ts", "user_id", "event_type"]
+    doubled = _events_stream(spark, sf).select(cols).union(_events_stream(spark, sf).select(cols))
+    deduped = stream_dedup_exact(doubled, ["event_id"], ts_col="ts", watermark="3650 days")
+    d_out = run_available_now_memory(deduped, "append").select(
         F.lit("dedup").alias("variant"),
         "event_id",
         "user_id",
         F.col("event_type").alias("s1"),
         F.lit(None).cast("string").alias("s2"),
     )
-    e_out = spark.table(e_name).select(
+
+    ev = _events_stream(spark, sf).select("event_id", "user_id")
+    cust = _t(spark, sf, "customer").select("c_custkey", "c_name", "c_nationkey")
+    nat = _t(spark, sf, "nation").select("n_nationkey", "n_name")
+    joined = (
+        ev.join(F.broadcast(cust), ev["user_id"] % 1500 == cust["c_custkey"] - 1)
+        .join(F.broadcast(nat), cust["c_nationkey"] == nat["n_nationkey"])
+        .select("event_id", "user_id", "c_name", "n_name")
+    )
+    e_out = run_available_now_memory(joined, "append").select(
         F.lit("static_enrich").alias("variant"),
         "event_id",
         "user_id",

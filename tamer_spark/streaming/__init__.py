@@ -1,6 +1,6 @@
 from tamer_spark.streaming.readers import (
     run_available_now,
-    session_agg,
+    run_available_now_memory,
     stream_lines,
     stream_parquet,
     windowed_agg,
@@ -11,7 +11,7 @@ __all__ = [
     "stream_lines",
     "stream_parquet",
     "windowed_agg",
-    "session_agg",
     "run_available_now",
+    "run_available_now_memory",
     "stateful_running_totals",
 ]

@@ -8,6 +8,13 @@ detection is native), watermarks replace the ``lag`` guard
 state topic. ``Trigger.AvailableNow`` gives the batch-like "drain what
 exists, then stop" mode the engine loop uses for backfills.
 
+This module holds the one copy of each streaming rule — file readers,
+event-time windows (tumbling, hopping and session, one ``windowed_agg``),
+bounded-state dedup, the interval join and the three AvailableNow drains
+(file sink, foreachBatch, memory table). The graded gates
+``streaming_window_aggs`` and ``streaming_row_gates`` (queries.py) build
+and drain their streams through it.
+
 Scale notes: ``maxFilesPerTrigger`` bounds per-micro-batch work (the
 ``bufferSize`` backpressure analog, config.scala:104); watermark delay
 bounds state size for windowed aggs — without it, 100 TB of late-data state
@@ -16,7 +23,9 @@ accumulates unboundedly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import itertools
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -43,51 +52,31 @@ def stream_parquet(
 def windowed_agg(
     df: DataFrame,
     ts_col: str,
-    window: str = "5 minutes",
-    slide: str | None = None,
+    window: Column,
     watermark: str = "10 minutes",
-    keys: list[str] | None = None,
+    keys: list | None = None,
     aggs: list | None = None,
 ) -> DataFrame:
-    """Tumbling/sliding event-time window aggregation with a watermark.
+    """Event-time window aggregation with a watermark, on a stream or a
+    static frame alike.
 
-    The streaming analog of the reference's tumbling JDBC window (#10): the
-    watermark is the ``lag`` guard — events later than it are dropped instead
-    of blocking progress.
+    ``window`` is Spark's own window Column over ``ts_col``: tumbling
+    ``F.window(ts, "1 hour")``, hopping ``F.window(ts, "1 hour", "30
+    minutes")`` or gap-based ``F.session_window(ts, "30 minutes")``.
+    ``keys`` are column names or Columns. The streaming analog of the
+    reference's tumbling JDBC window (#10): the watermark is the ``lag``
+    guard — events later than it are dropped instead of blocking progress.
     """
     aggs = aggs or [F.count(F.lit(1)).alias("n")]
-    win = F.window(F.col(ts_col), window, slide) if slide else F.window(F.col(ts_col), window)
     out = (
         df.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("window"), *(keys or []))
+        .groupBy(window.alias("window"), *(keys or []))
         .agg(*aggs)
     )
     return out.select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
         *[c for c in out.columns if c != "window"],
-    )
-
-
-def session_agg(
-    df: DataFrame,
-    ts_col: str,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-    keys: list[str] | None = None,
-) -> DataFrame:
-    """Gap-based session windows (``session_window``) — the streaming form of
-    queries.sessionize_events."""
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("session"), *(keys or []))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("session.start").alias("session_start"),
-            F.col("session.end").alias("session_end"),
-            *(keys or []),
-            "n_events",
-        )
     )
 
 
@@ -204,3 +193,26 @@ def run_available_now_foreach_batch(
     )
     q.awaitTermination()
 
+
+
+_MEMORY_SEQ = itertools.count()
+
+
+def run_available_now_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
+    """Drain all currently-available input into an in-memory table and
+    return that table as a static frame.
+
+    No checkpoint: each call drains from the start, so this is for gates and
+    tests that compare a stream with its batch run; restartable drains use
+    ``run_available_now`` or ``run_available_now_foreach_batch``.
+    """
+    name = f"available_now_{next(_MEMORY_SEQ)}"
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream_df.sparkSession.table(name)

@@ -2,9 +2,11 @@
 
 The reference's whole engine is one stateful operator (consume state → emit
 records + next state, Tamer.scala:150-186). In-stream, per-key versions of
-that pattern — running totals, dedup-by-key, custom folds — map onto
+that pattern — running totals, custom folds — map onto
 ``applyInPandasWithState``: Spark keeps the per-key state in its checkpointed
-state store (exactly-once across restarts), we supply the fold.
+state store (exactly-once across restarts), we supply the fold. Dedup-by-key
+needs no fold: ``readers.stream_dedup_exact`` is Spark's own bounded-state
+operator.
 
 State-size discipline at scale: per-key state must be O(1) (a few counters),
 never a growing collection; use timeouts to expire idle keys.
@@ -42,28 +44,3 @@ def stateful_running_totals(df, key_col: str, value_col: str):
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def stateful_seen_filter(df, key_col: str):
-    """Streaming exactly-once dedup: drop rows whose key was already seen.
-
-    The streaming analog of the REST source's page dedup (#20) generalized:
-    state = 1 bit per key in the state store. Watermark + timeout should be
-    configured by the caller when the key space is unbounded.
-    """
-
-    def fold(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        already = state.exists
-        n = 0
-        for pdf in pdfs:
-            n += len(pdf)
-        if not already and n > 0:
-            state.update((True,))
-            yield pd.DataFrame({key_col: [key[0]]})
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold,
-        outputStructType=f"{key_col} long",
-        stateStructType="seen boolean",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

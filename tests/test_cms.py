@@ -241,6 +241,7 @@ def test_windowed_cells_stream_equals_batch_and_null_drop(spark, tmp_path):
     from datetime import datetime, timedelta
 
     from tamer_spark.operators.cms import cms_windowed_cells
+    from tamer_spark.streaming import run_available_now_memory, stream_parquet
 
     t0 = datetime(2024, 1, 1)
     rows = [
@@ -257,20 +258,16 @@ def test_windowed_cells_stream_equals_batch_and_null_drop(spark, tmp_path):
             spark.read.parquet(src), token_col="uid", d=3, w=16, seed=9
         ).collect()
     }
-    stream = spark.readStream.schema(schema).parquet(src)
     sc = cms_windowed_cells(
-        stream.withWatermark("ts", "10 days"), token_col="uid", d=3, w=16, seed=9
+        stream_parquet(spark, src, schema).withWatermark("ts", "10 days"),
+        token_col="uid",
+        d=3,
+        w=16,
+        seed=9,
     )
-    q = (
-        sc.writeStream.format("memory")
-        .queryName("cms_cells_t")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     stream_cells = {
-        (r.w.start, r.r, r.b): r.cnt for r in spark.table("cms_cells_t").collect()
+        (r.w.start, r.r, r.b): r.cnt
+        for r in run_available_now_memory(sc, "complete").collect()
     }
     assert stream_cells == batch_cells
     # NULL keys dropped: total per row r equals the count of non-NULL rows

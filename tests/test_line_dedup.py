@@ -378,6 +378,7 @@ def test_map_only_strip_streams_append_mode(spark, tmp_path):
     data lands): a streamed run over the same files equals the batch run,
     no watermark, no state store."""
     from tamer_spark.operators.dedup import strip_boilerplate_map_only
+    from tamer_spark.streaming import run_available_now_memory, stream_parquet
 
     src = tmp_path / "docs"
     rows = [
@@ -392,17 +393,9 @@ def test_map_only_strip_streams_append_mode(spark, tmp_path):
 
     batch = {tuple(r) for r in strip_boilerplate_map_only(static, bp).collect()}
 
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    q = (
-        strip_boilerplate_map_only(stream, bp)
-        .writeStream.format("memory")
-        .queryName("bp_strip")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish within 120s"
-    streamed = {tuple(r) for r in spark.sql("SELECT * FROM bp_strip").collect()}
+    stream = stream_parquet(spark, str(src), "doc_id long, text string")
+    drained = run_available_now_memory(strip_boilerplate_map_only(stream, bp), "append")
+    streamed = {tuple(r) for r in drained.collect()}
     assert streamed == batch
     assert {t[1] for t in streamed} == {"content one", "content two", "", "solo content"}
 

@@ -15,15 +15,9 @@ from tamer_spark.sinks.shards import (
     verify_shards,
     write_training_shards,
 )
+from tests.conftest import CacheWatch
 
 ROOT = Path(__file__).resolve().parents[1]
-
-
-def _persistent_rdd_ids(sc) -> set[int]:
-    """Ids of RDDs currently registered as persisted with the context —
-    including RDD-level persists (``localCheckpoint``) that
-    ``DataFrame.unpersist()`` can not release."""
-    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
 
 
 def _corpus(spark, n=200):
@@ -148,16 +142,15 @@ def test_localcheckpoint_blocks_released_deterministically(spark, tmp_path):
     # reads its own files back), on success AND on the ValueError gate path
     import pytest
 
-    sc = spark.sparkContext
-    before = _persistent_rdd_ids(sc)
+    watch = CacheWatch(spark)
     write_training_shards(_corpus(spark), str(tmp_path / "s"), 4)
-    assert _persistent_rdd_ids(sc) - before == set()
+    assert watch.added() == {}
 
     dup = spark.createDataFrame([(1, "a"), (1, "b")], "doc_id long, text string")
-    before = _persistent_rdd_ids(sc)
+    watch = CacheWatch(spark)
     with pytest.raises(ValueError):
         write_training_shards(dup, str(tmp_path / "d"), 2)
-    assert _persistent_rdd_ids(sc) - before == set()
+    assert watch.added() == {}
 
 
 def test_export_preserves_caller_cache(spark, tmp_path):
@@ -168,13 +161,14 @@ def test_export_preserves_caller_cache(spark, tmp_path):
     sc = spark.sparkContext
     base = _corpus(spark).persist()
     try:
-        before = _persistent_rdd_ids(sc)
+        watch = CacheWatch(spark)
         write_training_shards(base, str(tmp_path / "s"), 4)
-        new_ids = _persistent_rdd_ids(sc) - before
-        # exactly the caller's cache RDD is new (the export persists
-        # nothing of its own) and its storage level is still real, not NONE
-        assert len(new_ids) == 1, new_ids
-        lvl = sc._jsc.getPersistentRDDs().get(next(iter(new_ids))).getStorageLevel()
+        added = watch.added()
+        # exactly the caller's cache RDD is new and no cache entry is (the
+        # export persists nothing of its own, filled or not), and the
+        # caller's storage level is still real, not NONE
+        assert list(added) == ["rdd_ids"] and len(added["rdd_ids"]) == 1, added
+        lvl = sc._jsc.getPersistentRDDs().get(added["rdd_ids"][0]).getStorageLevel()
         assert lvl.useMemory() or lvl.useDisk()
         # and the cache is actually usable afterwards
         assert base.count() == 200

@@ -9,14 +9,17 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
+from tamer_spark import queries as Q
 from tamer_spark.streaming import (
     run_available_now,
+    run_available_now_memory,
     stateful_running_totals,
     stream_lines,
     stream_parquet,
     windowed_agg,
 )
 from tamer_spark.streaming.readers import run_available_now_foreach_batch
+from tests.conftest import SF_DIR
 
 
 def test_file_stream_exactly_once_across_restarts(spark, tmp_path):
@@ -80,21 +83,14 @@ def test_streaming_curation_matches_batch(spark, tmp_path):
     }
 
     out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
+    stream = stream_parquet(spark, str(src), "doc_id long, text string")
     # the join above is a stream-stream shape; keep the STREAM plan pure
     # map-only by composing the same stages without the join
     ld = dedup_lines_in_doc(stream)
     cleaned = c4_line_filter(
         ld.select("doc_id", F.col("text_clean").alias("text")), min_sentences=1
     )
-    q = (
-        cleaned.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    run_available_now(cleaned, out, cp)
     streamed = {
         r.doc_id: (r.text_clean, r.n_lines_kept)
         for r in spark.read.parquet(out).collect()
@@ -158,7 +154,7 @@ def test_streaming_incremental_dedup_epochs(spark, tmp_path):
         )
         survivors.unpersist()
 
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
+    stream = stream_parquet(spark, str(src), "doc_id long, text string")
     # epoch 1: one duplicate of the seed corpus + two fresh docs (one
     # duplicated WITHIN the batch — in-batch min-id wins)
     spark.createDataFrame(
@@ -195,6 +191,78 @@ def test_streaming_incremental_dedup_epochs(spark, tmp_path):
     assert index_sink.read(spark).count() == 4
 
 
+@pytest.mark.parametrize("reader", ["lines", "parquet"])
+def test_max_files_per_trigger_bounds_each_micro_batch(spark, tmp_path, reader):
+    """``max_files_per_trigger`` is the ``bufferSize`` backpressure analog:
+    an AvailableNow drain over three files with a bound of one runs three
+    micro-batches of one file each."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "in"
+    src.mkdir()
+    if reader == "lines":
+        for i in range(3):
+            (src / f"f{i}.txt").write_text(f"{i}\n{i}\n")
+        stream = stream_lines(spark, str(src), max_files_per_trigger=1)
+    else:
+        for i in range(3):
+            pq.write_table(pa.table({"v": [i, i]}), src / f"f{i}.parquet")
+        stream = stream_parquet(spark, str(src), "v long", max_files_per_trigger=1)
+    batches: dict[int, list] = {}
+    run_available_now_foreach_batch(
+        stream,
+        str(tmp_path / "cp"),
+        lambda df, epoch: batches.__setitem__(epoch, sorted(str(r[0]) for r in df.collect())),
+        output_mode="append",
+    )
+    assert sorted(batches) == [0, 1, 2]
+    assert sorted(batches.values()) == [["0", "0"], ["1", "1"], ["2", "2"]]
+
+
+@pytest.mark.parametrize("unit", ["ns", "us"])
+def test_events_stream_matches_batch_read(spark, tmp_path, unit):
+    """events.parquet has shipped with ts as TIMESTAMP(NANOS) and as micros;
+    for both, the graded gates' file stream and ``_t``'s batch read give the
+    same rows, with ts floored to the same microsecond."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    nanos = [1_704_067_200_000_000_000 + 3_600_000_001_234 * i for i in range(5)]
+    ts = pa.array(nanos if unit == "ns" else [n // 1000 for n in nanos], pa.int64())
+    table = pa.table({"event_id": list(range(5)), "ts": ts.cast(pa.timestamp(unit))})
+    pq.write_table(table, tmp_path / "events.parquet")
+
+    def rows(df):
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        return {(r.event_id, r.us) for r in df.select("event_id", F.unix_micros("ts").alias("us")).collect()}
+
+    batch = rows(Q._t(spark, str(tmp_path), "events"))
+    streamed = rows(run_available_now_memory(Q._events_stream(spark, str(tmp_path)), "append"))
+    assert batch == streamed == {(i, n // 1000) for i, n in enumerate(nanos)}
+
+
+def test_row_gate_dedup_keeps_bounded_state(spark, monkeypatch):
+    """streaming_row_gates dedups through ``stream_dedup_exact`` with its
+    ts column: the drained plan is ``dropDuplicatesWithinWatermark``, whose
+    state a key leaves once the watermark passes it, not the unbounded
+    ``dropDuplicates``."""
+    from tamer_spark.streaming import readers
+
+    drained = []
+
+    def spy(stream_df, output_mode):
+        drained.append(stream_df)
+        return run_available_now_memory(stream_df, output_mode)
+
+    monkeypatch.setattr(readers, "run_available_now_memory", spy)
+    out = Q.REGISTRY["streaming_row_gates"].spark(spark, SF_DIR)
+    dedup = drained[0]._jdf.queryExecution().analyzed()
+    assert dedup.nodeName() == "DeduplicateWithinWatermark"
+    n_events = Q._t(spark, SF_DIR, "events").count()
+    assert out.filter(F.col("variant") == "dedup").count() == n_events
+
+
 def test_windowed_agg_matches_batch(spark, tmp_path):
     t0 = datetime(2024, 1, 1)
     rows = [(t0 + timedelta(minutes=7 * i), i % 3, float(i)) for i in range(40)]
@@ -205,7 +273,7 @@ def test_windowed_agg_matches_batch(spark, tmp_path):
     stream = windowed_agg(
         stream_parquet(spark, src, schema),
         "ts",
-        window="1 hour",
+        F.window("ts", "1 hour"),
         watermark="2 hours",
         keys=["k"],
         aggs=[F.count(F.lit(1)).alias("n"), F.sum(F.round(F.col("v") * 100).cast("long")).alias("sum_c")],
@@ -240,8 +308,7 @@ def test_sliding_window_agg_matches_batch(spark, tmp_path):
     stream = windowed_agg(
         stream_parquet(spark, src, schema),
         "ts",
-        window="1 hour",
-        slide="30 minutes",
+        F.window("ts", "1 hour", "30 minutes"),
         watermark="2 hours",
         aggs=[F.count(F.lit(1)).alias("n")],
     )
@@ -298,10 +365,6 @@ def test_stateful_running_totals_across_restarts(spark, tmp_path):
 
 
 def test_session_window_agg(spark, tmp_path):
-    from datetime import datetime, timedelta
-
-    from tamer_spark.streaming import session_agg, stream_parquet
-
     t0 = datetime(2024, 1, 1)
     # two sessions per user: a burst, a >30min gap, another burst
     rows = []
@@ -313,15 +376,19 @@ def test_session_window_agg(spark, tmp_path):
     spark.createDataFrame(rows, schema).write.parquet(src)
 
     out: dict = {}
-    stream = session_agg(
-        stream_parquet(spark, src, schema), "ts", gap="30 minutes", keys=["user"]
+    stream = windowed_agg(
+        stream_parquet(spark, src, schema),
+        "ts",
+        F.session_window("ts", "30 minutes"),
+        keys=["user"],
+        aggs=[F.count(F.lit(1)).alias("n_events")],
     )
     # session windows reject update mode (windows can merge); complete mode
     # re-emits the full result each epoch, which the dict upsert absorbs
     run_available_now_foreach_batch(
         stream,
         str(tmp_path / "cp"),
-        lambda df, e: out.update({(r.user, r.session_start): r.n_events for r in df.collect()}),
+        lambda df, e: out.update({(r.user, r.window_start): r.n_events for r in df.collect()}),
         output_mode="complete",
     )
     assert out == {
@@ -332,36 +399,12 @@ def test_session_window_agg(spark, tmp_path):
     }
 
 
-def test_stateful_seen_filter_dedups_across_batches(spark, tmp_path):
-    from tamer_spark.streaming.stateful import stateful_seen_filter
-
-    src = tmp_path / "keys"
-    src.mkdir()
-    schema = "k long"
-    spark.createDataFrame([(1,), (2,), (2,)], schema).write.parquet(str(src / "b1"))
-
-    def run(expect):
-        got = []
-        run_available_now_foreach_batch(
-            stateful_seen_filter(stream_parquet(spark, str(src / "b*"), schema), "k"),
-            str(tmp_path / "cp"),
-            lambda df, e: got.extend(r.k for r in df.collect()),
-        )
-        assert sorted(got) == expect
-
-    run([1, 2])  # in-batch dup of 2 collapsed
-    # second drop: 2 repeats (already seen — dropped), 3 is new
-    spark.createDataFrame([(2,), (3,)], schema).write.parquet(str(src / "b2"))
-    run([3])
-
-
 def test_stream_dedup_within_watermark(spark, tmp_path):
     """Streaming exact dedup: duplicate keys arriving within the watermark
     are collapsed; state is keyed on the digest, bounded by the watermark."""
     import pyspark.sql.types as T
 
-    from tamer_spark.streaming import stream_parquet
-    from tamer_spark.streaming.readers import run_available_now, stream_dedup_exact
+    from tamer_spark.streaming.readers import stream_dedup_exact
 
     src = tmp_path / "in"
     base = datetime(2025, 1, 1, 12, 0, 0)
@@ -491,7 +534,7 @@ def test_streaming_exsub_removal_epochs(spark, tmp_path):
         )
         cut.unpersist()
 
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
+    stream = stream_parquet(spark, str(src), "doc_id long, text string")
     # epoch 1: one doc embeds the seed's run (cut, remainder kept), one
     # fresh doc, and an intra-batch pair sharing a novel run
     spark.createDataFrame(
