@@ -1,47 +1,17 @@
-"""Context-window text chunking as a Python UDTF.
+"""Context-window text chunking as JVM array expressions.
 
 Training-data pipelines chunk documents into fixed token budgets before
-tokenization; this is the 1→N row shape Python UDTFs model (one doc in,
-many chunks out). Registered as a lateral table function so it composes in
-SQL; words-per-chunk is the budget knob.
-
-Scale: UDTFs run row-at-a-time in Python workers — acceptable here because
-chunking is string slicing (cheap) and the row explosion dominates cost; a
-hot-path alternative is the pure-JVM `chunk_text_expr` below (same
-semantics, codegen'd), which is what the 100 TB path should use. Both are
-exposed so the correctness gate can pin them against each other and the SQL
-oracle.
+tokenization: one doc in, many chunks out. ``chunk_text_expr`` builds the
+chunks as an array column (codegen'd JVM array math, no Python worker);
+pair it with ``posexplode`` for (chunk_id, chunk) rows. Words-per-chunk is
+the budget knob. tests/test_bucketing_chunking.py pins it against a
+pure-Python reference, and the SQL oracle pins it through the gate.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def normalize_py(text: str) -> str:
-    """Python twin of operators.dedup.normalize_text (ASCII-safe inputs)."""
-    return re.sub(r"\s+", " ", text.lower()).strip()
-
-
-class ChunkText:
-    """UDTF: (doc_id, text, words_per_chunk) → (doc_id, chunk_id, chunk, n_words)."""
-
-    def eval(self, doc_id: int, text: str, words_per_chunk: int = 50):  # noqa: D102
-        words = normalize_py(text or "").split(" ")
-        for cid, start in enumerate(range(0, len(words), words_per_chunk)):
-            piece = words[start : start + words_per_chunk]
-            yield doc_id, cid, " ".join(piece), len(piece)
-
-
-def register_chunk_text(spark, name: str = "chunk_text"):
-    from pyspark.sql.functions import udtf
-
-    wrapped = udtf(ChunkText, returnType="doc_id bigint, chunk_id bigint, chunk string, n_words bigint")
-    spark.udtf.register(name, wrapped)
-    return wrapped
 
 
 def chunk_text_expr(text: Column, words_per_chunk: int = 50) -> Column:

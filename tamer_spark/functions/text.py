@@ -411,26 +411,6 @@ def canonicalize_url_sql(url: str) -> str:
     )
 
 
-def canonicalize_url_py(url: str) -> str:
-    """Pure-Python reference of canonicalize_url_sql for differential tests
-    (stdlib re only — a third engine besides Spark and DuckDB)."""
-    import re
-
-    s = re.sub(URL_SCHEME_RE, "", url)
-    m = re.match(URL_HOSTPORT_RE, s)
-    hostport_raw = m.group(0) if m else ""
-    host = re.sub(URL_DEFAULT_PORT_RE, "", re.sub(URL_WWW_RE, "", hostport_raw.lower()))
-    rest = re.sub(URL_FRAGMENT_RE, "", s[len(hostport_raw):])
-    pm = re.match(URL_PATH_RE, rest)
-    path = re.sub(URL_TRAILING_SLASH_RE, "", pm.group(0) if pm else "")
-    qm = re.match(URL_QUERY_RE, rest)
-    kept = sorted(
-        p
-        for p in (qm.group(1) if qm else "").split("&")
-        if p and not re.match(URL_TRACKING_PARAM_RE, p)
-    )
-    return host + path + ("?" + "&".join(kept) if kept else "")
-
 
 # Registrable-domain extraction — the CCNet/RefinedWeb PER-DOMAIN key
 # (CCNet aggregates quality by domain; RefinedWeb §3.1 filters whole
@@ -460,7 +440,8 @@ IPV4_HOST_RE = r"^[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+$"
 def url_host_col(url: Column) -> Column:
     """Lowercased host of a URL column, www. and ANY explicit port
     stripped — the domain family's host convention (shared by
-    registrable_domain_col and the DuckDB/py mirrors)."""
+    registrable_domain_col, its DuckDB mirror and the Python one in
+    tests/test_domain.py)."""
     s = F.regexp_replace(url, URL_SCHEME_RE, "")
     hostport = F.lower(F.regexp_extract(s, URL_HOSTPORT_RE, 0))
     return F.regexp_replace(
@@ -491,24 +472,6 @@ def registrable_domain_col(url: Column) -> Column:
         .otherwise(host)
     )
 
-
-def registrable_domain_py(url: str) -> str:
-    """Pure-Python reference of registrable_domain_col (stdlib re only —
-    the third engine for differential tests)."""
-    import re
-
-    s = re.sub(URL_SCHEME_RE, "", url)
-    m = re.match(URL_HOSTPORT_RE, s)
-    hostport = (m.group(0) if m else "").lower()
-    host = re.sub(URL_ANY_PORT_RE, "", re.sub(URL_WWW_RE, "", hostport))
-    if re.match(IPV4_HOST_RE, host):
-        return host
-    labels = host.split(".")
-    if len(labels) >= 3 and ".".join(labels[-2:]) in TWO_LEVEL_SUFFIXES:
-        return ".".join(labels[-3:])
-    if len(labels) >= 2:
-        return ".".join(labels[-2:])
-    return host
 
 
 # Encoding repair (ftfy-lite; Speer 2019, "ftfy: fixes text for you" — the
@@ -639,28 +602,15 @@ def script_count_cols(text: Column) -> list[Column]:
     ]
 
 
-def dominant_script_from_counts(counts: dict[str, Column]) -> Column:
-    """The majority script from PRE-COMPUTED count columns — use this when
-    the counts are already staged (script_count_cols in a prior select):
-    the greatest + tie chain references every count ~3×, and deriving it
-    from the text would pay ~15 regexp passes where 5 suffice (measured
-    +47 % on the text_profile gate before this split). Alphabetical-first
-    on ties (a total order — the lang_id_col convention), 'none' when no
-    script chars at all."""
-    g = F.greatest(*[counts[n] for n in sorted(counts)])
-    out = F.lit("none")
-    for name in sorted(counts, reverse=True):
-        out = F.when((g > 0) & (counts[name] == g), F.lit(name)).otherwise(out)
-    return out
-
-
-def dominant_script_col(text: Column) -> Column:
-    """From-text convenience over ``dominant_script_from_counts`` — fine
-    standalone; inside a profile that ALSO emits the counts, stage them
-    once and use the from-counts form."""
-    return dominant_script_from_counts(
-        {
-            name: F.regexp_count(text, F.lit(pat))
-            for name, pat in sorted(SCRIPT_PATTERNS.items())
-        }
-    )
+def dominant_script_sql() -> str:
+    """SQL for the majority script over the staged ``n_<script>`` count
+    columns of script_count_cols — stage the counts in a prior select: the
+    greatest + tie chain references every count ~3×, and deriving it from
+    the text would pay ~15 regexp passes where 5 suffice (measured +47 % on
+    the text_profile gate before this split). Alphabetical-first on ties (a
+    total order — the lang_id_col convention), 'none' when no script chars
+    at all."""
+    names = sorted(SCRIPT_PATTERNS)
+    g = "greatest(" + ", ".join(f"n_{n}" for n in names) + ")"
+    whens = " ".join(f"WHEN ({g} > 0) AND (n_{n} = {g}) THEN '{n}'" for n in names)
+    return f"CASE {whens} ELSE 'none' END"

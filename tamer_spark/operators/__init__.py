@@ -10,7 +10,7 @@ from tamer_spark.operators.canonical import select_canonical
 from tamer_spark.operators.contamination import contamination_score
 from tamer_spark.operators.budget import take_token_budget
 from tamer_spark.operators.classifier import odds_score, odds_train
-from tamer_spark.operators.datasheet import corpus_datasheet, datasheet_delta
+from tamer_spark.operators.datasheet import corpus_datasheet
 from tamer_spark.operators.decontaminate import decontaminate_substrings
 from tamer_spark.operators.events import cohort_retention, funnel_counts
 from tamer_spark.operators.pagerank import pagerank
@@ -32,11 +32,9 @@ from tamer_spark.operators.dedup_incremental import (
     dedup_exact_incremental,
     dedup_exact_incremental_bloom,
     dedup_minhash_incremental,
-    dedup_minhash_incremental_bloom,
     exact_bloom_index_df,
     exact_index,
     minhash_band_index,
-    minhash_bloom_index,
 )
 from tamer_spark.operators.gopher import gopher_signals
 from tamer_spark.operators.mixing import stratified_mix
@@ -72,10 +70,8 @@ __all__ = [
     "dedup_exact_incremental_bloom",
     "exact_bloom_index_df",
     "dedup_minhash_incremental",
-    "dedup_minhash_incremental_bloom",
     "exact_index",
     "minhash_band_index",
-    "minhash_bloom_index",
     "append_keys",
     "minhash_signatures",
     "minhash_lsh_pairs",
@@ -106,7 +102,6 @@ __all__ = [
     "take_token_budget",
     "temperature_mix",
     "corpus_datasheet",
-    "datasheet_delta",
     "select_canonical",
     "contamination_score",
     "substring_run_pairs",

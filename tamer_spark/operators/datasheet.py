@@ -50,32 +50,3 @@ def corpus_datasheet(
         )
     )
 
-
-def datasheet_delta(
-    before: DataFrame,
-    after: DataFrame,
-    keys: tuple[str, ...] = ("source", "lang"),
-) -> DataFrame:
-    """The curation report: per-slice deltas between the raw corpus's
-    datasheet and the curated output's (run :func:`corpus_datasheet` on
-    each). Full-outer on the slice keys — slices created or emptied by
-    curation still appear, with zeros on the missing side. Every column
-    is an exact int64 (after − before, so drops are negative).
-
-    Both inputs are slice-sized frames (|sources| × |langs|), so this is
-    driver-trivial at any corpus scale — the heavy passes already
-    happened inside the two datasheets."""
-    metrics = ("n_docs", "total_chars", "total_tokens", "dup_docs")
-    b = before.select(*keys, *[F.col(m).alias(f"_b_{m}") for m in metrics])
-    a = after.select(*keys, *[F.col(m).alias(f"_a_{m}") for m in metrics])
-    joined = b.join(a, list(keys), "full_outer")
-    out_cols = [F.col(k) for k in keys]
-    for m in metrics:
-        bb = F.coalesce(F.col(f"_b_{m}"), F.lit(0))
-        aa = F.coalesce(F.col(f"_a_{m}"), F.lit(0))
-        out_cols += [
-            bb.alias(f"{m}_before"),
-            aa.alias(f"{m}_after"),
-            (aa - bb).alias(f"{m}_delta"),
-        ]
-    return joined.select(*out_cols)

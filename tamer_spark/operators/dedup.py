@@ -148,34 +148,6 @@ def domain_doc_counts(
     )
 
 
-def filter_blocklisted_domains(
-    df: DataFrame,
-    blocklist: DataFrame,
-    url_col: str = "url",
-    domain_col: str = "domain",
-) -> DataFrame:
-    """RefinedWeb §3.1 URL filtering: drop every document whose registrable
-    domain appears in ``blocklist`` (a frame with ``domain_col`` holding
-    registrable domains — build it once, curate it by hand or from
-    domain_doc_counts + quality rollups, persist it). Broadcast anti-join
-    on the extracted domain — map-side at any corpus size (the blocklist
-    is list-sized, not corpus-sized); rows with NULL urls or empty hosts
-    have no domain and are KEPT (a blocklist can only match an actual
-    domain — dropping url-less docs here would repeat the url_dedup_counts
-    drop-all trap)."""
-    from tamer_spark.functions.text import registrable_domain_col
-
-    tagged = df.withColumn("_dom", registrable_domain_col(F.col(url_col)))
-    out = tagged.join(
-        F.broadcast(
-            blocklist.select(F.col(domain_col).alias("_dom")).dropDuplicates(["_dom"])
-        ),
-        "_dom",
-        "left_anti",
-    )
-    return out.drop("_dom")
-
-
 def sentence_dedup_counts(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", min_len: int = 1
 ) -> DataFrame:

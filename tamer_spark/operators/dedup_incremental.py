@@ -264,68 +264,6 @@ def dedup_exact_incremental_bloom(
     return negatives.unionByName(verified)
 
 
-def _band_key(df: DataFrame) -> DataFrame:
-    """(band_id, band_sig) → one string probe key. NULL-free by
-    construction (band_sig is a concat_ws product, band_id a posexplode
-    ordinal), so concat never nulls out a key."""
-    return df.withColumn(
-        "_bk", F.concat(F.col("band_id").cast("string"), F.lit(":"), F.col("band_sig"))
-    )
-
-
-def minhash_bloom_index(
-    index: DataFrame, m_bits: int = 1 << 27, k: int = 5
-) -> DataFrame:
-    """Distributed bloom sidecar over an LSH band index's (band_id,
-    band_sig) bucket keys — the near-dup analog of
-    ``exact_bloom_index_df``. Build once over the persisted index, advance
-    per epoch with ``bloom_merge_df`` over the surviving batch's bands.
-    MATERIALIZE the result (parquet / persist) before probing: a lazy
-    words frame embeds the index-banding plan and re-executes it inside
-    every probe, silently restoring the per-epoch index cost the sidecar
-    exists to remove (same rule for ``exact_bloom_index_df``).
-    """
-    from tamer_spark.operators.bloom import bloom_words_df
-
-    return bloom_words_df(_band_key(index), "_bk", m_bits=m_bits, k=k)
-
-
-def dedup_minhash_incremental_bloom(
-    new_df: DataFrame,
-    words: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    bands: int = 4,
-    n: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-dup incremental dedup against a bloom sidecar of the LSH band
-    index: drop a doc when ANY of its band keys bloom-hits.
-
-    Same decision rule as ``dedup_minhash_incremental`` (any-full-band
-    collision), same error direction as the exact-dedup sidecar: a bloom
-    has no false negatives, so every doc that WOULD have collided with the
-    index is guaranteed dropped (zero false keeps of near-dups); bloom FPs
-    drop novel docs at the sized FP rate — and since a doc is dropped on
-    ANY of its ``bands`` keys hitting, the per-doc false-drop rate is
-    ≤ bands × the per-key rate (size ``m_bits`` accordingly). The index
-    itself is never touched: per-epoch cost is banding the batch
-    (map-only) + k broadcast-join probes + one batch-keyed anti join.
-
-    The probe reads its sizing from ``words``'s schema (the
-    ``bloom_words_df`` contract).
-    """
-    from tamer_spark.operators.bloom import bloom_might_contain
-
-    banded = _banded_sigs(new_df, text_col, id_col, k, bands, n, seed)
-    probed = bloom_might_contain(_band_key(banded), "_bk", words)
-    collided = probed.filter(F.col("bloom_hit")).select("doc_id").distinct()
-    return new_df.join(
-        collided, new_df[id_col] == collided["doc_id"], "left_anti"
-    )
-
-
 def append_keys(index: DataFrame, new_keys: DataFrame) -> DataFrame:
     """Advance an index by a surviving batch's keys (plan form).
 
@@ -336,25 +274,6 @@ def append_keys(index: DataFrame, new_keys: DataFrame) -> DataFrame:
     the logical equivalent for in-session composition and tests.
     """
     return index.unionByName(new_keys).distinct()
-
-
-def minhash_band_posting_index(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    bands: int = 4,
-    n: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """ID-CARRYING LSH index: ``(doc_id, band_id, band_sig)`` — the posting
-    form of ``minhash_band_index`` for pipelines that need the collided
-    PAIRS (cluster maintenance via cc_incremental), not just the batch's
-    survivors. Same ``_banded_sigs`` banding (bit-identical keys), one
-    distinct; persist bucketed on (band_id, band_sig). Per epoch, append
-    the surviving batch's postings (append_keys works unchanged — the
-    union key set just carries doc_id along)."""
-    return _banded_sigs(df, text_col, id_col, k, bands, n, seed).distinct()
 
 
 def minhash_epoch_pairs(
@@ -372,6 +291,11 @@ def minhash_epoch_pairs(
     batch × history collisions (band equi-join against the posting index)
     ∪ within-batch pairs (minhash_lsh_pairs over the batch alone). Returns
     ``(doc_a, doc_b)`` with doc_a < doc_b, distinct.
+
+    ``posting_index`` is history's ``(doc_id, band_id, band_sig)`` rows:
+    ``lsh_bands(minhash_signatures(history, ...), k, bands)`` with the same
+    k/bands/n/seed, distinct, persisted bucketed on (band_id, band_sig) and
+    advanced per epoch with the surviving batch's rows (``append_keys``).
 
     This is exactly the pair set cc_incremental needs: the full corpus
     pair graph = history-history pairs (already inside the previous

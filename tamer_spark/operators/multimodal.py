@@ -5,13 +5,13 @@ Design for 100 TB multimodal corpora:
 - media lives in BINARY columns (or pointers to object-store keys when blobs
   exceed row-group budgets), with typed metadata columns alongside
   (``media_type``, ``width/height/duration``, ``codec``),
-- decode / feature-extract / resize / frame-sample run as Arrow-batched
-  ``mapInPandas`` stages: the plumbing (schemas, batch shapes, partitioning)
-  is real Spark; the codec call is a seam,
-- the actual image/audio decoders (PIL, ffmpeg, torchaudio) are NOT in this
-  environment, so decoders are pluggable: the default raises
-  NotImplementedError; ``fake_image_decoder`` provides a deterministic stand-
-  in so pipelines and tests exercise the full distributed path.
+- per-blob stages run as Arrow-batched ``mapInPandas``: the plumbing
+  (schemas, batch shapes, partitioning) is real Spark; the codec call is a
+  seam,
+- the actual image decoders (PIL, ffmpeg) are NOT in this environment, so
+  the perceptual hash takes a pluggable ``pixelizer``; ``fake_pixelizer``
+  is a deterministic stand-in so pipelines and tests exercise the full
+  distributed path.
 
 At scale, partition count is the lever: ``spark.sql.files.maxPartitionBytes``
 bounds the bytes per task, and a ``repartition(n)`` before the decode stage
@@ -47,155 +47,6 @@ def binary_stats(df: DataFrame, binary_col: str, id_col: str) -> DataFrame:
             )
 
     return df.select(id_col, binary_col).mapInPandas(stats, f"{id_col} long, n_bytes long, sha256_hex string")
-
-
-def default_image_decoder(blob: bytes) -> dict:
-    raise NotImplementedError(
-        "no image codec in this environment — plug a decoder(blob)->dict "
-        "(e.g. PIL-based) or use fake_image_decoder for pipeline tests"
-    )
-
-
-def fake_image_decoder(blob: bytes) -> dict:
-    """Deterministic stand-in 'decode': derives pseudo width/height/channels
-    from the content hash. Keeps the distributed plumbing testable."""
-    h = hashlib.sha256(bytes(blob)).digest()
-    return {
-        "width": 64 + h[0],
-        "height": 64 + h[1],
-        "channels": 1 + h[2] % 4,
-    }
-
-
-def decode_images(
-    df: DataFrame,
-    binary_col: str,
-    id_col: str,
-    decoder: Callable[[bytes], dict] = default_image_decoder,
-) -> DataFrame:
-    """Decode image blobs to (id, width, height, channels) via mapInPandas."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            meta = pdf[binary_col].map(lambda b: decoder(bytes(b)))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": meta.map(lambda m: m["width"]).astype("int64"),
-                    "height": meta.map(lambda m: m["height"]).astype("int64"),
-                    "channels": meta.map(lambda m: m["channels"]).astype("int64"),
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        run, f"{id_col} long, width long, height long, channels long"
-    )
-
-
-def sample_frames(
-    df: DataFrame,
-    binary_col: str,
-    id_col: str,
-    every_nth: int = 10,
-    frame_extractor: Callable[[bytes, int], list[bytes]] | None = None,
-) -> DataFrame:
-    """Frame-sampling shape: one input blob → N frame rows (flatMap-style).
-
-    ``frame_extractor(blob, every_nth) -> [frame_bytes]``; default fake
-    splits the blob into deterministic chunks so the 1→N row explosion and
-    output schema are exercised without a video codec.
-    """
-
-    def default_extractor(blob: bytes, nth: int) -> list[bytes]:
-        step = max(1, len(blob) // max(1, (len(blob) // (nth * 16)) or 1))
-        return [blob[i : i + 16] for i in range(0, len(blob), step)][:8]
-
-    extract = frame_extractor or default_extractor
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frame_ids, frames = [], [], []
-            for _id, blob in zip(pdf[id_col], pdf[binary_col]):
-                for i, fr in enumerate(extract(bytes(blob), every_nth)):
-                    ids.append(_id)
-                    frame_ids.append(i)
-                    frames.append(fr)
-            yield pd.DataFrame({id_col: ids, "frame_id": frame_ids, "frame": frames})
-
-    return df.select(id_col, binary_col).mapInPandas(
-        run, f"{id_col} long, frame_id long, frame binary"
-    )
-
-
-def resize_images(
-    df: DataFrame,
-    binary_col: str,
-    id_col: str,
-    width: int = 224,
-    height: int = 224,
-    resizer: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Resize stage shape: blob → resized blob + output dims.
-
-    Default deterministic fake truncates/pads the payload to width*height/64
-    bytes (keeps batch-shape and schema real without a codec); plug a
-    PIL-backed ``resizer(blob, w, h) -> bytes`` in environments that have one.
-    """
-
-    def fake_resize(blob: bytes, w: int, h: int) -> bytes:
-        target = max(1, w * h // 64)
-        return (blob * (target // max(len(blob), 1) + 1))[:target]
-
-    fn = resizer or fake_resize
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "resized": pdf[binary_col].map(lambda b: fn(bytes(b), width, height)),
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        run, f"{id_col} long, resized binary, width long, height long"
-    )
-
-
-def extract_audio_features(
-    df: DataFrame,
-    binary_col: str,
-    id_col: str,
-    n_features: int = 16,
-    extractor: Callable[[bytes, int], list[float]] | None = None,
-) -> DataFrame:
-    """Audio feature-extraction shape: blob → fixed-length float vector.
-
-    Default deterministic fake derives ``n_features`` floats from the sha256
-    of the payload (real plumbing: array<double> schema, Arrow batching);
-    plug a librosa/torchaudio-backed extractor where available.
-    """
-
-    def fake_features(blob: bytes, n: int) -> list[float]:
-        h = hashlib.sha256(bytes(blob)).digest()
-        return [h[i % 32] / 255.0 for i in range(n)]
-
-    fn = extractor or fake_features
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "features": pdf[binary_col].map(lambda b: fn(bytes(b), n_features)),
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        run, f"{id_col} long, features array<double>"
-    )
 
 
 def fake_pixelizer(blob: bytes, n: int = 64) -> list[int]:

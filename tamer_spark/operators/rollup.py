@@ -25,7 +25,7 @@ import os
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tamer_spark.sinks import ParquetEpochSink
@@ -99,7 +99,3 @@ def rollup_sink(
             rollup.write(aggregate(df), epoch)
 
     return _Sink()
-
-
-def hourly_window(ts: Column) -> Column:
-    return F.date_trunc("hour", ts)

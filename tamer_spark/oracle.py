@@ -1,9 +1,9 @@
 """Local replica of the driver's correctness gate.
 
-Runs each registry query on Spark and its oracle SQL on DuckDB (tables
-pre-registered as views over the same parquet), then compares row count,
-schema shape, and an order-insensitive value hash. Used by tests/ to keep the
-gate green before the driver ever sees the code.
+Compares a registry query's Spark result with its oracle SQL's DuckDB result
+(run over views of the same parquet): row count, schema shape, and an
+order-insensitive value hash. tests/test_oracle_gate.py runs it over every
+registry query to keep the gate green before the driver ever sees the code.
 """
 
 from __future__ import annotations
@@ -12,28 +12,6 @@ import math
 from dataclasses import dataclass
 
 import pandas as pd
-
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
-
-def duckdb_con(sf_dir: str):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
 
 
 def _canon_cell(v) -> str:

@@ -1638,7 +1638,7 @@ def text_profile_q(spark, sf):
     # helpers built (nested-when chains flattened to the equivalent ordered
     # CASE, the exact flat form the DuckDB oracle uses); stage structure
     # (three selects staging _ws, script counts, then _sh) is unchanged.
-    from tamer_spark.functions.text import LANG_MARKERS, SCRIPT_PATTERNS
+    from tamer_spark.functions.text import LANG_MARKERS, SCRIPT_PATTERNS, dominant_script_sql
 
     def sq(s: str) -> str:
         return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -1738,15 +1738,6 @@ def text_profile_q(spark, sf):
     # greatest/tie chain references every count ~3×, and an unstaged form
     # re-evaluates the five regexp passes per reference (measured +47 %
     # on this gate; CollapseProject keeps non-cheap staged exprs intact)
-    scr_g = "greatest(" + ", ".join(f"n_{n}" for n in scr_names) + ")"
-    script_pred = (
-        "CASE "
-        + " ".join(
-            f"WHEN ({scr_g} > 0) AND (n_{n} = {scr_g}) THEN '{n}'"
-            for n in scr_names
-        )
-        + " ELSE 'none' END"
-    )
     staged = d.selectExpr(
         "doc_id",
         "text",
@@ -1773,7 +1764,7 @@ def text_profile_q(spark, sf):
         "CAST(size(array_distinct(_sh)) AS BIGINT) AS n_distinct",
         "1.0D - CAST(size(array_distinct(_sh)) AS DOUBLE) / size(_sh) AS repetition",
         *[f"n_{n}" for n in scr_names],
-        f"{script_pred} AS script_pred",
+        f"{dominant_script_sql()} AS script_pred",
     )
 
 

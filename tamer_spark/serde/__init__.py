@@ -1,14 +1,9 @@
 from tamer_spark.serde.avro import AvroCodec, encode_df
-from tamer_spark.serde.confluent import extract_schema_id, frame_confluent, unframe_confluent
-from tamer_spark.serde.registry import FakeRegistry, RegistryClient, check_compat
+from tamer_spark.serde.registry import FakeRegistry, check_compat
 
 __all__ = [
     "AvroCodec",
     "encode_df",
-    "frame_confluent",
-    "unframe_confluent",
-    "extract_schema_id",
-    "RegistryClient",
     "FakeRegistry",
     "check_compat",
 ]

@@ -17,11 +17,12 @@ Golden-byte tests in tests/test_avro.py pin the encoding against
 spec-derived examples, so this is not merely self-consistent.
 
 DataFrame integration: ``encode_df`` runs the codec in an Arrow-batched
-``mapInPandas`` stage and (optionally) applies Confluent framing with a
-registry-assigned schema id — the full Serde.scala:31-92 path without JVM
-connector dependencies. Throughput note: this is the Python fallback path;
-with spark-avro on the classpath prefer ``pyspark.sql.avro.functions.to_avro``
-/ ``from_avro`` (JVM, codegen) with serde.confluent framing.
+``mapInPandas`` stage and (optionally) applies Confluent framing
+(``magic 0x0 | 4-byte big-endian schema id | payload``, Serde.scala:47-52)
+with a registry-assigned schema id — the produce half of Serde.scala:31-92
+without JVM connector dependencies. Throughput note: this is the Python
+fallback path; with spark-avro on the classpath prefer
+``pyspark.sql.avro.functions.to_avro`` (JVM, codegen).
 """
 
 from __future__ import annotations
@@ -247,37 +248,3 @@ def encode_df(df, value_cols: list[str], schema: dict | str, schema_id: int | No
 
     return df.select(*value_cols).mapInPandas(enc, "value binary")
 
-
-def decode_df(df, value_col: str, schema: dict | str, framed: bool = True, out_schema: str | None = None):
-    """Framed Avro bytes → typed columns (the consume direction).
-
-    ``out_schema``: Spark DDL for the decoded record (defaults to mapping
-    the Avro record's top-level fields: int/long→long, float/double→double,
-    string→string, boolean→boolean, bytes→binary; nullable unions unwrap).
-    """
-    import pandas as pd
-
-    sch = json.loads(schema) if isinstance(schema, str) else schema
-    codec = AvroCodec(sch)
-
-    def _spark_type(avro_t) -> str:
-        if isinstance(avro_t, list):  # nullable union
-            non_null = [t for t in avro_t if t != "null"]
-            return _spark_type(non_null[0])
-        t = avro_t["type"] if isinstance(avro_t, dict) else avro_t
-        return {
-            "int": "long", "long": "long", "float": "double", "double": "double",
-            "string": "string", "boolean": "boolean", "bytes": "binary",
-        }.get(t, "string")
-
-    if out_schema is None:
-        out_schema = ", ".join(f"{f['name']} {_spark_type(f['type'])}" for f in sch["fields"])
-    field_names = [f["name"] for f in sch["fields"]]
-    skip = 5 if framed else 0
-
-    def dec(batches):
-        for pdf in batches:
-            recs = [codec.decode(bytes(b)[skip:]) for b in pdf[value_col]]
-            yield pd.DataFrame({n: [r[n] for r in recs] for n in field_names})
-
-    return df.select(value_col).mapInPandas(dec, out_schema)

@@ -1,17 +1,12 @@
-"""Confluent-compatible schema-registry client (driver-side, stdlib HTTP).
+"""Schema-registry semantics without a registry service.
 
-Mirrors core/src/main/scala/tamer/Registry.scala:
+Mirrors the registry-less half of core/src/main/scala/tamer/Registry.scala.
+``FakeRegistry`` (Registry.scala:152-157) assigns ids in memory:
+``get_or_register_id(subject, schema)`` and ``verify_schema(id, schema)``
+with real compatibility checks (Registry.scala:113-143).
 
-- ``get_or_register_id(subject, schema)``: try lookup (``POST /subjects/{s}``),
-  fall back to register (``POST /subjects/{s}/versions``) — the ``<>``
-  fallback at Registry.scala:127,
-- ``verify_schema(id, schema)``: fetch by id (``GET /schemas/ids/{id}``) and
-  check reader/writer compatibility (Registry.scala:131-143),
-- two TTL caches (ids and verifications) sized/expired like the reference's
-  zio-cache pair (default size 4, 1 h — config.scala:57-72),
-- subject naming ``{topic}-key`` / ``{topic}-value`` (Serde.scala:41),
-- Basic/Bearer auth headers (config.scala:31-55),
-- ``FakeRegistry``: no-op for registry-less operation (Registry.scala:152-157).
+There is no HTTP client for a Confluent-compatible registry: no registry
+service runs beside this repo, so such a client could not be exercised.
 
 Compatibility checking implements the core Avro reader/writer rules
 structurally (field added without default / field type changed / name
@@ -24,36 +19,8 @@ exercises.
 from __future__ import annotations
 
 import json
-import time
-import urllib.request
-from dataclasses import dataclass, field
-from typing import Any
 
 from tamer_spark.errors import TamerError
-
-
-class TTLCache:
-    """Tiny LRU+TTL cache (reference: zio-cache size 4 / 1 h, config.scala:61-68)."""
-
-    def __init__(self, size: int = 4, ttl_s: float = 3600.0):
-        self.size, self.ttl_s = size, ttl_s
-        self._d: dict[Any, tuple[float, Any]] = {}
-
-    def get(self, key):
-        hit = self._d.get(key)
-        if hit is None:
-            return None
-        ts, val = hit
-        if time.monotonic() - ts > self.ttl_s:
-            del self._d[key]
-            return None
-        return val
-
-    def put(self, key, val):
-        if len(self._d) >= self.size and key not in self._d:
-            oldest = min(self._d, key=lambda k: self._d[k][0])
-            del self._d[oldest]
-        self._d[key] = (time.monotonic(), val)
 
 
 def _field_map(schema: dict) -> dict[str, dict]:
@@ -118,64 +85,6 @@ def _types_compatible(rt, wt) -> bool:
     return False
 
 
-@dataclass
-class RegistryClient:
-    """HTTP client for a Confluent-compatible registry."""
-
-    base_url: str
-    auth_header: str | None = None  # "Basic xxx" / "Bearer yyy" (config.scala:31-55)
-    cache_size: int = 4
-    cache_ttl_s: float = 3600.0
-    _id_cache: TTLCache = field(init=False, repr=False)
-    _verify_cache: TTLCache = field(init=False, repr=False)
-
-    def __post_init__(self):
-        self._id_cache = TTLCache(self.cache_size, self.cache_ttl_s)
-        self._verify_cache = TTLCache(self.cache_size, self.cache_ttl_s)
-
-    def _req(self, method: str, path: str, body: dict | None = None) -> dict:
-        url = self.base_url.rstrip("/") + path
-        data = json.dumps(body).encode() if body is not None else None
-        req = urllib.request.Request(url, data=data, method=method)
-        req.add_header("Content-Type", "application/vnd.schemaregistry.v1+json")
-        if self.auth_header:
-            req.add_header("Authorization", self.auth_header)
-        try:
-            with urllib.request.urlopen(req, timeout=30) as resp:
-                return json.loads(resp.read().decode())
-        except urllib.error.HTTPError as e:  # type: ignore[attr-defined]
-            raise TamerError(f"registry {method} {path} failed: HTTP {e.code}") from e
-
-    def get_or_register_id(self, subject: str, schema_json: str) -> int:
-        """Lookup-else-register (Registry.scala:113-127)."""
-        key = (subject, schema_json)
-        cached = self._id_cache.get(key)
-        if cached is not None:
-            return cached
-        try:
-            sid = int(self._req("POST", f"/subjects/{subject}", {"schema": schema_json})["id"])
-        except TamerError:
-            sid = int(
-                self._req("POST", f"/subjects/{subject}/versions", {"schema": schema_json})["id"]
-            )
-        self._id_cache.put(key, sid)
-        return sid
-
-    def verify_schema(self, schema_id: int, reader_schema_json: str) -> None:
-        """Fetch writer schema by id; raise on incompatibility
-        (Registry.scala:131-143)."""
-        key = (schema_id, reader_schema_json)
-        if self._verify_cache.get(key):
-            return
-        writer = self._req("GET", f"/schemas/ids/{schema_id}")["schema"]
-        errs = check_compat(reader_schema_json, writer)
-        if errs:
-            raise TamerError(
-                f"schema id {schema_id} incompatible with reader: " + "; ".join(errs)
-            )
-        self._verify_cache.put(key, True)
-
-
 class FakeRegistry:
     """In-memory no-op-ish registry (Registry.scala:152-157) — also the test
     double: assigns ids, stores schemas, does real compat checks."""
@@ -203,7 +112,3 @@ class FakeRegistry:
                 f"schema id {schema_id} incompatible with reader: " + "; ".join(errs)
             )
 
-
-def subjects(topic: str) -> tuple[str, str]:
-    """Subject naming convention (Serde.scala:41)."""
-    return f"{topic}-key", f"{topic}-value"

@@ -1,8 +1,8 @@
 """Sinks. The reference writes only to Kafka (Tamer.scala:64-87); we provide
-Kafka plus Parquet/memory/console, all honoring the per-epoch idempotence
+Kafka plus Parquet/memory, all honoring the per-epoch idempotence
 contract required by the engine loop (see engine.py docstring)."""
 
-from tamer_spark.sinks.base import ConsoleSink, MemorySink, ParquetEpochSink, epoch_frames
+from tamer_spark.sinks.base import MemorySink, ParquetEpochSink, epoch_frames
 from tamer_spark.sinks.kafka import TransactionalKafkaSink
 from tamer_spark.sinks.shards import (
     assign_shard,
@@ -15,7 +15,6 @@ from tamer_spark.sinks.shards import (
 __all__ = [
     "ParquetEpochSink",
     "MemorySink",
-    "ConsoleSink",
     "epoch_frames",
     "assign_shard",
     "shard_manifest",

@@ -97,11 +97,3 @@ class MemorySink:
     def rows(self) -> list:
         return [r for e in sorted(self.epochs) for r in self.epochs[e]]
 
-
-@dataclass
-class ConsoleSink:
-    n: int = 20
-
-    def write(self, df: DataFrame, epoch: int) -> None:
-        print(f"=== epoch {epoch} ===")
-        df.show(self.n, truncate=False)

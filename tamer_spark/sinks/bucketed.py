@@ -13,7 +13,7 @@ loses bucketing metadata.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -34,6 +34,3 @@ def write_bucketed(
         writer = writer.sortBy(*sort_cols)
     writer.format("parquet").saveAsTable(table)
 
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -33,8 +33,10 @@ drives the producers itself:
   exactly-once.
 
 No Kafka client library ships in this environment; the producer is a factory
-seam (``confluent_kafka.Producer``-compatible) like ``kafka_admin`` uses, and
-the per-partition protocol is a pure function unit-tested with fakes.
+seam (``confluent_kafka.Producer``-compatible), and the per-partition
+protocol is a pure function unit-tested with fakes. The reference's topic
+preflight (``initTopics``, Tamer.scala:252-327) is not implemented: it needs
+a Kafka admin client and broker, neither of which runs beside this repo.
 """
 
 from __future__ import annotations

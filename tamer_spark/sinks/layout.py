@@ -1,23 +1,19 @@
-"""Data-layout management: file sizing, partition layout, clustering.
+"""Data-layout management: file sizing and partition layout.
 
 The storage-side half of 100 TB performance: scans are only as good as the
-layout under them. Three tools:
+layout under them. Two tools:
 
 - ``write_sized``: target-file-size writes — the small-files problem (a
   100 TB table written by 10k tasks/day degenerates into millions of tiny
   files; listing + footer overhead then dominates scans).
 - ``compact_small_files``: rewrite an existing directory to target sizes.
-- ``morton_order``: multi-dimension clustering (Z-order) — interleaves the
-  bits of several columns so range predicates on ANY of them localize into
-  few files; combined with parquet min/max stats this is the poor-man's
-  Delta Z-ORDER, expressed as a plain sort key.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tamer_spark.sinks.base import _hadoop_fs
@@ -397,109 +393,3 @@ def compact_partitioned(
         out = out.unionByName(m)
     return out
 
-
-def morton_order(cols: list[Column], bits: int = 10) -> Column:
-    """Z-order (Morton) key: interleave the low ``bits`` bits of each column.
-
-    Columns should be pre-normalized to non-negative ints (e.g. rank or
-    quantized value). Use with ``repartitionByRange(n, morton).sortWithinPartitions``
-    before writing so min/max stats localize multi-column range predicates.
-    """
-    out = F.lit(0).cast("long")
-    k = len(cols)
-    for b in range(bits):
-        for i, c in enumerate(cols):
-            bit = F.shiftrightunsigned(c.cast("long"), b).bitwiseAND(F.lit(1))
-            out = out.bitwiseOR(F.shiftleft(bit, b * k + i))
-    return out
-
-
-def _as_double(df: DataFrame, c: str) -> Column:
-    """Numeric view of a z-order column (dates route via timestamp)."""
-    t = dict(df.dtypes)[c]
-    if t == "date":
-        return F.col(c).cast("timestamp").cast("double")
-    if t in ("string", "binary") or t.startswith(("array", "map", "struct")):
-        raise ValueError(
-            f"z-order column {c!r} has non-numeric type {t}; quantile-cut "
-            "normalization needs a numeric/date/timestamp column"
-        )
-    return F.col(c).cast("double")
-
-
-def zorder_quantile_cuts(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 10,
-    relative_error: float | None = None,
-) -> dict[str, list[float]]:
-    """Per-column quantile cut points for balanced z-order bucketing — ONE
-    distributed Greenwald-Khanna sketch job covering ALL columns (no sort,
-    no window; sketch size scales with 1/relative_error, not data size).
-    Cuts are sorted and deduplicated, ≤ 2^bits - 1 per column; skewed
-    columns with few distinct values simply yield fewer cuts (and so use
-    fewer interleave levels), which is the balance property rank
-    normalization bought — without its global sort."""
-    probs = [i / (1 << bits) for i in range(1, 1 << bits)]
-    if relative_error is None:
-        # a quarter of a bucket width: adjacent-bucket misassignment only
-        relative_error = 1.0 / (4 << bits)
-    num = df.select([_as_double(df, c).alias(c) for c in cols])
-    qs = num.approxQuantile(cols, probs, relative_error)
-    return {c: sorted(set(q)) for c, q in zip(cols, qs)}
-
-
-def _bucket_by_cuts(v: Column, cuts: list[float]) -> Column:
-    """Map-side bucket id: count of broadcast cut points ≤ value (the
-    searchsorted rank), O(len(cuts)) comparisons inside codegen. NULL
-    values land in bucket 0 — the HOF predicate is NULL for them, filter
-    drops those elements, size() is 0 — matching the nulls-first rank the
-    pre-r14 percent_rank normalization produced."""
-    if not cuts:
-        return F.lit(0).cast("long")
-    arr = F.array(*[F.lit(float(x)) for x in cuts])
-    return F.size(F.filter(arr, lambda t: t <= v)).cast("long")
-
-
-def zorder_key(
-    df: DataFrame,
-    zorder_cols: list[str],
-    bits: int = 10,
-    relative_error: float | None = None,
-) -> DataFrame:
-    """``df`` plus a ``_z`` Morton-key column over quantile-bucketed
-    z-order columns. r14 scale fix (VERDICT r13 'What's wrong' #1): the
-    previous rank normalization was ``percent_rank().over(Window.orderBy)``
-    — a SinglePartition global sort PER COLUMN, which at 100 TB serializes
-    the whole write path through one task each. Now: one approxQuantile
-    sketch job produces ≤ 2^bits - 1 cut points per column, broadcast as
-    literals, and bucket ids are assigned map-side — zero global sorts
-    (pinned: no SinglePartition exchange, tests/test_plans.py)."""
-    cuts = zorder_quantile_cuts(df, zorder_cols, bits, relative_error)
-    ranked = [_bucket_by_cuts(_as_double(df, c), cuts[c]) for c in zorder_cols]
-    return df.withColumn("_z", morton_order(ranked, bits))
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    bits: int = 10,
-    n_files: int = 16,
-    mode: str = "overwrite",
-    relative_error: float | None = None,
-) -> None:
-    """Cluster by Morton key of the (quantile-bucketed) z-order columns and
-    write range-partitioned, sorted files — maximizes parquet min/max
-    pruning for predicates on any z-ordered column. Two jobs total: the
-    quantile sketch pass (``zorder_quantile_cuts``) and the write itself;
-    the key assignment is map-side (see ``zorder_key``), so the plan has
-    no global sort at any size."""
-    keyed = zorder_key(df, zorder_cols, bits, relative_error)
-    (
-        keyed.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -5,8 +5,6 @@ from tamer_spark.sources.objectstore import (
     OciObjectStorageSource,
     objects_cursor,
     oci_s3_compat_endpoint,
-    next_instant_cursor,
-    next_numeric_cursor,
     parse_instant_from_key,
     parse_number_from_key,
 )
@@ -31,8 +29,6 @@ __all__ = [
     "OciObjectStorageSource",
     "objects_cursor",
     "oci_s3_compat_endpoint",
-    "next_instant_cursor",
-    "next_numeric_cursor",
     "parse_instant_from_key",
     "parse_number_from_key",
     "Authentication",

@@ -88,19 +88,6 @@ def next_key(
     return best
 
 
-def next_instant_cursor(
-    keys: list[str], current: datetime, prefix: str, fmt: str
-) -> datetime | None:
-    """Smallest key-instant strictly greater than ``current``."""
-    hit = next_key(keys, current, lambda k: parse_instant_from_key(k, prefix, fmt))
-    return hit[1] if hit else None
-
-
-def next_numeric_cursor(keys: list[str], current: int, prefix: str) -> int | None:
-    hit = next_key(keys, current, lambda k: parse_number_from_key(k, prefix))
-    return hit[1] if hit else None
-
-
 # ---------------------------------------------------------------------------
 # listers (driver-side metadata clients)
 # ---------------------------------------------------------------------------
@@ -119,7 +106,7 @@ class LocalFSLister:
     max_keys: int = 1000  # reference caps: 1000 keys/page (S3Setup.scala:80)
 
     def list_keys(self, prefix: str, start_after: str | None = None) -> list[str]:
-        pattern = os.path.join(self.root, prefix + "*")
+        pattern = os.path.join(_glob.escape(self.root), _glob.escape(prefix) + "*")
         keys = sorted(
             os.path.relpath(p, self.root)
             for p in _glob.glob(pattern)

@@ -10,7 +10,7 @@ exists, then stop" mode the engine loop uses for backfills.
 
 This module holds the one copy of each streaming rule — file readers,
 event-time windows (tumbling, hopping and session, one ``windowed_agg``),
-bounded-state dedup, the interval join and the three AvailableNow drains
+bounded-state dedup and the three AvailableNow drains
 (file sink, foreachBatch, memory table). The graded gates
 ``streaming_window_aggs`` and ``streaming_row_gates`` (queries.py) build
 and drain their streams through it.
@@ -27,17 +27,6 @@ import itertools
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def stream_lines(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Line-per-record file stream — the streaming form of the S3 object
-    pipeline (utf8 + splitLines, S3Setup.scala:133)."""
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(path)
 
 
 def stream_parquet(
@@ -103,47 +92,6 @@ def stream_dedup_exact(
     if ts_col is None:
         return df.dropDuplicates(key_cols)
     return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
-
-
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_time: str,
-    right_time: str,
-    lower: str = "0 seconds",
-    upper: str = "10 minutes",
-    watermark: str = "10 minutes",
-    how: str = "inner",
-) -> DataFrame:
-    """Watermarked stream-stream interval join:
-    ``right_time ∈ [left_time - lower, left_time + upper]`` per key.
-
-    Both sides carry a watermark AND the join condition carries the time
-    interval — together they bound the state store: Spark retains each
-    side's rows only while the other side's watermark can still produce a
-    match (state ≈ rate × (watermark + interval)), the only shape that
-    survives an unbounded stream. Without the interval bound the state
-    grows forever and the job eventually OOMs — this helper makes the
-    bound impossible to forget.
-
-    ``how='left_outer'``/``'right_outer'`` emit unmatched rows once the
-    watermark closes their interval (null other side).
-    """
-    lw = left.withWatermark(left_time, watermark)
-    rw = right.withWatermark(right_time, watermark)
-    cond = (
-        (lw[on] == rw[on])
-        & (rw[right_time] >= F.expr(f"{left_time} - interval {lower}"))
-        & (rw[right_time] <= F.expr(f"{left_time} + interval {upper}"))
-    )
-    joined = lw.join(rw, cond, how)
-    # single key column out (coalesced so outer-join unmatched rows keep it)
-    return joined.select(
-        F.coalesce(lw[on], rw[on]).alias(on),
-        *[lw[c] for c in left.columns if c != on],
-        *[rw[c] for c in right.columns if c != on],
-    )
 
 
 def run_available_now(

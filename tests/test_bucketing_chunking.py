@@ -1,12 +1,16 @@
-"""Bucketed co-located joins (zero-exchange) and UDTF/JVM text chunking."""
+"""Bucketed co-located joins (zero-exchange) and JVM text chunking against
+a Python UDTF reference."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import re
 
-from tamer_spark.functions.chunking import ChunkText, chunk_text_expr, register_chunk_text
+from pyspark.sql import functions as F
+from pyspark.sql.functions import udtf
+
+from tamer_spark.functions.chunking import chunk_text_expr
 from tamer_spark.plans import plan_shape
-from tamer_spark.sinks.bucketed import read_table, write_bucketed
+from tamer_spark.sinks.bucketed import write_bucketed
 from tests.conftest import SF_DIR
 
 
@@ -24,8 +28,8 @@ def test_bucketed_join_has_no_exchange(spark):
     customer = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     write_bucketed(orders, "orders_b", ["o_custkey"], num_buckets=8)
     write_bucketed(customer, "customer_b", ["c_custkey"], num_buckets=8)
-    joined = read_table(spark, "orders_b").join(
-        read_table(spark, "customer_b").hint("merge"),
+    joined = spark.table("orders_b").join(
+        spark.table("customer_b").hint("merge"),
         F.col("o_custkey") == F.col("c_custkey"),
     )
     # both sides pre-shuffled on the join key at write time → zero exchanges
@@ -33,9 +37,27 @@ def test_bucketed_join_has_no_exchange(spark):
     assert joined.count() == orders.count()
 
 
+def _chunk_text_udtf():
+    """Reference chunker as a UDTF class: (doc_id, text, words_per_chunk) →
+    (doc_id, chunk_id, chunk, n_words), normalizing as
+    operators.dedup.normalize_text does on ASCII input. Made inside a
+    function so the Python workers get it by value, not by test-module
+    import."""
+
+    class ChunkText:
+        def eval(self, doc_id: int, text: str, words_per_chunk: int = 50):  # noqa: D102
+            words = re.sub(r"\s+", " ", (text or "").lower()).strip().split(" ")
+            for cid, start in enumerate(range(0, len(words), words_per_chunk)):
+                piece = words[start : start + words_per_chunk]
+                yield doc_id, cid, " ".join(piece), len(piece)
+
+    return ChunkText
+
+
 def test_udtf_chunking_matches_jvm_expr(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    register_chunk_text(spark)
+    returns = "doc_id bigint, chunk_id bigint, chunk string, n_words bigint"
+    spark.udtf.register("chunk_text", udtf(_chunk_text_udtf(), returnType=returns))
     docs.createOrReplaceTempView("docs_v")
     via_udtf = spark.sql(
         "SELECT c.doc_id, c.chunk_id, c.chunk, c.n_words "
@@ -59,7 +81,7 @@ def test_udtf_chunking_matches_jvm_expr(spark):
 
 
 def test_chunker_word_budget():
-    rows = list(ChunkText().eval(7, "a b c d e f g", 3))
+    rows = list(_chunk_text_udtf()().eval(7, "a b c d e f g", 3))
     assert rows == [(7, 0, "a b c", 3), (7, 1, "d e f", 3), (7, 2, "g", 1)]
 
 

@@ -14,11 +14,10 @@ from tamer_spark.sources import (
     advance_periodic_offset,
     advance_window,
     filter_page,
-    next_instant_cursor,
-    next_numeric_cursor,
     parse_instant_from_key,
     parse_number_from_key,
 )
+from tamer_spark.sources.objectstore import next_key
 
 UTC = timezone.utc
 
@@ -54,22 +53,28 @@ def test_parse_number_from_key():
 KEYS = [f"f/p2021-01-01 00:0{i}:00.empty" for i in range(1, 6)]
 
 
+def _instant(k):
+    return parse_instant_from_key(k, "f/p", "%Y-%m-%d %H:%M:%S")
+
+
+def _number(k):
+    return parse_number_from_key(k, "f2/p")
+
+
 def test_next_instant_cursor_picks_smallest_greater():
     cur = datetime(2021, 1, 1, 0, 2, 0, tzinfo=UTC)
-    assert next_instant_cursor(KEYS, cur, "f/p", "%Y-%m-%d %H:%M:%S") == datetime(
-        2021, 1, 1, 0, 3, 0, tzinfo=UTC
-    )
+    assert next_key(KEYS, cur, _instant) == (KEYS[2], datetime(2021, 1, 1, 0, 3, 0, tzinfo=UTC))
 
 
 def test_next_instant_cursor_none_when_drained():
     cur = datetime(2021, 1, 1, 0, 5, 0, tzinfo=UTC)
-    assert next_instant_cursor(KEYS, cur, "f/p", "%Y-%m-%d %H:%M:%S") is None
+    assert next_key(KEYS, cur, _instant) is None
 
 
 def test_next_numeric_cursor():
     keys = [f"f2/p{n}" for n in (1, 3, 5, 10)]
-    assert next_numeric_cursor(keys, 3, "f2/p") == 5
-    assert next_numeric_cursor(keys, 10, "f2/p") is None
+    assert next_key(keys, 3, _number) == ("f2/p5", 5)
+    assert next_key(keys, 10, _number) is None
 
 
 # --- JDBC window advance (DbSetup.scala:109-118) --------------------------

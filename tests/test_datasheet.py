@@ -50,35 +50,6 @@ def test_shuffle_budget(spark, docs):
     assert plan_shape(corpus_datasheet(docs)).shuffles <= 3
 
 
-def test_datasheet_delta_full_outer_and_exact(spark):
-    from tamer_spark.operators.datasheet import corpus_datasheet, datasheet_delta
-
-    before = spark.createDataFrame(
-        [(1, "s1", "en", "a b c"), (2, "s1", "en", "a b c"), (3, "s2", "de", "x y")],
-        "doc_id long, source string, lang string, text string",
-    )
-    after = spark.createDataFrame(
-        [(1, "s1", "en", "a b c"), (4, "s3", "fr", "new slice text")],
-        "doc_id long, source string, lang string, text string",
-    )
-    delta = {
-        (r.source, r.lang): r
-        for r in datasheet_delta(
-            corpus_datasheet(before), corpus_datasheet(after)
-        ).collect()
-    }
-    # shrunk slice: 2 docs -> 1, duplicate pair resolved
-    s1 = delta[("s1", "en")]
-    assert (s1.n_docs_before, s1.n_docs_after, s1.n_docs_delta) == (2, 1, -1)
-    assert (s1.dup_docs_before, s1.dup_docs_after) == (2, 0)
-    # emptied slice appears with zeros on the after side
-    s2 = delta[("s2", "de")]
-    assert (s2.n_docs_before, s2.n_docs_after, s2.n_docs_delta) == (1, 0, -1)
-    # created slice appears with zeros on the before side
-    s3 = delta[("s3", "fr")]
-    assert (s3.n_docs_before, s3.n_docs_delta) == (0, 1)
-
-
 def test_select_canonical_keeps_best_scored_member(spark):
     from tamer_spark.operators.canonical import select_canonical
 

@@ -131,7 +131,7 @@ def test_bucketed_index_anti_join_shuffles_batch_side_only(spark):
     index side — only the (epoch-sized) batch shuffles to meet it."""
     import shutil
 
-    from tamer_spark.sinks.bucketed import read_table, write_bucketed
+    from tamer_spark.sinks.bucketed import write_bucketed
 
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     spark.sql("DROP TABLE IF EXISTS dedup_idx_b")
@@ -143,7 +143,7 @@ def test_bucketed_index_anti_join_shuffles_batch_side_only(spark):
     # rule: pick bucket counts your epoch jobs already partition to)
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     write_bucketed(exact_index(old), "dedup_idx_b", ["content_hash"], num_buckets=n_shuffle)
-    idx = read_table(spark, "dedup_idx_b")
+    idx = spark.table("dedup_idx_b")
 
     new = _docs(spark, [(100 + i, f"historical doc {i}") for i in range(10)]
                 + [(200 + i, f"novel doc {i}") for i in range(10)])
@@ -318,104 +318,6 @@ def test_bloom_probabilistic_plan_has_no_join_at_all(spark):
     assert not [n for n in shape.nodes if "Join" in n], shape
 
 
-def test_minhash_bloom_drops_every_index_collider_keeps_most_novel(spark):
-    # zero false keeps: every doc dedup_minhash_incremental would drop (an
-    # index band collision) must ALSO be dropped by the bloom path — blooms
-    # have no false negatives. Novel docs survive except bloom-FP drops,
-    # which at 2^14 bits for a handful of band keys is ~0.
-    from tamer_spark.operators.dedup_incremental import (
-        dedup_minhash_incremental,
-        dedup_minhash_incremental_bloom,
-        minhash_bloom_index,
-    )
-
-    old = _docs(
-        spark,
-        [
-            (1, "the quick brown fox jumps over the lazy dog near the river"),
-            (2, "spark sql catalyst optimizer rewrites logical plans into physical plans"),
-        ],
-    )
-    new = _docs(
-        spark,
-        [
-            (10, "the quick brown fox jumps over the lazy dog near the river"),  # exact ⇒ all bands collide
-            (11, "completely unrelated text about cooking pasta with fresh tomatoes"),
-            (12, "spark sql catalyst optimizer rewrites logical plans into physical plans"),
-            (13, "another unrelated document mentioning mountains and winter hiking trails"),
-        ],
-    )
-    idx = minhash_band_index(old)
-    m = 1 << 14
-    words = minhash_bloom_index(idx, m_bits=m)
-    exact = {r.doc_id for r in dedup_minhash_incremental(new, idx).collect()}
-    bloom = {r.doc_id for r in dedup_minhash_incremental_bloom(new, words).collect()}
-    # bloom survivors ⊆ exact survivors (bloom can only drop MORE)
-    assert bloom <= exact
-    # the guaranteed drops (10, 12) are dropped by both
-    assert 10 not in bloom and 12 not in bloom
-    # at this bloom size FP≈0, deterministic hashing: survivors identical
-    assert bloom == exact == {11, 13}
-
-
-def test_minhash_bloom_sidecar_epoch_loop_advances_by_merge(spark):
-    # the sidecar advances by bloom_merge_df over the surviving batch's
-    # bands — a doc near-dup'd against an EARLIER EPOCH's survivor (not the
-    # seed index) must be dropped too
-    from tamer_spark.operators.bloom import bloom_merge_df
-    from tamer_spark.operators.dedup_incremental import (
-        dedup_minhash_incremental_bloom,
-        minhash_band_index,
-        minhash_bloom_index,
-    )
-
-    m = 1 << 14
-    seed_docs = _docs(spark, [(1, "alpha beta gamma delta epsilon zeta eta theta")])
-    words = minhash_bloom_index(minhash_band_index(seed_docs), m_bits=m)
-
-    ep1 = _docs(spark, [(10, "iota kappa lambda mu nu xi omicron pi rho sigma")])
-    s1 = dedup_minhash_incremental_bloom(ep1, words)
-    assert {r.doc_id for r in s1.collect()} == {10}
-    words = bloom_merge_df(words, minhash_bloom_index(minhash_band_index(s1), m_bits=m))
-
-    ep2 = _docs(
-        spark,
-        [
-            (20, "iota kappa lambda mu nu xi omicron pi rho sigma"),  # dup of epoch-1 survivor
-            (21, "tau upsilon phi chi psi omega one two three four"),
-        ],
-    )
-    s2 = {r.doc_id for r in dedup_minhash_incremental_bloom(ep2, words).collect()}
-    assert s2 == {21}
-
-
-def test_minhash_bloom_plan_probes_are_broadcast_joins(spark):
-    # scale pin: the word probes must be bloom_k BroadcastHashJoins (the
-    # sidecar never shuffles the batch); the only other join is the final
-    # batch-keyed anti join (both sides batch-derived — SMJ there is fine,
-    # its shuffle volume is the batch's doc_ids). No cartesian anywhere.
-    # NOTE the words frame is read from parquet as production would (a lazy
-    # words plan would re-execute the index banding inside every probe).
-    from tamer_spark.operators.dedup_incremental import (
-        dedup_minhash_incremental_bloom,
-        minhash_bloom_index,
-    )
-
-    old = _docs(spark, [(1, "some historical document text for the index")])
-    new = _docs(spark, [(10, "a new batch document to probe")])
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        # 2048 words: past the literal budget, so the probe joins
-        minhash_bloom_index(minhash_band_index(old), m_bits=1 << 17).write.mode(
-            "overwrite"
-        ).parquet(td + "/w")
-        words = spark.read.parquet(td + "/w")
-        shape = plan_shape(dedup_minhash_incremental_bloom(new, words))
-    assert shape.nodes["BroadcastHashJoin"] == 5, shape  # bloom_k probes
-    assert not shape.nodes["CartesianProduct"], shape
-
-
 def test_bloom_frame_defaults_derive_from_schema_and_existing_hash_col_ok(spark):
     # r11 review fixes, pinned: (a) m_bits/k come from the words frame's
     # encoded schema — no silent build/probe modulus mismatch is possible,
@@ -509,6 +411,14 @@ def test_incremental_trio_differential_fuzz(spark):
 # r12: epoch-fold CLUSTERING — minhash_epoch_pairs × cc_incremental
 # ---------------------------------------------------------------------------
 
+def _posting_index(df):
+    """History's (doc_id, band_id, band_sig) rows, banded as the pair finder
+    bands (k=16, bands=4, n=3, seed=42)."""
+    from tamer_spark.operators.dedup import lsh_bands, minhash_signatures
+
+    return lsh_bands(minhash_signatures(df, "text", "doc_id", 16, 3, 42), 16, 4).distinct()
+
+
 def test_epoch_fold_clustering_equals_full_corpus_clustering(spark):
     """The composed incremental-clustering story: per epoch derive only the
     pairs TOUCHING the batch (band join vs the posting index + within-batch
@@ -517,10 +427,7 @@ def test_epoch_fold_clustering_equals_full_corpus_clustering(spark):
     epoch. History's pair graph is never re-derived."""
     from tamer_spark.operators.cc import cc_incremental, connected_components
     from tamer_spark.operators.dedup import minhash_lsh_pairs
-    from tamer_spark.operators.dedup_incremental import (
-        minhash_band_posting_index,
-        minhash_epoch_pairs,
-    )
+    from tamer_spark.operators.dedup_incremental import minhash_epoch_pairs
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
     e1 = docs.filter(F.col("doc_id") % 3 != 2)
@@ -529,7 +436,7 @@ def test_epoch_fold_clustering_equals_full_corpus_clustering(spark):
     # epoch 1: batch clustering + posting index
     p1 = minhash_lsh_pairs(e1, k=16, bands=4, n=3, seed=42, max_bucket=None)
     cc1 = connected_components(p1, src="doc_a", dst="doc_b")
-    idx = minhash_band_posting_index(e1, k=16, bands=4, n=3, seed=42)
+    idx = _posting_index(e1)
 
     # epoch 2: pairs touching the batch only, folded into cc1
     p2 = minhash_epoch_pairs(e2, idx, k=16, bands=4, n=3, seed=42, max_bucket=None)
@@ -549,15 +456,12 @@ def test_minhash_epoch_pairs_covers_exactly_batch_touching_pairs(spark):
     """The pair set is sound AND complete for the batch: equal to the
     full-corpus pair set restricted to pairs with ≥1 batch member."""
     from tamer_spark.operators.dedup import minhash_lsh_pairs
-    from tamer_spark.operators.dedup_incremental import (
-        minhash_band_posting_index,
-        minhash_epoch_pairs,
-    )
+    from tamer_spark.operators.dedup_incremental import minhash_epoch_pairs
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
     e1 = docs.filter(F.col("doc_id") % 3 != 2)
     e2 = docs.filter(F.col("doc_id") % 3 == 2)
-    idx = minhash_band_posting_index(e1, k=16, bands=4, n=3, seed=42)
+    idx = _posting_index(e1)
     got = {
         (r.doc_a, r.doc_b)
         for r in minhash_epoch_pairs(
@@ -594,7 +498,6 @@ def test_minhash_band_index_keys_equal_pair_finder_banding(spark):
     self-joining the posting index on them yields minhash_lsh_pairs' pairs
     with the same matching-band counts."""
     from tamer_spark.operators.dedup import lsh_bands, minhash_lsh_pairs, minhash_signatures
-    from tamer_spark.operators.dedup_incremental import minhash_band_posting_index
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
     finder_keys = {
@@ -603,7 +506,7 @@ def test_minhash_band_index_keys_equal_pair_finder_banding(spark):
     index_keys = {tuple(r) for r in minhash_band_index(docs).collect()}
     assert index_keys == finder_keys and index_keys
 
-    post = minhash_band_posting_index(docs)
+    post = _posting_index(docs)
     a, b = post.alias("a"), post.alias("b")
     from_index = {
         tuple(r)

@@ -1,18 +1,43 @@
-"""Registrable-domain extraction + per-domain rollup + blocklist filter
-(functions/text.registrable_domain_col, operators/dedup.domain_doc_counts,
-filter_blocklisted_domains — the CCNet per-domain aggregation key and
-RefinedWeb §3.1 URL-filtering stage). Pins every heuristic branch, the
+"""Registrable-domain extraction + per-domain rollup
+(functions/text.registrable_domain_col, operators/dedup.domain_doc_counts —
+the CCNet per-domain aggregation key). Pins every heuristic branch, the
 three-engine differential over the gate's derivation space, the singleton
 rules, and the map-only plan posture."""
 
 from __future__ import annotations
 
 import hashlib
+import re
 
 from pyspark.sql import functions as F
 
-from tamer_spark.functions.text import registrable_domain_col, registrable_domain_py
-from tamer_spark.operators.dedup import domain_doc_counts, filter_blocklisted_domains
+from tamer_spark.functions.text import (
+    IPV4_HOST_RE,
+    TWO_LEVEL_SUFFIXES,
+    URL_ANY_PORT_RE,
+    URL_HOSTPORT_RE,
+    URL_SCHEME_RE,
+    URL_WWW_RE,
+    registrable_domain_col,
+)
+from tamer_spark.operators.dedup import domain_doc_counts
+
+
+def registrable_domain_py(url: str) -> str:
+    """Pure-Python reference of registrable_domain_col (stdlib re only —
+    the third engine), built from the same constants."""
+    s = re.sub(URL_SCHEME_RE, "", url)
+    m = re.match(URL_HOSTPORT_RE, s)
+    hostport = (m.group(0) if m else "").lower()
+    host = re.sub(URL_ANY_PORT_RE, "", re.sub(URL_WWW_RE, "", hostport))
+    if re.match(IPV4_HOST_RE, host):
+        return host
+    labels = host.split(".")
+    if len(labels) >= 3 and ".".join(labels[-2:]) in TWO_LEVEL_SUFFIXES:
+        return ".".join(labels[-3:])
+    if len(labels) >= 2:
+        return ".".join(labels[-2:])
+    return host
 
 
 def _dom(spark, urls: list[str]) -> list[str]:
@@ -122,33 +147,6 @@ def test_domain_doc_counts_singleton_rules(spark):
     assert out[on].keep_id == 5 and out[on].dup_count == 1
     assert out["nulldomain-3"].dup_count == 1 and out["nulldomain-4"].dup_count == 1
     assert len(out) == 4
-
-
-def test_blocklist_drops_whole_publisher_keeps_urlless(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "http://www.spamfarm.com/a"),
-            (2, "http://cdn.spamfarm.com/b"),     # subdomain of blocked
-            (3, "http://spamfarm.co.uk/c"),       # different registrable domain
-            (4, "http://fine.org/d"),
-            (5, None),                             # url-less: KEPT
-            (6, "/rel/ref"),                       # hostless: KEPT
-        ],
-        "doc_id long, url string",
-    )
-    bl = spark.createDataFrame([("spamfarm.com",)], "domain string")
-    kept = sorted(r.doc_id for r in filter_blocklisted_domains(df, bl).collect())
-    assert kept == [3, 4, 5, 6]
-
-
-def test_blocklist_plan_is_broadcast_anti(spark):
-    from tamer_spark.plans import explain_str, plan_shape
-
-    df = spark.createDataFrame([(1, "http://a.com/x")], "doc_id long, url string")
-    bl = spark.createDataFrame([("b.com",)], "domain string")
-    out = filter_blocklisted_domains(df, bl)
-    plan = explain_str(out)
-    assert plan_shape(out).nodes["BroadcastHashJoin"] and "LeftAnti" in plan, plan
 
 
 def test_rollup_plan_single_shuffle_no_text_scan(spark):

@@ -1,4 +1,4 @@
-"""Data-layout tools: sized writes, compaction, Morton clustering."""
+"""Data-layout tools: sized writes and compaction."""
 
 from __future__ import annotations
 
@@ -6,12 +6,7 @@ import glob
 
 from pyspark.sql import functions as F
 
-from tamer_spark.sinks.layout import (
-    compact_small_files,
-    morton_order,
-    write_sized,
-    write_zordered,
-)
+from tamer_spark.sinks.layout import compact_small_files, write_sized
 
 
 def _parquet_files(path):
@@ -33,44 +28,6 @@ def test_write_sized_row_preserving(spark, tmp_path):
     df = spark.range(50_000).withColumn("v", F.rand(seed=1))
     write_sized(df, p, target_file_mb=1)
     assert spark.read.parquet(p).count() == 50_000
-
-
-def test_morton_interleave_bits():
-    import itertools
-
-    # python twin of the interleave for verification
-    def py_morton(xs, bits):
-        out = 0
-        for b in range(bits):
-            for i, x in enumerate(xs):
-                out |= ((x >> b) & 1) << (b * len(xs) + i)
-        return out
-
-    vals = list(itertools.product(range(8), repeat=2))
-    import tamer_spark
-
-    spark = tamer_spark.get_spark()
-    df = spark.createDataFrame(vals, "x long, y long").withColumn(
-        "z", morton_order([F.col("x"), F.col("y")], bits=3)
-    )
-    got = {(r.x, r.y): r.z for r in df.collect()}
-    assert got == {(x, y): py_morton([x, y], 3) for x, y in vals}
-
-
-def test_zorder_write_localizes_ranges(spark, tmp_path):
-    p = str(tmp_path / "z")
-    df = spark.createDataFrame(
-        [(i % 100, (i * 37) % 100, i) for i in range(20_000)], "a long, b long, id long"
-    )
-    write_zordered(df, p, ["a", "b"], bits=7, n_files=8)
-    out = spark.read.parquet(p)
-    assert out.count() == 20_000
-    # data skipping evidence: a tight predicate on either column should prune
-    # row groups — check spark reports fewer rows scanned via file pruning
-    # (hard to observe directly; assert correctness of the filtered result)
-    assert out.filter((F.col("a") < 10) & (F.col("b") < 10)).count() == df.filter(
-        (F.col("a") < 10) & (F.col("b") < 10)
-    ).count()
 
 
 # ---------------------------------------------------------------------------
@@ -302,22 +259,3 @@ def test_compact_planned_split_routing_deterministic(spark, tmp_path):
         )
         groups.append(sorted(tuple(r.ids) for r in out.collect()))
     assert groups[0] == groups[1]
-
-
-def test_zorder_quantile_cuts_balance_and_nulls(spark):
-    from tamer_spark.sinks.layout import zorder_key, zorder_quantile_cuts
-
-    df = spark.range(8_000).select(
-        (F.col("id") % 64).alias("a"),
-        F.when(F.col("id") % 100 == 0, None).otherwise(F.col("id") % 16).alias("b"),
-    )
-    cuts = zorder_quantile_cuts(df, ["a", "b"], bits=6)
-    # dedup: b has only 16 distinct values → at most 16 cuts survive
-    assert len(cuts["b"]) <= 16 and len(cuts["a"]) <= 63
-    keyed = zorder_key(df, ["a", "b"], bits=6)
-    stats = keyed.agg(
-        F.min("_z").alias("mn"), F.countDistinct("_z").alias("nd")
-    ).collect()[0]
-    assert stats.mn >= 0 and stats.nd > 50  # interleave actually spreads
-    # NULLs land in bucket 0 deterministically (no NULL keys, no nulls-last drift)
-    assert keyed.filter(F.col("b").isNull() & F.col("_z").isNull()).count() == 0

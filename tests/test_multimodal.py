@@ -1,20 +1,13 @@
-"""Multimodal binary-column plumbing: Arrow-batched decode stages with
-deterministic fake codecs; 1→N frame sampling shape."""
+"""Multimodal binary-column plumbing: Arrow-batched per-blob stages with
+a deterministic fake codec; perceptual-hash dedup."""
 
 from __future__ import annotations
 
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
-from tamer_spark.operators.multimodal import (
-    binary_stats,
-    decode_images,
-    default_image_decoder,
-    fake_image_decoder,
-    sample_frames,
-)
+from tamer_spark.operators.multimodal import binary_stats
 
 
 @pytest.fixture()
@@ -30,52 +23,6 @@ def test_binary_stats_matches_hashlib(spark, blobs):
     assert rows[1].n_bytes == 9
     assert rows[1].sha256_hex == hashlib.sha256(b"tiny-blob").hexdigest()
     assert rows[3].n_bytes == 256
-
-
-def test_decode_images_with_fake_codec(spark, blobs):
-    out = {r.media_id: r for r in decode_images(blobs, "payload", "media_id", fake_image_decoder).collect()}
-    assert set(out) == {1, 2, 3}
-    # deterministic: same blob → same fake dims
-    expect = fake_image_decoder(b"tiny-blob")
-    assert (out[1].width, out[1].height, out[1].channels) == (
-        expect["width"],
-        expect["height"],
-        expect["channels"],
-    )
-    assert 1 <= out[2].channels <= 4
-
-
-def test_default_decoder_is_explicit_stub(spark, blobs):
-    with pytest.raises(Exception) as ei:
-        decode_images(blobs, "payload", "media_id").collect()
-    assert "NotImplementedError" in str(ei.value) or "no image codec" in str(ei.value)
-
-
-def test_sample_frames_explodes_rows(spark, blobs):
-    out = sample_frames(blobs, "payload", "media_id").collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r.media_id, []).append(r)
-    assert all(len(v) >= 1 for v in by_id.values())
-    frames = sorted((r.frame_id, bytes(r.frame)) for r in by_id[3])
-    assert frames[0][0] == 0 and len(frames[0][1]) <= 16
-
-
-def test_resize_images_shape(spark, blobs):
-    from tamer_spark.operators.multimodal import resize_images
-
-    out = {r.media_id: r for r in resize_images(blobs, "payload", "media_id", 64, 64).collect()}
-    assert all(len(bytes(r.resized)) == 64 * 64 // 64 for r in out.values())
-    assert out[1].width == 64 and out[1].height == 64
-
-
-def test_audio_features_deterministic(spark, blobs):
-    from tamer_spark.operators.multimodal import extract_audio_features
-
-    out1 = {r.media_id: list(r.features) for r in extract_audio_features(blobs, "payload", "media_id").collect()}
-    out2 = {r.media_id: list(r.features) for r in extract_audio_features(blobs, "payload", "media_id").collect()}
-    assert out1 == out2
-    assert all(len(v) == 16 and all(0 <= x <= 1 for x in v) for v in out1.values())
 
 
 def test_phash_deterministic_and_locality(spark):

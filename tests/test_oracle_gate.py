@@ -7,8 +7,9 @@ import pytest
 
 import os
 
-from tamer_spark.oracle import compare, duckdb_con
+from tamer_spark.oracle import compare
 from tamer_spark.queries import REGISTRY
+from tamer_spark.sql import TABLES
 from tests.conftest import SF_DIR as _DEFAULT_SF
 
 # The suite replays the driver's gate at sf0.001 for speed; the sf0.1
@@ -20,7 +21,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_GATE_SF", _DEFAULT_SF)
 
 @pytest.fixture(scope="module")
 def con():
-    return duckdb_con(SF_DIR)
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    return con
 
 
 @pytest.mark.parametrize("name", [n for n, q in REGISTRY.items() if q.oracle])

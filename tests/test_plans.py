@@ -426,18 +426,3 @@ def test_compaction_split_plan_reuses_partition_exchange(spark):
     assert plan_shape(df).shuffles <= 3, plan
     assert "Join" not in plan, plan
     assert "SinglePartition" not in plan, plan
-
-
-def test_zorder_key_no_single_partition_sort(spark):
-    # r14 scale fix (VERDICT r13 #1): z-order rank normalization must not
-    # run a SinglePartition global-window sort per column — cut points come
-    # from one approxQuantile sketch job and bucket assignment is map-side
-    from tamer_spark.sinks.layout import zorder_key
-
-    df = spark.range(10_000).select(
-        (F.col("id") % 97).alias("a"), (F.col("id") * 37 % 101).alias("b")
-    )
-    keyed = zorder_key(df, ["a", "b"], bits=6).repartitionByRange(8, "_z")
-    plan = explain_str(keyed)
-    assert "SinglePartition" not in plan, plan
-    assert "Window" not in plan, plan

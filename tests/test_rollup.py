@@ -8,7 +8,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import functions as F
 
 from tamer_spark.engine import Pipeline
-from tamer_spark.operators.rollup import ContinuousRollup, hourly_window, rollup_sink
+from tamer_spark.operators.rollup import ContinuousRollup, rollup_sink
 from tamer_spark.sources import JdbcTumblingSource
 from tamer_spark.state import fingerprint
 
@@ -25,7 +25,7 @@ def _events(spark, n, start=0):
 
 
 def _aggregate(df):
-    return df.groupBy(hourly_window(F.col("ts")).alias("hour"), "kind").agg(
+    return df.groupBy(F.date_trunc("hour", "ts").alias("hour"), "kind").agg(
         F.count(F.lit(1)).alias("n"), F.sum(F.round(F.col("v") * 100).cast("long")).alias("sum_c")
     )
 

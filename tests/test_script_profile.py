@@ -1,5 +1,5 @@
 """Unicode-script profiling (functions/text.py script_count_cols /
-dominant_script_col) — the multilingual routing signal."""
+dominant_script_sql) — the multilingual routing signal."""
 
 from __future__ import annotations
 
@@ -7,18 +7,15 @@ from pyspark.sql import functions as F
 
 from tamer_spark.functions.text import (
     SCRIPT_PATTERNS,
-    dominant_script_col,
+    dominant_script_sql,
     script_count_cols,
 )
 
 
 def _profile(spark, text):
     df = spark.createDataFrame([(text,)], "text string")
-    r = df.select(
-        *script_count_cols(F.col("text")),
-        dominant_script_col(F.col("text")).alias("script_pred"),
-    ).collect()[0]
-    return r
+    counts = df.select(*script_count_cols(F.col("text")))
+    return counts.selectExpr("*", f"{dominant_script_sql()} AS script_pred").collect()[0]
 
 
 def test_counts_per_script_and_dominant(spark):

@@ -1,48 +1,12 @@
-"""Serde: Confluent framing round-trip (Spark binary exprs), registry client
-semantics against the in-memory double, compat-check rules."""
+"""Serde: registry semantics against the in-memory registry, compat-check
+rules."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from tamer_spark.errors import TamerError
-from tamer_spark.operators.records import to_records
-from tamer_spark.serde import (
-    FakeRegistry,
-    check_compat,
-    extract_schema_id,
-    frame_confluent,
-    unframe_confluent,
-)
-from tamer_spark.serde.registry import subjects
-
-
-def test_confluent_frame_roundtrip(spark):
-    df = spark.createDataFrame([("hello",), ("wörld",)], "v string").select(
-        F.encode("v", "UTF-8").alias("payload")
-    )
-    framed = df.select(frame_confluent(F.col("payload"), 1042).alias("framed"))
-    back = framed.select(
-        extract_schema_id(F.col("framed")).alias("sid"),
-        F.decode(unframe_confluent(F.col("framed")), "UTF-8").alias("v"),
-    ).collect()
-    assert [(r.sid, r.v) for r in back] == [(1042, "hello"), (1042, "wörld")]
-    raw = framed.collect()[0].framed
-    assert bytes(raw[:5]) == b"\x00\x00\x00\x04\x12"  # magic + 1042 BE
-
-
-def test_confluent_framing_on_computed_column(spark):
-    """Framing must accept COMPUTED Column inputs (not just named columns) —
-    the old string-reflection of Column → F.expr broke on anything but a
-    bare name."""
-    df = spark.createDataFrame([("a", "b")], "x string, y string")
-    framed_expr = frame_confluent(F.encode(F.concat("x", "y"), "UTF-8"), 7).alias("framed")
-    out = df.select(framed_expr).select(
-        extract_schema_id(F.col("framed") ).alias("sid"),
-        F.decode(unframe_confluent(F.substring(F.col("framed"), 1, 2147483647)), "UTF-8").alias("v"),
-    ).collect()[0]
-    assert (out.sid, out.v) == (7, "ab")
+from tamer_spark.serde import FakeRegistry, check_compat
 
 
 def test_registry_get_or_register_and_verify():
@@ -74,17 +38,3 @@ def test_compat_rules():
     assert check_compat(rec([{"name": "x", "type": "int"}]), rec([{"name": "x", "type": "long"}]))
     # reader union accepts writer member
     assert check_compat(rec([{"name": "x", "type": ["null", "string"]}]), rec([{"name": "x", "type": "string"}])) == []
-    assert subjects("topic") == ("topic-key", "topic-value")
-
-
-def test_to_records_shape(spark):
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, name string")
-    rec = to_records(df, key=F.col("id"), value_schema_id=7, headers={"src": "test"})
-    assert [f.name for f in rec.schema.fields] == ["key", "value", "headers"]
-    rows = rec.orderBy(F.col("key")).collect()
-    assert bytes(rows[0].key) == b"1"
-    assert bytes(rows[0].value)[:5] == b"\x00\x00\x00\x00\x07"
-    import json
-
-    assert json.loads(bytes(rows[0].value)[5:]) == {"id": 1, "name": "a"}
-    assert rows[0].headers[0].key == "src" and bytes(rows[0].headers[0].value) == b"test"

@@ -188,3 +188,16 @@ def test_s3_listing_is_one_request_per_page(monkeypatch, monotonic):
         got.append((uri, len(s3.calls) - before, sum(s3.calls[before:])))
     per_object = (1, 1000) if monotonic else (4, 2500)
     assert got == [(f"s3a://b/d/k{n:05d}", *per_object) for n in (1, 2, 3)]
+
+
+def test_local_lister_takes_root_and_prefix_literally(tmp_path):
+    """Glob metacharacters in the root or the prefix are part of the name:
+    a root ``run[1]`` lists its keys, and prefix ``p[a]`` matches
+    ``p[a]1``, not ``pa1``."""
+    root = tmp_path / "run[1]"
+    root.mkdir()
+    for name in ("part1", "part2", "p[a]1", "pa1"):
+        (root / name).write_text("x\n")
+    lister = LocalFSLister(str(root))
+    assert lister.list_keys("part") == ["part1", "part2"]
+    assert lister.list_keys("p[a]") == ["p[a]1"]

@@ -7,11 +7,42 @@ in the dedup_exact gate's 'url' variant), and the plan posture."""
 from __future__ import annotations
 
 import hashlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from tamer_spark.functions.text import canonicalize_url_py, canonicalize_url_sql
+from tamer_spark.functions.text import (
+    URL_DEFAULT_PORT_RE,
+    URL_FRAGMENT_RE,
+    URL_HOSTPORT_RE,
+    URL_PATH_RE,
+    URL_QUERY_RE,
+    URL_SCHEME_RE,
+    URL_TRACKING_PARAM_RE,
+    URL_TRAILING_SLASH_RE,
+    URL_WWW_RE,
+    canonicalize_url_sql,
+)
+
+
+def canonicalize_url_py(url: str) -> str:
+    """Pure-Python reference of canonicalize_url_sql (stdlib re only — a
+    third engine besides Spark and DuckDB), built from the same constants."""
+    s = re.sub(URL_SCHEME_RE, "", url)
+    m = re.match(URL_HOSTPORT_RE, s)
+    hostport_raw = m.group(0) if m else ""
+    host = re.sub(URL_DEFAULT_PORT_RE, "", re.sub(URL_WWW_RE, "", hostport_raw.lower()))
+    rest = re.sub(URL_FRAGMENT_RE, "", s[len(hostport_raw):])
+    pm = re.match(URL_PATH_RE, rest)
+    path = re.sub(URL_TRAILING_SLASH_RE, "", pm.group(0) if pm else "")
+    qm = re.match(URL_QUERY_RE, rest)
+    kept = sorted(
+        p
+        for p in (qm.group(1) if qm else "").split("&")
+        if p and not re.match(URL_TRACKING_PARAM_RE, p)
+    )
+    return host + path + ("?" + "&".join(kept) if kept else "")
 
 
 def _canon(spark, urls: list[str]) -> list[str]:
