@@ -7,7 +7,7 @@ Kafka ingestion framework; see /root/reference) on top of Apache Spark:
   becomes :mod:`tamer_spark.engine` — a checkpointed micro-batch loop with
   idempotent epoch commits,
 - the JDBC / S3 / REST / OCI sources become :mod:`tamer_spark.sources`,
-- serdes + schema registry become :mod:`tamer_spark.serde`,
+- the serdes become :mod:`tamer_spark.serde`,
 - and the relational / LLM-data-pipeline surface (dedup, similarity search,
   text analysis, multimodal, tokenization) lives in
   :mod:`tamer_spark.operators` and :mod:`tamer_spark.functions`, all

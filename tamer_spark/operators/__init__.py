@@ -6,7 +6,6 @@ from tamer_spark.operators.bloom import (
     decontaminate_with_bloom,
 )
 from tamer_spark.operators.bm25 import bm25_topk
-from tamer_spark.operators.canonical import select_canonical
 from tamer_spark.operators.contamination import contamination_score
 from tamer_spark.operators.budget import take_token_budget
 from tamer_spark.operators.classifier import odds_score, odds_train
@@ -102,7 +101,6 @@ __all__ = [
     "take_token_budget",
     "temperature_mix",
     "corpus_datasheet",
-    "select_canonical",
     "contamination_score",
     "substring_run_pairs",
     "token_window_hashes",

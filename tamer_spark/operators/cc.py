@@ -48,7 +48,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-__all__ = ["connected_components", "attach_cluster_ids", "cc_incremental"]
+__all__ = ["connected_components", "attach_cluster_ids"]
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -235,48 +235,3 @@ def cluster_best_representatives(
             F.col("_w.q").alias("best_quality"),
         )
     )
-
-
-def cc_incremental(
-    prev_components: DataFrame,
-    new_pairs: DataFrame,
-    pair_a: str = "doc_a",
-    pair_b: str = "doc_b",
-    max_iter: int = 25,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Fold a NEW epoch's near-dup pairs into an existing ``(node,
-    component)`` assignment — the cluster-maintenance half of the
-    incremental dedup story (operators/dedup_incremental.py finds the new
-    PAIRS in O(batch); this updates the transitive CLUSTERS without
-    re-deriving history's pair graph).
-
-    The old assignment IS a compressed graph: each non-singleton component
-    is a depth-1 star (member → component minimum) that preserves exactly
-    its connectivity AND its minimum. Running the same large/small-star
-    contraction over ``stars ∪ new_pairs`` therefore returns precisely
-    ``connected_components(old_pairs ∪ new_pairs)`` (pinned in tests) —
-    but the input is pre-contracted, so the round count collapses from
-    O(log |largest raw component|) to O(log |new merge chain|): history's
-    depth was already paid in previous epochs and is never re-paid.
-    Components untouched by any new pair relabel to themselves in round 1.
-
-    ``prev_components`` rows with ``node == component`` and no new edge
-    (true singletons) pass through unchanged (they carry no star edge, so
-    the contraction never sees them).
-
-    Epoch cost: |star edges| = nodes in non-singleton clusters (NOT
-    history's raw pair count — LSH pair graphs are far denser than their
-    star forests) + the epoch's pairs, for the collapsed round count.
-    """
-    stars = prev_components.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("src"), F.col("component").alias("dst")
-    )
-    edges = new_pairs.select(
-        F.col(pair_a).alias("src"), F.col(pair_b).alias("dst")
-    ).unionByName(stars)
-    comp = connected_components(edges, max_iter=max_iter, stats=stats)
-    untouched_singletons = prev_components.filter(
-        F.col("node") == F.col("component")
-    ).join(comp.select("node"), "node", "left_anti")
-    return comp.unionByName(untouched_singletons)

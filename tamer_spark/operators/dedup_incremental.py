@@ -35,9 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tamer_spark.operators.dedup import (
-    _release_on_gc,
     lsh_bands,
-    lsh_bucket_pairs,
     minhash_signatures,
     normalize_text,
 )
@@ -108,7 +106,7 @@ def _banded_sigs(
 ) -> DataFrame:
     """(doc_id, band_id, band_sig) for every doc × band: the signatures of
     ``df`` through ``lsh_bands``, the banding ``minhash_lsh_pairs`` runs —
-    the index build and both incremental probes must produce bit-identical
+    the index build and the incremental probe must produce bit-identical
     band keys or the no-false-negative guarantee silently breaks."""
     return lsh_bands(minhash_signatures(df, text_col, id_col, k, n, seed), k, bands)
 
@@ -124,7 +122,7 @@ def minhash_band_index(
 ) -> DataFrame:
     """Distinct (band_id, band_sig) bucket keys of a corpus: the LSH index.
 
-    Banding via ``_banded_sigs`` (shared with both incremental probes so
+    Banding via ``_banded_sigs`` (shared with the incremental probe so
     index and batch agree bit-for-bit); distinct is one shuffle of
     docs × bands short rows. Persist bucketed on (band_id, band_sig).
     """
@@ -274,60 +272,3 @@ def append_keys(index: DataFrame, new_keys: DataFrame) -> DataFrame:
     the logical equivalent for in-session composition and tests.
     """
     return index.unionByName(new_keys).distinct()
-
-
-def minhash_epoch_pairs(
-    new_df: DataFrame,
-    posting_index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    bands: int = 4,
-    n: int = 3,
-    seed: int = 42,
-    max_bucket: int | None = 1000,
-) -> DataFrame:
-    """Every near-dup candidate pair TOUCHING this epoch's batch:
-    batch × history collisions (band equi-join against the posting index)
-    ∪ within-batch pairs (minhash_lsh_pairs over the batch alone). Returns
-    ``(doc_a, doc_b)`` with doc_a < doc_b, distinct.
-
-    ``posting_index`` is history's ``(doc_id, band_id, band_sig)`` rows:
-    ``lsh_bands(minhash_signatures(history, ...), k, bands)`` with the same
-    k/bands/n/seed, distinct, persisted bucketed on (band_id, band_sig) and
-    advanced per epoch with the surviving batch's rows (``append_keys``).
-
-    This is exactly the pair set cc_incremental needs: the full corpus
-    pair graph = history-history pairs (already inside the previous
-    assignment's star forest, connectivity-wise) ∪ pairs touching the
-    batch — so ``cc_incremental(prev, minhash_epoch_pairs(batch, index))``
-    equals full-corpus clustering (pinned in tests) while deriving pairs
-    only for the batch.
-
-    Plan: the batch bands map-only and both joins shuffle batch-derived
-    rows only (the index side is exchange-free when bucketed on the band
-    key); within-batch pairs are epoch-sized. ``max_bucket`` is the
-    standard hot-bucket guard for the WITHIN-batch half; the cross half
-    joins the index directly (bound it by bucketing/compaction policy —
-    an index bucket is history-sized, not batch-sized).
-    """
-    # ONE banding pass feeds BOTH halves — the k-minhash signature map is
-    # the epoch's dominant cost and computing it once is the point of the
-    # O(batch) story (review r12: the first cut called minhash_lsh_pairs
-    # for the within half, silently re-deriving identical signatures).
-    banded = _banded_sigs(new_df, text_col, id_col, k, bands, n, seed).persist()
-    hist = posting_index.select(
-        F.col("doc_id").alias("_hist_id"), "band_id", "band_sig"
-    )
-    cross = (
-        banded.join(hist, ["band_id", "band_sig"])
-        .filter(F.col("doc_id") != F.col("_hist_id"))
-        .select(
-            F.least("doc_id", "_hist_id").alias("doc_a"),
-            F.greatest("doc_id", "_hist_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    # within-batch: the pair finder's own capped bucket self-join
-    within = lsh_bucket_pairs(banded, max_bucket).select("doc_a", "doc_b")
-    return _release_on_gc(cross.unionByName(within).distinct(), banded)

@@ -34,12 +34,10 @@ __all__ = [
     "category_drift",
     "total_tvd_ppm",
     "embedding_drift",
-    "histogram_grid",
     "value_histogram",
     "histogram_merge",
     "numeric_drift",
     "vocab_growth",
-    "vocab_growth_incremental",
 ]
 
 
@@ -154,26 +152,6 @@ def embedding_drift(
         .crossJoin(F.broadcast(dist))
         .select("n_a", "n_b", "centroid_dist_sq", "msn_a", "msn_b")
     )
-
-
-def histogram_grid(
-    df: DataFrame, value_col: str, n_buckets: int = 64
-) -> tuple[int, int]:
-    """Derive a (lo, width) grid from the FIRST epoch's [min, max] — the
-    gpctl width rule (``(max−min) div B + 1``, so a constant column is one
-    bucket, never a zero width). Two int64 scalars of driver state; FREEZE
-    them: every later epoch and every drift comparison must bucket on the
-    same grid or the histograms stop being comparable (the sq_train
-    frozen-bounds contract)."""
-    row = (
-        df.select(F.col(value_col).cast("long").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .collect()[0]
-    )
-    if row.lo is None:
-        raise ValueError(f"{value_col} has no non-NULL values to derive a grid from")
-    return int(row.lo), (int(row.hi) - int(row.lo)) // n_buckets + 1
 
 
 def _bucket_expr(lo: int, width: int, n_buckets: int):
@@ -345,36 +323,3 @@ def vocab_growth(
         F.sum("n_new_terms").over(cum).alias("cum_vocab"),
     )
     return result if cached is None else _release_on_gc(result, cached)
-
-
-def vocab_growth_incremental(
-    batch: DataFrame,
-    term_index: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-epoch OOV measurement against a FROZEN term index — the
-    O(batch) form of ``vocab_growth`` (whose debut election re-shuffles
-    the whole corpus's words; the wrong loop once history is PB-scale,
-    the dedup_incremental posture applied to monitoring): history is
-    reduced once to its distinct-term set, the epoch hashes only itself.
-
-    Returns one row: (n_occurrences, n_terms, n_new_terms) — the epoch's
-    token count, distinct-term count, and terms absent from the index.
-    Advance the index with ``append_keys(index, batch distinct terms)``
-    (all of them — after this epoch every batch term is seen).
-
-    Shuffles: one batch-vocabulary agg + one anti-join vs the index
-    (exchange-free on the index side when bucketed on ``term``)."""
-    from tamer_spark.operators.dedup import normalize_text
-
-    toks = batch.select(
-        F.explode_outer(F.split(normalize_text(F.col(text_col)), " ")).alias("word")
-    ).filter(F.length("word") > 0)
-    terms = toks.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-    new = terms.join(term_index.select(F.col("term").alias("word")), "word", "left_anti")
-    return (
-        terms.agg(
-            F.sum("c").alias("n_occurrences"), F.count(F.lit(1)).alias("n_terms")
-        )
-        .crossJoin(F.broadcast(new.agg(F.count(F.lit(1)).alias("n_new_terms"))))
-    )

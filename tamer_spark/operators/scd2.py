@@ -13,8 +13,6 @@ pure DataFrame ops:
 
 The result is the full new dimension table; pair with ParquetUpsertSink-
 style bucket rewrites when only touched keys should be rewritten at scale.
-``snapshot_at`` reads a point-in-time view — the batch analog of the as-of
-join.
 """
 
 from __future__ import annotations
@@ -72,10 +70,3 @@ def scd2_init(updates: DataFrame, key: str, change_ts: Column) -> DataFrame:
     return updates.withColumn("valid_from", change_ts).withColumn(
         "valid_to", F.lit(None).cast("timestamp")
     )
-
-
-def snapshot_at(dim: DataFrame, at: Column) -> DataFrame:
-    """Point-in-time view: versions valid at ``at``."""
-    return dim.filter(
-        (F.col("valid_from") <= at) & (F.col("valid_to").isNull() | (F.col("valid_to") > at))
-    ).drop("valid_from", "valid_to")

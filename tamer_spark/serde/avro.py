@@ -19,7 +19,7 @@ spec-derived examples, so this is not merely self-consistent.
 DataFrame integration: ``encode_df`` runs the codec in an Arrow-batched
 ``mapInPandas`` stage and (optionally) applies Confluent framing
 (``magic 0x0 | 4-byte big-endian schema id | payload``, Serde.scala:47-52)
-with a registry-assigned schema id — the produce half of Serde.scala:31-92
+with a caller-supplied schema id — the produce half of Serde.scala:31-92
 without JVM connector dependencies. Throughput note: this is the Python
 fallback path; with spark-avro on the classpath prefer
 ``pyspark.sql.avro.functions.to_avro`` (JVM, codegen).

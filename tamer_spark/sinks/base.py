@@ -22,7 +22,7 @@ def _epochs(spark: SparkSession, path: str) -> list[int]:
     """The N of every ``epoch=N`` directory under ``path``, ascending."""
     fs, root = _hadoop_fs(spark, path)
     names = [st.getPath().getName() for st in fs.listStatus(root)] if fs.exists(root) else []
-    return sorted(int(n[6:]) for n in names if n.startswith("epoch=") and n[6:].isdigit())
+    return sorted(int(n[6:]) for n in names if n.startswith("epoch=") and n[6:].isdecimal())
 
 
 def epoch_frames(

@@ -1,95 +1,18 @@
-"""Data-layout management: file sizing and partition layout.
+"""Data-layout management: small-file compaction.
 
 The storage-side half of 100 TB performance: scans are only as good as the
-layout under them. Two tools:
-
-- ``write_sized``: target-file-size writes — the small-files problem (a
-  100 TB table written by 10k tasks/day degenerates into millions of tiny
-  files; listing + footer overhead then dominates scans).
-- ``compact_small_files``: rewrite an existing directory to target sizes.
+layout under them. A table written by 10k tasks/day degenerates into
+millions of tiny files, and listing + footer overhead then dominates scans.
+``plan_compaction`` and ``plan_splits`` build a deterministic rewrite
+manifest; ``compact_planned`` and ``compact_partitioned`` execute it.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tamer_spark.sinks.base import _hadoop_fs
-
-
-def plan_size_mb(df: DataFrame) -> float | None:
-    """Sum of the plan's LEAF scan sizes (MB) — ZERO extra actions.
-
-    For parquet-backed plans each leaf's estimate is the actual file size
-    gathered at planning time. Leaves are summed instead of reading the
-    plan ROOT's estimate on purpose: without CBO column stats, Catalyst's
-    default join estimate is the PRODUCT of the children's sizes — a join
-    of two 100 MB scans "estimates" petabytes, which would blow the file
-    count sky-high. Output ≤ inputs is the right assumption for sizing a
-    write. ``None`` when any leaf has no real estimate (unknown sources
-    report a max-long sentinel).
-    """
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        total = 0.0
-        for i in range(leaves.size()):
-            size = float(str(leaves.apply(i).stats().sizeInBytes()))
-            if size <= 0 or size >= 2**60:  # sentinel for "unknown"
-                return None
-            total += size
-    except Exception:  # noqa: BLE001 — stats API unavailable
-        return None
-    return total / (1024 * 1024) if total else None
-
-
-def write_sized(
-    df: DataFrame,
-    path: str,
-    target_file_mb: int = 128,
-    estimated_total_mb: float | None = None,
-    partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write with file count chosen for ~target_file_mb files.
-
-    Size resolution order: caller-supplied ``estimated_total_mb`` (source
-    stats — the right input on a real pipeline) → Catalyst plan statistics
-    (free, no extra actions) → a 1k-row sample + count. The last resort runs
-    two extra actions including a FULL SCAN of the input — at 100 TB that is
-    a scan *before the real write*, which is why it is last and why the
-    plan-stats path exists.
-    """
-    if estimated_total_mb is None:
-        estimated_total_mb = plan_size_mb(df)
-    if estimated_total_mb is None:
-        # last resort: rows × avg row size from a 1k-row sample (2 actions)
-        sample = df.limit(1000).toPandas()
-        row_bytes = max(1, int(sample.memory_usage(deep=True).sum() / max(len(sample), 1)))
-        estimated_total_mb = df.count() * row_bytes / (1024 * 1024) / 3  # parquet ≈ 3× compression
-    n_files = max(1, math.ceil(estimated_total_mb / target_file_mb))
-    writer = df.repartition(n_files, *(partition_cols or [F.spark_partition_id()])) if partition_cols else df.repartition(n_files)
-    w = writer.write.mode(mode)
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(path)
-
-
-def compact_small_files(
-    spark: SparkSession, path: str, target_file_mb: int = 128, tmp_suffix: str = "__compact_tmp"
-) -> int:
-    """Rewrite ``path`` to ~target-sized files; returns the resulting file
-    count. Thin wrapper over the manifest-driven ``compact_planned`` (r14
-    unification — one swap implementation, Hadoop-FS throughout, so no
-    local-only rewrite path can be picked up for an object store).
-    Compared to the pre-r14 whole-directory rewrite this also inherits the
-    better behavior: already-right-sized singleton files are skipped, and
-    the fail-closed row-count guard runs before any original is removed."""
-    compact_planned(
-        spark, path, target_bytes=target_file_mb * 1024 * 1024, tmp_suffix=tmp_suffix
-    )
-    return list_parquet_files(spark, path).count()
 
 
 def plan_compaction(
@@ -392,4 +315,3 @@ def compact_partitioned(
     for m in manifests[1:]:
         out = out.unionByName(m)
     return out
-

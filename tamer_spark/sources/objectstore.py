@@ -70,7 +70,7 @@ def parse_instant_from_key(key: str, prefix: str, fmt: str, tz=timezone.utc) -> 
 
 def parse_number_from_key(key: str, prefix: str) -> int | None:
     s = key[len(prefix):] if key.startswith(prefix) else key
-    return int(s) if s.isdigit() else None
+    return int(s) if s.isdecimal() else None
 
 
 def next_key(

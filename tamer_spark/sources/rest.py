@@ -20,31 +20,27 @@ RESTSetup.scala):
 - **auth strategies** (model.scala:31-42): header injection + token cache;
   on 401/403 the token is refreshed once and the request retried
   (RESTSetup.scala:85-93),
-- **one fetch path**: ``page_url`` (``param=N`` appended, or a ``{page}``
-  placeholder filled), ``fetch_with_auth_retry`` (the auth retry above, plus
-  5xx/connection retries whose delays are ``engine.RetryPolicy``'s) and
-  ``json_lines_decoder`` serve the engine source, ``fetch_pages_distributed``
-  and the ``tamer_rest`` Spark data source (rest_datasource.py) alike.
+- **one reader**: ``PaginatedRestSource`` is the only REST reader. It
+  builds each page's URL with ``page_url`` (``param=N`` appended, or a
+  ``{page}`` placeholder filled) and fetches it with
+  ``fetch_with_auth_retry`` (the auth retry above, plus 5xx/connection
+  retries whose delays are ``engine.RetryPolicy``'s).
 
 The reference spins with exponential backoff on an empty page — a known
 can-hang-forever FIXME (RESTSetup.scala:214); here an empty page is a normal
 "no progress" result and the engine loop polls.
 
-Fetching happens on the driver (one page per iteration — pages are small by
-construction; the *records* distribute via ``spark.createDataFrame``). For
-bulk-parallel page fetches (backfilling N known page URLs), use
-``fetch_pages_distributed`` which moves the HTTP calls into executors via
-``mapInPandas``.
+Fetching happens on the driver, one page per iteration: pages are small by
+construction, and the *records* distribute via ``spark.createDataFrame``.
 """
 
 from __future__ import annotations
 
 import base64
-import json
 import time
 import urllib.request
 from dataclasses import dataclass, field
-from typing import Any, Callable, Iterator
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -289,41 +285,3 @@ class PaginatedRestSource:
         )
         df = spark.createDataFrame(fresh, self.schema) if fresh else None
         return df, new_state
-
-
-def fetch_pages_distributed(
-    spark: SparkSession,
-    urls: list[str],
-    schema: str,
-    page_decoder: Callable[[str], list[dict]],
-    auth: Authentication | None = None,
-) -> DataFrame:
-    """Parallel backfill: fetch many known page URLs in executors.
-
-    ``mapInPandas`` over a repartitioned URL list — each executor thread
-    fetches + decodes its URLs; Arrow-batched back. This is the scale path
-    for bulk REST backfills (the reference declares a ``parallelism``
-    parameter but never uses it — S3Setup.scala:41 note in SURVEY §4).
-    """
-    import pandas as pd
-
-    auth = auth or Authentication()
-    url_df = spark.createDataFrame([(u,) for u in urls], "url string").repartition(
-        min(len(urls), 64)
-    )
-
-    def fetch_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for u in pdf["url"]:
-                body = fetch_with_auth_retry(u, auth)
-                out.extend(page_decoder(body))
-            yield pd.DataFrame(out) if out else pd.DataFrame()
-
-    return url_df.mapInPandas(fetch_part, schema)
-
-
-def json_lines_decoder(body: str) -> tuple[list, dict | None]:
-    """Decode a JSON array page into rows; no HATEOAS."""
-    data = json.loads(body)
-    return (data if isinstance(data, list) else [data]), None

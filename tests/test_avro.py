@@ -8,7 +8,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from tamer_spark.serde.avro import AvroCodec, encode_df
-from tamer_spark.serde import FakeRegistry
 
 
 # --- golden bytes straight from the Avro spec's encoding examples ----------
@@ -88,15 +87,12 @@ def test_roundtrip_property(id_, name, desc, score, flag, tags, props):
 def test_encode_df_with_confluent_framing(spark):
     import struct
 
-    reg = FakeRegistry()
     schema = {
         "type": "record",
         "name": "Row",
         "fields": [{"name": "id", "type": "long"}, {"name": "name", "type": "string"}],
     }
-    import json
-
-    sid = reg.get_or_register_id("t-value", json.dumps(schema))
+    sid = 7
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
     framed = [bytes(r.value) for r in encode_df(df, ["id", "name"], schema, schema_id=sid).collect()]
     # magic 0x0 | 4-byte big-endian schema id | payload

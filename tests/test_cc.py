@@ -152,70 +152,6 @@ def test_round_count_logarithmic_on_path_graph(spark):
     assert st["rounds"] <= 13, f"round count {st['rounds']} not logarithmic"
 
 
-# ---------------------------------------------------------------------------
-# cc_incremental (r12): epoch-fold cluster maintenance
-# ---------------------------------------------------------------------------
-
-def _pairs(spark, pairs):
-    return spark.createDataFrame(pairs, "doc_a long, doc_b long")
-
-
-def _cc_dict(df):
-    return {r.node: r.component for r in df.collect()}
-
-
-def test_cc_incremental_equals_full_over_union(spark):
-    """Random-ish pair set split into two epochs: folding epoch 2 into
-    epoch 1's assignment must equal CC over the union — for merged,
-    extended, AND untouched components."""
-    from tamer_spark.operators.cc import cc_incremental, connected_components
-
-    e1 = [(1, 2), (2, 3), (10, 11), (20, 21), (30, 31)]
-    e2 = [(3, 10), (21, 22), (40, 41)]  # merge, extend, brand-new
-    prev = connected_components(_pairs(spark, e1), src="doc_a", dst="doc_b")
-    inc = cc_incremental(prev, _pairs(spark, e2))
-    full = connected_components(_pairs(spark, e1 + e2), src="doc_a", dst="doc_b")
-    assert _cc_dict(inc) == _cc_dict(full)
-
-
-def test_cc_incremental_untouched_and_singleton_passthrough(spark):
-    """A component no new pair touches keeps its exact labels; a true
-    singleton row (node == component, caller-added) passes through."""
-    from tamer_spark.operators.cc import cc_incremental, connected_components
-    import pyspark.sql.functions as F
-
-    prev = connected_components(_pairs(spark, [(5, 6), (100, 101)]), src="doc_a", dst="doc_b")
-    prev = prev.unionByName(
-        spark.createDataFrame([(999, 999)], "node long, component long")
-    )
-    inc = _cc_dict(cc_incremental(prev, _pairs(spark, [(100, 102)])))
-    assert inc[5] == 5 and inc[6] == 5       # untouched
-    assert inc[100] == inc[101] == inc[102] == 100
-    assert inc[999] == 999                   # singleton pass-through
-
-
-def test_cc_incremental_round_count_collapses(spark):
-    """The scale claim: history's contraction depth is paid once. A
-    1024-node path needs ~log2 rounds from raw pairs; after a bridge pair
-    arrives, the incremental fold over the star-compressed assignment
-    converges in a small constant number of rounds."""
-    from tamer_spark.operators.cc import cc_incremental, connected_components
-
-    n = 512
-    path1 = [(i, i + 1) for i in range(n - 1)]                 # 0..511
-    path2 = [(i, i + 1) for i in range(n + 1, 2 * n)]          # 513..1024
-    full_stats: dict = {}
-    prev = connected_components(
-        _pairs(spark, path1 + path2), src="doc_a", dst="doc_b", stats=full_stats
-    )
-    inc_stats: dict = {}
-    inc = cc_incremental(prev, _pairs(spark, [(n - 1, n + 1)]), stats=inc_stats)
-    got = _cc_dict(inc)
-    assert all(got[i] == 0 for i in list(range(n)) + list(range(n + 1, 2 * n + 1)))
-    assert inc_stats["rounds"] < full_stats["rounds"], (inc_stats, full_stats)
-    assert inc_stats["rounds"] <= 3, inc_stats
-
-
 def test_cluster_best_representatives_election_and_ties(spark):
     from tamer_spark.operators.cc import cluster_best_representatives
 

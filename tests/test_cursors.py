@@ -77,6 +77,14 @@ def test_next_numeric_cursor():
     assert next_key(keys, 10, _number) is None
 
 
+def test_numeric_cursor_skips_a_key_of_non_decimal_digits():
+    """``'²'.isdigit()`` is True but ``int('²')`` raises: a stray key
+    ``part²`` parses to None (as the reference's ``toLongOption`` answers),
+    so the cursor still moves past it."""
+    assert parse_number_from_key("f2/part²", "f2/part") is None
+    assert next_key(["f2/p²", "f2/p1", "f2/p3"], 1, _number) == ("f2/p3", 3)
+
+
 # --- JDBC window advance (DbSetup.scala:109-118) --------------------------
 
 T0 = datetime(2020, 1, 1, tzinfo=UTC)

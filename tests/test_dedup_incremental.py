@@ -408,7 +408,7 @@ def test_incremental_trio_differential_fuzz(spark):
 
 
 # ---------------------------------------------------------------------------
-# r12: epoch-fold CLUSTERING — minhash_epoch_pairs × cc_incremental
+# r12: the LSH posting index bands as the pair finder bands
 # ---------------------------------------------------------------------------
 
 def _posting_index(df):
@@ -417,66 +417,6 @@ def _posting_index(df):
     from tamer_spark.operators.dedup import lsh_bands, minhash_signatures
 
     return lsh_bands(minhash_signatures(df, "text", "doc_id", 16, 3, 42), 16, 4).distinct()
-
-
-def test_epoch_fold_clustering_equals_full_corpus_clustering(spark):
-    """The composed incremental-clustering story: per epoch derive only the
-    pairs TOUCHING the batch (band join vs the posting index + within-batch
-    LSH), fold them into the previous assignment with cc_incremental — and
-    the result must equal full-corpus minhash clustering, epoch after
-    epoch. History's pair graph is never re-derived."""
-    from tamer_spark.operators.cc import cc_incremental, connected_components
-    from tamer_spark.operators.dedup import minhash_lsh_pairs
-    from tamer_spark.operators.dedup_incremental import minhash_epoch_pairs
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-    e1 = docs.filter(F.col("doc_id") % 3 != 2)
-    e2 = docs.filter(F.col("doc_id") % 3 == 2)
-
-    # epoch 1: batch clustering + posting index
-    p1 = minhash_lsh_pairs(e1, k=16, bands=4, n=3, seed=42, max_bucket=None)
-    cc1 = connected_components(p1, src="doc_a", dst="doc_b")
-    idx = _posting_index(e1)
-
-    # epoch 2: pairs touching the batch only, folded into cc1
-    p2 = minhash_epoch_pairs(e2, idx, k=16, bands=4, n=3, seed=42, max_bucket=None)
-    cc2 = cc_incremental(cc1, p2)
-
-    full = connected_components(
-        minhash_lsh_pairs(docs, k=16, bands=4, n=3, seed=42, max_bucket=None),
-        src="doc_a",
-        dst="doc_b",
-    )
-    got = {r.node: r.component for r in cc2.collect()}
-    want = {r.node: r.component for r in full.collect()}
-    assert got == want and want  # non-trivial: the fixture has dup clusters
-
-
-def test_minhash_epoch_pairs_covers_exactly_batch_touching_pairs(spark):
-    """The pair set is sound AND complete for the batch: equal to the
-    full-corpus pair set restricted to pairs with ≥1 batch member."""
-    from tamer_spark.operators.dedup import minhash_lsh_pairs
-    from tamer_spark.operators.dedup_incremental import minhash_epoch_pairs
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-    e1 = docs.filter(F.col("doc_id") % 3 != 2)
-    e2 = docs.filter(F.col("doc_id") % 3 == 2)
-    idx = _posting_index(e1)
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_epoch_pairs(
-            e2, idx, k=16, bands=4, n=3, seed=42, max_bucket=None
-        ).collect()
-    }
-    batch_ids = {r.doc_id for r in e2.select("doc_id").collect()}
-    full = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_lsh_pairs(
-            docs, k=16, bands=4, n=3, seed=42, max_bucket=None
-        ).collect()
-    }
-    want = {p for p in full if p[0] in batch_ids or p[1] in batch_ids}
-    assert got == want and want
 
 
 def test_minhash_lsh_pairs_none_cap_means_uncapped_not_empty(spark):
@@ -522,22 +462,3 @@ def test_minhash_band_index_keys_equal_pair_finder_banding(spark):
     }
     pairs = {tuple(r) for r in minhash_lsh_pairs(docs, max_bucket=None).collect()}
     assert from_index == pairs and pairs
-
-
-def test_minhash_epoch_pairs_within_batch_cap_is_pair_finder_cap(spark):
-    """Against an empty index, the epoch pairs are the batch's own capped
-    bucket self-join: equal to minhash_lsh_pairs at the same cap, capped
-    buckets dropped alike."""
-    from tamer_spark.operators.dedup import minhash_lsh_pairs
-    from tamer_spark.operators.dedup_incremental import minhash_epoch_pairs
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-    empty = spark.createDataFrame([], "doc_id long, band_id int, band_sig string")
-    for cap in (2, None):
-        got = {tuple(r) for r in minhash_epoch_pairs(docs, empty, max_bucket=cap).collect()}
-        want = {
-            (r.doc_a, r.doc_b) for r in minhash_lsh_pairs(docs, max_bucket=cap).collect()
-        }
-        assert got == want and want
-    capped = minhash_lsh_pairs(docs, max_bucket=2).count()
-    assert capped < minhash_lsh_pairs(docs, max_bucket=None).count()

@@ -147,11 +147,9 @@ def test_embedding_drift_matches_driver_recompute_on_fixture(spark):
 
 
 def test_value_histogram_grid_clamp_and_merge(spark):
-    from tamer_spark.operators.drift import histogram_grid, histogram_merge, value_histogram
+    from tamer_spark.operators.drift import histogram_merge, value_histogram
 
     df = spark.createDataFrame([(v,) for v in [0, 1, 63, 64, 500, -9, None]], "val long")
-    lo, width = histogram_grid(df, "val", n_buckets=8)
-    assert (lo, width) == (-9, (500 + 9) // 8 + 1)
     # frozen tiny grid: lo=0, width=10, B=4 → buckets 0..3, out-of-range clamps
     h = {r.bucket: r.cnt for r in value_histogram(df, "val", 0, 10, 4).collect()}
     # -9 clamps to 0; 0,1 → 0; 63,64,500 clamp to 3; NULL dropped
@@ -268,32 +266,3 @@ def test_vocab_growth_null_bucket_dropped(spark):
     }
     # 'z'/'q' never debut anywhere; 'a' debuts at 0 (not at NULL)
     assert got == {0: (2, 2, 2), 1: (2, 1, 3)}
-
-
-def test_vocab_growth_incremental_matches_full_recompute(spark):
-    """Epoch OOV vs frozen index == the full vocab_growth curve's
-    new-term column, when epochs are the buckets (the O(batch) law)."""
-    from tamer_spark.operators.drift import vocab_growth, vocab_growth_incremental
-
-    e0 = spark.createDataFrame([(0, "a b a c")], "vb long, text string")
-    e1 = spark.createDataFrame([(1, "b c d")], "vb long, text string")
-    e2 = spark.createDataFrame([(2, "d e e f")], "vb long, text string")
-    full = {
-        r.bucket: r.n_new_terms
-        for r in vocab_growth(e0.unionByName(e1).unionByName(e2), "vb").collect()
-    }
-
-    def terms_of(df):
-        from pyspark.sql import functions as FF
-
-        return (
-            df.select(FF.explode(FF.split(FF.lower("text"), " ")).alias("term"))
-            .distinct()
-        )
-
-    idx = terms_of(e0)
-    r1 = vocab_growth_incremental(e1, idx).collect()[0]
-    assert (r1.n_occurrences, r1.n_terms, r1.n_new_terms) == (3, 3, full[1])
-    idx = idx.unionByName(terms_of(e1)).distinct()
-    r2 = vocab_growth_incremental(e2, idx).collect()[0]
-    assert (r2.n_occurrences, r2.n_terms, r2.n_new_terms) == (4, 3, full[2])

@@ -674,7 +674,36 @@ CRASH_POINTS = (
 CRASH_EPOCH = 3
 
 
-@pytest.mark.parametrize("sink_kind", ["ordinary", "write_ahead"])
+def _matrix_sink(kind, tmp_path):
+    """The shipped sink of ``kind`` and a reader of the keys it delivered."""
+    from tamer_spark.operators.rollup import ContinuousRollup, rollup_sink
+    from tamer_spark.sinks import ParquetEpochSink
+
+    if kind == "ordinary":
+        sink = MemorySink()
+        return sink, lambda spark, limit: [r.key for r in sink.rows]
+    if kind == "write_ahead":
+        sink = ParquetEpochSink(str(tmp_path / "out"))
+        return sink, lambda spark, limit: sorted(r.key for r in sink.read(spark, before=limit).collect())
+    if kind == "rollup":
+        rollup = ContinuousRollup(str(tmp_path / "rollup"), ["key"], ["n"])
+        sink = rollup_sink(rollup, lambda df: df.groupBy("key").agg(F.count(F.lit(1)).alias("n")))
+        return sink, lambda spark, limit: sorted(r.key for r in rollup.read(spark).collect() for _ in range(r.n))
+    # the transactional Kafka sink, against test_kafka_sink's file-backed
+    # fake broker (its producers run in executor tasks)
+    from tests.test_kafka_sink import FileBroker, _txn_sink
+
+    broker = FileBroker(tmp_path / "broker")
+    kafka = _txn_sink(broker)
+
+    class Records:
+        def write(self, df, epoch):
+            kafka.write(df.selectExpr(*(f"CAST(CAST({c} AS STRING) AS BINARY) AS {c}" for c in ("key", "value"))), epoch)
+
+    return Records(), lambda spark, limit: sorted(int(k) for k, _ in broker.committed.get("t", []))
+
+
+@pytest.mark.parametrize("sink_kind", ["ordinary", "write_ahead", "rollup", "kafka"])
 @pytest.mark.parametrize("point", CRASH_POINTS)
 def test_crash_anywhere_resumes_to_exactly_once(spark, tmp_path, monkeypatch, point, sink_kind):
     """The process dies at one step of epoch 3 — its iteration, the pin of
@@ -683,9 +712,10 @@ def test_crash_anywhere_resumes_to_exactly_once(spark, tmp_path, monkeypatch, po
     while the next epoch is read ahead (and, for a write-ahead
     ``ParquetEpochSink``, may already be written). A fresh Pipeline over
     the same checkpoint drains to every record exactly once, and neither
-    run leaves a cached batch behind."""
+    run leaves a cached batch behind. The matrix runs the ``MemorySink``
+    test sink, ``ParquetEpochSink``, ``rollup_sink`` and
+    ``TransactionalKafkaSink``."""
     import tamer_spark.engine as engine_mod
-    from tamer_spark.sinks import ParquetEpochSink
     from tamer_spark.state import StateStore
 
     k, limit = CRASH_EPOCH, 6
@@ -704,13 +734,18 @@ def test_crash_anywhere_resumes_to_exactly_once(spark, tmp_path, monkeypatch, po
             made.append((state, df))
             return df, nxt
 
-    class Sink(MemorySink if sink_kind == "ordinary" else ParquetEpochSink):
+    inner, delivered = _matrix_sink(sink_kind, tmp_path)
+
+    class Sink:
         def write(self, df, epoch):
             if epoch == k:
                 crash("write_before_files")
-            super().write(df, epoch)
+            inner.write(df, epoch)
             if epoch == k:
                 crash("write_after_files")
+
+        def __getattr__(self, name):  # drop_uncommitted: write-ahead or not
+            return getattr(inner, name)
 
     real_observed, real_commit = engine_mod.observed, StateStore.commit
 
@@ -731,8 +766,7 @@ def test_crash_anywhere_resumes_to_exactly_once(spark, tmp_path, monkeypatch, po
         crash_commit(monkeypatch, point[len("commit_"):], at=k + 2)
 
     cache = CacheWatch(spark)
-    source, cp = Source(limit), str(tmp_path / "cp")
-    sink = Sink() if sink_kind == "ordinary" else Sink(str(tmp_path / "out"))
+    source, cp, sink = Source(limit), str(tmp_path / "cp"), Sink()
 
     def run():
         pipe = Pipeline(source, sink, cp, observer=lambda m: m.epoch == k and crash("observer"))
@@ -751,8 +785,4 @@ def test_crash_anywhere_resumes_to_exactly_once(spark, tmp_path, monkeypatch, po
     assert not cache.added(), cache.added()
     assert run() == (limit, limit)
     assert not cache.added(), cache.added()
-    if sink_kind == "ordinary":
-        keys = [r.key for r in sink.rows]
-    else:
-        keys = sorted(r.key for r in sink.read(spark, before=limit).collect())
-    assert keys == list(range(1, limit + 1))
+    assert delivered(spark, limit) == list(range(1, limit + 1))

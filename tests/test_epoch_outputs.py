@@ -63,6 +63,19 @@ def test_drop_uncommitted_removes_every_later_epoch(spark, tmp_path):
     assert {r.epoch for r in sink.read(spark).collect()} == {0, 1}
 
 
+def test_a_non_decimal_epoch_dir_is_not_an_epoch(spark, tmp_path):
+    """``epoch=²``: ``'²'.isdigit()`` is True but ``int('²')`` raises, so
+    one such dir broke every read and drop of the sink's epochs."""
+    sink = ParquetEpochSink(str(tmp_path / "out"))
+    for e in range(2):
+        sink.write(spark.createDataFrame([(e,)], "k long"), e)
+    (tmp_path / "out" / "epoch=²").mkdir()
+    assert {r.epoch for r in epoch_frames(spark, sink.path, "k long").collect()} == {0, 1}
+    sink.drop_uncommitted(spark, 1)
+    assert {r.epoch for r in sink.read(spark).collect()} == {0}
+    assert (tmp_path / "out" / "epoch=²").is_dir()
+
+
 def test_curation_gate_retry_keeps_every_survivor(spark):
     """The curation example's gate sink fails once after writing its
     survivors, digest index and posting list; the engine retries the epoch.

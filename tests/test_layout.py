@@ -1,4 +1,4 @@
-"""Data-layout tools: sized writes and compaction."""
+"""Data-layout tools: manifest-driven compaction."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import glob
 
 from pyspark.sql import functions as F
 
-from tamer_spark.sinks.layout import compact_small_files, write_sized
+from tamer_spark.sinks.layout import compact_planned
 
 
 def _parquet_files(path):
@@ -17,17 +17,10 @@ def test_compact_small_files(spark, tmp_path):
     p = str(tmp_path / "frag")
     spark.range(100_000).repartition(64).write.parquet(p)
     assert len(_parquet_files(p)) == 64
-    compact_small_files(spark, p, target_file_mb=128)
+    compact_planned(spark, p, target_bytes=128 * 1024 * 1024)
     files = _parquet_files(p)
     assert len(files) == 1  # ~1 MB of data → one 128 MB-target file
     assert spark.read.parquet(p).count() == 100_000
-
-
-def test_write_sized_row_preserving(spark, tmp_path):
-    p = str(tmp_path / "sized")
-    df = spark.range(50_000).withColumn("v", F.rand(seed=1))
-    write_sized(df, p, target_file_mb=1)
-    assert spark.read.parquet(p).count() == 50_000
 
 
 # ---------------------------------------------------------------------------

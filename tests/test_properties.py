@@ -3,7 +3,7 @@
 The reference has no property tests (SURVEY §5); these pin the invariants
 its e2e suites only sample: pagination ingests every element exactly once
 under ANY growth schedule, windows never regress or overlap, fingerprints
-are stable, compat rules are reflexive.
+are stable.
 """
 
 from __future__ import annotations
@@ -13,7 +13,6 @@ from datetime import datetime, timedelta, timezone
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from tamer_spark.serde.registry import check_compat
 from tamer_spark.sources import (
     Offset,
     TimeWindow,
@@ -105,32 +104,6 @@ def test_fingerprint_stable_and_injective_ish(a, b, state):
     assert fingerprint(a, state) == fingerprint(a, state)
     if a != b:
         assert fingerprint(a, state) != fingerprint(b, state)
-
-
-# --- schema compat ---------------------------------------------------------
-
-_field = st.fixed_dictionaries(
-    {"name": st.text(alphabet="abcdef", min_size=1, max_size=6), "type": st.sampled_from(["int", "long", "string", "boolean"])}
-)
-
-
-@settings(max_examples=100, deadline=None)
-@given(fields=st.lists(_field, max_size=6, unique_by=lambda f: f["name"]))
-def test_compat_reflexive_and_default_rule(fields):
-    rec = {"type": "record", "name": "R", "fields": fields}
-    assert check_compat(rec, rec) == []  # reflexive
-    extended = {
-        "type": "record",
-        "name": "R",
-        "fields": [*fields, {"name": "zzz_new", "type": "int", "default": 0}],
-    }
-    assert check_compat(extended, rec) == []  # defaulted addition is compatible
-    broken = {
-        "type": "record",
-        "name": "R",
-        "fields": [*fields, {"name": "zzz_new", "type": "int"}],
-    }
-    assert check_compat(broken, rec)  # non-defaulted addition is not
 
 
 @given(

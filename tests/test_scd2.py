@@ -1,4 +1,4 @@
-"""SCD2: history preservation, idempotent re-ingestion, point-in-time reads."""
+"""SCD2: history preservation and idempotent re-ingestion."""
 
 from __future__ import annotations
 
@@ -6,9 +6,9 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from tamer_spark.operators.scd2 import scd2_apply, scd2_init, snapshot_at
+from tamer_spark.operators.scd2 import scd2_apply, scd2_init
 
-T1, T2, T3 = datetime(2024, 1, 1), datetime(2024, 2, 1), datetime(2024, 3, 1)
+T1, T2 = datetime(2024, 1, 1), datetime(2024, 2, 1)
 
 
 def _dim(spark):
@@ -47,13 +47,3 @@ def test_new_key_inserts_open_version(spark):
     assert out.count() == 3
     carol = out.filter(F.col("id") == 3).collect()[0]
     assert (carol.valid_from, carol.valid_to) == (T2, None)
-
-
-def test_snapshot_at_point_in_time(spark):
-    dim = _dim(spark)
-    upd = spark.createDataFrame([(1, "alice", "berlin")], "id long, name string, city string")
-    dim2 = scd2_apply(dim, upd, "id", F.lit(T2).cast("timestamp"))
-    before = {r.id: r.city for r in snapshot_at(dim2, F.lit(T1).cast("timestamp")).collect()}
-    after = {r.id: r.city for r in snapshot_at(dim2, F.lit(T3).cast("timestamp")).collect()}
-    assert before == {1: "nyc", 2: "sf"}
-    assert after == {1: "berlin", 2: "sf"}

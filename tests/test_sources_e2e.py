@@ -181,6 +181,49 @@ def test_rest_pagination_exactly_once_with_growth_and_auth(spark, tmp_path, rest
     assert [r.value for r in sink.rows] == list(range(1, 10))
 
 
+class _FlakyPages(BaseHTTPRequestHandler):
+    """Pages of three values out of 1..9; page 1 answers HTTP 503 to its
+    first request."""
+
+    failed: set = set()
+
+    def do_GET(self):
+        page = int(self.path.split("page=")[1])
+        if page == 1 and not _FlakyPages.failed:
+            _FlakyPages.failed.add(page)
+            self.send_response(503)
+            self.end_headers()
+            return
+        self.send_response(200)
+        self.end_headers()
+        self.wfile.write(json.dumps([{"value": v} for v in range(1, 10)[page * 3 : page * 3 + 3]]).encode())
+
+    def log_message(self, *a):  # quiet
+        pass
+
+
+def test_rest_source_retries_a_page_that_answers_503(spark, tmp_path):
+    """The engine source's fetch retries a transient 5xx: the page that
+    answered 503 is fetched again and the drain delivers every record
+    exactly once."""
+    _FlakyPages.failed.clear()
+    srv = HTTPServer(("127.0.0.1", 0), _FlakyPages)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        src = PaginatedRestSource(
+            base_url=f"http://127.0.0.1:{srv.server_port}/items",
+            page_decoder=lambda body: ([(d["value"],) for d in json.loads(body)], None),
+            schema="value int",
+            fixed_page_element_count=3,
+        )
+        sink = MemorySink()
+        Pipeline(src, sink, str(tmp_path / "cp"), poll_interval_s=0.0).run(spark, max_iterations=4)
+        assert [r.value for r in sink.rows] == list(range(1, 10))
+        assert _FlakyPages.failed == {1}
+    finally:
+        srv.shutdown()
+
+
 # --- JDBC tumbling window over the users-style fixture (FIXTURES §1) ------
 
 def _users_jdbc_source(spark, tmp_path, stamps, step, wrap=lambda sql, df: df):
@@ -353,29 +396,6 @@ def test_jdbc_run_with_empty_windows_leaves_no_cached_batch(spark, tmp_path):
     assert 0 in observed and len(sink.rows) == len(rows)
     leaked = cache.added()
     assert not leaked, f"run leaked caches: {leaked}"
-
-
-def test_fetch_pages_distributed(spark, rest_server):
-    """Bulk-parallel REST backfill: page URLs fetched in executors via
-    mapInPandas (the scale path for known-page backfills)."""
-    import urllib.request
-
-    from tamer_spark.sources.rest import fetch_pages_distributed
-
-    def get_token():
-        with urllib.request.urlopen(f"{rest_server}/auth") as r:
-            return r.read().decode()
-
-    from tamer_spark.sources import BearerAuth
-
-    _RestFixture.state["data"] = list(range(1, 13))
-    urls = [f"{rest_server}/finite-pagination?page={p}" for p in range(4)]
-    df = fetch_pages_distributed(
-        spark, urls, "value int",
-        page_decoder=lambda body: json.loads(body),
-        auth=BearerAuth(get_token),
-    )
-    assert sorted(r.value for r in df.collect()) == list(range(1, 13))
 
 
 # --- OCI object storage (ObjectStorageSetup.scala state machine) ----------
