@@ -46,12 +46,10 @@ __all__ = [
     "BearerAuth",
     "ParquetEpochSink",
     "MemorySink",
-    "ParquetUpsertSink",
 ]
 __version__ = "0.1.0"
 
 from tamer_spark.sinks import MemorySink, ParquetEpochSink  # noqa: E402
-from tamer_spark.sinks.upsert import ParquetUpsertSink  # noqa: E402
 from tamer_spark.sources import (  # noqa: E402
     BasicAuth,
     BearerAuth,

@@ -591,25 +591,14 @@ SCRIPT_PATTERNS: dict[str, str] = {
 }
 
 
-def script_count_cols(text: Column) -> list[Column]:
-    """Per-script character counts, one ``n_<script>`` column per
-    SCRIPT_PATTERNS entry — the multilingual routing signal (which
-    pipeline: CJK segmentation? Arabic shaping? plain Latin?) computed at
-    parquet-scan rate, zero shuffles, before any per-language stage."""
-    return [
-        F.regexp_count(text, F.lit(pat)).cast("long").alias(f"n_{name}")
-        for name, pat in sorted(SCRIPT_PATTERNS.items())
-    ]
-
-
 def dominant_script_sql() -> str:
     """SQL for the majority script over the staged ``n_<script>`` count
-    columns of script_count_cols — stage the counts in a prior select: the
-    greatest + tie chain references every count ~3×, and deriving it from
-    the text would pay ~15 regexp passes where 5 suffice (measured +47 % on
-    the text_profile gate before this split). Alphabetical-first on ties (a
-    total order — the lang_id_col convention), 'none' when no script chars
-    at all."""
+    columns (one ``regexp_count`` per SCRIPT_PATTERNS entry) — stage the
+    counts in a prior select: the greatest + tie chain references every
+    count ~3×, and deriving it from the text would pay ~15 regexp passes
+    where 5 suffice (measured +47 % on the text_profile gate before this
+    split). Alphabetical-first on ties (a total order — the lang_id_col
+    convention), 'none' when no script chars at all."""
     names = sorted(SCRIPT_PATTERNS)
     g = "greatest(" + ", ".join(f"n_{n}" for n in names) + ")"
     whens = " ".join(f"WHEN ({g} > 0) AND (n_{n} = {g}) THEN '{n}'" for n in names)

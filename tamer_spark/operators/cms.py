@@ -18,17 +18,14 @@ Determinism: row ``r``'s hash is ``stable_hash64('cms-{seed}-{r}-' ‖ token)
 estimates are exactly reproducible and the DuckDB oracle replays the whole
 sketch. Everything is int64 counts; no floats anywhere.
 
-Epoch posture: sketches are mergeable (cell-wise sum) — ``cms_merge`` makes
-the incremental story O(sketch) per epoch: build a per-epoch sketch from the
-new batch only, merge into the persisted one. Merge-then-query equals
-build-on-the-union exactly (both are the same per-cell sums; pinned).
+Epoch posture: sketches are mergeable — the cell-wise sum of per-epoch
+sketches equals the sketch of the union exactly (both are the same per-cell
+sums; pinned), so an epoch costs O(sketch) beyond its own batch.
 
 No analog in the reference engine; training-data extension surface.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -37,7 +34,6 @@ from tamer_spark.functions.hashing import stable_hash64
 __all__ = [
     "cms_build",
     "cms_heavy_hitters",
-    "cms_merge",
     "cms_query",
     "cms_window_point_estimates",
     "cms_windowed_cells",
@@ -170,19 +166,6 @@ def cms_window_point_estimates(
         )
         .groupBy("w", token_col)
         .agg(F.min(F.coalesce(F.col("_cnt"), F.lit(0))).alias("est"))
-    )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise sum of sketches built with identical (d, w, seed) — the
-    linearity of CMS counters. Sparse cells union then partial-agg; output
-    stays ≤ d·w rows."""
-    if not sketches:
-        raise ValueError("cms_merge needs at least one sketch")
-    return (
-        reduce(DataFrame.unionByName, sketches)
-        .groupBy("r", "b")
-        .agg(F.sum("cnt").alias("cnt"))
     )
 
 

@@ -231,9 +231,8 @@ def _staged_line_arrays(
 ) -> DataFrame:
     """(doc_id, _lines): THE corpus line/paragraph-unit convention (split
     on ``split_pattern``, space-trimmed, empties dropped) in exactly one
-    place — _doc_lines (the exploded stream), strip_boilerplate_map_only
-    (the array-HOF fast path) and dedup_lines_in_doc all derive from this,
-    so they cannot drift on what a 'line' is."""
+    place — _doc_lines (the exploded stream) and dedup_lines_in_doc both
+    derive from this, so they cannot drift on what a 'line' is."""
     from tamer_spark.functions.text import sql_string, trim_nonempty_sql
 
     return df.selectExpr(
@@ -383,64 +382,6 @@ def dedup_lines_across_docs(
         ).alias("text_clean"),
         F.max("n_lines").alias("n_lines"),
         (F.max("n_lines") - F.count(kept_struct)).cast("long").alias("n_dropped"),
-    )
-
-
-def strip_boilerplate_map_only(
-    df: DataFrame,
-    boilerplate: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    split_pattern: str = "\n",
-    join_sep: str = "\n",
-) -> DataFrame:
-    """The steady-state form of :func:`dedup_lines_across_docs`'s frozen
-    mode with ZERO batch shuffles: the persisted boilerplate set is
-    aggregated to ONE row (``collect_set(line)``), broadcast, and each
-    document's line array is filtered by an array HOF — no explode, no
-    regroup, scan-rate. Because it is aggregate-free per document, it
-    composes into the append-mode Structured Streaming cleaning tier
-    (stream-static broadcast of the one-row set; pinned in
-    tests/test_line_dedup.py) — strip boilerplate as data LANDS, instead
-    of per-epoch batch rebuilds.
-
-    Output and NULL/empty semantics are bit-identical to
-    ``dedup_lines_across_docs(df, boilerplate=...)`` on the standard
-    unique-``doc_id`` ingest contract (equivalence-pinned): NULL text →
-    (NULL, NULL, NULL), all-boilerplate/line-less → ''. One documented
-    divergence OUTSIDE that contract: this form is strictly per-ROW (a
-    duplicated doc_id yields one output row per input row), while the
-    join mode's groupBy(doc_id) would MERGE the copies into one row with
-    interleaved lines — dedup your ids first (it is a dedup library).
-
-    Cost note: the HOF probe is a linear scan of the set per line —
-    O(lines × |set|) string compares per document, vs the frozen join
-    mode's hashed O(1) probe per line. The filtered array is STAGED
-    through a one-element Generate so the scan runs ONCE per document
-    (lambda expressions are excluded from Spark's subexpression
-    elimination — two references would run it twice; same trap as the
-    minhash staged arrays). The set must fit one executor row (the same
-    broadcast bound as the frozen join mode — true for real thresholds,
-    where boilerplate is a vocabulary-sized object like the BPE merge
-    table or the bloom words). ``boilerplate`` must come from
-    :func:`boilerplate_lines` with the SAME ``split_pattern``."""
-    bps = F.broadcast(boilerplate.agg(F.collect_set("line").alias("_bps")))
-    staged = _staged_line_arrays(df, text_col, id_col, split_pattern).crossJoin(bps)
-    kept = F.filter(F.col("_lines"), lambda x: ~F.array_contains(F.col("_bps"), x))
-    # explode_outer(array(kept)): a Generate barrier CollapseProject cannot
-    # cross, so the O(|set|)-per-line filter is evaluated exactly once and
-    # both outputs below read the staged attribute (NULL _lines → filter
-    # NULL → one row with _kept NULL, preserving the NULL-text contract)
-    kept_staged = staged.select(
-        "doc_id", "_lines", F.explode_outer(F.array(kept)).alias("_kept")
-    )
-    return kept_staged.select(
-        "doc_id",
-        F.when(
-            F.col("_lines").isNotNull(), F.array_join(F.col("_kept"), join_sep)
-        ).alias("text_clean"),
-        F.size("_lines").cast("long").alias("n_lines"),
-        (F.size("_lines") - F.size("_kept")).cast("long").alias("n_dropped"),
     )
 
 
@@ -796,26 +737,6 @@ def ngram_jaccard_pairs(
     shingle_pair_stats + the resemblance measure."""
     stats, exploded = shingle_pair_stats(df, text_col, id_col, n)
     pairs = jaccard_measure(stats, threshold)
-    return _release_on_gc(pairs, exploded)
-
-
-def ngram_containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram CONTAINMENT pairs — the one-sided Jaccard (Broder 1997
-    §3: containment(A, B) = |A∩B| / |A|), the asymmetric near-dup family
-    resemblance misses: a short document quoted whole inside a long one
-    has tiny Jaccard (the union is the long doc) but containment ≈ 1 —
-    exactly the quote-inclusion / page-embeds-page case ExactSubstr-style
-    dedup targets, at shingle-set cost instead of suffix-grid cost.
-    shingle_pair_stats + the containment measure; returns
-    (doc_a, doc_b, inter, min_size, containment)."""
-    stats, exploded = shingle_pair_stats(df, text_col, id_col, n)
-    pairs = containment_measure(stats, threshold)
     return _release_on_gc(pairs, exploded)
 
 

@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, functions as F
 __all__ = [
     "category_drift",
     "total_tvd_ppm",
-    "embedding_drift",
     "value_histogram",
     "histogram_merge",
     "numeric_drift",
@@ -87,73 +86,6 @@ def total_tvd_ppm(per_category: DataFrame) -> DataFrame:
     )
 
 
-def embedding_drift(
-    epoch_a: DataFrame,
-    epoch_b: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The vector-column sibling of category_drift: did the embedding
-    DISTRIBUTION move between epochs? One row:
-
-    - ``n_a, n_b``              epoch sizes
-    - ``centroid_dist_sq``      exact squared L2 between the two epochs'
-                                integer centroids (per-dim floor-div means
-                                of the quantized vectors — the IVF centroid
-                                convention, bit-reproducible anywhere)
-    - ``msn_a, msn_b``          mean squared norm per epoch (floor-div) —
-                                a scale/normalization shift detector even
-                                when the centroids agree (e.g. a new
-                                encoder checkpoint that rescales)
-
-    A centroid that moves or a norm profile that jumps means the upstream
-    embedder or the content mix changed — rebuild/re-validate the frozen
-    ANN models (IVF centroids, PQ codebooks, SQ bounds) before appending
-    the epoch to their inverted files.
-
-    Scale shape: each epoch is ONE posexplode + partial-agg groupBy(dim)
-    (the sq_train shape — the exchange carries partitions × dim rows) plus
-    one 1-row norm agg; the dim-row mean frames join driver-free and
-    everything downstream is a broadcast of dim rows. No window, no
-    corpus join — the two corpora never meet.
-    """
-    from tamer_spark.operators.similarity import quantize_sql
-
-    def _stats(df: DataFrame, tag: str) -> tuple[DataFrame, DataFrame]:
-        qv = quantize_sql(vec_col)
-        means = (
-            df.selectExpr(f"posexplode({qv}) AS (t, val)")
-            .groupBy("t")
-            # FLOOR, not `div`: per-dim sums go negative and SQL div
-            # truncates toward zero while the repo's centroid convention
-            # (ivf_build / the k-means oracles: FLOOR(SUM/COUNT)) floors —
-            # pinned by the driver-recompute test against Python `//`
-            .agg(F.expr("CAST(FLOOR(sum(val) / count(*)) AS BIGINT)").alias(f"m_{tag}"))
-        )
-        norms = df.selectExpr(
-            f"aggregate({qv}, CAST(0 AS BIGINT), (a, x) -> a + CAST(x * x AS BIGINT)) AS n2"
-        ).agg(
-            F.count(F.lit(1)).cast("long").alias(f"n_{tag}"),
-            F.expr("sum(n2) div count(*)").cast("long").alias(f"msn_{tag}"),
-        )
-        return means, norms
-
-    means_a, norms_a = _stats(epoch_a, "a")
-    means_b, norms_b = _stats(epoch_b, "b")
-    dist = (
-        means_a.join(means_b, "t")
-        .agg(
-            F.sum((F.col("m_a") - F.col("m_b")) * (F.col("m_a") - F.col("m_b")))
-            .cast("long")
-            .alias("centroid_dist_sq")
-        )
-    )
-    return (
-        norms_a.crossJoin(F.broadcast(norms_b))
-        .crossJoin(F.broadcast(dist))
-        .select("n_a", "n_b", "centroid_dist_sq", "msn_a", "msn_b")
-    )
-
-
 def _bucket_expr(lo: int, width: int, n_buckets: int):
     """Shared frozen-grid clamp — ONE copy feeds value_histogram and
     numeric_drift so the clamp/NULL conventions cannot drift between
@@ -195,7 +127,7 @@ def value_histogram(
 
 def histogram_merge(*hists: DataFrame) -> DataFrame:
     """Cell-wise sum of histograms built on an IDENTICAL frozen grid — the
-    cms_merge linearity; output stays ≤ n_buckets rows."""
+    CMS sketch linearity; output stays ≤ n_buckets rows."""
     if not hists:
         raise ValueError("histogram_merge needs at least one histogram")
     from functools import reduce
@@ -215,12 +147,11 @@ def numeric_drift(
     width: int,
     n_buckets: int = 64,
 ) -> DataFrame:
-    """Numeric-column drift between epochs — the third drift leg
-    (category_drift = categorical slices, embedding_drift = vector
-    columns, this = lengths/scores/prices): bucket both epochs on the
-    SAME frozen grid, then reuse category_drift's exact ppm-share
-    arithmetic over the bucket ids. Returns the per-bucket frame
-    (bucket, n_a, n_b, share_a_ppm, share_b_ppm, drift_ppm); feed it to
+    """Numeric-column drift between epochs — the second drift leg
+    (category_drift = categorical slices, this = lengths/scores/prices):
+    bucket both epochs on the SAME frozen grid, then reuse category_drift's
+    exact ppm-share arithmetic over the bucket ids. Returns the per-bucket
+    frame (bucket, n_a, n_b, share_a_ppm, share_b_ppm, drift_ppm); feed it to
     ``total_tvd_ppm`` for the one-row verdict. A length distribution that
     moves (new source, new cleaning stage) shows up as mass shifting
     between buckets even when the mean barely moves.

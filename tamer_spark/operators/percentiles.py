@@ -121,7 +121,7 @@ def global_percentile_bucketed(
     pins the rank arithmetic, not just the landed value.
 
     Epoch posture: the pass-1 histogram is MERGEABLE (cell-wise sum, the
-    cms_merge linearity) given a FROZEN (min, width) — persist one per
+    CMS sketch linearity) given a FROZEN (min, width) — persist one per
     epoch and re-refine against the union only when a query lands.
 
     No analog in the reference engine; training-data extension surface.

@@ -11,8 +11,7 @@ pure DataFrame ops:
 3. append: changed/new rows open with ``valid_from = change_ts,
    valid_to = NULL``.
 
-The result is the full new dimension table; pair with ParquetUpsertSink-
-style bucket rewrites when only touched keys should be rewritten at scale.
+The result is the full new dimension table.
 """
 
 from __future__ import annotations

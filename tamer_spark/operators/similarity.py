@@ -658,6 +658,34 @@ def ivf_search(
     return _top_k_by_cosine(scored, k)
 
 
+def _mining_projection(
+    df: DataFrame, id_col: str, vec_col: str, label_col: str, planes: int, dim: int, seed: int
+) -> DataFrame:
+    """The miners' bucketed projection ``(id, _lbl, v, bucket, n2)``,
+    persisted: it feeds BOTH self-join sides, and without the persist Spark
+    computes the quantize + LSH HOF chain twice over the corpus (r14
+    interleaved A/B at sf0.1, median-of-5: contrastive_pairs 1.94 s → 1.67,
+    hard_negatives 1.94 → 1.47). The caller releases it when its result
+    plan is dropped (``_release_on_gc``, the semdedup pattern).
+
+    Zero-norm vectors (every component quantizing to 0 — dead or padded
+    embeddings) are dropped here: they have no direction, so cosine is
+    undefined, and under Spark 4's default ANSI mode the division would
+    raise DIVIDE_BY_ZERO and kill the whole mining job."""
+    return df.selectExpr(
+        id_col,
+        f"{label_col} AS _lbl",
+        f"{quantize_sql(vec_col)} AS v",
+    ).selectExpr(
+        id_col,
+        "_lbl",
+        "v",
+        f"{lsh_bucket_sql('v', planes, dim, seed)} AS bucket",
+        f"{dot_sql('v', 'v')} AS n2",
+        f"'m{next(_MINER_SEQ)}' AS _ptag",  # see _MINER_SEQ
+    ).filter("n2 > 0").persist()
+
+
 def hard_negatives(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -683,53 +711,47 @@ def hard_negatives(
     BEFORE the window, not after), and per-anchor top-k uses the
     cosine_knn tie-break (cosine desc, neighbor id asc — deterministic
     total order). NULL-labeled vectors yield no pairs on either side
-    (NULL != x is NULL), pinned in tests.
+    (NULL != x is NULL), pinned in tests. Zero-norm vectors are dropped
+    (see ``_mining_projection``).
 
     ``max_bucket`` bounds the candidate side per bucket with the same
     deterministic salted-hash retention as the kNN path. One bucket
     equi-join shuffle + one per-anchor window — never a cross product.
-
-    Zero-norm vectors (every component quantizing to 0 — dead or padded
-    embeddings) are dropped up front: they have no direction, so cosine
-    is undefined, and under Spark 4's default ANSI mode the division
-    would raise DIVIDE_BY_ZERO and kill the whole mining job.
     """
-    return _mined_pairs(
-        df, id_col, vec_col, label_col, k, planes, dim, seed, max_bucket,
-        same_label=False, hardest_is_lowest_cosine=False,
+    b = _mining_projection(df, id_col, vec_col, label_col, planes, dim, seed)
+    a = b.alias("a")
+    c = _cap_bucket_candidates(
+        b.withColumnRenamed(id_col, "neighbor_id"), max_bucket
+    ).alias("b")
+    # eqNullSafe is deliberately NOT used: a NULL label must yield no pairs
+    # (an unlabeled vector is no negative of anything) — plain != propagates
+    # NULL to false
+    pairs = a.join(
+        c,
+        (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col(f"a.{id_col}") != F.col("b.neighbor_id"))
+        & (F.col("a._lbl") != F.col("b._lbl")),
+    ).selectExpr(
+        f"a.{id_col} AS query_id",
+        "b.neighbor_id AS neighbor_id",
+        f"({dot_sql('a.v', 'b.v')}) / SQRT(a.n2 * b.n2) AS cosine",
     )
+    from tamer_spark.operators.dedup import _release_on_gc
 
-
-def hard_positives(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    k: int = 3,
-    planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    max_bucket: int | None = 10_000,
-) -> DataFrame:
-    """The other half of contrastive pair construction: per anchor, the
-    ``k`` LEAST-similar SAME-label vectors among its LSH-bucket candidates
-    — the positives a metric-learning loss has to work to pull together
-    (an identical-twin positive teaches nothing).
-
-    Honest contract: true global hard positives (same label, maximally
-    far) cannot come from an LSH bucket join — far pairs rarely share
-    buckets, which is the LSH point. What this mines is the hardest
-    positives WITHIN each anchor's similarity neighborhood (rank by
-    cosine ASC over same-bucket same-label candidates) — the
-    batch-construction form. For a triple miner that genuinely pays ONE
-    candidate join for both sides, use ``contrastive_pairs`` — calling
-    this and hard_negatives separately builds two independent joins.
-    Everything else (zero-norm drop, NULL labels, max_bucket cap,
-    deterministic tie-break — cosine ASC then id) matches hard_negatives.
-    """
-    return _mined_pairs(
-        df, id_col, vec_col, label_col, k, planes, dim, seed, max_bucket,
-        same_label=True, hardest_is_lowest_cosine=True,
+    return _release_on_gc(
+        pairs.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id"
+            " ORDER BY cosine DESC, neighbor_id ASC) AS rank",
+        )
+        .filter(f"rank <= {k}")
+        .selectExpr(
+            "query_id",
+            "neighbor_id",
+            "round(cosine, 6) AS cosine",
+            "CAST(rank AS BIGINT) AS rank",
+        ),
+        b,
     )
 
 
@@ -744,37 +766,29 @@ def contrastive_pairs(
     seed: int = 42,
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
-    """Both halves of the contrastive triple off ONE candidate join — the
-    one-shuffle miner the hard_negatives/hard_positives docstrings point
-    at. A single LSH-bucket self-join produces every (anchor, candidate)
-    pair; each is tagged ``side`` ('neg' when labels differ, 'pos' when
-    they match), and ONE window partitioned by (anchor, side) ranks both
-    tiers at once — the sort key is the cosine sign-flipped per side
-    (negatives hardest-first = cosine DESC, positives hardest-first =
-    cosine ASC), so no second exchange exists anywhere. Per (anchor,
-    side), top-``k`` survive. Semantics per side are identical to the
-    dedicated miners (pinned by an equivalence test).
+    """Both halves of the contrastive triple off ONE candidate join. A
+    single LSH-bucket self-join produces every (anchor, candidate) pair;
+    each is tagged ``side`` ('neg' when labels differ, 'pos' when they
+    match), and ONE window partitioned by (anchor, side) ranks both tiers
+    at once — the sort key is the cosine sign-flipped per side (negatives
+    hardest-first = cosine DESC, positives hardest-first = cosine ASC), so
+    no second exchange exists anywhere. Per (anchor, side), top-``k``
+    survive. The 'neg' rows equal :func:`hard_negatives` (pinned by an
+    equivalence test).
+
+    The 'pos' rows are the ``k`` LEAST-similar SAME-label candidates — the
+    positives a metric-learning loss has to work to pull together (an
+    identical-twin positive teaches nothing). Honest contract: true global
+    hard positives (same label, maximally far) cannot come from an LSH
+    bucket join — far pairs rarely share buckets, which is the LSH point.
+    What this mines is the hardest positives WITHIN each anchor's
+    similarity neighborhood — the batch-construction form. NULL labels,
+    zero-norm vectors, the max_bucket cap and the deterministic tie-break
+    (then neighbor id ASC) behave as in hard_negatives.
 
     Returns (query_id, neighbor_id, side, cosine, rank).
     """
-    b = df.selectExpr(
-        id_col,
-        f"{label_col} AS _lbl",
-        f"{quantize_sql(vec_col)} AS v",
-    ).selectExpr(
-        id_col,
-        "_lbl",
-        "v",
-        f"{lsh_bucket_sql('v', planes, dim, seed)} AS bucket",
-        f"{dot_sql('v', 'v')} AS n2",
-        f"'m{next(_MINER_SEQ)}' AS _ptag",  # see _MINER_SEQ
-    ).filter("n2 > 0").persist()
-    # ^ the bucketed projection feeds BOTH self-join sides; without the
-    # persist Spark computes the quantize + 8-plane LSH HOF chain twice
-    # over the corpus (r14 interleaved A/B at sf0.1, median-of-5:
-    # contrastive_pairs 1.94 s → 1.67, hard_negatives 1.94 → 1.47).
-    # Released when the result plan is dropped (the semdedup pattern);
-    # the 100 TB posture is materializing the bucketed projection once.
+    b = _mining_projection(df, id_col, vec_col, label_col, planes, dim, seed)
     a = b.alias("a")
     c = _cap_bucket_candidates(
         b.withColumnRenamed(id_col, "neighbor_id"), max_bucket
@@ -808,75 +822,6 @@ def contrastive_pairs(
             "query_id",
             "neighbor_id",
             "side",
-            "round(cosine, 6) AS cosine",
-            "CAST(rank AS BIGINT) AS rank",
-        ),
-        b,
-    )
-
-
-def _mined_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    k: int,
-    planes: int,
-    dim: int,
-    seed: int,
-    max_bucket: int | None,
-    same_label: bool,
-    hardest_is_lowest_cosine: bool,
-) -> DataFrame:
-    b = df.selectExpr(
-        id_col,
-        f"{label_col} AS _lbl",
-        f"{quantize_sql(vec_col)} AS v",
-    ).selectExpr(
-        id_col,
-        "_lbl",
-        "v",
-        f"{lsh_bucket_sql('v', planes, dim, seed)} AS bucket",
-        f"{dot_sql('v', 'v')} AS n2",
-        f"'m{next(_MINER_SEQ)}' AS _ptag",  # see _MINER_SEQ
-    ).filter("n2 > 0").persist()
-    # persist: same both-sides projection reuse as contrastive_pairs
-    # (r14 A/B — hard_negatives 1.94 s → 1.47 median-of-5 at sf0.1)
-    a = b.alias("a")
-    c = _cap_bucket_candidates(
-        b.withColumnRenamed(id_col, "neighbor_id"), max_bucket
-    ).alias("b")
-    # eqNullSafe is deliberately NOT used: a NULL label must yield no pairs
-    # in EITHER mode (an unlabeled vector is neither a positive nor a
-    # negative of anything) — plain =/!= propagate NULL to false
-    label_pred = (
-        (F.col("a._lbl") == F.col("b._lbl"))
-        if same_label
-        else (F.col("a._lbl") != F.col("b._lbl"))
-    )
-    pairs = a.join(
-        c,
-        (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") != F.col("b.neighbor_id"))
-        & label_pred,
-    ).selectExpr(
-        f"a.{id_col} AS query_id",
-        "b.neighbor_id AS neighbor_id",
-        f"({dot_sql('a.v', 'b.v')}) / SQRT(a.n2 * b.n2) AS cosine",
-    )
-    order = "ASC" if hardest_is_lowest_cosine else "DESC"
-    from tamer_spark.operators.dedup import _release_on_gc
-
-    return _release_on_gc(
-        pairs.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            f" ORDER BY cosine {order}, neighbor_id ASC) AS rank",
-        )
-        .filter(f"rank <= {k}")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
             "round(cosine, 6) AS cosine",
             "CAST(rank AS BIGINT) AS rank",
         ),

@@ -54,9 +54,9 @@ Scale posture (100 TB):
 - search: corpus-side reconstruction is map-side (one zip_with chain per
   row, computed once before the broadcast-query join), then the same
   per-query window rank as pq_search_adc. The corpus never shuffles.
-- pack_sq_codes / unpack_sq_codes: 8 codes per int64 big-endian-within-word
-  — the literal 1-byte/dim storage form for the inverted file; map-only
-  both ways, round-trip pinned in tests.
+- pack_sq_codes: 8 codes per int64 big-endian-within-word — the literal
+  1-byte/dim storage form for the inverted file; map-only, round-trip
+  pinned in tests.
 
 No analog in the reference engine (tamer has no vector operators); part of
 the training-data-pipeline extension surface.
@@ -68,7 +68,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from tamer_spark.operators.similarity import quantize_sql
 
-__all__ = ["sq_train", "sq_encode", "sq_search", "pack_sq_codes", "unpack_sq_codes"]
+__all__ = ["sq_train", "sq_encode", "sq_search", "pack_sq_codes"]
 
 _LEVELS = 255  # default: codes span [0, 255] — 8 bits/dim (SQ8)
 # levels=15 gives the FAISS SQ4 tier: 4 bits/dim, 8× compression, coarser
@@ -193,10 +193,10 @@ def pack_sq_codes(coded: DataFrame, dim: int, bits: int = 8) -> DataFrame:
     per int64, code ``t`` in slot ``(cpw-1) - (t % cpw)`` of word
     ``t // cpw`` (bits=8 → the SQ8 byte layout; bits=4 → the SQ4 nibble
     layout, 16 codes/word). Map-only; ``dim`` need not be a multiple of the
-    per-word count — the last word zero-pads. The round-trip
-    (unpack_sq_codes) is the contract, NOT sortability: a word whose first
-    code reaches the top slot's high bit packs negative, so SIGNED numeric
-    order of packed words is not dimension-lexicographic — don't
+    per-word count — the last word zero-pads. The round-trip (every code
+    read back from its slot) is the contract, NOT sortability: a word whose
+    first code reaches the top slot's high bit packs negative, so SIGNED
+    numeric order of packed words is not dimension-lexicographic — don't
     range-partition or order an inverted file by raw packed values."""
     if 64 % bits:
         raise ValueError(f"bits={bits} must divide 64")
@@ -215,30 +215,3 @@ def pack_sq_codes(coded: DataFrame, dim: int, bits: int = 8) -> DataFrame:
             word = term if word is None else word.bitwiseOR(term)
         words.append(word.cast("long"))
     return coded.select("vec_id", F.array(*words).alias("packed"))
-
-
-def unpack_sq_codes(packed: DataFrame, dim: int, bits: int = 8) -> DataFrame:
-    """Inverse of pack_sq_codes (same ``bits``): (vec_id, packed) →
-    (vec_id, codes); map-only (one flatten over per-word slot extraction)."""
-    if 64 % bits:
-        raise ValueError(f"bits={bits} must divide 64")
-    cpw = 64 // bits
-    mask = (1 << bits) - 1
-    codes = F.slice(
-        F.flatten(
-            F.transform(
-                F.col("packed"),
-                lambda w: F.array(
-                    *[
-                        F.shiftrightunsigned(w, (cpw - 1 - b) * bits)
-                        .bitwiseAND(F.lit(mask))
-                        .cast("long")
-                        for b in range(cpw)
-                    ]
-                ),
-            )
-        ),
-        1,
-        dim,
-    )
-    return packed.select("vec_id", codes.alias("codes"))

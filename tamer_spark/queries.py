@@ -46,7 +46,6 @@ from tamer_spark.operators.dedup import (
     dedup_exact_normalized,
     minhash_lsh_pairs,
     minhash_signatures,
-    ngram_jaccard_pairs,
 )
 from tamer_spark.operators.similarity import cosine_knn
 
@@ -562,10 +561,6 @@ def _asof_events_orders(spark, sf, direction: str):
 # Standalone builders kept for plan-pin tests / bench series continuity.
 def asof_join_events_orders(spark, sf):
     return _asof_events_orders(spark, sf, "backward")
-
-
-def asof_forward_events_orders_q(spark, sf):
-    return _asof_events_orders(spark, sf, "forward")
 
 
 @q(
@@ -1553,8 +1548,8 @@ def _text_profile_oracle() -> str:
     from tamer_spark.functions.text import SCRIPT_PATTERNS
 
     # script profiling: the SAME literal-char-class patterns drive the Spark
-    # columns (script_count_cols) and this SQL — single derivation, and
-    # codepoint ranges are the Java-regex/RE2 common subset (\\p{{script}}
+    # columns (text_profile's staged counts) and this SQL — single
+    # derivation, and codepoint ranges are the Java-regex/RE2 common subset (\\p{{script}}
     # syntax is NOT). Every doc gets one planted non-Latin snippet
     # (doc_id % 4) so all four non-Latin classes are live on the fixture.
     scr_plant = (
@@ -2317,11 +2312,6 @@ def _jaccard_oracle(threshold_num: int, threshold_den: int) -> str:
     """
 
 
-# Standalone builder kept for plan pins (graded via dedup_ngram_simhash).
-def dedup_ngram_jaccard_q(spark, sf):
-    return ngram_jaccard_pairs(_t(spark, sf, "documents"), n=_N, threshold=1 / 20)
-
-
 def _containment_oracle(threshold_num: int, threshold_den: int) -> str:
     return f"""
     WITH {_pair_stats_ctes()}
@@ -2333,14 +2323,6 @@ def _containment_oracle(threshold_num: int, threshold_den: int) -> str:
       JOIN sizes sb ON doc_b = sb.doc_id
     WHERE inter * {threshold_den} >= {threshold_num} * least(sa.n_sh, sb.n_sh)
     """
-
-
-# Standalone builder kept for plan pins (graded via the merged
-# dedup_ngram_simhash gate's 'containment' variant).
-def dedup_ngram_containment_q(spark, sf):
-    from tamer_spark.operators.dedup import ngram_containment_pairs
-
-    return ngram_containment_pairs(_t(spark, sf, "documents"), n=_N, threshold=1 / 4)
 
 
 def _simhash_oracle(bits: int = 32) -> str:
@@ -3012,15 +2994,6 @@ def hard_negatives_q(spark, sf):
     return hard_negatives(emb, k=3, max_bucket=None)
 
 
-# Standalone builder kept for plan pins / bench (graded via the merged
-# ann_search gate's 'hardpos' variant).
-def hard_positives_q(spark, sf):
-    from tamer_spark.operators.similarity import hard_positives
-
-    emb = _t(spark, sf, "embeddings")
-    return hard_positives(emb, k=3, max_bucket=None)
-
-
 # The gate's mining legs since r12: one call feeds BOTH the 'hardneg' and
 # 'hardpos' variants, so the one-join/one-window production plan is the
 # thing the oracle hashes. Same uncapped-bucket convention as above.
@@ -3093,7 +3066,7 @@ def _hardneg_oracle(planes: int = 8, dim: int = 64, seed: int = 42, k: int = 3) 
     UNION ALL
     SELECT 'rp16', * FROM ({_rp_knn_oracle(out_dim=16, dim=64, seed=42, k=5)})
     """,
-    doc="The SEARCH half of IVFADC as one tagged union — the retrieval operators a user actually calls, each hash-gated against a DuckDB replay of its full train+search pipeline. ivf: probe each query's nprobe=2 nearest coarse centroids (trained by the same integer-exact k-means the assign gate replays), exact quantized-cosine rerank within the probed clusters — the candidate join is a cluster-id equi-join, so with the inverted file bucketed by cluster at 100 TB a probe touches only matching buckets, never the corpus. adc: asymmetric distance computation over PQ codes (Jégou et al. TPAMI 2011) — per query an m×k table of exact integer subvector↔codeword distances is built once on the broadcast query side, and every candidate costs m array lookups, no per-candidate vector math; distances are exact integer sums, so (dist, id) ranking is engine-independent. ivfadc: the COMPOSED serving path (probe → ADC shortlist of 20 → exact rerank of the shortlist only) — the oracle nests both training replays as derived tables and re-derives the shortlist from exact integer ADC sums, so even the three-stage composition is hash-checked end to end. Scores are cosine (ivf, ivfadc) / approx squared-L2 (adc); rank ties break on neighbor id in both engines. hardneg (r11): hard-negative mining for contrastive training (DPR/ANCE) — per anchor the top-3 most-similar DIFFERENT-label vectors, candidates from shared LSH buckets (a bucket-missed negative is a less-hard negative — the LSH contract IS the mining contract), label-mismatch filter riding the join condition, per-anchor window with the cosine_knn tie-break; oracle replays buckets, pairs, and ranks exactly (gate uncapped; the max_bucket skew guard is pinned in pytest). hardpos (r11): the other half of contrastive pair construction — per anchor the top-3 LEAST-similar SAME-label candidates (cosine ASC — an identical-twin positive teaches a metric loss nothing), honestly scoped to the anchor's LSH neighborhood (global far-pairs don't share buckets, which is the LSH point); since r12 BOTH mining variants are produced by operators/similarity.contrastive_pairs — the production triple miner that genuinely pays ONE candidate join for both sides (one (anchor, side) window, sign-flipped sort key) — so the one-join plan is itself oracle-hash-pinned against the per-side DuckDB replays; the standalone miners remain for plan pins/bench, with per-side equivalence to contrastive_pairs pinned in pytest. sq8 (r12): scalar quantization — the third quantization leg (FAISS ScalarQuantizer tier) — per-dimension 256-bin codes from corpus (min,max) ranges (1 byte/dim; pack_sq_codes gives the literal int64-packed form, round-trip pinned in pytest), asymmetric search with a ×255-scale integer reconstruction so every distance is an exact int64 and the (dist, id) rank order cannot drift; train is one partial-aggregable posexplode groupBy(dim) emitting dim rows of driver state (the IVF-centroid contract), encode is map-only (frozen bounds → epoch appends encode without history, clamp binds only then), and search reconstructs map-side before the broadcast-query join — the corpus never shuffles. rp16 (r12): Johnson–Lindenstrauss dimensionality reduction (Achlioptas ±1 signs, derived from sha256 parity — no RNG state, the LSH-hyperplane convention) from 64 to 16 dims, then EXACT cosine kNN in the projected space — the standard pre-step that cuts per-pair arithmetic 4× before any brute-force/LSH/clustering stage; projection is map-only under frozen signs (epoch appends project without history), each projected coordinate an exact integer sum, and the oracle replays matrix, projection, and rounded-cosine ranks from the same derivation.",
+    doc="The SEARCH half of IVFADC as one tagged union — the retrieval operators a user actually calls, each hash-gated against a DuckDB replay of its full train+search pipeline. ivf: probe each query's nprobe=2 nearest coarse centroids (trained by the same integer-exact k-means the assign gate replays), exact quantized-cosine rerank within the probed clusters — the candidate join is a cluster-id equi-join, so with the inverted file bucketed by cluster at 100 TB a probe touches only matching buckets, never the corpus. adc: asymmetric distance computation over PQ codes (Jégou et al. TPAMI 2011) — per query an m×k table of exact integer subvector↔codeword distances is built once on the broadcast query side, and every candidate costs m array lookups, no per-candidate vector math; distances are exact integer sums, so (dist, id) ranking is engine-independent. ivfadc: the COMPOSED serving path (probe → ADC shortlist of 20 → exact rerank of the shortlist only) — the oracle nests both training replays as derived tables and re-derives the shortlist from exact integer ADC sums, so even the three-stage composition is hash-checked end to end. Scores are cosine (ivf, ivfadc) / approx squared-L2 (adc); rank ties break on neighbor id in both engines. hardneg (r11): hard-negative mining for contrastive training (DPR/ANCE) — per anchor the top-3 most-similar DIFFERENT-label vectors, candidates from shared LSH buckets (a bucket-missed negative is a less-hard negative — the LSH contract IS the mining contract), label-mismatch filter riding the join condition, per-anchor window with the cosine_knn tie-break; oracle replays buckets, pairs, and ranks exactly (gate uncapped; the max_bucket skew guard is pinned in pytest). hardpos (r11): the other half of contrastive pair construction — per anchor the top-3 LEAST-similar SAME-label candidates (cosine ASC — an identical-twin positive teaches a metric loss nothing), honestly scoped to the anchor's LSH neighborhood (global far-pairs don't share buckets, which is the LSH point); since r12 BOTH mining variants are produced by operators/similarity.contrastive_pairs — the production triple miner that genuinely pays ONE candidate join for both sides (one (anchor, side) window, sign-flipped sort key) — so the one-join plan is itself oracle-hash-pinned against the per-side DuckDB replays; hard_negatives remains for plan pins/bench, with its equivalence to contrastive_pairs' 'neg' side pinned in pytest. sq8 (r12): scalar quantization — the third quantization leg (FAISS ScalarQuantizer tier) — per-dimension 256-bin codes from corpus (min,max) ranges (1 byte/dim; pack_sq_codes gives the literal int64-packed form, round-trip pinned in pytest), asymmetric search with a ×255-scale integer reconstruction so every distance is an exact int64 and the (dist, id) rank order cannot drift; train is one partial-aggregable posexplode groupBy(dim) emitting dim rows of driver state (the IVF-centroid contract), encode is map-only (frozen bounds → epoch appends encode without history, clamp binds only then), and search reconstructs map-side before the broadcast-query join — the corpus never shuffles. rp16 (r12): Johnson–Lindenstrauss dimensionality reduction (Achlioptas ±1 signs, derived from sha256 parity — no RNG state, the LSH-hyperplane convention) from 64 to 16 dims, then EXACT cosine kNN in the projected space — the standard pre-step that cuts per-pair arithmetic 4× before any brute-force/LSH/clustering stage; projection is map-only under frozen signs (epoch appends project without history), each projected coordinate an exact integer sum, and the oracle replays matrix, projection, and rounded-cosine ranks from the same derivation.",
 )
 def ann_search_q(spark, sf):
     from tamer_spark.operators.pq import ivfadc_search, pq_encode, pq_search_adc, pq_train
@@ -7408,70 +7381,14 @@ def contamination_score_docs_q(spark, sf):
 # ---------------------------------------------------------------------------
 # Standalone shapes for entries merged into tagged-union gates by the r6
 # window re-pack (the driver verifies only the first 50 registry entries).
-# Plan pins, bench series, and scale probes keep targeting the STANDALONE
-# query — the union wrapper would blur what each number/pin measures.
+# bench.py, perfbench and scripts/ resolve the STANDALONE query — the union
+# wrapper would blur what each number measures. STANDALONE holds only the
+# names they resolve (tests/test_public_names.py pins that).
 # ---------------------------------------------------------------------------
 
-# Standalone builders for the r12-continuation families (cold shapes — no
-# persist/memo; bench.py keeps its own hot-path variants where warm-up
-# matters). Kept out of the 50-gate REGISTRY window: each is graded through
-# its host tagged-union gate.
-def sq8_search_docs_q(spark, sf):
-    from tamer_spark.operators.sq import sq_encode, sq_search, sq_train
-
-    emb = _t(spark, sf, "embeddings")
-    bounds = sq_train(emb)
-    return sq_search(
-        sq_encode(emb, bounds), bounds, emb.filter(F.col("vec_id") < 10), topk=5
-    )
-
-
-def cms_sketch_docs_q(spark, sf):
-    from tamer_spark.operators.cms import cms_build
-    from tamer_spark.operators.dedup import normalize_text
-
-    toks = (
-        _t(spark, sf, "documents")
-        .select(F.explode_outer(F.split(normalize_text(F.col("text")), " ")).alias("word"))
-        .filter(F.col("word").isNotNull())
-    )
-    return cms_build(toks, d=4, w=1024, seed=42)
-
-
-def rp_project_embeddings_q(spark, sf):
-    from tamer_spark.operators.rp import random_projection, rp_signs
-
-    return random_projection(_t(spark, sf, "embeddings"), rp_signs(16, 64, 42))
-
-
-def event_anomaly_daily_q(spark, sf):
-    from tamer_spark.operators.anomaly import daily_counts, mad_anomalies
-
-    return mad_anomalies(daily_counts(_t(spark, sf, "events")), keys=("k",), value_col="n")
-
-
-def template_dedup_docs_q(spark, sf):
-    from tamer_spark.operators.dedup import template_dedup_counts
-
-    d = _t(spark, sf, "documents").select("doc_id", _derived_template_col().alias("ttext"))
-    return template_dedup_counts(d, text_col="ttext")
-
-
-def drift_langs_q(spark, sf):
-    from tamer_spark.operators.drift import category_drift
-
-    d = _t(spark, sf, "documents")
-    return category_drift(
-        d.filter(F.col("doc_id") % 2 == 0), d.filter(F.col("doc_id") % 2 == 1), ("lang",)
-    )
-
-
-def transition_counts_events_q(spark, sf):
-    from tamer_spark.operators.events import transition_counts
-
-    return transition_counts(_t(spark, sf, "events"))
-
-
+# Standalone builder for an r12-continuation family (a cold shape — no
+# persist/memo). Kept out of the 50-gate REGISTRY window: it is graded
+# through its host tagged-union gate.
 def vocab_growth_docs_q(spark, sf):
     from tamer_spark.operators.drift import vocab_growth
 
@@ -7483,20 +7400,13 @@ def vocab_growth_docs_q(spark, sf):
     return vocab_growth(db, "vb", n_window=64)
 
 
-
 STANDALONE: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "join_semi_active_customers": join_semi_active_customers,
-    "join_anti_inactive_customers": join_anti_inactive_customers,
     "asof_join_events_orders": asof_join_events_orders,
-    "asof_forward_events_orders": asof_forward_events_orders_q,
     "window_topk_quartile": window_topk_quartile,
-    "window_frames_events": window_frames_events,
     "similarity_knn": similarity_knn_q,
     "similarity_knn_lsh": similarity_knn_lsh_q,
     "minhash_signatures": minhash_signatures_q,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard_q,
     "dedup_simhash": dedup_simhash_q,
-    "ngram_top_terms": ngram_top_terms,
     "tfidf_top_terms": tfidf_top_terms,
     "c4_clean_docs": c4_clean_docs_q,
     "scrub_pii_docs": scrub_pii_docs_q,
@@ -7508,47 +7418,20 @@ STANDALONE: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "fix_encoding_docs": fix_encoding_docs_q,
     "seeded_shuffle_docs": seeded_shuffle_docs_q,
     "hard_negatives": hard_negatives_q,
-    "hard_positives": hard_positives_q,
     "contrastive_pairs": contrastive_pairs_q,
-    "doc_split_sample": doc_split_sample_q,
-    "pivot_status_by_priority": pivot_status_by_priority,
-    "agg_ordered_string_concat": agg_ordered_string_concat,
     "bm25_topk_docs": bm25_topk_docs_q,
     "hybrid_retrieval_rrf": hybrid_retrieval_rrf_q,
-    "stratified_mix_sources": stratified_mix_sources_q,
     "pack_sequences": pack_sequences_q,
     "dsir_select_docs": dsir_select_docs_q,
-    "decontaminate_against_benchmark": decontaminate_against_benchmark,
-    "decontaminate_bloom_prefilter": decontaminate_bloom_prefilter_q,
-    "decontaminate_substrings": decontaminate_substrings_q,
-    "exact_percentiles_orders": exact_percentiles_orders_q,
     "funnel_view_click_purchase": funnel_view_click_purchase_q,
     "cohort_retention_weekly": cohort_retention_weekly_q,
-    "winnow_fingerprints_docs": winnow_fingerprints_docs_q,
     "winnow_overlap_pairs_docs": winnow_overlap_pairs_docs_q,
-    "quality_odds_score": quality_odds_score_q,
     "temperature_mix_langs": temperature_mix_langs_q,
-    "corpus_datasheet": corpus_datasheet_q,
     "budget_cap_sources": budget_cap_sources_q,
-    "data_quality_checks": data_quality_checks,
-    "scd2_current_view": scd2_current_view_q,
-    "rollup_merge_on_read": rollup_merge_on_read_q,
-    "sq8_search": sq8_search_docs_q,
-    "cms_sketch_docs": cms_sketch_docs_q,
-    "rp_project_embeddings": rp_project_embeddings_q,
-    "event_anomaly_daily": event_anomaly_daily_q,
-    "pmi_top_bigrams": pmi_top_bigrams,
-    "template_dedup_docs": template_dedup_docs_q,
-    "drift_langs": drift_langs_q,
-    "transition_counts_events": transition_counts_events_q,
     "skipgram_top_pairs": skipgram_top_pairs,
-    "dedup_ngram_containment": dedup_ngram_containment_q,
     "heavy_hitters_docs": heavy_hitters_docs_q,
     "global_percentiles_orders": global_percentiles_orders_q,
-    "compaction_plan_orders": compaction_plan_orders_q,
-    "compaction_split_orders": compaction_split_orders_q,
     "grouped_percentiles_orders": grouped_percentiles_orders_q,
-    "domain_cap_docs": domain_cap_docs_q,
     "vocab_growth_docs": vocab_growth_docs_q,
 }
 

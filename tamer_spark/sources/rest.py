@@ -197,12 +197,12 @@ def fetch_with_auth_retry(
             time.sleep(delay)
         try:
             status, body = http_get(url, auth, timeout)
+            if status in (401, 403, 404):
+                auth.refresh()
+                status, body = http_get(url, auth, timeout)
         except OSError as e:  # connection-level failure → retry
             last_err = e
             continue
-        if status in (401, 403, 404):
-            auth.refresh()
-            status, body = http_get(url, auth, timeout)
         if status >= 500:  # server-side transient → retry
             last_err = TamerError(f"GET {url} failed with HTTP {status}")
             continue

@@ -1,5 +1,4 @@
 from tamer_spark.streaming.readers import (
-    run_available_now,
     run_available_now_memory,
     stream_parquet,
     windowed_agg,
@@ -8,6 +7,5 @@ from tamer_spark.streaming.readers import (
 __all__ = [
     "stream_parquet",
     "windowed_agg",
-    "run_available_now",
     "run_available_now_memory",
 ]

@@ -10,10 +10,9 @@ exists, then stop" mode the engine loop uses for backfills.
 
 This module holds the one copy of each streaming rule — file readers,
 event-time windows (tumbling, hopping and session, one ``windowed_agg``),
-bounded-state dedup and the three AvailableNow drains
-(file sink, foreachBatch, memory table). The graded gates
-``streaming_window_aggs`` and ``streaming_row_gates`` (queries.py) build
-and drain their streams through it.
+bounded-state dedup and the AvailableNow drain into a memory table. The
+graded gates ``streaming_window_aggs`` and ``streaming_row_gates``
+(queries.py) build and drain their streams through it.
 
 Scale notes: ``maxFilesPerTrigger`` bounds per-micro-batch work (the
 ``bufferSize`` backpressure analog, config.scala:104); watermark delay
@@ -94,55 +93,6 @@ def stream_dedup_exact(
     return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
 
 
-def run_available_now(
-    stream_df: DataFrame,
-    sink_path: str,
-    checkpoint_dir: str,
-    fmt: str = "parquet",
-    output_mode: str = "append",
-) -> None:
-    """Drain all currently-available input, then stop (backfill mode).
-
-    The checkpoint dir carries offsets across runs: a second invocation
-    processes only newly-arrived files — the engine-loop resume contract,
-    provided by Structured Streaming itself.
-    """
-    q = (
-        stream_df.writeStream.format(fmt)
-        .option("path", sink_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_available_now_foreach_batch(
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    batch_fn,
-    output_mode: str = "update",
-) -> None:
-    """availableNow drain through foreachBatch — for sinks that need custom
-    epoch-idempotent writes (the engine's Sink contract).
-
-    Default ``update`` mode: with a watermark + aggregation, ``append`` only
-    emits windows the watermark has finalized — the trailing windows of a
-    drained backlog would be withheld until a later run. Update emits every
-    changed window each epoch; idempotent sinks upsert by window key.
-    """
-    q = (
-        stream_df.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-
 _MEMORY_SEQ = itertools.count()
 
 
@@ -151,8 +101,8 @@ def run_available_now_memory(stream_df: DataFrame, output_mode: str) -> DataFram
     return that table as a static frame.
 
     No checkpoint: each call drains from the start, so this is for gates and
-    tests that compare a stream with its batch run; restartable drains use
-    ``run_available_now`` or ``run_available_now_foreach_batch``.
+    tests that compare a stream with its batch run; a restartable drain
+    gives ``writeStream`` a ``checkpointLocation``.
     """
     name = f"available_now_{next(_MEMORY_SEQ)}"
     q = (

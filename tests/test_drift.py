@@ -77,72 +77,6 @@ def test_drift_counts_before_join_plan_shape(spark):
     assert shape.count("BroadcastNestedLoopJoin", "BroadcastExchange"), shape
 
 
-# ---------------------------------------------------------------------------
-# embedding_drift (r12 continuation): the vector-column sibling
-# ---------------------------------------------------------------------------
-
-def _vecs(spark, rows):
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_embedding_drift_identical_epochs_zero(spark):
-    from tamer_spark.operators.drift import embedding_drift
-
-    a = _vecs(spark, [(1, [0.1, 0.2]), (2, [0.3, -0.4])])
-    r = embedding_drift(a, a).collect()[0]
-    assert r.centroid_dist_sq == 0 and r.msn_a == r.msn_b and r.n_a == r.n_b == 2
-
-
-def test_embedding_drift_constant_shift_measured_exactly(spark):
-    """Shift every vector of epoch B by +0.1 on dim 0 (quantized +100):
-    centroid_dist_sq must be exactly 100² (floor-div means shift by exactly
-    the constant when every member shifts by it)."""
-    from tamer_spark.operators.drift import embedding_drift
-
-    base = [(i, [0.001 * i, 0.2]) for i in range(10)]
-    shifted = [(i, [0.001 * i + 0.1, 0.2]) for i in range(10)]
-    r = embedding_drift(_vecs(spark, base), _vecs(spark, shifted)).collect()[0]
-    assert r.centroid_dist_sq == 100 * 100
-
-
-def test_embedding_drift_norm_rescale_detected_with_stable_centroid(spark):
-    """A symmetric rescale (new encoder checkpoint doubling norms) moves
-    msn ~4× while the centroid of a sign-balanced corpus stays ~put —
-    the second detector earning its column."""
-    from tamer_spark.operators.drift import embedding_drift
-
-    a = _vecs(spark, [(1, [0.2, -0.3]), (2, [-0.2, 0.3])])
-    b = _vecs(spark, [(1, [0.4, -0.6]), (2, [-0.4, 0.6])])
-    r = embedding_drift(a, b).collect()[0]
-    assert r.msn_b == 4 * r.msn_a
-    assert r.centroid_dist_sq == 0  # balanced corpus: centroid unmoved
-
-
-def test_embedding_drift_matches_driver_recompute_on_fixture(spark):
-    from tests.conftest import SF_DIR
-
-    from tamer_spark.operators.drift import embedding_drift
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    a = emb.filter("vec_id % 2 = 0")
-    b = emb.filter("vec_id % 2 = 1")
-    r = embedding_drift(a, b).collect()[0]
-
-    def stats(rows):
-        vecs = [[round(x * 1000) for x in row.embedding] for row in rows]
-        n = len(vecs)
-        dim = len(vecs[0])
-        means = [sum(v[t] for v in vecs) // n for t in range(dim)]
-        msn = sum(sum(x * x for x in v) for v in vecs) // n
-        return means, msn, n
-
-    ma, msna, na = stats(a.collect())
-    mb, msnb, nb = stats(b.collect())
-    assert (r.n_a, r.n_b) == (na, nb)
-    assert r.msn_a == msna and r.msn_b == msnb
-    assert r.centroid_dist_sq == sum((x - y) ** 2 for x, y in zip(ma, mb))
-
-
 # -------------------------------------- numeric drift / mergeable histograms
 
 
@@ -154,7 +88,7 @@ def test_value_histogram_grid_clamp_and_merge(spark):
     h = {r.bucket: r.cnt for r in value_histogram(df, "val", 0, 10, 4).collect()}
     # -9 clamps to 0; 0,1 → 0; 63,64,500 clamp to 3; NULL dropped
     assert h == {0: 3, 3: 3}
-    # mergeability: per-half histograms fold to the union's (cms_merge law).
+    # mergeability: per-half histograms fold to the union's (the CMS linearity law).
     # Deterministic predicate split — limit() without order is not
     # guaranteed to pick the same rows in two independent plans.
     from pyspark.sql import functions as SF

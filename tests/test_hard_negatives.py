@@ -1,7 +1,8 @@
 """Hard-negative mining (operators/similarity.hard_negatives) — per-anchor
 top-k most-similar different-label vectors from shared LSH buckets, the
-contrastive-training data-prep stage. Pins label semantics (incl. NULL),
-ranking/tie-break, the bucket-cap skew guard, and the plan posture."""
+contrastive-training data-prep stage — and contrastive_pairs, which mines
+both sides off one join. Pins label semantics (incl. NULL), ranking/
+tie-break, the bucket-cap skew guard, and the plan posture."""
 
 from __future__ import annotations
 
@@ -114,42 +115,49 @@ def test_zero_norm_vectors_dropped_not_crashing(spark):
     assert ids == {3, 4}  # zero vectors neither anchor nor negative
 
 
+def _pos_rows(df, k):
+    from tamer_spark.operators.similarity import contrastive_pairs
+
+    return {(r.query_id, r.neighbor_id, r.cosine, r.rank)
+            for r in contrastive_pairs(df, k=k, dim=8).collect() if r.side == "pos"}
+
+
 def test_hard_positives_rank_least_similar_same_label_first(spark):
+    """contrastive_pairs' 'pos' rows: per anchor, the LEAST-similar
+    same-label candidates first (an identical-twin positive teaches a
+    metric loss nothing)."""
     # same bucket (verified family — see test_hardest_negative_ranks_first):
     # base, near (cos ~0.995), far (cos ~0.894), all label 0, plus a
     # different-label decoy that must never appear as a positive
     base = [1.0] + [0.0] * 7
     near = [1.0, 0.1] + [0.0] * 6
     far = [1.0, 0.5] + [0.0] * 6
-    from tamer_spark.operators.similarity import hard_positives
-
     df = _emb(spark, [(1, base, 0), (2, near, 0), (3, far, 0), (4, near, 1)])
-    out = {(r.query_id, r.rank): r.neighbor_id for r in hard_positives(df, k=2, dim=8).collect()}
     # hardest positive first = LOWEST cosine: far before near
-    assert out[(1, 1)] == 3 and out[(1, 2)] == 2
-    assert 4 not in {v for v in out.values()}
+    assert _pos_rows(df, k=2) == {
+        (1, 3, 0.894427, 1), (1, 2, 0.995037, 2),
+        (2, 3, 0.934488, 1), (2, 1, 0.995037, 2),
+        (3, 1, 0.894427, 1), (3, 2, 0.934488, 2),
+    }
 
 
 def test_hard_positives_share_negative_miners_contracts(spark):
-    # NULL labels and zero-norm vectors excluded exactly like hard_negatives
-    from tamer_spark.operators.similarity import hard_positives
+    """NULL labels and zero-norm vectors are excluded from the 'pos' side
+    exactly like hard_negatives excludes them."""
+    from tamer_spark.operators.similarity import contrastive_pairs
 
     v = [1.0] * 8
     z = [0.0] * 8
     df = _emb(spark, [(1, v, 0), (2, v, 0), (3, v, None), (4, z, 0)])
-    out = hard_positives(df, k=5, dim=8).collect()
-    ids = {r.query_id for r in out} | {r.neighbor_id for r in out}
-    assert ids == {1, 2}
+    out = sorted(tuple(r) for r in contrastive_pairs(df, k=5, dim=8).collect())
+    assert out == [(1, 2, "pos", 1.0, 1), (2, 1, "pos", 1.0, 1)]
 
 
-def test_contrastive_pairs_equals_both_standalone_miners(spark):
-    """The one-join triple miner is semantically identical to running the
-    two dedicated miners — per side, same pairs, same cosines, same
-    ranks (review follow-up: the one-shuffle claim now names a real API)."""
-    from tamer_spark.operators.similarity import (
-        contrastive_pairs,
-        hard_positives,
-    )
+def test_contrastive_pairs_neg_side_equals_hard_negatives(spark):
+    """The one-join triple miner's 'neg' side is hard_negatives — same
+    pairs, same cosines, same ranks — and its 'pos' side ranks the
+    same-label candidates of both labels ASC, pinned as literal rows."""
+    from tamer_spark.operators.similarity import contrastive_pairs
 
     base = [1.0] + [0.0] * 7
     near = [1.0, 0.1] + [0.0] * 6
@@ -157,19 +165,21 @@ def test_contrastive_pairs_equals_both_standalone_miners(spark):
     df = _emb(spark, [
         (1, base, 0), (2, near, 0), (3, far, 0),
         (4, near, 1), (5, far, 1), (6, base, 1),
-        (7, [0.0] * 8, 0),  # zero-norm: dropped by all three
+        (7, [0.0] * 8, 0),  # zero-norm: dropped on both sides
     ])
-    both = contrastive_pairs(df, k=2, dim=8)
     neg = {(r.query_id, r.neighbor_id, r.cosine, r.rank)
            for r in hard_negatives(df, k=2, dim=8).collect()}
-    pos = {(r.query_id, r.neighbor_id, r.cosine, r.rank)
-           for r in hard_positives(df, k=2, dim=8).collect()}
     got_neg = {(r.query_id, r.neighbor_id, r.cosine, r.rank)
-               for r in both.collect() if r.side == "neg"}
-    got_pos = {(r.query_id, r.neighbor_id, r.cosine, r.rank)
-               for r in both.collect() if r.side == "pos"}
-    assert got_neg == neg and got_pos == pos
-    assert neg and pos  # both tiers live
+               for r in contrastive_pairs(df, k=2, dim=8).collect() if r.side == "neg"}
+    assert neg and got_neg == neg
+    assert _pos_rows(df, k=2) == {
+        (1, 3, 0.894427, 1), (1, 2, 0.995037, 2),
+        (2, 3, 0.934488, 1), (2, 1, 0.995037, 2),
+        (3, 1, 0.894427, 1), (3, 2, 0.934488, 2),
+        (4, 5, 0.934488, 1), (4, 6, 0.995037, 2),
+        (5, 6, 0.894427, 1), (5, 4, 0.934488, 2),
+        (6, 5, 0.894427, 1), (6, 4, 0.995037, 2),
+    }
 
 
 def test_contrastive_pairs_single_window(spark):

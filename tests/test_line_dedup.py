@@ -318,88 +318,6 @@ def test_frozen_set_epoch_loop_and_idempotence(spark):
     assert s1b[201].text_clean == "x"
 
 
-def test_map_only_strip_equals_frozen_join_mode(spark):
-    """strip_boilerplate_map_only == dedup_lines_across_docs(frozen) on a
-    corpus with every boundary case (dups, all-boilerplate, line-less,
-    NULL text, trim) — and its plan has ZERO shuffle exchanges: the
-    one-row collect_set aggregate is broadcast, the per-doc filter is an
-    array HOF. This is the streaming/steady-state shape."""
-    from tamer_spark.operators.dedup import strip_boilerplate_map_only
-    from tamer_spark.plans import explain_str, plan_shape
-
-    rows = [
-        (1, "COOKIE BANNER\nreal content one\nfooter"),
-        (2, "COOKIE BANNER\nreal content two\nfooter"),
-        (3, "COOKIE BANNER\nCOOKIE BANNER"),
-        (4, ""),
-        (5, None),
-        (6, "  footer  \nsolo"),
-    ]
-    df = _docs(spark, rows)
-    bp = boilerplate_lines(df, 2)
-    join_mode = {tuple(r) for r in dedup_lines_across_docs(df, boilerplate=bp).collect()}
-    # materialize the set first, as production does (it is a PERSISTED
-    # snapshot) — otherwise the probe plan inherits the build's shuffles
-    bp_frozen = spark.createDataFrame(bp.collect(), bp.schema)
-    map_mode_df = strip_boilerplate_map_only(df, bp_frozen)
-    # the explain-string pin below runs BEFORE collect: an executed AQE
-    # plan explains as final+initial and would double-count
-    shape = plan_shape(map_mode_df)
-    # the batch side never shuffles: the only exchange left is the frozen
-    # set's own one-row collect_set agg (tiny), broadcast to the probe
-    assert shape.shuffles <= 1, shape  # the set's tiny agg only
-    # probe never regroups
-    assert not [p for p in shape.hash_keys if p.startswith("hashpartitioning(doc_id")], shape
-    # the O(|set|)-per-line probe runs ONCE: the filtered array is staged
-    # through a Generate barrier (lambdas are excluded from subexpression
-    # elimination — a CollapseProject regression would inline the filter
-    # into BOTH text_clean and n_dropped, doubling the hot-path cost)
-    simple = explain_str(map_mode_df, mode="simple")
-    assert simple.count("array_contains") == 1, simple
-    assert {tuple(r) for r in map_mode_df.collect()} == join_mode
-
-
-def test_map_only_strip_is_per_row_on_duplicate_ids(spark):
-    """Documented divergence outside the unique-doc_id ingest contract:
-    the map-only form is strictly per-ROW (streaming has no groupBy), so a
-    duplicated doc_id yields one output row per input row — the join mode
-    would merge them. Pinned so the docstring's caveat stays true."""
-    from tamer_spark.operators.dedup import strip_boilerplate_map_only
-
-    df = _docs(spark, [(1, "bp\nb"), (1, "bp\nc")])
-    bp = spark.createDataFrame([("h", "bp", 2)], "h string, line string, doc_freq long")
-    out = sorted(tuple(r) for r in strip_boilerplate_map_only(df, bp).collect())
-    assert out == [(1, "b", 2, 1), (1, "c", 2, 1)]
-
-
-def test_map_only_strip_streams_append_mode(spark, tmp_path):
-    """The zero-shuffle form composes into the append-mode streaming
-    cleaning tier (the 100 TB ingest posture: strip template chrome as
-    data lands): a streamed run over the same files equals the batch run,
-    no watermark, no state store."""
-    from tamer_spark.operators.dedup import strip_boilerplate_map_only
-    from tamer_spark.streaming import run_available_now_memory, stream_parquet
-
-    src = tmp_path / "docs"
-    rows = [
-        (1, "cookie banner\ncontent one"),
-        (2, "cookie banner\ncontent two"),
-        (3, "cookie banner\ncookie banner"),
-        (4, "solo content"),
-    ]
-    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(str(src))
-    static = spark.read.parquet(str(src))
-    bp = boilerplate_lines(static, 3)
-
-    batch = {tuple(r) for r in strip_boilerplate_map_only(static, bp).collect()}
-
-    stream = stream_parquet(spark, str(src), "doc_id long, text string")
-    drained = run_available_now_memory(strip_boilerplate_map_only(stream, bp), "append")
-    streamed = {tuple(r) for r in drained.collect()}
-    assert streamed == batch
-    assert {t[1] for t in streamed} == {"content one", "content two", "", "solo content"}
-
-
 def test_frozen_mode_plan_is_broadcast_probe(spark):
     from tamer_spark.plans import plan_shape
 

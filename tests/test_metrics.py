@@ -65,6 +65,29 @@ def test_fetch_retries_5xx(tmp_path):
     srv.shutdown()
 
 
+def test_fetch_retries_a_connection_error_after_an_auth_refresh(monkeypatch):
+    """The re-request after a 401 refresh goes through the same retry
+    policy: 401, then a connection error, then 200 returns the body."""
+    from tamer_spark.sources import rest
+
+    replies = iter([(401, "denied"), OSError("connection reset"), (200, "ok")])
+    refreshes = []
+
+    def http_get(url, auth, timeout):
+        reply = next(replies)
+        if isinstance(reply, Exception):
+            raise reply
+        return reply
+
+    class Auth(Authentication):
+        def refresh(self):
+            refreshes.append(1)
+
+    monkeypatch.setattr(rest, "http_get", http_get)
+    assert fetch_with_auth_retry("http://x/p", Auth(), retries=3, backoff_base_s=0.0) == "ok"
+    assert refreshes == [1]
+
+
 def test_fetch_4xx_fails_fast(tmp_path):
     import threading
     from http.server import BaseHTTPRequestHandler, HTTPServer

@@ -12,7 +12,9 @@ from tests.conftest import SF_DIR, CacheWatch
 
 # The r6 registry re-pack merged same-topic gates into tagged unions to fit
 # the driver's 50-row correctness window; plan pins still target the
-# STANDALONE query shapes (queries.STANDALONE), not the union wrappers.
+# standalone query shapes, not the union wrappers: the builder
+# ``resolve_query`` serves, or the queries.py builder called directly where
+# no bench or probe resolves the name.
 _spark_fn = Q.resolve_query
 
 
@@ -272,7 +274,7 @@ def test_knn_lsh_bucket_cap_reuses_bucket_exchange(spark):
 
 
 def test_decontaminate_broadcasts_benchmark_side(spark):
-    df = _spark_fn("decontaminate_against_benchmark")(spark, SF_DIR)
+    df = Q.decontaminate_against_benchmark(spark, SF_DIR)
     shape = plan_shape(df)
     # the benchmark shingle set is the small side: must broadcast, and the
     # final anti join must also be broadcast (tainted ids are few)
@@ -305,18 +307,29 @@ def test_no_hash_expression_blowup_across_text_gates(spark):
     broken signatures gate carried 97). Guards the whole family against the
     three documented Catalyst traps (CollapseProject re-inlining, O(words²)
     element_at, Generate filter pushdown) in one sweep."""
-    for name in [
-        "dedup_exact",
-        "minhash_signatures",
-        "dedup_simhash",
-        "text_profile",
-        "dedup_ngram_jaccard",
-        "quality_filter_docs",
-        "ngram_top_terms",
-        "tfidf_top_terms",
-        "decontaminate_against_benchmark",
-    ]:
-        plan = _spark_fn(name)(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+    from tamer_spark.operators.dedup import ngram_jaccard_pairs
+
+    def jaccard(spark, sf):
+        return ngram_jaccard_pairs(Q._t(spark, sf, "documents"), n=Q._N, threshold=1 / 20)
+
+    builders = {
+        name: _spark_fn(name)
+        for name in [
+            "dedup_exact",
+            "minhash_signatures",
+            "dedup_simhash",
+            "text_profile",
+            "quality_filter_docs",
+            "tfidf_top_terms",
+        ]
+    }
+    builders.update(
+        ngram_jaccard_pairs=jaccard,
+        ngram_top_terms=Q.ngram_top_terms,
+        decontaminate_against_benchmark=Q.decontaminate_against_benchmark,
+    )
+    for name, build in builders.items():
+        plan = build(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
         assert plan.count("md5") <= 8, f"{name}: md5 x{plan.count('md5')} — staged hashing re-inlined"
 
 
@@ -408,7 +421,7 @@ def test_compaction_plan_single_manifest_window(spark):
     # r13 compact leg: ONE partial-agg shuffle synthesizes the file manifest
     # and ONE window exchange assigns bins — the manifest (file-count rows)
     # is the only thing that ever moves; no join, no extra exchange
-    df = _spark_fn("compaction_plan_orders")(spark, SF_DIR)
+    df = Q.compaction_plan_orders_q(spark, SF_DIR)
     plan = explain_str(df)
     assert plan_shape(df).shuffles <= 2, plan
     assert "partial" in plan.lower(), plan  # manifest agg combines map-side
@@ -421,7 +434,7 @@ def test_compaction_split_plan_reuses_partition_exchange(spark):
     # (part_year, bin) split-count window is satisfied by the part_year
     # clustering, so the split rule adds zero shuffles; no join, and never
     # a SinglePartition global sort
-    df = _spark_fn("compaction_split_orders")(spark, SF_DIR)
+    df = Q.compaction_split_orders_q(spark, SF_DIR)
     plan = explain_str(df)
     assert plan_shape(df).shuffles <= 3, plan
     assert "Join" not in plan, plan

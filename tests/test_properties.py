@@ -135,15 +135,22 @@ def test_containment_vs_jaccard_asymmetry(spark):
     """Containment catches the quote-inclusion case Jaccard misses: a short
     doc embedded whole in a long one has containment 1.0 but tiny Jaccard;
     and containment == Jaccard on identical docs."""
-    from tamer_spark.operators.dedup import ngram_containment_pairs, ngram_jaccard_pairs
+    from tamer_spark.operators.dedup import containment_measure, ngram_jaccard_pairs, shingle_pair_stats
+
+    def containment(d, threshold):
+        """The gate's containment leg: shared pair stats + the measure."""
+        stats, exploded = shingle_pair_stats(d)
+        try:
+            return {(r.doc_a, r.doc_b): r.containment for r in containment_measure(stats, threshold).collect()}
+        finally:
+            exploded.unpersist()
 
     short = "alpha beta gamma delta epsilon"
     long = short + " " + " ".join(f"w{i} x{i} y{i}" for i in range(40))
     df = spark.createDataFrame(
         [(1, short), (2, long), (3, short)], "doc_id long, text string"
     )
-    cont = {(r.doc_a, r.doc_b): r.containment
-            for r in ngram_containment_pairs(df, threshold=0.9).collect()}
+    cont = containment(df, 0.9)
     # the short doc is fully inside the long one -> containment 1.0 both for
     # the (1,2) embed pair and the (1,3) identical pair
     assert cont[(1, 2)] == 1.0 and cont[(1, 3)] == 1.0
@@ -155,4 +162,4 @@ def test_containment_vs_jaccard_asymmetry(spark):
         [(1, "a b c d e f"), (2, "a b c d zz qq rr ss tt uu vv ww")],
         "doc_id long, text string",
     )
-    assert ngram_containment_pairs(half, threshold=0.9).collect() == []
+    assert containment(half, 0.9) == {}

@@ -1,20 +1,18 @@
-"""Unicode-script profiling (functions/text.py script_count_cols /
+"""Unicode-script profiling (functions/text.py SCRIPT_PATTERNS /
 dominant_script_sql) — the multilingual routing signal."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from tamer_spark.functions.text import (
-    SCRIPT_PATTERNS,
-    dominant_script_sql,
-    script_count_cols,
-)
+from tamer_spark.functions.text import SCRIPT_PATTERNS, dominant_script_sql
 
 
 def _profile(spark, text):
+    """The text_profile gate's staged counts: one ``regexp_count`` per
+    SCRIPT_PATTERNS entry, then dominant_script_sql over them."""
     df = spark.createDataFrame([(text,)], "text string")
-    counts = df.select(*script_count_cols(F.col("text")))
+    counts = df.selectExpr(
+        *[f"CAST(regexp_count(text, '{pat}') AS BIGINT) AS n_{name}" for name, pat in sorted(SCRIPT_PATTERNS.items())]
+    )
     return counts.selectExpr("*", f"{dominant_script_sql()} AS script_pred").collect()[0]
 
 

@@ -10,7 +10,6 @@ from tamer_spark.operators.sq import (
     sq_encode,
     sq_search,
     sq_train,
-    unpack_sq_codes,
 )
 from tamer_spark.plans import plan_shape
 from tests.conftest import SF_DIR
@@ -155,20 +154,21 @@ def test_sq_recall_vs_exact_l2(spark):
     assert hits / 50 >= 0.9
 
 
+def _unpack(words, dim: int, bits: int = 8) -> list[int]:
+    """pack_sq_codes' layout read back on the driver: code ``t`` sits in
+    slot ``(cpw-1) - (t % cpw)`` of word ``t // cpw``."""
+    cpw, mask = 64 // bits, (1 << bits) - 1
+    return [(words[t // cpw] >> ((cpw - 1 - t % cpw) * bits)) & mask for t in range(dim)]
+
+
 def test_sq_pack_roundtrip_including_ragged_dim(spark):
     """pack → unpack is the identity, for dim % 8 == 0 (the fixture's 64)
     AND a ragged dim (5) where the last word zero-pads."""
     emb = _emb(spark)
     bounds = sq_train(emb)
     coded = sq_encode(emb, bounds)
-    u = unpack_sq_codes(pack_sq_codes(coded, 64), 64)
-    mismatches = (
-        u.alias("u")
-        .join(coded.alias("c"), "vec_id")
-        .filter(F.col("u.codes") != F.col("c.codes"))
-        .count()
-    )
-    assert mismatches == 0
+    packed = {r.vec_id: _unpack(r.packed, 64) for r in pack_sq_codes(coded, 64).collect()}
+    assert packed == {r.vec_id: list(r.codes) for r in coded.collect()}
     ragged = spark.createDataFrame(
         [(0, [0, 255, 7, 128, 1]), (1, [255, 0, 0, 0, 254])],
         "vec_id long, codes array<long>",
@@ -176,7 +176,7 @@ def test_sq_pack_roundtrip_including_ragged_dim(spark):
     packed = pack_sq_codes(ragged, 5)
     prow = {r.vec_id: list(r.packed) for r in packed.collect()}
     assert all(len(p) == 1 for p in prow.values())  # 5 codes fit one word
-    back = {r.vec_id: list(r.codes) for r in unpack_sq_codes(packed, 5).collect()}
+    back = {v: _unpack(p, 5) for v, p in prow.items()}
     assert back == {0: [0, 255, 7, 128, 1], 1: [255, 0, 0, 0, 254]}
 
 
@@ -244,11 +244,5 @@ def test_sq4_nibble_pack_roundtrip(spark):
     coded = sq_encode(emb, bounds, levels=15)
     packed = pack_sq_codes(coded, 64, bits=4)
     assert all(len(r.packed) == 4 for r in packed.limit(5).collect())
-    back = unpack_sq_codes(packed, 64, bits=4)
-    mismatches = (
-        back.alias("u")
-        .join(coded.alias("c"), "vec_id")
-        .filter(F.col("u.codes") != F.col("c.codes"))
-        .count()
-    )
-    assert mismatches == 0
+    back = {r.vec_id: _unpack(r.packed, 64, bits=4) for r in packed.collect()}
+    assert back == {r.vec_id: list(r.codes) for r in coded.collect()}

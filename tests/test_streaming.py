@@ -10,14 +10,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from tamer_spark import queries as Q
-from tamer_spark.streaming import (
-    run_available_now,
-    run_available_now_memory,
-    stream_parquet,
-    windowed_agg,
-)
-from tamer_spark.streaming.readers import run_available_now_foreach_batch
+from tamer_spark.streaming import run_available_now_memory, stream_parquet, windowed_agg
 from tests.conftest import SF_DIR
+
+
+def _drain(stream_df, checkpoint_dir, batch_fn=None, path=None, output_mode="append"):
+    """Drain what exists (``Trigger.AvailableNow``), then stop, into
+    ``batch_fn`` (foreachBatch) or a parquet dir at ``path``. The checkpoint
+    dir carries the offsets, so a second drain reads only new files."""
+    w = stream_df.writeStream.option("checkpointLocation", checkpoint_dir).outputMode(output_mode)
+    w = w.foreachBatch(batch_fn) if batch_fn else w.format("parquet").option("path", path)
+    w.trigger(availableNow=True).start().awaitTermination()
 
 
 def test_file_stream_exactly_once_across_restarts(spark, tmp_path):
@@ -27,13 +30,13 @@ def test_file_stream_exactly_once_across_restarts(spark, tmp_path):
     (src / "b.txt").write_text("b1\n")
     out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
 
-    run_available_now(spark.readStream.text(str(src)), out, cp)
+    _drain(spark.readStream.text(str(src)), cp, path=out)
     got1 = sorted(r.value for r in spark.read.parquet(out).collect())
     assert got1 == ["a1", "a2", "b1"]
 
     # new file arrives; re-run drains ONLY the new file (checkpoint resume)
     (src / "c.txt").write_text("c1\nc2\n")
-    run_available_now(spark.readStream.text(str(src)), out, cp)
+    _drain(spark.readStream.text(str(src)), cp, path=out)
     got2 = sorted(r.value for r in spark.read.parquet(out).collect())
     assert got2 == ["a1", "a2", "b1", "c1", "c2"]
 
@@ -88,7 +91,7 @@ def test_streaming_curation_matches_batch(spark, tmp_path):
     cleaned = c4_line_filter(
         ld.select("doc_id", F.col("text_clean").alias("text")), min_sentences=1
     )
-    run_available_now(cleaned, out, cp)
+    _drain(cleaned, cp, path=out)
     streamed = {
         r.doc_id: (r.text_clean, r.n_lines_kept)
         for r in spark.read.parquet(out).collect()
@@ -159,12 +162,12 @@ def test_streaming_incremental_dedup_epochs(spark, tmp_path):
         [(10, "alpha doc"), (11, "gamma doc"), (12, "gamma doc")],
         "doc_id long, text string",
     ).write.mode("append").parquet(str(src))
-    run_available_now_foreach_batch(stream, cp, fold, output_mode="append")
+    _drain(stream, cp, fold)
     # epoch 2: duplicates of epoch-1 survivors + one fresh doc
     spark.createDataFrame(
         [(20, "gamma doc"), (21, "delta doc")], "doc_id long, text string"
     ).write.mode("append").parquet(str(src))
-    run_available_now_foreach_batch(stream, cp, fold, output_mode="append")
+    _drain(stream, cp, fold)
 
     corpus = corpus_sink.read(spark)
     texts = sorted(r.text for r in corpus.collect())
@@ -208,11 +211,10 @@ def test_max_files_per_trigger_bounds_each_micro_batch(spark, tmp_path, reader):
             pq.write_table(pa.table({"v": [i, i]}), src / f"f{i}.parquet")
         stream = stream_parquet(spark, str(src), "v long", max_files_per_trigger=1)
     batches: dict[int, list] = {}
-    run_available_now_foreach_batch(
+    _drain(
         stream,
         str(tmp_path / "cp"),
         lambda df, epoch: batches.__setitem__(epoch, sorted(str(r[0]) for r in df.collect())),
-        output_mode="append",
     )
     assert sorted(batches) == [0, 1, 2]
     assert sorted(batches.values()) == [["0", "0"], ["1", "1"], ["2", "2"]]
@@ -278,12 +280,13 @@ def test_windowed_agg_matches_batch(spark, tmp_path):
     )
     # update mode re-emits changed windows per epoch; upsert by window key
     upserted: dict[tuple, tuple] = {}
-    run_available_now_foreach_batch(
+    _drain(
         stream,
         str(tmp_path / "cp"),
         lambda df, epoch: upserted.update(
             {(r.window_start, r.k): (r.n, r.sum_c) for r in df.collect()}
         ),
+        output_mode="update",
     )
     batch = (
         spark.read.parquet(src)
@@ -311,10 +314,11 @@ def test_sliding_window_agg_matches_batch(spark, tmp_path):
         aggs=[F.count(F.lit(1)).alias("n")],
     )
     upserted: dict = {}
-    run_available_now_foreach_batch(
+    _drain(
         stream,
         str(tmp_path / "cp"),
         lambda df, epoch: upserted.update({r.window_start: r.n for r in df.collect()}),
+        output_mode="update",
     )
     # batch equivalent: window(ts, 1h, 30m) via the same built-in on a static read
     batch = (
@@ -350,7 +354,7 @@ def test_session_window_agg(spark, tmp_path):
     )
     # session windows reject update mode (windows can merge); complete mode
     # re-emits the full result each epoch, which the dict upsert absorbs
-    run_available_now_foreach_batch(
+    _drain(
         stream,
         str(tmp_path / "cp"),
         lambda df, e: out.update({(r.user, r.window_start): r.n_events for r in df.collect()}),
@@ -392,7 +396,7 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     )
     deduped = stream_dedup_exact(stream, ["content_hash"], ts_col="ts", watermark="10 minutes")
     out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
-    run_available_now(deduped, out, cp)
+    _drain(deduped, cp, path=out)
     got = spark.read.parquet(out).collect()
     assert len(got) == 2  # one per distinct content
     assert sorted({r.content_hash for r in got}) == sorted(set(r.content_hash for r in got))
@@ -457,13 +461,13 @@ def test_streaming_exsub_removal_epochs(spark, tmp_path):
         ],
         "doc_id long, text string",
     ).write.mode("append").parquet(str(src))
-    run_available_now_foreach_batch(stream, str(tmp_path / "cp"), fold, output_mode="append")
+    _drain(stream, str(tmp_path / "cp"), fold)
     # epoch 2: a doc embedding epoch-1's novel run — the ADVANCED index
     # must cut it
     spark.createDataFrame(
         [(20, "z1 n1 n2 n3 n4 z2")], "doc_id long, text string"
     ).write.mode("append").parquet(str(src))
-    run_available_now_foreach_batch(stream, str(tmp_path / "cp"), fold, output_mode="append")
+    _drain(stream, str(tmp_path / "cp"), fold)
 
     got = {
         r.doc_id: (r.text, r.n_removed)

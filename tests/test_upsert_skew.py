@@ -1,50 +1,11 @@
-"""Upsert sink (merge semantics, partial-bucket rewrite, replay idempotence)
-and salted skew join (identical results, spread hot key)."""
+"""Salted skew join (identical results, spread hot key) and the skew
+profile / heavy-hitter helpers."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from tamer_spark.operators.skew import salted_join
-from tamer_spark.sinks.upsert import ParquetUpsertSink
-
-
-def test_upsert_inserts_then_updates(spark, tmp_path):
-    sink = ParquetUpsertSink(str(tmp_path / "t"), ["id"], num_buckets=4)
-    sink.upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"))
-    assert {(r.id, r.v) for r in sink.read(spark).collect()} == {(1, "a"), (2, "b")}
-    # update key 2, insert key 3; key 1 untouched
-    sink.upsert(spark, spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string"))
-    assert {(r.id, r.v) for r in sink.read(spark).collect()} == {(1, "a"), (2, "B"), (3, "c")}
-
-
-def test_upsert_on_uri_path_merges_with_existing_rows(spark, tmp_path):
-    """A ``file:`` URI is never an existing local path; the sink must still
-    see the table and merge, not overwrite the touched bucket with the
-    batch alone (one bucket, so both keys share it)."""
-    sink = ParquetUpsertSink((tmp_path / "t").as_uri(), ["id"], num_buckets=1)
-    sink.upsert(spark, spark.createDataFrame([(1, "a")], "id long, v string"))
-    sink.upsert(spark, spark.createDataFrame([(2, "b")], "id long, v string"))
-    assert {(r.id, r.v) for r in sink.read(spark).collect()} == {(1, "a"), (2, "b")}
-
-
-def test_upsert_replay_is_idempotent(spark, tmp_path):
-    sink = ParquetUpsertSink(str(tmp_path / "t"), ["id"], num_buckets=4)
-    batch = spark.createDataFrame([(i, f"v{i}") for i in range(20)], "id long, v string")
-    sink.write(batch, epoch=0)
-    sink.write(batch, epoch=0)  # replayed epoch (crash before state commit)
-    rows = sink.read(spark).collect()
-    assert len(rows) == 20  # no duplicates
-
-
-def test_upsert_via_engine_with_reingestion(spark, tmp_path):
-    """Periodic-rescan shape: the same keys arrive again with new values;
-    the upsert sink keeps exactly the latest version per key."""
-    sink = ParquetUpsertSink(str(tmp_path / "t"), ["id"], num_buckets=4)
-    sink.upsert(spark, spark.createDataFrame([(i, 0) for i in range(10)], "id long, version int"))
-    sink.upsert(spark, spark.createDataFrame([(i, 1) for i in range(5, 15)], "id long, version int"))
-    got = {r.id: r.version for r in sink.read(spark).collect()}
-    assert got == {**{i: 0 for i in range(5)}, **{i: 1 for i in range(5, 15)}}
 
 
 def test_salted_join_matches_plain_join(spark):
