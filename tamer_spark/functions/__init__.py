@@ -4,8 +4,6 @@ from tamer_spark.functions.text import (
     word_count,
     text_stats_cols,
     token_count_col,
-    lang_id_col,
-    doc_fingerprint_col,
     scrub_pii_col,
     pii_count_cols,
     trim_nonempty_sql,
@@ -17,8 +15,6 @@ __all__ = [
     "word_count",
     "text_stats_cols",
     "token_count_col",
-    "lang_id_col",
-    "doc_fingerprint_col",
     "scrub_pii_col",
     "pii_count_cols",
     "trim_nonempty_sql",

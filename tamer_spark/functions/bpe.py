@@ -25,12 +25,12 @@ from pyspark.sql import functions as F
 END = "</w>"
 
 
-def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
+def word_frequencies(df: DataFrame) -> DataFrame:
     """Distributed (word, freq) table over normalized text."""
     from tamer_spark.operators.dedup import normalize_text
 
     return (
-        df.select(F.explode_outer(F.split(normalize_text(F.col(text_col)), " ")).alias("word"))
+        df.select(F.explode_outer(F.split(normalize_text(F.col("text")), " ")).alias("word"))
         .filter(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -77,7 +77,6 @@ def learn_merges(word_freqs: list[tuple[str, int]], n_merges: int) -> list[tuple
 
 def train_bpe(
     df: DataFrame,
-    text_col: str = "text",
     n_merges: int = 200,
     max_vocab: int = 1 << 16,
 ) -> list[tuple[str, str]]:
@@ -94,7 +93,7 @@ def train_bpe(
     to the untruncated computation (tests/test_bpe.py pins this).
     """
     top = (
-        word_frequencies(df, text_col)
+        word_frequencies(df)
         .orderBy(F.col("freq").desc(), F.col("word"))
         .limit(max_vocab)
     )
@@ -133,9 +132,7 @@ def _encoder(merges: list[tuple[str, str]]):
     return encode_word
 
 
-def apply_bpe(
-    df: DataFrame, merges: list[tuple[str, str]], text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def apply_bpe(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Tokenize documents: (id, tokens array<string>, n_tokens)."""
     import pandas as pd
 
@@ -151,8 +148,8 @@ def apply_bpe(
                 for text in pdf["_norm"]
             ]
             yield pd.DataFrame(
-                {id_col: pdf[id_col], "tokens": toks, "n_tokens": [len(t) for t in toks]}
+                {"doc_id": pdf["doc_id"], "tokens": toks, "n_tokens": [len(t) for t in toks]}
             )
 
-    prepared = df.select(id_col, normalize_text(F.col(text_col)).alias("_norm"))
-    return prepared.mapInPandas(run, f"{id_col} long, tokens array<string>, n_tokens long")
+    prepared = df.select("doc_id", normalize_text(F.col("text")).alias("_norm"))
+    return prepared.mapInPandas(run, "doc_id long, tokens array<string>, n_tokens long")

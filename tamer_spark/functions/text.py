@@ -1,7 +1,7 @@
 """Text-analysis column expressions for LLM-data pipelines.
 
-All pure JVM-side Catalyst expressions (no Python UDFs): language-ID
-heuristic, quality stats, token counting, rolling-hash fingerprinting. Each
+All pure JVM-side Catalyst expressions (no Python UDFs): quality stats,
+token counting, winnowing fingerprints, cleaning and PII scrubbing. Each
 has an exact DuckDB-SQL equivalent (see tamer_spark/oracle.py) so the
 correctness gate hash-matches.
 
@@ -52,27 +52,6 @@ def _count_marker(text: Column, w: str) -> Column:
     return F.size(F.regexp_extract_all(F.concat(F.lit(" "), text, F.lit(" ")), F.lit(f"[^A-Za-z]{w}[^A-Za-z]"), 0))
 
 
-def lang_id_col(text: Column) -> Column:
-    """Heuristic language ID: argmax of per-language marker-word hit counts.
-
-    Ties broken by language code order ('de' < 'en' < ...) for determinism;
-    zero hits → 'und' (undetermined).
-    """
-    scores = []
-    for lang in sorted(LANG_MARKERS):
-        s = None
-        for w in LANG_MARKERS[lang]:
-            c = _count_marker(text, w)
-            s = c if s is None else s + c
-        scores.append((lang, s))
-    best_score = F.greatest(*[s for _, s in scores])
-    expr = F.lit("und")
-    # reversed so earlier languages win ties via later .when precedence
-    for lang, s in reversed(scores):
-        expr = F.when((best_score > 0) & (s == best_score), F.lit(lang)).otherwise(expr)
-    return expr
-
-
 def text_stats_cols(text: Column) -> list[Column]:
     """Quality-score feature columns; exact-arithmetic (int counts + ratios
     of exact ints → bit-identical across engines)."""
@@ -97,23 +76,6 @@ def text_stats_cols(text: Column) -> list[Column]:
         (n_stop.cast("double") / F.greatest(n_words, F.lit(1))).alias("stopword_ratio"),
         (n_chars.cast("double") / F.greatest(n_words, F.lit(1))).alias("avg_word_len"),
     ]
-
-
-def doc_fingerprint_col(text: Column, p: int = 1_000_000_007, base: int = 31) -> Column:
-    """Polynomial rolling-hash fingerprint over word hashes.
-
-    fold(words, acc=0): acc = (acc*base + stable_word_hash) % p — a
-    shift-invariant-ish document signature usable for cheap change detection.
-    Expressed with ``aggregate`` (JVM higher-order function, no shuffle).
-    """
-    from tamer_spark.functions.hashing import stable_hash64
-
-    ws = words(text)
-    return F.aggregate(
-        ws,
-        F.lit(0).cast("long"),
-        lambda acc, w: (acc * base + stable_hash64(w) % p) % p,
-    ).alias("fingerprint")
 
 
 # Markup stripping — the WET-extraction stage every web-corpus pipeline
@@ -215,9 +177,7 @@ def trim_nonempty_sql(arr: str) -> str:
     return f"filter(transform({arr}, x -> trim(x)), x -> length(x) > 0)"
 
 
-def winnow_fingerprints(
-    df, text_col: str = "text", id_col: str = "doc_id", k: int = 4, w: int = 5
-):
+def winnow_fingerprints(df, k: int = 4, w: int = 5):
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS algorithm) over word ``k``-grams.
 
@@ -236,7 +196,7 @@ def winnow_fingerprints(
     column alias, or CollapseProject re-inlines one md5-per-gram
     evaluation into every reference). Values are stable_hash64, so the
     selection replays identically in any engine. Returns
-    (id_col, fingerprints array<long>).
+    (doc_id, fingerprints array<long>).
 
     No analog in the reference engine; training-data extension surface.
     """
@@ -244,11 +204,11 @@ def winnow_fingerprints(
     from tamer_spark.operators.dedup import normalize_text
 
     s1 = df.select(
-        F.col(id_col).alias(id_col),
-        F.split(normalize_text(F.col(text_col)), " ").alias("_ws"),
+        "doc_id",
+        F.split(normalize_text(F.col("text")), " ").alias("_ws"),
     )
     s2 = s1.select(
-        id_col,
+        "doc_id",
         F.when(
             F.size("_ws") - (k - 1) <= 0,
             F.array(stable_hash64(F.array_join("_ws", " "))),
@@ -262,7 +222,7 @@ def winnow_fingerprints(
         .alias("_kh"),
     )
     return s2.select(
-        id_col,
+        "doc_id",
         F.when(
             F.size("_kh") - (w - 1) <= 0,
             F.array(F.array_min("_kh")),
@@ -279,9 +239,7 @@ def winnow_fingerprints(
     )
 
 
-def winnow_overlap_pairs(
-    fps, id_col: str = "doc_id", min_shared: int = 2, max_posting: int | None = 10_000
-):
+def winnow_overlap_pairs(fps, min_shared: int = 2, max_posting: int | None = 10_000):
     """Near-dup candidate pairs from winnowing fingerprints: docs sharing
     >= ``min_shared`` selected fingerprints. With the coverage theorem this
     inherits a hard guarantee plain MinHash lacks: any two docs sharing
@@ -302,18 +260,18 @@ def winnow_overlap_pairs(
 
     from tamer_spark.functions.hashing import stable_hash64
 
-    posting = fps.select(id_col, F.explode_outer("fingerprints").alias("fp"))
+    posting = fps.select("doc_id", F.explode_outer("fingerprints").alias("fp"))
     if max_posting is not None:
         wcap = Window.partitionBy("fp").orderBy(
-            stable_hash64(F.col(id_col).cast("string")), id_col
+            stable_hash64(F.col("doc_id").cast("string")), "doc_id"
         )
         posting = (
             posting.withColumn("_r", F.row_number().over(wcap))
             .filter(F.col("_r") <= max_posting)
             .drop("_r")
         )
-    a = posting.select(F.col(id_col).alias("id_a"), "fp")
-    b = posting.select(F.col(id_col).alias("id_b"), "fp")
+    a = posting.select(F.col("doc_id").alias("id_a"), "fp")
+    b = posting.select(F.col("doc_id").alias("id_b"), "fp")
     return (
         a.join(b, "fp")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -581,7 +539,7 @@ def template_fingerprint_col(text: Column) -> Column:
 # 'latin' includes Latin-1/Ext-A/B letters (C0–24F; the × ÷ signs ride
 # along — a documented heuristic, they never appear in prose counts that
 # matter). 'cjk' = Han + hiragana + katakana (the routing question is
-# "CJK pipeline or not", not language ID — lang_id_col owns that).
+# "CJK pipeline or not", not language ID — the LANG_MARKERS vote owns that).
 SCRIPT_PATTERNS: dict[str, str] = {
     "arabic": f"[{chr(0x0600)}-{chr(0x06FF)}]",
     "cjk": f"[{chr(0x4E00)}-{chr(0x9FFF)}{chr(0x3040)}-{chr(0x30FF)}]",
@@ -597,8 +555,8 @@ def dominant_script_sql() -> str:
     counts in a prior select: the greatest + tie chain references every
     count ~3×, and deriving it from the text would pay ~15 regexp passes
     where 5 suffice (measured +47 % on the text_profile gate before this
-    split). Alphabetical-first on ties (a total order — the lang_id_col
-    convention), 'none' when no script chars at all."""
+    split). Alphabetical-first on ties (a total order — the
+    LANG_MARKERS vote's convention), 'none' when no script chars at all."""
     names = sorted(SCRIPT_PATTERNS)
     g = "greatest(" + ", ".join(f"n_{n}" for n in names) + ")"
     whens = " ".join(f"WHEN ({g} > 0) AND (n_{n} = {g}) THEN '{n}'" for n in names)

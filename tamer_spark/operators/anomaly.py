@@ -50,15 +50,13 @@ __all__ = ["daily_counts", "mad_anomalies"]
 DEFAULT_THRESHOLD_PPM = 5_189_000
 
 
-def daily_counts(
-    events: DataFrame, ts_col: str = "ts", key_col: str = "event_type"
-) -> DataFrame:
+def daily_counts(events: DataFrame) -> DataFrame:
     """(key, day, n) — the partial-aggregable collapse of a raw event table
     to the per-key daily series mad_anomalies scores. At any corpus size
     this is one map-side-combined groupBy; the output is calendar-bounded
     (keys × days), which is what makes the downstream medians cheap."""
     return events.groupBy(
-        F.col(key_col).alias("k"), F.to_date(F.col(ts_col)).alias("day")
+        F.col("event_type").alias("k"), F.to_date(F.col("ts")).alias("day")
     ).agg(F.count(F.lit(1)).alias("n"))
 
 

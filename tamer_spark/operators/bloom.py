@@ -222,8 +222,6 @@ def decontaminate_with_bloom(
     corpus_shingled: DataFrame,
     bench_shingles: DataFrame,
     corpus_docs: DataFrame,
-    shingle_col: str = "s",
-    id_col: str = "doc_id",
     m_bits: int = 1 << 14,
     k: int = 5,
 ) -> DataFrame:
@@ -233,13 +231,13 @@ def decontaminate_with_bloom(
 
     Returns the surviving ``corpus_docs`` ids.
     """
-    words = bloom_words_df(bench_shingles, shingle_col, m_bits=m_bits, k=k)
-    candidates = bloom_might_contain(corpus_shingled, shingle_col, words).filter(
+    words = bloom_words_df(bench_shingles, "s", m_bits=m_bits, k=k)
+    candidates = bloom_might_contain(corpus_shingled, "s", words).filter(
         F.col("bloom_hit")
     )
     tainted = (
-        candidates.join(bench_shingles, shingle_col)  # exact verify, survivors only
-        .select(id_col)
+        candidates.join(bench_shingles, "s")  # exact verify, survivors only
+        .select("doc_id")
         .distinct()
     )
-    return corpus_docs.join(tainted, id_col, "left_anti").select(id_col)
+    return corpus_docs.join(tainted, "doc_id", "left_anti").select("doc_id")

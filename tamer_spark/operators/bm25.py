@@ -17,8 +17,10 @@ Scale shape (100 TB posture):
   crossed back in through a broadcast nested-loop join. The executed plan
   reads the corpus twice, both map-side: the tf side reads (doc_id, text),
   the (N, avgdl) aggregate reads text alone and re-splits it for the
-  lengths. Known hazard: the df window has at most |query terms| keys, so
-  a common term's rows land in one task.
+  lengths. Four exchanges in all: (doc_id, dl, word) for tf, word for the
+  df window, doc_id for the score sum, one partition for (N, avgdl).
+  Known hazard: the df window has at most |query terms| keys, so a common
+  term's rows land in one task.
 
 Cross-engine determinism: scores are ranked on the ROUNDED value (6 dp)
 so libm ``ln`` ulp gaps and float summation order cannot flip order —
@@ -34,20 +36,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-    k: int = 10,
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10) -> DataFrame:
     """Top-``k`` documents by BM25 score against a bag of ``query_terms``.
 
     score(d) = Σ_t idf(t) · tf(t,d)·(k1+1) / (tf(t,d) + k1·(1−b+b·|d|/avgdl))
     with idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5))  (Lucene's non-negative
-    form). Returns (id_col, score, rank) with rank 1..k, ties broken by id.
+    form) with k1 = 1.2 and b = 0.75. Returns (doc_id, score, rank) with
+    rank 1..k, ties broken by id.
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
@@ -57,17 +52,17 @@ def bm25_topk(
     # parses (see operators/pq.py rationale); float literals carry the D
     # suffix so they parse as DOUBLE like F.lit, never DECIMAL
     words = docs.selectExpr(
-        id_col, f"split({normalize_text_sql(text_col)}, ' ') AS ws"
+        "doc_id", f"split({normalize_text_sql('text')}, ' ') AS ws"
     )
-    with_len = words.selectExpr(id_col, "ws", "size(ws) AS dl")
+    with_len = words.selectExpr("doc_id", "ws", "size(ws) AS dl")
     stats = with_len.agg(
         F.expr("count(1)").alias("n_docs"), F.expr("avg(dl)").alias("avgdl")
     )
     in_list = ", ".join("'" + t.replace("'", "\\'") + "'" for t in query_terms)
     tf = (
-        with_len.selectExpr(id_col, "dl", "explode(ws) AS word")
+        with_len.selectExpr("doc_id", "dl", "explode(ws) AS word")
         .filter(f"word IN ({in_list})")
-        .groupBy(id_col, "dl", "word")
+        .groupBy("doc_id", "dl", "word")
         .agg(F.expr("count(1)").alias("tf"))
     )
     # df (document frequency) as a window count over the tf frame itself
@@ -79,22 +74,21 @@ def bm25_topk(
     # A count over partitionBy(word) re-shuffles only the query-vocabulary-
     # bounded tf rows (docs-containing-a-term × terms, never the corpus)
     # and yields the identical integer df per row.
-    idf = f"LN(1.0D + (n_docs - df + 0.5D) / (df + 0.5D))"
+    idf = "LN(1.0D + (n_docs - df + 0.5D) / (df + 0.5D))"
     tfnorm = (
-        f"(tf * {k1 + 1.0!r}D) / (tf + {k1!r}D"
-        f" * ({1.0 - b!r}D + {b!r}D * dl / avgdl))"
+        "(tf * 2.2D) / (tf + 1.2D * (0.25D + 0.75D * dl / avgdl))"
     )
     scored = (
         tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("word")))
         .crossJoin(F.broadcast(stats))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.expr(f"round(sum(({idf}) * ({tfnorm})), 6)").alias("score"))
     )
     # distributed top-k (TakeOrderedAndProject: per-partition heads merged
     # on the driver), then rank the <=k surviving rows — never a global
     # single-partition window sort over the scored set
-    topk = scored.orderBy(F.col("score").desc(), id_col).limit(k)
+    topk = scored.orderBy(F.col("score").desc(), "doc_id").limit(k)
     return topk.selectExpr(
         "*",
-        f"row_number() OVER (ORDER BY score DESC, {id_col} ASC) AS _rk",
-    ).selectExpr(id_col, "score", "CAST(_rk AS BIGINT) AS rank")
+        "row_number() OVER (ORDER BY score DESC, doc_id ASC) AS _rk",
+    ).selectExpr("doc_id", "score", "CAST(_rk AS BIGINT) AS rank")

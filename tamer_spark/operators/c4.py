@@ -28,7 +28,7 @@ exact, never "roughly the paper"):
   is the count of ``.``/``!``/``?`` characters in the cleaned text (a
   terminator count, NOT a linguistic segmenter — documented deviation;
   the paper does not specify its segmenter);
-- a span = ``span_n`` CONSECUTIVE sentences joined with chr(31) (unit
+- a span = three CONSECUTIVE sentences joined with chr(31) (unit
   separator — it cannot appear in the joined parts because it is STRIPPED
   from the text before sentence splitting, so a stray 0x1F in web text
   can never make two different sentence sequences collide into one span
@@ -43,7 +43,7 @@ exact, never "roughly the paper"):
 Shuffle profile at 100 TB: line filtering and document verdicts are
 entirely map-only (array HOFs over the line split — scan-bound, codegen).
 Span dedup shuffles the span stream once — (span, (doc_id, start) struct)
-with map-side partial MIN aggregation, payload ≈ span_n × the text, the
+with map-side partial MIN aggregation, payload ≈ 3 × the text, the
 same cost class as the n-gram dedup family — then the drop set (a bounded
 (doc_id, sentence_idx) key set, never text) joins back and the rebuild is
 one ordered groupBy(doc_id). The global-first rule is a partial-aggregable
@@ -72,48 +72,31 @@ def _count_occurrences_sql(col: str, sym: str) -> str:
     return f"length({col}) - length(replace({col}, {sql_string(sym)}, ''))"
 
 
-def c4_line_filter(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_line_words: int = 3,
-    min_sentences: int = 5,
-    drop_line_markers: tuple = ("javascript",),
-    drop_doc_markers: tuple = ("lorem ipsum", "{"),
-    badwords: tuple = (),
-) -> DataFrame:
+def c4_line_filter(docs: DataFrame, min_sentences: int = 5, badwords: tuple = ()) -> DataFrame:
     """C4 §2.2 line filter + document verdict, one map-only pass.
 
     Returns (doc_id, text_clean, n_lines, n_lines_kept, n_sentences, keep):
     ``text_clean`` is the kept lines re-joined with newlines, ``keep`` = 1
     iff the CLEANED document still has >= ``min_sentences`` terminator
-    characters and the ORIGINAL text contains none of ``drop_doc_markers``
-    or ``badwords`` (both lowercase substring matches — C4's badword list
+    characters and the ORIGINAL text contains none of 'lorem ipsum', '{'
+    or ``badwords`` (all lowercase substring matches — C4's badword list
     is a parameter here, empty by default; ship your own).
     """
     # one-parse SQL construction (r14): same trees, a handful of selectExpr
     # parses instead of ~420 py4j round-trips (see operators/pq.py rationale)
-    raw = docs.selectExpr(f"{id_col} AS doc_id", f"{text_col} AS _raw")
+    raw = docs.selectExpr("doc_id", "text AS _raw")
     lines = _trim_nonempty_sql("split(_raw, '\\n')")
     ok_term = " OR ".join(f"endswith(x, {sql_string(t)})" for t in _TERMINALS)
-    ok_words = f"size(filter(split(x, ' '), w -> length(w) > 0)) >= {min_line_words}"
-    ok_marker = " AND ".join(
-        f"NOT contains(lower(x), {sql_string(m)})" for m in drop_line_markers
-    )
-    line_ok = f"({ok_term}) AND ({ok_words})" + (
-        f" AND ({ok_marker})" if ok_marker else ""
-    )
+    ok_words = "size(filter(split(x, ' '), w -> length(w) > 0)) >= 3"
+    line_ok = f"({ok_term}) AND ({ok_words}) AND (NOT contains(lower(x), 'javascript'))"
     staged = raw.selectExpr(
         "doc_id",
         "_raw",
         f"{lines} AS _lines",
         f"filter({lines}, x -> {line_ok}) AS _kept",
     )
-    doc_markers = tuple(drop_doc_markers) + tuple(badwords)
-    doc_ok = (
-        " AND ".join(f"NOT contains(lower(_raw), {sql_string(m)})" for m in doc_markers)
-        or "true"
-    )
+    doc_markers = ("lorem ipsum", "{") + tuple(badwords)
+    doc_ok = " AND ".join(f"NOT contains(lower(_raw), {sql_string(m)})" for m in doc_markers)
     n_sent = " + ".join(
         f"({_count_occurrences_sql('text_clean', s)})" for s in (".", "!", "?")
     )
@@ -141,37 +124,32 @@ def c4_line_filter(
     )
 
 
-def c4_span_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    span_n: int = 3,
-) -> DataFrame:
+def c4_span_dedup(docs: DataFrame) -> DataFrame:
     """C4's cross-document three-sentence-span dedup, keep-global-first.
 
     Returns (doc_id, text_dedup, n_sentences, n_dropped): every occurrence
-    of a ``span_n``-consecutive-sentence span other than the globally first
+    of a three-consecutive-sentence span other than the globally first
     (smallest ``(doc_id, start)``) has its sentences removed; the
     document is re-assembled from the survivors, joined with '. '.
-    Documents with fewer than ``span_n`` sentences pass through untouched
+    Documents with fewer than three sentences pass through untouched
     (they produce no spans). Idempotent: a second pass finds no duplicated
     spans among survivors of the first.
     """
     sep = sql_string(_SPAN_SEP)
     # strip the span separator from the text BEFORE splitting — a stray
     # 0x1F in web text must never alias two different sentence runs
-    ss = _trim_nonempty_sql(f"split(replace({text_col}, {sep}, ''), '[.!?]')")
-    sarr = docs.selectExpr(f"{id_col} AS doc_id", f"{ss} AS _ss")
+    ss = _trim_nonempty_sql(f"split(replace(text, {sep}, ''), '[.!?]')")
+    sarr = docs.selectExpr("doc_id", f"{ss} AS _ss")
     # the sentence array feeds the span stream AND the rebuild — stage it
     # (multiply-referenced, CollapseProject keeps it materialized)
     sents = sarr.select(
         "doc_id", F.posexplode("_ss").alias("idx", "s")
     )
     spans_arr = (
-        f"CASE WHEN size(_ss) >= {span_n}"
-        f" THEN transform(sequence(0, size(_ss) - {span_n}),"
-        f" i -> named_struct('start', i, 'sp',"
-        f" array_join(slice(_ss, i + 1, {span_n}), {sep})))"
+        "CASE WHEN size(_ss) >= 3"
+        " THEN transform(sequence(0, size(_ss) - 3),"
+        " i -> named_struct('start', i, 'sp',"
+        f" array_join(slice(_ss, i + 1, 3), {sep})))"
         " ELSE CAST(array() AS array<struct<start:int,sp:string>>) END"
     )
     spans = (
@@ -190,7 +168,7 @@ def c4_span_dedup(
         .filter("_key != _first")
         .selectExpr(
             "doc_id",
-            f"explode(sequence(start, start + {span_n - 1})) AS idx",
+            "explode(sequence(start, start + 2)) AS idx",
         )
         .distinct()
     )

@@ -161,19 +161,12 @@ def connected_components(
     return members.union(reps).distinct()
 
 
-def attach_cluster_ids(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    pair_a: str = "doc_a",
-    pair_b: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
+def attach_cluster_ids(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Full dedup-clustering step: near-dup pairs → per-row cluster ids.
 
     Adds ``cluster_rep`` (minimum id in the row's transitive near-dup
     cluster; itself for singletons) and ``cluster_size``. Keeping
-    ``cluster_rep == id_col`` rows and dropping the rest is the standard
+    ``cluster_rep == doc_id`` rows and dropping the rest is the standard
     "keep one representative per cluster" policy; the size column supports
     weighted/stratified alternatives.
 
@@ -182,10 +175,10 @@ def attach_cluster_ids(
     that up from size stats rather than a forced hint, which keeps the
     pathological all-dup corpus (components ≈ corpus) safe.
     """
-    comp = connected_components(pairs, src=pair_a, dst=pair_b, max_iter=max_iter)
+    comp = connected_components(pairs, src="doc_a", dst="doc_b")
     out = (
-        df.join(comp.withColumnRenamed("node", id_col), id_col, "left")
-        .withColumn("cluster_rep", F.coalesce(F.col("component"), F.col(id_col)))
+        df.join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
+        .withColumn("cluster_rep", F.coalesce(F.col("component"), F.col("doc_id")))
         .drop("component")
     )
     sizes = out.groupBy("cluster_rep").agg(F.count(F.lit(1)).alias("cluster_size"))
@@ -195,7 +188,6 @@ def attach_cluster_ids(
 def cluster_best_representatives(
     clustered: DataFrame,
     quality: DataFrame,
-    id_col: str = "doc_id",
     quality_col: str = "quality",
 ) -> DataFrame:
     """Quality-aware representative election per near-dup cluster — the
@@ -220,16 +212,16 @@ def cluster_best_representatives(
     cluster_rep (cluster count ≤ corpus; the winners table is usually
     broadcast-sized next to the corpus and AQE picks that up).
     """
-    q = quality.select(F.col(id_col).alias(id_col), F.col(quality_col).alias("_q"))
-    scored = clustered.select(id_col, "cluster_rep").join(q, id_col, "left")
+    q = quality.select(F.col("doc_id"), F.col(quality_col).alias("_q"))
+    scored = clustered.select("doc_id", "cluster_rep").join(q, "doc_id", "left")
     winners = scored.groupBy("cluster_rep").agg(
-        F.max(F.struct(F.col("_q").alias("q"), F.col(id_col).alias("i"))).alias("_w")
+        F.max(F.struct(F.col("_q").alias("q"), F.col("doc_id").alias("i"))).alias("_w")
     )
     return (
-        clustered.select(id_col, "cluster_rep")
+        clustered.select("doc_id", "cluster_rep")
         .join(winners, "cluster_rep")
         .select(
-            id_col,
+            "doc_id",
             "cluster_rep",
             F.col("_w.i").alias("best_id"),
             F.col("_w.q").alias("best_quality"),

@@ -35,27 +35,21 @@ from pyspark.sql import functions as F
 __all__ = ["odds_train", "odds_score"]
 
 
-def _words(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _words(docs: DataFrame) -> DataFrame:
     from tamer_spark.operators.dedup import normalize_text
 
     return docs.select(
-        id_col, F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("w")
+        "doc_id", F.explode(F.split(normalize_text(F.col("text")), " ")).alias("w")
     )
 
 
-def odds_train(
-    pos: DataFrame,
-    neg: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    scale: int = 1_000_000,
-) -> DataFrame:
+def odds_train(pos: DataFrame, neg: DataFrame) -> DataFrame:
     """Train the weight table: (w, weight, base) — ``weight`` is the scaled
     smoothed-conditional difference for word w; ``base`` (same on every
     row) is the unseen-word floor difference. V is the joint vocabulary.
     """
-    pw = _words(pos, text_col, id_col).groupBy("w").agg(F.count(F.lit(1)).alias("c_pos"))
-    nw = _words(neg, text_col, id_col).groupBy("w").agg(F.count(F.lit(1)).alias("c_neg"))
+    pw = _words(pos).groupBy("w").agg(F.count(F.lit(1)).alias("c_pos"))
+    nw = _words(neg).groupBy("w").agg(F.count(F.lit(1)).alias("c_neg"))
     vocab = pw.join(nw, "w", "full_outer").select(
         "w",
         F.coalesce("c_pos", F.lit(0)).alias("c_pos"),
@@ -73,32 +67,27 @@ def odds_train(
     return vocab.select(
         "w",
         F.expr(
-            f"(CAST({scale} AS BIGINT) * (c_pos + 1)) div (t_pos + v)"
-            f" - (CAST({scale} AS BIGINT) * (c_neg + 1)) div (t_neg + v)"
+            "(CAST(1000000 AS BIGINT) * (c_pos + 1)) div (t_pos + v)"
+            " - (CAST(1000000 AS BIGINT) * (c_neg + 1)) div (t_neg + v)"
         ).alias("weight"),
         F.expr(
-            f"CAST({scale} AS BIGINT) div (t_pos + v)"
-            f" - CAST({scale} AS BIGINT) div (t_neg + v)"
+            "CAST(1000000 AS BIGINT) div (t_pos + v)"
+            " - CAST(1000000 AS BIGINT) div (t_neg + v)"
         ).alias("base"),
     )
 
 
-def odds_score(
-    docs: DataFrame,
-    weights: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def odds_score(docs: DataFrame, weights: DataFrame) -> DataFrame:
     """Score every doc: sum of word weights (unseen words take the ``base``
-    floor). Returns (id_col, score) — higher = more reference-like."""
+    floor). Returns (doc_id, score) — higher = more reference-like."""
     base = weights.select(F.max("base").alias("_base"))  # constant column
-    toks = _words(docs, text_col, id_col)
+    toks = _words(docs)
     scored = (
         toks.join(weights.select("w", "weight"), "w", "left")
         .crossJoin(F.broadcast(base))
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("weight"), F.col("_base")).alias("_wt"),
         )
     )
-    return scored.groupBy(id_col).agg(F.sum("_wt").cast("long").alias("score"))
+    return scored.groupBy("doc_id").agg(F.sum("_wt").cast("long").alias("score"))

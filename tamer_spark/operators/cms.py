@@ -73,8 +73,6 @@ def cms_build(
 def cms_windowed_cells(
     df: DataFrame,
     token_col: str,
-    ts_col: str = "ts",
-    window_duration: str = "1 hour",
     d: int = 4,
     w: int = 64,
     seed: int = 42,
@@ -95,7 +93,7 @@ def cms_windowed_cells(
     are md5-deterministic so an oracle can replay the sketch exactly
     (unlike HLL, whose streaming variant needs a tolerance contract)."""
     cells = df.filter(F.col(token_col).isNotNull()).select(
-        F.col(ts_col),
+        F.col("ts"),
         F.explode(
             F.array(
                 *[
@@ -109,7 +107,7 @@ def cms_windowed_cells(
         ).alias("cell"),
     )
     return cells.groupBy(
-        F.window(ts_col, window_duration).alias("w"), "cell.r", "cell.b"
+        F.window("ts", "1 hour").alias("w"), "cell.r", "cell.b"
     ).agg(F.count(F.lit(1)).alias("cnt"))
 
 

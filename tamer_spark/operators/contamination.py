@@ -26,13 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def contamination_score(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def contamination_score(corpus: DataFrame, benchmark: DataFrame, n: int = 13) -> DataFrame:
     """Per-document contamination against ``benchmark``'s n-gram set.
 
     Returns (id, n_shingles, n_contaminated, contamination_ppm) for EVERY
@@ -45,11 +39,11 @@ def contamination_score(
     """
     from tamer_spark.operators.dedup import shingle_string_rows
 
-    corp = shingle_string_rows(corpus, n=n, text_col=text_col, id_col=id_col).dropDuplicates(
-        [id_col, "s"]
+    corp = shingle_string_rows(corpus, n=n).dropDuplicates(
+        ["doc_id", "s"]
     )
     bench = (
-        shingle_string_rows(benchmark, n=n, text_col=text_col, id_col=id_col)
+        shingle_string_rows(benchmark, n=n)
         .select("s")
         .distinct()
     )
@@ -58,14 +52,14 @@ def contamination_score(
     tagged = corp.join(
         F.broadcast(bench.withColumn("_hit", F.lit(1))), "s", "left"
     )
-    return tagged.groupBy(id_col).agg(
+    return tagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_shingles"),
         F.count("_hit").alias("n_contaminated"),
         (F.lit(1_000_000) * F.count("_hit"))
         .cast("long")
         .alias("_num"),
     ).select(
-        id_col,
+        "doc_id",
         "n_shingles",
         "n_contaminated",
         F.expr("_num div n_shingles").alias("contamination_ppm"),

@@ -19,27 +19,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def corpus_datasheet(
-    docs: DataFrame,
-    text_col: str = "text",
-    keys: tuple[str, ...] = ("source", "lang"),
-) -> DataFrame:
-    """Per-``keys`` slice: n_docs, total_chars, total_tokens (whitespace
+def corpus_datasheet(docs: DataFrame) -> DataFrame:
+    """Per-(source, lang) slice: n_docs, total_chars, total_tokens (whitespace
     tokens over normalized text), dup_docs (docs whose normalized content
     digest occurs more than once CORPUS-WIDE — a doc duplicated across
     slices counts in each slice holding a copy)."""
     from tamer_spark.operators.dedup import normalize_text
 
     d = docs.select(
-        *keys,
-        F.length(F.col(text_col)).cast("long").alias("_nc"),
-        F.size(F.split(normalize_text(F.col(text_col)), " ")).cast("long").alias("_nt"),
-        F.md5(normalize_text(F.col(text_col))).alias("_dg"),
+        "source",
+        "lang",
+        F.length(F.col("text")).cast("long").alias("_nc"),
+        F.size(F.split(normalize_text(F.col("text")), " ")).cast("long").alias("_nt"),
+        F.md5(normalize_text(F.col("text"))).alias("_dg"),
     )
     copies = d.groupBy("_dg").agg(F.count(F.lit(1)).alias("_copies"))
     return (
         d.join(copies, "_dg")
-        .groupBy(*keys)
+        .groupBy("source", "lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("_nc").alias("total_chars"),

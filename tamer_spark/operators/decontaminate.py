@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 def decontaminate_substrings(
     corpus: DataFrame,
     patterns: list[str],
-    text_col: str = "text",
     keep_hits: bool = False,
 ) -> DataFrame:
     """Drop (or, with ``keep_hits``, return only) documents containing ANY
@@ -35,5 +34,5 @@ def decontaminate_substrings(
     if not patterns:
         raise ValueError("patterns must be non-empty")
     arr = F.array(*[F.lit(p) for p in patterns])
-    hit = F.exists(arr, lambda p: F.contains(F.col(text_col), p))
+    hit = F.exists(arr, lambda p: F.contains(F.col("text"), p))
     return corpus.filter(hit if keep_hits else ~hit)

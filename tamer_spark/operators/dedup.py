@@ -50,30 +50,28 @@ def normalize_text_sql(col: str) -> str:
     return f"trim(regexp_replace(lower({safe_ident(col, 'text_col')}), '\\\\s+', ' '))"
 
 
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Keep the min-id representative of each exact-duplicate group.
 
     Single shuffle on md5(text); returns (id, group hash, group size).
     """
     return (
-        df.select(F.col(id_col), F.md5(F.col(text_col)).alias("content_hash"))
+        df.select(F.col("doc_id"), F.md5(F.col("text")).alias("content_hash"))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
     )
 
 
-def dedup_exact_normalized(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact_normalized(df: DataFrame) -> DataFrame:
     """Exact dedup after text normalization (case/whitespace-insensitive)."""
     return (
-        df.select(F.col(id_col), F.md5(normalize_text(F.col(text_col))).alias("content_hash"))
+        df.select(F.col("doc_id"), F.md5(normalize_text(F.col("text"))).alias("content_hash"))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
     )
 
 
-def url_dedup_counts(
-    df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
+def url_dedup_counts(df: DataFrame) -> DataFrame:
     """URL-level exact dedup — the FIRST dedup stage of a web-crawl pipeline
     (CCNet dedups by URL before content; RefinedWeb §3.2 drops re-crawled
     URLs before any text processing, because it needs no text read at all).
@@ -101,22 +99,20 @@ def url_dedup_counts(
     # one-parse SQL construction (r14): the whole canonicalize+key chain
     # is a single selectExpr parse (see operators/pq.py rationale)
     key = (
-        f"coalesce(md5({canonicalize_url_sql(url_col)}), "
-        f"concat('nullurl-', CAST({id_col} AS STRING)))"
+        f"coalesce(md5({canonicalize_url_sql('url')}), "
+        "concat('nullurl-', CAST(doc_id AS STRING)))"
     )
     return (
-        df.selectExpr(id_col, f"{key} AS content_hash")
+        df.selectExpr("doc_id", f"{key} AS content_hash")
         .groupBy("content_hash")
         .agg(
-            F.expr(f"min({id_col}) AS keep_id"),
+            F.expr("min(doc_id) AS keep_id"),
             F.expr("count(1) AS dup_count"),
         )
     )
 
 
-def domain_doc_counts(
-    df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
+def domain_doc_counts(df: DataFrame) -> DataFrame:
     """Per-REGISTRABLE-DOMAIN document rollup, dedup-shaped: one row per
     domain with the min-id representative and the doc count — the grouping
     step under CCNet's per-domain quality aggregation and RefinedWeb §3.1's
@@ -136,21 +132,19 @@ def domain_doc_counts(
     exclusion) apply here identically."""
     from tamer_spark.functions.text import registrable_domain_col
 
-    dom = registrable_domain_col(F.col(url_col))
+    dom = registrable_domain_col(F.col("url"))
     key = F.coalesce(
         F.when(F.length(dom) > 0, F.md5(dom)),
-        F.concat(F.lit("nulldomain-"), F.col(id_col).cast("string")),
+        F.concat(F.lit("nulldomain-"), F.col("doc_id").cast("string")),
     )
     return (
-        df.select(F.col(id_col), key.alias("content_hash"))
+        df.select(F.col("doc_id"), key.alias("content_hash"))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
     )
 
 
-def sentence_dedup_counts(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", min_len: int = 1
-) -> DataFrame:
+def sentence_dedup_counts(df: DataFrame) -> DataFrame:
     """Corpus-wide repeated-sentence counts — the CCNet/Gopher LINE-level
     dedup signal (boilerplate sentences repeat across millions of pages while
     their documents stay unique, so document-level dedup never sees them).
@@ -161,20 +155,18 @@ def sentence_dedup_counts(
     sentences whose dup_count exceeds a cap, keeping the first occurrence.
     """
     s = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         # _outer: avoids the inferred size>0 filter re-running the split
         # regex below the project; the length guard drops any null row
-        F.explode_outer(F.split(F.col(text_col), "\\. ")).alias("s"),
-    ).filter(F.length("s") >= min_len)
+        F.explode_outer(F.split(F.col("text"), "\\. ")).alias("s"),
+    ).filter(F.length("s") >= 1)
     return (
         s.groupBy(F.md5(F.col("s")).alias("content_hash"))
         .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
     )
 
 
-def dedup_lines_in_doc(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_lines_in_doc(df: DataFrame) -> DataFrame:
     """WITHIN-document duplicate-line removal, keep-first (the
     RefinedWeb/FineWeb line-dedup cleaning step — boilerplate navigation
     and cookie banners repeat inside a single page; public literature:
@@ -196,7 +188,7 @@ def dedup_lines_in_doc(
 
     Returns (doc_id, text_clean, n_lines, n_dropped).
     """
-    staged = _staged_line_arrays(df, text_col, id_col, "\n")
+    staged = _staged_line_arrays(df, "\n")
     firsts = "filter(_lines, (x, i) -> array_position(_lines, x) = i + 1)"
     return staged.selectExpr(
         "doc_id",
@@ -206,9 +198,7 @@ def dedup_lines_in_doc(
     )
 
 
-def _doc_lines(
-    df: DataFrame, text_col: str, id_col: str, split_pattern: str = "\n"
-) -> DataFrame:
+def _doc_lines(df: DataFrame, split_pattern: str = "\n") -> DataFrame:
     """(doc_id, n_lines, idx, line, h): the corpus line stream under the
     pinned corpus-wide line convention (split on ``split_pattern``,
     space-trimmed, empties dropped — the same trim_nonempty_sql every line
@@ -217,7 +207,7 @@ def _doc_lines(
     line's position among the SURVIVING (nonempty) units — the rebuild
     order. ``split_pattern`` is a Java regex: '\\n' gives line units (the
     gate-pinned default), '\\n{2,}' gives Dolma-style paragraph units."""
-    return _staged_line_arrays(df, text_col, id_col, split_pattern).select(
+    return _staged_line_arrays(df, split_pattern).select(
         "doc_id",
         # each exploded row carries its doc's line total so the rebuild agg
         # never needs a second doc_id regroup of the stream for totals
@@ -226,9 +216,7 @@ def _doc_lines(
     ).withColumn("h", F.md5("line"))
 
 
-def _staged_line_arrays(
-    df: DataFrame, text_col: str, id_col: str, split_pattern: str
-) -> DataFrame:
+def _staged_line_arrays(df: DataFrame, split_pattern: str) -> DataFrame:
     """(doc_id, _lines): THE corpus line/paragraph-unit convention (split
     on ``split_pattern``, space-trimmed, empties dropped) in exactly one
     place — _doc_lines (the exploded stream) and dedup_lines_in_doc both
@@ -236,18 +224,12 @@ def _staged_line_arrays(
     from tamer_spark.functions.text import sql_string, trim_nonempty_sql
 
     return df.selectExpr(
-        f"{id_col} AS doc_id",
-        trim_nonempty_sql(f"split({text_col}, {sql_string(split_pattern)})") + " AS _lines",
+        "doc_id",
+        trim_nonempty_sql(f"split(text, {sql_string(split_pattern)})") + " AS _lines",
     )
 
 
-def boilerplate_lines(
-    df: DataFrame,
-    min_doc_freq: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    split_pattern: str = "\n",
-) -> DataFrame:
+def boilerplate_lines(df: DataFrame, min_doc_freq: int = 2) -> DataFrame:
     """Lines appearing in ≥ ``min_doc_freq`` DISTINCT documents:
     ``(h, line, doc_freq)`` — the cross-document boilerplate set (cookie
     banners, nav menus, footers: Dolma, Soldaini et al. 2024 §4.1
@@ -276,7 +258,7 @@ def boilerplate_lines(
             f"boilerplate_lines: min_doc_freq must be >= 2, got {min_doc_freq}"
         )
     return (
-        _doc_lines(df, text_col, id_col, split_pattern)
+        _doc_lines(df)
         .filter(F.col("line").isNotNull())
         .groupBy("h", "line")
         .agg(F.count_distinct("doc_id").alias("doc_freq"))
@@ -287,8 +269,6 @@ def boilerplate_lines(
 def dedup_lines_across_docs(
     df: DataFrame,
     min_doc_freq: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     boilerplate: DataFrame | None = None,
     split_pattern: str = "\n",
     join_sep: str = "\n",
@@ -324,7 +304,7 @@ def dedup_lines_across_docs(
     ``join_sep='\\n\\n'`` — units become blank-line-separated paragraphs,
     everything else identical. A frozen ``boilerplate`` frame must have
     been built with the SAME split_pattern."""
-    lines = _doc_lines(df, text_col, id_col, split_pattern)
+    lines = _doc_lines(df, split_pattern)
     if boilerplate is None:
         if min_doc_freq < 2:
             raise ValueError(
@@ -385,19 +365,17 @@ def dedup_lines_across_docs(
     )
 
 
-def shingle_string_rows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def shingle_string_rows(df: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, s) rows of raw n-word shingle strings.
 
     posexplode + window ``lead`` (linear; the row-local array formulation
     with ``element_at`` re-inlines the word-split per access — O(words²),
     measured 12s vs 2s at sf0.1). Documents shorter
     than n words yield their whole normalized text as one shingle. Rows are
-    NOT deduplicated — ``.dropDuplicates([id_col, "s"])`` for set semantics.
+    NOT deduplicated — ``.dropDuplicates(["doc_id", "s"])`` for set semantics.
     """
     norm = df.selectExpr(
-        f"{id_col} AS doc_id", f"split({normalize_text_sql(text_col)}, ' ') AS ws"
+        "doc_id", f"split({normalize_text_sql('text')}, ' ') AS ws"
     )
     short = norm.filter(f"size(ws) < {n}").selectExpr(
         "doc_id", "concat_ws(' ', ws) AS s"
@@ -491,7 +469,7 @@ def minhash_signatures(
     long_sh = f"transform(sequence(1, size(_hs) - {n - 1}), i -> ({shingle_at}) % {p})"
     # docs shorter than n words fold ALL word hashes into one value
     short_sh = (
-        f"array(aggregate(_hs, CAST(0 AS BIGINT), "
+        "array(aggregate(_hs, CAST(0 AS BIGINT), "
         f"(acc, h) -> (acc * {base} + h) % {p}))"
     )
     s3 = s2.selectExpr(
@@ -538,8 +516,6 @@ def _release_on_gc(result: DataFrame, *cached: DataFrame) -> DataFrame:
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 16,
     bands: int = 4,
     n: int = 3,
@@ -559,15 +535,13 @@ def minhash_lsh_pairs(
     caught by dedup_exact far more cheaply.
     """
     pairs, sigs = minhash_lsh_pairs_with_cache(
-        df, text_col, id_col, k, bands, n, seed, max_bucket
+        df, k, bands, n, seed, max_bucket
     )
     return _release_on_gc(pairs, sigs)
 
 
 def minhash_lsh_pairs_with_cache(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 16,
     bands: int = 4,
     n: int = 3,
@@ -582,7 +556,7 @@ def minhash_lsh_pairs_with_cache(
     # the signature table is referenced by the bucket-size filter AND both
     # self-join sides; cache it so the (expensive) signature stage computes
     # once per execution instead of 3-4× (2.6× cold speedup at sf0.1)
-    sigs = minhash_signatures(df, text_col, id_col, k, n, seed).persist()
+    sigs = minhash_signatures(df, "text", "doc_id", k, n, seed).persist()
     return lsh_bucket_pairs(lsh_bands(sigs, k, bands), max_bucket), sigs
 
 
@@ -602,7 +576,7 @@ def lsh_bands(sigs: DataFrame, k: int, bands: int) -> DataFrame:
     band_arr = (
         f"transform(sequence(0, {bands - 1}), b -> "
         f"concat_ws('-', transform(slice(signature, b * {r} + 1, {r}), "
-        f"x -> CAST(x AS STRING))))"
+        "x -> CAST(x AS STRING))))"
     )
     return sigs.selectExpr(
         "doc_id", f"posexplode_outer({band_arr}) AS (band_id, band_sig)"
@@ -649,12 +623,7 @@ def lsh_bucket_pairs(banded: DataFrame, max_bucket: int | None) -> DataFrame:
     )
 
 
-def shingle_pair_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> tuple[DataFrame, DataFrame]:
+def shingle_pair_stats(df: DataFrame, n: int = 3) -> tuple[DataFrame, DataFrame]:
     """THE shared shingle-pair machinery under both exact set measures:
     (doc_a, doc_b, inter, size_a, size_b) for every candidate pair sharing
     ≥ 1 distinct n-gram, plus the persisted exploded frame (caller releases
@@ -668,7 +637,7 @@ def shingle_pair_stats(
     raw corpus) → pair counts partial-aggregated on (doc_a, doc_b) →
     per-doc set sizes joined back."""
     exploded = (
-        shingle_string_rows(df, text_col, id_col, n)
+        shingle_string_rows(df, n)
         .dropDuplicates(["doc_id", "s"])
         .withColumnRenamed("s", "sh")
         .persist()
@@ -726,23 +695,15 @@ def containment_measure(stats: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs sharing ≥1 shingle —
     shingle_pair_stats + the resemblance measure."""
-    stats, exploded = shingle_pair_stats(df, text_col, id_col, n)
+    stats, exploded = shingle_pair_stats(df, n)
     pairs = jaccard_measure(stats, threshold)
     return _release_on_gc(pairs, exploded)
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32
-) -> DataFrame:
+def simhash_signatures(df: DataFrame, bits: int = 32) -> DataFrame:
     """SimHash document signatures (bit-majority vote over word hashes).
 
     For each bit position: +1 if the word's stable hash has the bit set else
@@ -754,8 +715,8 @@ def simhash_signatures(
     Returns (doc_id, simhash int64).
     """
     hashed = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(normalize_text(F.col(text_col)), " ").alias("_ws"),
+        F.col("doc_id"),
+        F.split(normalize_text(F.col("text")), " ").alias("_ws"),
     ).select(
         "doc_id", F.transform("_ws", lambda w: stable_hash64(w)).alias("_hs")
     )
@@ -773,9 +734,7 @@ def simhash_signatures(
     return hashed.select("doc_id", out.alias("simhash"))
 
 
-def template_dedup_counts(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def template_dedup_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Template-collapse exact dedup: group by the masked fingerprint
     (functions/text.template_fingerprint_col — emails/urls/hex/digits
     masked), so machine-generated pages that differ only in volatile
@@ -794,13 +753,13 @@ def template_dedup_counts(
 
     key = F.coalesce(
         F.md5(template_fingerprint_col(F.col(text_col))),
-        F.concat(F.lit("nulltmpl-"), F.col(id_col).cast("string")),
+        F.concat(F.lit("nulltmpl-"), F.col("doc_id").cast("string")),
     )
     return (
-        df.select(key.alias("content_hash"), F.col(id_col))
+        df.select(key.alias("content_hash"), F.col("doc_id"))
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).cast("long").alias("keep_id"),
+            F.min("doc_id").cast("long").alias("keep_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
     )

@@ -41,9 +41,7 @@ from tamer_spark.operators.dedup import (
 )
 
 
-def exact_index(
-    df: DataFrame, text_col: str = "text", normalize: bool = False
-) -> DataFrame:
+def exact_index(df: DataFrame, normalize: bool = False) -> DataFrame:
     """Distinct content digests of a corpus: the exact-dedup index.
 
     One column ``content_hash`` (hex md5). Distinct is a single digest
@@ -51,18 +49,16 @@ def exact_index(
     Persist with ``write_bucketed(idx, "dedup_idx", ["content_hash"])`` so
     future anti-joins need no exchange on the index side.
     """
-    text = normalize_text(F.col(text_col)) if normalize else F.col(text_col)
+    text = normalize_text(F.col("text")) if normalize else F.col("text")
     return df.select(F.md5(text).alias("content_hash")).distinct()
 
 
-def _batch_representatives(
-    new_df: DataFrame, text_col: str, id_col: str, normalize: bool
-) -> DataFrame:
+def _batch_representatives(new_df: DataFrame, text_col: str, normalize: bool) -> DataFrame:
     """``new_df`` plus its ``content_hash``, one row per digest (the min
-    ``id_col``, dedup_exact's keep rule): the in-batch half of both exact
+    ``doc_id``, dedup_exact's keep rule): the in-batch half of both exact
     incremental paths, one ``row_number`` window partitioned by digest."""
     text = normalize_text(F.col(text_col)) if normalize else F.col(text_col)
-    w = Window.partitionBy("content_hash").orderBy(id_col)
+    w = Window.partitionBy("content_hash").orderBy("doc_id")
     return (
         new_df.withColumn("content_hash", F.md5(text))
         .withColumn("_rn", F.row_number().over(w))
@@ -75,7 +71,6 @@ def dedup_exact_incremental(
     new_df: DataFrame,
     index: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     normalize: bool = False,
 ) -> DataFrame:
     """Rows of ``new_df`` that survive exact dedup against ``index`` AND
@@ -97,24 +92,20 @@ def dedup_exact_incremental(
     ``content_hash`` — feed ``.select("content_hash")`` back through an
     append write to advance the index (see ``append_keys``).
     """
-    survivors = _batch_representatives(new_df, text_col, id_col, normalize)
+    survivors = _batch_representatives(new_df, text_col, normalize)
     return survivors.join(index, "content_hash", "left_anti")
 
 
-def _banded_sigs(
-    df: DataFrame, text_col: str, id_col: str, k: int, bands: int, n: int, seed: int
-) -> DataFrame:
+def _banded_sigs(df: DataFrame, k: int, bands: int, n: int, seed: int) -> DataFrame:
     """(doc_id, band_id, band_sig) for every doc × band: the signatures of
     ``df`` through ``lsh_bands``, the banding ``minhash_lsh_pairs`` runs —
     the index build and the incremental probe must produce bit-identical
     band keys or the no-false-negative guarantee silently breaks."""
-    return lsh_bands(minhash_signatures(df, text_col, id_col, k, n, seed), k, bands)
+    return lsh_bands(minhash_signatures(df, "text", "doc_id", k, n, seed), k, bands)
 
 
 def minhash_band_index(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 16,
     bands: int = 4,
     n: int = 3,
@@ -127,7 +118,7 @@ def minhash_band_index(
     docs × bands short rows. Persist bucketed on (band_id, band_sig).
     """
     return (
-        _banded_sigs(df, text_col, id_col, k, bands, n, seed)
+        _banded_sigs(df, k, bands, n, seed)
         .select("band_id", "band_sig")
         .distinct()
     )
@@ -136,8 +127,6 @@ def minhash_band_index(
 def dedup_minhash_incremental(
     new_df: DataFrame,
     index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 16,
     bands: int = 4,
     n: int = 3,
@@ -162,14 +151,14 @@ def dedup_minhash_incremental(
     because the batch is epoch-sized, then append the final survivors'
     bands to the index.
     """
-    banded = _banded_sigs(new_df, text_col, id_col, k, bands, n, seed)
+    banded = _banded_sigs(new_df, k, bands, n, seed)
     collided = (
         banded.join(index, ["band_id", "band_sig"], "left_semi")
         .select("doc_id")
         .distinct()
     )
     return new_df.join(
-        collided, new_df[id_col] == collided["doc_id"], "left_anti"
+        collided, new_df["doc_id"] == collided["doc_id"], "left_anti"
     )
 
 
@@ -177,10 +166,9 @@ def exact_bloom_index_df(
     index_or_df: DataFrame,
     col: str = "content_hash",
     m_bits: int = 1 << 27,
-    k: int = 5,
 ) -> DataFrame:
     """Bloom sidecar over an exact-dedup index's digests: ``(w,
-    word_m{m_bits}k{k})`` rows (the column name encodes the sizing — see
+    word_m{m_bits}k5)`` rows (the column name encodes the sizing — see
     bloom._word_col). It frees later epochs from scanning the exact index
     at all (probabilistic mode) or from shuffling more than the batch's
     bloom-positive sliver (verify mode) — see
@@ -199,7 +187,7 @@ def exact_bloom_index_df(
     """
     from tamer_spark.operators.bloom import bloom_words_df
 
-    return bloom_words_df(index_or_df, col, m_bits=m_bits, k=k)
+    return bloom_words_df(index_or_df, col, m_bits=m_bits, k=5)
 
 
 def dedup_exact_incremental_bloom(
@@ -207,9 +195,6 @@ def dedup_exact_incremental_bloom(
     words: DataFrame,
     m_bits: int | None = None,
     index: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    normalize: bool = False,
 ) -> DataFrame:
     """Incremental exact dedup against a bloom sidecar of the index.
 
@@ -247,7 +232,7 @@ def dedup_exact_incremental_bloom(
             f"dedup_exact_incremental_bloom: words frame {wc} was not built "
             f"at m_bits={m_bits}"
         )
-    batch = _batch_representatives(new_df, text_col, id_col, normalize)
+    batch = _batch_representatives(new_df, "text", False)
     probed = bloom_might_contain(batch, "content_hash", words)
     # column order pinned to dedup_exact_incremental's output (its key join
     # leads with content_hash) so the two paths are drop-in interchangeable

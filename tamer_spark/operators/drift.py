@@ -172,12 +172,7 @@ def numeric_drift(
     return category_drift(bucket(epoch_a), bucket(epoch_b), ("bucket",))
 
 
-def vocab_growth(
-    docs: DataFrame,
-    bucket_col: str,
-    text_col: str = "text",
-    n_window: int = 0,
-) -> DataFrame:
+def vocab_growth(docs: DataFrame, bucket_col: str, n_window: int = 0) -> DataFrame:
     """Vocabulary-growth / OOV monitor — the fourth monitoring leg
     (Heaps' law planning curve): per ordered ingestion bucket (epoch
     number, crawl snapshot index), how many NEVER-SEEN-BEFORE terms
@@ -215,7 +210,7 @@ def vocab_growth(
         docs.filter(F.col(bucket_col).isNotNull())
         .select(
             F.col(bucket_col).alias("bucket"),
-            F.explode_outer(F.split(normalize_text(F.col(text_col)), " ")).alias("word"),
+            F.explode_outer(F.split(normalize_text(F.col("text")), " ")).alias("word"),
         )
         .filter(F.length("word") > 0)
     )

@@ -102,12 +102,7 @@ __all__ = [
 _DEC = "CAST({} AS DECIMAL(38,0))"
 
 
-def hashed_ngram_occurrences(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 1024,
-) -> DataFrame:
+def hashed_ngram_occurrences(docs: DataFrame, buckets: int = 1024) -> DataFrame:
     """Per-OCCURRENCE hashed n-gram stream: ``(doc_id, b, c=1)`` — one row
     per word unigram+bigram instance, MAP-ONLY (no shuffle at all).
 
@@ -134,8 +129,8 @@ def hashed_ngram_occurrences(
     if buckets < 1:
         raise ValueError(f"hashed_ngram_occurrences: buckets must be >= 1, got {buckets}")
     words = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(normalize_text(F.col(text_col)), " ").alias("_ws"),
+        F.col("doc_id"),
+        F.split(normalize_text(F.col("text")), " ").alias("_ws"),
     )
     staged = words.select(
         "doc_id",
@@ -164,12 +159,7 @@ def hashed_ngram_occurrences(
     )
 
 
-def hashed_ngram_buckets(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 1024,
-) -> DataFrame:
+def hashed_ngram_buckets(docs: DataFrame, buckets: int = 1024) -> DataFrame:
     """Per-document hashed n-gram features: ``(doc_id, b, c)`` — bucket id
     and count of word unigram+bigram instances hashing into it. One
     (doc, bucket) count shuffle over :func:`hashed_ngram_occurrences`.
@@ -177,7 +167,7 @@ def hashed_ngram_buckets(
     consumes the occurrence stream directly (see there for why).
     """
     return (
-        hashed_ngram_occurrences(docs, text_col, id_col, buckets)
+        hashed_ngram_occurrences(docs, buckets)
         .groupBy("doc_id", "b")
         .agg(F.sum("c").alias("c"))
     )
@@ -315,8 +305,6 @@ def dsir_select(
     raw_docs: DataFrame,
     target_docs: DataFrame,
     k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     buckets: int = 1024,
     scale: int = 1_000_000,
     u_mod: int = 65_536,
@@ -339,8 +327,8 @@ def dsir_select(
     cms_heavy_hitters two-scan trade; interleaved A/B at sf0.1 —
     per-round medians: no-persist 0.63× the former persisted
     (doc, bucket)-counts pipeline, values identical)."""
-    raw_occ = hashed_ngram_occurrences(raw_docs, text_col, id_col, buckets)
-    tgt_occ = hashed_ngram_occurrences(target_docs, text_col, id_col, buckets)
+    raw_occ = hashed_ngram_occurrences(raw_docs, buckets)
+    tgt_occ = hashed_ngram_occurrences(target_docs, buckets)
     ratios = dsir_ratio_table(tgt_occ, raw_occ, buckets, scale)
     weights = dsir_importance_weights(raw_occ, ratios, scale)
     return dsir_priority_sample(weights, k, u_mod, seed)

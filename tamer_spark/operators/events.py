@@ -29,20 +29,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def funnel_counts(
-    events: DataFrame,
-    stages: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def funnel_counts(events: DataFrame, stages: list[str]) -> DataFrame:
     """Users reaching each stage of an ORDERED funnel: stage i counts users
     with a ``stages[i]`` event at-or-after their stage-(i-1) time (first
     qualifying occurrence). Returns (stage_idx, stage, users), one row per
     stage, monotone non-increasing.
 
     Single-pass shape (r15): every stage time is a per-user constant, so
-    all S of them ride ONE exchange on ``user_col`` as stacked
+    all S of them ride ONE exchange on ``user_id`` as stacked
     whole-partition windows — ``t0 = min(CASE stage-0 ts) OVER (PARTITION
     BY user)``, then ``t_i = min(CASE stage-i AND ts >= t_{i-1}) OVER
     (same partition)`` — followed by a groupBy(user) that REUSES that
@@ -58,23 +52,23 @@ def funnel_counts(
     if not stages:
         raise ValueError("stages must be non-empty")
 
-    w = Window.partitionBy(user_col)
-    d = events.select(user_col, type_col, ts_col).withColumn(
-        "t0", F.min(F.when(F.col(type_col) == stages[0], F.col(ts_col))).over(w)
+    w = Window.partitionBy("user_id")
+    d = events.select("user_id", "event_type", "ts").withColumn(
+        "t0", F.min(F.when(F.col("event_type") == stages[0], F.col("ts"))).over(w)
     )
     for i, s in enumerate(stages[1:], 1):
         d = d.withColumn(
             f"t{i}",
             F.min(
                 F.when(
-                    (F.col(type_col) == s) & (F.col(ts_col) >= F.col(f"t{i-1}")),
-                    F.col(ts_col),
+                    (F.col("event_type") == s) & (F.col("ts") >= F.col(f"t{i-1}")),
+                    F.col("ts"),
                 )
             ).over(w),
         )
     # t_i is constant within the user partition, so max() just collapses
     # the event-grain rows; the groupBy shares the windows' exchange
-    per_user = d.groupBy(user_col).agg(
+    per_user = d.groupBy("user_id").agg(
         *[F.max(f"t{i}").alias(f"t{i}") for i in range(len(stages))]
     )
     counts = per_user.agg(
@@ -101,11 +95,7 @@ def funnel_counts(
     ).select("_s.stage_idx", "_s.stage", "_s.users")
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Weekly cohort retention: cohort = ISO week of the user's first
     event; a user counts toward (cohort, offset) iff they had any event in
     cohort-week + offset. Returns (cohort_week timestamp, week_offset,
@@ -119,12 +109,12 @@ def cohort_retention(
     2 scans / 3 exchanges / 1 join -> 1 scan / 2 exchanges / 0 joins;
     interleaved A/B at sf0.1: 0.611 s -> 0.502 median. Same rows (pinned
     at sf0.1 and by tests)."""
-    w = Window.partitionBy(user_col)
+    w = Window.partitionBy("user_id")
     active = (
         events.select(
-            user_col,
-            F.date_trunc("week", F.min(ts_col).over(w)).alias("cohort_week"),
-            F.date_trunc("week", F.col(ts_col)).alias("wk"),
+            "user_id",
+            F.date_trunc("week", F.min("ts").over(w)).alias("cohort_week"),
+            F.date_trunc("week", F.col("ts")).alias("wk"),
         )
         .distinct()
     )
@@ -145,14 +135,7 @@ def cohort_retention(
     )
 
 
-def transition_counts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-    session_gap_minutes: int | None = None,
-) -> DataFrame:
+def transition_counts(events: DataFrame, session_gap_minutes: int | None = None) -> DataFrame:
     """Markov transition counts over per-user event streams — the journey-
     mining primitive between funnels (fixed stage order) and full sequence
     models: for every consecutive event pair within a user's stream,
@@ -180,11 +163,11 @@ def transition_counts(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
-        events.select(user_col, type_col, ts_col, tiebreak_col)
-        .withColumn("_from", F.lag(type_col).over(w))
-        .withColumn("_prev_ts", F.lag(ts_col).over(w))
+        events.select("user_id", "event_type", "ts", "event_id")
+        .withColumn("_from", F.lag("event_type").over(w))
+        .withColumn("_prev_ts", F.lag("ts").over(w))
         .filter(F.col("_from").isNotNull())
     )
     if session_gap_minutes is not None:
@@ -192,13 +175,13 @@ def transition_counts(
         # microsecond timestamps and sessionize_events' gap rule compares at
         # micros — a pair straddling the threshold by <1s must NOT count
         pairs = pairs.filter(
-            F.unix_micros(F.col(ts_col)) - F.unix_micros(F.col("_prev_ts"))
+            F.unix_micros(F.col("ts")) - F.unix_micros(F.col("_prev_ts"))
             <= int(session_gap_minutes) * 60_000_000
         )
     return (
-        pairs.groupBy(F.col("_from").alias("from_type"), F.col(type_col).alias("to_type"))
+        pairs.groupBy(F.col("_from").alias("from_type"), F.col("event_type").alias("to_type"))
         .agg(
             F.count(F.lit(1)).alias("n_transitions"),
-            F.count_distinct(user_col).alias("n_users"),
+            F.count_distinct("user_id").alias("n_users"),
         )
     )

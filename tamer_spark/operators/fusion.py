@@ -28,32 +28,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def rrf_fuse(
-    rankings: list[DataFrame],
-    query_col: str = "query_id",
-    item_col: str = "neighbor_id",
-    rank_col: str = "rank",
-    k0: int = 60,
-    k: int = 5,
-) -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame], k0: int = 60, k: int = 5) -> DataFrame:
     """Fuse ranked lists into (query, item, rrf_score, rank), top-``k`` per
     query, ties broken by item id. Every input must carry
-    (query_col, item_col, rank_col); extra columns are ignored."""
+    (query_id, neighbor_id, rank); extra columns are ignored."""
     if not rankings:
         raise ValueError("rankings must be non-empty")
-    tagged = [r.select(query_col, item_col, rank_col) for r in rankings]
+    tagged = [r.select("query_id", "neighbor_id", "rank") for r in rankings]
     u = reduce(lambda a, b: a.unionByName(b), tagged)
-    scored = u.groupBy(query_col, item_col).agg(
-        F.expr(f"round(sum(1.0D / ({float(k0)!r}D + {rank_col})), 6)").alias(
+    scored = u.groupBy("query_id", "neighbor_id").agg(
+        F.expr(f"round(sum(1.0D / ({float(k0)!r}D + rank)), 6)").alias(
             "rrf_score"
         )
     )
     return (
         scored.selectExpr(
             "*",
-            f"row_number() OVER (PARTITION BY {query_col}"
-            f" ORDER BY rrf_score DESC, {item_col} ASC) AS _rk",
+            "row_number() OVER (PARTITION BY query_id"
+            " ORDER BY rrf_score DESC, neighbor_id ASC) AS _rk",
         )
         .filter(f"_rk <= {k}")
-        .selectExpr(query_col, item_col, "rrf_score", "CAST(_rk AS BIGINT) AS rank")
+        .selectExpr("query_id", "neighbor_id", "rrf_score", "CAST(_rk AS BIGINT) AS rank")
     )

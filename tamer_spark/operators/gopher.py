@@ -107,15 +107,7 @@ def _top_col(n: int) -> str:
 
 def gopher_signals(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    min_alpha_frac: float = 0.8,
-    min_stopwords: int = 2,
     top_ngrams: tuple = TOP_NGRAMS_DEFAULT,
     dup_ngrams: tuple = DUP_NGRAMS_DEFAULT,
     line_signals: bool = True,
@@ -137,11 +129,11 @@ def gopher_signals(
     line/paragraph family (counts + ratios). ``keep`` = 1 iff every
     ENABLED rule passes (thresholds default to the paper's values); the
     stop-word rule uses the paper's 8-word set (``n_gopher_stopwords >=
-    min_stopwords``). Disabling a signal family removes both its columns
+    2``). Disabling a signal family removes both its columns
     and its keep terms (the round-4 subset is ``top_ngrams=((2, 0.2),),
     dup_ngrams=(), line_signals=False``).
     """
-    raw = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_raw"))
+    raw = docs.select(F.col("doc_id"), F.col("text").alias("_raw"))
     # normalize_text (operators/dedup.py) rendered as SQL — same expression
     base = raw.selectExpr(
         "doc_id", "_raw", "trim(regexp_replace(lower(_raw), '\\\\s+', ' ')) AS _t"
@@ -304,12 +296,12 @@ def gopher_signals(
         out = out.selectExpr("*", *frac_cols)
 
     rules = [
-        f"n_words BETWEEN {min_words} AND {max_words}",
-        f"mean_word_len >= {_d(min_mean_word_len)}",
-        f"mean_word_len <= {_d(max_mean_word_len)}",
-        f"symbol_word_ratio < {_d(max_symbol_ratio)}",
-        f"alpha_word_frac > {_d(min_alpha_frac)}",
-        f"n_gopher_stopwords >= {min_stopwords}",
+        f"n_words BETWEEN {min_words} AND 100000",
+        "mean_word_len >= 3.0D",
+        "mean_word_len <= 10.0D",
+        "symbol_word_ratio < 0.1D",
+        "alpha_word_frac > 0.8D",
+        "n_gopher_stopwords >= 2",
         *[f"{_top_col(n)} < {_d(thr)}" for n, thr in top_ngrams],
         *[f"dup_{n}gram_char_frac < {_d(thr)}" for n, thr in dup_ngrams],
     ]

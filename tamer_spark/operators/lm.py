@@ -10,9 +10,9 @@ training AND scoring are both distributed DataFrame plans).
 
 Everything stays in exact integer arithmetic (the repo's cross-engine
 determinism convention): the per-bigram score is the add-one-smoothed
-conditional probability scaled to parts-per-``scale`` and floored —
+conditional probability scaled to parts-per-million and floored —
 
-    p_scaled(w2 | w1) = (scale * (c(w1 w2) + 1)) div (c(w1) + V)
+    p_scaled(w2 | w1) = (1000000 * (c(w1 w2) + 1)) div (c(w1) + V)
 
 — an int64, so the per-document sum is order-independent and bit-identical on
 any engine/partitioning. A log-space score (true log-likelihood) would hinge
@@ -61,13 +61,13 @@ def _spread(docs: DataFrame) -> DataFrame:
     return docs
 
 
-def _doc_bigrams(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _doc_bigrams(docs: DataFrame) -> DataFrame:
     """(doc_id, bg) — one row per bigram INSTANCE, bigrams built row-locally
     (the staged-array pattern: no exploded self-join, no O(words²)
     re-inlining; docs with fewer than 2 words contribute nothing)."""
     words = docs.selectExpr(
-        f"{id_col} AS doc_id",
-        f"split({normalize_text_sql(text_col)}, ' ') AS _ws",
+        "doc_id",
+        f"split({normalize_text_sql('text')}, ' ') AS _ws",
     )
     # when-guard is load-bearing: sequence(1, size-1) for a 1-word doc is
     # sequence(1, 0) == DESCENDING [1, 0], whose transform would read
@@ -93,19 +93,17 @@ def _doc_bigrams(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def bigram_counts(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def bigram_counts(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Train the model: returns ``(bigram_lm, unigram_counts, vocab)`` —
     (bg, c2), (w, c1), and a 1-row (V) table. All three are count aggregates
     with map-side combine; the vocabulary size is folded into the plan as a
     1-row cross join at score time (never a driver-side ``count()``)."""
     docs = _spread(docs)
-    bg = _doc_bigrams(docs, text_col, id_col)
+    bg = _doc_bigrams(docs)
     lm = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     uni = (
         docs.select(
-            F.explode_outer(F.split(normalize_text(F.col(text_col)), " ")).alias("w")
+            F.explode_outer(F.split(normalize_text(F.col("text")), " ")).alias("w")
         )
         .filter(F.col("w").isNotNull())
         .groupBy("w")
@@ -117,9 +115,6 @@ def bigram_counts(
 
 def bigram_lm_score(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    scale: int = 1_000_000,
     model: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Score every document under the (self- or externally-) trained bigram
@@ -144,15 +139,12 @@ def bigram_lm_score(
     return value goes out of scope and the derived plan recomputes the
     extraction the cache was meant to pay for once (correct but slow —
     ADVICE r3)."""
-    out, cached = bigram_lm_score_with_cache(docs, text_col, id_col, scale, model)
+    out, cached = bigram_lm_score_with_cache(docs, model)
     return out if cached is None else _release_on_gc(out, cached)
 
 
 def bigram_lm_score_with_cache(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    scale: int = 1_000_000,
     model: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """``bigram_lm_score`` returning ``(scores, cached_bigram_stream)`` so a
@@ -162,16 +154,16 @@ def bigram_lm_score_with_cache(
     Same contract as minhash_lsh_pairs_with_cache."""
     if model is not None:
         lm, uni, vocab = model
-        bg_stream = _doc_bigrams(_spread(docs), text_col, id_col)
+        bg_stream = _doc_bigrams(_spread(docs))
         cached = None
     else:
         docs = _spread(docs)
-        bg_stream = _doc_bigrams(docs, text_col, id_col).persist()
+        bg_stream = _doc_bigrams(docs).persist()
         cached = bg_stream
         lm = bg_stream.groupBy("bg").agg(F.expr("count(1)").alias("c2"))
         uni = (
             docs.selectExpr(
-                f"explode_outer(split({normalize_text_sql(text_col)}, ' ')) AS w"
+                f"explode_outer(split({normalize_text_sql('text')}, ' ')) AS w"
             )
             .filter("w IS NOT NULL")
             .groupBy("w")
@@ -185,7 +177,7 @@ def bigram_lm_score_with_cache(
         .crossJoin(F.broadcast(vocab))
         .selectExpr(
             "*",
-            f"({scale} * (coalesce(c2, 0) + 1)) div (coalesce(c1, 0) + V)"
+            "(1000000 * (coalesce(c2, 0) + 1)) div (coalesce(c1, 0) + V)"
             " AS p_scaled",
         )
     )

@@ -27,25 +27,19 @@ from pyspark.sql import functions as F
 from tamer_spark.functions.hashing import stable_hash64
 
 
-def stratified_mix(
-    df: DataFrame,
-    weight: Column,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "mix-",
-) -> DataFrame:
+def stratified_mix(df: DataFrame, weight: Column) -> DataFrame:
     """Resample ``df`` so sources appear in ``weight`` proportions.
 
     ``weight`` is an integer Column expression over the input row (e.g. a
     CASE over ``source``). Returns the kept rows as (id, source, mix_rank)
     with ``mix_rank`` = 1-based hash rank within the source.
     """
-    base = df.select(F.col(id_col), F.col(source_col), weight.cast("long").alias("w"))
-    counts = base.groupBy(source_col, "w").agg(F.count(F.lit(1)).alias("n"))
+    base = df.select(F.col("doc_id"), F.col("source"), weight.cast("long").alias("w"))
+    counts = base.groupBy("source", "w").agg(F.count(F.lit(1)).alias("n"))
     # limiting source = smallest n/w (double ratio is only used to *choose*;
     # ties broken by source name). IEEE division is identical cross-engine.
     lim_w = Window.orderBy(
-        (F.col("n").cast("double") / F.col("w")).asc(), F.col(source_col).asc()
+        (F.col("n").cast("double") / F.col("w")).asc(), F.col("source").asc()
     )
     lim = (
         counts.withColumn("_r", F.row_number().over(lim_w))
@@ -53,27 +47,22 @@ def stratified_mix(
         .select(F.col("n").alias("n_lim"), F.col("w").alias("w_lim"))
     )
     quotas = counts.crossJoin(F.broadcast(lim)).select(
-        source_col,
+        "source",
         F.floor((F.col("w") * F.col("n_lim")) / F.col("w_lim")).alias("quota"),
     )
-    rank_w = Window.partitionBy(source_col).orderBy(
-        stable_hash64(F.concat(F.lit(salt), F.col(id_col).cast("string"))).asc(),
-        F.col(id_col).asc(),
+    rank_w = Window.partitionBy("source").orderBy(
+        stable_hash64(F.concat(F.lit("mix-"), F.col("doc_id").cast("string"))).asc(),
+        F.col("doc_id").asc(),
     )
     ranked = base.withColumn("mix_rank", F.row_number().over(rank_w).cast("long"))
     return (
-        ranked.join(F.broadcast(quotas), source_col)
+        ranked.join(F.broadcast(quotas), "source")
         .filter(F.col("mix_rank") <= F.col("quota"))
-        .select(id_col, source_col, "mix_rank")
+        .select("doc_id", "source", "mix_rank")
     )
 
 
-def seeded_shuffle(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    seed: str = "shuffle-0",
-    n_shards: int = 8,
-) -> DataFrame:
+def seeded_shuffle(df: DataFrame, seed: str = "shuffle-0", n_shards: int = 8) -> DataFrame:
     """Deterministic seeded global shuffle — the training-order
     materialization step (every LLM run globally shuffles its corpus once
     per epoch seed; a re-run with the same seed MUST reproduce the exact
@@ -97,23 +86,16 @@ def seeded_shuffle(
     # every NULL-id row the constant key md5(seed) — concat propagates
     # NULL, matching the oracle's NULL-propagating `||` (a NULL id yields
     # NULL key/shard on both engines instead of diverging)
-    k = F.md5(F.concat(F.lit(seed), F.lit(":"), F.col(id_col).cast("string")))
-    keyed = df.select(F.col(id_col), k.alias("shuffle_key")).withColumn(
+    k = F.md5(F.concat(F.lit(seed), F.lit(":"), F.col("doc_id").cast("string")))
+    keyed = df.select(F.col("doc_id"), k.alias("shuffle_key")).withColumn(
         "shard",
         F.conv(F.substring("shuffle_key", 1, 15), 16, 10).cast("long") % n_shards,
     )
-    w = Window.partitionBy("shard").orderBy("shuffle_key", id_col)
+    w = Window.partitionBy("shard").orderBy("shuffle_key", "doc_id")
     return keyed.withColumn("pos", F.row_number().over(w).cast("long"))
 
 
-def leakage_safe_split(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    salt: str = "csplit-",
-    train_pct: int = 80,
-    val_pct: int = 10,
-) -> DataFrame:
+def leakage_safe_split(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Cluster-aware train/val/test split: near-duplicate CLUSTERS never
     straddle a split boundary.
 
@@ -132,17 +114,17 @@ def leakage_safe_split(
     """
     from tamer_spark.operators.cc import attach_cluster_ids
 
-    clustered = attach_cluster_ids(df.select(id_col), pairs, id_col=id_col)
+    clustered = attach_cluster_ids(df.select("doc_id"), pairs)
     h = (
-        stable_hash64(F.concat(F.lit(salt), F.col("cluster_rep").cast("string")))
+        stable_hash64(F.concat(F.lit("csplit-"), F.col("cluster_rep").cast("string")))
         % 100
     )
     return clustered.select(
-        id_col,
+        "doc_id",
         "cluster_rep",
         "cluster_size",
-        F.when(h < train_pct, "train")
-        .when(h < train_pct + val_pct, "val")
+        F.when(h < 80, "train")
+        .when(h < 90, "val")
         .otherwise("test")
         .alias("split"),
     )
@@ -152,7 +134,6 @@ def cap_per_group(
     df: DataFrame,
     group_col: str,
     cap: int,
-    id_col: str = "doc_id",
     salt: str = "domcap-",
     prefilter_slack: int | None = None,
 ) -> DataFrame:
@@ -203,7 +184,7 @@ def cap_per_group(
     window's one hot task dominates the stage or OOMs and no AQE
     mechanism can split it.
 
-    Returns (id_col, group_col KEY, keep_rank, n_group) with n_group the
+    Returns (doc_id, group_col KEY, keep_rank, n_group) with n_group the
     TOTAL group size (pre-cap, pre-prefilter) — the monitoring surface:
     cap utilization is ``least(cap, n_group)/n_group``.
     """
@@ -215,21 +196,21 @@ def cap_per_group(
     gs = F.col(group_col).cast("string")
     key = F.coalesce(
         F.when(F.length(gs) > 0, gs),
-        F.concat(F.lit("nullgroup-"), F.col(id_col).cast("string")),
+        F.concat(F.lit("nullgroup-"), F.col("doc_id").cast("string")),
     )
-    h = stable_hash64(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+    h = stable_hash64(F.concat(F.lit(salt), F.col("doc_id").cast("string")))
     # NULL ids drop (the bottomk_sample rule): they cannot be hashed — an
     # unfiltered NULL id would sort NULLS-FIRST to rank 1 inside a real
     # group, and a NULL-id NULL-group row would make the singleton key
     # itself NULL, merging all such rows under one shared group
-    base = df.filter(F.col(id_col).isNotNull()).select(
-        F.col(id_col), key.alias("_g"), h.alias("_h")
+    base = df.filter(F.col("doc_id").isNotNull()).select(
+        F.col("doc_id"), key.alias("_g"), h.alias("_h")
     )
 
-    wrank = Window.partitionBy("_g").orderBy(F.col("_h").asc(), F.col(id_col).asc())
+    wrank = Window.partitionBy("_g").orderBy(F.col("_h").asc(), F.col("doc_id").asc())
     wall = Window.partitionBy("_g")
     sel = lambda df: df.filter(F.col("keep_rank") <= cap).select(  # noqa: E731
-        id_col,
+        "doc_id",
         F.col("_g").alias(group_col),
         "keep_rank",
         F.col("n_group").cast("long").alias("n_group"),
@@ -285,9 +266,7 @@ def cap_per_group(
     return sel(final_in.withColumn("keep_rank", F.row_number().over(wrank).cast("long")))
 
 
-def bottomk_sample(
-    df: DataFrame, k: int, id_col: str = "doc_id", salt: str = "sample-"
-) -> DataFrame:
+def bottomk_sample(df: DataFrame, k: int, salt: str = "sample-") -> DataFrame:
     """Deterministic k-row uniform sample as a BOTTOM-K sketch — the
     distributed, mergeable replacement for reservoir sampling (reservoirs
     are order-dependent; a salted-hash bottom-k is the same uniform draw
@@ -309,24 +288,24 @@ def bottomk_sample(
     no drift between a fold and a from-scratch rebuild (pinned in pytest).
     NULL ids are dropped (they cannot be hashed — mirror in the oracle).
 
-    Returns (id_col, sample_rank 1..min(k, n)).
+    Returns (doc_id, sample_rank 1..min(k, n)).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    h = stable_hash64(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+    h = stable_hash64(F.concat(F.lit(salt), F.col("doc_id").cast("string")))
     head = (
-        df.filter(F.col(id_col).isNotNull())
-        .select(F.col(id_col), h.alias("_h"))
-        .orderBy(F.col("_h").asc(), F.col(id_col).asc())
+        df.filter(F.col("doc_id").isNotNull())
+        .select(F.col("doc_id"), h.alias("_h"))
+        .orderBy(F.col("_h").asc(), F.col("doc_id").asc())
         .limit(k)
     )
-    w = Window.orderBy(F.col("_h").asc(), F.col(id_col).asc())
+    w = Window.orderBy(F.col("_h").asc(), F.col("doc_id").asc())
     return head.withColumn("sample_rank", F.row_number().over(w).cast("long")).select(
-        id_col, "sample_rank"
+        "doc_id", "sample_rank"
     )
 
 
-def bottomk_merge(samples: list[DataFrame], k: int, id_col: str = "doc_id", salt: str = "sample-") -> DataFrame:
+def bottomk_merge(samples: list[DataFrame], k: int) -> DataFrame:
     """Fold per-epoch bottom-k samples into the bottom-k of their union —
     O(k·epochs) work, no base-data access. Exactly ``bottomk_sample`` over
     the concatenated samples; a separate name so pipelines state intent
@@ -339,17 +318,11 @@ def bottomk_merge(samples: list[DataFrame], k: int, id_col: str = "doc_id", salt
     # in two per-epoch samples; without dedup it would occupy two of the
     # k slots and the fold would no longer equal bottomk over the distinct
     # corpus — the sketch law is over the id SET, not the multiset
-    u = reduce(DataFrame.unionByName, (s.select(id_col) for s in samples)).distinct()
-    return bottomk_sample(u, k, id_col=id_col, salt=salt)
+    u = reduce(DataFrame.unionByName, (s.select("doc_id") for s in samples)).distinct()
+    return bottomk_sample(u, k)
 
 
-def bottomk_grouped(
-    df: DataFrame,
-    k: int,
-    group_col: str,
-    id_col: str = "doc_id",
-    salt: str = "sample-",
-) -> DataFrame:
+def bottomk_grouped(df: DataFrame, k: int, group_col: str) -> DataFrame:
     """STRATIFIED deterministic sample: ``bottomk_sample`` independently
     per ``group_col`` stratum — k rows per language/source/domain, the
     eval-set construction rule (a global uniform sample starves tail
@@ -362,7 +335,7 @@ def bottomk_grouped(
     NULL ids are dropped (cannot be hashed); a NULL group is its OWN
     stratum — both engines group NULLs together under PARTITION BY, and
     dropping undocumented rows from a sample silently biases it (the
-    winsorize left-join stance). Returns (group_col, id_col, sample_rank
+    winsorize left-join stance). Returns (group_col, doc_id, sample_rank
     1..min(k, stratum size)).
 
     Scale shape: ONE exchange on the group + a per-group rank window —
@@ -373,15 +346,15 @@ def bottomk_grouped(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    h = stable_hash64(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    base = df.filter(F.col(id_col).isNotNull()).select(
-        group_col, id_col, h.alias("_h")
+    h = stable_hash64(F.concat(F.lit("sample-"), F.col("doc_id").cast("string")))
+    base = df.filter(F.col("doc_id").isNotNull()).select(
+        group_col, "doc_id", h.alias("_h")
     )
     w = Window.partitionBy(group_col).orderBy(
-        F.col("_h").asc(), F.col(id_col).asc()
+        F.col("_h").asc(), F.col("doc_id").asc()
     )
     return (
         base.withColumn("sample_rank", F.row_number().over(w).cast("long"))
         .filter(F.col("sample_rank") <= k)
-        .select(group_col, id_col, "sample_rank")
+        .select(group_col, "doc_id", "sample_rank")
     )

@@ -9,8 +9,8 @@ Design for 100 TB multimodal corpora:
   (schemas, batch shapes, partitioning) is real Spark; the codec call is a
   seam,
 - the actual image decoders (PIL, ffmpeg) are NOT in this environment, so
-  the perceptual hash takes a pluggable ``pixelizer``; ``fake_pixelizer``
-  is a deterministic stand-in so pipelines and tests exercise the full
+  the perceptual hash runs ``fake_pixelizer``, a deterministic stand-in
+  for the codec, so pipelines and tests exercise the full
   distributed path.
 
 At scale, partition count is the lever: ``spark.sql.files.maxPartitionBytes``
@@ -21,7 +21,7 @@ sets decode parallelism independent of upstream file layout.
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -49,33 +49,26 @@ def binary_stats(df: DataFrame, binary_col: str, id_col: str) -> DataFrame:
     return df.select(id_col, binary_col).mapInPandas(stats, f"{id_col} long, n_bytes long, sha256_hex string")
 
 
-def fake_pixelizer(blob: bytes, n: int = 64) -> list[int]:
+def fake_pixelizer(blob: bytes) -> list[int]:
     """Deterministic stand-in for decode-and-downscale-to-grayscale: derives
-    ``n`` pseudo pixel intensities (0..255) from the content hash, with the
+    64 pseudo pixel intensities (an 8×8 grid) (0..255) from the content hash, with the
     LOCALITY a perceptual hash needs to be meaningful in tests — blobs
     sharing a prefix produce mostly-equal pixel arrays (each 16-byte block
     of the blob perturbs only its own region of the pixel grid)."""
-    base = hashlib.sha256(b"phash-base").digest() * ((n + 31) // 32)
-    px = [base[i] for i in range(n)]
+    base = hashlib.sha256(b"phash-base").digest() * 2
+    px = [base[i] for i in range(64)]
     for block_no in range(0, len(blob), 16):
         h = hashlib.sha256(bytes(blob[block_no : block_no + 16])).digest()
-        region = (block_no // 16) % max(1, n // 8)
-        for j in range(n // 8):
-            px[(region * (n // 8) + j) % n] = h[j % 32]
+        region = (block_no // 16) % 8
+        for j in range(8):
+            px[region * 8 + j] = h[j]
     return px
 
 
-def phash_images(
-    df: DataFrame,
-    binary_col: str,
-    id_col: str,
-    pixelizer: Callable[[bytes, int], list[int]] | None = None,
-    bits: int = 64,
-) -> DataFrame:
+def phash_images(df: DataFrame, binary_col: str, id_col: str) -> DataFrame:
     """Perceptual average-hash over image blobs: decode+downscale to
-    ``bits`` grayscale pixels (pluggable ``pixelizer(blob, bits)`` — plug a
-    PIL-based 8×8 grayscale resize where codecs exist; the default is the
-    deterministic fake), then bit i = pixel_i > mean. Near-identical
+    64 grayscale pixels (``fake_pixelizer``; a PIL-based 8×8 grayscale
+    resize replaces it where codecs exist), then bit i = pixel_i > mean. Near-identical
     images differ in few bits; hamming distance is the similarity metric.
 
     Arrow-batched ``mapInPandas``, numpy-vectorized across the batch (one
@@ -84,16 +77,14 @@ def phash_images(
     """
     import numpy as np
 
-    fn = pixelizer or fake_pixelizer
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            px = np.array([fn(bytes(b), bits) for b in pdf[binary_col]], dtype=np.float64)
+            px = np.array([fake_pixelizer(bytes(b)) for b in pdf[binary_col]], dtype=np.float64)
             if len(px) == 0:
                 yield pd.DataFrame({id_col: pdf[id_col], "phash": pd.Series([], dtype="int64")})
                 continue
             above = px > px.mean(axis=1, keepdims=True)
-            weights = (1 << np.arange(bits, dtype=np.uint64))
+            weights = (1 << np.arange(64, dtype=np.uint64))
             hashes = (above.astype(np.uint64) * weights).sum(axis=1).astype(np.int64)
             yield pd.DataFrame({id_col: pdf[id_col], "phash": hashes})
 

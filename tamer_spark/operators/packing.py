@@ -34,22 +34,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def with_pack_group(df: DataFrame, id_col: str = "doc_id", groups: int = 8) -> DataFrame:
+def with_pack_group(df: DataFrame, groups: int = 8) -> DataFrame:
     """Assign the deterministic pack group: ``id mod groups``.
 
     Document ids are arbitrary w.r.t. length, so modulo balances groups; for
     adversarial id spaces hash first (functions.hashing.stable_hash64).
     """
-    return df.withColumn("pack_group", (F.col(id_col) % groups).cast("long"))
+    return df.withColumn("pack_group", (F.col("doc_id") % groups).cast("long"))
 
 
-def pack_offsets(
-    df: DataFrame,
-    budget: int,
-    id_col: str = "doc_id",
-    token_col: str = "n_tokens",
-    group_col: str = "pack_group",
-) -> Column:
+def pack_offsets(df: DataFrame, budget: int) -> Column:
     """Concat-and-split layout: per-group running offsets and sequence spans.
 
     Adds ``start_off`` (tokens before this doc in its group's stream),
@@ -58,25 +52,19 @@ def pack_offsets(
     no tokens and report the sequence the cut position falls in.
     """
     w = (
-        Window.partitionBy(group_col)
-        .orderBy(id_col)
+        Window.partitionBy("pack_group")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    start = F.coalesce(F.sum(token_col).over(w), F.lit(0)).cast("long")
+    start = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("long")
     out = df.withColumn("start_off", start)
-    end = F.col("start_off") + F.greatest(F.col(token_col), F.lit(1)) - 1
+    end = F.col("start_off") + F.greatest(F.col("n_tokens"), F.lit(1)) - 1
     return out.withColumn(
         "seq_first", F.floor(F.col("start_off") / budget).cast("long")
     ).withColumn("seq_last", F.floor(end / budget).cast("long"))
 
 
-def pack_greedy(
-    df: DataFrame,
-    budget: int,
-    id_col: str = "doc_id",
-    token_col: str = "n_tokens",
-    group_col: str = "pack_group",
-) -> DataFrame:
+def pack_greedy(df: DataFrame, budget: int) -> DataFrame:
     """Whole-document greedy packing: (id, group, tokens, bin_id) rows.
 
     Within each group, documents are taken in id order; a bin closes when
@@ -87,26 +75,26 @@ def pack_greedy(
     """
     import pandas as pd
 
-    schema = f"{id_col} long, {group_col} long, {token_col} long, bin_id long"
+    schema = "doc_id long, pack_group long, n_tokens long, bin_id long"
 
     def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
+        pdf = pdf.sort_values("doc_id", kind="mergesort").reset_index(drop=True)
         bins = []
         fill = 0
         b = 0
-        for n in pdf[token_col]:
+        for n in pdf["n_tokens"]:
             n = int(n)
             if fill > 0 and fill + n > budget:
                 b += 1
                 fill = 0
             fill += n
             bins.append(b)
-        pdf = pdf[[id_col, group_col, token_col]].copy()
+        pdf = pdf[["doc_id", "pack_group", "n_tokens"]].copy()
         pdf["bin_id"] = bins
         return pdf
 
     return (
-        df.select(id_col, group_col, token_col)
-        .groupBy(group_col)
+        df.select("doc_id", "pack_group", "n_tokens")
+        .groupBy("pack_group")
         .applyInPandas(pack, schema)
     )

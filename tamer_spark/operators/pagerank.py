@@ -4,7 +4,8 @@ determinism posture as the k-means/PQ training replays: every round is
 exact int64 arithmetic, so an unrolled-CTE oracle reproduces the ranks
 bit-for-bit in any engine.
 
-Formulation (micro-rank units, total mass ~= SCALE):
+Formulation (micro-rank units, total mass ~= SCALE; damping d = 0.85,
+d_ppm = 850,000):
 
     R_0(v)     = SCALE div n
     R_{k+1}(v) = base + (d_ppm · Σ_{u→v} (R_k(u) div deg(u))) div 10⁶
@@ -33,16 +34,9 @@ SCALE = 10**12
 PPM = 10**6
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = 3,
-    d_ppm: int = 850_000,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    dedup_edges: bool = True,
-) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = 3, dedup_edges: bool = True) -> DataFrame:
     """Ranks after ``iters`` exact power-iteration rounds over DIRECTED
-    ``edges``. Returns (node, rank) for every node appearing as src or
+    ``edges`` (columns ``src``, ``dst``). Returns (node, rank) for every node appearing as src or
     dst; dangling nodes keep receiving ``base`` and leak their mass
     (standard simplification, documented above).
 
@@ -63,7 +57,7 @@ def pagerank(
     contributions — the flag is a caller-side contract, not a hint."""
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     if dedup_edges:
         e = e.distinct()
     nodes = (
@@ -105,8 +99,8 @@ def pagerank(
             .select(
                 "node",
                 F.expr(
-                    f"CAST(({PPM} - {d_ppm}) * (CAST({SCALE} AS BIGINT) div n) AS BIGINT) div {PPM}"
-                    f" + CAST({d_ppm} * coalesce(inflow, 0) AS BIGINT) div {PPM}"
+                    f"CAST(({PPM} - 850000) * (CAST({SCALE} AS BIGINT) div n) AS BIGINT) div {PPM}"
+                    f" + CAST(850000 * coalesce(inflow, 0) AS BIGINT) div {PPM}"
                 ).alias("rank"),
                 "n",
             )

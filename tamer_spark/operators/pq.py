@@ -96,14 +96,7 @@ def _adc_tab_sql(j: int, codebook: list[list[int]], dsub: int, qv: str = "qv2") 
     return f"transform(sequence(0, {len(codebook) - 1}), i -> {dist})"
 
 
-def pq_train(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 4,
-    k: int = 16,
-    iters: int = 3,
-) -> list[list[list[int]]]:
+def pq_train(df: DataFrame, m: int = 4, k: int = 16, iters: int = 3) -> list[list[list[int]]]:
     """Learn ``m`` subspace codebooks of ``k`` codewords each; returns
     ``codebooks[j][c] = dsub ints``.
 
@@ -113,12 +106,12 @@ def pq_train(
     assign+sum job across ALL subspaces; codeword updates are floor-divided
     integer means with empty-codeword carry-over, exactly like ivf_build.
     """
-    dim_row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    dim_row = df.select(F.size(F.col("embedding")).alias("d")).first()
     dim = dim_row.d
     assert dim % m == 0, "dim must divide into equal subspaces"
     dsub = dim // m
 
-    base = df.selectExpr(f"{id_col} AS vec_id", f"{quantize_sql(vec_col)} AS qv")
+    base = df.selectExpr("vec_id", f"{quantize_sql('embedding')} AS qv")
     seeds = (
         base.selectExpr("*", f"{stable_hash64_sql('CAST(vec_id AS STRING)')} AS _h")
         .orderBy("_h")
@@ -160,12 +153,7 @@ def pq_train(
     return codebooks
 
 
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(df: DataFrame, codebooks: list[list[list[int]]]) -> DataFrame:
     """MAP-ONLY encoding: ``(vec_id, codes array<long>, code packed long)``.
 
     ``codes[j]`` is subspace ``j``'s nearest codeword id; ``code`` packs
@@ -182,7 +170,7 @@ def pq_encode(
     m, k = len(codebooks), len(codebooks[0])
     dsub = len(codebooks[0][0])
     base = df.selectExpr(
-        f"{id_col} AS vec_id", f"{quantize_sql(vec_col)} AS qv"
+        "vec_id", f"{quantize_sql('embedding')} AS qv"
     )
     codes = ", ".join(
         _nearest_code_sql(_sub_slice_sql("qv", j, dsub), codebooks[j])
@@ -199,8 +187,6 @@ def pq_search_adc(
     coded: DataFrame,
     codebooks: list[list[list[int]]],
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     topk: int = 5,
 ) -> DataFrame:
     """ADC top-k: approximate squared-L2 = Σ_j table_j[codes[j]], where
@@ -217,7 +203,7 @@ def pq_search_adc(
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{quantize_sql(vec_col)} AS qv2"
+        "vec_id AS query_id", f"{quantize_sql('embedding')} AS qv2"
     )
     # distance tables as array columns: tab_j[c] = ||q_sub_j - codeword_c||²
     # (one transform over the shared codebook literal per subspace — see
@@ -255,8 +241,6 @@ def ivfadc_search(
     centroids: list[list[float]],
     codebooks: list[list[list[int]]],
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 2,
     shortlist: int = 50,
@@ -287,7 +271,7 @@ def ivfadc_search(
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{quantize_sql(vec_col)} AS qv2"
+        "vec_id AS query_id", f"{quantize_sql('embedding')} AS qv2"
     ).selectExpr(
         "query_id",
         "qv2",

@@ -51,21 +51,19 @@ def run_checks(df: DataFrame, checks: list[Check]) -> DataFrame:
     return stacked.select("r.check", "r.n_bad")
 
 
-def referential_check(
-    child: DataFrame, parent: DataFrame, fk: str, pk: str, name: str | None = None
-) -> DataFrame:
+def referential_check(child: DataFrame, parent: DataFrame, fk: str, pk: str) -> DataFrame:
     """Orphan count: child rows whose fk has no parent pk (anti join)."""
     orphans = child.join(parent, child[fk] == parent[pk], "left_anti")
     return orphans.agg(F.count(F.lit(1)).cast("long").alias("n_bad")).select(
-        F.lit(name or f"{fk}_orphaned").alias("check"), "n_bad"
+        F.lit(f"{fk}_orphaned").alias("check"), "n_bad"
     )
 
 
-def uniqueness_check(df: DataFrame, cols: list[str], name: str | None = None) -> DataFrame:
+def uniqueness_check(df: DataFrame, cols: list[str]) -> DataFrame:
     """Duplicate-key count: rows beyond the first per key."""
     dupes = df.groupBy(*cols).count().filter(F.col("count") > 1)
     extra = dupes.agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)).cast("long").alias("n_bad"))
-    return extra.select(F.lit(name or ("_".join(cols) + "_duplicated")).alias("check"), "n_bad")
+    return extra.select(F.lit("_".join(cols) + "_duplicated").alias("check"), "n_bad")
 
 
 def column_stats(df: DataFrame, specs: list[tuple[str, Column]]) -> DataFrame:

@@ -40,13 +40,7 @@ def rp_signs(out_dim: int, dim: int, seed: int = 42) -> list[list[float]]:
     return sign_rows("rp", seed, out_dim, dim)
 
 
-def random_projection(
-    df: DataFrame,
-    signs: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "pvec",
-) -> DataFrame:
+def random_projection(df: DataFrame, signs: list[list[float]]) -> DataFrame:
     """MAP-ONLY projection: ``(id, pvec array<double of integer value>)``.
 
     One shared 2D sign literal (the pq _codebook_sql argument: the
@@ -62,10 +56,10 @@ def random_projection(
 
     sm = sql_double_matrix(signs)
     out_dim = len(signs)
-    staged = df.selectExpr(id_col, f"{quantize_sql(vec_col)} AS _qv")
+    staged = df.selectExpr("vec_id", f"{quantize_sql('embedding')} AS _qv")
     proj = (
         f"transform(sequence(0, {out_dim - 1}),"
         f" j -> aggregate(zip_with(_qv, element_at({sm}, CAST(j + 1 AS INT)),"
         " (x, s) -> x * s), 0.0D, (acc, v) -> acc + v))"
     )
-    return staged.selectExpr(id_col, f"{proj} AS {out_col}")
+    return staged.selectExpr("vec_id", f"{proj} AS pvec")

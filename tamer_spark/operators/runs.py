@@ -41,12 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def token_window_hashes(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    length: int = 50,
-) -> DataFrame:
+def token_window_hashes(df: DataFrame, length: int = 50) -> DataFrame:
     """(id, pos, h): stable hash of every ``length``-token window, 1-based
     position. Documents shorter than ``length`` tokens contribute NO rows —
     an L-token verbatim run cannot exist in them (exact-match semantics;
@@ -67,30 +62,25 @@ def token_window_hashes(
     from tamer_spark.operators.dedup import normalize_text_sql
 
     s1 = df.selectExpr(
-        f"{id_col} AS {id_col}",
-        f"split({normalize_text_sql(text_col)}, ' ') AS _ws",
+        "doc_id",
+        f"split({normalize_text_sql('text')}, ' ') AS _ws",
     )
     win_hash = stable_hash64_sql(f"array_join(slice(_ws, i + 1, {length}), ' ')")
     s2 = s1.selectExpr(
-        id_col,
+        "doc_id",
         f"CASE WHEN size(_ws) - {length - 1} <= 0 "
-        f"THEN CAST(array() AS ARRAY<BIGINT>) "
+        "THEN CAST(array() AS ARRAY<BIGINT>) "
         f"ELSE transform(sequence(0, size(_ws) - {length}), i -> {win_hash}) "
-        f"END AS _wh",
+        "END AS _wh",
     )
     return (
-        s2.selectExpr(id_col, "posexplode_outer(_wh) AS (pos0, h)")
+        s2.selectExpr("doc_id", "posexplode_outer(_wh) AS (pos0, h)")
         .filter("h IS NOT NULL")
-        .selectExpr(id_col, "CAST(pos0 + 1 AS BIGINT) AS pos", "h")
+        .selectExpr("doc_id", "CAST(pos0 + 1 AS BIGINT) AS pos", "h")
     )
 
 
-def exact_substring_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    length: int = 50,
-) -> DataFrame:
+def exact_substring_dedup(df: DataFrame, length: int = 50) -> DataFrame:
     """ExactSubstr REMOVAL (the policy half of Lee et al. 2022 §4.1: after
     finding verbatim duplicate runs, actually cut them out of the training
     set): every occurrence of a ``length``-token window that appears more
@@ -141,35 +131,29 @@ def exact_substring_dedup(
     # stage (the substring_run_pairs r7 lesson — the map stage dominates
     # at 100 TB). One materialization, both consumers read the cache;
     # released with the result via the GC-tied finalizer.
-    wh = token_window_hashes(df, text_col, id_col, length).persist()
-    dups = _elect_local_dups(wh, id_col)
-    out = _remove_marked_windows(df, dups, text_col, id_col, length)
+    wh = token_window_hashes(df, length).persist()
+    dups = _elect_local_dups(wh)
+    out = _remove_marked_windows(df, dups, length)
     return _release_on_gc(out, wh)
 
 
-def _elect_local_dups(wh: DataFrame, id_col: str) -> DataFrame:
+def _elect_local_dups(wh: DataFrame) -> DataFrame:
     """Shared keeper election: (id, pos) of every non-canonical occurrence
     of a window hash appearing >= 2 times in ``wh``. groupBy(h) partial
     aggs + one posting⋈keeper equi-join (see exact_substring_dedup's plan
     notes). One-parse SQL construction (r14)."""
     keep = wh.groupBy("h").agg(
-        F.expr(f"min(struct({id_col}, pos)) AS _first"),
+        F.expr("min(struct(doc_id, pos)) AS _first"),
         F.expr("count(1) AS _n"),
     )
     return (
         wh.join(keep, "h")
-        .filter(f"_n >= 2 AND (NOT (struct({id_col}, pos) = _first))")
-        .select(id_col, "pos")
+        .filter("_n >= 2 AND (NOT (struct(doc_id, pos) = _first))")
+        .select("doc_id", "pos")
     )
 
 
-def _remove_marked_windows(
-    df: DataFrame,
-    dups: DataFrame,
-    text_col: str,
-    id_col: str,
-    length: int,
-) -> DataFrame:
+def _remove_marked_windows(df: DataFrame, dups: DataFrame, length: int) -> DataFrame:
     """Shared removal tail for the batch and incremental ExactSubstr
     operators: ``dups`` = (id, pos) window starts to cut; merge them into
     maximal intervals and rebuild each doc's text from surviving tokens.
@@ -192,7 +176,7 @@ def _remove_marked_windows(
     # previous windows by >1 (adjacent windows merge — same coverage,
     # fewer intervals)
     prev_end = (
-        f"max(pos + {length - 1}) OVER (PARTITION BY {id_col} ORDER BY pos ASC "
+        f"max(pos + {length - 1}) OVER (PARTITION BY doc_id ORDER BY pos ASC "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
     )
     marked = dups.selectExpr(
@@ -201,21 +185,21 @@ def _remove_marked_windows(
         "THEN 1 ELSE 0 END AS _new",
     ).selectExpr(
         "*",
-        f"sum(_new) OVER (PARTITION BY {id_col} ORDER BY pos ASC) AS _isl",
+        f"sum(_new) OVER (PARTITION BY doc_id ORDER BY pos ASC) AS _isl",
     )
-    intervals = marked.groupBy(id_col, "_isl").agg(
+    intervals = marked.groupBy("doc_id", "_isl").agg(
         F.expr("min(pos) AS s"),
         F.expr(f"max(pos) + {length - 1} AS e"),
     )
-    ivs = intervals.groupBy(id_col).agg(
+    ivs = intervals.groupBy("doc_id").agg(
         F.expr("sort_array(collect_list(struct(s, e))) AS _ivs"),
         F.expr("sum(e - s + 1) AS _n_removed"),
     )
     base = df.selectExpr(
-        f"{id_col} AS {id_col}",
-        f"split({normalize_text_sql(text_col)}, ' ') AS _ws",
+        "doc_id",
+        f"split({normalize_text_sql('text')}, ' ') AS _ws",
     )
-    joined = base.join(ivs, id_col, "left")
+    joined = base.join(ivs, "doc_id", "left")
     # splice: fold the sorted disjoint intervals, appending the uncovered
     # token slice before each one, then the tail after the last — O(n)
     spliced = (
@@ -231,19 +215,14 @@ def _remove_marked_windows(
         ")"
     )
     return joined.selectExpr(
-        id_col,
+        "doc_id",
         f"array_join({spliced}, ' ') AS text_dedup",
         "CAST(size(_ws) AS BIGINT) AS n_tokens",
         "CAST(coalesce(_n_removed, 0) AS BIGINT) AS n_removed",
     )
 
 
-def exsub_window_index(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    length: int = 50,
-) -> DataFrame:
+def exsub_window_index(df: DataFrame, length: int = 50) -> DataFrame:
     """Distinct window-hash index of a corpus — the ExactSubstr analog of
     ``exact_index`` (operators/dedup_incremental.py): history reduced to
     the set of L-token window hashes it contains (8 B/window before
@@ -259,16 +238,10 @@ def exsub_window_index(
     contract — treating such a window as "seen" keeps the fold
     deterministic; re-chasing swallowed keepers would make removal
     order-dependent."""
-    return token_window_hashes(df, text_col, id_col, length).select("h").distinct()
+    return token_window_hashes(df, length).select("h").distinct()
 
 
-def exsub_dedup_incremental(
-    new_df: DataFrame,
-    index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    length: int = 50,
-) -> DataFrame:
+def exsub_dedup_incremental(new_df: DataFrame, index: DataFrame, length: int = 50) -> DataFrame:
     """Per-epoch ExactSubstr removal against a frozen history index — the
     O(batch) loop (the dedup_incremental posture): re-hashing a PB-scale
     corpus per epoch to elect keepers is the trap; history is reduced
@@ -291,7 +264,7 @@ def exsub_dedup_incremental(
     from tamer_spark.operators.dedup import _release_on_gc
 
     out, wh = exsub_dedup_incremental_with_cache(
-        new_df, index, text_col, id_col, length
+        new_df, index, length
     )
     return _release_on_gc(out, wh)
 
@@ -299,8 +272,6 @@ def exsub_dedup_incremental(
 def exsub_dedup_incremental_with_cache(
     new_df: DataFrame,
     index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     length: int = 50,
 ) -> tuple[DataFrame, DataFrame]:
     """``exsub_dedup_incremental`` returning ``(result, cached_window_hashes)``
@@ -309,20 +280,16 @@ def exsub_dedup_incremental_with_cache(
     .distinct()``) instead of re-running the md5-per-token map pass — the
     minhash_lsh_pairs_with_cache contract: hold the cache until the final
     derived plan is dropped, wiring ``_release_on_gc(final, cached)``."""
-    wh = token_window_hashes(new_df, text_col, id_col, length).persist()
+    wh = token_window_hashes(new_df, length).persist()
     idx = index.select("h")
-    hist_dups = wh.join(idx, "h", "left_semi").select(id_col, "pos")
+    hist_dups = wh.join(idx, "h", "left_semi").select("doc_id", "pos")
     local = wh.join(idx, "h", "left_anti")
-    dups = hist_dups.unionByName(_elect_local_dups(local, id_col))
-    out = _remove_marked_windows(new_df, dups, text_col, id_col, length)
+    dups = hist_dups.unionByName(_elect_local_dups(local))
+    out = _remove_marked_windows(new_df, dups, length)
     return out, wh
 
 
-def exsub_bloom_index_df(
-    index: DataFrame,
-    m_bits: int = 1 << 22,
-    k: int = 5,
-) -> DataFrame:
+def exsub_bloom_index_df(index: DataFrame, m_bits: int = 1 << 22) -> DataFrame:
     """Distributed bloom sidecar over an ``exsub_window_index`` frame's
     window hashes — the ExactSubstr analog of ``exact_bloom_index_df``
     (operators/dedup_incremental.py), and the measured future lever
@@ -333,15 +300,13 @@ def exsub_bloom_index_df(
     bits per window hash (~1 hash per history token after distinct-ing)."""
     from tamer_spark.operators.bloom import bloom_words_df
 
-    return bloom_words_df(index, "h", m_bits=m_bits, k=k)
+    return bloom_words_df(index, "h", m_bits=m_bits, k=5)
 
 
 def exsub_dedup_incremental_bloom(
     new_df: DataFrame,
     words: DataFrame,
     index: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     length: int = 50,
 ) -> DataFrame:
     """Per-epoch ExactSubstr removal against a BLOOM SIDECAR of the
@@ -377,26 +342,24 @@ def exsub_dedup_incremental_bloom(
     from tamer_spark.operators.bloom import bloom_might_contain
     from tamer_spark.operators.dedup import _release_on_gc
 
-    wh = token_window_hashes(new_df, text_col, id_col, length).persist()
+    wh = token_window_hashes(new_df, length).persist()
     probed = bloom_might_contain(wh, "h", words)
     pos = probed.filter(F.col("bloom_hit")).drop("bloom_hit")
     local = probed.filter(~F.col("bloom_hit")).drop("bloom_hit")
     if index is None:
-        hist_dups = pos.select(id_col, "pos")
+        hist_dups = pos.select("doc_id", "pos")
     else:
         idx = index.select("h")
-        hist_dups = pos.join(idx, "h", "left_semi").select(id_col, "pos")
+        hist_dups = pos.join(idx, "h", "left_semi").select("doc_id", "pos")
         # bloom false positives are NOVEL windows: back to the local pool
         local = local.unionByName(pos.join(idx, "h", "left_anti"))
-    dups = hist_dups.unionByName(_elect_local_dups(local, id_col))
-    out = _remove_marked_windows(new_df, dups, text_col, id_col, length)
+    dups = hist_dups.unionByName(_elect_local_dups(local))
+    out = _remove_marked_windows(new_df, dups, length)
     return _release_on_gc(out, wh)
 
 
 def substring_run_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     length: int = 50,
     min_windows: int = 1,
     max_posting: int | None = 1000,
@@ -416,17 +379,17 @@ def substring_run_pairs(
     ``None`` = exact."""
     from tamer_spark.functions.hashing import stable_hash64_sql
 
-    wh = token_window_hashes(df, text_col, id_col, length)
+    wh = token_window_hashes(df, length)
     if max_posting is not None:
         # rank whole (id, pos) rows: a doc with internal repetition holds
         # several posting rows for one hash, all adjacent in this order —
         # the cap never splits a document's occurrences non-deterministically
-        id_rank = stable_hash64_sql(f"CAST({id_col} AS STRING)")
+        id_rank = stable_hash64_sql("CAST(doc_id AS STRING)")
         wh = (
             wh.selectExpr(
                 "*",
                 f"row_number() OVER (PARTITION BY h ORDER BY {id_rank} ASC, "
-                f"{id_col} ASC, pos ASC) AS _r",
+                "doc_id ASC, pos ASC) AS _r",
             )
             .filter(f"_r <= {max_posting}")
             .drop("_r")
@@ -438,8 +401,8 @@ def substring_run_pairs(
     # materialization, both join sides read the cache; released with the
     # grid via the same GC-tied finalizer.
     wh = wh.persist()
-    a = wh.selectExpr(f"{id_col} AS id_a", "pos AS pa", "h")
-    b = wh.selectExpr(f"{id_col} AS id_b", "pos AS pb", "h")
+    a = wh.selectExpr("doc_id AS id_a", "pos AS pa", "h")
+    b = wh.selectExpr("doc_id AS id_b", "pos AS pb", "h")
     # the matched grid feeds BOTH the run-length and the shared-count
     # branches; without a persist each branch re-derives the whole
     # window-hash stage (4 scans of the corpus). The grid is bounded by

@@ -20,17 +20,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def scd2_apply(
-    current: DataFrame,
-    updates: DataFrame,
-    key: str,
-    change_ts: Column,
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
+def scd2_apply(current: DataFrame, updates: DataFrame, key: str, change_ts: Column) -> DataFrame:
     """Apply ``updates`` (one row per key, the new attribute values) to an
     SCD2 table with columns (*attrs, valid_from, valid_to)."""
     attrs = [c for c in updates.columns if c != key]
-    compare_cols = compare_cols or attrs
 
     open_rows = current.filter(F.col("valid_to").isNull())
     closed_rows = current.filter(F.col("valid_to").isNotNull())
@@ -40,7 +33,7 @@ def scd2_apply(
     # b=NULL) would compare equal and be dropped. eqNullSafe treats
     # NULL<=>NULL as equal and NULL<=>value as different.
     unchanged = F.lit(True)
-    for c in compare_cols:
+    for c in attrs:
         unchanged = unchanged & F.col(f"u.{c}").eqNullSafe(F.col(f"o.{c}"))
     # collision-proofed sentinel name: user dimensions legitimately carry
     # underscore-prefixed attributes, and attrs are derived from ALL update

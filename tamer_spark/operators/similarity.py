@@ -95,10 +95,10 @@ def _proj_sql(qv: str, row: list[float]) -> str:
     )
 
 
-def lsh_bucket_sql(qv: str, planes: int = 8, dim: int = 64, seed: int = 42) -> str:
+def lsh_bucket_sql(qv: str, planes: int = 8, dim: int = 64) -> str:
     """Random-hyperplane LSH bucket id from an ALREADY-QUANTIZED vector column.
 
-    The hyperplane coefficients are ±1 from sha256 of (seed, plane,
+    The hyperplane coefficients are ±1 from sha256 of (seed 42, plane,
     dim-index) (functions/hashing.sign_rows, fixed at plan build — no RNG
     state); the SQL oracle generators mirror the same derivation, so corpus
     and query vectors always hash into the same bucket space.
@@ -119,7 +119,7 @@ def lsh_bucket_sql(qv: str, planes: int = 8, dim: int = 64, seed: int = 42) -> s
     """
     from tamer_spark.functions.hashing import sign_rows
 
-    rows = sign_rows("lsh", seed, planes, dim)
+    rows = sign_rows("lsh", 42, planes, dim)
     terms = ["CAST(0 AS BIGINT)"]
     for p in range(planes):
         terms.append(
@@ -152,14 +152,13 @@ def _top_k_by_cosine(scored: DataFrame, k: int) -> DataFrame:
 def cosine_knn(
     df: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
     pre_quantized: bool = False,
 ) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector (excluding self).
 
-    ``queries`` carries (id_col, vec_col) — typically a small filtered subset,
+    ``queries`` carries (vec_id, vec_col) — typically a small filtered subset,
     which the plan broadcasts; the corpus side streams. Tie-break: higher
     cosine first, then smaller neighbor id (deterministic total order).
 
@@ -173,10 +172,10 @@ def cosine_knn(
     # work is then a single dot product. Same arithmetic as before
     # (sqrt(qn2*cn2), not sqrt(qn2)*sqrt(cn2)) so results are bit-identical.
     q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{quant(vec_col)} AS qv"
+        "vec_id AS query_id", f"{quant(vec_col)} AS qv"
     ).selectExpr("query_id", "qv", f"{dot_sql('qv', 'qv')} AS qn2")
     c = df.selectExpr(
-        f"{id_col} AS neighbor_id", f"{quant(vec_col)} AS cv"
+        "vec_id AS neighbor_id", f"{quant(vec_col)} AS cv"
     ).selectExpr("neighbor_id", "cv", f"{dot_sql('cv', 'cv')} AS cn2")
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -218,14 +217,12 @@ def _cap_bucket_candidates(c: DataFrame, max_bucket: int | None) -> DataFrame:
     )
 
 
-def _lsh_corpus(
-    df: DataFrame, id_col: str, vec_col: str, planes: int, dim: int, max_bucket: int | None
-) -> DataFrame:
+def _lsh_corpus(df: DataFrame, planes: int, dim: int, max_bucket: int | None) -> DataFrame:
     """The corpus side of both LSH kNN variants: (neighbor_id, cv, bucket,
     cn2), capped per bucket. One copy, so single- and multi-probe search
     the same buckets."""
     c = df.selectExpr(
-        f"{id_col} AS neighbor_id", f"{quantize_sql(vec_col)} AS cv"
+        "vec_id AS neighbor_id", f"{quantize_sql('embedding')} AS cv"
     ).selectExpr(
         "neighbor_id",
         "cv",
@@ -238,8 +235,6 @@ def _lsh_corpus(
 def cosine_knn_lsh(
     df: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     planes: int = 8,
     dim: int = 64,
@@ -252,14 +247,14 @@ def cosine_knn_lsh(
     ``max_bucket`` bounds candidates per bucket (see _cap_bucket_candidates).
     """
     q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{quantize_sql(vec_col)} AS qv"
+        "vec_id AS query_id", f"{quantize_sql('embedding')} AS qv"
     ).selectExpr(
         "query_id",
         "qv",
         f"{lsh_bucket_sql('qv', planes, dim)} AS bucket",
         f"{dot_sql('qv', 'qv')} AS qn2",
     )
-    c = _lsh_corpus(df, id_col, vec_col, planes, dim, max_bucket)
+    c = _lsh_corpus(df, planes, dim, max_bucket)
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter("query_id != neighbor_id")
@@ -268,9 +263,7 @@ def cosine_knn_lsh(
     return _top_k_by_cosine(scored, k)
 
 
-def lsh_probe_buckets_sql(
-    qv: str, planes: int = 8, dim: int = 64, seed: int = 42, probes: int = 3
-) -> str:
+def lsh_probe_buckets_sql(qv: str, planes: int = 8, dim: int = 64, probes: int = 3) -> str:
     """Multi-probe bucket list: the base bucket plus single-bit flips of the
     ``probes - 1`` hyperplanes with the smallest |projection| (the planes the
     vector is closest to, i.e. the likeliest sign errors). The base bucket
@@ -289,7 +282,7 @@ def lsh_probe_buckets_sql(
     """
     from tamer_spark.functions.hashing import sign_rows
 
-    rows = sign_rows("lsh", seed, planes, dim)
+    rows = sign_rows("lsh", 42, planes, dim)
     # Evaluate the planes projections ONCE per row: bind the projections
     # array as a higher-order-function lambda variable ``pr`` (single-element
     # array + transform = a let binding — Spark has no `let`, but a lambda
@@ -325,8 +318,6 @@ def lsh_probe_buckets_sql(
 def cosine_knn_lsh_multiprobe(
     df: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     planes: int = 8,
     dim: int = 64,
@@ -342,7 +333,7 @@ def cosine_knn_lsh_multiprobe(
     Candidate pairs are deduplicated before ranking (a corpus vector can
     match a query through several probed buckets)."""
     q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{quantize_sql(vec_col)} AS qv"
+        "vec_id AS query_id", f"{quantize_sql('embedding')} AS qv"
     ).selectExpr(
         "query_id",
         "qv",
@@ -353,7 +344,7 @@ def cosine_knn_lsh_multiprobe(
         # bucket expression on pushdown (never empty: probes >= 1)
         "query_id", "qv", "qn2", "explode_outer(probe_buckets) AS bucket"
     )
-    c = _lsh_corpus(df, id_col, vec_col, planes, dim, max_bucket)
+    c = _lsh_corpus(df, planes, dim, max_bucket)
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter("query_id != neighbor_id")
@@ -368,13 +359,7 @@ def cosine_knn_lsh_multiprobe(
 # IVF (inverted-file) ANN: k-means coarse quantizer + cluster-probed search
 # ---------------------------------------------------------------------------
 
-def ivf_build(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 8,
-    iters: int = 3,
-):
+def ivf_build(df: DataFrame, n_centroids: int = 8, iters: int = 3):
     """Train an IVF coarse quantizer: deterministic-init k-means over
     quantized vectors, Lloyd iterations as DataFrame jobs.
 
@@ -392,7 +377,7 @@ def ivf_build(
     bit-reproducible in any engine (the driver's DuckDB oracle replays it
     as three unrolled CTE rounds).
     """
-    base = df.selectExpr(f"{id_col} AS vec_id", f"{quantize_sql(vec_col)} AS qv")
+    base = df.selectExpr("vec_id", f"{quantize_sql('embedding')} AS qv")
     seeds = (
         base.selectExpr("*", f"{stable_hash64_sql('CAST(vec_id AS STRING)')} AS _h")
         .orderBy("_h")
@@ -429,12 +414,7 @@ def _assign_clusters(base: DataFrame, centroids: list[list[float]]) -> DataFrame
     )
 
 
-def ivf_append(
-    new_df: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_append(new_df: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Assign NEW vectors to a frozen coarse quantizer — the incremental
     half of the IVF index (same epoch posture as
     operators/dedup_incremental: never recompute history per batch).
@@ -451,7 +431,7 @@ def ivf_append(
     fold).
     """
     base = new_df.selectExpr(
-        f"{id_col} AS vec_id", f"{quantize_sql(vec_col)} AS qv"
+        "vec_id", f"{quantize_sql('embedding')} AS qv"
     )
     return _assign_clusters(base, centroids)
 
@@ -475,8 +455,6 @@ def _salt_shard(assigned: DataFrame, max_cluster: int | None) -> DataFrame:
 
 def semdedup(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 8,
     iters: int = 3,
     threshold: float = 0.3,
@@ -522,9 +500,9 @@ def semdedup(
     from tamer_spark.operators.dedup import _release_on_gc
 
     if model is None:
-        assigned, _cents = ivf_build(df, id_col, vec_col, n_centroids, iters)
+        assigned, _cents = ivf_build(df, n_centroids, iters)
     else:
-        assigned = ivf_append(df, model, id_col, vec_col)
+        assigned = ivf_append(df, model)
     # the inverted file feeds four plan branches (size agg, both join sides,
     # the final anti join); persist it, released when the result is dropped
     assigned = assigned.persist()
@@ -560,8 +538,6 @@ def semdedup_incremental(
     new_df: DataFrame,
     index: DataFrame,
     model: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.3,
     max_cluster: int | None = 100_000,
 ) -> DataFrame:
@@ -589,7 +565,7 @@ def semdedup_incremental(
 
     Returns the surviving ``(vec_id, cluster)`` rows of the new batch only.
     """
-    assigned_new = ivf_append(new_df, model, id_col, vec_col)
+    assigned_new = ivf_append(new_df, model)
     union = index.select("vec_id", "qv", "cluster").withColumn(
         "_new", F.lit(False)
     ).unionByName(assigned_new.withColumn("_new", F.lit(True)))
@@ -625,8 +601,6 @@ def ivf_search(
     assigned: DataFrame,
     centroids: list[list[float]],
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 2,
 ) -> DataFrame:
@@ -637,7 +611,7 @@ def ivf_search(
     cluster so probes touch only matching buckets.
     """
     q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{quantize_sql(vec_col)} AS qv2"
+        "vec_id AS query_id", f"{quantize_sql('embedding')} AS qv2"
     ).selectExpr(
         "query_id",
         "qv2",
@@ -658,9 +632,7 @@ def ivf_search(
     return _top_k_by_cosine(scored, k)
 
 
-def _mining_projection(
-    df: DataFrame, id_col: str, vec_col: str, label_col: str, planes: int, dim: int, seed: int
-) -> DataFrame:
+def _mining_projection(df: DataFrame, dim: int) -> DataFrame:
     """The miners' bucketed projection ``(id, _lbl, v, bucket, n2)``,
     persisted: it feeds BOTH self-join sides, and without the persist Spark
     computes the quantize + LSH HOF chain twice over the corpus (r14
@@ -673,14 +645,14 @@ def _mining_projection(
     undefined, and under Spark 4's default ANSI mode the division would
     raise DIVIDE_BY_ZERO and kill the whole mining job."""
     return df.selectExpr(
-        id_col,
-        f"{label_col} AS _lbl",
-        f"{quantize_sql(vec_col)} AS v",
+        "vec_id",
+        "label AS _lbl",
+        f"{quantize_sql('embedding')} AS v",
     ).selectExpr(
-        id_col,
+        "vec_id",
         "_lbl",
         "v",
-        f"{lsh_bucket_sql('v', planes, dim, seed)} AS bucket",
+        f"{lsh_bucket_sql('v', dim=dim)} AS bucket",
         f"{dot_sql('v', 'v')} AS n2",
         f"'m{next(_MINER_SEQ)}' AS _ptag",  # see _MINER_SEQ
     ).filter("n2 > 0").persist()
@@ -688,13 +660,8 @@ def _mining_projection(
 
 def hard_negatives(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     k: int = 3,
-    planes: int = 8,
     dim: int = 64,
-    seed: int = 42,
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training (DPR, Karpukhin et al.
@@ -718,10 +685,10 @@ def hard_negatives(
     deterministic salted-hash retention as the kNN path. One bucket
     equi-join shuffle + one per-anchor window — never a cross product.
     """
-    b = _mining_projection(df, id_col, vec_col, label_col, planes, dim, seed)
+    b = _mining_projection(df, dim)
     a = b.alias("a")
     c = _cap_bucket_candidates(
-        b.withColumnRenamed(id_col, "neighbor_id"), max_bucket
+        b.withColumnRenamed("vec_id", "neighbor_id"), max_bucket
     ).alias("b")
     # eqNullSafe is deliberately NOT used: a NULL label must yield no pairs
     # (an unlabeled vector is no negative of anything) — plain != propagates
@@ -729,10 +696,10 @@ def hard_negatives(
     pairs = a.join(
         c,
         (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") != F.col("b.neighbor_id"))
+        & (F.col("a.vec_id") != F.col("b.neighbor_id"))
         & (F.col("a._lbl") != F.col("b._lbl")),
     ).selectExpr(
-        f"a.{id_col} AS query_id",
+        "a.vec_id AS query_id",
         "b.neighbor_id AS neighbor_id",
         f"({dot_sql('a.v', 'b.v')}) / SQRT(a.n2 * b.n2) AS cosine",
     )
@@ -757,13 +724,8 @@ def hard_negatives(
 
 def contrastive_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     k: int = 3,
-    planes: int = 8,
     dim: int = 64,
-    seed: int = 42,
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Both halves of the contrastive triple off ONE candidate join. A
@@ -788,20 +750,20 @@ def contrastive_pairs(
 
     Returns (query_id, neighbor_id, side, cosine, rank).
     """
-    b = _mining_projection(df, id_col, vec_col, label_col, planes, dim, seed)
+    b = _mining_projection(df, dim)
     a = b.alias("a")
     c = _cap_bucket_candidates(
-        b.withColumnRenamed(id_col, "neighbor_id"), max_bucket
+        b.withColumnRenamed("vec_id", "neighbor_id"), max_bucket
     ).alias("b")
     pairs = a.join(
         c,
         (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") != F.col("b.neighbor_id"))
+        & (F.col("a.vec_id") != F.col("b.neighbor_id"))
         # NULL labels yield no pairs on either side: both predicates below
         # are NULL (→ false) when either label is NULL
         & (F.col("a._lbl").isNotNull() & F.col("b._lbl").isNotNull()),
     ).selectExpr(
-        f"a.{id_col} AS query_id",
+        "a.vec_id AS query_id",
         "b.neighbor_id AS neighbor_id",
         "CASE WHEN a._lbl = b._lbl THEN 'pos' ELSE 'neg' END AS side",
         f"({dot_sql('a.v', 'b.v')}) / SQRT(a.n2 * b.n2) AS cosine",

@@ -38,7 +38,7 @@ decimal(38,0) so 1e6·max·n_keys cannot overflow at any real scale).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Join modes where every output row is driven by a LARGE-side row (which
@@ -55,7 +55,6 @@ def salted_join(
     on: str,
     salt: int = 8,
     how: str = "inner",
-    salt_by: Column | None = None,
 ) -> DataFrame:
     """Join with the large side salted and the small side replicated.
 
@@ -67,8 +66,8 @@ def salted_join(
     modes raise ``ValueError`` — swap the operands (right ≡ left with
     sides flipped) or use a plain join with AQE skew handling.
 
-    ``salt_by``: expression whose md5 spreads the hot key's rows (default: a
-    fingerprint of all large-side columns — deterministic, no rand()).
+    The md5 of a fingerprint of all large-side columns spreads the hot
+    key's rows (deterministic, no rand()).
     """
     mode = how.lower().replace("_", "")
     mode = _MODE_ALIASES.get(mode, mode)
@@ -79,8 +78,7 @@ def salted_join(
             f"{salt}x (once per salt). Use one of inner/left/left_semi/"
             "left_anti, or swap the operands for a right join."
         )
-    if salt_by is None:
-        salt_by = F.concat_ws("\x00", *[F.col(c).cast("string") for c in large.columns])
+    salt_by = F.concat_ws("\x00", *[F.col(c).cast("string") for c in large.columns])
     lg = large.withColumn(
         "_salt",
         F.pmod(F.conv(F.substring(F.md5(salt_by), 1, 15), 16, 10).cast("long"), F.lit(salt)),

@@ -76,9 +76,7 @@ _LEVELS = 255  # default: codes span [0, 255] — 8 bits/dim (SQ8)
 # agnostic), pytest-pinned at both settings
 
 
-def sq_train(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> list[tuple[int, int]]:
+def sq_train(df: DataFrame) -> list[tuple[int, int]]:
     """Per-dimension (min, max) of the QUANTIZED corpus — ``dim`` rows.
 
     One distributed pass: posexplode to (dim, value) rows, partial-agg
@@ -88,7 +86,7 @@ def sq_train(
     driver-state contract as IVF centroids and PQ codebooks.
     """
     rows = (
-        df.selectExpr(f"posexplode({quantize_sql(vec_col)}) AS (t, val)")
+        df.selectExpr(f"posexplode({quantize_sql('embedding')}) AS (t, val)")
         .groupBy("t")
         .agg(
             F.min("val").cast("long").alias("mn"),
@@ -100,13 +98,7 @@ def sq_train(
     return [by_dim[t] for t in range(len(by_dim))]
 
 
-def sq_encode(
-    df: DataFrame,
-    bounds: list[tuple[int, int]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    levels: int = _LEVELS,
-) -> DataFrame:
+def sq_encode(df: DataFrame, bounds: list[tuple[int, int]], levels: int = _LEVELS) -> DataFrame:
     """MAP-ONLY encoding: ``(vec_id, codes array<long>)``, each code in
     [0, 255].
 
@@ -121,22 +113,20 @@ def sq_encode(
     mins = sql_doubles(float(mn) for mn, _ in bounds)
     spans = sql_doubles(float(mx - mn) for mn, mx in bounds)
     shifted = (
-        f"zip_with({quantize_sql(vec_col)}, {mins}, (x, mn) -> (x - mn) * {levels})"
+        f"zip_with({quantize_sql('embedding')}, {mins}, (x, mn) -> (x - mn) * {levels})"
     )
     codes = (
         f"zip_with({shifted}, {spans}, (num, span) -> CASE WHEN span > 0"
         f" THEN greatest(CAST(0 AS BIGINT), least(CAST({levels} AS BIGINT),"
         " FLOOR(num / span))) ELSE CAST(0 AS BIGINT) END)"
     )
-    return df.selectExpr(f"{id_col} AS vec_id", f"{codes} AS codes")
+    return df.selectExpr("vec_id", f"{codes} AS codes")
 
 
 def sq_search(
     coded: DataFrame,
     bounds: list[tuple[int, int]],
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     topk: int = 5,
     levels: int = _LEVELS,
 ) -> DataFrame:
@@ -161,8 +151,8 @@ def sq_search(
     )
     corpus = coded.selectExpr("vec_id", f"{recon} AS _recon255")
     q = queries.selectExpr(
-        f"{id_col} AS query_id",
-        f"transform({quantize_sql(vec_col)}, x -> CAST(x * {levels} AS BIGINT))"
+        "vec_id AS query_id",
+        f"transform({quantize_sql('embedding')}, x -> CAST(x * {levels} AS BIGINT))"
         " AS _q255",
     )
     dist = (

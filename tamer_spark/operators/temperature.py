@@ -39,7 +39,6 @@ _M = 1_000_000
 def temperature_mix(
     docs: DataFrame,
     target: int,
-    id_col: str = "doc_id",
     group_col: str = "source",
     alpha: float = 0.5,
 ) -> DataFrame:
@@ -74,12 +73,12 @@ def temperature_mix(
         hdr = int(row["ws"]) * max(int(row["n"]), int(target))
         if hdr * _M >= 2**63:
             raise ValueError(
-                f"temperature_mix int64 headroom exceeded: max(_wsum)*max(n_g, target)*M = "
+                "temperature_mix int64 headroom exceeded: max(_wsum)*max(n_g, target)*M = "
                 f"{hdr * _M} >= 2^63; rescale the weight quantum (reduce M) or "
                 "pre-partition the corpus"
             )
     h = (
-        stable_hash64(F.concat(F.lit("temp-"), F.col(id_col).cast("string"))) % _M
+        stable_hash64(F.concat(F.lit("temp-"), F.col("doc_id").cast("string"))) % _M
     )
     return (
         docs.join(F.broadcast(weights), group_col)
@@ -88,13 +87,7 @@ def temperature_mix(
     )
 
 
-def temperature_resample(
-    docs: DataFrame,
-    target: int,
-    id_col: str = "doc_id",
-    group_col: str = "source",
-    alpha: float = 0.5,
-) -> DataFrame:
+def temperature_resample(docs: DataFrame, target: int, group_col: str = "source") -> DataFrame:
     """Temperature resampling WITH replication — the full mT5 §3.1 rule.
     ``temperature_mix`` caps every group's rate at 1 (pure subsample);
     real multilingual mixes also REPEAT low-resource groups (rate > 1:
@@ -123,8 +116,6 @@ def temperature_resample(
     """
     from tamer_spark.functions.hashing import stable_hash64
 
-    if not 0 < alpha <= 1:
-        raise ValueError("alpha must be in (0, 1]")
     # Emitted names AND internal working columns: _rate_ppm/_h/_nc are
     # injected below and the broadcast join adds _n/_w/_wsum — the nc and
     # rate expressions are name-resolved SQL strings, so a caller column
@@ -152,7 +143,7 @@ def temperature_resample(
     # with no group has no temperature share. Same behavior as
     # temperature_mix.
     counts = docs.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n"))
-    pow_expr = F.sqrt(F.col("_n")) if alpha == 0.5 else F.pow(F.col("_n"), F.lit(alpha))
+    pow_expr = F.sqrt(F.col("_n"))
     weights = counts.withColumn("_w", F.round(pow_expr * _M).cast("long")).withColumn(
         "_wsum", F.sum("_w").over(Window.partitionBy())
     )
@@ -162,7 +153,7 @@ def temperature_resample(
         f"CAST(CAST({int(target)} AS DECIMAL(38,0)) * _w * {_M} AS DECIMAL(38,0)) "
         "div (CAST(_wsum AS DECIMAL(38,0)) * _n)"
     ).cast("long")
-    h = stable_hash64(F.concat(F.lit("temp-"), F.col(id_col).cast("string"))) % _M
+    h = stable_hash64(F.concat(F.lit("temp-"), F.col("doc_id").cast("string"))) % _M
     # EXACT copy count: #{c >= 0 : (h + c·M)·W·n < target·w·M} — the c=0
     # term IS temperature_mix's keep predicate (true nesting, not a
     # floor-approximation of it: deriving copies from the floored rate
@@ -172,12 +163,12 @@ def temperature_resample(
     t = int(target)
     nc_sql = (
         f"CASE WHEN CAST({t} AS DECIMAL(38,0)) * _w * {_M} "
-        f"          > CAST(_h AS DECIMAL(38,0)) * _wsum * _n "
+        "          > CAST(_h AS DECIMAL(38,0)) * _wsum * _n "
         f"THEN CAST((CAST({t} AS DECIMAL(38,0)) * _w * {_M} "
-        f"           - CAST(_h AS DECIMAL(38,0)) * _wsum * _n "
+        "           - CAST(_h AS DECIMAL(38,0)) * _wsum * _n "
         f"           + CAST(_wsum AS DECIMAL(38,0)) * _n * {_M} - 1) "
         f"     div (CAST(_wsum AS DECIMAL(38,0)) * _n * {_M}) AS BIGINT) "
-        f"ELSE 0 END"
+        "ELSE 0 END"
     )
     return (
         docs.join(F.broadcast(weights), group_col)

@@ -34,8 +34,6 @@ from tamer_spark.functions.text import (
     STOPWORDS,
     TOKEN_PATTERN,
     _mojibake,
-    doc_fingerprint_col,
-    lang_id_col,
     sql_string,
     text_stats_cols,
     token_count_col,
@@ -1705,8 +1703,8 @@ def text_profile_q(spark, sf):
         f"CAST({n_stop} AS DOUBLE) / greatest({n_words}, 1) AS stopword_ratio",
         f"CAST({n_chars} AS DOUBLE) / greatest({n_words}, 1) AS avg_word_len",
     ]
-    # lang_id_col rendered: argmax of marker sums, ties → language-code order
-    # (the Column helper's reversed nested-when chain IS this ordered CASE)
+    # language ID: argmax of LANG_MARKERS sums, ties → language-code order,
+    # zero hits → 'und' (undetermined)
     langs = sorted(LANG_MARKERS)
     scores = {
         lang: "(" + " + ".join(marker(w) for w in LANG_MARKERS[lang]) + ")"
@@ -1721,7 +1719,7 @@ def text_profile_q(spark, sf):
         )
         + " ELSE 'und' END"
     )
-    # doc_fingerprint_col rendered: polynomial rolling hash of word hashes
+    # document fingerprint: polynomial rolling hash of word hashes
     fingerprint = (
         "aggregate(split(trim(text), '\\\\s+'), CAST(0 AS BIGINT),"
         " (acc, w) -> (acc * 31 +"
@@ -2624,7 +2622,7 @@ def _assert_gate_dim(emb, sf_dir: str | None = None, expected: int = 64) -> None
         raise ValueError(
             f"embeddings are {d}-dim but the DuckDB oracles were generated for "
             f"{expected}-dim vectors — regenerate the oracle dims in queries.py "
-            f"(testdata contract change)"
+            "(testdata contract change)"
         )
 
 
@@ -4371,13 +4369,13 @@ _SGRAM_ORACLE = f"""
 
 # Standalone builder kept for plan pins / bench (graded via the merged
 # term_stats_docs gate's 'sgram' variant).
-def skipgram_top_pairs(spark, sf, window: int = _SGRAM_WINDOW, k: int = _SGRAM_K):
-    """Skip-gram (center, context) pair counts within ±``window`` word
+def skipgram_top_pairs(spark, sf, k: int = _SGRAM_K):
+    """Skip-gram (center, context) pair counts within ±``_SGRAM_WINDOW`` word
     offsets — the word2vec/SGNS training-pair extraction (Mikolov et al.
     2013); next to 'pmi' (adjacent-only, association-ranked) this is the
     raw co-occurrence counting primitive embedding trainers consume.
 
-    Scale shape: every offset 1..window rides ONE (doc_id, pos) window
+    Scale shape: every offset 1.._SGRAM_WINDOW rides ONE (doc_id, pos) window
     exchange (w lead() columns in one pass, not w window operators); the
     reverse direction is a map-side transpose of the forward pairs (never
     a second scan); counts partial-aggregate on the vocabulary²-bounded
@@ -4394,13 +4392,13 @@ def skipgram_top_pairs(spark, sf, window: int = _SGRAM_WINDOW, k: int = _SGRAM_K
     over = "OVER (PARTITION BY doc_id ORDER BY pos ASC)"
     leads = wp.selectExpr(
         "word AS w1",
-        *[f"lead(word, {off}) {over} AS _l{off}" for off in range(1, window + 1)],
+        *[f"lead(word, {off}) {over} AS _l{off}" for off in range(1, _SGRAM_WINDOW + 1)],
     )
     # both directions emitted MAP-SIDE from the one leads frame (struct
     # explode) — a transpose self-union would put the scan + window subtree
     # in the plan twice
     structs = []
-    for off in range(1, window + 1):
+    for off in range(1, _SGRAM_WINDOW + 1):
         structs.append(f"named_struct('a', w1, 'b', _l{off})")
         structs.append(f"named_struct('a', _l{off}, 'b', w1)")
     both = (

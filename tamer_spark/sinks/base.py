@@ -81,7 +81,7 @@ class ParquetEpochSink:
 class MemorySink:
     """Test sink collecting rows per epoch; replays overwrite (idempotent)."""
 
-    epochs: dict[int, list] = field(default_factory=dict)
+    epochs: dict[int, list] = field(init=False, default_factory=dict)
     fail_on_epochs: set = field(default_factory=set)
     fail_once_on_epochs: set = field(default_factory=set)
 

@@ -21,16 +21,12 @@ def write_bucketed(
     table: str,
     bucket_cols: list[str],
     num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist ``df`` as a bucketed (optionally sorted) catalog table.
 
     Sorting within buckets additionally enables merge-join without a sort
     step and better scan locality for range predicates on the sort key.
     """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
+    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     writer.format("parquet").saveAsTable(table)
 

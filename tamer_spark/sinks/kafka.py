@@ -141,7 +141,7 @@ class TransactionalKafkaSink:
     #: treat it like the topic name (configuration, not tuning)
     num_partitions: int = 16
     #: filled per write() with (partition_id, rows_sent) for observability
-    last_result: list = field(default_factory=list)
+    last_result: list = field(init=False, default_factory=list)
 
     def _factory(self) -> Callable[[dict], Any]:
         if self.producer_factory is not None:

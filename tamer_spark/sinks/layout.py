@@ -19,8 +19,6 @@ def plan_compaction(
     files: DataFrame,
     target_bytes: int,
     partition_cols: list[str] | None = None,
-    path_col: str = "path",
-    bytes_col: str = "bytes",
 ) -> DataFrame:
     """Deterministic bin-packing manifest for small-file compaction — the
     OPTIMIZE planning step (r13). The reference's run loop commits one
@@ -29,7 +27,7 @@ def plan_compaction(
     tamer_spark/engine.py), so a steady-state pipeline accretes exactly the
     small-file pattern this plans away.
 
-    Input: one row per data file — ``path_col`` (unique), ``bytes_col``,
+    Input: one row per data file — ``path`` (unique), ``bytes``,
     plus any ``partition_cols`` (files never pack across partitions).
     Output: the input plus ``bin`` (BIGINT, monotone per partition;
     gaps appear where a file spans several target sizes) — the manifest. The rule is sorted sequential fill: within a partition,
@@ -55,10 +53,10 @@ def plan_compaction(
     pc = list(partition_cols or [])
     w = (
         Window.partitionBy(*pc)
-        .orderBy(F.col(bytes_col).desc(), F.col(path_col))
+        .orderBy(F.col("bytes").desc(), F.col("path"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cum_before = F.sum(bytes_col).over(w) - F.col(bytes_col)
+    cum_before = F.sum("bytes").over(w) - F.col("bytes")
     # integer `div`, not float `/`: cumulative bytes at 100 TB (~1e14)
     # approach double's exact-integer ceiling, and the manifest must be
     # bit-reproducible (the repo's integer-arithmetic convention)
@@ -73,8 +71,6 @@ def plan_splits(
     manifest: DataFrame,
     target_bytes: int,
     partition_cols: list[str] | None = None,
-    split_bytes: int | None = None,
-    bytes_col: str = "bytes",
 ) -> DataFrame:
     """SPLIT half of OPTIMIZE planning (r14) over ``plan_compaction``'s
     manifest: oversized files are the other face of the small-files
@@ -86,24 +82,22 @@ def plan_splits(
     ``split_k`` — the number of ~target-sized outputs the file should be
     rewritten into. A file splits only when it is ALONE in its bin (the
     planner's byte-span rule puts every oversized file alone, so a merge
-    candidate never also splits) and larger than ``split_bytes`` (default
-    ``2 * target_bytes``: splitting a 1.3×-target file would produce two
-    UNDER-sized files — strictly worse); then ``split_k =
+    candidate never also splits) and larger than ``2 * target_bytes``
+    (splitting a 1.3×-target file would produce two UNDER-sized files —
+    strictly worse); then ``split_k =
     ceil(bytes / target_bytes)``, else 1. Same replayability contract as
     the bin rule: one window count + integer arithmetic, reproducible in
     any engine, auditable before a 100 TB rewrite runs.
     """
     from pyspark.sql import Window
 
-    if split_bytes is None:
-        split_bytes = 2 * target_bytes
     w = Window.partitionBy(*(partition_cols or []), "bin")
     t = int(target_bytes)
     return manifest.withColumn("n_in_bin", F.count(F.lit(1)).over(w)).withColumn(
         "split_k",
         F.when(
-            (F.col("n_in_bin") == 1) & (F.col(bytes_col) > int(split_bytes)),
-            F.expr(f"({bytes_col} + {t} - 1) div {t}"),
+            (F.col("n_in_bin") == 1) & (F.col("bytes") > 2 * t),
+            F.expr(f"(bytes + {t} - 1) div {t}"),
         )
         .otherwise(F.lit(1))
         .cast("long"),
@@ -130,8 +124,6 @@ def compact_planned(
     spark: SparkSession,
     path: str,
     target_bytes: int = 128 * 1024 * 1024,
-    tmp_suffix: str = "__compact_tmp",
-    split_bytes: int | None = None,
 ) -> DataFrame:
     """Manifest-driven compaction of a parquet directory — the OPTIMIZE
     execute step over ``plan_compaction`` + ``plan_splits``. Returns the
@@ -143,7 +135,7 @@ def compact_planned(
     their own bin by the planner's byte-span rule, which is the 100 TB
     property that matters: OPTIMIZE on an append-heavy table touches the
     day's small tail, never the petabytes already right-sized. OVERSIZED
-    singletons (bytes > ``split_bytes``, default 2× target — the skewed-
+    singletons (bytes > 2× target — the skewed-
     epoch 2 GB file) are SPLIT (r14) into ``split_k = ceil(bytes/target)``
     ~target-sized outputs inside the same one-job rewrite: their rows are
     routed to ``split_k`` distinct route keys by a deterministic
@@ -183,7 +175,6 @@ def compact_planned(
     manifest = plan_splits(
         plan_compaction(list_parquet_files(spark, path), target_bytes),
         target_bytes,
-        split_bytes=split_bytes,
     ).withColumn("rewritten", (F.col("n_in_bin") > 1) | (F.col("split_k") > 1))
     todo = manifest.filter("rewritten")
     rows = todo.select("path", "bin", "split_k", "n_in_bin").collect()  # file NAMES, not data
@@ -222,7 +213,7 @@ def compact_planned(
         routed = routed.withColumn(
             "_route", F.col("bin") * F.lit(1_000_000) + sub
         )
-        tmp = path.rstrip("/") + tmp_suffix
+        tmp = path.rstrip("/") + "__compact_tmp"
         (
             routed.repartition(max(int(n_routes), 1), "_route")
             .drop("_file", "bin", "split_k")

@@ -103,9 +103,7 @@ def _manifest_file(spark, path: str):
     return fs, jvm.org.apache.hadoop.fs.Path(root, "_manifest.json")
 
 
-def write_training_shards(
-    df: DataFrame, path: str, n_shards: int, id_col: str = "doc_id"
-) -> dict:
+def write_training_shards(df: DataFrame, path: str, n_shards: int) -> dict:
     """Export ``df`` as ``n_shards`` deterministic parquet shards under
     ``path`` (hive-partitioned ``shard=K/`` directories) and write
     ``_manifest.json`` (underscore-prefixed so parquet directory listings
@@ -128,7 +126,7 @@ def write_training_shards(
        ``_manifest.json`` is written last. A reader that finds the manifest
        finds the files it describes.
 
-    Raises ValueError when ``id_col`` has duplicate or NULL values: the
+    Raises ValueError when ``doc_id`` has duplicate or NULL values: the
     manifest's XOR digest cancels duplicate rows pairwise, so two
     divergent shards with duplicated rows could otherwise verify as equal
     — pre-dedup corpora must be deduplicated (or given a surrogate unique
@@ -144,12 +142,12 @@ def write_training_shards(
     # with shard satisfies the requirement so the (salted hash, id)
     # order survives into the files byte-stably
     ordered = (
-        assign_shard(df, id_col, n_shards)
+        assign_shard(df, "doc_id", n_shards)
         .repartition(n_shards, "shard")
         .sortWithinPartitions(
             "shard",
-            stable_hash64(F.concat(F.lit("order-"), F.col(id_col).cast("string"))),
-            id_col,
+            stable_hash64(F.concat(F.lit("order-"), F.col("doc_id").cast("string"))),
+            "doc_id",
         )
     )
     ordered.write.mode("overwrite").partitionBy("shard").parquet(staging)
@@ -160,12 +158,12 @@ def write_training_shards(
     # count(lit(1)) counts every row while count_distinct skips NULLs, so
     # this single comparison catches both duplicate and NULL ids
     chk = written.agg(
-        F.count(F.lit(1)).alias("n"), F.count_distinct(F.col(id_col)).alias("d")
+        F.count(F.lit(1)).alias("n"), F.count_distinct(F.col("doc_id")).alias("d")
     ).collect()[0]
     if chk.n != chk.d:
         fs.delete(staged, True)
         raise ValueError(
-            f"write_training_shards requires unique non-NULL {id_col!r} values "
+            "write_training_shards requires unique non-NULL 'doc_id' values "
             f"({chk.n} rows, {chk.d} distinct non-NULL ids): the XOR content "
             "digest cancels duplicate rows pairwise, which would blind "
             "verify_shards — dedup or add a surrogate id before export"
@@ -173,7 +171,7 @@ def write_training_shards(
     manifest_rows = shard_manifest(written).collect()
     manifest = {
         "n_shards": n_shards,
-        "id_col": id_col,
+        "id_col": "doc_id",
         "total_rows": int(sum(r.n_rows for r in manifest_rows)),
         "shards": {
             int(r.shard): {"n_rows": int(r.n_rows), "content_digest": int(r.content_digest)}

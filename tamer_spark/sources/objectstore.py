@@ -12,7 +12,7 @@ has one copy, which the sources and the tests share:
   dot-count heuristic at S3Setup.scala:162-170) or as ``prefix{N}``
   (example S3Generalized.scala:38-53),
 - ``_load``: object fetch + line decode (S3Setup.scala:108-133: utf8 +
-  splitLines) → ``spark.read.text`` + the source's ``decode``.
+  splitLines) → ``spark.read.text`` + ``ObjectCursorSource.decode``.
 
 The reference *blocks* inside ``getNextState`` until a new key appears
 (S3Setup.scala:175-182); we return "no progress" instead and let the engine
@@ -58,14 +58,14 @@ def strip_key(key: str, prefix: str) -> str:
     return m.group(1) if m else rest
 
 
-def parse_instant_from_key(key: str, prefix: str, fmt: str, tz=timezone.utc) -> datetime | None:
+def parse_instant_from_key(key: str, prefix: str, fmt: str) -> datetime | None:
     """Parse the instant embedded in an object key; None if unparseable."""
     s = strip_key(key, prefix)
     try:
         dt = datetime.strptime(s, fmt)
     except ValueError:
         return None
-    return dt.replace(tzinfo=tz) if dt.tzinfo is None else dt
+    return dt.replace(tzinfo=timezone.utc) if dt.tzinfo is None else dt
 
 
 def parse_number_from_key(key: str, prefix: str) -> int | None:
@@ -311,8 +311,6 @@ class OciObjectStorageSource:
     object_name: Callable[[Any], str | None] = staticmethod(lambda s: s["current"])
     start_after: Callable[[Any], str | None] = staticmethod(lambda s: s["start_after"])
     state_fold: Callable[[Any, str | None], Any] | None = None
-    decode: Callable[[DataFrame], DataFrame] | None = None
-    read_object: Callable[[SparkSession, str], DataFrame] | None = None
 
     def initial_state(self) -> Any:
         return objects_cursor()
@@ -342,7 +340,7 @@ class OciObjectStorageSource:
     def iteration(self, state: Any, spark: SparkSession) -> tuple[DataFrame | None, Any]:
         next_name = self._next_name(self.start_after(state))
         current = self.object_name(state)
-        df = None if current is None else _load(self, spark, current)
+        df = None if current is None else spark.read.text(self.lister.object_uri(current))
         fold = self.state_fold or self._default_fold
         new_state = fold(state, next_name)
         if df is None and new_state == state:

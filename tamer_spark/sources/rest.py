@@ -247,7 +247,6 @@ class PaginatedRestSource:
     min_period_s: float = 300.0
     max_period_s: float = 3600.0
     now_fn: Callable[[], float] = time.time
-    fetch: Callable[[str, Authentication], str] = fetch_with_auth_retry
 
     def initial_state(self) -> Any:
         if self.periodic:
@@ -266,7 +265,7 @@ class PaginatedRestSource:
     def iteration(self, state: Any, spark: SparkSession) -> tuple[DataFrame | None, Any]:
         if self.periodic:
             st = PeriodicOffset.from_state(state)
-            body = self.fetch(self.page_url(st.offset), self.auth)
+            body = fetch_with_auth_retry(self.page_url(st.offset), self.auth)
             rows, _ = self.page_decoder(body)
             new = advance_periodic_offset(
                 st, len(rows), self.now_fn(), self.min_period_s, self.max_period_s, self.increment
@@ -275,7 +274,7 @@ class PaginatedRestSource:
             return df, new.to_state()
 
         st = Offset.from_state(state)
-        body = self.fetch(self.page_url(st.offset), self.auth)
+        body = fetch_with_auth_retry(self.page_url(st.offset), self.auth)
         rows, override = self.page_decoder(body)
         fresh = filter_page(rows, st, self.fixed_page_element_count)
         new_state = (

@@ -1,15 +1,15 @@
-"""SQL-first surface: register the warehouse tables and run Spark SQL.
+"""SQL-first surface: register the warehouse tables for Spark SQL.
 
 The DataFrame registry queries are plan-construction style; this module is
 the other half of §2B — users who write SQL strings get the identical
 Catalyst planning (the SQL parser feeds the same optimizer). ``register_
 tables`` exposes the testdata star schema as temp views; the SQL-authored
-gate queries in queries.py go through ``spark.sql`` end to end.
+gate queries in queries.py then go through ``spark.sql`` end to end.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 TABLES = [
     "region",
@@ -25,15 +25,10 @@ TABLES = [
 ]
 
 
-def register_tables(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:
+def register_tables(spark: SparkSession, sf_dir: str) -> None:
     """Create temp views over the parquet tables (events normalized to µs)."""
     from tamer_spark.queries import _t
 
     for t in TABLES:
-        _t(spark, sf_dir, t).createOrReplaceTempView(t + suffix)
+        _t(spark, sf_dir, t).createOrReplaceTempView(t)
 
-
-def sql(spark: SparkSession, query: str, sf_dir: str | None = None) -> DataFrame:
-    if sf_dir is not None:
-        register_tables(spark, sf_dir)
-    return spark.sql(query)

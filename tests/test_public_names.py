@@ -10,7 +10,8 @@ other name. It looks for the name in ``tamer_spark/``, ``examples/``,
 ``perfbench/``, ``scripts/``, ``bench.py`` and ``__spark_entry__.py``. A
 reference is an identifier, an imported name, or a word of a string
 literal (the registry names functions in its doc strings). A docstring is
-not a reference: naming a function in prose runs nothing. An
+not a reference: naming a function in prose runs nothing. Nor is an
+import that the module never reads: importing a name runs nothing. An
 ``__init__.py`` only re-exports, so it does not count. Neither does a
 name's mention of itself: a reference inside the name's own definition
 (its body, a recursive call) or in its module's ``__all__``. The scan
@@ -97,6 +98,12 @@ def _region(stmt: ast.stmt) -> str | None:
     return None
 
 
+def _read_names(tree: ast.Module) -> set[str]:
+    """Every name the module reads: a loaded identifier or an attribute's
+    base."""
+    return {n.id for n in ast.walk(tree) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+
+
 def references(root: Path = ROOT) -> dict[str, set[tuple[str, str | None]]]:
     """Every referenced name, with the (file, region) of each reference."""
     refs: dict[str, set[tuple[str, str | None]]] = {}
@@ -106,11 +113,14 @@ def references(root: Path = ROOT) -> dict[str, set[tuple[str, str | None]]]:
         rel = str(path.relative_to(root))
         tree = ast.parse(path.read_text(), str(path))
         docs = _docstrings(tree)
+        read = _read_names(tree)
         for stmt in tree.body:
             region = _region(stmt)
             for node in ast.walk(stmt):
                 if id(node) in docs:
                     continue
+                if isinstance(node, ast.alias) and (node.asname or node.name).split(".")[0] not in read:
+                    continue  # an import the module never reads
                 for word in _words(node):
                     refs.setdefault(word, set()).add((rel, region))
     return refs
@@ -264,6 +274,34 @@ def test_scan_ignores_docstrings_of_other_modules(tmp_path):
     assert sorted(orphans(root)) == [
         f"tamer_spark/mod.py:{n}" for n in ("in_class_doc", "in_function_doc", "in_module_doc")
     ]
+
+
+def test_scan_ignores_imports_that_are_never_read(tmp_path):
+    """A name another module imports but never reads is reported; one it
+    imports and calls, or imports under another name and calls, is not."""
+    root = _package(tmp_path, {
+        "mod.py": '''\
+            def imported_only():
+                pass
+
+
+            def imported_and_called():
+                pass
+
+
+            def imported_as():
+                pass
+            ''',
+        "other.py": '''\
+            from tamer_spark.mod import imported_and_called, imported_only
+            from tamer_spark.mod import imported_as as alias
+
+
+            def host():
+                return imported_and_called(), alias()
+            ''',
+    }, "from tamer_spark.other import host\nhost()\n")
+    assert orphans(root) == ["tamer_spark/mod.py:imported_only"]
 
 
 def test_scan_reads_unregistered_queries_builders(tmp_path):
